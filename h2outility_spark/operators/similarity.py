@@ -468,6 +468,12 @@ def rp_lsh_candidate_pairs(
     is fine: only log2 of it matters) or cache the frame first. Pass an
     explicit ``n_bits`` to pin a configuration (the registered queries
     do, for oracle determinism).
+
+    Only one LSH query per session can hold the banded cache at a time:
+    each call evicts the previous call's banded persist, so build and
+    execute an LSH query before building the next one. A frame from an
+    earlier call that is executed after a later call was built still
+    returns the same rows, but recomputes its signatures.
     """
     if n_bits is None:
         n_bits = auto_n_bits(n_rows if n_rows is not None else embeddings.count(), target_bucket)
@@ -494,9 +500,15 @@ def rp_lsh_candidate_pairs(
     # lifetime. Assumes LSH queries are built-then-executed one at a time
     # per session (true of the driver, bench, and every registered caller;
     # same single-threaded-session assumption as
-    # streaming.incremental.micro_batch_shuffle).
+    # streaming.incremental.micro_batch_shuffle). Eviction is best-effort:
+    # a frame whose session has stopped cannot unpersist, and its cache
+    # entry died with that session, so the failure is dropped.
     while _LIVE_BANDED:
-        _LIVE_BANDED.pop().unpersist(False)
+        stale = _LIVE_BANDED.pop()
+        try:
+            stale.unpersist(False)
+        except Exception:  # noqa: BLE001
+            pass
     banded = banded.persist()
     _LIVE_BANDED.append(banded)
     if max_bucket is not None:

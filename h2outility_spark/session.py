@@ -25,11 +25,11 @@ def get_spark(app_name: str = "h2outility-spark", shuffle_partitions: int | None
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Spark ≥4 reads tz-less parquet timestamps as TIMESTAMP_NTZ by
+        # Spark ≥4 infers tz-less parquet timestamps as TIMESTAMP_NTZ by
         # default; our data model treats them as UTC instants (as does the
-        # DuckDB oracle). load_table additionally casts any surviving NTZ
-        # column, but reading them as TIMESTAMP directly keeps predicate
-        # pushdown on timestamp filters.
+        # DuckDB oracle). load_table reads them as TIMESTAMP through its
+        # footer schema whatever this says; this keeps other schema-less
+        # reads consistent with it.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Write timestamps as INT64 micros, not legacy INT96: INT96 carries
         # no parquet column statistics, which blinds min/max file pruning
@@ -59,7 +59,8 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     matter which session the driver hands us (timestamps in the test parquet
     are UTC instants; DuckDB treats them as naive UTC). Also pins the
     parquet NTZ-inference flag so tz-less timestamps scan as TIMESTAMP even
-    in a driver-owned session (load_table casts defensively on top).
+    in a driver-owned session, for reads that infer their schema
+    (load_table reads its footer schema and does not depend on it).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

@@ -6,20 +6,28 @@ Reference analog: the multi-dialect relational scan (S1/S2,
 columnar parquet; Catalyst gives predicate pushdown + column pruning on every
 scan, which replaces the reference's hand-embedded SQL filters (SURVEY.md §4).
 
+Every parquet read here (:func:`load_table`, and :func:`read_parquet` for
+the package's read-backs of its own sinks) takes its schema from one file
+footer (:func:`footer_schema`, pyarrow metadata only) and hands it to
+``spark.read.schema(...)``, so no table load runs Spark's schema-inference
+job, and no session conf is set: nanosecond timestamps come back as raw
+int64 through the footer schema itself and are truncated to microseconds.
+
 Scale notes: at 100 TB the fact tables (``lineitem``, ``events``,
 ``documents``) arrive as directory trees partitioned by date/key — the same
-``spark.read.parquet(path)`` call handles both, and partition pruning kicks in
-when queries filter on partition columns. Never infer schemas in production
-(we read parquet, whose footer carries the schema).
+read handles both (partition columns are discovered from the paths), and
+partition pruning kicks in when queries filter on partition columns.
 """
 
 from __future__ import annotations
 
-import glob
+import json
 import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 TABLES = [
     "region",
@@ -39,64 +47,89 @@ TABLES = [
 BROADCAST_DIMS = {"region", "nation", "supplier", "customer", "part"}
 
 
+#: Footer key under which Spark stores the exact schema of the files it
+#: writes; Spark's own inference reads it too.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_file(path: str) -> str | None:
+    """``path`` itself, or the first visible ``*.parquet`` file under the
+    directory ``path`` (names starting with ``_`` or ``.`` are skipped, as
+    Spark skips them); None when there is none."""
+    if not os.path.isdir(path):
+        return path if os.path.isfile(path) else None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
 @lru_cache(maxsize=256)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects. Detected from one file footer (cheap — metadata only)."""
+def _footer_schema_of(file: str, mtime_ns: int, size: int) -> tuple[StructType, tuple[str, ...]]:
+    # mtime_ns and size only key the cache: a file rewritten at the same
+    # path gets a fresh entry instead of the stale schema.
     import pyarrow.parquet as pq
     import pyarrow.types as pt
 
-    sample = path
-    if os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if not files:
-            return ()
-        sample = files[0]
-    try:
-        schema = pq.read_schema(sample)
-    except Exception:
-        return ()
-    return tuple(f.name for f in schema if pt.is_timestamp(f.type) and f.type.unit == "ns")
+    meta = pq.read_metadata(file)
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        schema = StructType.fromJson(json.loads(spark_json))
+        return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in schema]), ()
+    fields, nanos = [], []
+    for f in meta.schema.to_arrow_schema():
+        if pt.is_timestamp(f.type) and f.type.unit == "ns":
+            fields.append(StructField(f.name, LongType()))
+            nanos.append(f.name)
+        elif pt.is_timestamp(f.type):
+            fields.append(StructField(f.name, TimestampType()))
+        else:
+            fields.append(StructField(f.name, from_arrow_type(f.type)))
+    return StructType(fields), tuple(nanos)
 
 
-def _denullify_ntz(df: DataFrame) -> DataFrame:
-    """Cast any TIMESTAMP_NTZ column to TIMESTAMP (session tz is pinned UTC,
-    so the naive values become the UTC instants they represent).
+def footer_schema(path: str) -> tuple[StructType, tuple[str, ...]] | None:
+    """(Spark read schema, nanosecond-timestamp columns) of a parquet file
+    or directory, read from one file footer with pyarrow — metadata only,
+    no Spark job — or None when ``path`` holds no parquet file.
 
-    Spark ≥4 infers tz-less parquet timestamps as TIMESTAMP_NTZ
-    (``spark.sql.parquet.inferTimestampNTZ.enabled`` defaults true), which
-    breaks ``unix_micros`` and friends at analysis time. The engine's data
-    model (like the reference's — timestamps are typed DB columns,
-    ``odmdata/data_value.py:43-45``) owns type normalization at the scan
-    boundary: everything downstream sees TIMESTAMP, matching the DuckDB
-    oracle's naive-UTC read of the same files.
+    A footer written by Spark carries Spark's exact schema, which is used
+    as is. Otherwise ``TIMESTAMP(NANOS)`` reads as raw ``LONG`` (Spark's
+    reader cannot decode it as a timestamp), any other timestamp as
+    ``TIMESTAMP`` (never ``TIMESTAMP_NTZ``, whatever the session's
+    ``inferTimestampNTZ`` says), and every other type as pyspark's Arrow
+    mapping gives it. Every field is nullable, as in an inferred read.
     """
-    from pyspark.sql.types import TimestampNTZType
+    file = _footer_file(path)
+    if file is None:
+        return None
+    st = os.stat(file)
+    return _footer_schema_of(file, st.st_mtime_ns, st.st_size)
 
-    ntz_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the footer
+    (:func:`footer_schema`) instead of inferred by a Spark job. A
+    partitioned directory's partition columns are still discovered from its
+    paths. With no parquet file under ``path`` this is the plain read, which
+    raises Spark's own error."""
+    footer = footer_schema(path)
+    if footer is None:
+        return spark.read.parquet(path)
+    schema, nanos = footer
+    df = spark.read.schema(schema).parquet(path)
+    # Nanosecond columns arrive as raw int64: truncate them to microsecond
+    # timestamps with integer division — bit-identical to how DuckDB
+    # surfaces the same file.
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    # Defense-in-depth for the NTZ quirk: prefer reading tz-less parquet
-    # timestamps directly as TIMESTAMP (keeps filters pushed down to the
-    # scan — a cast on top of the scan column would block pushdown)...
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ns_cols = _nanos_ts_columns(path)
-    if not ns_cols:
-        # ...and cast any NTZ column that still surfaced (caller overrode
-        # the conf, or the file carries explicit NTZ annotation).
-        return _denullify_ntz(spark.read.parquet(path))
-    # Read nanos as raw int64 and truncate to microsecond timestamps with
-    # integer division — bit-identical to how DuckDB surfaces the same file.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return _denullify_ntz(df)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

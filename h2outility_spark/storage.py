@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from h2outility_spark.sources.parquet import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -44,7 +46,7 @@ def write_partitioned(
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_bucketed(

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from h2outility_spark.operators.mutation import drop_logical_duplicates
+from h2outility_spark.sources.parquet import read_parquet
 
 
 def bounded_batch_shuffle_partitions(spark: SparkSession) -> int | None:
@@ -330,7 +331,7 @@ def stream_upsert_to_parquet(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         try:
-            current = spark.read.parquet(target_path)
+            current = read_parquet(spark, target_path)
         except Exception:
             current = None
         if current is None:
@@ -339,7 +340,7 @@ def stream_upsert_to_parquet(
             merged = upsert(current, batch_df, keys, order_col)
         tmp = f"{target_path}__staging"
         merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
+        read_parquet(spark, tmp).write.mode("overwrite").parquet(target_path)
 
     return (
         stream_df.writeStream.foreachBatch(merge_batch)

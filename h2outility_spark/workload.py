@@ -484,79 +484,70 @@ from h2outility_spark import workload_next9  # noqa: E402,F401
 # (coverage map in README). Everything outside the window is still
 # oracle-checked every run by tests/test_oracle_parity.py + driver_sim.
 CHECKED_WINDOW = [
-    # -- ROUND-15 ROTATION (optimization round 2) ----------------------------
-    # CORRECTNESS_r14 went 50/50 green (ninth all-green round). This is an
-    # OPTIMIZATION round, so the window executes the optimization judge's
-    # directive (VERDICT r14 "Next round" #1) rather than the build-phase
-    # staging plan: the five queries REWRITTEN by the r14 optimization waves
-    # whose post-rewrite code has no driver CORRECTNESS row yet lead the
-    # window (tpch_q21's stacked-aggregate form, chunk_sliding's staged
-    # tokenizer, embedding_knn's per-side norms, neardup_embedding_lsh's
-    # int64 band keys + banded persist, rp_lsh_signatures' Arrow matmul
-    # kernel), followed by the 27 FORCED r10-latest picks (the 4-round
-    # freshness gate in tests/test_checked_window.py — rp_lsh_autosig and
-    # stream_chunk_flow among them are ALSO rewritten-path riders), and 18
-    # free picks from the r11-latest cohort, two of them chosen because
-    # they ride r14 rewrites too (rag_prep_pipeline: staged tokenizer;
-    # pq_codes_kmeans: grouped k-means trainer). NO new queries are
-    # promoted this round (feature work is out of scope for an
-    # optimization round; the STAGED10-13 promotion plan in
-    # NOTES_NEXT_ROUND stands for the next build round). Everything
-    # outside the window stays oracle-checked every run by
+    # -- ROUND-16 ROTATION --------------------------------------------------
+    # CORRECTNESS_r15 went 50/50 green. The window carries the 31 FORCED
+    # r11-latest picks (the 4-round freshness gate in
+    # tests/test_checked_window.py; NOTES_NEXT_ROUND lists them) and 19 free
+    # picks, all riding the read path this round changed: table loads and
+    # parquet read-backs now take their schema from the parquet footer
+    # (sources.parquet.read_parquet) instead of a schema-inference job. The
+    # free picks are the 8 queries of the benchmark's query_mix and 11 of
+    # the queries that read back a streaming sink or a partitioned write.
+    # Everything outside the window stays oracle-checked every run by
     # tests/test_oracle_parity + driver_sim.
-    # -- the r14-rewritten queries (driver witnesses for the new code) ------
-    "tpch_q21_waiting_supplier", # single-scan stacked-aggregate form (r14 #3)
-    "chunk_sliding",             # staged tokenizer before the Generate (r14 #1)
-    "embedding_knn",             # per-side norm precompute (r14 #4)
-    "neardup_embedding_lsh",     # int64 band keys + banded persist (r14 #5/#10)
-    "rp_lsh_signatures",         # Arrow matmul signature kernel (r14 #2)
-    # -- the 27 forced r10-latest picks (freshness gate) ---------------------
-    "approx_distinct_bounds",
-    "approx_distinct_parts",
-    "audio_window_features",
-    "bigram_condprob",
-    "dedup_incremental",
-    "doc_lm_score",
-    "embedding_centroids",
-    "federated_union",
-    "image_features_jpeg",
-    "image_neardup",
-    "ivfpq_search",
-    "neardup_simhash_pairs",
-    "neardup_winnow_pairs",
-    "ngram_jaccard_blocked",
-    "prefix_dup_rate",
-    "qc_value_change",
-    "rp_lsh_autosig",            # rewritten-path rider: Arrow sig kernel (r14 #2)
-    "series_trend_fit",
-    "stream_chunk_flow",         # rewritten-path rider: staged tokenizer (r14 #1)
-    "stream_ivm_agg",
-    "stream_minmax_ivm",
-    "stream_ohlc",
+    # -- the 31 forced r11-latest picks (freshness gate) ---------------------
+    "annotated_export_roundtrip",
+    "asof_interp_join",
+    "asof_join_forward",
+    "cdc_segment_dedup",
+    "distinct_series",
+    "embedding_quantize_error",
+    "event_time_windows",
+    "frame_sample",
+    "funnel_conversion",
+    "grouping_sets_revenue",
+    "heavy_hitters_cms",
+    "image_resize_features",
+    "last_per_series",
+    "mixture_plan_tokens",
+    "mixture_sample",
+    "neardup_embedding_pairs",
+    "ngram_counts",
+    "qc_flag",
+    "quality_drift_weekly",
+    "repetition_signals",
+    "retention_cohorts",
+    "rollup_revenue",
+    "season_rollup",
+    "secondary_sort_export",
+    "semi_join_suppliers",
+    "stratified_split",
+    "stream_mixture_plan",       # read-back rider: footer-schema state read
+    "txtable_zorder_race",
+    "variable_census",
+    "vocab_oov_rate",
+    "winnow_fingerprints",
+    # -- query_mix: every table load reads its footer schema -----------------
+    "asof_join",
+    "embedding_knn",
+    "tpch_q3",
+    "tpch_q5",
     "text_stats",
-    "txtable_compact_snapshot",
-    "txtable_evolve_schema",
-    "txtable_vacuum_retention",
-    "txtable_zorder",
-    # -- 18 free picks from the r11-latest cohort (family spread) -----------
-    "tpch_q6",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q18_large_orders",
-    "qc_change_value",
-    "qc_rolling_zscore",
-    "qc_resample_ffill",
-    "txtable_vacuum",
-    "txtable_concurrent_merge",
-    "txtable_clone",
-    "stream_watermark_windows",  # rides the bounded-batch shuffle pin (r14 #6)
-    "dedup_incremental_lsh",
-    "neardup_ensemble_agree",
-    "simhash_signatures",
-    "bpe_token_hist",
-    "decontaminate_spans",
-    "rag_prep_pipeline",         # rewritten-path rider: staged tokenizer (r14 #1)
-    "pq_codes_kmeans",           # rewritten-path rider: grouped k-means trainer (r14 #8)
+    "series_ohlc",
+    "sessionization",
+    "dedup_exact_docs",
+    # -- sink read-backs through the footer schema --------------------------
+    "stream_session_windows",
+    "stream_session_paths",
+    "stream_static_enrich",
+    "stream_heavy_hitters",
+    "stream_jsonl_ingest",
+    "stream_stratified_ingest",
+    "partitioned_sink_prune",
+    "txtable_stream_tail",
+    "stream_ohlc",
+    "stream_minmax_ivm",
+    "stream_watermark_windows",
 ]
 
 

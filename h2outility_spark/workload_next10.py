@@ -74,6 +74,7 @@ from pyspark.sql import Window as W, functions as F
 from h2outility_spark.operators import sketch
 from h2outility_spark.operators.similarity import dot
 from h2outility_spark.operators.text import shingles_expr, tokens
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.workload import _t, fround, sql_round
 from h2outility_spark.workload_lakehouse import scratch_dir
 from h2outility_spark.workload_next9 import (
@@ -543,7 +544,7 @@ def q_stream_dedup_watermark(spark, sf_dir):
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True),
     )
-    return spark.read.parquet(out_dir).select(
+    return read_parquet(spark, out_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 

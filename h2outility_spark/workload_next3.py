@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from h2outility_spark.operators import asof, dedup
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.storage_tx import TxTable
 from h2outility_spark.streaming.incremental import drain_available_now
 from h2outility_spark.workload import _t, query
@@ -199,7 +200,7 @@ def q_stream_watermark_windows(spark, sf_dir):
     drain("swm-flush")
 
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("event_type") != "__flush__")
         .select("hour_start", "event_type", "cnt")
     )
@@ -284,7 +285,7 @@ def q_stream_session_windows(spark, sf_dir):
     drain("ssw-flush")
 
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("user_id") >= 0)
         .select("user_id", "session_start", "n_events")
     )
@@ -370,7 +371,7 @@ def q_stream_session_paths(spark, sf_dir):
     drain("ssp-flush")
 
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("user_id") >= 0)
         .select("user_id", "session_start", "n_events", "path")
     )
@@ -932,7 +933,7 @@ def q_stream_static_enrich(spark, sf_dir):
     drain("sse-1")
     slice_mod(2, 4).coalesce(1).write.mode("append").parquet(src)
     drain("sse-2")
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 #: name -> (fn, oracle) for the round-8 promotion pass and the parity test.

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import functions as F
 
 from h2outility_spark.plans import oplist
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.streaming.incremental import drain_available_now
 from h2outility_spark.workload import DV_CTE, _dv, _t, fround, query
 from h2outility_spark.workload_lakehouse import scratch_dir
@@ -200,7 +201,7 @@ def q_stream_ohlc(spark, sf_dir):
     drain("sohlc-flush")
 
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("event_type") != "__flush__")
         .select("hour_start", "event_type", "open", "high", "low", "close", "n_obs")
     )
@@ -970,7 +971,7 @@ def q_stream_chunk_flow(spark, sf_dir):
     drain()
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     drain()
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 # -- vacuum retention guard under a pinned reader ----------------------------------
@@ -1104,7 +1105,7 @@ def q_stream_minmax_ivm(spark, sf_dir):
         else:
             v_prev = ctl["version"]
             v = t.merge_upsert(batch_df)
-            old_state = spark.read.parquet(ctl["state_path"])
+            old_state = read_parquet(spark, ctl["state_path"])
             # The caller KNOWS the key domain (cust_bucket in [0, 50)), so the
             # broadcast guard's per-batch distinct-count job is skipped via the
             # n_changed_keys hint — in a per-micro-batch loop that extra Spark
@@ -1141,7 +1142,7 @@ def q_stream_minmax_ivm(spark, sf_dir):
     drain()
     assert ctl["n_batches"] == 2, ctl
 
-    final = spark.read.parquet(ctl["state_path"])
+    final = read_parquet(spark, ctl["state_path"])
     return final.select(
         "cust_bucket",
         F.col("n").alias("n_orders"),

@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from h2outility_spark.operators import dedup, similarity
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.workload import _t, fround, query
 from h2outility_spark.workload_text import JACCARD_TAIL, MINHASH_K, mh_cte
 
@@ -406,7 +407,7 @@ def q_stream_mixture_plan(spark, sf_dir):
     b2.coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    per_src = spark.read.parquet(state_path)
+    per_src = read_parquet(spark, state_path)
     nsrc = F.count(F.lit(1)).over(W.partitionBy())
     safe_tokens = F.when(F.col("total_tokens") > 0, F.col("total_tokens").cast("double"))
     planned = per_src.withColumn("epochs_raw", (F.lit(200000.0) / nsrc) / safe_tokens)

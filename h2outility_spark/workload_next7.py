@@ -75,6 +75,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.streaming.incremental import drain_available_now
 from h2outility_spark.workload import DV_CTE, _dv, _t, fround, query, sql_round
 from h2outility_spark.workload_lakehouse import scratch_dir
@@ -152,7 +153,7 @@ def make_cms_handler(spark, state_dir, ctl, key_col="user_id"):
         grid = sketch.count_min_table(batch_df, key_col, depth=_CMS_D, width=_CMS_W)
         prev_ids = _applied_ids()
         if prev_ids:
-            prev = spark.read.parquet(os.path.join(state_dir, f"grid_{prev_ids[-1]}"))
+            prev = read_parquet(spark, os.path.join(state_dir, f"grid_{prev_ids[-1]}"))
             grid = (
                 grid.unionByName(prev)
                 .groupBy("j", "bucket")
@@ -215,7 +216,7 @@ def q_stream_heavy_hitters(spark, sf_dir):
 
     from pyspark.sql import Window as W
 
-    cms = spark.read.parquet(ctl["grid_path"])
+    cms = read_parquet(spark, ctl["grid_path"])
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
     topk = (
         exact.withColumn(
@@ -793,7 +794,7 @@ def q_stream_jsonl_ingest(spark, sf_dir):
     )
     drain()
 
-    return spark.read.parquet(state_path).select(
+    return read_parquet(spark, state_path).select(
         "event_type", "n_events", "first_ts", "last_ts", "total_cents"
     )
 
@@ -994,7 +995,7 @@ def q_stream_stratified_ingest(spark, sf_dir):
     b2.coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    return spark.read.parquet(state_path).select(
+    return read_parquet(spark, state_path).select(
         "source", "split", "n_docs", "total_tokens"
     )
 

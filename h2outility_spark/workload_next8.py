@@ -83,6 +83,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from h2outility_spark.operators import graph, sketch
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.workload import _t, fround, query, sql_round
 from h2outility_spark.workload_lakehouse import scratch_dir
 from h2outility_spark.workload_text import _N_TOKENS_SQL, toks_cte
@@ -624,7 +625,7 @@ def q_partitioned_sink_prune(spark, sf_dir):
     )
     out = scratch_dir("h2ou_part_") + "/events_by_type"
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return (
         back.filter(F.col("event_type").isin("click", "view") & F.col("value").isNotNull())
         .groupBy(

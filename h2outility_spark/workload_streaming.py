@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from h2outility_spark.sources.parquet import load_table
+from h2outility_spark.sources.parquet import load_table, read_parquet
 from h2outility_spark.storage_tx import TxTable
 from h2outility_spark.streaming.incremental import drain_available_now
 from h2outility_spark.workload import _t, query
@@ -185,4 +185,4 @@ def q_txtable_stream_tail(spark, sf_dir):
     t.append(slice_mod(5, 6))
     drain("txtail-resume")  # resumes past v2, emits v3 + v5 only
 
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)

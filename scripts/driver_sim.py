@@ -71,9 +71,9 @@ def main() -> None:
     ts_field = [f for f in load_table(spark, sf_dir, "events").schema.fields if f.name == "ts"][0]
     assert isinstance(ts_field.dataType, TimestampType), (
         f"events.ts resolved to {ts_field.dataType} after ensure_utc — parquet timestamp "
-        "type inference drifted again (see sources/parquet._denullify_ntz and "
-        "spark.sql.parquet.inferTimestampNTZ.enabled); every unix_micros-based operator "
-        "will fail analysis until the scan boundary normalizes this"
+        "type mapping drifted again (see the footer reader sources/parquet.footer_schema, "
+        "which maps every non-nanosecond parquet timestamp to TIMESTAMP); every "
+        "unix_micros-based operator will fail analysis until the scan boundary normalizes this"
     )
 
     df = mod.entry(spark)

@@ -6,6 +6,7 @@ cache entry."""
 from __future__ import annotations
 
 from h2outility_spark import workload
+from h2outility_spark.operators import similarity
 from tests.conftest import SF_DIR
 
 
@@ -31,3 +32,24 @@ def test_repeated_lsh_queries_do_not_grow_the_session_cache(spark):
     assert all(c <= after_first for c in counts), (after_first, counts)
     # ...and eviction does not change what the query computes
     assert rows == first
+
+
+class _DeadFrame:
+    """A banded frame whose session is gone: unpersist raises."""
+
+    def unpersist(self, blocking=False):
+        raise RuntimeError("SparkContext was shut down")
+
+
+def test_failed_eviction_does_not_fail_the_next_build(spark):
+    spark.catalog.clearCache()
+    spec = workload.REGISTRY["neardup_embedding_strict"]
+    expected = sorted(map(tuple, spec.fn(spark, SF_DIR).collect()))
+
+    dead = _DeadFrame()
+    similarity._LIVE_BANDED.insert(0, dead)
+    rows = sorted(map(tuple, spec.fn(spark, SF_DIR).collect()))
+
+    assert rows == expected
+    assert dead not in similarity._LIVE_BANDED
+    assert len(similarity._LIVE_BANDED) == 1

@@ -51,22 +51,22 @@ def test_load_table_normalizes_to_timestamp(spark, tmp_path, tz):
 
 def test_load_table_casts_even_when_session_infers_ntz(spark, tmp_path):
     """Simulate a driver-owned session that left NTZ inference on: the
-    defensive cast in load_table must still yield TIMESTAMP."""
+    footer schema load_table reads with must still yield TIMESTAMP and the
+    raw micros."""
     sf_dir = _write_events_like(str(tmp_path), None)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     try:
         raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         (raw_ts,) = [f for f in raw.schema.fields if f.name == "ts"]
         # Precondition: with the conf on, the bare read really is NTZ —
-        # otherwise this test isn't exercising the cast path.
+        # otherwise this test isn't exercising the NTZ path.
         assert isinstance(raw_ts.dataType, TimestampNTZType), raw_ts.dataType
 
-        from h2outility_spark.sources.parquet import _denullify_ntz
-
-        fixed = _denullify_ntz(raw)
-        (ts_field,) = [f for f in fixed.schema.fields if f.name == "ts"]
-        assert isinstance(ts_field.dataType, TimestampType)
-        fixed.select(F.unix_micros("ts")).collect()  # must analyze
+        df = load_table(spark, sf_dir, "events")
+        (ts_field,) = [f for f in df.schema.fields if f.name == "ts"]
+        assert isinstance(ts_field.dataType, TimestampType), ts_field.dataType
+        got = [r[0] for r in df.select(F.unix_micros("ts")).orderBy("ts").collect()]
+        assert got == [1_700_000_000_000_000 + i * 60_000_000 for i in range(3)]
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
