@@ -2,7 +2,7 @@
 
 All built-in Catalyst expressions — JVM-side, inside whole-stage codegen.
 No Python UDFs here: everything the reference computed row-wise in Python
-(season, key concat, interval seconds) lowers to built-ins.
+(season) lowers to built-ins.
 """
 
 from __future__ import annotations
@@ -18,27 +18,3 @@ def season(ts: Column) -> Column:
     coincide exactly with calendar quarters, so it is ``F.quarter``.
     """
     return F.quarter(ts)
-
-
-def odm_series_id(site: Column, variable: Column, method: Column, source: Column, qc: Column) -> Column:
-    """Series identity string '{site}_{var}_{method}_{source}_{qc}'
-    (F2; ``odmdata/series.py:99-102``)."""
-    return F.concat_ws("_", site, variable, method, source, qc)
-
-
-def interval_seconds(t2: Column, t1: Column) -> Column:
-    """(t2 - t1).total_seconds() (F4/W10; ``edit_service.py:137,295,322``).
-
-    Cast-to-double keeps sub-second precision (the test timestamps carry
-    microseconds); ``unix_timestamp`` would truncate to whole seconds.
-    """
-    return t2.cast("double") - t1.cast("double")
-
-
-def year_start(year: Column) -> Column:
-    """'{year}-01-01 00:00:00' as a timestamp (F3; series_service.py:327-328)."""
-    return F.make_timestamp(year, F.lit(1), F.lit(1), F.lit(0), F.lit(0), F.lit(0))
-
-
-def year_end(year: Column) -> Column:
-    return F.make_timestamp(year, F.lit(12), F.lit(31), F.lit(23), F.lit(59), F.lit(59))

@@ -34,24 +34,6 @@ def delete_selected(df: DataFrame, sel: str = "selected") -> DataFrame:
     return df.filter(~F.coalesce(F.col(sel), F.lit(False)))
 
 
-def delete_series_values(dv: DataFrame, series_filter, start=None, ts_col: str = "LocalDateTime") -> DataFrame:
-    """U3 (series_service.py:903-926): drop a whole series' rows, optionally
-    only from ``start`` onward."""
-    doomed = series_filter
-    if start is not None:
-        doomed = doomed & (F.col(ts_col) >= F.lit(start))
-    return dv.filter(~doomed)
-
-
-def delete_by_timestamps(dv: DataFrame, timestamps: DataFrame | list, ts_col: str = "LocalDateTime") -> DataFrame:
-    """U4 (series_service.py:928-940). A literal list lowers to an IN filter;
-    a DataFrame of timestamps becomes a left_anti join (the scalable form —
-    never collect a big key list to the driver)."""
-    if isinstance(timestamps, DataFrame):
-        return dv.join(timestamps, on=ts_col, how="left_anti")
-    return dv.filter(~F.col(ts_col).isin(list(timestamps)))
-
-
 def drop_logical_duplicates(dv: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """U5: the UNIQUE(DataValue, LocalDateTime, 5 series keys) constraint
     (edit_service.py:507) enforced at write time."""

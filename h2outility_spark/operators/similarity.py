@@ -128,18 +128,11 @@ def ivf_search(
     label_col: str = "label",
     n_probe: int = 1,
     spill: bool = False,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN: each query probes its ``n_probe`` nearest centroid
     cells (default 1); exact cosine top-k within the probed cells (the
     probed union is exactly re-ranked — there is no approximate scoring
     stage to tune separately).
-
-    ``centroids`` (a packed ``(cell, cvec array<double>)`` frame, e.g. a
-    persisted model loaded from a TxTable snapshot) skips the in-session
-    training pass entirely — the serving path for a STORED coarse
-    quantizer that scheduled jobs advance out of band. Default ``None``
-    trains from ``embeddings``' labels as before.
 
     At scale the candidate table is partitioned by cell, so the in-cell
     join is partition-pruned — the query never scans the full corpus. The
@@ -154,10 +147,7 @@ def ivf_search(
     """
     from pyspark.sql import Window as W
 
-    if centroids is not None:
-        cents = centroids.select("cell", "cvec")
-    else:
-        cents = pack_centroids(centroids_by_label(embeddings, label_col, vec_col))
+    cents = pack_centroids(centroids_by_label(embeddings, label_col, vec_col))
     # Self-dots precomputed per SIDE, not per pair: cosine(a,b) =
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)) with the same doubles multiplied in
     # the same order, so scores are bit-identical while the in-cell scan

@@ -780,7 +780,7 @@ def chunk_sliding(
     stride = int(stride)
     if size < 1 or stride < 1:
         raise ValueError(f"chunk_sliding requires size >= 1 and stride >= 1, got size={size} stride={stride}")
-    # STAGED selects: the tokenizer (regexp_replace + split) and the token
+    # Staged selects: the tokenizer (regexp_replace + split) and the token
     # count become real attributes BEFORE the generator references them.
     # Inlining them (the old one-select form) re-evaluated the regexp ~5x
     # per document inside the non-codegen Generate node — and once more per

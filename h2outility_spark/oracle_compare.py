@@ -3,11 +3,10 @@ decides whether a Spark result and its DuckDB oracle "match".
 
 This is the project's correctness contract: the driver sorts columns by
 name, renders floats at 9 significant decimals (NaN spelled out), strings
-everything else, and sorts rows. Four call sites (the parity test sweep,
-the staged-pair sweep, and both fast gate scripts) previously carried
-their own copies; a drift between copies would make the fast pre-commit
-gate and the real parity sweep disagree — so there is exactly one copy,
-here, and everything imports it.
+everything else, and sorts rows. The parity test sweep and the fast gate
+scripts once carried their own copies; a drift between copies would make
+the fast pre-commit gate and the real parity sweep disagree — so there is
+exactly one copy, here, and everything imports it.
 """
 
 from __future__ import annotations

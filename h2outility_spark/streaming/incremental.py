@@ -117,13 +117,6 @@ def drain_available_now(spark: SparkSession, writer, await_secs: int = 30) -> No
         q.awaitTermination(await_secs)
 
 
-def incremental_extract(dv: DataFrame, watermark, ts_col: str = "LocalDateTime") -> DataFrame:
-    """I2: rows strictly after the bookmark (open-ended date filter P5)."""
-    if watermark is None:
-        return dv
-    return dv.filter(F.col(ts_col) > F.lit(watermark))
-
-
 def incremental_append(
     dv: DataFrame,
     existing: DataFrame,

@@ -1,8 +1,5 @@
-"""Hybrid retrieval + corpus-composition workload queries, staged in round
-4 and PROMOTED to the registry in the round-6 window rotation (every slot
-of the round-4/5 window was occupied by a first-timer, so these waited
-with their oracles parity-proven at sf0.001 and sf0.01; promotion was the
-decorator change below plus window slots — zero new verification).
+"""Hybrid retrieval + corpus-composition workload queries (registered in
+the round-6 window rotation).
 """
 
 from __future__ import annotations
@@ -319,15 +316,3 @@ def q_prefix_dup_rate(spark, sf_dir):
         shared.alias("n_shared_prefix"),
         fround(shared.cast("double") / F.sum("n"), 6).alias("shared_prefix_rate"),
     )
-
-
-#: Kept for tests/test_workload_next.py's two-scale parity sweep (the same
-#: pairs are now ALSO registered; the sweep pins the sf0.01 behavior the
-#: driver will hash).
-STAGED = {
-    "hybrid_search_knn": (q_hybrid_search_knn, HYBRID_SEARCH_ORACLE),
-    "quality_gate_docs": (q_quality_gate_docs, GATE_ORACLE),
-    "corpus_language_matrix": (q_corpus_language_matrix, LANG_MATRIX_ORACLE),
-    "doc_length_histogram": (q_doc_length_histogram, LEN_HIST_ORACLE),
-    "prefix_dup_rate": (q_prefix_dup_rate, PREFIX_DUP_ORACLE),
-}

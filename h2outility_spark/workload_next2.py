@@ -1,8 +1,6 @@
-"""Round-6 staging area, PROMOTED to the registry in the round-7
-window rotation (same lifecycle as ``workload_next``): each (fn, oracle)
-pair waited fully formed with parity proven at sf0.001 AND sf0.01
-(``tests/test_workload_next.py`` STAGED2), so promotion was the decorator
-change below plus window slots — zero new verification work.
+"""Round-7 registry additions: image resize through the real codec, BPE
+token histogram, TxTable clone / vacuum / Z-order, and adaptive IVF
+search.
 """
 
 from __future__ import annotations
@@ -343,16 +341,3 @@ def q_txtable_zorder(spark, sf_dir):
         "o_custkey", "o_orderkey", "o_totalprice",
         F.lit(bool(n_after < n_before)).alias("compacted"),
     )
-
-
-
-#: name -> (fn, oracle): keeps the parity test pinning sf0.001+sf0.01
-#: behavior for the promoted pairs (same role as workload_next.STAGED).
-STAGED2 = {
-    "image_resize_features": (q_image_resize_features, RESIZE_FEATURES_ORACLE),
-    "bpe_token_hist": (q_bpe_token_hist, BPE_TOKEN_HIST_ORACLE),
-    "txtable_clone": (q_txtable_clone, TXTABLE_CLONE_ORACLE),
-    "ivf_search_adaptive": (q_ivf_search_adaptive, IVF_ADAPTIVE_ORACLE),
-    "txtable_vacuum": (q_txtable_vacuum, TXTABLE_VACUUM_ORACLE),
-    "txtable_zorder": (q_txtable_zorder, TXTABLE_ZORDER_ORACLE),
-}

@@ -1,8 +1,6 @@
-"""Round-7 staging area, PROMOTED to the registry in the round-8 window
-rotation (same lifecycle as ``workload_next`` / ``workload_next2``): each
-(fn, oracle) pair waited fully formed with parity proven at sf0.001 AND
-sf0.01 (``tests/test_workload_next.py`` STAGED3), so promotion was the
-decorator change below plus window slots — zero new verification work.
+"""Round-8 registry additions: concurrent TxTable writers, stateful
+streaming windows and sessions, forward as-of joins, adaptive IVF-PQ and
+TxTable pruning/history.
 
 Coverage targets (VERDICT r6 "stage the round-8 window now"):
   * ``txtable_concurrent_appends`` — the commit-retry path
@@ -36,10 +34,9 @@ Coverage targets (VERDICT r6 "stage the round-8 window now"):
   * ``ivfpq_search_adaptive`` — the compound ANN path at its cheapest
     configuration: adaptive ratio-spill IVF cells + production PQ
     codebooks + ADC + exact re-rank, spliced from certified oracle
-    fragments. NOTE for promotion: add it to ``test_plan_audit``'s
-    BNLJ_ALLOWED — its three BroadcastNestedLoopJoins are the canonical
-    tiny-broadcast centroid probes (same as ivf_search / ivfpq_search /
-    pq_search).
+    fragments. It is on ``test_plan_audit``'s BNLJ_ALLOWED: its three
+    BroadcastNestedLoopJoins are the canonical tiny-broadcast centroid
+    probes (same as ivf_search / ivfpq_search / pq_search).
   * ``txtable_history_rows`` — commit-log certification: a known five-op
     sequence's version numbering, op labels, and every historical
     snapshot's row count on one driver hash.
@@ -656,7 +653,7 @@ def q_txtable_prune_scan(spark, sf_dir):
     then ``TxTable.scan`` answers a [250, 499] range by reading ONLY the
     overlapping file — the file-level prune comes from manifest stats,
     no storage listing (storage_tx.py::scan; the read-only-one-file
-    economics are pinned by tests/test_workload_next.py's file-count
+    economics are pinned by tests/test_plan_audit.py's file-count
     assertion). The oracle is the plain filter over the source rows.
     """
     base = (
@@ -934,20 +931,3 @@ def q_stream_static_enrich(spark, sf_dir):
     slice_mod(2, 4).coalesce(1).write.mode("append").parquet(src)
     drain("sse-2")
     return read_parquet(spark, out)
-
-
-#: name -> (fn, oracle) for the round-8 promotion pass and the parity test.
-STAGED3 = {
-    "txtable_concurrent_appends": (q_txtable_concurrent_appends, CONCURRENT_APPENDS_ORACLE),
-    "txtable_concurrent_merge": (q_txtable_concurrent_merge, CONCURRENT_MERGE_ORACLE),
-    "stream_watermark_windows": (q_stream_watermark_windows, STREAM_WATERMARK_ORACLE),
-    "stream_session_windows": (q_stream_session_windows, STREAM_SESSION_ORACLE),
-    "stream_session_paths": (q_stream_session_paths, STREAM_SESSION_PATHS_ORACLE),
-    "asof_join_forward": (q_asof_join_forward, ASOF_FORWARD_ORACLE),
-    "dedup_keep_best": (q_dedup_keep_best, DEDUP_KEEP_BEST_ORACLE),
-    "ivfpq_search_adaptive": (q_ivfpq_search_adaptive, IVFPQ_ADAPTIVE_ORACLE),
-    "txtable_prune_scan": (q_txtable_prune_scan, TXTABLE_PRUNE_ORACLE),
-    "txtable_history_rows": (q_txtable_history_rows, TXTABLE_HISTORY_ORACLE),
-    "minhash_containment_pairs": (q_minhash_containment_pairs, CONTAINMENT_ORACLE),
-    "stream_static_enrich": (q_stream_static_enrich, STREAM_STATIC_ORACLE),
-}

@@ -1,10 +1,5 @@
-"""Round-9 staging area, PROMOTED to the registry in the round-9 window
-rotation (same lifecycle as ``workload_next`` → ``workload_next3``): each
-(fn, oracle) pair waited fully formed with parity proven at sf0.001,
-sf0.01 AND sf0.1 (``tests/test_workload_next.py`` STAGED4), so promotion
-was the decorator change below plus window slots — zero new verification
-work. With this promotion every sink family S5–S12 is driver
-hash-certified.
+"""Round-9 registry additions. With these pairs every sink family
+S5–S12 is driver hash-certified.
 
 Coverage targets (VERDICT r7 "stage the round-9 window"):
   * ``jdbc_roundtrip`` — the S9 SQL append sink + S3 partitioned JDBC
@@ -673,20 +668,3 @@ def q_series_ohlc(spark, sf_dir):
         fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
         F.count(F.lit(1)).alias("n_obs"),
     )
-
-
-#: name -> (fn, oracle) for the round-9 promotion pass and the parity test.
-STAGED4 = {
-    "jdbc_roundtrip": (q_jdbc_roundtrip, JDBC_ROUNDTRIP_ORACLE),
-    "xml_metadata_roundtrip": (q_xml_metadata_roundtrip, XML_ROUNDTRIP_ORACLE),
-    "export_rows_roundtrip": (q_export_rows_roundtrip, EXPORT_ROWS_ORACLE),
-    "asof_join_nearest": (q_asof_join_nearest, ASOF_NEAREST_ORACLE),
-    "grouped_percentiles": (q_grouped_percentiles, GROUPED_PERCENTILES_ORACLE),
-    "rest_ingest_roundtrip": (q_rest_ingest_roundtrip, REST_INGEST_ORACLE),
-    "rolling_corr": (q_rolling_corr, ROLLING_CORR_ORACLE),
-    "chunk_sliding": (q_chunk_sliding, CHUNK_SLIDING_ORACLE),
-    "series_ohlc": (q_series_ohlc, SERIES_OHLC_ORACLE),
-    "annotated_export_fanout": (q_annotated_export_fanout, ANNOTATED_FANOUT_ORACLE),
-    "txtable_incremental_agg": (q_txtable_incremental_agg, TXTABLE_IVM_ORACLE),
-    "winsorize_values": (q_winsorize_values, WINSORIZE_ORACLE),
-}

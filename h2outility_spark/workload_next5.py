@@ -1,15 +1,8 @@
-"""Round-10 registry staging area (same lifecycle as ``workload_next`` →
-``workload_next4``): fully-formed (PySpark fn, DuckDB oracle) pairs
-PROMOTED at the round-10 rotation. ``txtable_incremental_minmax`` was
-PULLED FORWARD into the round-9 window (VERDICT r8 directive 4 — the
-bounded-state MIN/MAX maintenance deserved driver evidence a round
-early, and its broadcast-size guard landed first); the remaining 15
-pairs were wrapped with ``@query`` in round 10 (VERDICT r9 directive 1)
-after the tri-scale parity sweep (sf0.001 + sf0.01 + sf0.1) read ALL
-MATCH in round 9.
-
-Each pair is parity-tested in ``tests/test_workload_next.py`` (STAGED5)
-under the driver's comparison discipline at sf0.001 AND sf0.01.
+"""Round-10 registry additions: (PySpark fn, DuckDB oracle) pairs.
+``txtable_incremental_minmax`` entered the round-9 window a round early
+(VERDICT r8 directive 4 — the bounded-state MIN/MAX maintenance deserved
+driver evidence, and its broadcast-size guard landed first); the
+remaining 15 pairs were registered in round 10.
 
 Coverage targets:
   * ``oplist_replay`` — the §2.12 record/replay surface under a driver
@@ -365,27 +358,15 @@ _PR_TRADE_EDGES_CTE = """edges AS (
 )"""
 
 
-def _pagerank_oracle(
-    iters: int = _PR_ITERS,
-    damp: float = _PR_DAMP,
-    edges_cte: str = _PR_TRADE_EDGES_CTE,
-    final_extra: str = "",
-) -> str:
+def _pagerank_oracle(iters: int = _PR_ITERS, damp: float = _PR_DAMP) -> str:
     """Weighted PageRank unrolled as chained CTEs (the kmeans-oracle
     pattern): one (dangling-mass, rank-update) pair per iteration,
     mirroring the Spark loop step for step. Both sides round to 6 dp at
-    the end only; intermediate sums differ at most in the last ulp.
-
-    ``edges_cte`` parameterizes the graph (it must define ``edges AS
-    (... src, dst, w ...)`` — possibly via helper CTEs of its own) so
-    derived-state pairs (workload_next12's CDC-maintained edge table)
-    reuse the identical unrolled iteration text; ``final_extra`` appends
-    certificate columns to the final SELECT. Defaults reproduce the
-    registered ``pagerank_nation_trade`` oracle byte-for-byte."""
+    the end only; intermediate sums differ at most in the last ulp."""
     from h2outility_spark.workload import sql_round
 
     parts = [
-        "WITH " + edges_cte,
+        "WITH " + _PR_TRADE_EDGES_CTE,
         "outw AS (SELECT src, sum(w) AS ow FROM edges GROUP BY src)",
         "nodes AS (SELECT n_nationkey AS node FROM nation)",
         "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)",
@@ -406,9 +387,7 @@ def _pagerank_oracle(
             f"GROUP BY e.dst) inc ON nd.node = inc.node)"
         )
         prev = f"r{i}"
-    final = (
-        f"SELECT node, {sql_round('r', 6)} AS rank{final_extra} FROM {prev}"
-    )
+    final = f"SELECT node, {sql_round('r', 6)} AS rank FROM {prev}"
     return ",\n".join(parts) + "\n" + final
 
 
@@ -416,14 +395,12 @@ PAGERANK_ORACLE = _pagerank_oracle()
 
 
 def _pagerank_loop(edges, nodes, n_nodes: float, damp: float = _PR_DAMP, iters: int = _PR_ITERS):
-    """The weighted-PageRank iteration both pairs serve: tiny broadcast
-    rank vector per iteration, bounded dangling-mass scalar collect,
-    dangling mass redistributed uniformly. ``edges`` is (src, dst, w) —
-    pre-cache it; ``nodes`` is a single ``node`` column. Kept as ONE
-    shared helper because the unrolled-CTE oracle text
-    (``_pagerank_oracle``) certifies BOTH the registered trade-graph pair
-    and workload_next12's CDC-maintained form — the Spark side must stay
-    op-for-op identical for that shared certificate to hold."""
+    """The weighted-PageRank iteration: tiny broadcast rank vector per
+    iteration, bounded dangling-mass scalar collect, dangling mass
+    redistributed uniformly. ``edges`` is (src, dst, w) — pre-cache it;
+    ``nodes`` is a single ``node`` column. The Spark side stays
+    op-for-op identical to the unrolled-CTE oracle text
+    (``_pagerank_oracle``)."""
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow")).cache()
     ranks = nodes.withColumn("r", F.lit(1.0 / n_nodes))
     for _ in range(iters):
@@ -1149,24 +1126,3 @@ def q_stream_minmax_ivm(spark, sf_dir):
         F.element_at("kmin", 1).alias("min_cents"),
         F.element_at("kmax", 1).alias("max_cents"),
     )
-
-
-#: name -> (fn, oracle) for a future promotion pass and the parity test.
-STAGED5 = {
-    "oplist_replay": (q_oplist_replay, OPLIST_REPLAY_ORACLE),
-    "stream_ohlc": (q_stream_ohlc, STREAM_OHLC_ORACLE),
-    "edit_session_roundtrip": (q_edit_session_roundtrip, EDIT_SESSION_ORACLE),
-    "txtable_incremental_minmax": (q_txtable_incremental_minmax, TXTABLE_MINMAX_ORACLE),
-    "pagerank_nation_trade": (q_pagerank_nation_trade, PAGERANK_ORACLE),
-    "series_trend_fit": (q_series_trend_fit, TREND_FIT_ORACLE),
-    "approx_percentile_bounds": (q_approx_percentile_bounds, APPROX_PCTL_ORACLE),
-    "rp_lsh_autosig": (q_rp_lsh_autosig, RP_AUTOSIG_ORACLE),
-    "txtable_reader_isolation": (q_txtable_reader_isolation, READER_ISOLATION_ORACLE),
-    "bucketed_join_orders": (q_bucketed_join_orders, BUCKETED_JOIN_ORACLE),
-    "federated_union": (q_federated_union, FEDERATED_UNION_ORACLE),
-    "stream_ivm_agg": (q_stream_ivm_agg, STREAM_IVM_ORACLE),
-    "stream_chunk_flow": (q_stream_chunk_flow, STREAM_CHUNK_ORACLE),
-    "txtable_vacuum_retention": (q_txtable_vacuum_retention, VACUUM_RETENTION_ORACLE),
-    "approx_distinct_bounds": (q_approx_distinct_bounds, APPROX_DISTINCT_ORACLE),
-    "stream_minmax_ivm": (q_stream_minmax_ivm, STREAM_MINMAX_ORACLE),
-}

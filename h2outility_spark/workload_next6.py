@@ -1,11 +1,6 @@
-"""Round-11 promotion of the round-10 staging area (same lifecycle as
-``workload_next`` → ``workload_next5``): all 12 pairs were staged
-tri-scale parity-green in round 10 and wrapped with ``@query`` in round
-11 (VERDICT r10 directive 1), entering the registry and the checked
-window together.
-
-Each pair remains parity-tested in ``tests/test_workload_next.py``
-(STAGED6) under the driver's comparison discipline at sf0.001 AND sf0.01.
+"""Round-11 registry additions: 12 (PySpark fn, DuckDB oracle) pairs
+that entered the registry and the checked window together (VERDICT r10
+directive 1).
 
 Coverage targets:
   * ``dedup_incremental_lsh`` — the near-dup ingest shape at 100 TB: a
@@ -546,7 +541,7 @@ def q_rag_prep_pipeline(spark, sf_dir):
     charging by first token, chunk order (doc_id, chunk_idx)) flips the
     hash. This is the SMALL-CORPUS form: the global-order window is the
     contract being certified (one packing order for the whole corpus).
-    The 100 TB form exists as code, not prose — the staged
+    The 100 TB form exists as code, not prose — the registered
     ``rag_prep_sharded`` twin and ``pack_sequences(n_shards=k)`` scope
     the same window per md5 hash-shard (k parallel sorts of n/k)."""
     from pyspark.sql import Window as W
@@ -876,20 +871,3 @@ def q_asof_interp_join(spark, sf_dir):
         "method",
         fround(F.col("value_interp"), 4).alias("value_interp"),
     )
-
-
-#: name -> (fn, oracle) for a future promotion pass and the parity test.
-STAGED6 = {
-    "dedup_incremental_lsh": (q_dedup_incremental_lsh, DEDUP_INCR_LSH_ORACLE),
-    "neardup_ensemble_agree": (q_neardup_ensemble_agree, ENSEMBLE_AGREE_ORACLE),
-    "quality_drift_weekly": (q_quality_drift_weekly, QUALITY_DRIFT_ORACLE),
-    "txtable_zorder_race": (q_txtable_zorder_race, ZORDER_RACE_ORACLE),
-    "stream_mixture_plan": (q_stream_mixture_plan, STREAM_MIXTURE_ORACLE),
-    "secondary_sort_export": (q_secondary_sort_export, SECONDARY_SORT_ORACLE),
-    "rag_prep_pipeline": (q_rag_prep_pipeline, RAG_PREP_ORACLE),
-    "stratified_split": (q_stratified_split, STRATIFIED_SPLIT_ORACLE),
-    "embedding_quantize_error": (q_embedding_quantize_error, EMB_QUANTIZE_ORACLE),
-    "vocab_oov_rate": (q_vocab_oov_rate, VOCAB_OOV_ORACLE),
-    "heavy_hitters_cms": (q_heavy_hitters_cms, HEAVY_HITTERS_ORACLE),
-    "asof_interp_join": (q_asof_interp_join, ASOF_INTERP_ORACLE),
-}

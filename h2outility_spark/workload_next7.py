@@ -1,11 +1,6 @@
-"""Round-12 promotion of the round-11 staging area (same lifecycle as
-``workload_next`` → ``workload_next6``): all 12 pairs were staged
-tri-scale parity-green in round 11 and wrapped with ``@query`` in round
-12 (VERDICT r11 directive 1), entering the registry and the checked
-window together.
-
-Each pair remains parity-tested in ``tests/test_workload_next.py``
-(STAGED7) under the driver's comparison discipline at sf0.001 AND sf0.01.
+"""Round-12 registry additions: 12 (PySpark fn, DuckDB oracle) pairs
+that entered the registry and the checked window together (VERDICT r11
+directive 1).
 
 Coverage targets:
   * ``jsonl_roundtrip`` — JSON Lines, THE training-data interchange
@@ -736,7 +731,7 @@ def q_stream_jsonl_ingest(spark, sf_dir):
     """The production drop-directory shape: producers append JSON Lines
     files, Spark TAILS the directory as a stream (``readStream.json``
     with a pinned schema + microsecond timestampFormat) and maintains a
-    running per-type aggregate across restarts. Composes the two STAGED7
+    running per-type aggregate across restarts. Composes the two
     certificates upstream of it: the JSONL fidelity (timestamps to the
     µs, exact integer cents — any writer/reader loss flips min/max/sum)
     and the streaming-state recovery (two drains, one checkpoint —
@@ -1120,20 +1115,3 @@ def q_weekly_pctl_rollup(spark, sf_dir):
             "within_bin"
         ),
     )
-
-
-#: name -> (fn, oracle) for a future promotion pass and the parity test.
-STAGED7 = {
-    "rag_prep_sharded": (q_rag_prep_sharded, RAG_SHARDED_ORACLE),
-    "txtable_branch_merge_back": (q_txtable_branch_merge_back, TXBRANCH_ORACLE),
-    "stream_stratified_ingest": (q_stream_stratified_ingest, STREAM_STRAT_ORACLE),
-    "weekly_pctl_rollup": (q_weekly_pctl_rollup, WEEKLY_PCTL_ORACLE),
-    "jsonl_roundtrip": (q_jsonl_roundtrip, JSONL_ROUNDTRIP_ORACLE),
-    "stream_heavy_hitters": (q_stream_heavy_hitters, STREAM_CMS_ORACLE),
-    "bm25_topk_docs": (q_bm25_topk_docs, BM25_ORACLE),
-    "late_data_quarantine": (q_late_data_quarantine, LATE_QUARANTINE_ORACLE),
-    "txtable_clone_divergence": (q_txtable_clone_divergence, CLONE_DIVERGENCE_ORACLE),
-    "histogram_quantile_sketch": (q_histogram_quantile_sketch, HIST_QUANTILE_ORACLE),
-    "qc_robust_mad": (q_qc_robust_mad, QC_ROBUST_MAD_ORACLE),
-    "stream_jsonl_ingest": (q_stream_jsonl_ingest, STREAM_JSONL_ORACLE),
-}

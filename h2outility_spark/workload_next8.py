@@ -1,11 +1,5 @@
-"""Round-13 registry staging area (same lifecycle as ``workload_next`` →
-``workload_next7``): fully-formed (PySpark fn, DuckDB oracle) pairs that
-entered the registry in the ROUND-13 rotation (every function below now
-carries ``@query``; the STAGED8 dict remains for the staged parity tests,
-which re-check the same pairs tri-scale).
-
-Each pair is parity-tested in ``tests/test_workload_next.py`` (STAGED8)
-under the driver's comparison discipline at sf0.001 AND sf0.01.
+"""Round-13 registry additions: (PySpark fn, DuckDB oracle) pairs that
+entered the registry in the round-13 rotation.
 
 Coverage targets:
   * ``hll_register_rollup`` — the FOURTH sketch family made mergeable:
@@ -206,7 +200,7 @@ _BLOOM_M, _BLOOM_K = 1024, 3
 def _bloom_pos_oracle(item_sql: str, i: int, m_bits: int = _BLOOM_M) -> str:
     """DuckDB restatement of ``sketch._bloom_pos_sql`` — ONE definition
     (workload_next9 imports it) so the md5-position formula can never
-    drift between the two staged Bloom certificates and the operator."""
+    drift between the two Bloom certificates and the operator."""
     return (
         f"('0x' || substr(md5(CAST({item_sql} AS VARCHAR) || '#{i}'), 1, 8))::BIGINT"
         f" % {m_bits}"
@@ -1297,23 +1291,3 @@ def q_hll_week_overlap(spark, sf_dir):
             "within_band"
         ),
     )
-
-
-#: name -> (fn, oracle) for a future promotion pass and the parity test.
-STAGED8 = {
-    "hll_register_rollup": (q_hll_register_rollup, HLL_ROLLUP_ORACLE),
-    "bloom_prefilter_join": (q_bloom_prefilter_join, BLOOM_PREFILTER_ORACLE),
-    "txtable_delete_keys": (q_txtable_delete_keys, TXDELETE_ORACLE),
-    "txtable_branch_tombstones": (q_txtable_branch_tombstones, TXTOMB_ORACLE),
-    "txtable_cdf_replica": (q_txtable_cdf_replica, CDF_REPLICA_ORACLE),
-    "label_prop_nations": (q_label_prop_nations, LABEL_PROP_ORACLE),
-    "partitioned_sink_prune": (q_partitioned_sink_prune, PARTITIONED_PRUNE_ORACLE),
-    "doc_token_entropy": (q_doc_token_entropy, DOC_ENTROPY_ORACLE),
-    "zipf_slope_fit": (q_zipf_slope_fit, ZIPF_ORACLE),
-    "stratified_topk_sample": (q_stratified_topk_sample, STRAT_TOPK_ORACLE),
-    "mixture_temperature_plan": (q_mixture_temperature_plan, MIX_TEMP_ORACLE),
-    "pack_conservation_cert": (q_pack_conservation_cert, PACK_CERT_ORACLE),
-    "txtable_branch_conflicts": (q_txtable_branch_conflicts, TXCONFLICTS_ORACLE),
-    "label_prop_weighted": (q_label_prop_weighted, LABEL_PROP_WEIGHTED_ORACLE),
-    "hll_week_overlap": (q_hll_week_overlap, HLL_OVERLAP_ORACLE),
-}

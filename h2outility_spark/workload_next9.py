@@ -1,11 +1,5 @@
-"""Round-14 registry additions (PROMOTED by the round-14 rotation, the
-same lifecycle as ``workload_next`` → ``workload_next8``): every pair now
-carries ``@query``; the STAGED9 dict remains for the staged parity tests,
-so each pair is checked both as a registry member and on the staging
-harness.
-
-Each pair is parity-tested in ``tests/test_workload_next.py`` (STAGED9)
-under the driver's comparison discipline at sf0.001 AND sf0.01.
+"""Round-14 registry additions: (PySpark fn, DuckDB oracle) pairs that
+entered the registry in the round-14 rotation.
 
 Coverage targets (the three VERDICT-r11 build directives):
   * ``stream_cdc_replica`` — the STREAMING form of the certified-batch
@@ -949,18 +943,3 @@ def q_unigram_logprob_buckets(spark, sf_dir):
         "logprob",
         F.ntile(_ULM_BUCKETS).over(w).cast("int").alias("bucket"),
     )
-
-
-#: name -> (fn, oracle) for a future promotion pass and the parity test.
-STAGED9 = {
-    "stream_cdc_replica": (q_stream_cdc_replica, STREAM_CDC_ORACLE),
-    "bloom_prefilter_revenue": (q_bloom_prefilter_revenue, BLOOM_REVENUE_ORACLE),
-    "neardup_embedding_strict": (q_neardup_embedding_strict, NEARDUP_STRICT_ORACLE),
-    "txtable_resolve_ours": (q_txtable_resolve_ours, RESOLVE_OURS_ORACLE),
-    "embedding_drift_batches": (q_embedding_drift_batches, EMB_DRIFT_ORACLE),
-    "semantic_dedup_cells": (q_semantic_dedup_cells, SEMANTIC_DEDUP_ORACLE),
-    "unigram_logprob_buckets": (q_unigram_logprob_buckets, UNIGRAM_LM_ORACLE),
-    "stream_cdc_evolve_replica": (q_stream_cdc_evolve_replica, STREAM_CDC_EVOLVE_ORACLE),
-    "stream_cdc_catchup": (q_stream_cdc_catchup, CDC_CATCHUP_ORACLE),
-    "hll_grid_serving": (q_hll_grid_serving, _hll_serving_oracle()),
-}

@@ -46,34 +46,19 @@ def main() -> int:
 
     reg = workload.registry()
 
-    # staged-but-unregistered pairs resolve too (tri-scale staging checks)
-    staged: dict = {}
-    for mod in ("workload_next4", "workload_next5", "workload_next6", "workload_next7", "workload_next8", "workload_next9", "workload_next10", "workload_next11", "workload_next12", "workload_next13"):
-        try:
-            m = __import__(f"h2outility_spark.{mod}", fromlist=[mod])
-        except ImportError:
-            continue
-        for attr in dir(m):
-            if attr.startswith("STAGED"):
-                staged.update(getattr(m, attr))
-
     rc = 0
     for name in args.names:
-        if name in reg:
-            spec = reg[name]
-            fn, oracle = spec.fn, spec.oracle
-        elif name in staged:
-            fn, oracle = staged[name]
-        else:
-            print(f"{name}: UNKNOWN (not registered or staged)")
+        if name not in reg:
+            print(f"{name}: UNKNOWN (not registered)")
             rc = 2
             continue
-        if oracle is None:
+        spec = reg[name]
+        if spec.oracle is None:
             print(f"{name}: NO ORACLE (rows-only query)")
             continue
-        sdf = fn(spark, args.sf)
+        sdf = spec.fn(spark, args.sf)
         scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-        cur = con.execute(oracle)
+        cur = con.execute(spec.oracle)
         dcols = [d[0] for d in cur.description]
         drows = cur.fetchall()
         ok_cols = sorted(scols) == sorted(dcols)

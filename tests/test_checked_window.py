@@ -83,15 +83,13 @@ def test_registry_capacity_policy_freeze_at_234():
     """The registry-capacity POLICY (VERDICT r13 #4, decided r14): the
     4-round freshness gate above holds 4 x 50 = 200 green slots, so every
     registered query beyond 200 rides a window as a forced pick. The
-    registry FREEZES at 234 — the size after the r15 STAGED10 promotion
-    (227 registered post-r14 + 7 staged pairs in workload_next10). That
-    leaves 34 forced picks + 16 free slots per window forever, which the
-    4-round gate can sustain indefinitely. From r16 on, a NEW query may
-    only land as a REPLACEMENT: retire a near-redundant entry in the same
-    commit (keeping this cap green) — never widen the gate (dilutes
-    freshness) and never grow past the cap (starves promotions, the
-    builder's ~240 law). Staged-but-unpromoted pairs don't count; they
-    cost nothing until promotion."""
+    registry FREEZES at 234 (227 registered post-r14 plus headroom for
+    seven more). That leaves 34 forced picks + 16 free slots per window
+    forever, which the 4-round gate can sustain indefinitely. From r16
+    on, a NEW query may only land as a REPLACEMENT: retire a
+    near-redundant entry in the same commit (keeping this cap green) —
+    never widen the gate (dilutes freshness) and never grow past the cap
+    (starves promotions, the builder's ~240 law)."""
     assert len(workload.REGISTRY) <= 234, (
         f"registry has {len(workload.REGISTRY)} entries, over the frozen cap "
         "of 234: retire a near-redundant entry in the same commit that adds "

@@ -14,7 +14,7 @@ import pytest
 from h2outility_spark import workload
 from h2outility_spark.sources.parquet import TABLES
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MED
 
 
 def _duck(sf_dir: str):
@@ -28,12 +28,6 @@ from h2outility_spark.oracle_compare import normalize_rows as _normalize
 
 
 SPECS = [(name, spec) for name, spec in workload.registry().items() if spec.oracle]
-
-#: Queries OUTSIDE the driver's 50-row checked window: their only driver-grade
-#: evidence is local, so they additionally run at the DRIVER'S scale factor
-#: (sf0.01) below — same data volume the real gate uses.
-SF_DIR_MED = "/root/testdata/sf0.01"
-OUT_OF_WINDOW = [n for n, _ in SPECS if n not in workload.CHECKED_WINDOW]
 
 
 def _assert_parity(spark, name: str, sf_dir: str) -> None:
@@ -63,9 +57,9 @@ def test_query_matches_oracle(spark, name):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", OUT_OF_WINDOW)
-def test_out_of_window_query_matches_oracle_at_driver_sf(spark, name):
-    """Out-of-window queries earn their parity evidence at the driver's own
-    scale factor, so 'green locally' and 'green at the gate' mean the same
-    data volume for every registered query."""
+@pytest.mark.parametrize("name", [n for n, _ in SPECS])
+def test_query_matches_oracle_at_driver_sf(spark, name):
+    """Every registered query also earns its parity evidence at the
+    driver's own scale factor (sf0.01), so 'green locally' and 'green at
+    the gate' mean the same data volume for every registered query."""
     _assert_parity(spark, name, SF_DIR_MED)

@@ -8,6 +8,8 @@ caught at test time."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from h2outility_spark import workload
@@ -21,10 +23,10 @@ BNLJ_ALLOWED = {
     # assignment plan; the broadcast side is k<=128 centroid rows
     "embedding_knn",  # brute-force baseline by design (IVF/LSH are the scale paths)
     "tfidf_top_terms",  # 1-row corpus-count broadcast
-    "bm25_topk_docs",  # 1-row (n_docs, avgdl) stats broadcast (STAGED7)
-    "weekly_pctl_rollup",  # 1-row global min/max bin-edge broadcast (STAGED7)
-    "mixture_temperature_plan",  # two 1-row broadcasts: total tokens + normalizer (STAGED8)
-    "pack_conservation_cert",  # 1-row corpus-stats broadcast x 1-row bin-stats (STAGED8)
+    "bm25_topk_docs",  # 1-row (n_docs, avgdl) stats broadcast
+    "weekly_pctl_rollup",  # 1-row global min/max bin-edge broadcast
+    "mixture_temperature_plan",  # two 1-row broadcasts: total tokens + normalizer
+    "pack_conservation_cert",  # 1-row corpus-stats broadcast x 1-row bin-stats
     "neardup_embedding_pairs",  # brute-force verifier (neardup_embedding_lsh is the scale path)
     "pq_search",  # ADC scan: query-set broadcast against compressed codes by design
     "ivfpq_search",  # query x broadcast centroid table for cell probing (both tiny)
@@ -36,19 +38,10 @@ BNLJ_ALLOWED = {
     "hybrid_search_knn",  # semantic leg: tiny query set broadcast x docs by
     # design (operators/similarity.hybrid_search; IVF/PQ are the scale paths
     # when the query set grows)
-    "bloom_prefilter_revenue",  # two 1-row count broadcasts (n_cand, n_total) (STAGED9)
+    "bloom_prefilter_revenue",  # two 1-row count broadcasts (n_cand, n_total)
     "semantic_dedup_cells",  # vectors x broadcast 8-centroid frame — the
-    # canonical IVF/kmeans assignment shape (same as ivf_search) (STAGED9)
-    "unigram_logprob_buckets",  # 1-row total-token-count broadcast (STAGED9)
-    "unigram_lm_salted",  # 1-row total-token-count broadcast (STAGED10)
-    "bigram_logprob_docs",  # 1-row vocabulary-size broadcast (STAGED10)
-    "semantic_dedup_parallel",  # vectors x broadcast 16-centroid frame, twice —
-    # the canonical IVF/kmeans assignment shape (STAGED10)
-    "bm25_cdc_index",  # 1-row index-stats broadcast (n_docs, avgdl) (STAGED11)
-    "semantic_dedup_ivf",  # vectors x broadcast 64-centroid frame (seed pass
-    # + stored-model pass) — the canonical IVF assignment shape (STAGED11)
-    "ann_stored_ivf",  # queries x broadcast stored-centroid frame — the
-    # canonical IVF assignment shape served from the TxTable model (STAGED12)
+    # canonical IVF/kmeans assignment shape (same as ivf_search)
+    "unigram_logprob_buckets",  # 1-row total-token-count broadcast
 }
 
 
@@ -65,63 +58,49 @@ def test_no_unplanned_nested_loop_joins(spark):
 
 @pytest.mark.slow
 def test_bnlj_allowlist_is_tight(spark):
-    """Every allowlisted name must still exist (registered or staged) and
-    still plan a BNLJ — stale entries would quietly widen the allowlist."""
-    from h2outility_spark.workload_next7 import STAGED7
-    from h2outility_spark.workload_next8 import STAGED8
-    from h2outility_spark.workload_next9 import STAGED9
-    from h2outility_spark.workload_next10 import STAGED10
-    from h2outility_spark.workload_next11 import STAGED11
-    from h2outility_spark.workload_next12 import STAGED12
-    from h2outility_spark.workload_next13 import STAGED13
-
+    """Every allowlisted name must still be registered and still plan a
+    BNLJ — stale entries would quietly widen the allowlist."""
     reg = workload.registry()
-    fns = {
-        **{n: s.fn for n, s in reg.items()},
-        **{n: fn for n, (fn, _o) in STAGED7.items()},
-        **{n: fn for n, (fn, _o) in STAGED8.items()},
-        **{n: fn for n, (fn, _o) in STAGED9.items()},
-        **{n: fn for n, (fn, _o) in STAGED10.items()},
-        **{n: fn for n, (fn, _o) in STAGED11.items()},
-        **{n: fn for n, (fn, _o) in STAGED12.items()},
-        **{n: fn for n, (fn, _o) in STAGED13.items()},
-    }
-    stale = [n for n in BNLJ_ALLOWED if n not in fns]
-    assert not stale, f"allowlisted queries no longer registered/staged: {stale}"
+    stale = [n for n in BNLJ_ALLOWED if n not in reg]
+    assert not stale, f"allowlisted queries no longer registered: {stale}"
     no_longer = []
     for name in sorted(BNLJ_ALLOWED):
-        plan = fns[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        plan = reg[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         if "BroadcastNestedLoopJoin" not in plan:
             no_longer.append(name)
     assert not no_longer, f"remove from allowlist (no BNLJ anymore): {no_longer}"
 
 
 @pytest.mark.slow
-def test_staged_pairs_plan_clean(spark):
-    """The staging area gets the same nested-loop audit as the registry,
-    BEFORE promotion: a staged query that plans a CartesianProduct or an
-    unallowlisted BNLJ would otherwise only trip the registry sweep at
-    rotation time, one round too late."""
-    from h2outility_spark.workload_next4 import STAGED4
-    from h2outility_spark.workload_next5 import STAGED5
-    from h2outility_spark.workload_next6 import STAGED6
-    from h2outility_spark.workload_next7 import STAGED7
-    from h2outility_spark.workload_next8 import STAGED8
-    from h2outility_spark.workload_next9 import STAGED9
-    from h2outility_spark.workload_next10 import STAGED10
-    from h2outility_spark.workload_next11 import STAGED11
-    from h2outility_spark.workload_next12 import STAGED12
-    from h2outility_spark.workload_next13 import STAGED13
+def test_txtable_prune_scan_reads_one_file(spark):
+    """The pruning economics behind txtable_prune_scan: a [250, 499]
+    range over four bucket-disjoint files must plan exactly ONE file into
+    the scan (manifest stats answer the file-level question)."""
+    df = workload.registry()["txtable_prune_scan"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert m, f"no file index in plan: {plan[:500]}"
+    assert m.group(1) == "1", f"expected 1 pruned file, scan reads {m.group(1)}"
+    # and the residual range filter still reaches the parquet reader
+    assert "GreaterThanOrEqual(key_bucket" in plan and "LessThanOrEqual(key_bucket" in plan
 
-    offenders: dict[str, list[str]] = {}
-    for name, (fn, _oracle) in {**STAGED4, **STAGED5, **STAGED6, **STAGED7, **STAGED8, **STAGED9, **STAGED10, **STAGED11, **STAGED12, **STAGED13}.items():
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        flags = [b for b in ("CartesianProduct", "BroadcastNestedLoopJoin") if b in plan]
-        if "CartesianProduct" in flags or (
-            "BroadcastNestedLoopJoin" in flags and name not in BNLJ_ALLOWED
-        ):
-            offenders[name] = flags
-    assert not offenders, f"staged queries with nested-loop/cartesian plans: {offenders}"
+
+@pytest.mark.slow
+def test_bucketed_join_plans_without_exchange_on_join_inputs(spark):
+    """The layout economics behind bucketed_join_orders: with broadcast
+    disabled, the bucketed fact-dim join must sort-merge WITHOUT an
+    Exchange on either input (bucket-to-bucket reads) — the only
+    exchange in the whole plan is the tiny post-join rollup's."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = workload.registry()["bucketed_join_orders"].fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in plan, plan[:800]
+    n_exchange = plan.count("Exchange")
+    assert n_exchange <= 1, f"expected <=1 Exchange (rollup only), got {n_exchange}:\n{plan[:1200]}"
 
 
 # -- InferFiltersFromGenerate hazard (VERDICT r14 #4) ------------------------

@@ -86,9 +86,8 @@ def test_shuffle_budget(spark, name):
 
 
 def test_staged_asof_forward_budget(spark):
-    """The round-8 staged forward as-of must keep the backward variant's
-    one-shuffle shape (union-sort-carry on the key, no hidden regroup) —
-    pinned here directly since staged queries aren't registered yet."""
+    """The round-8 forward as-of must keep the backward variant's
+    one-shuffle shape (union-sort-carry on the key, no hidden regroup)."""
     spark.catalog.clearCache()
     from h2outility_spark.workload_next3 import q_asof_join_forward
 

@@ -699,8 +699,8 @@ def test_tail_bootstrap_nullfills_pre_evolution_files(spark, registered, tmp_pat
 def test_cdc_replica_skips_marker_on_empty_batch(spark, tmp_path):
     """ADVICE r13 regression: a no-data micro-batch (default-trigger
     heartbeat) must not write an applied_<id> marker — the marker count
-    certifies the number of DATA batches (stream_cdc_bounded's oracle pins
-    it), so spurious empty batches may not inflate it."""
+    certifies the number of DATA batches, so spurious empty batches may not
+    inflate it."""
     import os
 
     from h2outility_spark.workload_next9 import _cdc_replica_runner
@@ -748,52 +748,3 @@ def test_drain_until_caught_up_under_version_cap(spark, registered, tmp_path):
     # Already caught up: one more loop call runs a single no-op drain.
     assert drain_until_caught_up(start, tdir) == 1
     assert len(rows) == 3
-
-
-def test_apply_edge_batch_replay_safe(spark, tmp_path):
-    """The additive derived-state handler (workload_next12._apply_edge_batch)
-    is replay-safe under the one-commit-per-batch law: a replayed batch
-    whose state commit landed but whose marker did not (crash between the
-    two) must NOT double-apply its deltas; retired keys stay as w = 0
-    rows so commits and markers advance in lockstep."""
-    import os
-
-    from h2outility_spark.workload_next12 import _apply_edge_batch
-
-    applied = str(tmp_path / "applied")
-    os.makedirs(applied)
-    edges_t = TxTable(spark, str(tmp_path / "edges"), key_cols=["src", "dst"])
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [Row(o_orderkey=o, l_suppkey=s, src=a, dst=b, cnt=c,
-                 _commit_version=v, _sign=g) for o, s, a, b, c, v, g in rows],
-            "o_orderkey bigint, l_suppkey bigint, src int, dst int, cnt bigint,"
-            " _commit_version bigint, _sign int",
-        )
-
-    b0 = batch([(1, 1, 1, 2, 2, 0, 1), (2, 1, 1, 2, 3, 0, 1)])
-    _apply_edge_batch(edges_t, applied, b0, 0)
-    assert edges_t.snapshot().collect()[0]["w"] == 5.0
-    v_after = edges_t.latest_version()
-
-    # plain replay: marker present, nothing happens
-    _apply_edge_batch(edges_t, applied, b0, 0)
-    assert edges_t.latest_version() == v_after
-    assert edges_t.snapshot().collect()[0]["w"] == 5.0
-
-    # crash-window replay: commit landed, marker lost — the version/marker
-    # ledger proves the batch applied; deltas must NOT be added again
-    os.remove(os.path.join(applied, "applied_0"))
-    _apply_edge_batch(edges_t, applied, b0, 0)
-    assert edges_t.latest_version() == v_after
-    assert edges_t.snapshot().collect()[0]["w"] == 5.0
-    assert os.path.exists(os.path.join(applied, "applied_0"))  # reconciled
-
-    # retraction batch drives the key to zero: the row stays (w = 0), one
-    # commit per batch, serving filters w > 0
-    b1 = batch([(1, 1, 1, 2, 2, 1, -1), (2, 1, 1, 2, 3, 1, -1)])
-    _apply_edge_batch(edges_t, applied, b1, 1)
-    snap = edges_t.snapshot().collect()
-    assert len(snap) == 1 and snap[0]["w"] == 0.0
-    assert edges_t.latest_version() == v_after + 1
