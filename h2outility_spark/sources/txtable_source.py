@@ -43,11 +43,17 @@ errors loudly if that version's parent manifest was vacuumed.
 CAVEAT: ``Trigger.AvailableNow`` latches the FIRST (capped) latestOffset
 as the whole drain's target — the Python DataSource API has no
 SupportsTriggerAvailableNow hook — so an availableNow drain under a cap
-advances at most N versions and stops. Use the default trigger (with
-``processAllAvailable``), or :func:`drain_until_caught_up`, which
-mechanizes the repeated-drain loop (one capped availableNow run per
-admission quantum through one checkpoint) until the stream reaches the
-table's latest committed version.
+advances at most N versions and stops; each further drain through the
+same checkpoint advances the next N. A rate-limited catch-up in one run
+needs the default trigger, which keeps planning capped batches until the
+source is drained.
+
+The engine drains these sources with
+``streaming.incremental.drain_available_now`` (one availableNow run
+through a checkpoint, under the bounded-batch shuffle pin); a
+``foreachBatch`` handler that applies the feed to state outside the
+checkpoint (the CDC replica) commits through
+``streaming.incremental.BatchLedger`` so a replayed batch is skipped.
 
 The data plane is vectorized: both readers yield ``pyarrow.RecordBatch``
 iterators (pyspark 4's Arrow DataSource path), so rows never materialize
@@ -652,56 +658,6 @@ class TxTableCdcDataSource(DataSource):
             starting_version=_starting_version_option(self.options),
             max_bytes_per_batch=_max_bytes_option(self.options),
         )
-
-
-def drain_until_caught_up(start_drain, table_dir: str, max_drains: int = 10_000) -> int:
-    """Fully drain a rate-limited TxTable stream with repeated
-    ``availableNow`` runs — the ergonomic fix for the module-docstring
-    caveat (AvailableNow latches the FIRST capped latestOffset as the whole
-    drain's target, so one run under ``maxVersionsPerBatch`` /
-    ``maxBytesPerBatch`` advances at most one admission quantum).
-
-    ``start_drain`` is a zero-arg callable that STARTS and returns a fresh
-    ``StreamingQuery`` over the same (source, checkpoint, sink) triple —
-    e.g. ``lambda: writer.trigger(availableNow=True).start()``. Each run
-    resumes from the shared checkpoint, so exactly-once semantics hold
-    across the whole loop; the loop stops when a run's final planned end
-    offset reaches the table's latest committed version (or a run plans no
-    batch at all, i.e. the backlog was already empty). Returns the number
-    of drains run. Driver-side cost is one query start per admission
-    quantum — the data plane stays the same bounded micro-batches a
-    default-trigger catch-up would run. The reference analog is the
-    cron-style re-run loop (src/SilentUpdater.py:10-21): re-invoke the
-    same incremental job until there is nothing left to do."""
-    for i in range(1, max_drains + 1):
-        q = start_drain()
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        latest = _latest_version(table_dir)
-        if latest is None:
-            return i  # empty table: trivially caught up
-        prog = q.lastProgress
-        if not prog or not prog.get("sources"):
-            return i  # the run planned no batch: backlog already empty
-        # endOffset arrives as a STRING repr of the offset dict (pyspark
-        # 4.1.2 renders Python data-source offsets with repr, single quotes
-        # — not JSON); literal_eval parses both that and the JSON form.
-        import ast
-
-        end = prog["sources"][0].get("endOffset")
-        try:
-            end_v = (ast.literal_eval(end) if isinstance(end, str) else end)["version"]
-        except (TypeError, KeyError, ValueError, SyntaxError):
-            return i  # offset shape unknown — don't loop blind
-        if end_v >= latest:
-            return i
-    raise RuntimeError(
-        f"txtable stream not caught up with {table_dir} after {max_drains} "
-        "availableNow drains — is the table advancing faster than the "
-        "admission cap allows?"
-    )
 
 
 def net_changes(signed):

@@ -14,6 +14,20 @@ gives us both forms:
     `Trigger.AvailableNow` as the cron-equivalent "drain what's there and
     stop". Late/duplicate defense via `withWatermark` + `dropDuplicates`.
 
+The streaming apply discipline lives here, in two pieces:
+
+  * **One drain** (`drain_available_now`): a stream and its sink (an
+    append parquet path, a complete-mode overwrite path, or a
+    `foreachBatch` handler) run to completion under the bounded-batch
+    shuffle pin (`micro_batch_shuffle`). Every drain in the engine goes
+    through it.
+  * **One batch-marker ledger** (`BatchLedger`): `foreachBatch` is
+    at-least-once, so a handler with effects outside the checkpoint
+    commits an atomic `applied_<batch_id>` marker (with an optional
+    payload) after its work and skips a replayed id. State derived from
+    committed batches is read back from the ledger, so a restart sees
+    exactly what was committed.
+
 Scale notes: file-source streaming tracks processed files in the checkpoint
 (no re-scan); aggregation state is bounded by the watermark horizon. At
 100 TB the source is a log/queue (Kafka) — same plan, different format
@@ -24,97 +38,148 @@ from __future__ import annotations
 
 import contextlib
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from h2outility_spark.operators.mutation import drop_logical_duplicates
-from h2outility_spark.sources.parquet import read_parquet
-
-
-def bounded_batch_shuffle_partitions(spark: SparkSession) -> int | None:
-    """Reduce-partition count for the INTERNAL jobs of an admission-bounded
-    micro-batch (foreachBatch handlers, the TxTable apply path).
-
-    A micro-batch under admission control (``maxVersionsPerBatch`` /
-    ``maxBytesPerBatch``) carries a bounded number of bytes no matter how
-    large the table grows, so the reduce side of its internal shuffles
-    should be sized to the batch — one wave over the available cores — not
-    inherit the session's corpus-scale ``spark.sql.shuffle.partitions``.
-    AQE cannot fix this (adaptive execution is disabled inside streaming
-    micro-batch plans), so without the pin a 200-partition session default
-    costs hundreds of near-empty tasks per shuffle per batch (measured
-    2.6x end-to-end on the CDC replica drains under a driver-shaped
-    session; see OPTIMIZATION_r14.md #6).
-
-    Scale-parameterised, not a local constant: defaults to
-    ``defaultParallelism`` (total cores — grows with the cluster), and
-    ``SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS`` overrides it for deployments
-    whose byte cap warrants more (0/empty disables the pin entirely).
-    """
-    env = os.environ.get("SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS")
-    if env is not None and env.strip() != "":
-        try:
-            n = int(env)
-        except ValueError:
-            # A malformed override must degrade to the default, not crash
-            # every drain (ADVICE r14).
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS={env!r} is not an "
-                "integer; falling back to defaultParallelism",
-                stacklevel=2,
-            )
-            return spark.sparkContext.defaultParallelism
-        return n if n > 0 else None
-    return spark.sparkContext.defaultParallelism
 
 
 @contextlib.contextmanager
 def micro_batch_shuffle(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to the bounded-batch size for
-    the duration of a streaming drain, restoring the session value after.
-    Results are partitioning-independent; only task granularity changes.
+    """Pin ``spark.sql.shuffle.partitions`` to ``defaultParallelism`` (one
+    wave over the available cores) for the duration of a streaming drain,
+    restoring the session value after, also on error. Results are
+    partitioning-independent; only task granularity changes.
 
-    SINGLE-THREADED-SESSION ASSUMPTION (ADVICE r14): the pin mutates the
-    session-global conf, so a batch query planned on the SAME SparkSession
-    concurrently with a drain would silently inherit the pinned value
-    (its results are unaffected — only its reduce-task granularity). Every
-    caller in this engine drains synchronously on a single driver thread
-    (driver contract, bench, tests). A deployment that interleaves batch
-    queries with drains on one session should either pin via a cloned
-    session (``spark.newSession()`` shares the cache but not the conf) or
-    disable the pin with SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS=0."""
-    n = bounded_batch_shuffle_partitions(spark)
-    if n is None:
-        yield
-        return
+    An admission-bounded micro-batch carries a bounded number of bytes no
+    matter how large the table grows, so the reduce side of its internal
+    shuffles, its state-store instances and its sink files should be sized
+    to the batch, not inherit the session's corpus-scale setting. AQE
+    cannot fix this (adaptive execution is disabled inside streaming
+    micro-batch plans), so without the pin a 200-partition session default
+    costs hundreds of near-empty tasks per shuffle per batch (measured
+    2.6x end-to-end on the CDC replica drains and 3-10x on the stateful
+    streaming queries under a driver-shaped session; OPTIMIZATION_r14.md
+    #6). ``defaultParallelism`` grows with the cluster.
+
+    SINGLE-THREADED-SESSION ASSUMPTION: the pin mutates the session-global
+    conf, so a batch query planned on the SAME SparkSession concurrently
+    with a drain would inherit the pinned value (its results are
+    unaffected, only its reduce-task granularity). Every caller in this
+    engine drains synchronously on a single driver thread. A deployment
+    that interleaves batch queries with drains on one session should drain
+    on a cloned session (``spark.newSession()`` shares the cache but not
+    the conf)."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
-def drain_available_now(spark: SparkSession, writer, await_secs: int = 30) -> None:
-    """Start a (typically ``availableNow``) streaming writer and drain it
-    to completion under the bounded-batch shuffle pin.
+def drain_available_now(
+    stream: DataFrame, checkpoint: str, sink, output_mode: str = "append"
+) -> None:
+    """Run ``stream`` under ``Trigger.AvailableNow`` until everything
+    available is processed, through ``checkpoint``, into ``sink``:
 
-    One definition of the start/processAllAvailable/stop/awaitTermination
-    drain so every micro-batch in the workload runs its internal shuffles,
-    state-store instances and sink files at :func:`bounded_batch_shuffle_partitions`
-    granularity instead of the session's corpus-scale setting (AQE cannot
-    coalesce streaming plans; measured 3-10x end-to-end on the stateful
-    streaming queries under a 200-partition driver-shaped session —
-    OPTIMIZATION_r14.md #6). processAllAvailable + stop rather than a bare
-    awaitTermination: stateful operators with processing-time timeouts keep
-    an AvailableNow query alive after the data is drained."""
-    with micro_batch_shuffle(spark):
+      * a ``foreachBatch(batch_df, batch_id)`` handler (any callable). It
+        is called at least once per batch id; a handler that keeps state
+        outside the checkpoint commits through a :class:`BatchLedger`;
+      * a parquet directory path: with ``output_mode="append"`` the
+        append-mode parquet file sink, with ``output_mode="complete"``
+        every trigger overwrites the directory with the full current
+        result (replay-idempotent).
+
+    This is the one drain of the engine — the cron-equivalent "drain what
+    is there and stop" (reference ``src/SilentUpdater.py:10-21``) — and
+    the one place the :func:`micro_batch_shuffle` pin is entered.
+    processAllAvailable + stop rather than a bare awaitTermination:
+    stateful operators with processing-time timeouts keep an AvailableNow
+    query alive after the data is drained."""
+    writer = (
+        stream.writeStream.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .outputMode(output_mode)
+    )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif output_mode == "complete":
+        writer = writer.foreachBatch(
+            lambda batch_df, _batch_id: batch_df.write.mode("overwrite").parquet(sink)
+        )
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    with micro_batch_shuffle(stream.sparkSession):
         q = writer.start()
         q.processAllAvailable()
         q.stop()
-        q.awaitTermination(await_secs)
+        q.awaitTermination(30)
+
+
+class BatchLedger:
+    """The commit record of a replay-safe ``foreachBatch`` handler.
+
+    ``foreachBatch`` is at-least-once: after a crash between the handler's
+    work and the checkpoint commit, the same ``batch_id`` is delivered
+    again. A handler whose effects live outside the checkpoint (a grid
+    file, routed rows, a replica table) records each applied batch here as
+    a marker file ``applied_<batch_id>`` in ``root``, written LAST, and
+    skips an id that already has one. The marker is committed atomically:
+    written to a dot-prefixed temp file, then ``os.replace``d into place,
+    so a crash mid-commit leaves at most an orphaned temp file that is
+    never counted as applied. A marker may carry a short text payload (the
+    post-batch watermark, for instance), so state derived from committed
+    batches is read back from the ledger rather than kept in memory, and a
+    restarted process sees exactly what was committed."""
+
+    _PREFIX = "applied_"
+
+    def __init__(self, root: str):
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def _marker(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"{self._PREFIX}{batch_id}")
+
+    def ids(self) -> list[int]:
+        """Committed batch ids, ascending."""
+        return sorted(
+            int(n[len(self._PREFIX) :]) for n in os.listdir(self.root) if n.startswith(self._PREFIX)
+        )
+
+    def applied(self, batch_id: int) -> bool:
+        return os.path.exists(self._marker(batch_id))
+
+    def payload(self, batch_id: int) -> str:
+        with open(self._marker(batch_id)) as f:
+            return f.read()
+
+    def commit(self, batch_id: int, payload: str) -> None:
+        tmp = os.path.join(self.root, f".{self._PREFIX}{batch_id}.tmp")
+        with open(tmp, "w") as f:
+            f.write(payload)
+        os.replace(tmp, self._marker(batch_id))
+
+    def handler(self, apply):
+        """Wrap ``apply(batch_df, batch_id) -> payload | None`` as a
+        replay-safe ``foreachBatch`` handler: an already-committed id
+        returns at once; otherwise ``apply`` runs and its returned payload
+        is committed after it. ``None`` commits no marker, so a batch that
+        changed nothing (an empty micro-batch) is not counted."""
+
+        def handle(batch_df: DataFrame, batch_id: int) -> None:
+            if self.applied(batch_id):
+                return
+            payload = apply(batch_df, batch_id)
+            if payload is not None:
+                self.commit(batch_id, payload)
+
+        return handle
 
 
 def incremental_append(
@@ -296,54 +361,6 @@ def stream_deduped_append(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def stream_upsert_to_parquet(
-    stream_df: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str,
-    checkpoint_path: str,
-    query_name: str = "upsert",
-):
-    """Continuous incremental materialization: each micro-batch is MERGEd
-    into a parquet target via ``foreachBatch`` — the streaming form of the
-    reference's SilentUpdater cron loop (read new rows, upsert into the
-    store, repeat), with the checkpoint giving exactly-once batch replay.
-
-    Each batch applies ``mutation.upsert`` (newest-per-key wins by
-    ``order_col``) against the current target and swaps via write-to-temp
-    + overwrite — a full rewrite, and the swap itself is not atomic. Kept
-    for bare-directory targets; ``stream_upsert_to_txtable`` below is the
-    transactional upgrade (atomic manifest commit, copy-on-write merge of
-    only the touched files) and the one to use.
-
-    Returns the started StreamingQuery (caller stops/awaits).
-    """
-    from h2outility_spark.operators.mutation import upsert
-
-    spark = stream_df.sparkSession
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            current = read_parquet(spark, target_path)
-        except Exception:
-            current = None
-        if current is None:
-            merged = drop_logical_duplicates(batch_df, keys)
-        else:
-            merged = upsert(current, batch_df, keys, order_col)
-        tmp = f"{target_path}__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        read_parquet(spark, tmp).write.mode("overwrite").parquet(target_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -383,17 +400,20 @@ def stream_upsert_to_txtable(
 ):
     """Continuous incremental materialization into a TRANSACTIONAL target:
     each micro-batch is reduced to its newest row per logical key and
-    MERGEd into a storage_tx.TxTable.
+    MERGEd into a storage_tx.TxTable — the streaming form of the
+    reference's SilentUpdater cron loop (read new rows, upsert into the
+    store, repeat).
 
-    This upgrades ``stream_upsert_to_parquet``'s documented trade (full
-    rewrite + non-atomic directory swap) with the real thing: the merge is
-    copy-on-write over only the data files whose key range overlaps the
-    batch, published by an atomic manifest commit — readers see the old or
-    the new snapshot, never a half-written directory. The checkpoint
+    The merge is copy-on-write over only the data files whose key range
+    overlaps the batch, published by an atomic manifest commit — readers
+    see the old or the new snapshot, never a half-written directory. The
+    checkpoint
     replays a failed batch; re-merging the same batch is idempotent
     (same keys → same replacement), so exactly-once materialization holds
     end to end. Batch rows are assumed CDC-style newer-than-target;
     within-batch ordering is resolved by ``order_col``.
+
+    Returns the started StreamingQuery (the caller drains and stops it).
     """
     from h2outility_spark.storage_tx import TxTable
 
@@ -428,11 +448,11 @@ def stream_dedup_ingest(
     threshold: float = 0.2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    query_name: str = "dedup-ingest",
-):
+) -> None:
     """Streaming twin of the ``dedup_incremental`` batch query: a document
-    stream is continuously deduplicated AGAINST the accumulated corpus and
-    only novel docs are committed.
+    stream is deduplicated AGAINST the accumulated corpus and only novel
+    docs are committed. Drains everything available (one
+    :func:`drain_available_now`) and returns.
 
     Per micro-batch:
       1. batch-internal exact dedup — one representative (min id) per
@@ -512,31 +532,16 @@ def stream_dedup_ingest(
             for c in caches:
                 c.unpersist()
 
-    return (
-        stream_docs.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain_available_now(stream_docs, checkpoint_path, ingest)
 
 
-def run_available_now(stream_df: DataFrame, query_name: str = "drain") -> list:
-    """Drain everything currently available (Trigger.AvailableNow), collect
-    from the in-memory sink, stop — the cron-equivalent one-shot run (I1)."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # processAllAvailable + stop rather than awaitTermination: stateful
-    # operators with processing-time timeouts keep an AvailableNow query
-    # alive after the data is drained (timeout batches), so a plain await
-    # never returns.
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    spark = stream_df.sparkSession
-    return spark.sql(f"SELECT * FROM {query_name}").collect()
+def run_available_now(stream_df: DataFrame) -> list:
+    """Drain everything currently available (Trigger.AvailableNow) through
+    a throwaway checkpoint and return the appended rows — the
+    cron-equivalent one-shot run (I1)."""
+    rows: list = []
+    with tempfile.TemporaryDirectory(prefix="h2ou_drain_ckpt_") as ckpt:
+        drain_available_now(
+            stream_df, ckpt, lambda batch_df, _batch_id: rows.extend(batch_df.collect())
+        )
+    return rows

@@ -166,35 +166,25 @@ def q_stream_watermark_windows(spark, sf_dir):
         [StructField("ts", TimestampType()), StructField("event_type", StringType())]
     )
 
-    def drain(name: str) -> None:
-        agg = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(src)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("win.start").alias("hour_start"), "event_type", "cnt")
-        )
-        drain_available_now(
-            spark,
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
+    agg = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .load(src)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(F.col("win.start").alias("hour_start"), "event_type", "cnt")
+    )
 
     # coalesce(1): one file per drain -> one micro-batch per drain
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain("swm-1")
+    drain_available_now(agg, ckpt, out)
     ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain("swm-2")
+    drain_available_now(agg, ckpt, out)
     spark.createDataFrame([(_FLUSH_TS, "__flush__")], "ts string, event_type string").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type"
     ).coalesce(1).write.mode("append").parquet(src)
-    drain("swm-flush")
+    drain_available_now(agg, ckpt, out)
 
     return (
         read_parquet(spark, out)
@@ -252,34 +242,24 @@ def q_stream_session_windows(spark, sf_dir):
         [StructField("ts", TimestampType()), StructField("user_id", LongType())]
     )
 
-    def drain(name: str) -> None:
-        agg = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(src)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "6 hours").alias("sw"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select("user_id", F.col("sw.start").alias("session_start"), "n_events")
-        )
-        drain_available_now(
-            spark,
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
+    agg = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .load(src)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "6 hours").alias("sw"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", F.col("sw.start").alias("session_start"), "n_events")
+    )
 
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain("ssw-1")
+    drain_available_now(agg, ckpt, out)
     ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain("ssw-2")
+    drain_available_now(agg, ckpt, out)
     spark.createDataFrame([(_FLUSH_TS, -1)], "ts string, user_id long").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     ).coalesce(1).write.mode("append").parquet(src)
-    drain("ssw-flush")
+    drain_available_now(agg, ckpt, out)
 
     return (
         read_parquet(spark, out)
@@ -341,31 +321,19 @@ def q_stream_session_paths(spark, sf_dir):
         ]
     )
 
-    def drain(name: str) -> None:
-        paths = stream_session_paths(
-            spark.readStream.schema(schema).format("parquet").load(src)
-        )
-        drain_available_now(
-            spark,
-            paths.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
+    paths = stream_session_paths(spark.readStream.schema(schema).format("parquet").load(src))
 
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain("ssp-1")
+    drain_available_now(paths, ckpt, out)
     ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain("ssp-2")
+    drain_available_now(paths, ckpt, out)
     spark.createDataFrame(
         [(_FLUSH_TS, -1, "__flush__", -1)],
         "ts string, user_id long, event_type string, event_id long",
     ).select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "event_id"
     ).coalesce(1).write.mode("append").parquet(src)
-    drain("ssp-flush")
+    drain_available_now(paths, ckpt, out)
 
     return (
         read_parquet(spark, out)
@@ -908,26 +876,16 @@ def q_stream_static_enrich(spark, sf_dir):
         m = F.col("o_orderkey") % 100
         return base.filter((m >= lo) & (m < hi))
 
-    def drain(name: str) -> None:
-        enriched = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(src)
-            .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-            .select("o_orderkey", "o_custkey", "c_nationkey", "o_totalprice")
-        )
-        drain_available_now(
-            spark,
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
+    enriched = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .load(src)
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .select("o_orderkey", "o_custkey", "c_nationkey", "o_totalprice")
+    )
 
     slice_mod(0, 2).coalesce(1).write.mode("append").parquet(src)
-    drain("sse-1")
+    drain_available_now(enriched, ckpt, out)
     slice_mod(2, 4).coalesce(1).write.mode("append").parquet(src)
-    drain("sse-2")
+    drain_available_now(enriched, ckpt, out)
     return read_parquet(spark, out)

@@ -154,44 +154,34 @@ def q_stream_ohlc(spark, sf_dir):
         ]
     )
 
-    def drain(name: str) -> None:
-        order_key = F.struct(F.col("ts"), F.col("event_id"))
-        agg = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(src)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(
-                fround(F.min_by(F.col("value"), order_key), 2).alias("open"),
-                fround(F.max("value"), 2).alias("high"),
-                fround(F.min("value"), 2).alias("low"),
-                fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
-                F.count(F.lit(1)).alias("n_obs"),
-            )
-            .select(F.col("win.start").alias("hour_start"), "event_type", "open", "high", "low", "close", "n_obs")
+    order_key = F.struct(F.col("ts"), F.col("event_id"))
+    agg = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .load(src)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+        .agg(
+            fround(F.min_by(F.col("value"), order_key), 2).alias("open"),
+            fround(F.max("value"), 2).alias("high"),
+            fround(F.min("value"), 2).alias("low"),
+            fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
+            F.count(F.lit(1)).alias("n_obs"),
         )
-        drain_available_now(
-            spark,
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
+        .select(F.col("win.start").alias("hour_start"), "event_type", "open", "high", "low", "close", "n_obs")
+    )
 
     # coalesce(1): one file per drain -> one micro-batch per drain
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain("sohlc-1")
+    drain_available_now(agg, ckpt, out)
     ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain("sohlc-2")
+    drain_available_now(agg, ckpt, out)
     spark.createDataFrame(
         [(_OHLC_FLUSH, "__flush__", 0.0, 0)], "ts string, event_type string, value double, event_id long"
     ).select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type", "value", "event_id"
     ).coalesce(1).write.mode("append").parquet(src)
-    drain("sohlc-flush")
+    drain_available_now(agg, ckpt, out)
 
     return (
         read_parquet(spark, out)
@@ -881,21 +871,12 @@ def q_stream_ivm_agg(spark, sf_dir):
         touched = changes.select("cust_bucket").distinct()
         view.merge_upsert(new_view.join(touched, ["cust_bucket"], "left_semi"))
 
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            spark.readStream.schema(sel.schema)
-            .format("parquet")
-            .load(src)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
+    stream = spark.readStream.schema(sel.schema).format("parquet").load(src)
 
     sel.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     sel.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     return view.snapshot().select("cust_bucket", "n_orders", "total_cents")
 
 
@@ -929,25 +910,16 @@ def q_stream_chunk_flow(spark, sf_dir):
     out = scratch_dir("h2ou_schunk_out_") + "/out"
     ckpt = scratch_dir("h2ou_schunk_ckpt_") + "/ckpt"
 
-    def drain() -> None:
-        chunks = T.chunk_sliding(
-            spark.readStream.schema(docs.schema).format("parquet").load(src),
-            size=_CHUNK_SIZE,
-            stride=_CHUNK_STRIDE,
-        )
-        drain_available_now(
-            spark,
-            chunks.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True),
-        )
+    chunks = T.chunk_sliding(
+        spark.readStream.schema(docs.schema).format("parquet").load(src),
+        size=_CHUNK_SIZE,
+        stride=_CHUNK_STRIDE,
+    )
 
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(chunks, ckpt, out)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(chunks, ckpt, out)
     return read_parquet(spark, out)
 
 
@@ -1102,21 +1074,12 @@ def q_stream_minmax_ivm(spark, sf_dir):
         ctl["state_path"] = path
         ctl["n_batches"] += 1
 
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            spark.readStream.schema(base.schema)
-            .format("parquet")
-            .load(src)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
+    stream = spark.readStream.schema(base.schema).format("parquet").load(src)
 
     base.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     upd.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     assert ctl["n_batches"] == 2, ctl
 
     final = read_parquet(spark, ctl["state_path"])

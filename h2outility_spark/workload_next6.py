@@ -382,25 +382,14 @@ def q_stream_mixture_plan(spark, sf_dir):
         )
     )
 
-    def handle(batch_df, batch_id) -> None:
-        # complete mode: every trigger emits the FULL current totals
-        batch_df.write.mode("overwrite").parquet(state_path)
+    from h2outility_spark.streaming.incremental import drain_available_now
 
-    def drain() -> None:
-        from h2outility_spark.streaming.incremental import drain_available_now
-
-        drain_available_now(
-            spark,
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
-
+    # complete mode: every trigger overwrites state_path with the FULL
+    # current totals
     b1.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
     b2.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
 
     per_src = read_parquet(spark, state_path)
     nsrc = F.count(F.lit(1)).over(W.partitionBy())

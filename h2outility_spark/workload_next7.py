@@ -71,7 +71,7 @@ import os
 from pyspark.sql import functions as F
 
 from h2outility_spark.sources.parquet import read_parquet
-from h2outility_spark.streaming.incremental import drain_available_now
+from h2outility_spark.streaming.incremental import BatchLedger, drain_available_now
 from h2outility_spark.workload import DV_CTE, _dv, _t, fround, query, sql_round
 from h2outility_spark.workload_lakehouse import scratch_dir
 from h2outility_spark.workload_next6 import _CMS_D, _CMS_W, HEAVY_HITTERS_ORACLE
@@ -123,45 +123,38 @@ def q_jsonl_roundtrip(spark, sf_dir):
 STREAM_CMS_ORACLE = HEAVY_HITTERS_ORACLE
 
 
-def make_cms_handler(spark, state_dir, ctl, key_col="user_id"):
+def cms_grid_path(state_dir: str) -> str | None:
+    """The grid of the latest committed batch (None before the first)."""
+    ids = BatchLedger(state_dir).ids()
+    return os.path.join(state_dir, f"grid_{ids[-1]}") if ids else None
+
+
+def make_cms_handler(spark, state_dir, key_col="user_id"):
     """foreachBatch handler advancing a Count-Min grid by cell-wise merge,
-    REPLAY-SAFE (foreachBatch is at-least-once): state is keyed by
-    batch_id, committed by a marker file written AFTER the grid parquet
-    completes. A replayed batch_id returns without touching the grid —
+    REPLAY-SAFE (foreachBatch is at-least-once): each batch writes
+    ``grid_<batch_id>`` (the previous committed grid merged with the
+    batch's own) and commits through a :class:`BatchLedger` in
+    ``state_dir``. A replayed batch_id returns without touching the grid —
     merging the same rows twice would double-count every cell. A crash
     between the grid write and the marker replays into a deterministic
-    ``mode("overwrite")`` of the same path. Module-level so the replay
-    unit test can re-invoke it with a repeated batch_id directly."""
+    ``mode("overwrite")`` of the same path. The latest grid and the batch
+    count are read from the ledger. Module-level so the replay unit test
+    can re-invoke it with a repeated batch_id directly."""
     from h2outility_spark.operators import sketch
 
-    def _applied_ids() -> list:
-        return sorted(
-            int(n.rsplit("_", 1)[1])
-            for n in os.listdir(state_dir)
-            if n.startswith("applied_")
-        )
-
-    def handle(batch_df, batch_id) -> None:
-        marker = os.path.join(state_dir, f"applied_{batch_id}")
-        if os.path.exists(marker):
-            return
+    def apply(batch_df, batch_id) -> str:
         grid = sketch.count_min_table(batch_df, key_col, depth=_CMS_D, width=_CMS_W)
-        prev_ids = _applied_ids()
-        if prev_ids:
-            prev = read_parquet(spark, os.path.join(state_dir, f"grid_{prev_ids[-1]}"))
+        prev = cms_grid_path(state_dir)
+        if prev is not None:
             grid = (
-                grid.unionByName(prev)
+                grid.unionByName(read_parquet(spark, prev))
                 .groupBy("j", "bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        path = os.path.join(state_dir, f"grid_{batch_id}")
-        grid.write.mode("overwrite").parquet(path)
-        with open(marker, "w"):
-            pass
-        ctl["grid_path"] = path
-        ctl["n_batches"] += 1
+        grid.write.mode("overwrite").parquet(os.path.join(state_dir, f"grid_{batch_id}"))
+        return ""
 
-    return handle
+    return BatchLedger(state_dir).handler(apply)
 
 
 @query(
@@ -189,29 +182,18 @@ def q_stream_heavy_hitters(spark, sf_dir):
     src = scratch_dir("h2ou_scms_src_")
     ckpt = scratch_dir("h2ou_scms_ckpt_") + "/ckpt"
     state_dir = scratch_dir("h2ou_scms_state_")
-    ctl: dict = {"grid_path": None, "n_batches": 0}
-    handle = make_cms_handler(spark, state_dir, ctl, key_col="user_id")
-
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            spark.readStream.schema(ev.schema)
-            .format("parquet")
-            .load(src)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
+    handle = make_cms_handler(spark, state_dir, key_col="user_id")
+    stream = spark.readStream.schema(ev.schema).format("parquet").load(src)
 
     b1.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     b2.coalesce(1).write.mode("append").parquet(src)
-    drain()
-    assert ctl["n_batches"] == 2, ctl
+    drain_available_now(stream, ckpt, handle)
+    assert len(BatchLedger(state_dir).ids()) == 2, state_dir
 
     from pyspark.sql import Window as W
 
-    cms = read_parquet(spark, ctl["grid_path"])
+    cms = read_parquet(spark, cms_grid_path(state_dir))
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
     topk = (
         exact.withColumn(
@@ -349,40 +331,38 @@ FROM events
 """
 
 
-def make_quarantine_handler(main_dir, quar_dir, meta_dir, ctl):
+def quarantine_watermark(meta_dir: str):
+    """The routing watermark: the post-batch watermark the latest committed
+    batch recorded as its marker payload (None before any). Each batch
+    records max(previous, candidate), so the latest payload is the max over
+    all of them — one marker read per batch, however long the ledger."""
+    import datetime
+
+    ledger = BatchLedger(meta_dir)
+    ids = ledger.ids()
+    payload = ledger.payload(ids[-1]) if ids else ""
+    return datetime.datetime.fromisoformat(payload) if payload else None
+
+
+def make_quarantine_handler(main_dir, quar_dir, meta_dir):
     """foreachBatch handler routing below-watermark rows to quarantine,
     REPLAY-SAFE (foreachBatch is at-least-once): each batch routes into
     batch_id-keyed subdirectories with ``mode("overwrite")`` and commits
-    via a marker file written last. A replayed batch_id returns
-    immediately — re-routing against the ALREADY-ADVANCED watermark would
-    reroute the batch's own rows as late, and a plain append would land
-    every row twice. The watermark itself is RESTART-SAFE: each marker
-    records the post-batch watermark, and a fresh handler (new process,
-    empty ``ctl``) rehydrates the max over committed markers — without
-    this, a restart would route genuinely-late stragglers as on-time
-    against a NULL watermark. Module-level so the replay/restart unit
+    through a :class:`BatchLedger` in ``meta_dir``, whose marker records
+    the post-batch watermark. A replayed batch_id returns immediately —
+    re-routing against the ALREADY-ADVANCED watermark would reroute the
+    batch's own rows as late, and a plain append would land every row
+    twice. The watermark is read from the ledger on every batch
+    (:func:`quarantine_watermark`), never held in memory, so it is
+    RESTART-SAFE by construction: a fresh handler in a new process routes
+    genuinely-late stragglers against the committed watermark, and a batch
+    whose marker commit failed re-routes against the ORIGINAL watermark
+    when it is delivered again. Module-level so the replay/restart unit
     tests can re-invoke it with a repeated batch_id directly."""
     import datetime
 
-    def _load_wm():
-        wms = []
-        for n in os.listdir(meta_dir):
-            if not n.startswith("applied_"):
-                continue
-            with open(os.path.join(meta_dir, n)) as f:
-                text = f.read().strip()
-            if text:
-                wms.append(datetime.datetime.fromisoformat(text))
-        return max(wms) if wms else None
-
-    if ctl.get("wm") is None:
-        ctl["wm"] = _load_wm()
-
-    def handle(batch_df, batch_id) -> None:
-        marker = os.path.join(meta_dir, f"applied_{batch_id}")
-        if os.path.exists(marker):
-            return
-        wm = ctl["wm"]
+    def apply(batch_df, batch_id) -> str:
+        wm = quarantine_watermark(meta_dir)
         late = batch_df.filter(F.lit(wm is not None) & (F.col("ts") < F.lit(wm)))
         ontime = batch_df.filter(F.lit(wm is None) | (F.col("ts") >= F.lit(wm)))
         ontime.write.mode("overwrite").parquet(os.path.join(main_dir, f"batch_{batch_id}"))
@@ -393,24 +373,9 @@ def make_quarantine_handler(main_dir, quar_dir, meta_dir, ctl):
         if mx is not None:
             cand = mx - datetime.timedelta(seconds=_LATE_DELAY_S)
             new_wm = cand if wm is None else max(wm, cand)
-        # Commit ORDER matters: the marker (carrying the post-batch
-        # watermark) lands atomically via tmp+rename BEFORE any in-memory
-        # state mutates. A marker-write failure therefore leaves ctl
-        # untouched, so an in-process retry of the same batch re-routes
-        # against the ORIGINAL watermark — not the advanced one — and a
-        # crash mid-write can never leave a truncated timestamp for
-        # _load_wm to choke on at restart.
-        # dot-prefixed so an orphaned temp never matches _load_wm's
-        # "applied_" scan
-        tmp = os.path.join(meta_dir, f".tmp_applied_{batch_id}")
-        with open(tmp, "w") as f:
-            if new_wm is not None:
-                f.write(new_wm.isoformat())
-        os.replace(tmp, marker)
-        ctl["wm"] = new_wm
-        ctl["n_batches"] += 1
+        return "" if new_wm is None else new_wm.isoformat()
 
-    return handle
+    return BatchLedger(meta_dir).handler(apply)
 
 
 @query(
@@ -440,25 +405,14 @@ def q_late_data_quarantine(spark, sf_dir):
     main_dir = scratch_dir("h2ou_late_main_")
     quar_dir = scratch_dir("h2ou_late_quar_")
     meta_dir = scratch_dir("h2ou_late_meta_")
-    ctl: dict = {"wm": None, "n_batches": 0}
-    handle = make_quarantine_handler(main_dir, quar_dir, meta_dir, ctl)
-
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            spark.readStream.schema(ev.schema)
-            .format("parquet")
-            .load(src)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
+    handle = make_quarantine_handler(main_dir, quar_dir, meta_dir)
+    stream = spark.readStream.schema(ev.schema).format("parquet").load(src)
 
     b1.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(stream, ckpt, handle)
     b2.coalesce(1).write.mode("append").parquet(src)
-    drain()
-    assert ctl["n_batches"] == 2, ctl
+    drain_available_now(stream, ckpt, handle)
+    assert len(BatchLedger(meta_dir).ids()) == 2, meta_dir
 
     main = spark.read.schema(ev.schema).parquet(
         os.path.join(main_dir, "batch_*")
@@ -762,32 +716,20 @@ def q_stream_jsonl_ingest(spark, sf_dir):
         )
     )
 
-    def handle(batch_df, batch_id) -> None:
-        batch_df.write.mode("overwrite").parquet(state_path)
-
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
-
     (
         b1.coalesce(1)
         .write.mode("append")
         .option("timestampFormat", _JSON_TS_FMT)
         .json(src)
     )
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
     (
         b2.coalesce(1)
         .write.mode("append")
         .option("timestampFormat", _JSON_TS_FMT)
         .json(src)
     )
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
 
     return read_parquet(spark, state_path).select(
         "event_type", "n_events", "first_ts", "last_ts", "total_cents"
@@ -973,22 +915,10 @@ def q_stream_stratified_ingest(spark, sf_dir):
         )
     )
 
-    def handle(batch_df, batch_id) -> None:
-        batch_df.write.mode("overwrite").parquet(state_path)
-
-    def drain() -> None:
-        drain_available_now(
-            spark,
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
-        )
-
     b1.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
     b2.coalesce(1).write.mode("append").parquet(src)
-    drain()
+    drain_available_now(agg, ckpt, state_path, output_mode="complete")
 
     return read_parquet(spark, state_path).select(
         "source", "split", "n_docs", "total_tokens"

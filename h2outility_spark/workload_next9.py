@@ -68,8 +68,6 @@ Deepening pairs (the NOTES r11 §5 seeds plus one curation staple):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from h2outility_spark.operators import similarity, sketch
@@ -79,22 +77,15 @@ from h2outility_spark.workload_lakehouse import scratch_dir
 # -- streaming CDC replica ---------------------------------------------------------------
 
 
-def _cdc_replica_runner(
-    spark,
-    root: str,
-    key_col: str,
-    evolve_schema: bool = False,
-    reader_options: dict | None = None,
-    use_available_now: bool = True,
-):
+def _cdc_replica_runner(spark, root: str, key_col: str, evolve_schema: bool = False):
     """Shared CDC-replica harness for the three streaming pairs: returns
     (src_table, replica_table, drain). The foreachBatch handler collapses
     each micro-batch with ``net_changes``, applies tombstones (delete
     rows anti-joined against insert keys) then upserts — the certified
-    ``txtable_cdf_replica`` discipline — under a batch_id marker written
-    LAST by atomic rename, so a replayed batch is skipped (a crash
-    before the marker replays the batch; delete-of-deleted and
-    merge-of-identical are no-ops on state, so even a half-applied
+    ``txtable_cdf_replica`` discipline — and commits through a
+    :class:`BatchLedger` in ``root/applied``, so a replayed batch is
+    skipped (a crash before the marker replays the batch; delete-of-deleted
+    and merge-of-identical are no-ops on state, so even a half-applied
     replay converges). One definition so a fix to the apply discipline
     lands in every pair at once."""
     from h2outility_spark.sources.txtable_source import (
@@ -102,24 +93,20 @@ def _cdc_replica_runner(
         net_changes,
     )
     from h2outility_spark.storage_tx import TxTable
+    from h2outility_spark.streaming.incremental import BatchLedger, drain_available_now
 
     spark.dataSource.register(TxTableCdcDataSource)
     src_dir, ckpt = root + "/src", root + "/ckpt"
-    applied_dir = root + "/applied"
-    os.makedirs(applied_dir, exist_ok=True)
     src = TxTable(spark, src_dir, key_cols=[key_col])
     replica = TxTable(spark, root + "/replica", key_cols=[key_col])
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        marker = os.path.join(applied_dir, f"applied_{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed batch: already applied, exactly-once preserved
+    def apply_batch(batch_df, batch_id: int) -> str | None:
         if batch_df.isEmpty():
             # No-data micro-batch (a default-trigger heartbeat can plan
             # one): no state change, and NO marker either — the marker
             # count certifies the number of DATA batches applied, so it
             # must stay robust to spurious empty batches.
-            return
+            return None
         # Materialize the net CDF ONCE per batch: delete_keys and
         # merge_upsert each action their input 2-3x (bounds collect,
         # anti-join, staged write), and without the persist every action
@@ -143,41 +130,16 @@ def _cdc_replica_runner(
             replica.merge_upsert(inserts, evolve_schema=evolve_schema)
         finally:
             cdf.unpersist()
-        tmp = os.path.join(applied_dir, f".tmp_{batch_id}")
-        with open(tmp, "w") as f:
-            f.write("applied")
-        os.replace(tmp, marker)
+        return ""
+
+    handle = BatchLedger(root + "/applied").handler(apply_batch)
 
     def drain() -> None:
-        # NOTE the trigger choice under maxVersionsPerBatch (admission
-        # control): AvailableNow latches the FIRST capped latestOffset as
-        # the drain target, so an availableNow drain advances at most N
-        # versions and stops — a rate-limited catch-up needs the default
-        # trigger, where processAllAvailable keeps planning capped batches
-        # until the source is truly drained.
-        reader = spark.readStream.format("txtable_cdc").option("path", src_dir)
-        for k, v in (reader_options or {}).items():
-            reader = reader.option(k, v)
-        writer = (
-            reader.load()
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-        )
-        if use_available_now:
-            writer = writer.trigger(availableNow=True)
-        # Admission control bounds each batch, so the batch's internal
-        # shuffles (net_changes agg, tombstone anti-join, MERGE) are sized
-        # to the batch, not to the session's corpus-scale partition count
-        # (AQE is off inside micro-batch plans — see micro_batch_shuffle).
-        from h2outility_spark.streaming.incremental import micro_batch_shuffle
+        # Loaded per drain: the source schema can evolve between drains.
+        stream = spark.readStream.format("txtable_cdc").option("path", src_dir).load()
+        drain_available_now(stream, ckpt, handle)
 
-        with micro_batch_shuffle(spark):
-            q = writer.start()
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination(30)
-
-    drain.apply_batch = apply_batch  # exposed for the empty-batch unit test
+    drain.handle = handle  # exposed for the empty-batch unit test
     return src, replica, drain
 
 

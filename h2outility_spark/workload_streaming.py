@@ -112,25 +112,17 @@ def q_stream_dedup_ingest(spark, sf_dir):
     ckpt = scratch_dir("h2ou_sdi_ckpt_") + "/ckpt"
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-
-    def drain(name: str) -> None:
-        from h2outility_spark.streaming.incremental import micro_batch_shuffle
-
-        with micro_batch_shuffle(spark):
-            stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
-            q = stream_dedup_ingest(stream, tbl, ckpt, query_name=name)
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination(30)
+    stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
 
     # coalesce(1): exactly one new file per drain -> exactly one micro-batch
     # per drain regardless of file-source batching defaults.
     corpus.coalesce(1).write.mode("append").parquet(src)
-    drain("sdi-seed")
+    stream_dedup_ingest(stream, tbl, ckpt)
     batch.coalesce(1).write.mode("append").parquet(src)
-    drain("sdi-ingest")
+    stream_dedup_ingest(stream, tbl, ckpt)
     batch.coalesce(1).write.mode("append").parquet(src)
-    drain("sdi-replay")  # every doc is a dup now -> must commit nothing
+    # every doc is a dup now -> must commit nothing
+    stream_dedup_ingest(stream, tbl, ckpt)
 
     return TxTable(spark, tbl, key_cols=["doc_id"]).snapshot().select("doc_id", "fp")
 
@@ -166,23 +158,14 @@ def q_txtable_stream_tail(spark, sf_dir):
     t = TxTable(spark, tdir, key_cols=["o_orderkey"])
     t.append(slice_mod(0, 2))
     t.append(slice_mod(2, 4))
+    stream = spark.readStream.format("txtable_stream").option("path", tdir).load()
 
-    def drain(name: str) -> None:
-        stream = spark.readStream.format("txtable_stream").option("path", tdir).load()
-        drain_available_now(
-            spark,
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .queryName(name)
-            .trigger(availableNow=True),
-        )
-
-    drain("txtail-first")  # emits v1 + v2
+    drain_available_now(stream, ckpt, out)  # v1 + v2
     t.append(slice_mod(4, 5))
     # pure rewrite: the tail source must emit NOTHING for this version
     t.compact_files(target_rows=10_000_000, small_rows=10_000_000)
     t.append(slice_mod(5, 6))
-    drain("txtail-resume")  # resumes past v2, emits v3 + v5 only
+    # resumes past v2, emits v3 + v5 only
+    drain_available_now(stream, ckpt, out)
 
     return read_parquet(spark, out)

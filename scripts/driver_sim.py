@@ -1,14 +1,16 @@
 """Simulate the driver's verify pass against __spark_entry__.py.
 
-Usage: python scripts/driver_sim.py [sf_dir]
+Usage: python scripts/driver_sim.py [sf_dir [query ...]]
 
 Mirrors the documented driver behavior:
-  * builds its OWN SparkSession (deliberately with a non-UTC timezone, to
-    prove the queries pin their own session state),
-  * smoke-checks entry(spark) at sf0.001,
-  * runs every queries()[name] at sf_dir (default sf0.01) and compares to
-    oracle_sql()[name] via DuckDB: row count, sorted column names, and an
-    order-insensitive value hash.
+  * builds its OWN SparkSession (local[8], 200 shuffle partitions, and
+    deliberately a non-UTC timezone, to prove the queries pin their own
+    session state),
+  * smoke-checks entry(spark),
+  * runs every queries()[name] at sf_dir (default sf0.01) — or only the
+    named queries, the fast gate for a change that touches a few — and
+    compares to oracle_sql()[name] via DuckDB: row count, sorted column
+    names, and an order-insensitive value hash.
 """
 
 from __future__ import annotations
@@ -47,10 +49,12 @@ def value_hash(rows, columns) -> tuple[str, int]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-sim")
         .config("spark.sql.session.timeZone", "America/Denver")  # hostile tz on purpose
+        .config("spark.sql.shuffle.partitions", "200")  # corpus-scale default, on purpose
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -87,6 +91,11 @@ def main() -> None:
 
     queries = mod.queries()
     oracles = mod.oracle_sql()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        sys.exit(f"not registered queries: {unknown}")
+    if names:
+        queries = {n: queries[n] for n in names}
     bad = []
     for name, fn in queries.items():
         t0 = time.perf_counter()
@@ -109,7 +118,7 @@ def main() -> None:
     if bad:
         print("MISMATCHED:", bad)
         sys.exit(1)
-    print("ALL MATCH")
+    print(f"ALL MATCH {len(queries)}/{len(queries)}")
 
 
 if __name__ == "__main__":

@@ -75,7 +75,7 @@ def test_stateful_ema_detector_streaming(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = incremental.stream_events(spark, src, schema)
     alerts = stateful.streaming_ema_alerts(stream, alpha=0.3, threshold=120.0)
-    rows = incremental.run_available_now(alerts, "ema_alerts")
+    rows = incremental.run_available_now(alerts)
     assert len(rows) > 0
     for r in rows[:50]:
         assert r["deviation"] >= 120.0

@@ -26,7 +26,7 @@ def test_available_now_windowed_counts(spark, stream_dir):
     stream = incremental.stream_events(spark, stream_dir, schema)
     assert stream.isStreaming
     agg = incremental.stream_windowed_counts(stream, window="1 hour", watermark="2 hours")
-    rows = incremental.run_available_now(agg, "win_counts")
+    rows = incremental.run_available_now(agg)
     assert len(rows) > 0
     # append mode emits only windows CLOSED by the final watermark
     # (max event time - 2h); later windows stay pending — exact-count that.
@@ -44,9 +44,7 @@ def test_available_now_windowed_counts(spark, stream_dir):
 def test_session_window_stream(spark, stream_dir):
     schema = spark.read.parquet(stream_dir).schema
     stream = incremental.stream_events(spark, stream_dir, schema)
-    rows = incremental.run_available_now(
-        incremental.stream_sessionized(stream, gap="6 hours"), "sessions"
-    )
+    rows = incremental.run_available_now(incremental.stream_sessionized(stream, gap="6 hours"))
     assert rows and all(r["session_end"] > r["session_start"] for r in rows)
 
 
@@ -54,43 +52,9 @@ def test_stream_dedup_within_watermark(spark, stream_dir):
     schema = spark.read.parquet(stream_dir).schema
     stream = incremental.stream_events(spark, stream_dir, schema)
     deduped = incremental.stream_deduped_append(stream, keys=["user_id", "event_type"])
-    rows = incremental.run_available_now(deduped, "dedup")
+    rows = incremental.run_available_now(deduped)
     distinct = load_table(spark, SF_DIR, "events").select("user_id", "event_type").distinct().count()
     assert len(rows) == distinct
-
-
-def test_stream_upsert_foreachbatch(spark, tmp_path):
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, ts timestamp, v double"
-
-    first = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 1.0), (2, "2024-01-01 00:10:00", 2.0)],
-        "k long, ts string, v double",
-    ).selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v")
-    first.write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).format("parquet").load(src)
-    q = incremental.stream_upsert_to_parquet(stream, target, ["k"], "ts", ckpt)
-    q.processAllAvailable(); q.stop(); q.awaitTermination(30)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got == {1: 1.0, 2: 2.0}
-
-    # second drain: an update for k=2 (newer ts) and a new k=3; the
-    # checkpoint must skip the already-processed first file
-    second = spark.createDataFrame(
-        [(2, "2024-01-01 01:00:00", 20.0), (3, "2024-01-01 01:05:00", 3.0)],
-        "k long, ts string, v double",
-    ).selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v")
-    second.write.mode("append").parquet(src)
-
-    stream2 = spark.readStream.schema(schema).format("parquet").load(src)
-    q2 = incremental.stream_upsert_to_parquet(stream2, target, ["k"], "ts", ckpt)
-    q2.processAllAvailable(); q2.stop(); q2.awaitTermination(30)
-    got2 = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got2 == {1: 1.0, 2: 20.0, 3: 3.0}
-    assert spark.read.parquet(target).count() == 3  # newest-per-key, no dups
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):
@@ -114,7 +78,7 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     joined = incremental.stream_interval_join(
         sp, sc, key="user_id", band_seconds=3600, left_ts="ts", right_ts="ts2"
     ).select("purchase_id", "click_id")
-    got = {(r["purchase_id"], r["click_id"]) for r in incremental.run_available_now(joined, "ssj")}
+    got = {(r["purchase_id"], r["click_id"]) for r in incremental.run_available_now(joined)}
 
     bp, bc = sides(ev)
     bc = bc.withColumnRenamed("user_id", "user_id2")
@@ -133,9 +97,9 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
 
 
 def test_stream_upsert_to_txtable(spark, tmp_path):
-    """Same scenario as the parquet foreachBatch upsert, but into the
-    transactional table: atomic manifest commits per batch, with history
-    recording one merge per micro-batch and within-batch newest-wins."""
+    """foreachBatch upsert into the transactional table: atomic manifest
+    commits per batch, with history recording one merge per micro-batch
+    and within-batch newest-wins."""
     from h2outility_spark.storage_tx import TxTable
 
     src = str(tmp_path / "src")
@@ -209,8 +173,7 @@ def test_stream_dedup_ingest(spark, tmp_path):
     )
     first.write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).format("parquet").load(src)
-    q = incremental.stream_dedup_ingest(stream, tdir, ckpt)
-    q.processAllAvailable(); q.stop(); q.awaitTermination(30)
+    incremental.stream_dedup_ingest(stream, tdir, ckpt)
 
     table = TxTable(spark, tdir, key_cols=["doc_id"])
     assert {r["doc_id"] for r in table.snapshot().collect()} == {1, 3}
@@ -225,8 +188,7 @@ def test_stream_dedup_ingest(spark, tmp_path):
     )
     second.write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(schema).format("parquet").load(src)
-    q2 = incremental.stream_dedup_ingest(stream2, tdir, ckpt)
-    q2.processAllAvailable(); q2.stop(); q2.awaitTermination(30)
+    incremental.stream_dedup_ingest(stream2, tdir, ckpt)
 
     assert {r["doc_id"] for r in table.snapshot().collect()} == {1, 3, 12}
     # one merge commit per batch that carried novel docs
@@ -235,8 +197,7 @@ def test_stream_dedup_ingest(spark, tmp_path):
     # replay everything with a FRESH checkpoint: every doc is now an exact
     # duplicate of the corpus -> survivor set empty -> no new commit
     stream3 = spark.readStream.schema(schema).format("parquet").load(src)
-    q3 = incremental.stream_dedup_ingest(stream3, tdir, str(tmp_path / "ckpt2"))
-    q3.processAllAvailable(); q3.stop(); q3.awaitTermination(30)
+    incremental.stream_dedup_ingest(stream3, tdir, str(tmp_path / "ckpt2"))
     assert {r["doc_id"] for r in table.snapshot().collect()} == {1, 3, 12}
     assert [h["op"] for h in table.history()] == ["merge", "merge"]
 
@@ -261,8 +222,7 @@ def test_stream_dedup_ingest_redelivery_and_null_text(spark, tmp_path):
         schema,
     ).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).format("parquet").load(src)
-    q = incremental.stream_dedup_ingest(stream, tdir, str(tmp_path / "ckpt"))
-    q.processAllAvailable(); q.stop(); q.awaitTermination(30)
+    incremental.stream_dedup_ingest(stream, tdir, str(tmp_path / "ckpt"))
 
     table = TxTable(spark, tdir, key_cols=["doc_id"])
     rows = table.snapshot().collect()
@@ -270,14 +230,11 @@ def test_stream_dedup_ingest_redelivery_and_null_text(spark, tmp_path):
     assert len(rows) == 2  # doc 1 exactly once despite the redelivery
 
 
-def test_micro_batch_shuffle_pins_and_restores(spark, monkeypatch):
-    # the drain-scope pin must set the bounded-batch partition count inside
-    # the context and restore the session value after, including on error;
-    # the env override (and its 0 = disabled form) must be honored
-    from h2outility_spark.streaming.incremental import (
-        bounded_batch_shuffle_partitions,
-        micro_batch_shuffle,
-    )
+def test_micro_batch_shuffle_pins_and_restores(spark):
+    # the drain-scope pin must set the bounded-batch partition count
+    # (defaultParallelism) inside the context and restore the session value
+    # after, including on error
+    from h2outility_spark.streaming.incremental import micro_batch_shuffle
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
@@ -294,25 +251,5 @@ def test_micro_batch_shuffle_pins_and_restores(spark, monkeypatch):
         except RuntimeError:
             pass
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
-
-        monkeypatch.setenv("SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS", "7")
-        assert bounded_batch_shuffle_partitions(spark) == 7
-        monkeypatch.setenv("SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS", "0")
-        assert bounded_batch_shuffle_partitions(spark) is None
-        # malformed override degrades to the default with a warning, never
-        # crashes the drain (ADVICE r14)
-        import warnings as _warnings
-
-        monkeypatch.setenv("SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS", "not-a-number")
-        with _warnings.catch_warnings(record=True) as caught:
-            _warnings.simplefilter("always")
-            assert (
-                bounded_batch_shuffle_partitions(spark)
-                == spark.sparkContext.defaultParallelism
-            )
-        assert any("not-a-number" in str(w.message) for w in caught)
-        monkeypatch.setenv("SPARK_GRAFT_BATCH_SHUFFLE_PARTITIONS", "0")
-        with micro_batch_shuffle(spark):  # disabled: leaves the conf alone
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -698,53 +698,24 @@ def test_tail_bootstrap_nullfills_pre_evolution_files(spark, registered, tmp_pat
 
 def test_cdc_replica_skips_marker_on_empty_batch(spark, tmp_path):
     """ADVICE r13 regression: a no-data micro-batch (default-trigger
-    heartbeat) must not write an applied_<id> marker — the marker count
-    certifies the number of DATA batches, so spurious empty batches may not
+    heartbeat) must not commit a batch marker — the ledger's committed ids
+    certify the number of DATA batches, so spurious empty batches may not
     inflate it."""
     import os
 
+    from h2outility_spark.streaming.incremental import BatchLedger
     from h2outility_spark.workload_next9 import _cdc_replica_runner
 
     root = str(tmp_path / "emptyb")
     cdc_schema = "k int, v string, _commit_version bigint, _sign int"
     src, replica, drain = _cdc_replica_runner(spark, root, "k")
+    ledger = BatchLedger(os.path.join(root, "applied"))
 
-    drain.apply_batch(spark.createDataFrame([], cdc_schema), 99)
-    assert not os.path.exists(os.path.join(root, "applied", "applied_99"))
+    drain.handle(spark.createDataFrame([], cdc_schema), 99)
+    assert not ledger.applied(99)
+    assert ledger.ids() == []
 
     data = spark.createDataFrame([(1, "a", 0, 1)], cdc_schema)
-    drain.apply_batch(data, 100)
-    assert os.path.exists(os.path.join(root, "applied", "applied_100"))
+    drain.handle(data, 100)
+    assert ledger.ids() == [100]
     assert {(r["k"], r["v"]) for r in replica.snapshot().collect()} == {(1, "a")}
-
-def test_drain_until_caught_up_under_version_cap(spark, registered, tmp_path):
-    """VERDICT r13 #6: a 3-commit backlog under maxVersionsPerBatch=1 fully
-    drains via the helper — one capped availableNow run per version through
-    ONE checkpoint, rows exactly-once across the whole loop."""
-    from h2outility_spark.sources.txtable_source import drain_until_caught_up
-
-    tdir = str(tmp_path / "druc")
-    table = TxTable(spark, tdir, key_cols=["k"])
-    for i in range(3):
-        table.append(kv(spark, [(i, f"v{i}")]))  # v0..v2 backlog
-
-    rows: list[tuple] = []
-
-    def start():
-        return (
-            spark.readStream.format("txtable_stream").option("path", tdir)
-            .option("maxVersionsPerBatch", "1").load()
-            .writeStream.foreachBatch(
-                lambda df, bid: rows.extend((r["k"], r["v"]) for r in df.collect())
-            )
-            .option("checkpointLocation", str(tmp_path / "ckdruc"))
-            .trigger(availableNow=True).start()
-        )
-
-    n = drain_until_caught_up(start, tdir)
-    assert n == 3  # ceil(backlog 3 / cap 1) capped drains, no extras
-    assert sorted(rows) == [(0, "v0"), (1, "v1"), (2, "v2")]  # exactly once
-
-    # Already caught up: one more loop call runs a single no-op drain.
-    assert drain_until_caught_up(start, tdir) == 1
-    assert len(rows) == 3
