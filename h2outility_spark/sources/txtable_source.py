@@ -21,7 +21,11 @@ Execution shape: a partition-planning ``DataSourceStreamReader`` — the
 driver only diffs manifests (metadata) and plans ONE PARTITION PER ADDED
 FILE; executors read the parquet with pyarrow in parallel. Per-batch cost
 on the driver is O(changed manifest entries), the data plane scales with
-the cluster.
+the cluster. This module reads no manifest or segment file itself: the
+version list, the manifest read and the per-version file diff are the
+session-free readers of ``storage_tx`` (``manifest_versions``,
+``read_manifest``, ``file_diff``), the same ones ``TxTable`` uses, so
+the segmented manifest format has one reader.
 
 Usage::
 
@@ -62,44 +66,13 @@ as Python objects between the parquet file and the JVM.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import warnings
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from h2outility_spark.storage_tx import TxTable, _MANIFEST_DIR
-
-
-def _versions(table_dir: str) -> list[int]:
-    return sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(os.path.join(table_dir, _MANIFEST_DIR, "v*.json"))
-    )
-
-
-def _latest_version(table_dir: str) -> int | None:
-    vs = _versions(table_dir)
-    return vs[-1] if vs else None
-
-
-def _manifest(table_dir: str, version: int) -> dict:
-    with open(os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.json")) as f:
-        return TxTable._normalize_manifest(json.load(f))
-
-
-def _segment_entries(table_dir: str, name: str) -> list[dict]:
-    with open(os.path.join(table_dir, _MANIFEST_DIR, name)) as f:
-        return json.load(f)["entries"]
-
-
-def _file_paths(table_dir: str, m: dict) -> set[str]:
-    out = {e["path"] for e in m["_inline_files"]}
-    for d in m["segments"]:
-        out.update(e["path"] for e in _segment_entries(table_dir, d["name"]))
-    return out
+from h2outility_spark.storage_tx import file_diff, manifest_versions, read_manifest
 
 
 def _added_files(table_dir: str, v: int, allow_bootstrap: bool = False) -> list[str]:
@@ -110,105 +83,106 @@ def _added_files(table_dir: str, v: int, allow_bootstrap: bool = False) -> list[
     keeps the +1 side (an append never removes files, so the symmetric
     diff IS the added set).
 
-    Bootstrap FIRST, then guard: a fresh tail reader whose start version
-    was vacuumed reads the oldest retained version as a full SNAPSHOT, and
-    a snapshot is op-agnostic — the merges/overwrites that produced it are
-    history the tail never replays, so the append-only guard applies only
-    to versions read as incremental diffs. Version 0 is ALWAYS a snapshot
-    (the diff from empty — nothing previously emitted can be rewritten by
-    it), so its op is irrelevant no matter how the reader arrived: a table
-    born by merge_upsert (v0 op='merge') streams fine; only a LATER
+    The guard applies only to versions read as incremental diffs: a
+    fresh tail reader whose start version was vacuumed reads the oldest
+    retained version as a full SNAPSHOT, and a snapshot is op-agnostic —
+    the merges/overwrites that produced it are history the tail never
+    replays. Version 0 is ALWAYS a snapshot (the diff from empty —
+    nothing previously emitted can be rewritten by it), so its op is
+    irrelevant no matter how the reader arrived: a table born by
+    merge_upsert (v0 op='merge') streams fine; only a LATER
     merge/overwrite/restore trips the guard."""
-    if v == 0:
-        return [p for p, sign in _changed_files(table_dir, v, allow_bootstrap) if sign == 1]
-    if allow_bootstrap:
-        try:
-            _manifest(table_dir, v - 1)
-        except FileNotFoundError:
-            # Parent vacuumed + fresh reader: the snapshot-bootstrap branch
-            # of _changed_files (all +1); v's own op is irrelevant here.
-            return [p for p, sign in _changed_files(table_dir, v, True) if sign == 1]
     try:
-        op = _manifest(table_dir, v)["op"]
+        op = read_manifest(table_dir, v)["op"]
     except FileNotFoundError:
         op = None  # let _changed_files raise the canonical vacuum error
-    if op not in (None, "append", "compact"):
+    if (
+        v > 0
+        and op not in (None, "append", "compact")
+        and not (allow_bootstrap and v - 1 not in manifest_versions(table_dir))
+    ):
         raise ValueError(
             f"txtable_stream is an append-only tail (version {v} is "
             f"op={op!r}); use TxTable.changes() / the txtable_cdc source "
             "for the general feed"
         )
-    return [p for p, sign in _changed_files(table_dir, v, allow_bootstrap) if sign == 1]
+    return [e["path"] for e, sign in _changed_files(table_dir, v, allow_bootstrap) if sign == 1]
 
 
-def _int_option(options, name: str, min_value: int) -> int | None:
+def _latest_schema(table_dir: str) -> str:
+    """The schema DDL of the table's latest version (stream start)."""
+    versions = manifest_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no committed version in {table_dir}")
+    return read_manifest(table_dir, versions[-1])["schema"]
+
+
+def _int_option(options, name: str) -> int | None:
     """Parse an optional integer DataSource option (options arrive as
-    strings); absent = None."""
+    strings); absent = None. Bounds are checked by _TxVersionOffsets."""
     raw = options.get(name)
     if raw is None:
         return None
     try:
-        n = int(raw)
+        return int(raw)
     except ValueError:
         raise ValueError(f"{name} must be an integer, got {raw!r}") from None
-    if n < min_value:
-        raise ValueError(f"{name} must be >= {min_value}, got {n}")
-    return n
 
 
-def _max_versions_option(options) -> int | None:
-    return _int_option(options, "maxVersionsPerBatch", 1)
-
-
-def _max_bytes_option(options) -> int | None:
-    return _int_option(options, "maxBytesPerBatch", 1)
-
-
-def _starting_version_option(options) -> int | None:
-    """The ``startingVersion`` option: Delta-CDF-style explicit feed start
-    (absent = snapshot-bootstrap from the oldest retained version)."""
-    return _int_option(options, "startingVersion", 0)
+def _offset_options(options) -> dict:
+    """The admission-control and start options both sources take, as
+    _TxVersionOffsets keyword arguments. ``startingVersion`` absent =
+    snapshot-bootstrap from the oldest retained version."""
+    return {
+        "max_versions_per_batch": _int_option(options, "maxVersionsPerBatch"),
+        "starting_version": _int_option(options, "startingVersion"),
+        "max_bytes_per_batch": _int_option(options, "maxBytesPerBatch"),
+    }
 
 
 def _added_bytes(table_dir: str, v: int) -> int:
     """Bytes of the data files version ``v`` ADDED, from manifest stats
-    alone (no data IO; same O(changed segments) walk as _changed_files).
-    Powers the byte-based admission control. Returns 0 for compact
-    versions (no net change) and when version ``v``'s OWN manifest is
-    unreadable — the planner raises the canonical error later; admission
-    control only has to guarantee progress, never correctness. A vacuumed
-    PARENT manifest, by contrast, charges the FULL file set of ``v``:
-    that is exactly what a fresh reader's snapshot bootstrap will emit,
-    so the byte cap must bound it (charging 0 would admit the whole
-    table plus further versions in one batch)."""
+    alone (no data IO): the +1 side of :func:`_changed_files` for a
+    reader allowed to bootstrap. Powers the byte-based admission control.
+    A compact version charges 0 (no net change) unless it is read as a
+    bootstrap; a vacuumed PARENT charges the FULL file set of ``v``,
+    which is exactly what a fresh reader's snapshot bootstrap will emit.
+    Version ``v``'s OWN manifest missing charges 0 — the planner raises
+    the canonical error later; admission control only has to guarantee
+    progress, never correctness."""
     try:
-        m = _manifest(table_dir, v)
+        read_manifest(table_dir, v)
     except FileNotFoundError:
         return 0
-    parent_vacuumed = False
-    try:
-        prev_m = _manifest(table_dir, v - 1) if v > 0 else None
-    except FileNotFoundError:
-        prev_m = None  # vacuumed parent → snapshot bootstrap: charge all of v
-        parent_vacuumed = True
-    # The vacuumed-parent check must come FIRST, mirroring _changed_files:
-    # a bootstrap AT a compact version (vacuum retained the compact as the
-    # oldest manifest) emits the full compacted file set, so the byte cap
-    # must charge it — 'compact ⇒ 0' only holds for incremental diffs.
-    if m["op"] == "compact" and not parent_vacuumed:
-        return 0
-    by_path = {e["path"]: e.get("bytes", 0) for e in m["_inline_files"]}
-    cur_segs = {d["name"] for d in m["segments"]}
-    prev_segs = {d["name"] for d in prev_m["segments"]} if prev_m else set()
-    for name in cur_segs - prev_segs:
-        for e in _segment_entries(table_dir, name):
-            by_path[e["path"]] = e.get("bytes", 0)
-    if prev_m is None:
-        return sum(by_path.values())
-    prev_paths = {e["path"] for e in prev_m["_inline_files"]}
-    for name in prev_segs - cur_segs:
-        prev_paths.update(e["path"] for e in _segment_entries(table_dir, name))
-    return sum(b for p, b in by_path.items() if p not in prev_paths)
+    changed = _changed_files(table_dir, v, allow_bootstrap=True)
+    return sum(e["bytes"] for e, sign in changed if sign == 1)
+
+
+def _arrow_batches(abs_path: str, field_names: list[str], arrow_schema, constants=None) -> Iterator:
+    """Read one immutable parquet file as pyarrow RecordBatches of
+    ``arrow_schema`` (pyspark 4's vectorized DataSource path — the rows
+    stay in Arrow end to end, no per-row Python tuples). Runs on
+    EXECUTORS. Columns in ``constants`` are filled with that value;
+    columns the file predates (add-column schema evolution — reachable
+    via startingVersion before the evolution, or a bootstrap over old
+    files) are null-filled like snapshot()/changes(). The cast pins the
+    exact Arrow types Spark expects for the declared schema (e.g.
+    timestamp[us, tz=UTC]) independent of how the parquet writer spelled
+    them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    constants = constants or {}
+    present = set(pq.read_schema(abs_path).names)
+    tbl = pq.read_table(abs_path, columns=[c for c in field_names if c in present])
+    n = tbl.num_rows
+    arrays = {
+        name: pa.repeat(pa.scalar(constants[name], type=typ), n) if name in constants
+        else tbl.column(name) if name in present
+        else pa.nulls(n, type=typ)
+        for name, typ in zip(arrow_schema.names, arrow_schema.types)
+    }
+    return iter(pa.table(arrays).cast(arrow_schema).to_batches())
 
 
 class _TxFilePartition(InputPartition):
@@ -277,7 +251,7 @@ class _TxVersionOffsets:
     def _initial_version(self) -> int:
         if self.starting_version is not None:
             return self.starting_version - 1
-        vs = _versions(self.table_dir)
+        vs = manifest_versions(self.table_dir)
         return (vs[0] - 1) if vs else -1
 
     def initialOffset(self) -> dict:
@@ -287,7 +261,7 @@ class _TxVersionOffsets:
         # chasing deleted manifests. The bootstrap flag rides in the offset
         # so ONLY a reader starting from this freshly-minted offset may take
         # the full-snapshot branch; a checkpointed offset (minted by
-        # latestOffset, no flag) never bootstraps — see _added_files.
+        # latestOffset, no flag) never bootstraps — see _changed_files.
         # With an explicit startingVersion the flag is withheld: the user
         # asked for changes-only from that version, never a snapshot.
         start = self._initial_version()
@@ -298,9 +272,10 @@ class _TxVersionOffsets:
         return off
 
     def latestOffset(self) -> dict:
-        latest = _latest_version(self.table_dir)
-        if latest is None:
+        vs = manifest_versions(self.table_dir)
+        if not vs:
             return {"version": self._initial_version() if self.starting_version is not None else -1}
+        latest = vs[-1]
         if self.starting_version is not None and latest < self.starting_version - 1:
             # Feed pinned to start in the future: nothing available yet.
             return {"version": self.starting_version - 1}
@@ -395,28 +370,7 @@ class _TxAppendTailReader(_TxVersionOffsets, DataSourceStreamReader):
         return parts
 
     def read(self, partition: _TxFilePartition) -> Iterator:
-        # Runs on EXECUTORS: one immutable parquet file per task. Yields
-        # pyarrow RecordBatches (pyspark 4's vectorized DataSource path) —
-        # the rows stay in Arrow end to end, no per-row Python tuples. The
-        # cast pins the exact Arrow types Spark expects for the declared
-        # schema (e.g. timestamp[us, tz=UTC]) independent of how the
-        # parquet writer spelled them. Columns the file predates
-        # (add-column schema evolution — reachable here via startingVersion
-        # pointing before the evolution, or a bootstrap over old files) are
-        # null-filled like snapshot()/changes() and the CDC reader do,
-        # instead of letting pq.read_table raise on the missing name.
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        present = set(pq.read_schema(partition.abs_path).names)
-        want = [c for c in self.field_names if c in present]
-        tbl = pq.read_table(partition.abs_path, columns=want)
-        n = tbl.num_rows
-        arrays = {
-            name: tbl.column(name) if name in present else pa.nulls(n, type=typ)
-            for name, typ in zip(self.arrow_schema.names, self.arrow_schema.types)
-        }
-        return iter(pa.table(arrays).cast(self.arrow_schema).to_batches())
+        return _arrow_batches(partition.abs_path, self.field_names, self.arrow_schema)
 
 
 class TxTableStreamDataSource(DataSource):
@@ -427,11 +381,7 @@ class TxTableStreamDataSource(DataSource):
         return "txtable_stream"
 
     def schema(self) -> str:
-        table_dir = self.options["path"]
-        latest = _latest_version(table_dir)
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {table_dir}")
-        return _manifest(table_dir, latest)["schema"]
+        return _latest_schema(self.options["path"])
 
     def streamReader(self, schema) -> _TxAppendTailReader:
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -440,9 +390,7 @@ class TxTableStreamDataSource(DataSource):
             self.options["path"],
             [f.name for f in schema.fields],
             to_arrow_schema(schema),
-            max_versions_per_batch=_max_versions_option(self.options),
-            starting_version=_starting_version_option(self.options),
-            max_bytes_per_batch=_max_bytes_option(self.options),
+            **_offset_options(self.options),
         )
 
 
@@ -476,56 +424,46 @@ class TxTableStreamDataSource(DataSource):
 
 def _changed_files(
     table_dir: str, v: int, allow_bootstrap: bool = False
-) -> list[tuple[str, int]]:
-    """(relative path, sign) for version ``v``: +1 = added, −1 = removed.
-    THE shared diff core for both stream sources (the tail keeps the +1
-    side behind an op guard): O(changed segments) — unchanged segments
-    carry over BY NAME and are never opened — with one vacuum/bootstrap
-    contract for both.
+) -> list[tuple[dict, int]]:
+    """(file entry, sign) for version ``v``: +1 = added, −1 = removed.
+    THE diff core for both stream sources (the tail keeps the +1 side
+    behind an op guard): ``storage_tx.file_diff`` against the parent
+    manifest — the same diff ``TxTable.changes()`` reads, O(changed
+    segments) — with one vacuum/bootstrap contract for both.
 
     If version ``v``'s PARENT manifest was vacuumed away, behavior
     depends on ``allow_bootstrap``: a FRESH reader (offset minted by
     ``initialOffset`` this run, which sets the bootstrap flag) emits
-    ``v``'s FULL file set as the snapshot bootstrap — it has emitted
-    nothing yet, so the snapshot is exactly its backlog. A CHECKPOINTED
-    reader resuming mid-stream must NOT take that branch: it already
-    emitted every row up to its offset, and the full snapshot would
-    re-emit the whole table as duplicates into an exactly-once sink —
-    it gets the fresh-checkpoint ValueError instead."""
+    ``v``'s FULL file set as the snapshot bootstrap, whatever its op — it
+    has emitted nothing yet, so the snapshot is exactly its backlog. A
+    CHECKPOINTED reader resuming mid-stream must NOT take that branch: it
+    already emitted every row up to its offset, and the full snapshot
+    would re-emit the whole table as duplicates into an exactly-once
+    sink — it gets the fresh-checkpoint ValueError instead."""
     try:
-        m = _manifest(table_dir, v)
+        m = read_manifest(table_dir, v)
     except FileNotFoundError:
         raise ValueError(
             f"stream offset points at version {v}, which vacuum has "
-            f"removed (oldest retained: {min(_versions(table_dir), default='none')}); "
+            f"removed (oldest retained: {min(manifest_versions(table_dir), default='none')}); "
             "restart the stream from a fresh checkpoint"
         ) from None
     try:
-        prev_m = _manifest(table_dir, v - 1) if v > 0 else None
+        prev_m = read_manifest(table_dir, v - 1) if v > 0 else None
     except FileNotFoundError:
-        if allow_bootstrap:
-            return [(p, 1) for p in sorted(_file_paths(table_dir, m))]
-        raise ValueError(
-            f"version {v}'s parent manifest was vacuumed away beneath a "
-            "checkpointed reader; emitting the snapshot here would re-send "
-            "already-delivered rows as duplicates — restart the stream "
-            "from a fresh checkpoint"
-        ) from None
-    if m["op"] == "compact":
-        return []  # pure rewrite: provably no net change, skip by op
-    if prev_m is None:
-        return [(p, 1) for p in sorted(_file_paths(table_dir, m))]
-    prev_segs = {d["name"] for d in prev_m["segments"]}
-    cur_segs = {d["name"] for d in m["segments"]}
-    cur_cand: set[str] = {e["path"] for e in m["_inline_files"]}
-    for name in cur_segs - prev_segs:
-        cur_cand.update(e["path"] for e in _segment_entries(table_dir, name))
-    prev_cand: set[str] = {e["path"] for e in prev_m["_inline_files"]}
-    for name in prev_segs - cur_segs:
-        prev_cand.update(e["path"] for e in _segment_entries(table_dir, name))
-    return [(p, 1) for p in sorted(cur_cand - prev_cand)] + [
-        (p, -1) for p in sorted(prev_cand - cur_cand)
-    ]
+        if not allow_bootstrap:
+            raise ValueError(
+                f"version {v}'s parent manifest was vacuumed away beneath a "
+                "checkpointed reader; emitting the snapshot here would re-send "
+                "already-delivered rows as duplicates — restart the stream "
+                "from a fresh checkpoint"
+            ) from None
+        prev_m = None  # snapshot bootstrap: v's full file set
+    else:
+        if m["op"] == "compact":
+            return []  # pure rewrite: provably no net change, skip by op
+    added, removed = file_diff(table_dir, prev_m, m)
+    return [(e, 1) for e in added] + [(e, -1) for e in removed]
 
 
 def _ddl_column_names(ddl: str) -> set[str]:
@@ -583,37 +521,18 @@ class _TxCdcReader(_TxVersionOffsets, DataSourceStreamReader):
         for v in range(start["version"] + 1, end["version"] + 1):
             fresh = bool(start.get("bootstrap")) and v == start["version"] + 1
             parts.extend(
-                _TxSignedFilePartition(os.path.join(self.table_dir, rel), v, sign)
-                for rel, sign in _changed_files(self.table_dir, v, allow_bootstrap=fresh)
+                _TxSignedFilePartition(os.path.join(self.table_dir, e["path"]), v, sign)
+                for e, sign in _changed_files(self.table_dir, v, allow_bootstrap=fresh)
             )
         return parts
 
     def read(self, partition: _TxSignedFilePartition) -> Iterator:
-        # Runs on EXECUTORS: one immutable parquet file per task. Yields
-        # pyarrow RecordBatches (pyspark 4's vectorized DataSource path):
-        # data columns straight from the parquet read, columns the file
-        # predates (add-column schema evolution) as typed null arrays —
-        # matching snapshot()/changes() semantics for old files — and the
-        # constant _commit_version/_sign metadata as pa.repeat arrays. No
-        # per-row Python materialization anywhere.
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        present = set(pq.read_schema(partition.abs_path).names)
-        want = [c for c in self.data_field_names if c in present]
-        tbl = pq.read_table(partition.abs_path, columns=want)
-        n = tbl.num_rows
-        arrays: dict = {}
-        for name, typ in zip(self.arrow_schema.names, self.arrow_schema.types):
-            if name == "_commit_version":
-                arrays[name] = pa.repeat(pa.scalar(partition.version, type=typ), n)
-            elif name == "_sign":
-                arrays[name] = pa.repeat(pa.scalar(partition.sign, type=typ), n)
-            elif name in present:
-                arrays[name] = tbl.column(name)
-            else:
-                arrays[name] = pa.nulls(n, type=typ)
-        return iter(pa.table(arrays).cast(self.arrow_schema).to_batches())
+        return _arrow_batches(
+            partition.abs_path,
+            self.data_field_names,
+            self.arrow_schema,
+            {"_commit_version": partition.version, "_sign": partition.sign},
+        )
 
 
 class TxTableCdcDataSource(DataSource):
@@ -627,11 +546,7 @@ class TxTableCdcDataSource(DataSource):
         return "txtable_cdc"
 
     def schema(self) -> str:
-        table_dir = self.options["path"]
-        latest = _latest_version(table_dir)
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {table_dir}")
-        data_schema = _manifest(table_dir, latest)["schema"]
+        data_schema = _latest_schema(self.options["path"])
         # The metadata columns are reserved: a table that already owns one
         # would silently have it shadowed by the per-partition metadata in
         # read() AND excluded from net_changes' groupBy — corrupt feed, so
@@ -651,12 +566,7 @@ class TxTableCdcDataSource(DataSource):
 
         data = [f.name for f in schema.fields if f.name not in ("_commit_version", "_sign")]
         return _TxCdcReader(
-            self.options["path"],
-            data,
-            to_arrow_schema(schema),
-            max_versions_per_batch=_max_versions_option(self.options),
-            starting_version=_starting_version_option(self.options),
-            max_bytes_per_batch=_max_bytes_option(self.options),
+            self.options["path"], data, to_arrow_schema(schema), **_offset_options(self.options)
         )
 
 

@@ -24,7 +24,15 @@ formats are built from:
     segment and a descriptor list, not a 100 MB file inventory, and
     ``history()`` never touches segments at all. Segment-level min/max
     lets merge_upsert skip reading descriptors' segments entirely when
-    their key range can't overlap the updates.
+    their key range can't overlap the updates. This is the only manifest
+    format; a manifest without ``segments`` is rejected with a
+    ``ValueError``.
+  * **One reader.** This module is the only code that knows the on-disk
+    format. Its module-level readers (``manifest_versions``,
+    ``read_manifest``, ``read_segment``, ``manifest_files``,
+    ``file_diff``) need no SparkSession, so the stream sources in
+    ``sources/txtable_source.py`` call them from the Python data-source
+    helper process, and every ``TxTable`` method reads through them too.
   * **Atomic commit = one file creation.** A writer stages its manifest to
     a temp name and publishes with ``os.link(tmp, vN.json)`` — on POSIX a
     hard link to an existing name fails with EEXIST, so exactly ONE of two
@@ -93,6 +101,60 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.json")
 
 
+def _segment_path(table_dir: str, name: str) -> str:
+    return os.path.join(table_dir, _MANIFEST_DIR, name)
+
+
+# -- manifest readers (session-free) ----------------------------------------
+
+
+def manifest_versions(table_dir: str) -> list[int]:
+    """The committed versions of the table at ``table_dir``, ascending."""
+    return sorted(
+        int(os.path.basename(p)[1:-5])
+        for p in glob.glob(os.path.join(table_dir, _MANIFEST_DIR, "v*.json"))
+    )
+
+
+def read_manifest(table_dir: str, version: int) -> dict:
+    """The top-level manifest of ``version``; FileNotFoundError if it was
+    never committed or vacuum removed it."""
+    with open(_manifest_path(table_dir, version)) as f:
+        m = json.load(f)
+    if "segments" not in m:
+        raise ValueError(f"unsupported manifest format (no 'segments'): keys={sorted(m)}")
+    return m
+
+
+def read_segment(table_dir: str, name: str) -> list[dict]:
+    """The file entries of segment ``name``."""
+    with open(_segment_path(table_dir, name)) as f:
+        return json.load(f)["entries"]
+
+
+def manifest_files(table_dir: str, m: dict) -> list[dict]:
+    """Every file entry of manifest ``m`` (reads all its segments)."""
+    return [e for d in m["segments"] for e in read_segment(table_dir, d["name"])]
+
+
+def file_diff(table_dir: str, old: dict | None, new: dict) -> tuple[list[dict], list[dict]]:
+    """(added, removed) file entries from manifest ``old`` to ``new``, each
+    sorted by path; ``old=None`` is the empty table. Only segments named
+    by exactly one side are read: a segment both carry holds the same
+    files in both."""
+    old_names = {d["name"] for d in old["segments"]} if old else set()
+    new_names = {d["name"] for d in new["segments"]}
+
+    def _entries(names: set[str]) -> dict[str, dict]:
+        return {e["path"]: e for n in names for e in read_segment(table_dir, n)}
+
+    gained, lost = _entries(new_names - old_names), _entries(old_names - new_names)
+    return (
+        [gained[p] for p in sorted(gained.keys() - lost.keys())],
+        [lost[p] for p in sorted(lost.keys() - gained.keys())],
+    )
+
+
 def _file_stats(path: str, key_cols: list[str]) -> dict:
     """Row count + per-key min/max from the parquet footer (metadata-only
     read — no data IO). min/max power file pruning in merge_upsert."""
@@ -136,39 +198,14 @@ class TxTable:
     # -- snapshot state ----------------------------------------------------
 
     def latest_version(self) -> int | None:
-        versions = [
-            int(os.path.basename(p)[1:-5])
-            for p in glob.glob(os.path.join(self.table_dir, _MANIFEST_DIR, "v*.json"))
-        ]
-        return max(versions) if versions else None
+        versions = manifest_versions(self.table_dir)
+        return versions[-1] if versions else None
 
     def manifest(self, version: int | None = None) -> dict | None:
         v = self.latest_version() if version is None else version
         if v is None:
             return None
-        with open(_manifest_path(self.table_dir, v)) as f:
-            return self._normalize_manifest(json.load(f))
-
-    @staticmethod
-    def _normalize_manifest(m: dict) -> dict:
-        """Read-compatibility for pre-segmentation manifests that carried
-        the full entry list inline under ``files``: surface them through
-        the segment interface (``_inline_files``) so snapshot/files/
-        restore/vacuum work unchanged on an existing table. New commits
-        always write the segmented format."""
-        if "segments" not in m:
-            if "files" not in m:
-                raise ValueError(
-                    f"unsupported manifest format (neither 'segments' nor 'files'): keys={sorted(m)}"
-                )
-            m = dict(m)
-            m["_inline_files"] = m.pop("files")
-            m["segments"] = []
-            m.setdefault("n_files", len(m["_inline_files"]))
-        else:
-            m.setdefault("_inline_files", [])
-            m.setdefault("n_files", sum(d.get("n_files", 0) for d in m["segments"]))
-        return m
+        return read_manifest(self.table_dir, v)
 
     def files(self, version: int | None = None) -> list[dict]:
         """The materialized file-entry list of ``version`` (default:
@@ -176,23 +213,7 @@ class TxTable:
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
-        return self._files_of(m)
-
-    def _files_of(self, m: dict) -> list[dict]:
-        out: list[dict] = list(m.get("_inline_files", []))
-        for d in m["segments"]:
-            out.extend(self._read_segment(d["name"]))
-        return out
-
-    def _segments_of(self, m: dict) -> list[dict]:
-        """Parent segments for a new commit. An old-format parent's inline
-        entries are materialized into real segment files here (idempotent:
-        content-addressed), so the upgrade happens on the first write and
-        every later commit carries them by name."""
-        segs = list(m["segments"])
-        if m.get("_inline_files"):
-            segs += self._write_segments(m["_inline_files"])
-        return segs
+        return manifest_files(self.table_dir, m)
 
     def snapshot(self, version: int | None = None) -> DataFrame:
         """The table as of ``version`` (default: latest). Empty manifests
@@ -201,7 +222,9 @@ class TxTable:
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
-        paths = [os.path.join(self.table_dir, f["path"]) for f in self._files_of(m)]
+        paths = [
+            os.path.join(self.table_dir, f["path"]) for f in manifest_files(self.table_dir, m)
+        ]
         if not paths:
             return self.spark.createDataFrame([], m["schema"])
         return self.spark.read.schema(m["schema"]).parquet(*paths)
@@ -230,13 +253,10 @@ class TxTable:
             return (nhi is not None and smin > nhi) or (nlo is not None and smax < nlo)
 
         paths: list[str] = []
-        for entry in m["_inline_files"]:
-            if not _misses(entry["min"].get(key), entry["max"].get(key)):
-                paths.append(entry["path"])
         for d in m["segments"]:
             if _misses(d["min"].get(key), d["max"].get(key)):
                 continue  # whole segment skipped — never read
-            for entry in self._read_segment(d["name"]):
+            for entry in read_segment(self.table_dir, d["name"]):
                 if not _misses(entry["min"].get(key), entry["max"].get(key)):
                     paths.append(entry["path"])
         if not paths:
@@ -257,15 +277,11 @@ class TxTable:
     def history(self) -> list[dict]:
         """Commit log. Reads only top-level manifests — O(versions), never
         touches segment files (the at-scale requirement)."""
-        out = []
-        for p in sorted(glob.glob(os.path.join(self.table_dir, _MANIFEST_DIR, "v*.json"))):
-            with open(p) as f:
-                m = self._normalize_manifest(json.load(f))
-            out.append(
-                {k: m[k] for k in ("version", "op", "parent")}
-                | {"n_files": m["n_files"], "committed_at": m.get("committed_at")}
-            )
-        return out
+        keys = ("version", "op", "parent", "n_files", "committed_at")
+        return [
+            {k: m[k] for k in keys}
+            for m in (read_manifest(self.table_dir, v) for v in manifest_versions(self.table_dir))
+        ]
 
     def describe(self, version: int | None = None) -> dict:
         """Table health snapshot for ops dashboards / compaction policy:
@@ -276,16 +292,16 @@ class TxTable:
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
-        entries = self._files_of(m)
+        entries = manifest_files(self.table_dir, m)
         rows = sum(e["rows"] for e in entries)
-        nbytes = sum(e.get("bytes", 0) for e in entries)
+        nbytes = sum(e["bytes"] for e in entries)
         sizes = sorted(e["rows"] for e in entries)
         median_rows = sizes[len(sizes) // 2] if sizes else 0
         small = sum(1 for e in entries if e["rows"] < max(1, median_rows // 4))
         return {
             "version": m["version"],
             "op": m["op"],
-            "n_versions": len(self.history()),
+            "n_versions": len(manifest_versions(self.table_dir)),
             "n_files": len(entries),
             "n_segments": len(m["segments"]),
             "rows": rows,
@@ -297,13 +313,11 @@ class TxTable:
 
     def version_as_of(self, ts: float) -> int:
         """The latest version committed at or before unix-seconds ``ts``
-        (timestamp time travel). Pre-timestamp manifests (no
-        ``committed_at``) count as arbitrarily old. Raises if the table's
-        first commit is younger than ``ts``."""
+        (timestamp time travel). Raises if the table's first commit is
+        younger than ``ts``."""
         best = None
         for h in self.history():
-            at = h["committed_at"] or 0.0
-            if at <= ts:
+            if h["committed_at"] <= ts:
                 best = h["version"]
         if best is None:
             raise FileNotFoundError(f"no version committed at or before {ts}")
@@ -316,13 +330,6 @@ class TxTable:
 
     # -- segment layer -----------------------------------------------------
 
-    def _segment_path(self, name: str) -> str:
-        return os.path.join(self.table_dir, _MANIFEST_DIR, name)
-
-    def _read_segment(self, name: str) -> list[dict]:
-        with open(self._segment_path(name)) as f:
-            return json.load(f)["entries"]
-
     def _write_segments(self, entries: list[dict]) -> list[dict]:
         """Pack file entries into content-addressed segment files
         (``seg-{sha}.json``); return their descriptors. Content addressing
@@ -334,7 +341,7 @@ class TxTable:
             chunk = entries[i : i + SEGMENT_TARGET]
             payload = json.dumps({"entries": chunk}, sort_keys=True)
             name = f"seg-{hashlib.sha256(payload.encode()).hexdigest()[:24]}.json"
-            path = self._segment_path(name)
+            path = _segment_path(self.table_dir, name)
             if not os.path.exists(path):
                 tmp = f"{path}.tmp-{uuid.uuid4().hex}"
                 with open(tmp, "w") as f:
@@ -375,7 +382,7 @@ class TxTable:
         keep = [d for d in segments if d["n_files"] >= _COMPACT_SMALL]
         entries: list[dict] = []
         for d in small:
-            entries.extend(self._read_segment(d["name"]))
+            entries.extend(read_segment(self.table_dir, d["name"]))
         return keep + self._write_segments(entries)
 
     # -- write path --------------------------------------------------------
@@ -458,7 +465,7 @@ class TxTable:
         new = self._write_segments(self._stage_files(df))
         for _ in range(_retries):
             m = self.manifest()
-            base = self._segments_of(m) if m else []
+            base = m["segments"] if m else []
             try:
                 return self._commit(
                     self._compact(base + new), self._ddl(df), "append",
@@ -497,16 +504,11 @@ class TxTable:
             return False
 
         untouched_segs, carried_entries, overlapping = [], [], []
-        for entry in m["_inline_files"]:  # old-format parent: per-entry prune
-            if _misses(entry["min"], entry["max"]):
-                carried_entries.append(entry)
-            else:
-                overlapping.append(entry)
         for d in m["segments"]:
             if _misses(d["min"], d["max"]):
                 untouched_segs.append(d)  # carried by name — segment never read
                 continue
-            for entry in self._read_segment(d["name"]):
+            for entry in read_segment(self.table_dir, d["name"]):
                 if _misses(entry["min"], entry["max"]):
                     carried_entries.append(entry)
                 else:
@@ -586,7 +588,7 @@ class TxTable:
                 # carrying the parent's segments — the standard way to
                 # evolve a table with an empty mergeSchema batch. Conflicts
                 # surface to the caller like any other merge conflict.
-                return self._commit(self._segments_of(m), schema_ddl, "merge", m["version"])
+                return self._commit(m["segments"], schema_ddl, "merge", m["version"])
             # No-op merge: publishing a version that changes nothing would
             # churn history on every empty streaming micro-batch (and make
             # vacuum/time-travel bookkeeping noisier). The current version
@@ -683,7 +685,7 @@ class TxTable:
         while True:
             try:
                 return self._commit(
-                    self._segments_of(m), m["schema"], "restore", self.latest_version()
+                    m["segments"], m["schema"], "restore", self.latest_version()
                 )
             except CommitConflict:
                 continue
@@ -694,10 +696,12 @@ class TxTable:
         ('insert' | 'delete'); an update appears as its delete + insert
         pair. Feed incremental consumers without re-reading the table.
 
-        At-scale shape: the diff starts from the MANIFESTS — only files
-        present in exactly one version are read (immutable files shared by
-        both versions cannot contain changes), so cost is O(changed files)
-        + an exceptAll shuffle over just those rows. Rows merely rewritten
+        At-scale shape: the diff starts from the MANIFESTS (``file_diff``,
+        the same diff the ``txtable_cdc`` stream source emits) — only
+        segments named by one version are opened and only files present
+        in exactly one version are read (immutable files shared by both
+        versions cannot contain changes), so cost is O(changed files) + an
+        exceptAll shuffle over just those rows. Rows merely rewritten
         into different files (compaction, survivors of a copy-on-write
         merge) appear on both sides and cancel in the exceptAll. Both
         sides read with the DESTINATION schema, so an add-column evolution
@@ -707,21 +711,20 @@ class TxTable:
         m_to = self.manifest(self.latest_version() if v_to is None else v_to)
         if m_from is None or m_to is None:
             raise FileNotFoundError("both versions must exist")
-        from_paths = {e["path"] for e in self._files_of(m_from)}
-        to_paths = {e["path"] for e in self._files_of(m_to)}
+        added, removed = file_diff(self.table_dir, m_from, m_to)
         schema = m_to["schema"]
 
         from pyspark.sql import functions as F
 
-        def _read(paths: set[str]) -> DataFrame:
-            if not paths:
+        def _read(entries: list[dict]) -> DataFrame:
+            if not entries:
                 return self.spark.createDataFrame([], schema)
             return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.table_dir, p) for p in sorted(paths)]
+                *[os.path.join(self.table_dir, e["path"]) for e in entries]
             )
 
-        only_from = _read(from_paths - to_paths)
-        only_to = _read(to_paths - from_paths)
+        only_from = _read(removed)
+        only_to = _read(added)
         inserted = only_to.exceptAll(only_from).withColumn("_change_type", F.lit("insert"))
         deleted = only_from.exceptAll(only_to).withColumn("_change_type", F.lit("delete"))
         return inserted.unionByName(deleted)
@@ -746,7 +749,7 @@ class TxTable:
             # existing table polluted with orphaned (retention-guarded)
             # data files, and the copy fallback could overwrite its files.
             raise FileExistsError(f"{dest_dir} already holds a committed table")
-        entries = self._files_of(m)
+        entries = manifest_files(self.table_dir, m)
         for e in entries:
             src = os.path.join(self.table_dir, e["path"])
             dst = os.path.join(dest_dir, e["path"])
@@ -797,13 +800,13 @@ class TxTable:
         return sorted(
             n
             for n in os.listdir(d)
-            if glob.glob(os.path.join(d, n, _MANIFEST_DIR, "v*.json"))
+            if manifest_versions(os.path.join(d, n))
         )
 
     def branch_table(self, name: str) -> "TxTable":
         self._check_branch_name(name)
         d = os.path.join(self.table_dir, self._BRANCH_DIR, name)
-        if not glob.glob(os.path.join(d, _MANIFEST_DIR, "v*.json")):
+        if not manifest_versions(d):
             raise FileNotFoundError(f"no branch {name!r} in {self.table_dir}")
         return TxTable(self.spark, d, key_cols=self.key_cols)
 
@@ -1008,19 +1011,16 @@ class TxTable:
             # Files are sized in BYTES on real storage (the 128 MB-ish
             # object-store sweet spot); translate through the table's own
             # observed bytes/row so target_rows tracks the actual schema
-            # width instead of a guess. Entries written before byte stats
-            # existed contribute rows only.
-            sized = [e for e in self._files_of(m) if e.get("bytes")]
-            if sized:
-                bpr = sum(e["bytes"] for e in sized) / max(1, sum(e["rows"] for e in sized))
+            # width instead of a guess.
+            entries = manifest_files(self.table_dir, m)
+            if entries:
+                bpr = sum(e["bytes"] for e in entries) / max(1, sum(e["rows"] for e in entries))
                 target_rows = max(1, int(target_bytes / bpr))
         cutoff = target_rows // 4 if small_rows is None else small_rows
 
         carried_segs, carried_entries, small_entries = [], [], []
-        for e in m["_inline_files"]:
-            (small_entries if e["rows"] < cutoff else carried_entries).append(e)
         for d in m["segments"]:
-            entries = self._read_segment(d["name"])
+            entries = read_segment(self.table_dir, d["name"])
             if all(e["rows"] >= cutoff for e in entries):
                 carried_segs.append(d)  # healthy segment: carried by name
                 continue
@@ -1091,18 +1091,15 @@ class TxTable:
         if latest is None:
             return []
         cutoff = latest - keep_versions + 1
-        for p in glob.glob(os.path.join(self.table_dir, _MANIFEST_DIR, "v*.json")):
-            if int(os.path.basename(p)[1:-5]) < cutoff:
-                os.remove(p)
+        for v in manifest_versions(self.table_dir):
+            if v < cutoff:
+                os.remove(_manifest_path(self.table_dir, v))
         ref_segments: set[str] = set()
         referenced: set[str] = set()
-        for p in glob.glob(os.path.join(self.table_dir, _MANIFEST_DIR, "v*.json")):
-            with open(p) as f:
-                m = self._normalize_manifest(json.load(f))
-            referenced.update(e["path"] for e in m["_inline_files"])
-            for d in m["segments"]:
+        for v in manifest_versions(self.table_dir):
+            for d in read_manifest(self.table_dir, v)["segments"]:
                 ref_segments.add(d["name"])
-                referenced.update(e["path"] for e in self._read_segment(d["name"]))
+                referenced.update(e["path"] for e in read_segment(self.table_dir, d["name"]))
         now = _time.time()
         deleted = []
         for p in glob.glob(os.path.join(self.table_dir, _DATA_DIR, "*.parquet")):

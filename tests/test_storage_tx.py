@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from h2outility_spark.storage_tx import CommitConflict, TxTable, _manifest_path
+from h2outility_spark.storage_tx import CommitConflict, TxTable, _manifest_path, read_segment
 
 
 def rows_of(df):
@@ -176,7 +176,7 @@ def test_commit_payload_is_o_changed_not_o_table(spark, table):
     payload = sum(new.values())
     new_segs = [n for n in new if n.startswith("seg-")]
     assert len(new_segs) == 1, f"expected exactly one new segment, got {sorted(new)}"
-    assert len(table._read_segment(new_segs[0])) == 1  # only the changed file
+    assert len(read_segment(table.table_dir, new_segs[0])) == 1  # only the changed file
     assert payload < inventory_bytes / 5, (
         f"commit payload {payload} B should be far below the {inventory_bytes} B "
         "full inventory — segmentation is not carrying segments by reference"
@@ -246,45 +246,31 @@ def test_timestamp_merge_key_prunes(spark, tmp_path):
     assert got == {0, 1, 2, 100, 999, 102}  # 101's key replaced by the update
 
 
-def test_reads_and_upgrades_pre_segmentation_manifest(spark, table):
-    """A table whose manifests predate segmentation (inline 'files' list)
-    must stay fully readable — snapshot, files, history, vacuum — and the
-    FIRST write upgrades it: inline entries materialize into real
-    segments and carry over."""
+def test_pre_segmentation_manifest_is_rejected(spark, table):
+    """Segmented manifests are the only format. A manifest that lists its
+    files inline under 'files' (the pre-segmentation layout) and carries
+    no 'segments' raises the "unsupported manifest format" ValueError
+    from snapshot(), history() and the txtable_cdc source at stream
+    start — it is never read as an empty or partial table."""
+    from h2outility_spark.sources.txtable_source import TxTableCdcDataSource
+
     table.append(kv(spark, [(1, "a"), (2, "b")]))
-    # rewrite the first version in the OLD format: inline files only
     v0 = table.latest_version()
-    v1 = _manifest_path(table.table_dir, v0)
-    with open(v1) as f:
+    path = _manifest_path(table.table_dir, v0)
+    with open(path) as f:
         m = json.load(f)
-    entries = table.files(v0)
     old = {k: m[k] for k in ("version", "op", "parent", "schema")}
-    old["files"] = entries
-    os.remove(v1)
-    with open(v1, "w") as f:
+    old["files"] = table.files(v0)
+    with open(path, "w") as f:
         json.dump(old, f)
-    for seg in glob.glob(os.path.join(table.table_dir, "_manifests", "seg-*.json")):
-        os.remove(seg)  # simulate: old table never had segment files
 
-    assert rows_of(table.snapshot()) == [(1, "a"), (2, "b")]
-    assert table.history()[0]["n_files"] > 0
-    assert len(table.files()) == len(entries)
-
-    # first write upgrades: appended version carries the old entries
-    table.append(kv(spark, [(3, "c")]))
-    assert rows_of(table.snapshot()) == [(1, "a"), (2, "b"), (3, "c")]
-    m2 = table.manifest()
-    assert m2["segments"] and not m2["_inline_files"]
-
-    # restore of the OLD version also works (materializes its inline list)
-    table.restore(v0)
-    assert rows_of(table.snapshot()) == [(1, "a"), (2, "b")]
-
-    # merge against an old-format parent prunes per entry, not per segment
-    os.remove(_manifest_path(table.table_dir, v0 + 1))
-    os.remove(_manifest_path(table.table_dir, v0 + 2))
-    table.merge_upsert(kv(spark, [(2, "B"), (4, "d")]))
-    assert rows_of(table.snapshot()) == [(1, "a"), (2, "B"), (4, "d")]
+    with pytest.raises(ValueError, match="unsupported manifest format"):
+        table.snapshot()
+    with pytest.raises(ValueError, match="unsupported manifest format"):
+        table.history()
+    spark.dataSource.register(TxTableCdcDataSource)
+    with pytest.raises(Exception, match="unsupported manifest format"):
+        spark.readStream.format("txtable_cdc").option("path", table.table_dir).load()
 
 
 def test_reused_orphan_segment_gets_fresh_mtime(spark, table):

@@ -347,6 +347,44 @@ def test_cdc_evolved_schema_nullfills_old_files(spark, cdc_registered, tmp_path)
     assert got == {(1, "a", None), (2, "B2", 7)}
 
 
+def test_changes_equals_net_cdc_feed_for_every_version_pair(spark, cdc_registered, tmp_path):
+    """The batch feed and the stream feed agree: for every pair a < b,
+    TxTable.changes(a, b) equals net_changes over the txtable_cdc rows
+    with _commit_version in (a, b], as multisets, across append, merge,
+    delete, compact, restore and an add-column merge."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from h2outility_spark.sources.txtable_source import net_changes
+
+    tdir = str(tmp_path / "cdceq")
+    table = TxTable(spark, tdir, key_cols=["k"])
+    table.append(kv(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    table.append(kv(spark, [(4, "d"), (4, "d")]))
+    table.merge_upsert(kv(spark, [(2, "B"), (5, "e")]))
+    table.delete_keys(kv(spark, [(3, "")]).select("k"))
+    table.compact_files(target_rows=1000, small_rows=1_000_000)
+    table.restore(1)
+    evolved = spark.createDataFrame([Row(k=1, v="A", extra=7)], "k int, v string, extra int")
+    table.merge_upsert(evolved, evolve_schema=True)
+    assert [h["op"] for h in table.history()] == [
+        "append", "append", "merge", "delete", "compact", "restore", "merge"
+    ]
+
+    signed = _drain_cdc(spark, tdir, "cdceq", str(tmp_path / "ck"))
+    version = F.col("_commit_version")
+
+    def bag(df, cols):
+        return Counter(tuple(r) for r in df.select(*cols).collect())
+
+    for b in range(1, table.latest_version() + 1):
+        for a in range(b):
+            want = table.changes(a, b)
+            got = net_changes(signed.filter((version > a) & (version <= b)))
+            assert bag(got, want.columns) == bag(want, want.columns), (a, b)
+
+
 def test_cdc_max_versions_per_batch_bounds_catchup(spark, cdc_registered, tmp_path):
     """Admission control: with maxVersionsPerBatch=1, a 3-commit backlog
     drains in ceil(3/1)=3 micro-batches — one version per batch, in order —
