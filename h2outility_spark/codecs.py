@@ -172,21 +172,6 @@ def parse_wav_header(data: bytes) -> dict:
     return fmt | {"n_frames": n_frames, "duration_ms": duration_ms, "data_span": data_span}
 
 
-def wav_audio_decoder(data: bytes) -> tuple[int, int, int, float]:
-    """Default ``decode_fn`` for extract_audio_features: (sample_rate,
-    n_channels, duration_ms, mean absolute amplitude in [0, 1]) of a 16-bit
-    PCM WAV."""
-    h = parse_wav_header(data)
-    if h["audio_format"] != 1 or h["bits_per_sample"] != 16:
-        raise ValueError(
-            f"only 16-bit PCM WAV supported (format={h['audio_format']}, bits={h['bits_per_sample']})"
-        )
-    off, size = h["data_span"]
-    samples = struct.unpack_from(f"<{size // 2}h", data, off)
-    mean_abs = round(sum(abs(s) for s in samples) / (len(samples) * 32768.0), 6) if samples else 0.0
-    return h["sample_rate"], h["n_channels"], h["duration_ms"], mean_abs
-
-
 # -- PNG ---------------------------------------------------------------------
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -1116,7 +1101,6 @@ jpeg_resizer = _codec_guard(jpeg_resizer)
 decode_png = _codec_guard(decode_png)
 decode_gif = _codec_guard(decode_gif)
 parse_wav_header = _codec_guard(parse_wav_header)
-wav_audio_decoder = _codec_guard(wav_audio_decoder)
 wav_window_features = _codec_guard(wav_window_features)
 bmp_image_decoder = _codec_guard(bmp_image_decoder)
 png_image_decoder = _codec_guard(png_image_decoder)

@@ -111,7 +111,9 @@ def export_chunk(
     """One chunk → one annotated wide CSV (the §3.1 slice)."""
     ts_cols = ts_cols or ["LocalDateTime", "UTCOffset", "DateTimeUTC"]
     start = f"{chunk.year}-01-01 00:00:00" if chunk.year else None
-    end = f"{chunk.year}-12-31 23:59:59" if chunk.year else None
+    # Through the last microsecond (Spark timestamp precision): BETWEEN is
+    # inclusive, and a row at 23:59:59.5 belongs to this year.
+    end = f"{chunk.year}-12-31 23:59:59.999999" if chunk.year else None
     pred = build_predicate(
         site_id=chunk.site_id,
         source_id=chunk.source_id,

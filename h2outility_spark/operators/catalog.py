@@ -30,22 +30,6 @@ def derive_catalog(dv: DataFrame, keys: list[str] | None = None, ts_col: str = "
     return dv.groupBy(*keys).agg(*aggs)
 
 
-def enrich_catalog(catalog: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
-    """Broadcast star join of the catalog against dimension tables (J1/J5/J6).
-
-    The reference resolved dims via lazy ORM N+1 lookups
-    (``odmdata/data_value.py:60-67``); one multi-way broadcast join replaces
-    them all. Dims are tiny by construction — always the broadcast side.
-    Self-aliased dims (Units twice: variable unit + time unit,
-    ``variable.py:26-27``) are handled by the caller aliasing columns before
-    passing the frame in twice under different keys.
-    """
-    out = catalog
-    for key, dim in dims.items():
-        out = out.join(F.broadcast(dim), on=key, how="left")
-    return out
-
-
 def series_year_range(catalog: DataFrame) -> DataFrame:
     """GetSeriesYearRange (G3; DatasetUtilities.py:409-417): min begin year /
     max end year over the selected series, expanded to the year list used for

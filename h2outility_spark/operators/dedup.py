@@ -151,18 +151,12 @@ def lsh_candidate_pairs(
 
     ``max_bucket`` caps the k²-pairs explosion of a boilerplate bucket
     (one hot band key with k members turns the self-join cartesian within
-    that bucket): buckets wider than the cap contribute NO pairs. Use
-    ``lsh_candidate_pairs_quarantined`` to also get the skipped buckets for
-    upstream triage. None (default) disables the width scan entirely — no
-    extra shuffle."""
+    that bucket): buckets wider than the cap contribute NO pairs. None
+    (default) disables the width scan entirely — no extra shuffle."""
     banded = _banded(signatures, bands, id_col)
     if max_bucket is not None:
         banded = _without_giant_buckets(banded, id_col, max_bucket)
     return _pairs_from_banded(banded, id_col)
-
-
-def _bucket_widths(banded: DataFrame) -> DataFrame:
-    return banded.groupBy("band", "band_key").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def _without_giant_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
@@ -170,32 +164,13 @@ def _without_giant_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> D
     anti-join against the (tiny) giant-bucket list — the width count is one
     combiner-friendly aggregation, and the anti-join adds no shuffle of the
     banded rows."""
-    giants = _bucket_widths(banded).filter(F.col("n_docs") > max_bucket).select("band", "band_key")
-    return banded.join(F.broadcast(giants), ["band", "band_key"], "left_anti")
-
-
-def lsh_candidate_pairs_quarantined(
-    signatures: DataFrame,
-    bands: list[list[int]],
-    id_col: str = "doc_id",
-    max_bucket: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
-    """Capped LSH candidates plus the quarantine report.
-
-    Returns ``(pairs, quarantined_buckets)`` where the second frame is
-    (band, band_key, n_docs) for every bucket wider than ``max_bucket``.
-    Those buckets contribute no pairs; route their members to an upstream
-    triage (they are near-certain boilerplate clusters — at corpus scale a
-    single hot shingle-set otherwise costs k² pairs and one straggler
-    reducer). Pairs for docs that ALSO co-occur in a small bucket are
-    unaffected (recall outside quarantined buckets is unchanged)."""
-    banded = _banded(signatures, bands, id_col)
-    quarantined = _bucket_widths(banded).filter(F.col("n_docs") > F.lit(max_bucket))
-    pairs = _pairs_from_banded(
-        banded.join(F.broadcast(quarantined.select("band", "band_key")), ["band", "band_key"], "left_anti"),
-        id_col,
+    giants = (
+        banded.groupBy("band", "band_key")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .filter(F.col("n_docs") > max_bucket)
+        .select("band", "band_key")
     )
-    return pairs, quarantined
+    return banded.join(F.broadcast(giants), ["band", "band_key"], "left_anti")
 
 
 def jaccard_for_pairs(

@@ -1,5 +1,6 @@
-"""Filtered extraction — the ``get_values_by_filters`` equivalent
-(SURVEY.md §2.2: P1–P11, O6; reference ``series_service.py:387-454``).
+"""Filtered extraction — the predicate of the reference's
+``get_values_by_filters`` (SURVEY.md §2.2: P2–P5; reference
+``series_service.py:387-454``).
 
 Everything here is a pure declarative predicate build: Catalyst pushes the
 conjunction down to the parquet scan (check ``PushedFilters`` in
@@ -12,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def build_predicate(
@@ -55,23 +56,3 @@ def build_predicate(
     if after is not None:
         pred = pred & (F.col(ts_col) > F.lit(after))
     return pred
-
-
-# Query-shape specialization (O6; series_service.py:390-398): the QC-0
-# multi-variable path selects a narrow 6-column shape, all others 8 columns.
-# Catalyst prunes either way; we keep both shapes for output-contract parity.
-NARROW_COLUMNS = ["DateTimeUTC", "LocalDateTime", "UTCOffset", "DataValue", "VariableID", "MethodID"]
-WIDE_COLUMNS = NARROW_COLUMNS + ["CensorCode", "QualifierID"]
-
-
-def get_values_by_filters(dv: DataFrame, narrow: bool = False, **filters) -> DataFrame:
-    cols = [c for c in (NARROW_COLUMNS if narrow else WIDE_COLUMNS) if c in dv.columns]
-    return dv.filter(build_predicate(**filters)).select(*cols)
-
-
-def drop_no_data(dv: DataFrame, no_data_value: float, start=None, end=None, ts_col: str = "LocalDateTime") -> DataFrame:
-    """Sentinel + range row filter (P11; series_service.py:642-647)."""
-    out = dv.filter(F.col("DataValue") != F.lit(no_data_value))
-    if start is not None and end is not None:
-        out = out.filter(F.col(ts_col).between(F.lit(start), F.lit(end)))
-    return out

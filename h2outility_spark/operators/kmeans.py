@@ -161,17 +161,3 @@ def kmeans_grouped(
     return spark.createDataFrame(
         out, f"{group_col} int, cluster int, pos int, centroid_val double"
     )
-
-
-def inertia(embeddings: DataFrame, centroids_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:
-    """Sum of squared distances to the assigned centroid (fit metric)."""
-    rows = (
-        centroids_df.groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("p"))
-        .select("cluster", F.expr("transform(p, x -> x.centroid_val)").alias("cvec"))
-        .collect()
-    )
-    cents = [(r["cluster"], list(r["cvec"])) for r in rows]
-    assigned = _assign(embeddings, cents, id_col, vec_col)
-    vv = F.aggregate(F.col("__v"), F.lit(0.0), lambda a, x: a + x * x)
-    return assigned.select(F.sum(vv + F.col("__part_d")).alias("s")).collect()[0]["s"]

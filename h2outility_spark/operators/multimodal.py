@@ -16,8 +16,6 @@ Design:
     need ffmpeg-class libraries (WebP/MP4/MP3), absent in this container,
     raise NotImplementedError at the decode site with the magic bytes
     named; swap in a real decoder on a cluster with the libs installed.
-    ``deterministic_fake_decoder`` remains as a reproducible stand-in for
-    plumbing tests.
 
 Scale notes: binary payloads dominate partition size — size partitions by
 bytes (``spark.sql.files.maxPartitionBytes``), never by row count; keep
@@ -53,17 +51,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("mean_luma", T.DoubleType(), True),
     ]
 )
-
-
-def deterministic_fake_decoder(data: bytes) -> tuple[int, int, float]:
-    """Deterministic stand-in for an image decode: derives (width, height,
-    mean_luma) from the payload's sha1 so tests are reproducible. NOT a real
-    decoder — replace with PIL/turbojpeg on a real cluster."""
-    h = hashlib.sha1(data or b"").digest()
-    width = 64 + h[0] % 192
-    height = 64 + h[1] % 192
-    mean_luma = round(h[2] / 255.0, 6)
-    return width, height, mean_luma
 
 
 def extract_image_features(
@@ -141,18 +128,6 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def deterministic_fake_resizer(data: bytes, max_side: int) -> tuple[bytes, int, int]:
-    """Deterministic resize stand-in: derives source dims like the fake
-    decoder, scales them to fit ``max_side``, and emits a payload digest as
-    the 'resized bytes'. Replace with PIL ``Image.thumbnail`` on a real
-    cluster."""
-    w, h, _ = deterministic_fake_decoder(data)
-    scale = min(1.0, max_side / max(w, h))
-    out_w, out_h = max(1, int(w * scale)), max(1, int(h * scale))
-    payload = hashlib.sha1((data or b"") + f"{out_w}x{out_h}".encode()).digest()
-    return payload, out_w, out_h
-
-
 def resize_images(
     assets: DataFrame,
     max_side: int = 256,
@@ -218,60 +193,6 @@ def audio_chunk_plan(
             F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(chunk_ms))
         ).alias("chunk_start_ms"),
     )
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("n_bytes", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("mean_abs_amplitude", T.DoubleType(), True),
-    ]
-)
-
-
-def extract_audio_features(
-    assets: DataFrame,
-    decode_fn: Callable[[bytes], tuple[int, int, int, float]] | None = None,
-    id_col: str = "asset_id",
-    data_col: str = "data",
-) -> DataFrame:
-    """Arrow-batched audio feature extraction: (sample_rate, n_channels,
-    duration_ms, mean_abs_amplitude) per asset. Default codec is the
-    stdlib 16-bit PCM WAV parser (codecs.wav_audio_decoder); other
-    containers (mp3/ogg) need an injected decoder."""
-    if decode_fn is None:
-        from h2outility_spark.codecs import wav_audio_decoder
-
-        def decode_fn(b: bytes) -> tuple[int, int, int, float]:  # noqa: ANN001
-            if b[:4] == b"RIFF":
-                return wav_audio_decoder(b)
-            raise NotImplementedError(
-                f"no built-in decoder for payload starting {b[:4]!r}: only PCM WAV "
-                "decodes stdlib-only; inject decode_fn for compressed audio"
-            )
-
-    fn = decode_fn
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            data = pdf[data_col]
-            # NULL/empty payload -> null features (see extract_image_features)
-            decoded = [(None, None, None, None) if not b else fn(b) for b in data]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "n_bytes": [len(b) if b is not None else 0 for b in data],
-                    "sample_rate": [d[0] for d in decoded],
-                    "n_channels": [d[1] for d in decoded],
-                    "duration_ms": [d[2] for d in decoded],
-                    "mean_abs_amplitude": [d[3] for d in decoded],
-                }
-            )
-
-    return assets.select(F.col(id_col), F.col(data_col)).mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
 
 
 AUDIO_FRAMES_SCHEMA = T.StructType(
@@ -368,18 +289,6 @@ def audio_activity_segments(
     )
 
 
-def binarize_text_fixture(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Build a multimodal asset fixture from the documents table (UTF-8
-    payload bytes + mime + meta) — this container has no image test data, so
-    tests exercise the binary plumbing with text payloads."""
-    return docs.select(
-        F.col(id_col).alias("asset_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("data"),
-        F.lit("text/plain").alias("mime"),
-        F.create_map(F.lit("origin"), F.lit("documents")).alias("meta"),
-    )
-
-
 def image_dhash(
     assets: DataFrame,
     hash_fn: Callable[[bytes], int] | None = None,
@@ -468,24 +377,3 @@ def image_neardup_pairs(
         "id_b",
         F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
-
-
-def canonical_images(
-    assets: DataFrame,
-    max_hamming: int = 6,
-    hash_fn: Callable[[bytes], int] | None = None,
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """Image-dedup canonicalization: perceptual near-dup pairs →
-    connected components (the same log-rounds pointer jumping the text
-    dedup uses) → keep the min-id member of every duplicate cluster plus
-    all unclustered assets. The image twin of the text pipeline's
-    exact+near dedup stage."""
-    from h2outility_spark.operators.dedup import connected_components
-
-    pairs = image_neardup_pairs(assets, max_hamming=max_hamming, hash_fn=hash_fn, id_col=id_col)
-    clusters = connected_components(pairs.select("id_a", "id_b"))
-    losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
-    )
-    return assets.join(losers, id_col, "left_anti")

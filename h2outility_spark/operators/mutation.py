@@ -1,5 +1,5 @@
-"""Mutation / upsert surface (SURVEY.md §2.7 U1–U5 and §2.9 M1–M5;
-reference ``edit_service.py:258-277``, ``series_service.py:673-983``).
+"""Mutation / upsert surface (SURVEY.md §2.7 U1–U5 and §2.9 M1; reference
+``edit_service.py:258-277``, ``series_service.py:673-691``).
 
 The reference mutates rows in an RDBMS under transactions. On an immutable
 columnar store the same semantics are pure transforms + an overwrite
@@ -29,11 +29,6 @@ def add_points(dv: DataFrame, new_points: DataFrame) -> DataFrame:
     return dv.unionByName(new_points, allowMissingColumns=True)
 
 
-def delete_selected(df: DataFrame, sel: str = "selected") -> DataFrame:
-    """U2 (edit_service.py:265-277): DELETE WHERE selected."""
-    return df.filter(~F.coalesce(F.col(sel), F.lit(False)))
-
-
 def drop_logical_duplicates(dv: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """U5: the UNIQUE(DataValue, LocalDateTime, 5 series keys) constraint
     (edit_service.py:507) enforced at write time."""
@@ -58,68 +53,3 @@ def upsert(target: DataFrame, updates: DataFrame, keys: list[str], order_col: st
     )
     w = W.partitionBy(*keys).orderBy(F.col("__v").desc(), F.col(order_col).desc())
     return tagged.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__v", "__rn")
-
-
-def create_dim_entry(
-    dim: DataFrame,
-    values: dict,
-    id_col: str,
-    code_col: str | None = None,
-) -> tuple[DataFrame, int]:
-    """M4 (series_service.py:777-877 ``create_method/variable/qcl/
-    qualifier``): append one dimension row, allocating ``id = max(id) + 1``,
-    unless a row with the same ``code_col`` already exists (then return the
-    existing id unchanged — the reference's get-or-create shape).
-
-    Dims are tiny by definition (always-broadcast side), so the max-id agg
-    and exists probe are metadata-cheap; returns (new_dim, assigned_id).
-    """
-    spark = dim.sparkSession
-    if code_col is not None and values.get(code_col) is not None:
-        hit = dim.filter(F.col(code_col) == F.lit(values[code_col])).select(id_col).limit(1).collect()
-        if hit:
-            return dim, hit[0][0]
-    max_id = dim.agg(F.max(id_col).alias("m")).collect()[0]["m"]
-    new_id = int(max_id) + 1 if max_id is not None else 1
-    row = {**values, id_col: new_id}
-    new_row = spark.createDataFrame([tuple(row.get(c.name) for c in dim.schema)], dim.schema)
-    return dim.unionByName(new_row), new_id
-
-
-def create_method(methods: DataFrame, description: str, link: str | None = None) -> tuple[DataFrame, int]:
-    """series_service.py:777-797."""
-    return create_dim_entry(
-        methods, {"MethodDescription": description, "MethodLink": link}, "MethodID", "MethodDescription"
-    )
-
-
-def create_variable(variables: DataFrame, values: dict) -> tuple[DataFrame, int]:
-    """series_service.py:799-836; ``values`` carries the ODM variable
-    attributes (Code, Name, units, NoDataValue, ...)."""
-    return create_dim_entry(variables, values, "VariableID", "VariableCode")
-
-
-def create_qualifier(qualifiers: DataFrame, code: str, description: str) -> tuple[DataFrame, int]:
-    """series_service.py:858-877."""
-    return create_dim_entry(
-        qualifiers, {"QualifierCode": code, "QualifierDescription": description}, "QualifierID", "QualifierCode"
-    )
-
-
-def create_quality_control_level(qcls: DataFrame, code: str, definition: str, explanation: str | None = None) -> tuple[DataFrame, int]:
-    """series_service.py:838-856."""
-    return create_dim_entry(
-        qcls,
-        {"QualityControlLevelCode": code, "Definition": definition, "Explanation": explanation},
-        "QualityControlLevelID",
-        "QualityControlLevelCode",
-    )
-
-
-def series_exists(catalog: DataFrame, quintuple: dict) -> bool:
-    """M2 exists-check (series_service.py:948-983) against the derived
-    catalog — a filter on a frame with one row per series, not a fact scan."""
-    pred = F.lit(True)
-    for k, v in quintuple.items():
-        pred = pred & (F.col(k) == F.lit(v))
-    return catalog.filter(pred).limit(1).count() > 0

@@ -17,15 +17,10 @@ loops. Here every operator:
 
 Scale: window functions shuffle once on the series keys; within a partition
 they are a single sort + streaming pass (Spark's WindowExec). Skewed series
-(one sensor with billions of rows) are the main hazard — for the unbounded
-frames used here Spark cannot split a partition. For the BOUNDED-frame ops
-(W1/W2 lag/lead detectors, rolling stats) use
-``operators.skew.split_series_blocks``: time-block the hot series with halo
-rows replicated across block edges, window over (keys, block), then
-``finish_series_blocks`` — exact results, block-parallel (proved equal to
-the unsplit computation in tests/test_series_split.py). Unbounded frames
-(islands W3, interpolation W4 anchors, cumulative sums) do not tolerate
-splitting and stay on the full series key.
+(one sensor with billions of rows) are the main hazard: Spark cannot
+split a window partition, so a hot series runs in one task, and the
+unbounded frames used here (islands W3, interpolation W4 anchors,
+cumulative sums) need the whole series anyway.
 """
 
 from __future__ import annotations

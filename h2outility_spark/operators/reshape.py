@@ -111,9 +111,3 @@ def sort_matrix(wide: DataFrame, index_cols: list[str]) -> DataFrame:
     by construction — one per (site, source, QC, year) chunk).
     """
     return wide.orderBy(*index_cols)
-
-
-def unpivot_long(wide: DataFrame, index_cols: list[str], value_cols: list[str]) -> DataFrame:
-    """Inverse reshape (wide→long) via the built-in unpivot/melt — the engine
-    ingests wide CSVs back into the long DataValues form."""
-    return wide.unpivot(index_cols, value_cols, "VariableCode", "DataValue")

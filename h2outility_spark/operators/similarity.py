@@ -47,10 +47,6 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
-
-
 def brute_force_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -291,8 +287,9 @@ def cosine_neardup_pairs(
     a = embeddings.select(F.col(id_col).alias("id_a"), v.alias("va"), dot(v, v).alias("__na"))
     b = embeddings.select(F.col(id_col).alias("id_b"), v.alias("vb"), dot(v, v).alias("__nb"))
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-    # dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as cosine(a,b) with
-    # the self-dots precomputed per SIDE (n of them) instead of per PAIR (n²)
+    # dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as
+    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)) with the self-dots precomputed per
+    # SIDE (n of them) instead of per PAIR (n²)
     sim = dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("__na") * F.col("__nb"))
     return pairs.select("id_a", "id_b", sim.alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
@@ -446,7 +443,7 @@ def rp_lsh_candidate_pairs(
     corpus with a degenerate direction (many near-identical vectors) makes
     one bucket k-wide and its pairs k²; ``max_bucket`` drops such buckets
     from pairing via a broadcast anti-join against the (tiny) giant-bucket
-    list, mirroring dedup.lsh_candidate_pairs_quarantined.
+    list, mirroring dedup.lsh_candidate_pairs(max_bucket=...).
 
     ``n_bits=None`` auto-sizes the band width via :func:`auto_n_bits`, so
     the bucket occupancy — and with it the candidate-set cost — stays
@@ -563,7 +560,8 @@ def cosine_neardup_pairs_lsh(
     v = as_double(F.col(vec_col))
     # self-dots precomputed per side (n folds, not one per pair); the pair
     # expression dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as
-    # cosine(a,b), so values stay bit-identical to the brute-force oracle
+    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), so values stay bit-identical to the
+    # brute-force oracle
     a = embeddings.select(
         F.col(id_col).alias("id_a"), v.alias("va"), dot(v, v).alias("na")
     )
@@ -742,8 +740,9 @@ def pq_search(
     recon = pq_reconstruct(codes, cbs, id_col=id_col).withColumn(
         "__nr", dot(F.col("rvec"), F.col("rvec"))
     )
-    # per-side self-dots (same multiply order as cosine(), bit-identical
-    # scores): the ADC scan folds once per (query, cand) pair, not thrice
+    # per-side self-dots (same multiply order as
+    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical scores): the ADC scan
+    # folds once per (query, cand) pair, not thrice
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
@@ -857,8 +856,9 @@ def ivfpq_search(
     codes = pq_encode(embeddings, cbs, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
     recon = pq_reconstruct(codes, cbs, id_col=id_col)
 
-    # per-side self-dots throughout (same multiply order as cosine(),
-    # bit-identical): probe, ADC scan and re-rank each fold once per pair
+    # per-side self-dots throughout (same multiply order as
+    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): probe, ADC scan and
+    # re-rank each fold once per pair
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
@@ -975,8 +975,9 @@ def hybrid_search(
         ),
     ).select("query_id", "cand_id", "rank")
 
-    # per-side self-dots (same multiply order as cosine(), bit-identical):
-    # one fold per (query, cand) pair in the semantic leg instead of three
+    # per-side self-dots (same multiply order as
+    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): one fold per
+    # (query, cand) pair in the semantic leg instead of three
     sem = (
         docs.select(F.col(id_col).alias("cand_id"), as_double(F.col(vec_col)).alias("cv"))
         .withColumn("__ncv", dot(F.col("cv"), F.col("cv")))

@@ -1,18 +1,13 @@
 """Skew-mitigation utilities for hot keys at 100 TB.
 
-AQE's skew-join handling (on in session.py) covers sort-merge joins; these
-helpers cover the two cases it does not:
-
-  * **Salted two-phase aggregation**: a groupBy on a key where one value
-    holds a large share of all rows (one sensor, one boilerplate document
-    cluster) puts that key's entire volume through a single reducer.
-    Salting splits each key into ``n_salts`` partial groups (map-side
-    random-ish salt from a hash of a row id), aggregates partials, then
-    re-aggregates without the salt. Works for any algebraic aggregate
-    (sum/count/min/max); averages must be carried as (sum, count).
-  * **Salted broadcast-side explosion** for joining a skewed fact key
-    against a small dim: replicate the dim ``n_salts`` times with salt ids
-    so the fact's salted key still hash-joins evenly.
+AQE's skew-join handling (on in session.py) covers sort-merge joins; the
+salted two-phase aggregation here covers the case it does not: a groupBy
+on a key where one value holds a large share of all rows (one sensor, one
+boilerplate document cluster) puts that key's entire volume through a
+single reducer. Salting splits each key into ``n_salts`` partial groups
+(map-side random-ish salt from a hash of a row id), aggregates partials,
+then re-aggregates without the salt. Works for any algebraic aggregate
+(sum/count/min/max); averages must be carried as (sum, count).
 """
 
 from __future__ import annotations
@@ -49,77 +44,3 @@ def salted_agg(
     return p1.groupBy(*keys).agg(
         *[merge_ops[op](name).alias(name) for name, (op, _) in aggs.items()]
     )
-
-
-def split_series_blocks(
-    df: DataFrame,
-    keys: list[str],
-    ts: str,
-    halo: int,
-    block_seconds: int,
-    tiebreak: str | None = None,
-    blk_col: str = "__blk",
-    halo_col: str = "__halo",
-) -> DataFrame:
-    """Split each series into time blocks for bounded-frame window ops, with
-    ``halo`` boundary rows replicated into the neighbor blocks so frames of
-    up to ``halo`` rows lag/lead see exactly the rows they would in the
-    unsplit series.
-
-    This materializes the qc.py hot-series advisory (one sensor with
-    billions of rows cannot be split by Spark for an unbounded window, but
-    bounded frames CAN be computed block-parallel): partition the follow-up
-    window by ``keys + [blk_col]`` instead of ``keys``, then drop rows where
-    ``halo_col`` is true. The only shuffle added is the row-number pass,
-    already keyed by the SPLIT key — no single reducer ever sees the whole
-    hot series.
-
-    Correctness contract: the downstream window frame must span at most
-    ``halo`` rows on each side (e.g. ``lag/lead(n<=halo)``,
-    ``rowsBetween(-halo, halo)``). Unbounded frames (cumulative sums,
-    islands) do NOT tolerate splitting — keep those on the full series key.
-    """
-    from pyspark.sql import Window as W
-
-    order = [ts] if tiebreak is None else [ts, tiebreak]
-    blk = F.floor(F.unix_micros(F.col(ts)) / F.lit(block_seconds * 1_000_000)).cast("long")
-    base = df.withColumn(blk_col, blk)
-    w = W.partitionBy(*keys, blk_col).orderBy(*order)
-    wd = W.partitionBy(*keys, blk_col).orderBy(*[F.col(c).desc() for c in order])
-    pos = base.select(
-        "*",
-        F.row_number().over(w).alias("__rn_a"),
-        F.row_number().over(wd).alias("__rn_d"),
-    )
-    own = pos.withColumn(halo_col, F.lit(False))
-    # last rows of block b serve lag-frames in b+1; first rows serve lead-frames in b-1
-    to_next = pos.filter(F.col("__rn_d") <= halo).withColumn(blk_col, F.col(blk_col) + 1).withColumn(
-        halo_col, F.lit(True)
-    )
-    to_prev = pos.filter(F.col("__rn_a") <= halo).withColumn(blk_col, F.col(blk_col) - 1).withColumn(
-        halo_col, F.lit(True)
-    )
-    return own.unionByName(to_next).unionByName(to_prev).drop("__rn_a", "__rn_d")
-
-
-def finish_series_blocks(df: DataFrame, blk_col: str = "__blk", halo_col: str = "__halo") -> DataFrame:
-    """Drop the replicated halo rows and helper columns after the blocked
-    window computation."""
-    return df.filter(~F.col(halo_col)).drop(blk_col, halo_col)
-
-
-def salted_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_source: Column,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Join a skew-keyed fact to a small dim with the dim exploded across
-    salt ids, so no single post-shuffle partition carries a hot key alone.
-    (With a broadcastable dim, prefer plain ``F.broadcast`` — this exists
-    for when the engine chooses a shuffle join anyway, e.g. dim just over
-    the broadcast threshold.)"""
-    salted_fact = with_salt(fact, salt_source, n_salts)
-    exploded_dim = dim.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return salted_fact.join(exploded_dim, [key, "__salt"]).drop("__salt")

@@ -75,52 +75,6 @@ def apply_plan(
     return out
 
 
-def emit_script(
-    plan: list[dict],
-    keys: list[str],
-    ts: str = "LocalDateTime",
-    value: str = "DataValue",
-    df_var: str = "df",
-) -> str:
-    """Render a recorded plan as replayable Python text — the direct analog
-    of the reference's record_service (it appended one line of Python per
-    interactive edit, ``record_service.py:14-176``). The emitted module
-    defines ``replay(df)`` whose body applies exactly what ``apply_plan``
-    would; executing it reproduces the same DataFrame lineage.
-    """
-    lines = [
-        "# auto-generated QC replay script (see h2outility_spark.plans.oplist)",
-        "from h2outility_spark.operators import qc",
-        "",
-        f"KEYS = {keys!r}",
-        "",
-        f"def replay({df_var}):",
-    ]
-    if not plan:
-        lines.append(f"    return {df_var}")
-        return "\n".join(lines) + "\n"
-    for step in plan:
-        name = step["op"]
-        if name not in OPS:
-            raise ValueError(f"unknown QC op: {name!r}")
-        args = dict(step.get("args", {}))
-        if name in _KEYED_OPS:
-            args.setdefault("ts", ts)
-            if name in {"select_value_change", "interpolate_selected", "drift_correct"}:
-                args.setdefault("value", value)
-            call_args = ["KEYS"]
-        else:
-            if name in {"select_value_threshold", "change_value"}:
-                args.setdefault("value", value)
-            elif name in {"select_date_window", "select_points"}:
-                args.setdefault("ts", ts)
-            call_args = []
-        call_args += [f"{k}={v!r}" for k, v in args.items()]
-        lines.append(f"    {df_var} = qc.{name}({df_var}, {', '.join(call_args)})")
-    lines.append(f"    return {df_var}")
-    return "\n".join(lines) + "\n"
-
-
 def load_plan(path: str) -> list[dict]:
     with open(path, encoding="utf-8") as f:
         return json.load(f)

@@ -28,31 +28,3 @@ def append_jdbc(
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
     writer.save()
-
-
-def append_dialect_table(
-    df: DataFrame,
-    engine: str,
-    db: str,
-    table: str,
-    host: str = "localhost",
-    port: int | None = None,
-    user: str | None = None,
-    password: str | None = None,
-    batchsize: int = 10_000,
-    num_partitions: int | None = None,
-) -> None:
-    """Dialect-addressed JDBC append: the write-side twin of
-    ``sources.parquet.load_dialect_table``. Builds the url/driver pair for
-    ``engine`` (mssql/mysql/postgresql/sqlite/derby — the reference's
-    service_manager dialect set) and appends through ``append_jdbc``.
-    Credentials travel as writer options, never inside the url."""
-    from h2outility_spark.sources.parquet import jdbc_url
-
-    url, driver = jdbc_url(engine, db, host, port)
-    props = {"driver": driver}
-    if user is not None:
-        props["user"] = user
-    if password is not None:
-        props["password"] = password
-    append_jdbc(df, url, table, properties=props, batchsize=batchsize, num_partitions=num_partitions)

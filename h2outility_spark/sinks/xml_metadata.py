@@ -17,9 +17,9 @@ from pyspark.sql import DataFrame
 
 def export_series_metadata(catalog: DataFrame, path: str, root_tag: str = "Metadata") -> str:
     """Write one <Series> element per catalog row; every column becomes a
-    child element. The catalog frame is the enriched seriescatalog
-    (catalog.derive_catalog + enrich_catalog), so dim attributes are
-    already joined in."""
+    child element. The catalog frame is the seriescatalog
+    (catalog.derive_catalog) with whatever dim attributes the caller has
+    joined in."""
     root = ET.Element(root_tag)
     cols = catalog.columns
     for row in catalog.collect():

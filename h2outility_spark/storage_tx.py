@@ -43,8 +43,8 @@ formats are built from:
   * **MERGE is copy-on-write with file pruning.** Only parent files whose
     [min, max] range of the merge key overlaps the updates are rewritten;
     the rest carry over by reference. At 100 TB with range-clustered files
-    (storage.write_sized) an upsert touching one day rewrites one day's
-    files, not the table.
+    (``compact_files`` range-partitions by the merge key) an upsert
+    touching one day rewrites one day's files, not the table.
   * **Time travel / rollback.** Every version stays readable;
     ``restore(v)`` commits a NEW version whose file list equals v's — an
     audit-preserving rollback (the reference's W9 discard-working-copy,
@@ -922,7 +922,7 @@ class TxTable:
         # finally releases them. merge_from_branch deliberately does NOT
         # get the same treatment: its derived tombstones are one anti-join
         # off the already-persisted net, and the A/B there was a tie
-        # (scripts/ab_branch_persist.py).
+        # (OPTIMIZATION_r15.md, VERDICT #6).
         derived: list[DataFrame] = []
         try:
             all_inserts = net.filter(F.col("_change_type") == "insert").drop(

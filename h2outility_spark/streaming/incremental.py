@@ -2,19 +2,16 @@
 
 The reference has no streaming runtime — its incremental path is
 batch + high-watermark + cron (``src/SilentUpdater.py``,
-``DatasetUtilities.py:537-565``, ``series_service.py:415-430``). Spark
-gives us both forms:
+``DatasetUtilities.py:537-565``, ``series_service.py:415-430``). Here it is
+Structured Streaming: ``readStream`` + event-time watermark, with
+``Trigger.AvailableNow`` as the cron-equivalent "drain what's there and
+stop". The registered ``stream_*`` queries build their streams and
+aggregates inline; this module holds what they share — the custom
+stateful operator (`stream_session_paths`), the transactional sinks
+(`stream_upsert_to_txtable`, `stream_dedup_ingest`) and the apply
+discipline.
 
-  * **Batch watermark append** (`incremental_append`): the faithful
-    re-expression — read the bookmark, extract `ts > watermark`, dedup
-    within the new slice, append. Idempotent against re-runs when the sink
-    dedups on the logical key (I3's UNIQUE-constraint analog).
-  * **Structured Streaming** (`stream_*`): the native form —
-    `readStream` + event-time watermark + windowed aggregation, with
-    `Trigger.AvailableNow` as the cron-equivalent "drain what's there and
-    stop". Late/duplicate defense via `withWatermark` + `dropDuplicates`.
-
-The streaming apply discipline lives here, in two pieces:
+The apply discipline is two pieces:
 
   * **One drain** (`drain_available_now`): a stream and its sink (an
     append parquet path, a complete-mode overwrite path, or a
@@ -38,11 +35,8 @@ from __future__ import annotations
 
 import contextlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from h2outility_spark.operators.mutation import drop_logical_duplicates
 
 
 @contextlib.contextmanager
@@ -182,73 +176,6 @@ class BatchLedger:
         return handle
 
 
-def incremental_append(
-    dv: DataFrame,
-    existing: DataFrame,
-    keys: list[str] | None = None,
-    ts_col: str = "LocalDateTime",
-) -> DataFrame:
-    """I2+I3: compute the watermark from what is already exported, take the
-    strictly-newer slice, defend against duplicates on the logical key, and
-    return the union. The watermark aggregate is a metadata-only min/max on
-    parquet sources."""
-    wm = existing.agg(F.max(ts_col).alias("wm"))
-    fresh = (
-        dv.join(F.broadcast(wm))
-        # NULL watermark (empty/all-null existing) means -infinity: the
-        # bootstrap run must take everything, not silently drop it all.
-        .filter(F.col("wm").isNull() | (F.col(ts_col) > F.col("wm")))
-        .drop("wm")
-    )
-    fresh = drop_logical_duplicates(fresh, keys)
-    return existing.unionByName(fresh, allowMissingColumns=True)
-
-
-def stream_events(spark: SparkSession, sf_dir: str, schema) -> DataFrame:
-    """File-source stream over the events table (for tests/local smoke the
-    parquet directory stands in for the queue)."""
-    return spark.readStream.schema(schema).format("parquet").load(sf_dir)
-
-
-def stream_windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Event-time tumbling window aggregation with late-data watermark —
-    the extension surface the reference's cron loop approximates."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), key_col)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("window.start").alias("win_start"), key_col, "n", "sum_value")
-    )
-
-
-def stream_sessionized(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Native session windows (dynamic gap-close) — the streaming form of
-    the batch sessionization query."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
 def stream_session_paths(
     events: DataFrame,
     gap_seconds: int = 21_600,
@@ -348,46 +275,6 @@ def stream_session_paths(
             fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
-
-
-def stream_deduped_append(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """I3: drop duplicate records within the watermark horizon — the
-    streaming analog of the reference's UNIQUE constraint."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    band_seconds: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream interval join: right rows within ±band of each left
-    row on the same key — the streaming form of the batch range join
-    (operators/asof.range_join_count).
-
-    Both sides carry an event-time watermark, and the join condition bounds
-    right's event time relative to left's, so Spark can size the join state
-    buffer (watermark + band) and evict expired rows — without the time
-    bound a stream-stream join would buffer forever. At 100 TB/day the
-    state store holds only ``2·band + watermark`` worth of rows per key.
-    """
-    lw = left.withWatermark(left_ts, watermark).alias("l")
-    rw = right.withWatermark(right_ts, watermark).alias("r")
-    cond = F.expr(
-        f"l.{key} = r.{key} AND "
-        f"r.{right_ts} >= l.{left_ts} - INTERVAL {band_seconds} SECONDS AND "
-        f"r.{right_ts} <= l.{left_ts} + INTERVAL {band_seconds} SECONDS"
-    )
-    return lw.join(rw, cond)
 
 
 def stream_upsert_to_txtable(
@@ -533,15 +420,3 @@ def stream_dedup_ingest(
                 c.unpersist()
 
     drain_available_now(stream_docs, checkpoint_path, ingest)
-
-
-def run_available_now(stream_df: DataFrame) -> list:
-    """Drain everything currently available (Trigger.AvailableNow) through
-    a throwaway checkpoint and return the appended rows — the
-    cron-equivalent one-shot run (I1)."""
-    rows: list = []
-    with tempfile.TemporaryDirectory(prefix="h2ou_drain_ckpt_") as ckpt:
-        drain_available_now(
-            stream_df, ckpt, lambda batch_df, _batch_id: rows.extend(batch_df.collect())
-        )
-    return rows

@@ -1,4 +1,4 @@
-"""Tests: CLI surface end-to-end, stateful streaming EMA detector."""
+"""Tests: CLI surface end-to-end."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import os
 from pyspark.sql import functions as F
 
 from h2outility_spark.sources.parquet import load_table
-from h2outility_spark.streaming import incremental, stateful
 from tests.conftest import SF_DIR
 
 
@@ -69,19 +68,6 @@ def test_cli_tx_upsert_idempotent(spark, tmp_path, capsys):
     assert "'op': 'merge'" in capsys.readouterr().out
 
 
-def test_stateful_ema_detector_streaming(spark, tmp_path):
-    src = str(tmp_path / "stream_src")
-    load_table(spark, SF_DIR, "events").write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = incremental.stream_events(spark, src, schema)
-    alerts = stateful.streaming_ema_alerts(stream, alpha=0.3, threshold=120.0)
-    rows = incremental.run_available_now(alerts)
-    assert len(rows) > 0
-    for r in rows[:50]:
-        assert r["deviation"] >= 120.0
-        assert abs(r["value"] - r["ema"]) - r["deviation"] < 1e-6
-
-
 def test_cli_query_and_explain(spark, tmp_path, capsys):
     from h2outility_spark.__main__ import main
 
@@ -133,41 +119,6 @@ def test_cli_tx_compact(spark, tmp_path, capsys):
     rc = main(["tx-compact", "--table", tdir, "--key", "k", "--target-rows", "1000"])
     assert rc == 0
     assert "nothing to compact" in capsys.readouterr().out
-
-
-def test_streaming_quality_drift_two_batches(spark, tmp_path):
-    """Welford drift monitor: batch 1 establishes a stable per-source
-    baseline (no alerts — min_n not yet reached for the tail, in-range
-    scores for the rest); batch 2's outlier doc fires the z-score alert
-    against state carried ACROSS batches, and in-range docs stay silent."""
-    src = str(tmp_path / "scored")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "alerts")
-    schema = "source string, doc_id long, score double"
-
-    def drain(query_df):
-        q = (
-            query_df.writeStream.outputMode("append").format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.processAllAvailable(); q.stop(); q.awaitTermination(30)
-        return spark.read.schema(stateful.DRIFT_OUTPUT_SCHEMA).parquet(sink)
-
-    base = [("s1", i, 0.5 + 0.01 * (i % 3 - 1)) for i in range(30)]  # 0.49/0.5/0.51
-    spark.createDataFrame(base, schema).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).format("parquet").load(src)
-    assert drain(stateful.streaming_quality_drift(stream, z_threshold=3.0, min_n=20)).count() == 0
-
-    batch2 = [("s1", 100, 0.5), ("s1", 101, 0.95), ("s1", 102, 0.51)]  # 101 is the outlier
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    stream2 = spark.readStream.schema(schema).format("parquet").load(src)
-    alerts = drain(stateful.streaming_quality_drift(stream2, z_threshold=3.0, min_n=20)).collect()
-    assert [r["doc_id"] for r in alerts] == [101]
-    a = alerts[0]
-    assert a["source"] == "s1" and a["score"] == 0.95
-    assert abs(a["running_mean"] - 0.5) < 0.01
-    assert a["zscore"] is not None and a["zscore"] > 3.0
 
 
 def test_cli_tx_describe(spark, tmp_path, capsys):

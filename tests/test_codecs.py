@@ -1,7 +1,7 @@
 """Pure-Python codec path (h2outility_spark.codecs): golden-pixel BMP
 decode through extract_image_features, BMP resize round-trip, and PCM WAV
-header/amplitude parse through extract_audio_features — the default (no
-injected codec) multimodal path, un-stubbed."""
+header parse — the default (no injected codec) multimodal path,
+un-stubbed."""
 
 from __future__ import annotations
 
@@ -102,32 +102,6 @@ def test_wav_header_parse_against_stdlib_writer():
     assert h["bits_per_sample"] == 16
     assert h["n_frames"] == 8000
     assert h["duration_ms"] == 500
-
-
-def test_wav_decoder_amplitude_exact():
-    rate, ch, dur, amp = codecs.wav_audio_decoder(make_wav(amplitude=8192))
-    assert (rate, ch, dur) == (16000, 1, 500)
-    assert amp == round(8192 / 32768.0, 6)  # square wave: |sample| constant
-
-
-def test_extract_audio_features_default_codec(spark):
-    assets = spark.createDataFrame(
-        [
-            (1, bytearray(make_wav()), "audio/wav", {}),
-            (2, bytearray(make_wav(n_frames=16000, amplitude=4096)), "audio/wav", {}),
-        ],
-        "asset_id long, data binary, mime string, meta map<string,string>",
-    )
-    rows = {r["asset_id"]: r for r in multimodal.extract_audio_features(assets).collect()}
-    assert rows[1]["duration_ms"] == 500 and rows[2]["duration_ms"] == 1000
-    assert rows[2]["mean_abs_amplitude"] == round(4096 / 32768.0, 6)
-    # non-WAV payloads still raise at the decode site (injectable contract)
-    bad = spark.createDataFrame(
-        [(3, bytearray(b"mp3x"), "audio/mp3", {})],
-        "asset_id long, data binary, mime string, meta map<string,string>",
-    )
-    with pytest.raises(Exception, match="decode_fn|NotImplemented|no built-in"):
-        multimodal.extract_audio_features(bad).collect()
 
 
 def test_null_and_empty_payloads_yield_null_features_not_job_abort(spark):
@@ -413,28 +387,6 @@ def test_image_neardup_pairs_operator(spark):
     assert (1, 3) in pairs and (2, 3) in pairs
     assert all(h <= 6 for h in pairs.values())
     assert not any(4 in k or 5 in k for k in pairs)
-
-
-def test_canonical_images_keeps_one_per_cluster(spark):
-    from pyspark.sql import Row
-
-    from h2outility_spark.codecs import encode_bmp, encode_png
-    from h2outility_spark.operators.multimodal import canonical_images
-
-    rows = _gradient_rows(18, 16)
-    assets = spark.createDataFrame(
-        [
-            Row(asset_id=1, data=bytearray(encode_bmp(rows))),
-            Row(asset_id=2, data=bytearray(encode_png(rows))),
-            Row(
-                asset_id=3,
-                data=bytearray(encode_png(_gradient_rows(18, 16, tweak=(9, 4, (0, 0, 0))))),
-            ),
-            Row(asset_id=4, data=bytearray(encode_png([list(reversed(r)) for r in rows]))),
-        ]
-    )
-    kept = {r["asset_id"] for r in canonical_images(assets).collect()}
-    assert kept == {1, 4}  # 1,2,3 cluster -> keep 1; 4 unclustered
 
 
 # -- GIF ----------------------------------------------------------------------

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from h2outility_spark.edit_session import EditSession
 from h2outility_spark.operators import skew
@@ -106,15 +106,3 @@ def test_salted_agg_matches_plain(spark):
     }
     assert plain == salted
 
-
-def test_salted_broadcast_join_matches_plain(spark):
-    fact = spark.createDataFrame([Row(k=i % 2, v=i) for i in range(100)])
-    dim = spark.createDataFrame([Row(k=0, name="a"), Row(k=1, name="b")])
-    plain = fact.join(dim, "k").groupBy("name").count().collect()
-    salted = (
-        skew.salted_broadcast_join(fact, dim, "k", F.col("v"), n_salts=4)
-        .groupBy("name")
-        .count()
-        .collect()
-    )
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))

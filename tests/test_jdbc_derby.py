@@ -123,21 +123,21 @@ def test_jdbc_dialect_round_trip_via_derby(spark, tmp_path):
 
 def test_dialect_write_read_roundtrip(spark, tmp_path):
     """Multi-dialect path end-to-end on the one engine with an in-container
-    driver: append via the dialect-addressed writer, read back via the
-    dialect-addressed loader — proving the url-builder wiring on BOTH sides
-    (the other dialects share this exact code path, only the url/driver
-    tuple differs)."""
-    from h2outility_spark.sinks.jdbc_sink import append_dialect_table
-    from h2outility_spark.sources.parquet import load_dialect_table
+    driver: append through ``append_jdbc`` at the dialect's url/driver
+    pair, read back via the dialect-addressed loader — proving the
+    url-builder wiring on BOTH sides (the other dialects share this exact
+    code path, only the url/driver tuple differs)."""
+    from h2outility_spark.sources.parquet import jdbc_url, load_dialect_table
 
     db = str(tmp_path / "dialectdb")
+    url, driver = jdbc_url("derby", db)
     rows = [(i, f"v{i}") for i in range(50)]
     df = spark.createDataFrame(rows, "id int, payload string")
-    append_dialect_table(df, "derby", db, "t_dialect", num_partitions=2)
+    append_jdbc(df, url, "t_dialect", properties={"driver": driver}, num_partitions=2)
 
     back = load_dialect_table(spark, "derby", db, "t_dialect")
     assert sorted((r["id"], r["payload"]) for r in back.collect()) == sorted(rows)
 
     # second append accumulates (S9 append semantics through the dialect path)
-    append_dialect_table(df.limit(5), "derby", db, "t_dialect")
+    append_jdbc(df.limit(5), url, "t_dialect", properties={"driver": driver})
     assert load_dialect_table(spark, "derby", db, "t_dialect").count() == 55

@@ -72,3 +72,25 @@ def test_resource_spec_roundtrip(tmp_path):
         json.dump(spec, f)
     loaded = jobs.ManagedResource.from_json(path)
     assert loaded[0].name == "r1" and loaded[0].chunk_by_year is True
+
+
+def test_year_chunks_keep_the_last_fractional_second(spark, tmp_path):
+    """A row in the last fractional second of a year belongs to that year's
+    chunk: the year window must cover 23:59:59.999999, not stop at 23:59:59."""
+    dv = spark.sql(
+        """
+        SELECT CAST(ts AS TIMESTAMP) AS LocalDateTime,
+               -7.0D AS UTCOffset,
+               CAST(ts AS TIMESTAMP) + INTERVAL 7 HOURS AS DateTimeUTC,
+               1 AS SiteID, 'temp' AS VariableCode, 1 AS MethodID, 1 AS SourceID,
+               0 AS QualityControlLevelID, v AS DataValue
+        FROM VALUES ('2020-06-01 00:00:00', 1.0D),
+                    ('2020-12-31 23:59:59.5', 2.0D),
+                    ('2021-01-01 00:00:00.25', 3.0D) AS t(ts, v)
+        """
+    )
+    resource = jobs.ManagedResource(name="by-year", site_id=1, chunk_by_year=True)
+    files = jobs.run_export(dv, resource, str(tmp_path))
+    assert len(files) == 2  # one per year
+    data = [ln for f in files for ln in open(f).read().splitlines() if not ln.startswith("#")]
+    assert len(data) - len(files) == 3  # minus each file's column row

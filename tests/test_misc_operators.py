@@ -1,38 +1,16 @@
-"""Micro-tests for helpers not covered elsewhere: narrow column shape,
-sentinel drop, unpivot, catalog enrichment, series_exists, k-means."""
+"""Micro-tests for helpers not covered elsewhere: the pivot width cap,
+k-means, random-projection LSH bucket caps, approximate percentiles."""
 
 from __future__ import annotations
 
 import pytest
 
-from datetime import datetime
+from pyspark.sql import DataFrame, Row, functions as F
 
-from pyspark.sql import Row, functions as F
-
-from h2outility_spark.operators.catalog import derive_catalog, enrich_catalog
-from h2outility_spark.operators.extract import NARROW_COLUMNS, drop_no_data, get_values_by_filters
-from h2outility_spark.operators.kmeans import inertia, kmeans
-from h2outility_spark.operators.mutation import series_exists
-from h2outility_spark.operators.reshape import MAX_PIVOT_WIDTH, PivotWidthError, pivot_wide, unpivot_long
-from h2outility_spark.schema import events_as_datavalues
+from h2outility_spark.operators.kmeans import _assign, kmeans
+from h2outility_spark.operators.reshape import MAX_PIVOT_WIDTH, PivotWidthError, pivot_wide
 from h2outility_spark.sources.parquet import load_table
 from tests.conftest import SF_DIR
-
-
-def test_narrow_query_shape(spark):
-    dv = events_as_datavalues(load_table(spark, SF_DIR, "events"))
-    narrow = get_values_by_filters(dv, narrow=True, qc_id=0)
-    assert narrow.columns == [c for c in NARROW_COLUMNS if c in dv.columns]
-    wide = get_values_by_filters(dv, narrow=False, qc_id=0)
-    assert "CensorCode" in wide.columns and "QualifierID" in wide.columns
-
-
-def test_drop_no_data(spark):
-    df = spark.createDataFrame(
-        [Row(DataValue=v, LocalDateTime=datetime(2024, 1, 1 + i)) for i, v in enumerate([1.0, -9999.0, 2.0])]
-    )
-    out = drop_no_data(df, -9999.0, start=datetime(2024, 1, 1), end=datetime(2024, 1, 2))
-    assert [r["DataValue"] for r in out.collect()] == [1.0]
 
 
 @pytest.mark.slow
@@ -49,24 +27,18 @@ def test_pivot_width_cap_fails_fast(spark):
     assert len(pivot_wide(dv, ["ts"], pairs[:MAX_PIVOT_WIDTH]).columns) == MAX_PIVOT_WIDTH + 1
 
 
-def test_unpivot_roundtrip(spark):
-    wide = spark.createDataFrame([Row(ts=1, a=1.0, b=2.0)])
-    long = unpivot_long(wide, ["ts"], ["a", "b"])
-    assert sorted((r["VariableCode"], r["DataValue"]) for r in long.collect()) == [("a", 1.0), ("b", 2.0)]
-
-
-def test_enrich_catalog_and_exists(spark):
-    dv = events_as_datavalues(load_table(spark, SF_DIR, "events"))
-    keys = ["SiteID", "VariableCode", "MethodID", "SourceID", "QualityControlLevelID"]
-    cat = derive_catalog(dv, keys=keys)
-    dim = spark.createDataFrame([Row(VariableCode=c, NoDataValue=-9999.0) for c in
-                                 ["click", "error", "purchase", "signup", "view"]])
-    enriched = enrich_catalog(cat, {"VariableCode": dim})
-    assert "NoDataValue" in enriched.columns
-    assert enriched.filter(F.col("NoDataValue").isNull()).count() == 0
-    row = cat.limit(1).collect()[0]
-    assert series_exists(cat, {k: row[k] for k in keys})
-    assert not series_exists(cat, {"SiteID": -42})
+def inertia(embeddings: DataFrame, centroids_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:
+    """Sum of squared distances to the assigned centroid (fit metric)."""
+    rows = (
+        centroids_df.groupBy("cluster")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("p"))
+        .select("cluster", F.expr("transform(p, x -> x.centroid_val)").alias("cvec"))
+        .collect()
+    )
+    cents = [(r["cluster"], list(r["cvec"])) for r in rows]
+    assigned = _assign(embeddings, cents, id_col, vec_col)
+    vv = F.aggregate(F.col("__v"), F.lit(0.0), lambda a, x: a + x * x)
+    return assigned.select(F.sum(vv + F.col("__part_d")).alias("s")).collect()[0]["s"]
 
 
 def test_kmeans_reduces_inertia(spark):
@@ -82,10 +54,7 @@ def test_kmeans_reduces_inertia(spark):
 def test_lsh_bucket_quarantine(spark):
     """A boilerplate cluster (many docs sharing one band key) must be
     quarantined, bounding pairs volume; pairs outside it are unchanged."""
-    from h2outility_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_quarantined,
-    )
+    from h2outility_spark.operators.dedup import lsh_candidate_pairs
 
     # 30 boilerplate docs share signature "HOT" in band 0; 4 normal docs
     # form two small colliding groups; nothing else collides.
@@ -103,15 +72,9 @@ def test_lsh_bucket_quarantine(spark):
     # HOT k^2 + (100,101) + (102,103) (distinct across its two bands)
     assert uncapped.count() == 30 * 29 // 2 + 1 + 1
 
-    pairs, quarantined = lsh_candidate_pairs_quarantined(sigs, bands, max_bucket=10)
-    q = quarantined.collect()
-    assert [(r["band"], r["band_key"], r["n_docs"]) for r in q] == [(0, "HOT", 30)]
-    got = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
-    assert got == [(100, 101), (102, 103)]  # bounded, non-quarantined recall unchanged
-
-    # same cap through the single-return API
     capped = lsh_candidate_pairs(sigs, bands, max_bucket=10)
-    assert sorted((r["id_a"], r["id_b"]) for r in capped.collect()) == got
+    got = sorted((r["id_a"], r["id_b"]) for r in capped.collect())
+    assert got == [(100, 101), (102, 103)]  # bounded, non-quarantined recall unchanged
 
 
 def test_rp_lsh_bucket_cap(spark):

@@ -15,8 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from h2outility_spark import storage
-from h2outility_spark.sources.parquet import TABLES, load_table
+from h2outility_spark.sources.parquet import TABLES, load_table, read_parquet
 from tests.conftest import SF_DIR
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -122,8 +121,8 @@ def test_rewritten_file_schema_is_reread(spark, tmp_path):
 def test_read_partitioned_keeps_partition_column_types(spark, tmp_path):
     path = os.path.join(tmp_path, "events_by_type")
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "value", "event_type")
-    storage.write_partitioned(ev, path, ["event_type"], derive_year_from="ts")
-    back, n_jobs = _jobs_of(spark, lambda: storage.read_partitioned(spark, path))
+    ev.withColumn("year", F.year("ts")).write.partitionBy("event_type", "year").parquet(path)
+    back, n_jobs = _jobs_of(spark, lambda: read_parquet(spark, path))
     inferred = spark.read.parquet(path)
     assert n_jobs == 0
     assert back.schema == inferred.schema

@@ -1,13 +1,17 @@
 """Tests for the op-list plan compiler, CSV/XML sinks, mutation surface,
-and multimodal binary plumbing."""
+and multimodal binary plumbing (with deterministic decode/resize
+stand-ins, so no real codec is needed)."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import sys
 from datetime import datetime, timedelta
 
-from pyspark.sql import Row, functions as F
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, Row, functions as F
 
 from h2outility_spark.operators import multimodal, mutation
 from h2outility_spark.plans import oplist
@@ -16,6 +20,10 @@ from h2outility_spark.operators.catalog import derive_catalog
 
 T0 = datetime(2024, 1, 1)
 
+# The stand-in codecs below run inside Python workers, which cannot import
+# this test module by name: ship its functions by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 
 def tiny_series(spark):
     rows = [
@@ -23,6 +31,41 @@ def tiny_series(spark):
         for i, v in enumerate([10.0, 200.0, 200.0, 10.0, 10.0])
     ]
     return spark.createDataFrame(rows)
+
+
+def binarize_text_fixture(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Build a multimodal asset fixture from the documents table (UTF-8
+    payload bytes + mime + meta) — the fixtures hold no image data, so
+    tests exercise the binary plumbing with text payloads."""
+    return docs.select(
+        F.col(id_col).alias("asset_id"),
+        F.encode(F.col(text_col), "UTF-8").alias("data"),
+        F.lit("text/plain").alias("mime"),
+        F.create_map(F.lit("origin"), F.lit("documents")).alias("meta"),
+    )
+
+
+def deterministic_fake_decoder(data: bytes) -> tuple[int, int, float]:
+    """Deterministic stand-in for an image decode: derives (width, height,
+    mean_luma) from the payload's sha1 so tests are reproducible. NOT a real
+    decoder — replace with PIL/turbojpeg on a real cluster."""
+    h = hashlib.sha1(data or b"").digest()
+    width = 64 + h[0] % 192
+    height = 64 + h[1] % 192
+    mean_luma = round(h[2] / 255.0, 6)
+    return width, height, mean_luma
+
+
+def deterministic_fake_resizer(data: bytes, max_side: int) -> tuple[bytes, int, int]:
+    """Deterministic resize stand-in: derives source dims like the fake
+    decoder, scales them to fit ``max_side``, and emits a payload digest as
+    the 'resized bytes'. Replace with PIL ``Image.thumbnail`` on a real
+    cluster."""
+    w, h, _ = deterministic_fake_decoder(data)
+    scale = min(1.0, max_side / max(w, h))
+    out_w, out_h = max(1, int(w * scale)), max(1, int(h * scale))
+    payload = hashlib.sha1((data or b"") + f"{out_w}x{out_h}".encode()).digest()
+    return payload, out_w, out_h
 
 
 def test_plan_compile_and_replay(spark, tmp_path):
@@ -110,16 +153,14 @@ def test_upsert_newest_wins(spark):
 
 
 def test_delete_and_dedup(spark):
-    df = spark.createDataFrame([Row(k=1, selected=True), Row(k=2, selected=False)])
-    assert [r["k"] for r in mutation.delete_selected(df).collect()] == [2]
     dup = spark.createDataFrame([Row(DataValue=1.0, LocalDateTime=T0, SiteID=1)] * 3)
     assert mutation.drop_logical_duplicates(dup).count() == 1
 
 
 def test_multimodal_feature_extraction(spark):
     docs = spark.createDataFrame([Row(doc_id=1, text="hello world"), Row(doc_id=2, text="")])
-    assets = multimodal.binarize_text_fixture(docs)
-    feats = multimodal.extract_image_features(assets, decode_fn=multimodal.deterministic_fake_decoder)
+    assets = binarize_text_fixture(docs)
+    feats = multimodal.extract_image_features(assets, decode_fn=deterministic_fake_decoder)
     rows = {r["asset_id"]: r for r in feats.collect()}
     assert rows[1]["n_bytes"] == 11
     assert len(rows[1]["sha1"]) == 40
@@ -142,9 +183,9 @@ def test_frame_sample_plan(spark):
 
 def test_resize_images(spark):
     docs = spark.createDataFrame([Row(doc_id=1, text="hello world"), Row(doc_id=2, text="y" * 500)])
-    assets = multimodal.binarize_text_fixture(docs)
+    assets = binarize_text_fixture(docs)
     out = {r["asset_id"]: r for r in multimodal.resize_images(
-        assets, max_side=100, resize_fn=multimodal.deterministic_fake_resizer
+        assets, max_side=100, resize_fn=deterministic_fake_resizer
     ).collect()}
     for r in out.values():
         assert max(r["width"], r["height"]) <= 100
@@ -152,7 +193,7 @@ def test_resize_images(spark):
         assert isinstance(bytes(r["data"]), bytes) and len(r["data"]) == 20  # sha1 payload stub
     # deterministic: same inputs, same resized dims
     again = {r["asset_id"]: r for r in multimodal.resize_images(
-        assets, max_side=100, resize_fn=multimodal.deterministic_fake_resizer
+        assets, max_side=100, resize_fn=deterministic_fake_resizer
     ).collect()}
     assert {k: (v["width"], v["height"]) for k, v in out.items()} == {
         k: (v["width"], v["height"]) for k, v in again.items()

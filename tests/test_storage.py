@@ -1,24 +1,26 @@
-"""Layout tests: partition pruning reaches the scan, bucketed joins run
-shuffle-free."""
+"""Layout tests: partition pruning reaches the scan, and Z-order
+clustering lets footer stats prune files on every clustered axis."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from h2outility_spark import storage
 from h2outility_spark.schema import events_as_datavalues
-from h2outility_spark.sources.parquet import load_table
+from h2outility_spark.sources.parquet import load_table, read_parquet
+from h2outility_spark.storage import zordered_frame
 from tests.conftest import SF_DIR
 
 
 def test_partition_pruning(spark, tmp_path):
+    """read_parquet (footer-typed, no inference job) keeps directory
+    partition discovery, so a filter on partition columns prunes whole
+    directories in the scan."""
     dv = events_as_datavalues(load_table(spark, SF_DIR, "events"))
     path = str(tmp_path / "dv_part")
-    storage.write_partitioned(
-        dv, path, ["QualityControlLevelID"], derive_year_from="LocalDateTime"
-    )
-    back = storage.read_partitioned(spark, path)
+    dv.withColumn("year", F.year("LocalDateTime")).write.partitionBy(
+        "QualityControlLevelID", "year"
+    ).parquet(path)
+    back = read_parquet(spark, path)
     q = back.filter((F.col("QualityControlLevelID") == 0) & (F.col("year") == 2024))
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -26,67 +28,47 @@ def test_partition_pruning(spark, tmp_path):
     assert q.count() == dv.filter(F.col("QualityControlLevelID") == 0).count()
 
 
-def test_write_sized_controls_file_geometry(spark, tmp_path):
-    import glob
+def file_prune_fraction(path: str, col: str, lo, hi) -> float:
+    """Fraction of data files a [lo, hi] filter on ``col`` can SKIP from
+    footer min/max alone — the observable that layout clustering exists to
+    maximize (1.0 = every file skipped, 0.0 = full scan)."""
+    import glob as _glob
 
-    dv = events_as_datavalues(load_table(spark, SF_DIR, "events"))
-    n = dv.count()
-    path = str(tmp_path / "sized")
-    storage.write_sized(dv, path, range_cols=["LocalDateTime"], target_rows_per_file=2000)
-    files = glob.glob(f"{path}/*.parquet")
-    # per-file cap respected: every file <= 2000 rows, none empty
-    sizes = [spark.read.parquet(f).count() for f in files]
-    assert sum(sizes) == n
-    assert max(sizes) <= 2000
-    # range clustering: file min/max LocalDateTime ranges must not interleave
-    # (each file covers a contiguous slice of the sort axis)
-    spans = sorted(
-        tuple(r)
-        for f in files
-        for r in spark.read.parquet(f)
-        .agg(F.min("LocalDateTime"), F.max("LocalDateTime"))
-        .collect()
-    )
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2 or lo1 == lo2  # ties may straddle, ranges may not cross
+    import pyarrow.parquet as pq
 
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS buckets LOCATION '{tmp_path / 'warehouse'}'")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
-    try:
-        orders = load_table(spark, SF_DIR, "orders")
-        li = load_table(spark, SF_DIR, "lineitem")
-        storage.write_bucketed(orders, "buckets.orders_b", "o_orderkey", 8)
-        storage.write_bucketed(li, "buckets.lineitem_b", "l_orderkey", 8)
-        ob, lb = spark.table("buckets.orders_b"), spark.table("buckets.lineitem_b")
-        joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-        assert storage.is_shuffle_free_join(joined)
-        assert joined.count() == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-        # the same join on plain frames DOES shuffle under these settings
-        plain = li.join(orders, li.l_orderkey == orders.o_orderkey)
-        assert not storage.is_shuffle_free_join(plain)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS buckets.orders_b")
-        spark.sql("DROP TABLE IF EXISTS buckets.lineitem_b")
-        spark.sql("DROP DATABASE IF EXISTS buckets")
+    files = _glob.glob(f"{path}/*.parquet")
+    skipped = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        idx = next(i for i in range(len(md.schema)) if md.schema.column(i).name == col)
+        stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
+        if any(s is None or not s.has_min_max for s in stats):
+            # Missing footer stats (legacy INT96, all-null chunk) => the file
+            # cannot be proven skippable; count it as scanned.
+            continue
+        fmin = min(s.min for s in stats)
+        fmax = max(s.max for s in stats)
+        if fmax < lo or fmin > hi:
+            skipped += 1
+    return skipped / len(files) if files else 0.0
 
 
 def test_zorder_prunes_both_axes(spark, tmp_path):
     """Z-order layout must let footer min/max stats prune files for filters
     on EITHER clustered column; a single-axis sort prunes only its own
     axis. Compared on the same data, same file count."""
-    from h2outility_spark.storage import file_prune_fraction, write_sized, write_zordered
-
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
     n = li.count()
     per_file = max(n // 16, 1)
 
     single = str(tmp_path / "single")
     zord = str(tmp_path / "zord")
-    write_sized(li, single, range_cols=["l_orderkey"], target_rows_per_file=per_file)
-    write_zordered(li, zord, cols=["l_orderkey", "l_partkey"], target_rows_per_file=per_file)
+    li.repartitionByRange("l_orderkey").sortWithinPartitions("l_orderkey").write.option(
+        "maxRecordsPerFile", per_file
+    ).parquet(single)
+    zordered_frame(li, ["l_orderkey", "l_partkey"]).write.option(
+        "maxRecordsPerFile", per_file
+    ).parquet(zord)
 
     # narrow range on the SECONDARY axis (10% of the key space)
     pk_lo, pk_hi = 1, int(li.agg(F.max("l_partkey")).collect()[0][0] * 0.1)

@@ -1,99 +1,9 @@
-"""Structured Streaming smoke tests: AvailableNow drain of windowed counts,
-session windows, and watermark dedup over a parquet-backed stream."""
+"""Structured Streaming tests: foreachBatch upserts into a TxTable, the
+streaming dedup ingest, and the drain's shuffle-partition pin."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from h2outility_spark.sources.parquet import load_table
 from h2outility_spark.streaming import incremental
-
-from tests.conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def stream_dir(spark, tmp_path_factory):
-    """Events re-written with microsecond timestamps (streaming can't use
-    the nanos-typed originals) into a streamable directory."""
-    d = str(tmp_path_factory.mktemp("events_stream"))
-    load_table(spark, SF_DIR, "events").write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_available_now_windowed_counts(spark, stream_dir):
-    schema = spark.read.parquet(stream_dir).schema
-    stream = incremental.stream_events(spark, stream_dir, schema)
-    assert stream.isStreaming
-    agg = incremental.stream_windowed_counts(stream, window="1 hour", watermark="2 hours")
-    rows = incremental.run_available_now(agg)
-    assert len(rows) > 0
-    # append mode emits only windows CLOSED by the final watermark
-    # (max event time - 2h); later windows stay pending — exact-count that.
-    ev = load_table(spark, SF_DIR, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    closed = (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
-        .count()
-        .filter(F.col("window.end") <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-        .count()
-    )
-    assert len(rows) == closed
-
-
-def test_session_window_stream(spark, stream_dir):
-    schema = spark.read.parquet(stream_dir).schema
-    stream = incremental.stream_events(spark, stream_dir, schema)
-    rows = incremental.run_available_now(incremental.stream_sessionized(stream, gap="6 hours"))
-    assert rows and all(r["session_end"] > r["session_start"] for r in rows)
-
-
-def test_stream_dedup_within_watermark(spark, stream_dir):
-    schema = spark.read.parquet(stream_dir).schema
-    stream = incremental.stream_events(spark, stream_dir, schema)
-    deduped = incremental.stream_deduped_append(stream, keys=["user_id", "event_type"])
-    rows = incremental.run_available_now(deduped)
-    distinct = load_table(spark, SF_DIR, "events").select("user_id", "event_type").distinct().count()
-    assert len(rows) == distinct
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """The stream-stream interval join must produce exactly the pairs the
-    equivalent batch range join produces on the same (drained) data."""
-    src = str(tmp_path / "src")
-    ev = load_table(spark, SF_DIR, "events")
-    ev.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def sides(df):
-        purch = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"), "user_id", "ts"
-        )
-        clicks = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("ts2")
-        )
-        return purch, clicks
-
-    sp, sc = sides(incremental.stream_events(spark, src, schema))
-    joined = incremental.stream_interval_join(
-        sp, sc, key="user_id", band_seconds=3600, left_ts="ts", right_ts="ts2"
-    ).select("purchase_id", "click_id")
-    got = {(r["purchase_id"], r["click_id"]) for r in incremental.run_available_now(joined)}
-
-    bp, bc = sides(ev)
-    bc = bc.withColumnRenamed("user_id", "user_id2")
-    expected = {
-        (r["purchase_id"], r["click_id"])
-        for r in bp.join(
-            bc,
-            (bp.user_id == bc.user_id2)
-            & (F.abs(F.unix_micros(bp.ts) - F.unix_micros(bc.ts2)) <= 3600 * 1_000_000),
-        )
-        .select("purchase_id", "click_id")
-        .collect()
-    }
-    assert len(expected) > 0
-    assert got == expected
 
 
 def test_stream_upsert_to_txtable(spark, tmp_path):
@@ -138,16 +48,6 @@ def test_stream_upsert_to_txtable(spark, tmp_path):
     # time travel: the first batch's state is still readable
     v0 = {r["k"]: r["v"] for r in table.snapshot(version=0).collect()}
     assert v0 == {1: 1.0, 2: 2.0}
-
-
-def test_batch_incremental_append(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    old = ev.filter(F.col("event_id") < 500)
-    merged = incremental.incremental_append(ev, old, keys=["event_id"], ts_col="ts")
-    # every event is either old or strictly newer than the old watermark
-    wm = old.agg(F.max("ts")).collect()[0][0]
-    expected = 500 + ev.filter(F.col("ts") > F.lit(wm)).count()
-    assert merged.count() == expected
 
 
 def test_stream_dedup_ingest(spark, tmp_path):
