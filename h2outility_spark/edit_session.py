@@ -29,19 +29,12 @@ from h2outility_spark.plans import oplist
 
 
 class EditSession:
-    def __init__(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        ts: str = "LocalDateTime",
-        value: str = "DataValue",
-        series_filter=None,
-    ):
+    def __init__(self, source: DataFrame, keys: list[str], series_filter=None):
         base = source.filter(series_filter) if series_filter is not None else source
         self._source = base.cache()
         self.keys = keys
-        self.ts = ts
-        self.value = value
+        self.ts = "LocalDateTime"
+        self.value = "DataValue"
         self.plan: list[dict] = []
 
     # --- recording -----------------------------------------------------------
@@ -112,7 +105,7 @@ class EditSession:
         catalog = derive_catalog(edited, keys=[k for k in self.keys if k in edited.columns], ts_col=self.ts)
         return new_store, catalog
 
-    def save_to_table(self, table, new_keys: dict | None = None) -> int:
+    def save_to_table(self, table) -> int:
         """Transactional form of ``save``: MERGE the edited rows into a
         ``storage_tx.TxTable`` and return the committed version.
 
@@ -126,8 +119,6 @@ class EditSession:
         edited = self.frame()
         if qc.SEL in edited.columns:
             edited = edited.drop(qc.SEL)
-        if new_keys:
-            edited = qc.reversion_series(edited, new_keys)
         return table.merge_upsert(edited)
 
     def close(self) -> None:

@@ -101,15 +101,9 @@ def plan_chunks(catalog_rows: list, resource: ManagedResource) -> list[Chunk]:
     return chunks
 
 
-def export_chunk(
-    dv: DataFrame,
-    chunk: Chunk,
-    out_dir: str,
-    resource: ManagedResource,
-    ts_cols: list[str] | None = None,
-) -> str:
+def export_chunk(dv: DataFrame, chunk: Chunk, out_dir: str, resource: ManagedResource) -> str:
     """One chunk → one annotated wide CSV (the §3.1 slice)."""
-    ts_cols = ts_cols or ["LocalDateTime", "UTCOffset", "DateTimeUTC"]
+    ts_cols = ["LocalDateTime", "UTCOffset", "DateTimeUTC"]
     start = f"{chunk.year}-01-01 00:00:00" if chunk.year else None
     # Through the last microsecond (Spark timestamp precision): BETWEEN is
     # inclusive, and a row at 23:59:59.5 belongs to this year.
@@ -138,7 +132,7 @@ def export_chunk(
     )
     name = csv_sink.chunk_file_name(
         str(chunk.site_id),
-        chunk.pairs[0][0] if len(chunk.pairs) == 1 else None,
+        "{}-{}".format(*chunk.pairs[0]) if len(chunk.pairs) == 1 else None,
         str(chunk.source_id),
         str(chunk.qc_id),
         chunk.year,

@@ -99,8 +99,6 @@ def asof_join_backward(
     left: DataFrame,
     right: DataFrame,
     keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     payload_cols: list[str] | None = None,
     tolerance_seconds: float | None = None,
     tiebreak: str | None = None,
@@ -121,7 +119,7 @@ def asof_join_backward(
     # semantics; among equal-ts right rows the tiebreak (nulls first, so
     # left rows are unaffected) fixes which one the carry sees last
     both, payload_cols = _union_tagged(
-        left, right, keys, left_ts, right_ts, payload_cols, tiebreak, left_side=1, right_side=0
+        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=1, right_side=0
     )
     order = ["__ts", "__side"] + ([F.col("__tb").asc_nulls_first()] if tiebreak is not None else [])
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
@@ -130,7 +128,7 @@ def asof_join_backward(
     out = carried.filter(F.col("__side") == 1)
     within = F.lit(True)
     if tolerance_seconds is not None:
-        within = (F.unix_micros(F.col(left_ts)) - F.unix_micros(F.col("__carry.__rts"))) <= int(
+        within = (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("__carry.__rts"))) <= int(
             tolerance_seconds * 1_000_000
         )
     result = out.select(
@@ -145,8 +143,6 @@ def asof_join_forward(
     left: DataFrame,
     right: DataFrame,
     keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     payload_cols: list[str] | None = None,
     tolerance_seconds: float | None = None,
     tiebreak: str | None = None,
@@ -168,7 +164,7 @@ def asof_join_forward(
     # winner first (left rows sit earlier by __side, so their null __tb
     # never reorders them relative to right rows)
     both, payload_cols = _union_tagged(
-        left, right, keys, left_ts, right_ts, payload_cols, tiebreak, left_side=0, right_side=1
+        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=0, right_side=1
     )
     order = ["__ts", "__side"] + ([F.col("__tb").desc_nulls_last()] if tiebreak is not None else [])
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(0, W.unboundedFollowing)
@@ -177,7 +173,7 @@ def asof_join_forward(
     out = carried.filter(F.col("__side") == 0)
     within = F.lit(True)
     if tolerance_seconds is not None:
-        within = (F.unix_micros(F.col("__carry.__rts")) - F.unix_micros(F.col(left_ts))) <= int(
+        within = (F.unix_micros(F.col("__carry.__rts")) - F.unix_micros(F.col("ts"))) <= int(
             tolerance_seconds * 1_000_000
         )
     return out.select(
@@ -191,8 +187,6 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     payload_cols: list[str] | None = None,
     tolerance_seconds: float | None = None,
     tiebreak: str | None = None,
@@ -217,7 +211,7 @@ def asof_join_nearest(
     the carried payload columns.
     """
     both, payload_cols = _union_tagged(
-        left, right, keys, left_ts, right_ts, payload_cols, tiebreak, left_side=1, right_side=0
+        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=1, right_side=0
     )
     tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
     tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []
@@ -230,7 +224,7 @@ def asof_join_nearest(
         F.first(carry, ignorenulls=True).over(wf).alias("__cf"),
     )
     out = carried.filter(F.col("__side") == 1)
-    lus = F.unix_micros(F.col(left_ts))
+    lus = F.unix_micros(F.col("ts"))
     db = lus - F.unix_micros(F.col("__cb.__rts"))
     df_ = F.unix_micros(F.col("__cf.__rts")) - lus
     tol_us = None if tolerance_seconds is None else int(tolerance_seconds * 1_000_000)
@@ -255,8 +249,6 @@ def asof_join_interp(
     right: DataFrame,
     keys: list[str],
     value_col: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """For each left row: the right-side ``value_col`` LINEARLY
@@ -282,7 +274,7 @@ def asof_join_interp(
     exactly like the directional variants.
     """
     both, payload_cols = _union_tagged(
-        left, right, keys, left_ts, right_ts, [value_col], tiebreak, left_side=1, right_side=0
+        left, right, keys, "ts", "ts", [value_col], tiebreak, left_side=1, right_side=0
     )
     tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
     tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []
@@ -299,7 +291,7 @@ def asof_join_interp(
     tf_ = F.col("__cf.__rts")
     vb = F.col(f"__cb.__p_{value_col}")
     vf = F.col(f"__cf.__p_{value_col}")
-    lus = F.unix_micros(F.col(left_ts))
+    lus = F.unix_micros(F.col("ts"))
     frac = (lus - F.unix_micros(tb_)).cast("double") / (
         F.unix_micros(tf_) - F.unix_micros(tb_)
     ).cast("double")
@@ -329,7 +321,6 @@ def range_join_count(
     left_ts: str,
     right_ts: str,
     band_seconds: int,
-    count_alias: str = "n_in_band",
     id_col: str | None = None,
 ) -> DataFrame:
     """Count right rows within ±band of each left row (same keys), via
@@ -374,7 +365,7 @@ def range_join_count(
     group_cols = [lb["__rid"]] + [lb[c] for c in left.columns]
     return (
         joined.groupBy(*group_cols)
-        .agg(F.sum(in_band).alias(count_alias))
+        .agg(F.sum(in_band).alias("n_in_band"))
         .drop("__rid")
-        .fillna({count_alias: 0})
+        .fillna({"n_in_band": 0})
     )

@@ -34,14 +34,14 @@ from h2outility_spark.operators.text import WS_CLASS_EXPR, fingerprint, normaliz
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Group by content fingerprint; one representative (min id) per group
     plus the group size. ``n_dups > 1`` rows are duplicate clusters."""
-    fp = fingerprint(F.col(text_col)).alias("fp")
+    fp = fingerprint(F.col("text")).alias("fp")
     return (
-        docs.select(F.col(id_col), fp)
+        docs.select(F.col("doc_id"), fp)
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
     )
 
 
@@ -50,8 +50,8 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
 # ---------------------------------------------------------------------------
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Exploded (id, shingle) pairs; documents with < n tokens drop out.
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """Exploded (id, shingle) pairs; documents with < 3 tokens drop out.
 
     Formulated as posexplode(tokens) + lead() windows rather than a
     slice-per-position lambda: the lambda form re-evaluates the tokenizer
@@ -64,37 +64,35 @@ def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 
     from h2outility_spark.operators.text import tokens
 
-    toks = docs.select(F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("i", "w")).filter(
+    toks = docs.select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w")).filter(
         F.length("w") > 0
     )
-    w = W.partitionBy(id_col).orderBy("i")
-    parts = [F.col("w")] + [F.lead("w", k).over(w) for k in range(1, n)]
+    w = W.partitionBy("doc_id").orderBy("i")
+    parts = [F.col("w")] + [F.lead("w", k).over(w) for k in range(1, 3)]
     return (
-        toks.select(F.col(id_col), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
-        .filter(F.col(f"__w{n - 1}").isNotNull())
-        .select(F.col(id_col), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(n)]).alias("shingle"))
+        toks.select(F.col("doc_id"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
+        .filter(F.col("__w2").isNotNull())
+        .select(F.col("doc_id"), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(3)]).alias("shingle"))
     )
 
 
-def minhash_hash_sql(i: int, shingle_sql: str = "shingle") -> str:
+def minhash_hash_sql(i: int) -> str:
     """Portable SQL for the i-th minhash hash of a shingle: an 8-hex-char
     slice of md5(shingle || '#' || seed), where one md5 digest (32 hex
     chars) serves FOUR hash functions — 4x fewer md5 evaluations than one
     digest per hash, the dominant cost of signature computation."""
     seed, slot = divmod(i, 4)
     suffix = "" if seed == 0 else f" || '#{seed}'"
-    return f"substr(md5({shingle_sql}{suffix}), {8 * slot + 1}, 8)"
+    return f"substr(md5(shingle{suffix}), {8 * slot + 1}, 8)"
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 8, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 8) -> DataFrame:
     """One row per doc: mh0..mh{k-1} columns, each the min over shingles of
     an md5-derived 32-bit hex hash (4 hashes per digest, seed-suffixed
     digests beyond the first four)."""
-    sh = doc_shingles(docs, id_col, text_col, n)
+    sh = doc_shingles(docs)
     aggs = [F.min(F.expr(minhash_hash_sql(i))).alias(f"mh{i}") for i in range(num_hashes)]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def _banded(signatures: DataFrame, bands: list[list[int]], id_col: str) -> DataFrame:
@@ -126,7 +124,6 @@ def lsh_candidate_pairs_between(
     sigs_new: DataFrame,
     sigs_old: DataFrame,
     bands: list[list[int]],
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Incremental-ingest candidate pairs: band the NEW batch's signatures
     and probe the EXISTING corpus's banded index — (id_a = new, id_b =
@@ -135,15 +132,14 @@ def lsh_candidate_pairs_between(
     so a daily batch costs O(batch) signing + one hash join against the
     index, never a corpus re-scan; here both sides are banded from their
     signatures, which is the same plan shape."""
-    bn = _banded(sigs_new, bands, id_col).withColumnRenamed(id_col, "id_a")
-    bo = _banded(sigs_old, bands, id_col).withColumnRenamed(id_col, "id_b")
+    bn = _banded(sigs_new, bands, "doc_id").withColumnRenamed("doc_id", "id_a")
+    bo = _banded(sigs_old, bands, "doc_id").withColumnRenamed("doc_id", "id_b")
     return bn.join(bo, ["band", "band_key"]).select("id_a", "id_b").distinct()
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: list[list[int]],
-    id_col: str = "doc_id",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Self-join signatures on per-band keys → distinct candidate (a, b)
@@ -153,10 +149,10 @@ def lsh_candidate_pairs(
     (one hot band key with k members turns the self-join cartesian within
     that bucket): buckets wider than the cap contribute NO pairs. None
     (default) disables the width scan entirely — no extra shuffle."""
-    banded = _banded(signatures, bands, id_col)
+    banded = _banded(signatures, bands, "doc_id")
     if max_bucket is not None:
-        banded = _without_giant_buckets(banded, id_col, max_bucket)
-    return _pairs_from_banded(banded, id_col)
+        banded = _without_giant_buckets(banded, "doc_id", max_bucket)
+    return _pairs_from_banded(banded, "doc_id")
 
 
 def _without_giant_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
@@ -173,19 +169,17 @@ def _without_giant_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> D
     return banded.join(F.broadcast(giants), ["band", "band_key"], "left_anti")
 
 
-def jaccard_for_pairs(
-    pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def jaccard_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for the given (id_a, id_b) pairs.
 
     |A∩B| via a join of the two docs' distinct shingle sets; |A∪B| =
     |A| + |B| − |A∩B|. Only candidate pairs are touched — the expensive
     exact check never runs O(n²) at scale.
     """
-    sh = doc_shingles(docs, id_col, text_col, n).distinct()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.withColumnRenamed(id_col, "id_a")
-    b = sh.withColumnRenamed(id_col, "id_b")
+    sh = doc_shingles(docs).distinct()
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = sh.withColumnRenamed("doc_id", "id_a")
+    b = sh.withColumnRenamed("doc_id", "id_b")
     inter = (
         pairs.join(a, "id_a")
         .join(b, ["id_b", "shingle"])
@@ -193,8 +187,8 @@ def jaccard_for_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -205,9 +199,7 @@ def jaccard_for_pairs(
     )
 
 
-def containment_for_pairs(
-    pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def containment_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Exact DIRECTED n-gram containment for the given (id_a, id_b) pairs:
     C(a→b) = |A∩B| / |A| and C(b→a) = |A∩B| / |B|.
 
@@ -219,10 +211,10 @@ def containment_for_pairs(
     cost shape as :func:`jaccard_for_pairs` (the exact check never runs
     O(n²); candidates come from the banded signature join).
     """
-    sh = doc_shingles(docs, id_col, text_col, n).distinct()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.withColumnRenamed(id_col, "id_a")
-    b = sh.withColumnRenamed(id_col, "id_b")
+    sh = doc_shingles(docs).distinct()
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = sh.withColumnRenamed("doc_id", "id_a")
+    b = sh.withColumnRenamed("doc_id", "id_b")
     inter = (
         pairs.join(a, "id_a")
         .join(b, ["id_b", "shingle"])
@@ -230,8 +222,8 @@ def containment_for_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -246,12 +238,7 @@ def containment_for_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Resolve verified near-dup PAIRS into CLUSTERS: (node, cluster_id)
     where cluster_id = min doc id reachable through any chain of pairs —
     the last stage of a real dedup pipeline (A~B and B~C must collapse to
@@ -270,14 +257,15 @@ def connected_components(
     in MapReduce and Beyond" (SOCC'14), simplified to min-label form.
 
     Convergence is detected by counting changed labels (a count on a
-    |nodes|-sized frame per round — the only driver-visible value).
+    |nodes|-sized frame per round — the only driver-visible value), with
+    at most 25 rounds.
     """
-    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionByName(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     edges = edges.localCheckpoint()
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn("lab", F.col("node"))
-    for _ in range(max_iter):
+    for _ in range(25):
         nbr = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), F.col("lab")
         )
@@ -303,18 +291,14 @@ def connected_components(
     return labels.select(F.col("node"), F.col("lab").alias("cluster_id"))
 
 
-def canonical_docs(
-    docs: DataFrame,
-    clusters: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def canonical_docs(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Keep one document per near-dup cluster (the min-id member) plus all
     unclustered documents: a broadcastable anti-join against the (tiny
     relative to the corpus) set of non-canonical cluster members."""
     losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return docs.join(losers, id_col, "left_anti")
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -322,13 +306,7 @@ def canonical_docs(
 # ---------------------------------------------------------------------------
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 3,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints: hash every word k-gram, slide a
     w-wide window over the hash sequence, keep the minimum hash of each
     window — the guaranteed-coverage selection of the winnowing paper
@@ -344,9 +322,9 @@ def winnow_fingerprints(
     tokens contribute nothing; shorter than w+k-1 tokens get one
     fingerprint (the global min), the standard short-document degeneration.
     """
-    d = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col),
-        F.expr(f"split(trim(regexp_replace({text_col}, '{WS_CLASS_EXPR}+', ' ')), ' ')").alias("__toks"),
+    d = docs.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id"),
+        F.expr(f"split(trim(regexp_replace(text, '{WS_CLASS_EXPR}+', ' ')), ' ')").alias("__toks"),
     )
     # guard size < k explicitly: sequence(1, stop) flips to descending when
     # stop < start, which would fabricate bogus window starts
@@ -355,20 +333,19 @@ def winnow_fingerprints(
         f"i -> substr(md5(array_join(slice(__toks, i, {k}), ' ')), 1, 8))"
     )
     d = d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(F.size("__toks") >= k, kgram_hashes).otherwise(F.expr("array()")).alias("__h"),
     ).filter(F.size("__h") > 0)
     wins = F.expr(
         f"array_distinct(transform(sequence(1, greatest(size(__h) - {w - 1}, 1)), "
         f"i -> array_min(slice(__h, i, {w}))))"
     )
-    return d.select(F.col(id_col), F.explode(wins).alias("fp"))
+    return d.select(F.col("doc_id"), F.explode(wins).alias("fp"))
 
 
 def winnow_neardup_pairs(
     fps: DataFrame,
     min_shared: int = 2,
-    id_col: str = "doc_id",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs from shared winnowing fingerprints: join
@@ -386,8 +363,8 @@ def winnow_neardup_pairs(
             fps.groupBy("fp").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > max_bucket).select("fp")
         )
         fps = fps.join(F.broadcast(giants), "fp", "left_anti")
-    a = fps.select(F.col(id_col).alias("id_a"), "fp")
-    b = fps.select(F.col(id_col).alias("id_b"), "fp")
+    a = fps.select(F.col("doc_id").alias("id_a"), "fp")
+    b = fps.select(F.col("doc_id").alias("id_b"), "fp")
     return (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -419,7 +396,7 @@ def simhash_bit_vote_sql(token_hash_sql: str, bit_index: int) -> str:
     return f"(2 * {_bit_of_hex_digit(digit, bit_index % 4)} - 1)"
 
 
-def simhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc as a 16-hex-char string.
 
     Tokens vote ±1 on each bit of their md5-derived 64-bit hash; the
@@ -428,28 +405,22 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     shuffle keyed by doc id.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(F.split(normalize_ws(F.lower(F.col(text_col))), " ")).alias("tok")
+        F.col("doc_id"), F.explode(F.split(normalize_ws(F.lower(F.col("text"))), " ")).alias("tok")
     ).filter(F.length("tok") > 0)
-    hashed = toks.select(F.col(id_col), F.expr("substr(md5(encode(tok, 'UTF-8')), 1, 16)").alias("th"))
+    hashed = toks.select(F.col("doc_id"), F.expr("substr(md5(encode(tok, 'UTF-8')), 1, 16)").alias("th"))
     votes = [F.expr(simhash_bit_vote_sql("th", b)).alias(f"v{b}") for b in range(64)]
-    voted = hashed.select(F.col(id_col), *votes)
-    sums = voted.groupBy(id_col).agg(*[F.sum(f"v{b}").alias(f"s{b}") for b in range(64)])
+    voted = hashed.select(F.col("doc_id"), *votes)
+    sums = voted.groupBy("doc_id").agg(*[F.sum(f"v{b}").alias(f"s{b}") for b in range(64)])
     # assemble hex: each output digit from 4 bit-majorities
     digit_exprs = []
     for d in range(16):
         bits = [f"(CASE WHEN s{4 * d + i} > 0 THEN {2 ** (3 - i)} ELSE 0 END)" for i in range(4)]
         digit_exprs.append(f"substr('{_HEX}', ({' + '.join(bits)}) + 1, 1)")
     sig = F.expr("concat(" + ", ".join(digit_exprs) + ")").alias("simhash")
-    return sums.select(F.col(id_col), sig)
+    return sums.select(F.col("doc_id"), sig)
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = None,
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by SimHash: banded blocking + exact Hamming
     verify — the third dedup family (vs. shingle-set MinHash and
     embedding-cosine RP-LSH), cheapest per doc of the three.
@@ -460,46 +431,32 @@ def simhash_neardup_pairs(
     blocked join provably loses no qualifying pair (the brute-force oracle
     equality in the registry demonstrates it). Shuffle is keyed by
     (band, value): ~4n rows; corpus-wide boilerplate concentrates in hot
-    buckets, the same hazard (and quarantine treatment) as the MinHash
-    path.
+    buckets, the same hazard as the MinHash path (run exact dedup first).
 
     Hamming itself is two 32-bit ``bit_count(a ^ b)`` terms (the hex
     signature parsed in halves — a full 64-bit parse would overflow signed
     BIGINT for high signatures).
     """
-    sigs = simhash_signatures(docs, id_col, text_col)
+    sigs = simhash_signatures(docs)
     banded = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "simhash",
         F.posexplode(
             F.expr("transform(sequence(0, 3), j -> substr(simhash, j*4+1, 4))")
         ).alias("band", "bval"),
     )
-    if max_bucket is not None:
-        # corpus-wide boilerplate makes one (band, value) bucket k-wide and
-        # its candidate pairs k² — quarantine such buckets, same treatment
-        # as the MinHash and RP-LSH paths (exactness then holds only for
-        # pairs outside quarantined buckets; boilerplate needs the exact-
-        # dedup pass first anyway)
-        giants = (
-            banded.groupBy("band", "bval")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "bval")
-        )
-        banded = banded.join(F.broadcast(giants), ["band", "bval"], "left_anti")
     left, right = banded.alias("l"), banded.alias("r")
     cand = (
         left.join(
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bval") == F.col("r.bval"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
+            F.col("l.doc_id").alias("id_a"),
             F.col("l.simhash").alias("sig_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("r.doc_id").alias("id_b"),
             F.col("r.simhash").alias("sig_b"),
         )
         .distinct()
@@ -527,15 +484,12 @@ def incremental_neardup_filter(
     batch: DataFrame,
     existing: DataFrame,
     num_hashes: int = 8,
-    threshold: float = 0.2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cache_registry: list | None = None,
 ) -> DataFrame:
     """The daily-ingest shape of dedup: keep only batch docs that are
     neither EXACT duplicates (normalized fingerprint seen in the corpus)
     nor NEAR duplicates (minhash band collision against a corpus doc,
-    verified by exact n-gram Jaccard >= threshold) of the existing corpus.
+    verified by exact n-gram Jaccard >= 0.2) of the existing corpus.
     Batch and existing id sets must be disjoint. Batch-internal duplicates
     are out of scope here (run the batch through the corpus-wide pipeline
     for that).
@@ -557,32 +511,32 @@ def incremental_neardup_filter(
     """
     from h2outility_spark.operators.text import fingerprint
 
-    bfp = batch.select(F.col(id_col), F.col(text_col), fingerprint(F.col(text_col)).alias("fp"))
-    efp = existing.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
+    bfp = batch.select(F.col("doc_id"), F.col("text"), fingerprint(F.col("text")).alias("fp"))
+    efp = existing.select(fingerprint(F.col("text")).alias("fp")).distinct()
     survivors = bfp.join(efp, "fp", "left_anti").cache()
     if cache_registry is not None:
         cache_registry.append(survivors)
 
     bands = [[i] for i in range(num_hashes)]
-    bs = minhash_signatures(survivors, num_hashes, id_col, text_col)
-    es = minhash_signatures(existing, num_hashes, id_col, text_col)
-    bb = _banded(bs, bands, id_col).alias("b")
-    eb = _banded(es, bands, id_col).alias("e")
+    bs = minhash_signatures(survivors, num_hashes)
+    es = minhash_signatures(existing, num_hashes)
+    bb = _banded(bs, bands, "doc_id").alias("b")
+    eb = _banded(es, bands, "doc_id").alias("e")
     cand = (
         eb.join(bb, ["band", "band_key"])
-        .select(F.col(f"e.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("e.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    docs_all = existing.select(F.col(id_col), F.col(text_col)).unionByName(
-        survivors.select(F.col(id_col), F.col(text_col))
+    docs_all = existing.select(F.col("doc_id"), F.col("text")).unionByName(
+        survivors.select(F.col("doc_id"), F.col("text"))
     )
-    jac = jaccard_for_pairs(cand, docs_all, id_col, text_col)
+    jac = jaccard_for_pairs(cand, docs_all)
     drops = (
-        jac.filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        jac.filter(F.col("jaccard") >= 0.2)
+        .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
-    return survivors.join(drops, id_col, "left_anti").select(id_col, "fp")
+    return survivors.join(drops, "doc_id", "left_anti").select("doc_id", "fp")
 
 
 # ---------------------------------------------------------------------------
@@ -591,12 +545,7 @@ def incremental_neardup_filter(
 # ---------------------------------------------------------------------------
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    window: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
     """Maximal per-document spans of text whose every ``window``-token
     substring also occurs elsewhere in the corpus (another doc, or another
     position of the same doc) — the exact-substring-duplication signal
@@ -618,38 +567,38 @@ def duplicated_spans(
     from h2outility_spark.operators.text import tokens
 
     toks = (
-        docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("i", "w"))
+        docs.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
     )
-    win = W.partitionBy(id_col).orderBy("i")
+    win = W.partitionBy("doc_id").orderBy("i")
     parts = [F.col("w")] + [F.lead("w", k).over(win) for k in range(1, window)]
     wins = (
-        toks.select(F.col(id_col), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
+        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
         .filter(F.col(f"__w{window - 1}").isNotNull())
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("i"),
             F.md5(F.encode(F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(window)]), "UTF-8")).alias("h"),
         )
     )
     dup_hashes = wins.groupBy("h").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") >= 2).select("h")
-    dup_starts = wins.join(dup_hashes, "h").select(id_col, "i")
+    dup_starts = wins.join(dup_hashes, "h").select("doc_id", "i")
     covered = (
         dup_starts.select(
-            F.col(id_col), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("pos")
+            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("pos")
         )
         .distinct()
     )
     # gaps-and-islands: consecutive covered positions merge into one span
-    wisl = W.partitionBy(id_col).orderBy("pos")
+    wisl = W.partitionBy("doc_id").orderBy("pos")
     islands = covered.withColumn(
         "grp", F.col("pos") - F.row_number().over(wisl)
     )
     return (
-        islands.groupBy(id_col, "grp")
+        islands.groupBy("doc_id", "grp")
         .agg(F.min("pos").alias("span_start"), F.max("pos").alias("span_end_incl"))
         .select(
-            id_col,
+            "doc_id",
             F.col("span_start").cast("long"),
             (F.col("span_end_incl") + 1).cast("long").alias("span_end"),
             (F.col("span_end_incl") + 1 - F.col("span_start")).cast("long").alias("span_tokens"),
@@ -657,12 +606,7 @@ def duplicated_spans(
     )
 
 
-def remove_duplicated_spans(
-    docs: DataFrame,
-    window: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
     """The removal stage on top of duplicated_spans' detection: keep the
     FIRST corpus occurrence (by doc id, then position) of every duplicated
     ``window``-token substring and delete the positions covered by every
@@ -678,32 +622,32 @@ def remove_duplicated_spans(
     from h2outility_spark.operators.text import tokens
 
     toks = (
-        docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("i", "w"))
+        docs.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
     )
-    win = W.partitionBy(id_col).orderBy("i")
+    win = W.partitionBy("doc_id").orderBy("i")
     parts = [F.col("w")] + [F.lead("w", k).over(win) for k in range(1, window)]
     wins = (
-        toks.select(F.col(id_col), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
+        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
         .filter(F.col(f"__w{window - 1}").isNotNull())
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("i"),
             F.md5(F.encode(F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(window)]), "UTF-8")).alias("h"),
         )
     )
-    wrank = W.partitionBy("h").orderBy(id_col, "i")
+    wrank = W.partitionBy("h").orderBy("doc_id", "i")
     later = wins.withColumn("rn", F.row_number().over(wrank)).filter(F.col("rn") > 1)
     covered = (
         later.select(
-            F.col(id_col), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("i")
+            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("i")
         )
         .distinct()
     )
-    kept = toks.join(covered, [id_col, "i"], "left_anti")
-    totals = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n_tok"))
+    kept = toks.join(covered, ["doc_id", "i"], "left_anti")
+    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n_tok"))
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(F.array_sort(F.collect_list(F.struct("i", "w"))), lambda s: s["w"]),
@@ -711,9 +655,9 @@ def remove_duplicated_spans(
             ).alias("clean_text"),
             F.count(F.lit(1)).alias("__n_kept"),
         )
-        .join(totals, id_col)
+        .join(totals, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             "clean_text",
             (F.col("__n_tok") - F.col("__n_kept")).cast("long").alias("n_removed"),
         )

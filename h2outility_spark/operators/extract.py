@@ -20,19 +20,15 @@ def build_predicate(
     site_id=None,
     qc_id=None,
     source_id=None,
-    variable_ids: Sequence | None = None,
     variable_codes: Sequence | None = None,
     method_ids: Sequence | None = None,
     start: datetime | str | None = None,
     end: datetime | str | None = None,
-    after: datetime | str | None = None,
-    ts_col: str = "LocalDateTime",
 ) -> Column:
     """Conjunctive predicate with IN-lists and date bounds (P2–P5).
 
     Mirrors ``series_service.py:400-430``: equality on site/qc/source,
-    IN-lists for variables/methods, BETWEEN for a year window, and the
-    open-ended ``> after`` incremental form (I2 watermark).
+    IN-lists for variables/methods, and BETWEEN for a year window.
     """
     pred = F.lit(True)
     if site_id is not None:
@@ -41,18 +37,14 @@ def build_predicate(
         pred = pred & (F.col("QualityControlLevelID") == F.lit(qc_id))
     if source_id is not None:
         pred = pred & (F.col("SourceID") == F.lit(source_id))
-    if variable_ids:
-        pred = pred & F.col("VariableID").isin(list(variable_ids))
     if variable_codes:
         pred = pred & F.col("VariableCode").isin(list(variable_codes))
     if method_ids:
         pred = pred & F.col("MethodID").isin(list(method_ids))
     if start is not None and end is not None:
-        pred = pred & F.col(ts_col).between(F.lit(start), F.lit(end))
+        pred = pred & F.col("LocalDateTime").between(F.lit(start), F.lit(end))
     elif start is not None:
-        pred = pred & (F.col(ts_col) >= F.lit(start))
+        pred = pred & (F.col("LocalDateTime") >= F.lit(start))
     elif end is not None:
-        pred = pred & (F.col(ts_col) <= F.lit(end))
-    if after is not None:
-        pred = pred & (F.col(ts_col) > F.lit(after))
+        pred = pred & (F.col("LocalDateTime") <= F.lit(end))
     return pred

@@ -30,10 +30,6 @@ def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
     n_iter: int = 3,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    node_col: str = "node",
-    label_col: str = "label",
     weight_col: str | None = None,
 ) -> DataFrame:
     """Synchronous majority-label propagation over an undirected graph.
@@ -64,14 +60,14 @@ def label_propagation(
     """
     wcols = [F.col(weight_col).alias("w")] if weight_col else []
     sym = (
-        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"), *wcols)
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"), *wcols)
         .unionByName(
-            edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"), *wcols)
+            edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"), *wcols)
         )
         .distinct()
     )
     seed = seeds.select(
-        F.col(node_col).alias("node"), F.col(label_col).alias("seed_label")
+        F.col("node"), F.col("label").alias("seed_label")
     ).distinct()
     nodes = (
         sym.select(F.col("src").alias("node"))
@@ -107,4 +103,4 @@ def label_propagation(
                 F.coalesce("seed_label", "best_label", "label").alias("label"),
             )
         )
-    return cur.select(F.col("node").alias(node_col), F.col("label").alias(label_col))
+    return cur.select("node", "label")

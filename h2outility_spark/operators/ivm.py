@@ -62,7 +62,6 @@ def maintain_grouped_agg(
     value_col: str,
     count_alias: str = "n",
     sum_alias: str = "total",
-    change_type_col: str = "_change_type",
 ) -> DataFrame:
     """Advance a (count, sum) grouped aggregate using a CDF frame
     (``storage_tx.TxTable.changes`` shape: destination schema +
@@ -73,7 +72,7 @@ def maintain_grouped_agg(
     key-partitioned storage, so the join touches only changed keys'
     partitions. Keys whose maintained count reaches zero leave the view.
     """
-    sign = F.when(F.col(change_type_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
+    sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
     delta = changes.groupBy(*keys).agg(
         F.sum(sign).alias("__dn"),
         F.sum(sign * F.col(value_col)).alias("__dsum"),
@@ -132,7 +131,6 @@ def maintain_grouped_minmax(
     keys: list[str],
     value_col: str,
     k: int = 8,
-    change_type_col: str = "_change_type",
     max_broadcast_keys: int = 100_000,
     n_changed_keys: int | None = None,
 ) -> DataFrame:
@@ -174,14 +172,14 @@ def maintain_grouped_minmax(
     loosens to match the smaller kept set. Returns the
     :func:`minmax_state` shape.
     """
-    sign = F.when(F.col(change_type_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
+    sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
     delta_ins = (
-        changes.filter(F.col(change_type_col) == "insert")
+        changes.filter(F.col("_change_type") == "insert")
         .groupBy(*keys, F.col(value_col).alias("__v"))
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     delta_del = (
-        changes.filter(F.col(change_type_col) != "insert")
+        changes.filter(F.col("_change_type") != "insert")
         .groupBy(*keys, F.col(value_col).alias("__v"))
         .agg((-F.count(F.lit(1))).alias("__c"))
     )

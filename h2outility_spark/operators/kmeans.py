@@ -51,23 +51,17 @@ def _assign(vectors: DataFrame, centroids: list[tuple[int, list[float]]], id_col
     )
 
 
-def kmeans(
-    embeddings: DataFrame,
-    k: int = 8,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans(embeddings: DataFrame, k: int = 8, max_iter: int = 5) -> DataFrame:
     """Returns (cluster, pos, centroid_val) rows for the final model."""
     seeds = (
-        embeddings.orderBy(id_col)
+        embeddings.orderBy("vec_id")
         .limit(k)
-        .select(as_double(F.col(vec_col)).alias("v"))
+        .select(as_double(F.col("embedding")).alias("v"))
         .collect()
     )
     centroids = [(i, list(r["v"])) for i, r in enumerate(seeds)]
     for _ in range(max_iter):
-        assigned = _assign(embeddings, centroids, id_col, vec_col)
+        assigned = _assign(embeddings, centroids, "vec_id", "embedding")
         new_rows = (
             assigned.select("cluster", F.posexplode("__v").alias("pos", "x"))
             .groupBy("cluster", "pos")
@@ -83,14 +77,7 @@ def kmeans(
     return embeddings.sparkSession.createDataFrame(out, "cluster int, pos int, centroid_val double")
 
 
-def kmeans_grouped(
-    subspaces: DataFrame,
-    k: int = 8,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    group_col: str = "s",
-    vec_col: str = "vs",
-) -> DataFrame:
+def kmeans_grouped(subspaces: DataFrame, k: int = 8, max_iter: int = 5) -> DataFrame:
     """Independent Lloyd k-means per GROUP, all groups in one distributed
     pipeline per iteration — the m-subspace PQ trainer without m separate
     driver loops.
@@ -113,51 +100,51 @@ def kmeans_grouped(
     from pyspark.sql import Window as W
 
     spark = subspaces.sparkSession
-    v = as_double(F.col(vec_col))
+    v = as_double(F.col("vs"))
     seed_rows = (
-        subspaces.select(F.col(group_col), F.col(id_col), v.alias("__v"))
-        .withColumn("__rk", F.row_number().over(W.partitionBy(group_col).orderBy(id_col)))
+        subspaces.select(F.col("s"), F.col("vec_id"), v.alias("__v"))
+        .withColumn("__rk", F.row_number().over(W.partitionBy("s").orderBy("vec_id")))
         .filter(F.col("__rk") <= k)
-        .select(group_col, (F.col("__rk") - 1).alias("cluster"), "__v")
+        .select("s", (F.col("__rk") - 1).alias("cluster"), "__v")
         .collect()
     )
-    cents = {(r[group_col], r["cluster"]): list(r["__v"]) for r in seed_rows}
+    cents = {(r["s"], r["cluster"]): list(r["__v"]) for r in seed_rows}
     for _ in range(max_iter):
         rows = [(g, c, cv, sum(x * x for x in cv)) for (g, c), cv in cents.items()]
         cf = spark.createDataFrame(
-            rows, f"{group_col} int, cluster int, cvec array<double>, cc double"
+            rows, "s int, cluster int, cvec array<double>, cc double"
         )
         assigned = (
-            subspaces.select(F.col(group_col), F.col(id_col), v.alias("__v"))
-            .join(F.broadcast(cf), group_col)
+            subspaces.select(F.col("s"), F.col("vec_id"), v.alias("__v"))
+            .join(F.broadcast(cf), "s")
             .select(
-                id_col,
-                group_col,
+                "vec_id",
+                "s",
                 "__v",
                 "cluster",
                 (F.col("cc") - F.lit(2.0) * dot(F.col("__v"), F.col("cvec"))).alias("__d"),
             )
-            .groupBy(id_col, group_col)
+            .groupBy("vec_id", "s")
             .agg(F.min(F.struct(F.col("__d"), F.col("cluster"))).alias("__m"), F.first("__v").alias("__v"))
         )
         new_rows = (
             assigned.select(
-                F.col(group_col),
+                F.col("s"),
                 F.col("__m.cluster").alias("cluster"),
                 F.posexplode("__v").alias("pos", "x"),
             )
-            .groupBy(group_col, "cluster", "pos")
+            .groupBy("s", "cluster", "pos")
             .agg(F.avg("x").alias("cv"))
-            .groupBy(group_col, "cluster")
+            .groupBy("s", "cluster")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
-            .select(group_col, "cluster", F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
+            .select("s", "cluster", F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
             .collect()
         )
         for r in new_rows:
-            cents[(r[group_col], r["cluster"])] = list(r["cvec"])
+            cents[(r["s"], r["cluster"])] = list(r["cvec"])
     out = [
         (g, c, pos, val) for (g, c), cv in sorted(cents.items()) for pos, val in enumerate(cv)
     ]
     return spark.createDataFrame(
-        out, f"{group_col} int, cluster int, pos int, centroid_val double"
+        out, "s int, cluster int, pos int, centroid_val double"
     )

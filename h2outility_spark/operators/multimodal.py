@@ -9,7 +9,8 @@ Design:
   * Decode / feature-extract / resize / frame-sample run as Arrow-batched
     ``mapInPandas`` operators: one Python worker per partition, whole
     column batches across the Arrow boundary, never row-at-a-time.
-  * Codecs are INJECTABLE; the defaults are real pure-Python decoders for
+  * Image decode and resize take an injected codec (``decode_fn``,
+    ``resize_fn``); the defaults are real pure-Python decoders for
     the formats stdlib can handle (uncompressed 24-bit BMP, non-interlaced
     8-bit PNG, GIF first frame, baseline JPEG, 16-bit PCM WAV —
     ``h2outility_spark.codecs``, sniffed by magic bytes). Formats that
@@ -56,8 +57,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 def extract_image_features(
     assets: DataFrame,
     decode_fn: Callable[[bytes], tuple[int, int, float]] | None = None,
-    id_col: str = "asset_id",
-    data_col: str = "data",
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
@@ -86,7 +85,7 @@ def extract_image_features(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            data = pdf[data_col]
+            data = pdf["data"]
             # NULL/empty payload -> null features (schema is nullable for
             # exactly this); a missing asset must not abort the job. An
             # UNDECODABLE payload still raises: silently nulling real bytes
@@ -94,7 +93,7 @@ def extract_image_features(
             decoded = [(None, None, None) if not b else fn(b) for b in data]
             yield pd.DataFrame(
                 {
-                    "asset_id": pdf[id_col],
+                    "asset_id": pdf["asset_id"],
                     "n_bytes": [len(b) if b is not None else 0 for b in data],
                     "sha1": [hashlib.sha1(b or b"").hexdigest() for b in data],
                     "width": [d[0] for d in decoded],
@@ -103,17 +102,17 @@ def extract_image_features(
                 }
             )
 
-    return assets.select(F.col(id_col), F.col(data_col)).mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
+    return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
 
 
-def frame_sample_plan(assets: DataFrame, every_n: int = 30, id_col: str = "asset_id") -> DataFrame:
+def frame_sample_plan(assets: DataFrame, every_n: int = 30) -> DataFrame:
     """Video frame-sampling *plan*: emits (asset_id, frame_index) rows for a
     downstream decoder, derived from declared frame counts in metadata.
     Pure Catalyst (sequence + explode) — the expensive decode happens later,
     against only the sampled indices."""
     n_frames = F.coalesce(F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(0))
     return assets.select(
-        F.col(id_col),
+        F.col("asset_id"),
         F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))).alias("frame_index"),
     )
 
@@ -132,8 +131,6 @@ def resize_images(
     assets: DataFrame,
     max_side: int = 256,
     resize_fn: Callable[[bytes, int], tuple[bytes, int, int]] | None = None,
-    id_col: str = "asset_id",
-    data_col: str = "data",
 ) -> DataFrame:
     """Arrow-batched image resize (bounding-box to ``max_side``): the
     standard normalization pass before vision-model training.
@@ -165,30 +162,28 @@ def resize_images(
         for pdf in it:
             # NULL/empty payload passes through as null output row parts
             resized = [
-                (None, None, None) if not b else fn(b, side) for b in pdf[data_col]
+                (None, None, None) if not b else fn(b, side) for b in pdf["data"]
             ]
             yield pd.DataFrame(
                 {
-                    "asset_id": pdf[id_col],
+                    "asset_id": pdf["asset_id"],
                     "data": [r[0] for r in resized],
                     "width": [r[1] for r in resized],
                     "height": [r[2] for r in resized],
                 }
             )
 
-    return assets.select(F.col(id_col), F.col(data_col)).mapInPandas(batches, RESIZED_SCHEMA)
+    return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, RESIZED_SCHEMA)
 
 
-def audio_chunk_plan(
-    assets: DataFrame, chunk_ms: int = 10_000, id_col: str = "asset_id"
-) -> DataFrame:
+def audio_chunk_plan(assets: DataFrame, chunk_ms: int = 10_000) -> DataFrame:
     """Audio chunking *plan*: (asset_id, chunk_start_ms) rows covering the
     declared ``duration_ms`` metadata in ``chunk_ms`` strides — like
     ``frame_sample_plan``, pure Catalyst (sequence + explode); the decoder
     later touches only the planned chunks."""
     dur = F.coalesce(F.element_at(F.col("meta"), "duration_ms").cast("long"), F.lit(0))
     return assets.select(
-        F.col(id_col),
+        F.col("asset_id"),
         F.explode(
             F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(chunk_ms))
         ).alias("chunk_start_ms"),
@@ -206,41 +201,31 @@ AUDIO_FRAMES_SCHEMA = T.StructType(
 )
 
 
-def extract_audio_frames(
-    assets: DataFrame,
-    window_ms: int = 100,
-    frames_fn: Callable[[bytes, int], list] | None = None,
-    id_col: str = "asset_id",
-    data_col: str = "data",
-) -> DataFrame:
+def extract_audio_frames(assets: DataFrame, window_ms: int = 100) -> DataFrame:
     """Windowed audio features — one output row per (asset, window) with
     RMS level and zero-crossing rate: the front-end for VAD, silence
     trimming, and speech-quality gating in audio-corpus pipelines.
-    Default codec is the stdlib 16-bit PCM WAV path
+    The codec is the stdlib 16-bit PCM WAV path
     (codecs.wav_window_features); NULL/empty payloads produce no windows
     rather than aborting the batch. The explode happens inside
     ``mapInPandas``, so the binary column never enters a shuffle — output
     is already the narrow numeric frame."""
-    if frames_fn is None:
-        from h2outility_spark.codecs import wav_window_features
+    from h2outility_spark.codecs import wav_window_features
 
-        def frames_fn(b: bytes, ms: int) -> list:  # noqa: ANN001
-            if b[:4] == b"RIFF":
-                return wav_window_features(b, ms)
-            raise NotImplementedError(
-                f"no built-in decoder for payload starting {b[:4]!r}: only PCM WAV "
-                "decodes stdlib-only; inject frames_fn for compressed audio"
-            )
-
-    fn, ms = frames_fn, window_ms
+    def fn(b: bytes, ms: int) -> list:  # noqa: ANN001
+        if b[:4] == b"RIFF":
+            return wav_window_features(b, ms)
+        raise NotImplementedError(
+            f"no built-in decoder for payload starting {b[:4]!r}: only PCM WAV decodes stdlib-only"
+        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, widx, starts, rms, zcr = [], [], [], [], []
-            for aid, b in zip(pdf[id_col], pdf[data_col]):
+            for aid, b in zip(pdf["asset_id"], pdf["data"]):
                 if not b:
                     continue
-                for w, s, r, z in fn(b, ms):
+                for w, s, r, z in fn(b, window_ms):
                     ids.append(aid)
                     widx.append(w)
                     starts.append(s)
@@ -250,14 +235,13 @@ def extract_audio_frames(
                 {"asset_id": ids, "window_idx": widx, "start_ms": starts, "rms": rms, "zcr": zcr}
             )
 
-    return assets.select(F.col(id_col), F.col(data_col)).mapInPandas(batches, AUDIO_FRAMES_SCHEMA)
+    return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, AUDIO_FRAMES_SCHEMA)
 
 
 def audio_activity_segments(
     assets: DataFrame,
     rms_threshold: float = 0.05,
     window_ms: int = 100,
-    frames_fn: Callable[[bytes, int], list] | None = None,
 ) -> DataFrame:
     """Energy-based voice-activity segmentation: windows above
     ``rms_threshold`` are merged into maximal runs (gaps-and-islands on
@@ -271,7 +255,7 @@ def audio_activity_segments(
     asset, no Python past the codec."""
     from pyspark.sql import Window as W
 
-    frames = extract_audio_frames(assets, window_ms=window_ms, frames_fn=frames_fn)
+    frames = extract_audio_frames(assets, window_ms=window_ms)
     active = frames.filter(F.col("rms") >= rms_threshold)
     w = W.partitionBy("asset_id").orderBy("window_idx")
     runs = active.withColumn(
@@ -289,23 +273,15 @@ def audio_activity_segments(
     )
 
 
-def image_dhash(
-    assets: DataFrame,
-    hash_fn: Callable[[bytes], int] | None = None,
-    id_col: str = "asset_id",
-    data_col: str = "data",
-) -> DataFrame:
+def image_dhash(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:
     """Perceptual fingerprint per image: (asset_id, dhash) with the 64-bit
     difference hash (codecs.dhash64; BMP/PNG/GIF/JPEG built-in). NULL payloads
     yield NULL hashes. The binary column stays inside mapInPandas; only
     the 8-byte hash continues into the pipeline. The id column keeps its
     INPUT type (string asset keys are as common as numeric ones — think
     URL or content-hash ids), only ``dhash`` is pinned to long."""
-    if hash_fn is None:
-        from h2outility_spark.codecs import dhash64
+    from h2outility_spark.codecs import dhash64
 
-        hash_fn = dhash64
-    fn = hash_fn
     id_ddl = assets.schema[id_col].dataType.simpleString()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -315,13 +291,13 @@ def image_dhash(
                     id_col: pdf[id_col],
                     # signed-64 view keeps the LongType column exact
                     "dhash": [
-                        None if not b else (fn(b) ^ 0x8000000000000000) - 0x8000000000000000
-                        for b in pdf[data_col]
+                        None if not b else (dhash64(b) ^ 0x8000000000000000) - 0x8000000000000000
+                        for b in pdf["data"]
                     ],
                 }
             )
 
-    return assets.select(F.col(id_col), F.col(data_col)).mapInPandas(
+    return assets.select(F.col(id_col), F.col("data")).mapInPandas(
         batches, f"`{id_col}` {id_ddl}, dhash long"
     )
 
@@ -329,7 +305,6 @@ def image_dhash(
 def image_neardup_pairs(
     assets: DataFrame,
     max_hamming: int = 6,
-    hash_fn: Callable[[bytes], int] | None = None,
     id_col: str = "asset_id",
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual hash: band each 64-bit
@@ -341,7 +316,7 @@ def image_neardup_pairs(
     tighten it). Candidates come from a band-key self-join, never all
     pairs; the exact Hamming distance is then verified JVM-side with
     ``bit_count(xor)``."""
-    hashes = image_dhash(assets, hash_fn=hash_fn, id_col=id_col).filter(
+    hashes = image_dhash(assets, id_col=id_col).filter(
         F.col("dhash").isNotNull()
     )
     banded = hashes.select(

@@ -206,13 +206,11 @@ def resample_grid(
     interval_seconds: int,
     ts: str = "LocalDateTime",
     value: str = "DataValue",
-    fill: str = "ffill",
 ) -> DataFrame:
     """Resample each series onto a regular time grid (one slot every
     ``interval_seconds`` from the series' first to last observation),
     aggregating observations that share a slot (mean) and filling empty
-    slots (``ffill`` carries the last observed slot value forward;
-    ``none`` leaves NULL). The time-regularization step every downstream
+    slots with the last observed slot value (forward fill). The time-regularization step every downstream
     window/rollup assumes, which the reference got implicitly from
     sensors sharing a clock.
 
@@ -237,13 +235,8 @@ def resample_grid(
         *keys, F.explode(F.expr("sequence(__lo, __hi)")).alias("__slot")
     )
     joined = grid.join(obs, [*keys, "__slot"], "left")
-    if fill == "ffill":
-        w = W.partitionBy(*keys).orderBy("__slot").rowsBetween(W.unboundedPreceding, 0)
-        filled = F.last("__slot_v", ignorenulls=True).over(w)
-    elif fill == "none":
-        filled = F.col("__slot_v")
-    else:
-        raise ValueError(f"unknown fill mode {fill!r}")
+    w = W.partitionBy(*keys).orderBy("__slot").rowsBetween(W.unboundedPreceding, 0)
+    filled = F.last("__slot_v", ignorenulls=True).over(w)
     return joined.select(
         *keys,
         F.timestamp_micros(F.col("__slot") * F.lit(interval_seconds * 1_000_000)).alias(ts),

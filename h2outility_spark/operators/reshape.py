@@ -51,9 +51,6 @@ def pivot_wide(
     dv: DataFrame,
     index_cols: list[str],
     pairs: list[tuple[str, int]],
-    var_col: str = "VariableCode",
-    method_col: str = "MethodID",
-    value_col: str = "DataValue",
     agg: str = "first",
 ) -> DataFrame:
     """A1 + A3 + A4: pivot on (variable, method) with explicit values and
@@ -88,7 +85,7 @@ def pivot_wide(
     agg_cols = []
     for code, method in pairs:
         cell = F.when(
-            (F.col(var_col) == F.lit(code)) & (F.col(method_col) == F.lit(method)), F.col(value_col)
+            (F.col("VariableCode") == F.lit(code)) & (F.col("MethodID") == F.lit(method)), F.col("DataValue")
         )
         agg_cols.append(agg_fn(cell).alias(names[(code, method)]))
     return dv.groupBy(*index_cols).agg(*agg_cols)
@@ -98,9 +95,11 @@ def fill_no_data(wide: DataFrame, no_data_by_column: dict[str, float]) -> DataFr
     """Per-column sentinel fill (A2; DatasetUtilities.py:171-181).
 
     Applied only at the sink boundary — internal frames keep NULL so QC math
-    never sees -9999 (SURVEY.md §7.4 item 5).
+    never sees -9999 (SURVEY.md §7.4 item 5). Names are backtick-quoted:
+    a column named after a free-text VariableCode may contain a dot.
     """
-    return wide.fillna({c: v for c, v in no_data_by_column.items() if c in wide.columns})
+    quoted = {"`" + c.replace("`", "``") + "`": v for c, v in no_data_by_column.items() if c in wide.columns}
+    return wide.fillna(quoted)
 
 
 def sort_matrix(wide: DataFrame, index_cols: list[str]) -> DataFrame:

@@ -26,6 +26,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from h2outility_spark.functions import fround
+
 
 def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
@@ -47,13 +49,7 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def brute_force_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(candidates: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k of every query against all candidates (self-match
     excluded). Queries are broadcast; ranking is a window top-k partitioned
     by query id with a deterministic tie-break on candidate id. The
@@ -62,14 +58,14 @@ def brute_force_topk(
     from pyspark.sql import Window as W
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qv"),
-        dot(as_double(F.col(vec_col)), as_double(F.col(vec_col))).alias("__nq"),
+        F.col("vec_id").alias("query_id"),
+        as_double(F.col("embedding")).alias("qv"),
+        dot(as_double(F.col("embedding")), as_double(F.col("embedding"))).alias("__nq"),
     )
     c = candidates.select(
-        F.col(id_col).alias("cand_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-        dot(as_double(F.col(vec_col)), as_double(F.col(vec_col))).alias("__nc"),
+        F.col("vec_id").alias("cand_id"),
+        as_double(F.col("embedding")).alias("cv"),
+        dot(as_double(F.col("embedding")), as_double(F.col("embedding"))).alias("__nc"),
     )
     sim = dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__nc"))
     scored = (
@@ -80,35 +76,26 @@ def brute_force_topk(
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
 
 
-def centroids_by_label(
-    embeddings: DataFrame, label_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
+def centroids_by_label(embeddings: DataFrame) -> DataFrame:
     """Element-wise mean vector per label — the IVF coarse quantizer when a
     clustering (or class label) already exists. posexplode → groupBy
     (label, pos) keeps the agg combiner-friendly at any dimensionality."""
     exploded = embeddings.select(
-        F.col(label_col), F.posexplode(as_double(F.col(vec_col))).alias("pos", "x")
+        F.col("label"), F.posexplode(as_double(F.col("embedding"))).alias("pos", "x")
     )
-    return exploded.groupBy(label_col, "pos").agg(F.avg("x").alias("centroid_val"))
+    return exploded.groupBy("label", "pos").agg(F.avg("x").alias("centroid_val"))
 
 
-def _round_half_up(col: Column, n: int) -> Column:
-    factor = float(10**n)
-    return F.floor(col * F.lit(factor) + F.lit(0.5)) / F.lit(factor)
-
-
-def pack_centroids(centroids: DataFrame, label_col: str = "label", round_dp: int | None = 6) -> DataFrame:
+def pack_centroids(centroids: DataFrame) -> DataFrame:
     """(label, pos, centroid_val) rows → (cell, cvec array<double>).
 
     Centroid components are rounded (default 6 dp) so that cell-assignment
     comparisons are reproducible across engines — partial-aggregation order
     makes raw averages differ in the last ulp.
     """
-    val = F.col("centroid_val")
-    if round_dp is not None:
-        val = _round_half_up(val, round_dp)
+    val = fround(F.col("centroid_val"), 6)
     return (
-        centroids.select(F.col(label_col).alias("cell"), "pos", val.alias("cv"))
+        centroids.select(F.col("label").alias("cell"), "pos", val.alias("cv"))
         .groupBy("cell")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
         .select("cell", F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
@@ -119,9 +106,6 @@ def ivf_search(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     n_probe: int = 1,
     spill: bool = False,
 ) -> DataFrame:
@@ -143,14 +127,14 @@ def ivf_search(
     """
     from pyspark.sql import Window as W
 
-    cents = pack_centroids(centroids_by_label(embeddings, label_col, vec_col))
+    cents = pack_centroids(centroids_by_label(embeddings))
     # Self-dots precomputed per SIDE, not per pair: cosine(a,b) =
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)) with the same doubles multiplied in
     # the same order, so scores are bit-identical while the in-cell scan
     # runs one fold per pair instead of three (the wave-1 embedding_knn
     # measurement: −62% on the pair stage).
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
     ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
     cents_n = cents.withColumn("__ncell", dot(F.col("cvec"), F.col("cvec")))
     scored_cells = q.join(F.broadcast(cents_n)).select(
@@ -167,7 +151,7 @@ def ivf_search(
         .select("query_id", "qv", "__nq", "cell")
     )
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(label_col).alias("cell"), as_double(F.col(vec_col)).alias("cv2")
+        F.col("vec_id").alias("cand_id"), F.col("label").alias("cell"), as_double(F.col("embedding")).alias("cv2")
     ).withColumn("__ncv", dot(F.col("cv2"), F.col("cv2")))
     scored = (
         cands.join(F.broadcast(best_cell), "cell")
@@ -189,9 +173,6 @@ def ivf_assign_multi(
     centroids: DataFrame,
     m: int = 2,
     ratio: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Redundant (spill) cell assignment: each vector lands in its ``m``
     nearest centroid cells. Output: (id, cell) rows, m per vector.
@@ -224,29 +205,29 @@ def ivf_assign_multi(
     from pyspark.sql import Window as W
 
     packed = (
-        centroids.groupBy(label_col)
+        centroids.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("pairs"))
-        .select(F.col(label_col).alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
+        .select(F.col("label").alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
     )
     # per-side self-dots: one fold per (vector, cell) pair instead of three;
     # same multiply order, bit-identical sims
-    v = embeddings.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).withColumn(
+    v = embeddings.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v")).withColumn(
         "__nv", dot(F.col("v"), F.col("v"))
     )
     packed = packed.withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
     scored = v.join(F.broadcast(packed)).select(
-        id_col,
+        "vec_id",
         "cell",
         (dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("__nv") * F.col("__ncv"))).alias("sim"),
     )
-    w = W.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col("cell"))
+    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
     ranked = scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= m)
     if ratio is not None:
-        best = F.max(F.when(F.col("rk") == 1, F.col("sim"))).over(W.partitionBy(id_col))
+        best = F.max(F.when(F.col("rk") == 1, F.col("sim"))).over(W.partitionBy("vec_id"))
         ranked = ranked.withColumn("best_sim", best).filter(
             (F.col("rk") == 1) | ((1 - F.col("sim")) <= F.lit(ratio) * (1 - F.col("best_sim")))
         )
-    return ranked.select(id_col, "cell")
+    return ranked.select("vec_id", "cell")
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
@@ -269,12 +250,7 @@ def pair_recall(candidates: DataFrame, truth: DataFrame) -> float:
     return hits / total if total else 1.0
 
 
-def cosine_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_neardup_pairs(embeddings: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a < b) with cosine ≥
     threshold.
 
@@ -283,9 +259,9 @@ def cosine_neardup_pairs(
     run globally — candidates come from an LSH/IVF prefilter
     (rp_lsh_signatures / ivf cells) and this join verifies within buckets,
     exactly like the minhash→jaccard two-stage in dedup.py."""
-    v = as_double(F.col(vec_col))
-    a = embeddings.select(F.col(id_col).alias("id_a"), v.alias("va"), dot(v, v).alias("__na"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), v.alias("vb"), dot(v, v).alias("__nb"))
+    v = as_double(F.col("embedding"))
+    a = embeddings.select(F.col("vec_id").alias("id_a"), v.alias("va"), dot(v, v).alias("__na"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), v.alias("vb"), dot(v, v).alias("__nb"))
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
     # dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)) with the self-dots precomputed per
@@ -296,7 +272,7 @@ def cosine_neardup_pairs(
     )
 
 
-def random_hyperplanes(n_planes: int, dim: int, seed: str = "h") -> list[list[float]]:
+def random_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes from md5 — plain Python
     constants, so the SAME numbers can be inlined into the DuckDB oracle
     (no cross-engine randomness)."""
@@ -306,19 +282,13 @@ def random_hyperplanes(n_planes: int, dim: int, seed: str = "h") -> list[list[fl
     for j in range(n_planes):
         row = []
         for d in range(dim):
-            h = hashlib.md5(f"{seed}{j}_{d}".encode()).hexdigest()
+            h = hashlib.md5(f"h{j}_{d}".encode()).hexdigest()
             row.append(int(h[:2], 16) - 127.5)
         planes.append(row)
     return planes
 
 
-def rp_lsh_signatures(
-    embeddings: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rp_lsh_signatures(embeddings: DataFrame, n_planes: int = 16, dim: int = 64) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) LSH signature: one bit per
     hyperplane = sign of the dot product. Vectors with high cosine land in
     the same bucket with probability 1 − θ/π per bit — the bucket-join
@@ -336,7 +306,7 @@ def rp_lsh_signatures(
     """
     planes = random_hyperplanes(n_planes, dim)
     sig = rp_sig_udf(planes)
-    return embeddings.select(F.col(id_col), sig(F.col(vec_col)).alias("rp_sig"))
+    return embeddings.select(F.col("vec_id"), sig(F.col("embedding")).alias("rp_sig"))
 
 
 def rp_sig_udf(planes):
@@ -425,11 +395,7 @@ def rp_lsh_candidate_pairs(
     embeddings: DataFrame,
     n_bits: int | None = 4,
     n_bands: int = 32,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
-    target_bucket: int = 32,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs from an RP-LSH banded self-join.
@@ -463,10 +429,10 @@ def rp_lsh_candidate_pairs(
     returns the same rows, but recomputes its signatures.
     """
     if n_bits is None:
-        n_bits = auto_n_bits(n_rows if n_rows is not None else embeddings.count(), target_bucket)
-    planes = random_hyperplanes(n_bits * n_bands, dim)
+        n_bits = auto_n_bits(n_rows if n_rows is not None else embeddings.count())
+    planes = random_hyperplanes(n_bits * n_bands, 64)
     bu = rp_band_udf(planes, n_bits, n_bands)
-    banded = embeddings.select(F.col(id_col), F.explode(bu(F.col(vec_col))).alias("bkey"))
+    banded = embeddings.select(F.col("vec_id"), F.explode(bu(F.col("embedding"))).alias("bkey"))
     # Both sides of the self-join (and the quarantine groupBy) consume this
     # frame; without the persist each consumer re-runs the whole signature
     # pipeline — embeddings scan + Arrow matmul + explode — from scratch.
@@ -511,9 +477,9 @@ def rp_lsh_candidate_pairs(
     return (
         left.join(
             right,
-            (F.col("l.bkey") == F.col("r.bkey")) & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            (F.col("l.bkey") == F.col("r.bkey")) & (F.col(f"l.vec_id") < F.col(f"r.vec_id")),
         )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .select(F.col(f"l.vec_id").alias("id_a"), F.col(f"r.vec_id").alias("id_b"))
         .distinct()
     )
 
@@ -523,12 +489,8 @@ def cosine_neardup_pairs_lsh(
     threshold: float,
     n_bits: int | None = 4,
     n_bands: int = 32,
-    dim: int = 64,
     n_rows: int | None = None,
     max_bucket: int | None = None,
-    target_bucket: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale path for embedding-cosine near-dup: RP-LSH band buckets →
     in-bucket candidate pairs → exact cosine verify (the two-stage shape of
@@ -546,27 +508,17 @@ def cosine_neardup_pairs_lsh(
     against the brute-force oracle at the test scales, which the driver's
     correctness gate then proves.
     """
-    cand = rp_lsh_candidate_pairs(
-        embeddings,
-        n_bits,
-        n_bands,
-        dim,
-        id_col,
-        vec_col,
-        max_bucket=max_bucket,
-        target_bucket=target_bucket,
-        n_rows=n_rows,
-    )
-    v = as_double(F.col(vec_col))
+    cand = rp_lsh_candidate_pairs(embeddings, n_bits, n_bands, max_bucket=max_bucket, n_rows=n_rows)
+    v = as_double(F.col("embedding"))
     # self-dots precomputed per side (n folds, not one per pair); the pair
     # expression dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), so values stay bit-identical to the
     # brute-force oracle
     a = embeddings.select(
-        F.col(id_col).alias("id_a"), v.alias("va"), dot(v, v).alias("na")
+        F.col("vec_id").alias("id_a"), v.alias("va"), dot(v, v).alias("na")
     )
     b = embeddings.select(
-        F.col(id_col).alias("id_b"), v.alias("vb"), dot(v, v).alias("nb")
+        F.col("vec_id").alias("id_b"), v.alias("vb"), dot(v, v).alias("nb")
     )
     sim = dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("na") * F.col("nb"))
     return (
@@ -577,35 +529,29 @@ def cosine_neardup_pairs_lsh(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (broadcast join
     against the collected centroid vectors). Output: (id, cell)."""
     packed = (
-        centroids.groupBy(label_col)
+        centroids.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("pairs"))
-        .select(F.col(label_col).alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
+        .select(F.col("label").alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
     )
     # per-side self-dots: one fold per (vector, cell) pair instead of three;
     # same multiply order, bit-identical sims
-    v = embeddings.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).withColumn(
+    v = embeddings.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v")).withColumn(
         "__nv", dot(F.col("v"), F.col("v"))
     )
     packed = packed.withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
     scored = v.join(F.broadcast(packed)).select(
-        id_col,
+        "vec_id",
         "cell",
         (dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("__nv") * F.col("__ncv"))).alias("sim"),
     )
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col("cell"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).select(id_col, "cell")
+    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).select("vec_id", "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -613,13 +559,7 @@ def ivf_assign(
 # ---------------------------------------------------------------------------
 
 
-def pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     """Product-quantizer codebooks: the dim-d space is split into ``m``
     contiguous subspaces of width d/m; subspace ``s``'s codebook entry for
     each label is the corresponding SLICE of the per-label mean vector
@@ -633,7 +573,7 @@ def pq_codebooks(
     trained.
     """
     w = dim // m
-    full = pack_centroids(centroids_by_label(embeddings, label_col, vec_col))
+    full = pack_centroids(centroids_by_label(embeddings))
     return full.select(
         F.col("cell").alias("code"),
         F.posexplode(
@@ -642,14 +582,7 @@ def pq_codebooks(
     ).select("s", "code", "cvec")
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     """Assign every vector, per subspace, to its nearest codebook entry by
     squared L2 (computed as c·c − 2·v·c, the v·v term constant per row;
     sequential fold so the oracle's list_inner_product agrees bit-for-bit).
@@ -663,29 +596,29 @@ def pq_encode(
 
     w = dim // m
     subs = embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), "
-                f"s -> slice(CAST({vec_col} AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
+                f"s -> slice(CAST(embedding AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
             )
         ).alias("s", "vsub"),
     )
     scored = subs.join(F.broadcast(codebooks), "s").select(
-        id_col,
+        "vec_id",
         "s",
         "code",
         (dot(F.col("cvec"), F.col("cvec")) - F.lit(2.0) * dot(F.col("vsub"), F.col("cvec"))).alias("d2"),
     )
-    win = W.partitionBy(id_col, "s").orderBy("d2", "code")
+    win = W.partitionBy("vec_id", "s").orderBy("d2", "code")
     return (
         scored.withColumn("rn", F.row_number().over(win))
         .filter(F.col("rn") == 1)
-        .select(id_col, "s", "code")
+        .select("vec_id", "s", "code")
     )
 
 
-def pq_reconstruct(codes: DataFrame, codebooks: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pq_reconstruct(codes: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Rebuild the quantized vector: concatenate each subspace's codebook
     entry in subspace order. Scoring against the reconstruction is
     mathematically identical to LUT-based ADC (the LUT is the same sum,
@@ -693,7 +626,7 @@ def pq_reconstruct(codes: DataFrame, codebooks: DataFrame, id_col: str = "vec_id
     single sequential fold, which the DuckDB oracle reproduces exactly."""
     return (
         codes.join(F.broadcast(codebooks), ["s", "code"])
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.flatten(
                 F.transform(
@@ -712,9 +645,6 @@ def pq_search(
     shortlist: int = 50,
     m: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """PQ ANN search with exact re-rank: score every candidate's
@@ -734,23 +664,23 @@ def pq_search(
     cbs = (
         codebooks
         if codebooks is not None
-        else pq_codebooks(embeddings, m=m, dim=dim, vec_col=vec_col, label_col=label_col)
+        else pq_codebooks(embeddings, m=m, dim=dim)
     )
-    codes = pq_encode(embeddings, cbs, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
-    recon = pq_reconstruct(codes, cbs, id_col=id_col).withColumn(
+    codes = pq_encode(embeddings, cbs, m=m, dim=dim)
+    recon = pq_reconstruct(codes, cbs).withColumn(
         "__nr", dot(F.col("rvec"), F.col("rvec"))
     )
     # per-side self-dots (same multiply order as
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical scores): the ADC scan
     # folds once per (query, cand) pair, not thrice
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
     ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
-    approx = recon.join(F.broadcast(q), F.col(id_col) != F.col("query_id")).select(
+    approx = recon.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "qv",
         "__nq",
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         (dot(F.col("qv"), F.col("rvec")) / F.sqrt(F.col("__nq") * F.col("__nr"))).alias("asim"),
     )
     ws = W.partitionBy("query_id").orderBy(F.col("asim").desc(), F.col("cand_id"))
@@ -760,7 +690,7 @@ def pq_search(
         .select("query_id", "qv", "__nq", "cand_id")
     )
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv")
     ).withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
     exact = short.join(cands, "cand_id").select(
         "query_id",
@@ -781,8 +711,6 @@ def pq_codebooks_kmeans(
     dim: int = 64,
     k: int = 16,
     max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Production PQ codebooks: an independent k-means per subspace over
@@ -800,20 +728,20 @@ def pq_codebooks_kmeans(
     # instead of m * (1 + max_iter) — the driver round-trip count no longer
     # grows with m (measured ~4x end-to-end on the pq_* queries).
     subs = embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), "
-                f"s -> slice(CAST({vec_col} AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
+                f"s -> slice(CAST(embedding AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
             )
         ).alias("s", "vs"),
     )
     cents = kmeans_grouped(
-        subs, k=k, max_iter=max_iter, id_col=id_col, group_col="s", vec_col="vs"
+        subs, k=k, max_iter=max_iter
     )
     if round_dp is not None:
         cents = cents.withColumn(
-            "centroid_val", _round_half_up(F.col("centroid_val"), round_dp)
+            "centroid_val", fround(F.col("centroid_val"), round_dp)
         )
     return (
         cents.groupBy("s", "cluster")
@@ -832,11 +760,6 @@ def ivfpq_search(
     k: int = 3,
     n_probe: int = 2,
     shortlist: int = 30,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """The composed IVF-PQ layering: the coarse quantizer (cells) prunes
     WHICH vectors are scanned, PQ codes compress WHAT the scan reads, the
@@ -851,16 +774,16 @@ def ivfpq_search(
     """
     from pyspark.sql import Window as W
 
-    cents = pack_centroids(centroids_by_label(embeddings, label_col, vec_col))
-    cbs = pq_codebooks(embeddings, m=m, dim=dim, vec_col=vec_col, label_col=label_col)
-    codes = pq_encode(embeddings, cbs, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
-    recon = pq_reconstruct(codes, cbs, id_col=id_col)
+    cents = pack_centroids(centroids_by_label(embeddings))
+    cbs = pq_codebooks(embeddings)
+    codes = pq_encode(embeddings, cbs)
+    recon = pq_reconstruct(codes, cbs)
 
     # per-side self-dots throughout (same multiply order as
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): probe, ADC scan and
     # re-rank each fold once per pair
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
     ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
     cents_n = cents.withColumn("__ncell", dot(F.col("cvec"), F.col("cvec")))
     scored_cells = q.join(F.broadcast(cents_n)).select(
@@ -877,9 +800,9 @@ def ivfpq_search(
         .select("query_id", "qv", "__nq", "cell")
     )
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(label_col).alias("cell")
+        F.col("vec_id").alias("cand_id"), F.col("label").alias("cell")
     )
-    recon_n = recon.withColumnRenamed(id_col, "cand_id").withColumn(
+    recon_n = recon.withColumnRenamed("vec_id", "cand_id").withColumn(
         "__nr", dot(F.col("rvec"), F.col("rvec"))
     )
     probed = (
@@ -901,7 +824,7 @@ def ivfpq_search(
         .select("query_id", "qv", "__nq", "cand_id")
     )
     ev = embeddings.select(
-        F.col(id_col).alias("cand_id"), as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv")
     ).withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
     exact = short.join(ev, "cand_id").select(
         "query_id",
@@ -921,15 +844,7 @@ def ivfpq_search(
 # ---------------------------------------------------------------------------
 
 
-def hybrid_search(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rrf_k: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hybrid_search(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Top-``k`` docs per query by Reciprocal Rank Fusion of a LEXICAL
     ranking (count of shared whitespace tokens, tf-free overlap — the
     BM25-lite that needs no global statistics) and a SEMANTIC ranking
@@ -942,7 +857,7 @@ def hybrid_search(
     never docs x queries); the semantic leg broadcasts the (small) query
     set like brute_force_topk; ranks come from one window per leg keyed
     by query_id; ties break on candidate id for determinism. Fused score
-    = sum over legs of 1/(rrf_k + rank), docs absent from a leg simply
+    = sum over legs of 1/(60 + rank), docs absent from a leg simply
     contribute nothing (the RRF convention).
     """
     from pyspark.sql import Window
@@ -952,15 +867,15 @@ def hybrid_search(
     # Blank-text guard: tokens('') is [''] (one empty token), which would
     # let blank docs lexically "match" blank queries — exclude blank rows
     # from the lexical leg entirely (they still rank semantically).
-    nonblank = F.length(F.trim(F.col(text_col))) > 0
+    nonblank = F.length(F.trim(F.col("text"))) > 0
     d_tok = (
         docs.filter(nonblank)
-        .select(F.col(id_col).alias("cand_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
+        .select(F.col("doc_id").alias("cand_id"), F.explode(tokens(F.col("text"))).alias("tok"))
         .distinct()
     )
     q_tok = (
         queries.filter(nonblank)
-        .select(F.col("query_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
+        .select(F.col("query_id"), F.explode(tokens(F.col("text"))).alias("tok"))
         .distinct()
     )
     lex = (
@@ -979,11 +894,11 @@ def hybrid_search(
     # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): one fold per
     # (query, cand) pair in the semantic leg instead of three
     sem = (
-        docs.select(F.col(id_col).alias("cand_id"), as_double(F.col(vec_col)).alias("cv"))
+        docs.select(F.col("doc_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv"))
         .withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
         .join(
             F.broadcast(
-                queries.select("query_id", as_double(F.col(vec_col)).alias("qv")).withColumn(
+                queries.select("query_id", as_double(F.col("embedding")).alias("qv")).withColumn(
                     "__nq", dot(F.col("qv"), F.col("qv"))
                 )
             )
@@ -1001,7 +916,7 @@ def hybrid_search(
         ),
     ).select("query_id", "cand_id", "rank")
 
-    rrf = F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("rank"))
+    rrf = F.lit(1.0) / (F.lit(60.0) + F.col("rank"))
     fused = (
         lex_rank.select("query_id", "cand_id", rrf.alias("contrib"))
         .unionByName(sem_rank.select("query_id", "cand_id", rrf.alias("contrib")))

@@ -15,11 +15,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def with_salt(df: DataFrame, salt_source: Column, n_salts: int = 16, salt_col: str = "__salt") -> DataFrame:
+def with_salt(df: DataFrame, salt_source: Column, n_salts: int = 16) -> DataFrame:
     """Deterministic salt in [0, n_salts) from a hash of ``salt_source``
     (a unique-ish column — deterministic so retries/regeneration are
     stable, unlike rand())."""
-    return df.withColumn(salt_col, F.pmod(F.hash(salt_source), F.lit(n_salts)))
+    return df.withColumn("__salt", F.pmod(F.hash(salt_source), F.lit(n_salts)))
 
 
 def salted_agg(

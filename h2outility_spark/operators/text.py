@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from h2outility_spark.functions import fround
+
 # ---------------------------------------------------------------------------
 # Normalization / tokenization
 # ---------------------------------------------------------------------------
@@ -40,14 +42,6 @@ WS_CLASS_EXPR = "[ \\\\t\\\\n\\\\r\\\\f\\\\x0B]"
 def normalize_ws(col: Column) -> Column:
     """Collapse runs of whitespace to single spaces and trim."""
     return F.trim(F.regexp_replace(col, WS_CLASS + "+", " "))
-
-
-def _round_half_up(col: Column, n: int) -> Column:
-    """floor(x*10^n + 0.5)/10^n — the engine-portable rounding formula
-    (same as workload.fround / similarity._round_half_up), kept as a leaf
-    helper so the operators layer never imports the query registry."""
-    factor = float(10**n)
-    return F.floor(col * F.lit(factor) + F.lit(0.5)) / F.lit(factor)
 
 
 def token_count(col: Column) -> Column:
@@ -106,9 +100,7 @@ def shingles_expr(text_col: str = "text", n: int = 3) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def corpus_ngram_counts(
-    docs, n: int = 3, id_col: str = "doc_id", text_col: str = "text", min_count: int = 1
-):
+def corpus_ngram_counts(docs, n: int = 3, min_count: int = 1):
     """Corpus-wide n-gram occurrence and document-frequency counts — the
     count-collection pass of n-gram LM estimation / contamination checks.
 
@@ -121,21 +113,19 @@ def corpus_ngram_counts(
     from pyspark.sql import functions as F
 
     grams = docs.select(
-        F.col(id_col), F.explode(shingles_expr(text_col, n)).alias("ngram")
+        F.col("doc_id"), F.explode(shingles_expr("text", n)).alias("ngram")
     )
     return (
         grams.groupBy("ngram")
         .agg(
             F.count(F.lit(1)).alias("n_occ"),
-            F.count_distinct(id_col).alias("n_docs"),
+            F.count_distinct("doc_id").alias("n_docs"),
         )
         .filter(F.col("n_occ") >= min_count)
     )
 
 
-def bigram_conditional_probs(
-    docs, id_col: str = "doc_id", text_col: str = "text", min_pair: int = 1
-):
+def bigram_conditional_probs(docs, min_pair: int = 1):
     """Bigram conditional probabilities P(w2 | w1) = c(w1 w2) / c(w1) over
     the corpus — maximum-likelihood LM estimation. Two combiner-friendly
     aggregations (bigram counts, unigram counts) joined on w1. Both join
@@ -146,10 +136,10 @@ def bigram_conditional_probs(
     """
     from pyspark.sql import functions as F
 
-    toks = docs.select(F.col(id_col), F.explode(shingles_expr(text_col, 1)).alias("w"))
+    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 1)).alias("w"))
     uni = toks.groupBy(F.col("w").alias("w1")).agg(F.count(F.lit(1)).alias("c1"))
     big = (
-        docs.select(F.explode(shingles_expr(text_col, 2)).alias("bigram"))
+        docs.select(F.explode(shingles_expr("text", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("c12"))
         .filter(F.col("c12") >= min_pair)
@@ -162,7 +152,7 @@ def bigram_conditional_probs(
     )
 
 
-def doc_lm_fluency(docs, id_col: str = "doc_id", text_col: str = "text"):
+def doc_lm_fluency(docs):
     """Per-document LM fluency: the mean conditional probability P(w2|w1)
     over the document's bigram positions, under the corpus-trained MLE
     bigram model (self-scoring) — the model-based quality dial that
@@ -180,16 +170,16 @@ def doc_lm_fluency(docs, id_col: str = "doc_id", text_col: str = "text"):
     """
     from pyspark.sql import functions as F
 
-    probs = bigram_conditional_probs(docs, id_col, text_col).select("bigram", "p")
-    doc_bigrams = docs.select(F.col(id_col), F.explode(shingles_expr(text_col, 2)).alias("bigram"))
+    probs = bigram_conditional_probs(docs).select("bigram", "p")
+    doc_bigrams = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 2)).alias("bigram"))
     return (
         doc_bigrams.join(probs, "bigram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_bigrams"), F.avg("p").alias("lm_score"))
     )
 
 
-def tfidf_top_terms(docs, k: int = 3, id_col: str = "doc_id", text_col: str = "text"):
+def tfidf_top_terms(docs, k: int = 3):
     """Top-k characteristic terms per document by tf·idf, with
     idf = ln(N / df) (raw MLE form, no smoothing — exact count arithmetic
     plus one ln(), reproducible across engines).
@@ -204,8 +194,8 @@ def tfidf_top_terms(docs, k: int = 3, id_col: str = "doc_id", text_col: str = "t
     """
     from pyspark.sql import Window as W, functions as F
 
-    toks = docs.select(F.col(id_col), F.explode(shingles_expr(text_col, 1)).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 1)).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -221,17 +211,17 @@ def tfidf_top_terms(docs, k: int = 3, id_col: str = "doc_id", text_col: str = "t
         # an ulp flip across an unrounded sort key would reorder the top-k;
         # after 6-dp rounding such near-ties become exact ties, broken by
         # the term string identically everywhere
-        .withColumn("tfidf", F.floor(F.col("tfidf") * 1e6 + F.lit(0.5)) / F.lit(1e6))
+        .withColumn("tfidf", fround(F.col("tfidf"), 6))
     )
-    w = W.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("term"))
+    w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select(id_col, "term", "tf", "df", "tfidf", "rk")
+        .select("doc_id", "term", "tf", "df", "tfidf", "rk")
     )
 
 
-def contamination_overlap(docs, benchmark, n: int = 3, id_col: str = "doc_id", text_col: str = "text"):
+def contamination_overlap(docs, benchmark, n: int = 3):
     """Train/benchmark decontamination signal: for every training doc, how
     many of its distinct n-grams also occur anywhere in the benchmark set
     (the GPT-3/Pile-style n-gram overlap check; pipelines drop or redact
@@ -245,19 +235,19 @@ def contamination_overlap(docs, benchmark, n: int = 3, id_col: str = "doc_id", t
     from pyspark.sql import functions as F
 
     bench_grams = (
-        benchmark.select(F.explode(shingles_expr(text_col, n)).alias("gram")).distinct()
+        benchmark.select(F.explode(shingles_expr("text", n)).alias("gram")).distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col), F.explode(shingles_expr(text_col, n)).alias("gram")
+        F.col("doc_id"), F.explode(shingles_expr("text", n)).alias("gram")
     ).distinct()
     return (
         doc_grams.join(bench_grams, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )
 
 
-def hash_sample(docs, percent: int, id_col: str = "doc_id"):
+def hash_sample(docs, percent: int):
     """Deterministic content-free sampling: keep a doc iff the first 4 hex
     digits of md5(id) fall under ``percent``% of the 16-bit space.
 
@@ -269,11 +259,11 @@ def hash_sample(docs, percent: int, id_col: str = "doc_id"):
     """
     from pyspark.sql import functions as F
 
-    bucket = F.expr(f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 4), 16, 10) AS INT)")
+    bucket = F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS INT)")
     return docs.filter(bucket < (65536 * percent) // 100)
 
 
-def hash_split(docs, train: int = 8, val: int = 1, test: int = 1, id_col: str = "doc_id"):
+def hash_split(docs, train: int = 8, val: int = 1, test: int = 1):
     """Deterministic train/val/test assignment — ``hash_sample``'s sibling
     for the other standard training-data split shape. The id is md5-hashed
     into a 16-bit domain (4 hex chars = 65536 values, like ``hash_sample``)
@@ -298,7 +288,7 @@ def hash_split(docs, train: int = 8, val: int = 1, test: int = 1, id_col: str = 
             "domain (65536); cells beyond it would have zero probability"
         )
     cell = F.expr(
-        f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 4), 16, 10) AS BIGINT) % {n_cells}"
+        f"CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS BIGINT) % {n_cells}"
     )
     split = (
         F.when(cell < train, F.lit("train"))
@@ -320,13 +310,7 @@ def shard_expr_sql(id_col: str, n_shards: int) -> str:
     )
 
 
-def pack_sequences(
-    docs,
-    budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int | None = None,
-):
+def pack_sequences(docs, budget_tokens: int, n_shards: int | None = None):
     """Training-sequence packing plan: assign docs (in deterministic id
     order) to context-window bins of ``budget_tokens`` via the exclusive
     prefix sum of token counts — the standard streaming approximation of
@@ -353,10 +337,10 @@ def pack_sequences(
     from pyspark.sql import Window as W, functions as F
 
     toks = docs.select(
-        F.col(id_col), space_token_count(F.col(text_col)).cast("bigint").alias("n_tokens")
+        F.col("doc_id"), space_token_count(F.col("text")).cast("bigint").alias("n_tokens")
     )
     if n_shards is None:
-        w = W.orderBy(id_col).rowsBetween(W.unboundedPreceding, -1)
+        w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
         binned = toks.withColumn(
             "prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
         ).withColumn("bin_id", F.expr(f"prefix div {budget_tokens}"))
@@ -365,8 +349,8 @@ def pack_sequences(
         )
     if not isinstance(n_shards, int) or isinstance(n_shards, bool) or n_shards <= 0:
         raise ValueError(f"pack_sequences: n_shards must be a positive int, got {n_shards!r}")
-    shard = F.expr(shard_expr_sql(id_col, n_shards))
-    w = W.partitionBy("shard").orderBy(id_col).rowsBetween(W.unboundedPreceding, -1)
+    shard = F.expr(shard_expr_sql("doc_id", n_shards))
+    w = W.partitionBy("shard").orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
     binned = (
         toks.withColumn("shard", shard)
         .withColumn("prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
@@ -537,9 +521,7 @@ def prefix_fingerprint(text_col: str = "text", n_tokens: int = 8) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def repetition_signals(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Per-document repetition fractions used as LM training-data quality
     gates (the Gopher / MassiveText "repetition" family):
 
@@ -559,14 +541,14 @@ def repetition_signals(
     """
     from pyspark.sql import functions as F
 
-    d = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        id_col, tokens(F.col(text_col)).alias("__toks")
+    d = docs.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        "doc_id", tokens(F.col("text")).alias("__toks")
     )
     words = (
-        d.select(id_col, F.explode("__toks").alias("w"))
-        .groupBy(id_col, "w")
+        d.select("doc_id", F.explode("__toks").alias("w"))
+        .groupBy("doc_id", "w")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("top_w"), F.sum("c").alias("n_tok"))
     )
     bigram_arr = F.expr(
@@ -574,10 +556,10 @@ def repetition_signals(
     )
     bigrams = (
         d.filter(F.size("__toks") >= 2)
-        .select(id_col, F.explode(bigram_arr).alias("b"))
-        .groupBy(id_col, "b")
+        .select("doc_id", F.explode(bigram_arr).alias("b"))
+        .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("top_b"), F.sum("c").alias("n_bg"))
     )
     trigram_arr = F.expr(
@@ -585,19 +567,19 @@ def repetition_signals(
     )
     trigrams = (
         d.filter(F.size("__toks") >= 3)
-        .select(id_col, F.explode(trigram_arr).alias("t"))
-        .groupBy(id_col)
+        .select("doc_id", F.explode(trigram_arr).alias("t"))
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_tg"), F.countDistinct("t").alias("d_tg"))
     )
     return (
         words.filter(F.col("n_tok") >= 3)
-        .join(bigrams, id_col)
-        .join(trigrams, id_col)
+        .join(bigrams, "doc_id")
+        .join(trigrams, "doc_id")
         .select(
-            id_col,
-            _round_half_up(F.col("top_w").cast("double") / F.col("n_tok"), 4).alias("top_word_frac"),
-            _round_half_up(F.col("top_b").cast("double") / F.col("n_bg"), 4).alias("top_bigram_frac"),
-            _round_half_up(
+            "doc_id",
+            fround(F.col("top_w").cast("double") / F.col("n_tok"), 4).alias("top_word_frac"),
+            fround(F.col("top_b").cast("double") / F.col("n_bg"), 4).alias("top_bigram_frac"),
+            fround(
                 F.lit(1.0) - F.col("d_tg").cast("double") / F.col("n_tg"), 4
             ).alias("dup_trigram_frac"),
         )
@@ -622,9 +604,7 @@ def segments_expr(text_col: str = "text", k: int = 8) -> Column:
     )
 
 
-def segment_dedup(
-    docs: DataFrame, k: int = 8, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def segment_dedup(docs: DataFrame, k: int = 8) -> DataFrame:
     """CCNet-style corpus-wide segment dedup: hash each k-token segment,
     keep only the FIRST occurrence corpus-wide (ordered by doc id then
     position), and reassemble each document from its surviving segments.
@@ -639,13 +619,13 @@ def segment_dedup(
     """
     from pyspark.sql import Window as W, functions as F
 
-    d = docs.filter(F.length(F.trim(F.col(text_col))) > 0)
+    d = docs.filter(F.length(F.trim(F.col("text"))) > 0)
     segs = d.select(
-        id_col, F.posexplode(segments_expr(text_col, k)).alias("seg_idx", "seg")
+        "doc_id", F.posexplode(segments_expr("text", k)).alias("seg_idx", "seg")
     )
-    w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy(id_col, "seg_idx")
+    w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
@@ -691,13 +671,7 @@ def pii_redact(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def decontaminate_spans(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 3) -> DataFrame:
     """Surgical decontamination: instead of dropping every training doc
     that shares n-grams with the benchmark (contamination_overlap's
     flag-then-drop), REMOVE exactly the token spans covered by a matching
@@ -716,27 +690,27 @@ def decontaminate_spans(
     from pyspark.sql import Window as W, functions as F
 
     bench_grams = (
-        benchmark.select(F.explode(shingles_expr(text_col, n)).alias("g")).distinct()
+        benchmark.select(F.explode(shingles_expr("text", n)).alias("g")).distinct()
     )
     toks = (
-        docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("i", "w"))
+        docs.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
     )
-    w = W.partitionBy(id_col).orderBy("i")
+    w = W.partitionBy("doc_id").orderBy("i")
     parts = [F.col("w")] + [F.lead("w", k).over(w) for k in range(1, n)]
     grams = (
-        toks.select(F.col(id_col), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
+        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
         .filter(F.col(f"__w{n - 1}").isNotNull())
-        .select(F.col(id_col), F.col("i"), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(n)]).alias("g"))
+        .select(F.col("doc_id"), F.col("i"), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(n)]).alias("g"))
     )
-    starts = grams.join(bench_grams, "g").select(id_col, "i")
+    starts = grams.join(bench_grams, "g").select("doc_id", "i")
     covered = starts.select(
-        F.col(id_col), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(n - 1))).alias("i")
+        F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(n - 1))).alias("i")
     ).distinct()
-    kept = toks.join(covered, [id_col, "i"], "left_anti")
-    totals = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n_tok"))
+    kept = toks.join(covered, ["doc_id", "i"], "left_anti")
+    totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n_tok"))
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(F.array_sort(F.collect_list(F.struct("i", "w"))), lambda s: s["w"]),
@@ -744,22 +718,16 @@ def decontaminate_spans(
             ).alias("clean_text"),
             F.count(F.lit(1)).alias("__n_kept"),
         )
-        .join(totals, id_col)
+        .join(totals, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             "clean_text",
             (F.col("__n_tok") - F.col("__n_kept")).cast("long").alias("n_removed"),
         )
     )
 
 
-def chunk_sliding(
-    docs: DataFrame,
-    size: int,
-    stride: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_sliding(docs: DataFrame, size: int, stride: int) -> DataFrame:
     """Sliding-window chunking: ``size``-token windows every ``stride``
     tokens — the RAG-retrieval / context-window shape (overlap =
     size − stride keeps boundary sentences visible to both neighbors),
@@ -788,15 +756,15 @@ def chunk_sliding(
     # the downstream projection. CollapseProject keeps the stages apart
     # because each alias is referenced more than once by non-cheap
     # expressions (SPARK-36718); now the regexp and split run once per doc.
-    cleaned = docs.select(F.col(id_col), normalize_ws(F.col(text_col)).alias("__clean"))
-    toked = cleaned.select(F.col(id_col), F.split(F.col("__clean"), " ").alias("__toks"), F.col("__clean"))
+    cleaned = docs.select(F.col("doc_id"), normalize_ws(F.col("text")).alias("__clean"))
+    toked = cleaned.select(F.col("doc_id"), F.split(F.col("__clean"), " ").alias("__toks"), F.col("__clean"))
     counted = toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__toks"),
         F.when(F.length("__clean") == 0, F.lit(0)).otherwise(F.size("__toks")).alias("__n"),
     )
     started = counted.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__toks"),
         F.col("__n"),
         F.expr(
@@ -811,13 +779,13 @@ def chunk_sliding(
     # O(tokens²) hazard the staging exists to avoid. The rule skips outer
     # generates; the null filter references generator output so it stays put.
     base = started.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__toks"),
         F.col("__n"),
         F.posexplode_outer(F.col("__starts")).alias("chunk_idx", "start_tok"),
     ).filter(F.col("start_tok").isNotNull())
     return base.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         F.col("start_tok").cast("long").alias("start_tok"),
         F.least(F.lit(size), F.col("__n") - F.col("start_tok")).cast("long").alias("n_tokens"),
@@ -830,12 +798,7 @@ def chunk_sliding(
 # ---------------------------------------------------------------------------
 
 
-def cdc_segments(
-    docs: DataFrame,
-    divisor: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_segments(docs: DataFrame, divisor: int = 8) -> DataFrame:
     """Content-defined segmentation: a token position starts a new segment
     when the hash of its 2-token context satisfies hash % divisor == 0 —
     so boundaries follow CONTENT, not offsets. An insertion near the start
@@ -851,10 +814,10 @@ def cdc_segments(
     from pyspark.sql import Window as W, functions as F
 
     toks = (
-        docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("i", "w"))
+        docs.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
     )
-    win = W.partitionBy(id_col).orderBy("i")
+    win = W.partitionBy("doc_id").orderBy("i")
     ctx = F.concat_ws(" ", F.lag("w", 1).over(win), F.col("w"))
     bucket = F.expr("CAST(conv(substr(md5(__ctx), 1, 4), 16, 10) AS INT)")
     marked = toks.withColumn("__ctx", ctx).withColumn(
@@ -863,33 +826,28 @@ def cdc_segments(
     seg_idx = F.sum("__bnd").over(win.rowsBetween(W.unboundedPreceding, 0))
     segs = marked.withColumn("seg_idx", seg_idx)
     return (
-        segs.groupBy(id_col, "seg_idx")
+        segs.groupBy("doc_id", "seg_idx")
         .agg(
             F.array_join(
                 F.transform(F.array_sort(F.collect_list(F.struct("i", "w"))), lambda s: s["w"]),
                 " ",
             ).alias("seg")
         )
-        .select(id_col, F.col("seg_idx").cast("long").alias("seg_idx"), "seg")
+        .select("doc_id", F.col("seg_idx").cast("long").alias("seg_idx"), "seg")
     )
 
 
-def cdc_segment_dedup(
-    docs: DataFrame,
-    divisor: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_segment_dedup(docs: DataFrame, divisor: int = 8) -> DataFrame:
     """segment_dedup with content-defined boundaries: keep the first
     corpus-wide occurrence of each CDC segment, reassemble documents from
     the survivors. Same keep-first/reassembly machinery as segment_dedup —
     only the segmenter differs."""
     from pyspark.sql import Window as W, functions as F
 
-    segs = cdc_segments(docs, divisor, id_col, text_col)
-    w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy(id_col, "seg_idx")
+    segs = cdc_segments(docs, divisor)
+    w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),

@@ -50,8 +50,6 @@ def build_corpus(
     sf_dir: str,
     table_dir: str,
     keep_frac: float = 0.7,
-    num_hashes: int = 8,
-    jaccard_threshold: float = 0.2,
     benchmark: DataFrame | None = None,
     max_shared_grams: int = 0,
     n_shards: int = 16,
@@ -66,7 +64,7 @@ def build_corpus(
       2. exact dedup — one representative (min id) per normalized
          fingerprint;
       3. near dedup — minhash/LSH candidates, exact Jaccard >=
-         ``jaccard_threshold`` verification, connected components, one
+         0.2 verification, connected components, one
          canonical doc per cluster;
       4. decontamination (when ``benchmark`` docs are given) — drop docs
          sharing more than ``max_shared_grams`` distinct trigrams with the
@@ -89,10 +87,10 @@ def build_corpus(
     ).cache()
     stats["exact_unique"] = uniq.count()
 
-    sigs = dedup.minhash_signatures(uniq, num_hashes=num_hashes)
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(num_hashes)])
+    sigs = dedup.minhash_signatures(uniq)
+    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(8)])
     verified = dedup.jaccard_for_pairs(pairs, uniq).filter(
-        F.col("jaccard") >= jaccard_threshold
+        F.col("jaccard") >= 0.2
     )
     clusters = dedup.connected_components(verified.select("id_a", "id_b"))
     canon = dedup.canonical_docs(uniq, clusters).cache()

@@ -16,6 +16,7 @@ scale, ``df.write.csv`` keeps the write distributed.
 from __future__ import annotations
 
 import os
+import urllib.parse
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -31,7 +32,6 @@ def build_annotated_header(
     variables: list[dict] | None = None,
     source: dict | None = None,
     qc_level: dict | None = None,
-    generated_by: str = "h2outility_spark",
 ) -> str:
     """Build the '#'-comment metadata block (S5).
 
@@ -41,7 +41,7 @@ def build_annotated_header(
     with files the reference wrote, use
     ``sinks.annotated_header.build_series_file_header`` instead.
     """
-    lines = [f"# Generated by {generated_by}"]
+    lines = ["# Generated by h2outility_spark"]
     if site:
         lines.append("# Site: " + ", ".join(f"{k}={v}" for k, v in site.items()))
     for var in variables or []:
@@ -56,13 +56,16 @@ def build_annotated_header(
     return "\n".join(lines) + "\n"
 
 
-def chunk_file_name(site_code: str, variable: str | None, source_code: str, qc_code: str, year: int | None = None) -> str:
-    """File name encoding site/var/source/QC/year (S5 name build,
-    DatasetUtilities.py:247-264)."""
-    parts = [site_code, variable or "all", source_code, f"QC{qc_code}"]
+def chunk_file_name(site_code: str, series: str | None, source_code: str, qc_code: str, year: int | None = None) -> str:
+    """File name encoding site/series/source/QC/year (S5 name build,
+    DatasetUtilities.py:247-264). ``series`` is ``<VariableCode>-<MethodID>``
+    for a one-series chunk (the reference's A3 disambiguation), None for a
+    whole group. Each part is percent-encoded like the fleet writer's keys,
+    so a free-text ODM code cannot add a directory or leave ``out_dir``."""
+    parts = [site_code, series or "all", source_code, f"QC{qc_code}"]
     if year is not None:
         parts.append(str(year))
-    return "_".join(str(p) for p in parts) + ".csv"
+    return "_".join(urllib.parse.quote(str(p), safe="") for p in parts) + ".csv"
 
 
 def write_annotated_csv(wide: DataFrame, path: str, header_text: str = "", order_by: list[str] | None = None) -> str:
@@ -88,7 +91,6 @@ def write_annotated_chunks_distributed(
     out_dir: str,
     chunk_col: str = "SiteID",
     order_by: list[str] | None = None,
-    header_for_chunk=None,
 ) -> DataFrame:
     """S5 at fleet scale: ONE annotated CSV per chunk value, written
     EXECUTOR-SIDE (``applyInPandas`` over ``groupBy(chunk_col)``) instead
@@ -99,8 +101,7 @@ def write_annotated_chunks_distributed(
     filesystem / object-store path visible to every executor (trivially
     true on local[N]; s3/nfs/hdfs-fuse on a cluster).
 
-    ``header_for_chunk`` maps a chunk value to its '#' header text
-    (default: a one-line generic header naming the chunk). Returns a
+    Each file starts with a generic '#' header naming its chunk. Returns a
     (chunk, path, n_rows) summary frame — the write happens when it is
     acted on, once, in the same job.
     """
@@ -131,11 +132,7 @@ def write_annotated_chunks_distributed(
         import pandas as pd
 
         key = pdf[chunk_col].iloc[0]
-        header = (
-            header_for_chunk(key)
-            if header_for_chunk is not None
-            else f"# Generated by h2outility_spark\n# Chunk: {chunk_col}={key}\n"
-        )
+        header = f"# Generated by h2outility_spark\n# Chunk: {chunk_col}={key}\n"
         # percent-encode the chunk value so a '/'-bearing site code cannot
         # escape out_dir (and ':'/'*' survive object-store path rules).
         # NULL keys (incl. NaN, folded into NULL above) get a reserved

@@ -18,12 +18,11 @@ def append_jdbc(
     url: str,
     table: str,
     properties: dict | None = None,
-    batchsize: int = 10_000,
     num_partitions: int | None = None,
 ) -> None:
     out = df.repartition(num_partitions) if num_partitions else df
     writer = out.write.mode("append").format("jdbc").option("url", url).option("dbtable", table).option(
-        "batchsize", str(batchsize)
+        "batchsize", "10000"
     )
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)

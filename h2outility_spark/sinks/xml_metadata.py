@@ -15,12 +15,12 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame
 
 
-def export_series_metadata(catalog: DataFrame, path: str, root_tag: str = "Metadata") -> str:
+def export_series_metadata(catalog: DataFrame, path: str) -> str:
     """Write one <Series> element per catalog row; every column becomes a
     child element. The catalog frame is the seriescatalog
     (catalog.derive_catalog) with whatever dim attributes the caller has
     joined in."""
-    root = ET.Element(root_tag)
+    root = ET.Element("Metadata")
     cols = catalog.columns
     for row in catalog.collect():
         series_el = ET.SubElement(root, "Series")

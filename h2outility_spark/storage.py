@@ -12,27 +12,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def zorder_expr(norm_cols: list[str], bits: int = 16) -> str:
-    """SQL expression interleaving the low ``bits`` bits of the given
-    (already 0..2^bits-1 normalized) integer columns into one Morton/Z
+def zorder_expr(norm_cols: list[str]) -> str:
+    """SQL expression interleaving the low 16 bits of the given
+    (already 0..2^16-1 normalized) integer columns into one Morton/Z
     value. Plain shift-and-mask arithmetic — stays in whole-stage codegen.
     """
     terms = []
     n = len(norm_cols)
-    for i in range(bits):
+    for i in range(16):
         for j, c in enumerate(norm_cols):
             terms.append(f"shiftleft(shiftright({c}, {i}) & 1, {i * n + j})")
     return " + ".join(terms)
 
 
-def zordered_frame(
-    df: DataFrame, cols: list[str], bits: int = 16, num_partitions: int | None = None
-) -> DataFrame:
+def zordered_frame(df: DataFrame, cols: list[str], num_partitions: int | None = None) -> DataFrame:
     """``df`` range-partitioned and sorted by its Morton code over ``cols``
     (helper columns dropped) — the clustering step of
     ``TxTable.compact_files(zorder=True)``.
 
-    Implementation: min/max-normalize each column to ``bits`` bits (one
+    Implementation: min/max-normalize each column to 16 bits (one
     tiny global aggregate, broadcast back), interleave bits into a Morton
     code, range-repartition + sort on it. The normalization is rank-free
     (linear min/max) — skewed distributions cluster less evenly than a
@@ -45,7 +43,7 @@ def zordered_frame(
     ranges = df.agg(*aggs)
     out = df.join(F.broadcast(ranges))
     norm_names = []
-    span = (1 << bits) - 1
+    span = (1 << 16) - 1
     for c in cols:
         nc = f"__z_{c}"
         norm_names.append(nc)
@@ -56,7 +54,7 @@ def zordered_frame(
                 f"greatest(CAST(`__max_{c}` AS DOUBLE) - CAST(`__min_{c}` AS DOUBLE), 1e-12)) AS BIGINT)"
             ),
         )
-    out = out.withColumn("__z", F.expr(zorder_expr(norm_names, bits)))
+    out = out.withColumn("__z", F.expr(zorder_expr(norm_names)))
     rp = (
         out.repartitionByRange(num_partitions, "__z")
         if num_partitions is not None

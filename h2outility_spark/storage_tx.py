@@ -515,7 +515,7 @@ class TxTable:
                     overlapping.append(entry)
         return untouched_segs, carried_entries, overlapping
 
-    def merge_upsert(self, updates: DataFrame, _retries: int = 3, evolve_schema: bool = False) -> int:
+    def merge_upsert(self, updates: DataFrame, evolve_schema: bool = False) -> int:
         """MERGE (upsert on ``key_cols``): rows matching an update's key are
         replaced; others are kept; unmatched updates are inserted.
 
@@ -612,7 +612,7 @@ class TxTable:
             merged = updates
         new = self._write_segments(carried_entries + self._stage_files(merged))
 
-        for _ in range(_retries):
+        for _ in range(3):
             try:
                 return self._commit(untouched_segs + new, schema_ddl, "merge", m["version"])
             except CommitConflict:
@@ -781,12 +781,12 @@ class TxTable:
         if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
             raise ValueError(f"invalid branch name {name!r}")
 
-    def branch(self, name: str, version: int | None = None) -> "TxTable":
-        """Create named branch ``name`` from ``version`` (default latest).
+    def branch(self, name: str) -> "TxTable":
+        """Create named branch ``name`` from the latest version.
         The branch starts at its own version 0 (op 'clone'); its post-fork
         edits are exactly ``branch_table(name).changes(0)``."""
         self._check_branch_name(name)
-        return self.clone(os.path.join(self.table_dir, self._BRANCH_DIR, name), version)
+        return self.clone(os.path.join(self.table_dir, self._BRANCH_DIR, name))
 
     def branches(self) -> list[str]:
         d = os.path.join(self.table_dir, self._BRANCH_DIR)
@@ -810,12 +810,9 @@ class TxTable:
             raise FileNotFoundError(f"no branch {name!r} in {self.table_dir}")
         return TxTable(self.spark, d, key_cols=self.key_cols)
 
-    def merge_from_branch(
-        self, other: "TxTable", since_version: int = 0, propagate_deletes: bool = False
-    ) -> int:
+    def merge_from_branch(self, other: "TxTable", propagate_deletes: bool = False) -> int:
         """Merge a branch's post-fork work back into this table: the
-        branch's CDF since ``since_version`` (its fork point — version 0
-        for a fresh branch) is reduced to its net inserted rows (an
+        branch's CDF since its fork point (its version 0) is reduced to its net inserted rows (an
         update's delete+insert pair nets to the insert, which carries the
         key's final value) and merge_upserted here in one commit.
 
@@ -835,7 +832,7 @@ class TxTable:
         # and the staged writes of delete_keys + merge_upsert). Persist it
         # so the expensive diff runs once, keeping the advertised
         # O(changes)-per-merge cost.
-        net = other.changes(since_version).persist()
+        net = other.changes(0).persist()
         try:
             inserts = net.filter(F.col("_change_type") == "insert").drop("_change_type")
             if propagate_deletes:
@@ -858,14 +855,13 @@ class TxTable:
         self,
         other: "TxTable",
         since_self: int,
-        since_other: int = 0,
         prefer: str = "branch",
         propagate_deletes: bool = False,
     ) -> int:
         """THREE-WAY merge with a conflict policy — the step after
         ``branch_conflicts`` reports divergence: both this table (since
         ``since_self``, its version at fork time) and the branch (since
-        ``since_other``, 0 for a fresh branch) have advanced, and their
+        its fork point, its version 0) have advanced, and their
         changed key sets may overlap.
 
         * ``prefer='branch'`` ("theirs"): every branch change lands,
@@ -889,9 +885,7 @@ class TxTable:
         if prefer not in ("branch", "main"):
             raise ValueError(f"prefer must be 'branch' or 'main', got {prefer!r}")
         if prefer == "branch":
-            return self.merge_from_branch(
-                other, since_version=since_other, propagate_deletes=propagate_deletes
-            )
+            return self.merge_from_branch(other, propagate_deletes=propagate_deletes)
         from pyspark.sql import functions as F
 
         # ONE CDF diff per side: the branch leg of the conflict set is
@@ -901,7 +895,7 @@ class TxTable:
         # merge_upsert each consume their inputs several times (bounds
         # collects + staged writes) — without it the exceptAll shuffles
         # behind self.changes() would re-run per consumption.
-        net = other.changes(since_other).persist()
+        net = other.changes(0).persist()
         conflicts = (
             self.changes(since_self)
             .select(*self.key_cols)
@@ -952,9 +946,7 @@ class TxTable:
             for f in derived:
                 f.unpersist()
 
-    def branch_conflicts(
-        self, a: "TxTable", b: "TxTable", since_a: int = 0, since_b: int = 0
-    ) -> DataFrame:
+    def branch_conflicts(self, a: "TxTable", b: "TxTable") -> DataFrame:
         """Keys TOUCHED (net-inserted or net-deleted) on BOTH branches
         since their fork points — the divergence report a three-way merge
         needs before choosing a resolution policy. One row per conflicted
@@ -962,10 +954,10 @@ class TxTable:
         intersection is one join of two key sets."""
         from pyspark.sql import functions as F
 
-        def _touched(t: "TxTable", since: int) -> DataFrame:
-            return t.changes(since).select(*self.key_cols).distinct()
+        def _touched(t: "TxTable") -> DataFrame:
+            return t.changes(0).select(*self.key_cols).distinct()
 
-        return _touched(a, since_a).join(_touched(b, since_b), self.key_cols, "semi")
+        return _touched(a).join(_touched(b), self.key_cols, "semi")
 
     # -- maintenance -------------------------------------------------------
 

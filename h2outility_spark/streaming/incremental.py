@@ -176,15 +176,7 @@ class BatchLedger:
         return handle
 
 
-def stream_session_paths(
-    events: DataFrame,
-    gap_seconds: int = 21_600,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def stream_session_paths(events: DataFrame) -> DataFrame:
     """CUSTOM stateful streaming operator via ``applyInPandasWithState`` —
     the custom-operator ladder rung the built-ins can't reach: per-session
     ORDERED payload. ``session_window`` can count a session's events but
@@ -193,7 +185,7 @@ def stream_session_paths(
     state function can, because it owns the session buffer.
 
     Semantics (mirrored by the batch oracle): events per key sorted by
-    (ts, id); a gap STRICTLY greater than ``gap_seconds`` closes a
+    (ts, id); a gap STRICTLY greater than 6 hours closes a
     session (same ``>`` convention as the batch ``sessionization``
     query); emitted row = (key, session_start, n_events, path).
 
@@ -209,9 +201,9 @@ def stream_session_paths(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = gap_seconds * 1_000_000
+    gap_us = 21_600 * 1_000_000
     out_schema = (
-        f"{key_col} long, session_start timestamp, n_events long, path string"
+        "user_id long, session_start timestamp, n_events long, path string"
     )
     state_schema = "tus array<long>, eid array<long>, ety array<string>"
 
@@ -227,9 +219,9 @@ def stream_session_paths(
             # normalize to datetime64[us] explicitly: `.astype('int64')//1000`
             # is only microseconds if pandas happened to deliver ns — under
             # pandas-2.x non-ns resolutions the gap math would be 1000x off
-            tus.extend(pdf[ts_col].astype("datetime64[us]").astype("int64").tolist())
-            eid.extend(pdf[id_col].astype("int64").tolist())
-            ety.extend(pdf[type_col].astype(str).tolist())
+            tus.extend(pdf["ts"].astype("datetime64[us]").astype("int64").tolist())
+            eid.extend(pdf["event_id"].astype("int64").tolist())
+            ety.extend(pdf["event_type"].astype(str).tolist())
         rows = sorted(zip(tus, eid, ety))
         sessions: list[list[tuple]] = []
         cur: list[tuple] = []
@@ -254,14 +246,14 @@ def stream_session_paths(
             state.update(
                 ([r[0] for r in flat], [r[1] for r in flat], [r[2] for r in flat])
             )
-            state.setTimeoutTimestamp(max(r[0] for r in flat) // 1000 + gap_seconds * 1000 + 1)
+            state.setTimeoutTimestamp(max(r[0] for r in flat) // 1000 + 21_600 * 1000 + 1)
         else:
             state.remove()
 
         if emit:
             yield pd.DataFrame(
                 {
-                    key_col: [uid] * len(emit),
+                    "user_id": [uid] * len(emit),
                     "session_start": [pd.to_datetime(s[0][0], unit="us") for s in emit],
                     "n_events": [len(s) for s in emit],
                     "path": [">".join(r[2] for r in s) for s in emit],
@@ -269,8 +261,8 @@ def stream_session_paths(
             )
 
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        events.withWatermark("ts", "1 hour")
+        .groupBy("user_id")
         .applyInPandasWithState(
             fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
@@ -283,7 +275,6 @@ def stream_upsert_to_txtable(
     keys: list[str],
     order_col: str,
     checkpoint_path: str,
-    query_name: str = "tx-upsert",
 ):
     """Continuous incremental materialization into a TRANSACTIONAL target:
     each micro-batch is reduced to its newest row per logical key and
@@ -321,21 +312,13 @@ def stream_upsert_to_txtable(
     return (
         stream_df.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
+        .queryName("tx-upsert")
         .trigger(availableNow=True)
         .start()
     )
 
 
-def stream_dedup_ingest(
-    stream_docs: DataFrame,
-    table_dir: str,
-    checkpoint_path: str,
-    num_hashes: int = 8,
-    threshold: float = 0.2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def stream_dedup_ingest(stream_docs: DataFrame, table_dir: str, checkpoint_path: str) -> None:
     """Streaming twin of the ``dedup_incremental`` batch query: a document
     stream is deduplicated AGAINST the accumulated corpus and only novel
     docs are committed. Drains everything available (one
@@ -346,9 +329,9 @@ def stream_dedup_ingest(
          normalized fingerprint, so two copies arriving together insert once;
       2. corpus dedup — ``incremental_neardup_filter`` drops batch docs that
          are exact (fingerprint) or near (minhash band collision + Jaccard >=
-         ``threshold``) duplicates of the corpus snapshot;
+         0.2) duplicates of the corpus snapshot;
       3. atomic commit — survivors (id, text, fp) are MERGEd into a
-         ``storage_tx.TxTable`` keyed by ``id_col``; readers only ever see
+         ``storage_tx.TxTable`` keyed by ``doc_id``; readers only ever see
          whole batches.
 
     Later batches automatically dedup against earlier ones because the
@@ -368,7 +351,7 @@ def stream_dedup_ingest(
     from h2outility_spark.storage_tx import TxTable
 
     spark = stream_docs.sparkSession
-    table = TxTable(spark, table_dir, key_cols=[id_col])
+    table = TxTable(spark, table_dir, key_cols=["doc_id"])
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window as W
@@ -376,17 +359,17 @@ def stream_dedup_ingest(
         # NULL-text docs are dropped up front (policy: un-fingerprintable,
         # nothing to dedup against); empty strings are real, fingerprinted
         # content and flow through.
-        wfp = batch_df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), F.col(text_col), fingerprint(F.col(text_col)).alias("fp")
+        wfp = batch_df.filter(F.col("text").isNotNull()).select(
+            F.col("doc_id"), F.col("text"), fingerprint(F.col("text")).alias("fp")
         )
         # Batch-internal dedup, both directions: one representative (min id)
         # per fingerprint AND one row per id (an at-least-once source can
         # redeliver the same id in one batch; min-fp tie-break keeps the
         # choice deterministic).
-        reps = wfp.groupBy("fp").agg(F.min(id_col).alias(id_col))
+        reps = wfp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
         batch_u = (
-            wfp.join(reps, [id_col, "fp"])
-            .withColumn("__rn", F.row_number().over(W.partitionBy(id_col).orderBy("fp")))
+            wfp.join(reps, ["doc_id", "fp"])
+            .withColumn("__rn", F.row_number().over(W.partitionBy("doc_id").orderBy("fp")))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
@@ -394,18 +377,14 @@ def stream_dedup_ingest(
         if table.latest_version() is None:
             novel = batch_u
         else:
-            existing = table.snapshot().select(id_col, text_col)
+            existing = table.snapshot().select("doc_id", "text")
             survivors = incremental_neardup_filter(
-                batch_u.select(id_col, text_col),
+                batch_u.select("doc_id", "text"),
                 existing,
-                num_hashes=num_hashes,
-                threshold=threshold,
-                id_col=id_col,
-                text_col=text_col,
                 cache_registry=caches,
             )
-            novel = survivors.join(batch_u.select(id_col, text_col), id_col).select(
-                id_col, text_col, "fp"
+            novel = survivors.join(batch_u.select("doc_id", "text"), "doc_id").select(
+                "doc_id", "text", "fp"
             )
         # The emptiness probe, merge bounds collect, and staged write each
         # action `novel` — cache it so the band join + Jaccard verification

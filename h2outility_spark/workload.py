@@ -21,11 +21,11 @@ column NAMES and rounded values. Conventions that make the hashes stable:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from h2outility_spark.functions import season
+from h2outility_spark.functions import fround, season
 from h2outility_spark.operators import qc
 from h2outility_spark.operators.catalog import derive_catalog
 from h2outility_spark.operators.extract import build_predicate
@@ -41,23 +41,9 @@ class QuerySpec:
     oracle: str | None = None
     description: str = ""
     bench: bool = False  # include in bench.py's headline set
-    tags: list[str] = field(default_factory=list)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-
-def fround(col, n: int = 2):
-    """Round-half-up via floor(x*10^n + 0.5)/10^n.
-
-    Spark's ``round`` goes through BigDecimal (decimal-string HALF_UP) while
-    DuckDB's rounds the raw binary double — they disagree on decimal halves
-    (e.g. avg of two 2-dp values). This formula is plain IEEE arithmetic, so
-    mirroring it verbatim in the oracle SQL (``sql_round``) gives
-    bit-identical results on identical inputs.
-    """
-    factor = float(10**n)
-    return F.floor(col * F.lit(factor) + F.lit(0.5)) / F.lit(factor)
 
 
 def sql_round(expr: str, n: int = 2) -> str:
@@ -65,13 +51,13 @@ def sql_round(expr: str, n: int = 2) -> str:
     return f"floor(({expr}) * {factor} + 0.5) / {factor}"
 
 
-def query(name: str, oracle: str | None = None, description: str = "", bench: bool = False, tags: list[str] | None = None):
+def query(name: str, oracle: str | None = None, description: str = "", bench: bool = False):
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             ensure_utc(spark)
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = QuerySpec(wrapped, oracle, description, bench, tags or [])
+        REGISTRY[name] = QuerySpec(wrapped, oracle, description, bench)
         return wrapped
 
     return deco

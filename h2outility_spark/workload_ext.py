@@ -725,7 +725,7 @@ def q_ivfpq_search(spark, sf_dir):
     return out.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
 
-def _pq_kmeans_oracle(m: int = 8, w: int = 8, k: int = 8, iters: int = 2, tail: str | None = None) -> str:
+def _pq_kmeans_oracle(tail: str | None = None) -> str:
     """PQ with per-subspace k-means codebooks, unrolled as grouped chained
     CTEs — the production training recipe made driver-hashable. Same parity
     devices as _kmeans_oracle (workload_text): seeds are the first k
@@ -739,18 +739,18 @@ def _pq_kmeans_oracle(m: int = 8, w: int = 8, k: int = 8, iters: int = 2, tail: 
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         (
             "subs AS (SELECT vec_id, CAST(s.range AS INT) AS s, "
-            f"list_slice(v, CAST(s.range * {w} + 1 AS INT), CAST(s.range * {w} + {w} AS INT)) AS vs "
-            f"FROM e CROSS JOIN range({m}) s)"
+            "list_slice(v, CAST(s.range * 8 + 1 AS INT), CAST(s.range * 8 + 8 AS INT)) AS vs "
+            "FROM e CROSS JOIN range(8) s)"
         ),
         (
             "c0 AS (SELECT s, cluster, cvec FROM ("
             "SELECT subs.s, subs.vs AS cvec, "
             "(row_number() OVER (PARTITION BY subs.s ORDER BY subs.vec_id)) - 1 AS cluster "
-            f"FROM subs) WHERE cluster < {k})"
+            "FROM subs) WHERE cluster < 8)"
         ),
     ]
     prev = "c0"
-    for i in range(1, iters + 1):
+    for i in range(1, 3):
         parts.append(
             f"a{i} AS (SELECT vec_id, s, vs, cluster FROM ("
             "SELECT subs.vec_id, subs.s, subs.vs, c.cluster, "
@@ -760,7 +760,7 @@ def _pq_kmeans_oracle(m: int = 8, w: int = 8, k: int = 8, iters: int = 2, tail: 
         )
         parts.append(
             f"p{i} AS (SELECT s, cluster, r.range AS pos, avg(vs[CAST(r.range AS INT) + 1]) AS cv "
-            f"FROM a{i} CROSS JOIN range({w}) r GROUP BY 1, 2, 3)"
+            f"FROM a{i} CROSS JOIN range(8) r GROUP BY 1, 2, 3)"
         )
         parts.append(
             f"g{i} AS (SELECT s, cluster, list(cv ORDER BY pos) AS cvec FROM p{i} GROUP BY 1, 2)"
@@ -773,7 +773,7 @@ def _pq_kmeans_oracle(m: int = 8, w: int = 8, k: int = 8, iters: int = 2, tail: 
     parts.append(
         "cbp AS (SELECT s, cluster AS code, r.range AS pos, "
         "floor(cvec[CAST(r.range AS INT) + 1] * 1000000.0 + 0.5) / 1000000.0 AS cv "
-        f"FROM {prev} CROSS JOIN range({w}) r)"
+        f"FROM {prev} CROSS JOIN range(8) r)"
     )
     parts.append("cbr AS (SELECT s, code, list(cv ORDER BY pos) AS cvec FROM cbp GROUP BY 1, 2)")
     parts.append(

@@ -160,7 +160,7 @@ _SR = 1000  # 1 kHz -> 100-sample windows at window_ms=100
 _QUIET = 1000  # rms 1000/32768 ~ 0.0305, below the 0.05 VAD threshold
 
 
-def _wav_assets(spark, sf_dir, n: int = 150):
+def _wav_assets(spark, sf_dir):
     """(asset_id, data) real PCM WAVs: asset ``a`` has ``8 + a % 9``
     100 ms windows; window ``w`` is ACTIVE (constant amplitude
     ``3277 + (a % 7) * 1000``, ZCR 0) iff ``(a + w) % 7 < 4``, else quiet
@@ -168,7 +168,7 @@ def _wav_assets(spark, sf_dir, n: int = 150):
     ids = (
         load_table(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
-        .filter(F.col("asset_id") < n)
+        .filter(F.col("asset_id") < 150)
     )
 
     def batches(it):

@@ -348,7 +348,7 @@ _PR_TRADE_EDGES_CTE = """edges AS (
 )"""
 
 
-def _pagerank_oracle(iters: int = _PR_ITERS, damp: float = _PR_DAMP) -> str:
+def _pagerank_oracle() -> str:
     """Weighted PageRank unrolled as chained CTEs (the kmeans-oracle
     pattern): one (dangling-mass, rank-update) pair per iteration,
     mirroring the Spark loop step for step. Both sides round to 6 dp at
@@ -363,14 +363,14 @@ def _pagerank_oracle(iters: int = _PR_ITERS, damp: float = _PR_DAMP) -> str:
         "r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS r FROM nodes)",
     ]
     prev = "r0"
-    for i in range(1, iters + 1):
+    for i in range(1, _PR_ITERS + 1):
         parts.append(
             f"d{i} AS (SELECT coalesce(sum(r), 0.0) / (SELECT n FROM nn) AS ds "
             f"FROM {prev} WHERE node NOT IN (SELECT src FROM outw))"
         )
         parts.append(
             f"r{i} AS (SELECT nd.node, "
-            f"(1.0 - {damp}) / (SELECT n FROM nn) + {damp} * (coalesce(inc.s, 0.0) + (SELECT ds FROM d{i})) AS r "
+            f"(1.0 - {_PR_DAMP}) / (SELECT n FROM nn) + {_PR_DAMP} * (coalesce(inc.s, 0.0) + (SELECT ds FROM d{i})) AS r "
             f"FROM nodes nd LEFT JOIN ("
             f"SELECT e.dst AS node, sum(p.r * e.w / o.ow) AS s "
             f"FROM edges e JOIN {prev} p ON e.src = p.node JOIN outw o ON e.src = o.src "
@@ -384,7 +384,7 @@ def _pagerank_oracle(iters: int = _PR_ITERS, damp: float = _PR_DAMP) -> str:
 PAGERANK_ORACLE = _pagerank_oracle()
 
 
-def _pagerank_loop(edges, nodes, n_nodes: float, damp: float = _PR_DAMP, iters: int = _PR_ITERS):
+def _pagerank_loop(edges, nodes, n_nodes: float):
     """The weighted-PageRank iteration: tiny broadcast rank vector per
     iteration, bounded dangling-mass scalar collect, dangling mass
     redistributed uniformly. ``edges`` is (src, dst, w) — pre-cache it;
@@ -393,7 +393,7 @@ def _pagerank_loop(edges, nodes, n_nodes: float, damp: float = _PR_DAMP, iters: 
     (``_pagerank_oracle``)."""
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow")).cache()
     ranks = nodes.withColumn("r", F.lit(1.0 / n_nodes))
-    for _ in range(iters):
+    for _ in range(_PR_ITERS):
         # dangling mass: a bounded scalar collect per iteration
         ds = (
             ranks.join(outw, ranks.node == outw.src, "left_anti")
@@ -411,8 +411,8 @@ def _pagerank_loop(edges, nodes, n_nodes: float, damp: float = _PR_DAMP, iters: 
         ).select(
             "node",
             (
-                F.lit((1.0 - damp) / n_nodes)
-                + F.lit(damp) * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(ds))
+                F.lit((1.0 - _PR_DAMP) / n_nodes)
+                + F.lit(_PR_DAMP) * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(ds))
             ).alias("r"),
         )
     return ranks

@@ -512,7 +512,7 @@ nodes AS (
 """
 
 
-def _label_prop_oracle(iters: int = _LP_ITERS) -> str:
+def _label_prop_oracle() -> str:
     """Synchronous majority-vote label propagation unrolled as chained
     CTEs, mirroring ``graph.label_propagation`` round for round."""
     parts = [
@@ -520,7 +520,7 @@ def _label_prop_oracle(iters: int = _LP_ITERS) -> str:
         "l0 AS (SELECT n.node, s.label FROM nodes n LEFT JOIN seeds s USING (node))",
     ]
     prev = "l0"
-    for i in range(1, iters + 1):
+    for i in range(1, _LP_ITERS + 1):
         parts.append(
             f"v{i} AS (SELECT e.dst AS node, p.label, count(*) AS c "
             f"FROM sym e JOIN {prev} p ON e.src = p.node "
@@ -1072,13 +1072,13 @@ nodes AS (
 """
 
 
-def _label_prop_weighted_oracle(iters: int = _LP_ITERS) -> str:
+def _label_prop_weighted_oracle() -> str:
     parts = [
         "WITH " + _LPW_EDGES_CTE.strip(),
         "l0 AS (SELECT n.node, s.label FROM nodes n LEFT JOIN seeds s USING (node))",
     ]
     prev = "l0"
-    for i in range(1, iters + 1):
+    for i in range(1, _LP_ITERS + 1):
         parts.append(
             f"v{i} AS (SELECT e.dst AS node, p.label, sum(e.w) AS c "
             f"FROM sym e JOIN {prev} p ON e.src = p.node "

@@ -868,7 +868,7 @@ def q_rp_lsh_signatures(spark, sf_dir):
     return similarity.rp_lsh_signatures(_emb(spark, sf_dir), n_planes=16, dim=64)
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
+def _kmeans_oracle() -> str:
     """Lloyd's k-means unrolled as chained CTEs — one (assign, update) pair
     per iteration, mirroring operators/kmeans.py step for step:
 
@@ -888,11 +888,11 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         (
             "c0 AS (SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cluster, v AS cvec "
-            f"FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {k}))"
+            "FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8))"
         ),
     ]
     prev = "c0"
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         parts.append(
             f"a{i} AS (SELECT vec_id, v, cluster FROM ("
             "SELECT e.vec_id, e.v, c.cluster, row_number() OVER (PARTITION BY e.vec_id ORDER BY "
@@ -901,7 +901,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
         )
         parts.append(
             f"p{i} AS (SELECT cluster, r.range AS pos, avg(v[CAST(r.range AS INT) + 1]) AS cv "
-            f"FROM a{i} CROSS JOIN range({dim}) r GROUP BY 1, 2)"
+            f"FROM a{i} CROSS JOIN range(64) r GROUP BY 1, 2)"
         )
         parts.append(f"g{i} AS (SELECT cluster, list(cv ORDER BY pos) AS cvec FROM p{i} GROUP BY cluster)")
         parts.append(
@@ -912,7 +912,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
     final = (
         f"SELECT CAST(cluster AS INT) AS cluster, CAST(p.range AS INT) AS pos, "
         f"{sql_round('cvec[CAST(p.range AS INT) + 1]', 6)} AS centroid_val "
-        f"FROM {prev} CROSS JOIN range({dim}) p"
+        f"FROM {prev} CROSS JOIN range(64) p"
     )
     return ",\n".join(parts) + "\n" + final
 

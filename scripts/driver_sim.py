@@ -10,13 +10,14 @@ Mirrors the documented driver behavior:
   * runs every queries()[name] at sf_dir (default sf0.01) — or only the
     named queries, the fast gate for a change that touches a few — and
     compares to oracle_sql()[name] via DuckDB: row count, sorted column
-    names, and an order-insensitive value hash.
+    names, and an order-insensitive value hash of the rows as
+    ``oracle_compare.normalize_rows`` renders them. A MISMATCH also
+    prints the first three differing normalized rows.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import os
 import sys
 import time
@@ -27,24 +28,14 @@ import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as mod
+from h2outility_spark.oracle_compare import normalize_rows
 from h2outility_spark.sources.parquet import TABLES
 
 
-def value_hash(rows, columns) -> tuple[str, int]:
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    norm = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                vals.append("NaN" if math.isnan(v) else f"{v:.9g}")
-            else:
-                vals.append(str(v))
-        norm.append("\x1f".join(vals))
-    norm.sort()
-    h = hashlib.sha256("\x1e".join(norm).encode()).hexdigest()[:16]
-    return h, len(rows)
+def value_hash(norm: list[tuple[str, ...]]) -> str:
+    """Hash of normalized rows: each joined with \\x1f, re-sorted as strings."""
+    joined = sorted("\x1f".join(r) for r in norm)
+    return hashlib.sha256("\x1e".join(joined).encode()).hexdigest()[:16]
 
 
 def main() -> None:
@@ -109,12 +100,15 @@ def main() -> None:
         cur = con.execute(oracles[name])
         d_cols = [d[0] for d in cur.description]
         d_rows = cur.fetchall()
-        sh, sn = value_hash(s_rows, s_cols)
-        dh, dn = value_hash(d_rows, d_cols)
+        s_norm, d_norm = normalize_rows(s_rows, s_cols)[1], normalize_rows(d_rows, d_cols)[1]
+        sh, sn = value_hash(s_norm), len(s_rows)
+        dh, dn = value_hash(d_norm), len(d_rows)
         ok = sh == dh and sn == dn and sorted(s_cols) == sorted(d_cols)
         print(f"  {name:28s} {'MATCH' if ok else 'MISMATCH'} rows={sn}/{dn} hash={sh}/{dh}  ({elapsed:.1f}s)")
         if not ok:
             bad.append(name)
+            for a, b in [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:3]:
+                print(f"    spark={a}\n    duck ={b}")
     if bad:
         print("MISMATCHED:", bad)
         sys.exit(1)

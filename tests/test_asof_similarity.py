@@ -125,7 +125,7 @@ def test_hybrid_search_rrf_fusion(spark):
     queries = spark.createDataFrame(
         [Row(query_id=100, text="spark shuffle tuning", embedding=[1.0, 0.0, 0.0])]
     )
-    out = hybrid_search(docs, queries, k=3, rrf_k=60)
+    out = hybrid_search(docs, queries, k=3)
     rows = {r["cand_id"]: (r["rank"], r["rrf_score"]) for r in out.collect()}
 
     # lexical ranks: doc1 (3 shared toks) rank1; docs 2,3 share none -> absent

@@ -94,3 +94,39 @@ def test_year_chunks_keep_the_last_fractional_second(spark, tmp_path):
     assert len(files) == 2  # one per year
     data = [ln for f in files for ln in open(f).read().splitlines() if not ln.startswith("#")]
     assert len(data) - len(files) == 3  # minus each file's column row
+
+
+def test_per_series_export_writes_one_file_per_series(spark, tmp_path):
+    """One variable measured by two methods is two series and two files: the
+    file name carries <VariableCode>-<MethodID>, so the second series cannot
+    overwrite the first."""
+    dv = _dv(spark)
+    resource = jobs.ManagedResource(name="site13-per-series", site_id=13, qc_id=0, single_file=False)
+    files = jobs.run_export(dv, resource, str(tmp_path))
+    site = dv.filter((F.col("SiteID") == 13) & (F.col("QualityControlLevelID") == 0))
+    n_series = site.select("VariableCode", "MethodID").distinct().count()
+    assert n_series > site.select("VariableCode").distinct().count()  # some variable has two methods
+    assert len(files) == n_series
+    assert len(set(files)) == n_series
+    assert sorted(os.listdir(tmp_path)) == sorted(os.path.basename(f) for f in files)
+
+
+def test_variable_code_cannot_leave_out_dir(spark, tmp_path):
+    """A free-text VariableCode is one percent-encoded part of the file name:
+    '../x' neither adds a directory nor escapes out_dir."""
+    dv = spark.sql(
+        """
+        SELECT CAST('2020-06-01 00:00:00' AS TIMESTAMP) AS LocalDateTime,
+               -7.0D AS UTCOffset,
+               CAST('2020-06-01 07:00:00' AS TIMESTAMP) AS DateTimeUTC,
+               1 AS SiteID, '../x' AS VariableCode, 1 AS MethodID, 1 AS SourceID,
+               0 AS QualityControlLevelID, 1.0D AS DataValue
+        """
+    )
+    out_dir = tmp_path / "out"
+    resource = jobs.ManagedResource(name="escape", site_id=1, single_file=False)
+    files = jobs.run_export(dv, resource, str(out_dir))
+    assert len(files) == 1
+    assert os.path.dirname(os.path.realpath(files[0])) == os.path.realpath(out_dir)
+    assert os.listdir(tmp_path) == ["out"]
+    assert os.listdir(out_dir) == [os.path.basename(files[0])]

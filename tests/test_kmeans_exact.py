@@ -56,7 +56,7 @@ def test_kmeans_matches_pure_python_lloyds_exactly(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in raw.items()], "vec_id int, embedding array<double>"
     )
-    got = kmeans(df, k=3, max_iter=4, id_col="vec_id", vec_col="embedding")
+    got = kmeans(df, k=3, max_iter=4)
     got_map: dict[int, dict[int, float]] = {}
     for r in got.collect():
         got_map.setdefault(r["cluster"], {})[r["pos"]] = r["centroid_val"]
@@ -75,7 +75,7 @@ def test_kmeans_seed_centroids_survive_empty_cluster(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in raw.items()], "vec_id int, embedding array<double>"
     )
-    got = kmeans(df, k=2, max_iter=3, id_col="vec_id", vec_col="embedding")
+    got = kmeans(df, k=2, max_iter=3)
     want = _lloyd_reference(raw, k=2, max_iter=3)
     got_map: dict[int, dict[int, float]] = {}
     for r in got.collect():
@@ -111,14 +111,14 @@ def test_kmeans_grouped_matches_per_group_kmeans_exactly(spark):
         [(i, s, v[s * 2 : s * 2 + 2]) for i, v in raw.items() for s in (0, 1)],
         "vec_id int, s int, vs array<double>",
     )
-    got = kmeans_grouped(subs, k=2, max_iter=3, id_col="vec_id", group_col="s", vec_col="vs")
+    got = kmeans_grouped(subs, k=2, max_iter=3)
     got_map: dict[tuple[int, int], dict[int, float]] = {}
     for r in got.collect():
         got_map.setdefault((r["s"], r["cluster"]), {})[r["pos"]] = r["centroid_val"]
 
     for s in (0, 1):
         sub = full.selectExpr("vec_id", f"slice(embedding, {s * 2 + 1}, 2) AS embedding")
-        want = kmeans(sub, k=2, max_iter=3, id_col="vec_id", vec_col="embedding")
+        want = kmeans(sub, k=2, max_iter=3)
         want_map: dict[int, dict[int, float]] = {}
         for r in want.collect():
             want_map.setdefault(r["cluster"], {})[r["pos"]] = r["centroid_val"]

@@ -10,7 +10,20 @@ unreached definition does not count, so reachability is propagated from the
 module-level code of every non-test file until it finds nothing new.
 
 Unreached definitions fail the test unless ``KEEP`` names them with the
-reason they stay. AST only; no Spark.
+reason they stay.
+
+The same holds for options: a defaulted parameter of a package function
+(or a defaulted dataclass field) is set if a call in a non-test file passes
+it, by keyword or by position. A call that passes ``*args`` or ``**kwargs``
+sets every parameter of its callee. Calls resolve by bare name, a class name
+to its ``__init__`` and ``super().__init__`` to the bases' ``__init__``. An
+option no entry point sets is a constant: make it one, or name it in
+``KEEP_PARAMS`` with the reason it stays. Outside input is
+exempt: the QC ops in ``plans/oplist.OPS`` and the ``EditSession`` methods
+that record them (a plan JSON sets their arguments), ``OUTSIDE_INPUT``, and
+the definitions that only ``KEEP`` keeps (no entry point calls them).
+
+AST only; no Spark.
 """
 
 from __future__ import annotations
@@ -163,3 +176,165 @@ def test_keep_list_is_tight():
         if not covered or covered <= reached({x for x in KEEP if x != k}):
             stale.append(k)
     assert not stale, f"KEEP entries that are reached anyway or name nothing: {stale}"
+
+
+# --- options -----------------------------------------------------------------
+
+_TEST_ONLY = "test-only behaviour: no entry point sets it, a test does"
+_FAKE = "a test substitutes a fake for the real codec"
+_THRESHOLD = "a test lowers the threshold so fixture-scale data takes the large-input path"
+KEEP_PARAMS = {
+    "operators.multimodal.extract_image_features.decode_fn": _FAKE,
+    "operators.multimodal.resize_images.resize_fn": _FAKE,
+    "operators.ivm.maintain_grouped_minmax.max_broadcast_keys": _THRESHOLD,
+    "storage_tx.TxTable.compact_files.target_bytes": _THRESHOLD,
+    "operators.dedup.lsh_candidate_pairs.max_bucket": _TEST_ONLY,
+    "operators.similarity.cosine_neardup_pairs_lsh.max_bucket": _TEST_ONLY,
+    "operators.dedup.winnow_neardup_pairs.max_bucket": _TEST_ONLY,
+    "operators.asof.asof_join_backward.tolerance_seconds": _TEST_ONLY,
+    "operators.asof.asof_join_backward.tiebreak": _TEST_ONLY,
+    "codecs.encode_jpeg.quality": _TEST_ONLY,
+    "codecs.encode_jpeg.subsampling": _TEST_ONLY,
+    "codecs.encode_jpeg.restart_interval": _TEST_ONLY,
+    "operators.similarity.pq_search.dim": _TEST_ONLY,
+    "operators.mutation.upsert.order_col": _TEST_ONLY,
+    "operators.multimodal.image_neardup_pairs.id_col": _TEST_ONLY,
+    "operators.text.pack_sequences.n_shards": _TEST_ONLY,
+    "storage_tx.TxTable.scan.version": _TEST_ONLY,
+    "storage_tx.TxTable.clone.version": _TEST_ONLY,
+    "storage_tx.TxTable.describe.version": _TEST_ONLY,
+    "edit_session.EditSession.save.new_keys": _TEST_ONLY,
+    "session.get_spark.shuffle_partitions": "the test session (tests/conftest.py) sets it",
+}
+
+_DEPLOYMENT = "a deployment setting of the HydroShare endpoint"
+OUTSIDE_INPUT = {
+    "__main__.main.argv": "the CLI's argument vector",
+    "jobs.ManagedResource": "the fields of a `--resources` spec that the CLI's `export` reads",
+    "sinks.rest_sink.post_json_partitions.auth_token": _DEPLOYMENT,
+    "sinks.rest_sink.post_json_partitions.timeout": _DEPLOYMENT,
+}
+
+
+def _defaults(fn: ast.FunctionDef) -> tuple[list[str], set[str]]:
+    """(positional parameter names, defaulted parameter names)."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    kwonly = {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    return pos, set(pos[len(pos) - len(a.defaults):]) | kwonly
+
+
+def _ops_and_recorders() -> set[str]:
+    """The oplist.OPS functions and the EditSession methods that record them."""
+    out = set()
+    for node in ast.walk(ast.parse((PACKAGE / "plans" / "oplist.py").read_text())):
+        if isinstance(node, ast.AnnAssign) and getattr(node.target, "id", None) == "OPS":
+            out |= {f"operators.qc.{v.attr}" for v in node.value.values}
+    for node in ast.parse((PACKAGE / "edit_session.py").read_text()).body:
+        if isinstance(node, ast.ClassDef) and node.name == "EditSession":
+            for m in node.body:
+                if any(isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "_record"
+                       for c in ast.walk(m)):
+                    out.add(f"edit_session.EditSession.{m.name}")
+    return out
+
+
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    return any(getattr(d, "id", None) == "dataclass" for d in cls.decorator_list)
+
+
+def _dataclass_fields(cls: ast.ClassDef) -> tuple[list[str], set[str]]:
+    """A dataclass's fields are the parameters of its generated ``__init__``."""
+    fields = [s for s in cls.body if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)]
+    return [f.target.id for f in fields], {f.target.id for f in fields if f.value is not None}
+
+
+@functools.cache
+def _options():
+    """{function key: (positional names, defaulted names, self offset)} and the bare-name index.
+
+    A class name indexes its ``__init__`` (a dataclass: its fields, under the class key).
+    """
+    funcs: dict[str, tuple[list[str], set[str], int]] = {}
+    by_name: dict[str, list[str]] = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        mod = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            key = f"{mod}.{stmt.name}" if isinstance(stmt, _DEFS) else None
+            if isinstance(stmt, _DEFS[:2]):
+                funcs[key] = (*_defaults(stmt), 0)
+                by_name.setdefault(stmt.name, []).append(key)
+            elif isinstance(stmt, ast.ClassDef) and _is_dataclass(stmt):
+                funcs[key] = (*_dataclass_fields(stmt), 0)
+                by_name.setdefault(stmt.name, []).append(key)
+            elif isinstance(stmt, ast.ClassDef):
+                for m in stmt.body:
+                    if not isinstance(m, _DEFS[:2]):
+                        continue
+                    static = any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list)
+                    funcs[f"{key}.{m.name}"] = (*_defaults(m), 0 if static else 1)
+                    by_name.setdefault(stmt.name if m.name == "__init__" else m.name, []).append(f"{key}.{m.name}")
+    return funcs, by_name
+
+
+def _calls(tree: ast.AST):
+    """(callee bare names, call) for every call; ``super().m`` resolves through the class's bases."""
+    bases: dict[int, list[str]] = {}
+    for cls in ast.walk(tree):
+        if isinstance(cls, ast.ClassDef):
+            names = [getattr(b, "id", None) or getattr(b, "attr", None) for b in cls.bases]
+            bases.update({id(n): names for n in ast.walk(cls)})
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        f = call.func
+        if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Call) and getattr(f.value.func, "id", None) == "super":
+            yield (bases.get(id(call), []) if f.attr == "__init__" else [f.attr]), call
+        else:
+            yield [getattr(f, "id", None) or getattr(f, "attr", None)], call
+
+
+def _set_options() -> set[str]:
+    """``function.parameter`` for every option some non-test call sets."""
+    funcs, by_name = _options()
+    out = set()
+    for path in _entry_files():
+        for names, call in _calls(ast.parse(path.read_text(), str(path))):
+            for key in (k for n in names for k in by_name.get(n, [])):
+                pos, defaults, offset = funcs[key]
+                if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+                    out |= {f"{key}.{p}" for p in defaults}
+                    continue
+                passed = pos[offset:offset + len(call.args)] + [k.arg for k in call.keywords]
+                out |= {f"{key}.{p}" for p in passed if p in defaults}
+    return out
+
+
+@functools.cache
+def _exempt_functions() -> frozenset[str]:
+    return frozenset(_ops_and_recorders() | (set(_index()[0]) - reached(keep=())))
+
+
+def _exempt(param: str) -> bool:
+    return _kept(param, OUTSIDE_INPUT) or _kept(param.rsplit(".", 1)[0], _exempt_functions())
+
+
+def unset_options(keep=KEEP_PARAMS) -> list[str]:
+    funcs = _options()[0]
+    every = {f"{key}.{p}" for key, (_, defaults, _) in funcs.items() for p in defaults}
+    return sorted(p for p in every - _set_options() if p not in keep and not _exempt(p))
+
+
+def test_every_defaulted_parameter_is_set_or_kept():
+    unset = unset_options()
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no entry point passes (make each a "
+        f"constant, or add it to KEEP_PARAMS with a reason): {unset}"
+    )
+
+
+def test_parameter_keep_list_is_tight():
+    """Each KEEP_PARAMS entry names an option that exists and that no entry point sets."""
+    unset = set(unset_options(keep={}))
+    stale = sorted(p for p in KEEP_PARAMS if p not in unset)
+    assert not stale, f"KEEP_PARAMS entries that an entry point sets, or that name nothing: {stale}"
