@@ -361,7 +361,7 @@ def main() -> None:
         and time.perf_counter() - t_bench_start <= 420
     ):
         try:
-            from h2outility_spark.workload_next9 import neardup_strict_auto
+            from h2outility_spark.workload_similarity import neardup_strict_auto
 
             def _time2(build_df) -> float:
                 samples = []

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def _tiebreak_carry(tiebreak, payload_cols, keys, right_ts):
+def _tiebreak_carry(tiebreak, payload_cols, keys):
     """Extra projection entry needed when the tiebreak names a right-side
     column OUTSIDE keys/payload/ts — it must be carried through the narrow
     projection explicitly or F.col(tiebreak) is unresolvable afterwards."""
@@ -35,28 +35,26 @@ def _tiebreak_carry(tiebreak, payload_cols, keys, right_ts):
         tiebreak is None
         or tiebreak in payload_cols
         or tiebreak in keys
-        or tiebreak == right_ts
+        or tiebreak == "ts"
     ):
         return []
     return [F.col(tiebreak).alias("__tb_raw")]
 
 
-def _tiebreak_col(tiebreak, payload_cols, keys, right_ts):
+def _tiebreak_col(tiebreak, payload_cols, keys):
     """Resolve the tiebreak against the POST-projection right frame: payload
     columns were renamed __p_*, the timestamp became __rts, keys kept their
     names, and anything else rode through as __tb_raw."""
     if tiebreak in payload_cols:
         return F.col(f"__p_{tiebreak}")
-    if tiebreak == right_ts:
+    if tiebreak == "ts":
         return F.col("__rts")
     if tiebreak in keys:
         return F.col(tiebreak)
     return F.col("__tb_raw")
 
 
-def _union_tagged(
-    left, right, keys, left_ts, right_ts, payload_cols, tiebreak, left_side, right_side
-):
+def _union_tagged(left, right, keys, payload_cols, tiebreak, left_side, right_side):
     """Shared prep for every as-of variant: project the right side narrow
     (__rts + __p_* payloads + tiebreak carry), tag both sides with
     __side/__ts, resolve the tiebreak to __tb, union. The ``*_side``
@@ -64,20 +62,20 @@ def _union_tagged(
     semantic difference between the variants' unions. Returns
     (both, payload_cols). Kept as ONE function so a semantic fix (like
     round 8's atomic struct carry) lands everywhere at once."""
-    payload_cols = payload_cols or [c for c in right.columns if c not in keys and c != right_ts]
-    lt = left.withColumn("__side", F.lit(left_side)).withColumn("__ts", F.col(left_ts))
+    payload_cols = payload_cols or [c for c in right.columns if c not in keys and c != "ts"]
+    lt = left.withColumn("__side", F.lit(left_side)).withColumn("__ts", F.col("ts"))
     rt = (
         right.select(
             *keys,
-            F.col(right_ts).alias("__rts"),
+            F.col("ts").alias("__rts"),
             *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
-            *_tiebreak_carry(tiebreak, payload_cols, keys, right_ts),
+            *_tiebreak_carry(tiebreak, payload_cols, keys),
         )
         .withColumn("__side", F.lit(right_side))
         .withColumn("__ts", F.col("__rts"))
     )
     if tiebreak is not None:
-        rt = rt.withColumn("__tb", _tiebreak_col(tiebreak, payload_cols, keys, right_ts)).drop("__tb_raw")
+        rt = rt.withColumn("__tb", _tiebreak_col(tiebreak, payload_cols, keys)).drop("__tb_raw")
         lt = lt.withColumn("__tb", F.lit(None))
     return lt.unionByName(rt, allowMissingColumns=True), payload_cols
 
@@ -119,7 +117,7 @@ def asof_join_backward(
     # semantics; among equal-ts right rows the tiebreak (nulls first, so
     # left rows are unaffected) fixes which one the carry sees last
     both, payload_cols = _union_tagged(
-        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=1, right_side=0
+        left, right, keys, payload_cols, tiebreak, left_side=1, right_side=0
     )
     order = ["__ts", "__side"] + ([F.col("__tb").asc_nulls_first()] if tiebreak is not None else [])
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
@@ -164,7 +162,7 @@ def asof_join_forward(
     # winner first (left rows sit earlier by __side, so their null __tb
     # never reorders them relative to right rows)
     both, payload_cols = _union_tagged(
-        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=0, right_side=1
+        left, right, keys, payload_cols, tiebreak, left_side=0, right_side=1
     )
     order = ["__ts", "__side"] + ([F.col("__tb").desc_nulls_last()] if tiebreak is not None else [])
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(0, W.unboundedFollowing)
@@ -211,7 +209,7 @@ def asof_join_nearest(
     the carried payload columns.
     """
     both, payload_cols = _union_tagged(
-        left, right, keys, "ts", "ts", payload_cols, tiebreak, left_side=1, right_side=0
+        left, right, keys, payload_cols, tiebreak, left_side=1, right_side=0
     )
     tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
     tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []
@@ -274,7 +272,7 @@ def asof_join_interp(
     exactly like the directional variants.
     """
     both, payload_cols = _union_tagged(
-        left, right, keys, "ts", "ts", [value_col], tiebreak, left_side=1, right_side=0
+        left, right, keys, [value_col], tiebreak, left_side=1, right_side=0
     )
     tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
     tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []

@@ -95,17 +95,17 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _banded(signatures: DataFrame, bands: list[list[int]], id_col: str) -> DataFrame:
+def _banded(signatures: DataFrame, bands: list[list[int]]) -> DataFrame:
     """(id, band, band_key) rows from ONE posexplode over an array of band
     keys — not a per-band union, which would re-evaluate the whole signature
     DAG once per band."""
     band_keys = [F.concat_ws("|", *[F.col(f"mh{i}") for i in cols]) for cols in bands]
     return signatures.select(
-        F.col(id_col), F.posexplode(F.array(*band_keys)).alias("band", "band_key")
+        F.col("doc_id"), F.posexplode(F.array(*band_keys)).alias("band", "band_key")
     )
 
 
-def _pairs_from_banded(banded: DataFrame, id_col: str) -> DataFrame:
+def _pairs_from_banded(banded: DataFrame) -> DataFrame:
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -113,9 +113,9 @@ def _pairs_from_banded(banded: DataFrame, id_col: str) -> DataFrame:
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
         .distinct()
     )
 
@@ -132,8 +132,8 @@ def lsh_candidate_pairs_between(
     so a daily batch costs O(batch) signing + one hash join against the
     index, never a corpus re-scan; here both sides are banded from their
     signatures, which is the same plan shape."""
-    bn = _banded(sigs_new, bands, "doc_id").withColumnRenamed("doc_id", "id_a")
-    bo = _banded(sigs_old, bands, "doc_id").withColumnRenamed("doc_id", "id_b")
+    bn = _banded(sigs_new, bands).withColumnRenamed("doc_id", "id_a")
+    bo = _banded(sigs_old, bands).withColumnRenamed("doc_id", "id_b")
     return bn.join(bo, ["band", "band_key"]).select("id_a", "id_b").distinct()
 
 
@@ -149,13 +149,13 @@ def lsh_candidate_pairs(
     (one hot band key with k members turns the self-join cartesian within
     that bucket): buckets wider than the cap contribute NO pairs. None
     (default) disables the width scan entirely — no extra shuffle."""
-    banded = _banded(signatures, bands, "doc_id")
+    banded = _banded(signatures, bands)
     if max_bucket is not None:
-        banded = _without_giant_buckets(banded, "doc_id", max_bucket)
-    return _pairs_from_banded(banded, "doc_id")
+        banded = _without_giant_buckets(banded, max_bucket)
+    return _pairs_from_banded(banded)
 
 
-def _without_giant_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
+def _without_giant_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
     """Drop band rows belonging to over-wide buckets via a broadcast
     anti-join against the (tiny) giant-bucket list — the width count is one
     combiner-friendly aggregation, and the anti-join adds no shuffle of the
@@ -520,8 +520,8 @@ def incremental_neardup_filter(
     bands = [[i] for i in range(num_hashes)]
     bs = minhash_signatures(survivors, num_hashes)
     es = minhash_signatures(existing, num_hashes)
-    bb = _banded(bs, bands, "doc_id").alias("b")
-    eb = _banded(es, bands, "doc_id").alias("e")
+    bb = _banded(bs, bands).alias("b")
+    eb = _banded(es, bands).alias("e")
     cand = (
         eb.join(bb, ["band", "band_key"])
         .select(F.col("e.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))

@@ -14,7 +14,7 @@ combiner-friendly vote aggregate — O(E) per round, ``n_iter`` bounded
 rounds, no driver-side state. Determinism: synchronous updates (round t
 reads only round t-1), majority with (count DESC, label ASC) tie-break —
 an unrolled-CTE SQL oracle reproduces every round exactly (the PageRank
-oracle pattern, ``workload_next5._pagerank_oracle``).
+oracle pattern, ``workload_sketch_graph._pagerank_oracle``).
 
 Reference parity note: the reference has no graph surface; this is part
 of the beyond-reference large-scale pipeline toolkit (same family as

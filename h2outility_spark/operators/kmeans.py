@@ -28,26 +28,26 @@ def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFram
     return spark.createDataFrame(rows, "cluster int, cvec array<double>, cc double")
 
 
-def _assign(vectors: DataFrame, centroids: list[tuple[int, list[float]]], id_col: str, vec_col: str) -> DataFrame:
+def _assign(vectors: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Nearest centroid by squared L2 (v·v dropped — constant per row):
     one broadcast join + one groupBy argmin."""
     spark = vectors.sparkSession
     cents = _centroid_frame(spark, centroids)
-    v = as_double(F.col(vec_col))
+    v = as_double(F.col("embedding"))
     scored = (
-        vectors.select(F.col(id_col), v.alias("__v"))
+        vectors.select(F.col("vec_id"), v.alias("__v"))
         .join(F.broadcast(cents))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "__v",
             "cluster",
             (F.col("cc") - F.lit(2.0) * dot(F.col("__v"), F.col("cvec"))).alias("__d"),
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(F.min(F.struct(F.col("__d"), F.col("cluster"))).alias("__m"), F.first("__v").alias("__v"))
-        .select(F.col(id_col), F.col("__m.cluster").alias("cluster"), "__v", F.col("__m.__d").alias("__part_d"))
+        .select(F.col("vec_id"), F.col("__m.cluster").alias("cluster"), "__v", F.col("__m.__d").alias("__part_d"))
     )
 
 
@@ -61,7 +61,7 @@ def kmeans(embeddings: DataFrame, k: int = 8, max_iter: int = 5) -> DataFrame:
     )
     centroids = [(i, list(r["v"])) for i, r in enumerate(seeds)]
     for _ in range(max_iter):
-        assigned = _assign(embeddings, centroids, "vec_id", "embedding")
+        assigned = _assign(embeddings, centroids)
         new_rows = (
             assigned.select("cluster", F.posexplode("__v").alias("pos", "x"))
             .groupBy("cluster", "pos")

@@ -1,16 +1,17 @@
-"""Multimodal workload queries over SYNTHESIZED binary assets: the
-container ships no image/audio corpora, so each query builds deterministic
-BMP / 16-bit-PCM-WAV payloads from the ``documents`` id space with pure
-arithmetic pixel/sample functions, pushes them through the REAL stdlib
-codecs (``codecs.decode_bmp`` / ``codecs.wav_window_features`` inside the
-``operators.multimodal`` mapInPandas operators), and checks the decoded
-result against a DuckDB oracle that recomputes the expected values from
-the same arithmetic — so a driver row here certifies the whole binary
-path: encode → Arrow batch → decode → feature → JVM-side aggregation.
+"""Multimodal family: frame-sampling and audio-chunking plans, and queries
+over SYNTHESIZED binary assets — the container ships no image/audio
+corpora, so each query builds deterministic BMP / JPEG / 16-bit-PCM-WAV
+payloads from the ``documents`` id space with pure arithmetic pixel/sample
+functions, pushes them through the REAL stdlib codecs (``codecs.decode_bmp``
+/ ``codecs.wav_window_features`` inside the ``operators.multimodal``
+mapInPandas operators), and checks the decoded result against a DuckDB
+oracle that recomputes the expected values from the same arithmetic — so a
+driver row here certifies the whole binary path: encode → Arrow batch →
+decode → feature → JVM-side aggregation.
 
-Reference parity note: the reference's I/O surface is ODM/CSV/REST (e.g.
-``src/Utilities/HydroShareUtility.py``); this module is part of the
-LLM-data-pipeline extension surface (SURVEY.md §6), not a §2 row.
+Reference parity note: the reference's I/O surface is ODM/CSV/REST; this
+module is part of the LLM-data-pipeline extension surface (SURVEY.md §6),
+not a §2 row.
 
 Scale notes: the fixtures are built per-row inside ``mapInPandas`` (no
 driver-side loop, no collect); everything downstream of the codec is the
@@ -25,6 +26,70 @@ from pyspark.sql import functions as F
 from h2outility_spark.operators import multimodal
 from h2outility_spark.sources.parquet import load_table
 from h2outility_spark.workload import query
+from h2outility_spark.workload_text import _docs
+
+
+# ---------------------------------------------------------------------------
+# Multimodal (binary-asset plumbing; Catalyst-only plan stage)
+# ---------------------------------------------------------------------------
+
+@query(
+    "frame_sample",
+    oracle="""
+    SELECT asset_id, CAST(frame_index AS INT) AS frame_index
+    FROM (SELECT doc_id AS asset_id,
+                 unnest(generate_series(0, greatest((n_chars % 300 + 30) - 1, 0), 30)) AS frame_index
+          FROM documents)
+    """,
+    description=(
+        "Video frame-sampling plan: every-30th frame index per asset from declared "
+        "n_frames metadata (sequence + explode, pure Catalyst) — the decode stage later "
+        "touches only these (asset, frame) pairs"
+    ),
+)
+def q_frame_sample(spark, sf_dir):
+    from h2outility_spark.operators import multimodal
+
+    docs = _docs(spark, sf_dir)
+    assets = docs.select(
+        F.col("doc_id").alias("asset_id"),
+        F.lit(None).cast("binary").alias("data"),
+        F.lit("video/mp4").alias("mime"),
+        F.create_map(
+            F.lit("n_frames"), ((F.col("n_chars") % 300) + 30).cast("string")
+        ).alias("meta"),
+    )
+    return multimodal.frame_sample_plan(assets, every_n=30)
+
+
+@query(
+    "audio_chunks",
+    oracle="""
+    SELECT doc_id AS asset_id,
+           CAST(unnest(generate_series(0, greatest((n_chars * 40 + 1000) - 1, 0), 2000)) AS BIGINT)
+             AS chunk_start_ms
+    FROM documents
+    """,
+    description=(
+        "Audio chunking plan: 2 s stride offsets covering each asset's declared "
+        "duration_ms metadata (documents stand in as assets; duration derived "
+        "deterministically from n_chars) — sequence + explode, pure Catalyst; the "
+        "decode stage later touches only planned (asset, offset) pairs"
+    ),
+)
+def q_audio_chunks(spark, sf_dir):
+    from h2outility_spark.operators import multimodal
+
+    docs = _docs(spark, sf_dir)
+    assets = docs.select(
+        F.col("doc_id").alias("asset_id"),
+        F.create_map(
+            F.lit("duration_ms"),
+            ((F.col("n_chars") * 40 + 1000).cast("long")).cast("string"),
+        ).alias("meta"),
+    )
+    return multimodal.audio_chunk_plan(assets, chunk_ms=2_000)
+
 
 # ---------------------------------------------------------------------------
 # Image fixtures: 9x8 gray BMPs (exactly the dHash grid, so the
@@ -91,6 +156,7 @@ def _dhash_sql(ids_cte: str, gray_sql: str) -> str:
 
 
 _PLAIN_GRAY_SQL = "(i.asset_id * 31 + GX * 7 + gy * 13) % 251"
+
 
 # Grouped fixture: base pattern from asset_id % 12; odd (asset_id // 12)
 # assets get +100 (mod 251) on pixel (0, 0), which only the (gy=0, gx=0)
@@ -303,4 +369,68 @@ def q_image_features_jpeg(spark, sf_dir):
 
     assets = ids.mapInPandas(batches, "asset_id long, data binary")
     feats = multimodal.extract_image_features(assets)
+    return feats.select("asset_id", "width", "height", "mean_luma")
+
+
+# -- image resize through the real codec -------------------------------------
+
+#: 24x16 gray BMPs resized to max_side 16 -> 16x10 (nearest neighbor,
+#: integer source-index arithmetic mirrored exactly in SQL). The mean
+#: luma of the RESIZED image is the mean of the sampled source pixels —
+#: g(id, x, y) = (id*29 + x*5 + y*11) % 241, R=G=B so luma = g/255.
+_RESIZE_W, _RESIZE_H, _RESIZE_SIDE = 24, 16, 16  # -> out 16x10
+
+RESIZE_FEATURES_ORACLE = """
+WITH ids AS (SELECT doc_id AS asset_id FROM documents WHERE doc_id < 128),
+-- nearest-neighbor source indices for the 16x10 output: src = min(in-1, out_idx*in//out)
+px AS (
+  SELECT i.asset_id, r.r AS oy, c.c AS ox,
+         (i.asset_id * 29 + least(23, c.c * 24 // 16) * 5 + least(15, r.r * 16 // 10) * 11) % 241 AS g
+  FROM ids i, generate_series(0, 9) r(r), generate_series(0, 15) c(c)
+)
+SELECT asset_id,
+       CAST(16 AS INT) AS width,
+       CAST(10 AS INT) AS height,
+       round(sum(CAST(g AS DOUBLE) / 255) / 160, 6) AS mean_luma
+FROM px GROUP BY asset_id
+"""
+
+
+@query(
+    "image_resize_features",
+    oracle=RESIZE_FEATURES_ORACLE,
+    description=(
+        "Full image-resize round trip through the stdlib codec (decode -> "
+        "nearest-neighbor downsample -> encode -> decode) vs pure index "
+        "arithmetic"
+    ),
+)
+def q_image_resize_features(spark, sf_dir):
+    """Resize real BMPs through the stdlib nearest-neighbor codec, then
+    decode the RESIZED payloads and hash-check their dims + mean luma —
+    certifies the full resize round trip (decode -> downsample -> encode
+    -> decode) against pure index arithmetic."""
+    ids = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.col("doc_id").alias("asset_id"))
+        .filter(F.col("asset_id") < 128)
+    )
+
+    def batches(it):
+        from h2outility_spark.codecs import encode_bmp
+
+        for pdf in it:
+            payloads = []
+            for aid in pdf["asset_id"]:
+                a = int(aid)
+                rows = [
+                    [((a * 29 + x * 5 + y * 11) % 241,) * 3 for x in range(_RESIZE_W)]
+                    for y in range(_RESIZE_H)
+                ]
+                payloads.append(encode_bmp(rows))
+            yield pd.DataFrame({"asset_id": pdf["asset_id"], "data": payloads})
+
+    assets = ids.mapInPandas(batches, "asset_id long, data binary")
+    resized = multimodal.resize_images(assets, max_side=_RESIZE_SIDE)
+    feats = multimodal.extract_image_features(resized)
     return feats.select("asset_id", "width", "height", "mean_luma")

@@ -1,24 +1,198 @@
-"""QC-engine workload queries (SURVEY.md §2.8: W1–W11) with DuckDB oracles.
+"""ODM time-series family: series catalog, filtered extraction, the wide
+pivot export, the QC engine (SURVEY.md §2.8: W1–W11) and the per-series
+time-series operators around it — as-of and range joins, rolling frames,
+percentiles, trend fits, OHLC rollups and the recorded QC plans and edit
+sessions.
 
-Each query applies a QC operator from h2outility_spark.operators.qc over the
-``events`` table, treating (user_id, event_type) as the series key — the
-operators themselves are generic over key/ts/value columns and run all
-series at once (the reference edited one series at a time:
-``edit_service.py`` in /root/reference).
+Each query treats (user_id, event_type) — or the DataValues quintuple for
+the ODM-shaped queries — as the series key; the operators are generic over
+key/ts/value columns and run all series at once (the reference edited one
+series at a time: ``edit_service.py``).
 
 Oracle-parity conventions: integer-microsecond time arithmetic
 (``unix_micros`` / ``epoch_us``), identical IEEE expression shapes on both
-sides, floor-formula rounding (see workload.fround).
+sides, floor-formula rounding (``functions.fround`` / ``workload.sql_round``).
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window as W, functions as F
 
-from h2outility_spark.operators import qc
-from h2outility_spark.workload import _t, fround, query
+from h2outility_spark.functions import fround
+from h2outility_spark.operators import asof, qc
+from h2outility_spark.operators.catalog import derive_catalog, series_year_range
+from h2outility_spark.operators.extract import build_predicate
+from h2outility_spark.operators.reshape import fill_no_data, pivot_column_names, pivot_wide
+from h2outility_spark.plans import oplist
+from h2outility_spark.schema import events_as_datavalues
+from h2outility_spark.workload import DV_CTE, _dv, _t, query, scratch_dir, sql_round
+
+
+# ---------------------------------------------------------------------------
+# Catalog / dims (G-family, J-family)
+# ---------------------------------------------------------------------------
+
+@query(
+    "series_catalog",
+    oracle=DV_CTE
+    + """
+    SELECT SiteID, VariableCode, MethodID, SourceID, QualityControlLevelID,
+           min(LocalDateTime) AS BeginDateTime,
+           max(LocalDateTime) AS EndDateTime,
+           CAST(count(*) AS BIGINT) AS ValueCount,
+           min(DateTimeUTC) AS BeginDateTimeUTC,
+           max(DateTimeUTC) AS EndDateTimeUTC
+    FROM dv
+    GROUP BY 1, 2, 3, 4, 5
+    """,
+    description="G4/J4: derive seriescatalog (one row per series quintuple) from the fact table",
+    bench=True,
+)
+def q_series_catalog(spark, sf_dir):
+    keys = ["SiteID", "VariableCode", "MethodID", "SourceID", "QualityControlLevelID"]
+    return derive_catalog(_dv(spark, sf_dir), keys=keys)
+
+
+@query(
+    "distinct_series",
+    oracle="SELECT DISTINCT user_id, event_type FROM events",
+    description="G2: distinct key sets",
+)
+def q_distinct_series(spark, sf_dir):
+    return _t(spark, sf_dir, "events").select("user_id", "event_type").distinct()
+
+
+# ---------------------------------------------------------------------------
+# Extraction (P-family, O6)
+# ---------------------------------------------------------------------------
+
+@query(
+    "extract_filtered",
+    oracle=DV_CTE
+    + """
+    SELECT DateTimeUTC, LocalDateTime, UTCOffset, DataValue, VariableCode,
+           MethodID, CensorCode, QualifierID
+    FROM dv
+    WHERE QualityControlLevelID = 0
+      AND SourceID = 1
+      AND VariableCode IN ('click', 'view')
+      AND MethodID IN (1, 2)
+      AND LocalDateTime BETWEEN TIMESTAMP '2024-01-01 06:00:00'
+                            AND TIMESTAMP '2024-01-03 18:00:00'
+    """,
+    description="P2-P6/O6: conjunctive predicate + IN lists + BETWEEN, wide column shape",
+)
+def q_extract_filtered(spark, sf_dir):
+    dv = _dv(spark, sf_dir)
+    pred = build_predicate(
+        qc_id=0,
+        source_id=1,
+        variable_codes=["click", "view"],
+        method_ids=[1, 2],
+        start="2024-01-01 06:00:00",
+        end="2024-01-03 18:00:00",
+    )
+    return dv.filter(pred).select(
+        "DateTimeUTC", "LocalDateTime", "UTCOffset", "DataValue", "VariableCode", "MethodID", "CensorCode", "QualifierID"
+    )
+
+
+@query(
+    "extract_incremental",
+    oracle=DV_CTE
+    + """
+    SELECT ValueID, LocalDateTime, DataValue
+    FROM dv
+    WHERE LocalDateTime > (SELECT max(LocalDateTime) FROM dv WHERE ValueID < 500)
+    """,
+    description="P5/I2/S10: open-ended watermark extraction (> last exported timestamp)",
+)
+def q_extract_incremental(spark, sf_dir):
+    dv = _dv(spark, sf_dir)
+    watermark = dv.filter(F.col("ValueID") < 500).agg(F.max("LocalDateTime").alias("wm"))
+    return (
+        dv.join(F.broadcast(watermark))
+        .filter(F.col("LocalDateTime") > F.col("wm"))
+        .select("ValueID", "LocalDateTime", "DataValue")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Pivot / wide export (A-family) — the reference's flagship path
+# ---------------------------------------------------------------------------
+
+EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
+PIVOT_PAIRS = [(code, m) for code in EVENT_TYPES for m in (1, 2)]
+
+
+def _wide_export_oracle() -> str:
+    names = pivot_column_names(PIVOT_PAIRS)
+    cols = ",\n           ".join(
+        f"coalesce(floor((avg(CASE WHEN VariableCode = '{code}' AND MethodID = {m} "
+        f"THEN DataValue END)) * 100.0 + 0.5) / 100.0, CAST(-9999.0 AS DOUBLE)) AS \"{names[(code, m)]}\""
+        for code, m in PIVOT_PAIRS
+    )
+    return (
+        DV_CTE
+        + f"""
+    SELECT SiteID, CAST(LocalDateTime AS DATE) AS obs_date,
+           {cols}
+    FROM dv
+    GROUP BY 1, 2
+    """
+    )
+
+
+@query(
+    "wide_export",
+    oracle=_wide_export_oracle(),
+    description=(
+        "A1-A4: long->wide pivot on (VariableCode, MethodID) with explicit pivot values "
+        "from the catalog, duplicate-column disambiguation, per-column sentinel fill"
+    ),
+    bench=True,
+)
+def q_wide_export(spark, sf_dir):
+    dv = _dv(spark, sf_dir).withColumn("obs_date", F.to_date("LocalDateTime"))
+    names = pivot_column_names(PIVOT_PAIRS)
+    wide = pivot_wide(dv, ["SiteID", "obs_date"], PIVOT_PAIRS, agg="avg")
+    value_cols = [names[p] for p in PIVOT_PAIRS]
+    rounded = wide.select(
+        "SiteID", "obs_date", *[fround(F.col(f"`{c}`"), 2).alias(c) for c in value_cols]
+    )
+    return fill_no_data(rounded, {c: -9999.0 for c in value_cols})
+
+
+# ---------------------------------------------------------------------------
+# Latest observation per series (O4/O5 top-k)
+# ---------------------------------------------------------------------------
+
+@query(
+    "last_per_series",
+    oracle="""
+    SELECT event_id, user_id, event_type, ts
+    FROM (SELECT event_id, user_id, event_type, ts,
+                 row_number() OVER (PARTITION BY user_id, event_type
+                                    ORDER BY ts DESC, event_id DESC) AS rn
+          FROM events)
+    WHERE rn = 1
+    """,
+    description="O4/O5: latest observation per series (tail-1 via window top-k)",
+)
+def q_last_per_series(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    w = W.partitionBy("user_id", "event_type").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("event_id", "user_id", "event_type", "ts")
+    )
+
 
 KEYS = ["user_id", "event_type"]
+
 
 # event_id is the deterministic tiebreak for duplicate timestamps within a
 # series — mirrored in every Spark window via tiebreak="event_id".
@@ -405,4 +579,788 @@ def q_qc_rolling_zscore(spark, sf_dir):
         F.when(F.col("sd") > 0, F.abs(F.col("value") - F.col("mu")) / F.col("sd") > 3.0)
         .otherwise(F.lit(False))
         .alias("is_anomaly"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# J2: left join to a small dimension (inline qualifier dim)
+# ---------------------------------------------------------------------------
+
+QUALIFIER_DIM = [(1, "estimated"), (2, "suspect"), (3, "provisional")]
+
+
+@query(
+    "left_join_qualifiers",
+    oracle=DV_CTE
+    + """
+    SELECT coalesce(q.code, 'unqualified') AS qualifier,
+           CAST(count(*) AS BIGINT) AS n
+    FROM dv LEFT JOIN (VALUES (1, 'estimated'), (2, 'suspect'), (3, 'provisional'))
+                 AS q(QualifierID, code)
+        ON dv.QualifierID = q.QualifierID
+    GROUP BY 1
+    """,
+    description="J2: broadcast left join of the fact table to the qualifier dim, NULL-safe rollup",
+)
+def q_left_join_qualifiers(spark, sf_dir):
+    dv = events_as_datavalues(_t(spark, sf_dir, "events"))
+    dim = spark.createDataFrame(QUALIFIER_DIM, "QualifierID int, code string")
+    return (
+        dv.join(F.broadcast(dim), "QualifierID", "left")
+        .groupBy(F.coalesce(F.col("code"), F.lit("unqualified")).alias("qualifier"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# As-of / range joins
+# ---------------------------------------------------------------------------
+
+@query(
+    "asof_join",
+    oracle="""
+    WITH purch AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+         clicks AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click')
+    SELECT p.event_id, p.user_id, p.ts,
+           c.ts AS asof_ts, c.value AS asof_value
+    FROM purch p ASOF LEFT JOIN clicks c
+      ON p.user_id = c.user_id AND p.ts >= c.ts
+    """,
+    description=(
+        "As-of (backward) join: each purchase aligned to the user's latest click at-or-before "
+        "it — union-sort-carry formulation, one shuffle, no per-group pandas"
+    ),
+    bench=True,
+)
+def q_asof_join(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
+    out = asof.asof_join_backward(purch, clicks, keys=["user_id"], payload_cols=["value"])
+    return out.select("event_id", "user_id", "ts", "asof_ts", F.col("value").alias("asof_value"))
+
+
+@query(
+    "range_join_count",
+    oracle="""
+    WITH purch AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+         clicks AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
+    SELECT p.event_id, p.user_id, p.ts,
+           CAST(count(c.ts) AS BIGINT) AS n_in_band
+    FROM purch p LEFT JOIN clicks c
+      ON p.user_id = c.user_id
+     AND abs(epoch_us(p.ts) - epoch_us(c.ts)) <= 86400000000
+    GROUP BY 1, 2, 3
+    """,
+    description=(
+        "Range join: clicks within ±1 day of each purchase (same user), bucketized to a hash "
+        "join with 3-bucket fan-out instead of an inequality nested loop"
+    ),
+)
+def q_range_join_count(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
+    return asof.range_join_count(
+        purch, clicks, keys=["user_id"], left_ts="ts", right_ts="ts", band_seconds=86400, id_col="event_id"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Catalog aggregates (G3, G5)
+# ---------------------------------------------------------------------------
+
+@query(
+    "series_year_range",
+    oracle=DV_CTE
+    + """
+    SELECT CAST(year(min(BeginDateTime)) AS INT) AS start_year,
+           CAST(year(max(EndDateTime)) AS INT) AS end_year,
+           CAST(year(max(EndDateTime)) - year(min(BeginDateTime)) + 1 AS INT) AS n_years
+    FROM (SELECT min(LocalDateTime) AS BeginDateTime, max(LocalDateTime) AS EndDateTime
+          FROM dv GROUP BY SiteID, VariableCode, MethodID, SourceID, QualityControlLevelID)
+    """,
+    description="G3: GetSeriesYearRange — year window over the selected series for chunk-by-year export",
+)
+def q_series_year_range(spark, sf_dir):
+    dv = events_as_datavalues(_t(spark, sf_dir, "events"))
+    keys = ["SiteID", "VariableCode", "MethodID", "SourceID", "QualityControlLevelID"]
+    catalog = derive_catalog(dv, keys=keys)
+    return series_year_range(catalog).select(
+        "start_year", "end_year", F.size("years").alias("n_years")
+    )
+
+
+@query(
+    "variable_census",
+    oracle="""
+    SELECT user_id,
+           CAST(count(DISTINCT event_type) AS BIGINT) AS n_variables,
+           array_to_string(list_sort(list(DISTINCT event_type)), ',') AS variables
+    FROM events
+    GROUP BY 1
+    """,
+    description="G5: per-site key-set census (distinct variables + deterministic list) for chunk validation",
+)
+def q_variable_census(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("user_id").agg(
+        F.count_distinct("event_type").alias("n_variables"),
+        F.concat_ws(",", F.array_sort(F.collect_set("event_type"))).alias("variables"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Window running aggregates (O-family cumulative frames)
+# ---------------------------------------------------------------------------
+
+@query(
+    "running_totals",
+    oracle="""
+    SELECT event_id, user_id, ts,
+           floor((sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+                 * 100.0 + 0.5) / 100.0 AS running_value,
+           CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rn
+    FROM events
+    WHERE user_id < 50
+    """,
+    description="Cumulative per-series frames: running sum + row index over event time",
+)
+def q_running_totals(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    return ev.select(
+        "event_id",
+        "user_id",
+        "ts",
+        fround(F.sum("value").over(w.rowsBetween(W.unboundedPreceding, 0)), 2).alias("running_value"),
+        F.row_number().over(w).cast("bigint").alias("rn"),
+    )
+
+
+@query(
+    "rolling_avg",
+    oracle="""
+    SELECT event_id, user_id, ts,
+           floor((avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW))
+                 * 10000.0 + 0.5) / 10000.0 AS avg_4
+    FROM events
+    WHERE user_id < 50
+    """,
+    description="Bounded window frames: trailing 4-point moving average per series",
+)
+def q_rolling_avg(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, 0)
+    return ev.select("event_id", "user_id", "ts", fround(F.avg("value").over(w), 4).alias("avg_4"))
+
+
+# -- forward as-of join --------------------------------------------------------
+
+ASOF_FORWARD_ORACLE = """
+WITH purch AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+     clicks AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
+     j AS (
+       SELECT p.event_id, c.ts AS cts, c.value,
+              row_number() OVER (PARTITION BY p.event_id
+                                 ORDER BY c.ts, c.value DESC) AS rk
+       FROM purch p JOIN clicks c
+         ON c.user_id = p.user_id AND c.ts >= p.ts
+        AND epoch_us(c.ts) - epoch_us(p.ts) <= 7200000000
+     )
+SELECT p.event_id, p.user_id, p.ts,
+       s.cts AS asof_ts, CAST(s.value AS DOUBLE) AS asof_value
+FROM purch p LEFT JOIN (SELECT * FROM j WHERE rk = 1) s USING (event_id)
+"""
+
+
+@query(
+    "asof_join_forward",
+    oracle=ASOF_FORWARD_ORACLE,
+    description="Forward as-of join (oldest right row at-or-after, tolerance + tiebreak), union-sort-carry in one shuffle",
+)
+def q_asof_join_forward(spark, sf_dir):
+    """Forward as-of: each purchase aligned to the user's EARLIEST click
+    at-or-after it, within a 2-hour tolerance — the mirror of the
+    certified backward ``asof_join`` (same one-shuffle union-sort-carry,
+    operators/asof.py::asof_join_forward), with ``value`` as the
+    duplicate-timestamp tiebreak so both engines pick the same click.
+    """
+    ev = _t(spark, sf_dir, "events")
+    purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
+    out = asof.asof_join_forward(
+        purch, clicks, keys=["user_id"], payload_cols=["value"],
+        tolerance_seconds=7200, tiebreak="value",
+    )
+    return out.select("event_id", "user_id", "ts", "asof_ts", F.col("value").alias("asof_value"))
+
+
+# -- nearest-direction as-of join ---------------------------------------------
+
+ASOF_NEAREST_ORACLE = """
+WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
+     r AS (SELECT user_id, event_id, ts, value FROM events WHERE event_type = 'click')
+SELECT l.user_id, l.event_id, l.ts,
+       m.ts AS asof_ts, m.dir AS asof_direction,
+       m.click_value
+FROM l LEFT JOIN LATERAL (
+  SELECT r.ts,
+         CASE WHEN r.ts <= l.ts THEN 'backward' ELSE 'forward' END AS dir,
+         floor(r.value * 100.0 + 0.5) / 100.0 AS click_value
+  FROM r
+  WHERE r.user_id = l.user_id
+    AND abs(epoch_us(r.ts) - epoch_us(l.ts)) <= CAST(7200 AS BIGINT) * 1000000
+  ORDER BY abs(epoch_us(r.ts) - epoch_us(l.ts)),
+           CASE WHEN r.ts <= l.ts THEN 0 ELSE 1 END,
+           r.event_id DESC
+  LIMIT 1
+) m ON TRUE
+"""
+
+
+@query(
+    "asof_join_nearest",
+    oracle=ASOF_NEAREST_ORACLE,
+    description="nearest-direction as-of join (min |dt| either way, backward tie-break, tolerance + tiebreak), one shuffle",
+    bench=True,  # round 10: joined the headline set + both scaling blocks
+)
+def q_asof_join_nearest(spark, sf_dir):
+    """Nearest click around each purchase (±2 h): the NEW
+    ``asof_join_nearest`` operator — closest right row in EITHER
+    direction, equidistant ties resolved backward, duplicate-timestamp
+    right rows resolved by largest event_id. The oracle is a per-row
+    LATERAL nearest lookup with the identical ordering contract. One
+    shuffle on user_id (both directional carries ride the same exchange).
+    """
+    ev = _t(spark, sf_dir, "events")
+    purch = ev.filter(F.col("event_type") == "purchase").select("user_id", "event_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", fround(F.col("value"), 2).alias("click_value"), "event_id"
+    )
+    return asof.asof_join_nearest(
+        purch,
+        clicks,
+        ["user_id"],
+        payload_cols=["click_value"],
+        tolerance_seconds=7200,
+        tiebreak="event_id",
+    )
+
+
+# -- exact grouped percentiles -------------------------------------------------
+
+GROUPED_PERCENTILES_ORACLE = """
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n,
+       floor((quantile_cont(value, 0.25)) * 10000.0 + 0.5) / 10000.0 AS p25,
+       floor((quantile_cont(value, 0.50)) * 10000.0 + 0.5) / 10000.0 AS p50,
+       floor((quantile_cont(value, 0.90)) * 10000.0 + 0.5) / 10000.0 AS p90
+FROM events
+GROUP BY event_type
+"""
+
+
+@query(
+    "grouped_percentiles",
+    oracle=GROUPED_PERCENTILES_ORACLE,
+    description="exact per-group linear-interpolation percentiles (Spark percentile = DuckDB quantile_cont)",
+)
+def q_grouped_percentiles(spark, sf_dir):
+    """Exact per-group percentiles by linear interpolation (Spark
+    ``percentile`` ≡ DuckDB ``quantile_cont``: both index p·(n−1) into the
+    sorted values). Exact percentile is a sort-based aggregate — fine at
+    per-group scale; at 100 TB the streaming-sketch twin is
+    ``approx_percentile`` (accuracy-tested in pytest, not hashable
+    cross-engine because sketch merge order is partition-dependent)."""
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        fround(F.expr("percentile(value, 0.25)"), 4).alias("p25"),
+        fround(F.expr("percentile(value, 0.50)"), 4).alias("p50"),
+        fround(F.expr("percentile(value, 0.90)"), 4).alias("p90"),
+    )
+
+
+# -- rolling correlation (W-family depth) --------------------------------------
+
+ROLLING_CORR_ORACLE = """
+SELECT user_id, event_id,
+       floor((corr(value, epoch_us(ts) / 1000000.0)
+              OVER (PARTITION BY user_id ORDER BY ts, event_id
+                    ROWS BETWEEN 5 PRECEDING AND 5 FOLLOWING))
+             * 10000.0 + 0.5) / 10000.0 AS trend_corr
+FROM events
+"""
+
+
+@query(
+    "rolling_corr",
+    oracle=ROLLING_CORR_ORACLE,
+    description="rolling value-vs-time Pearson correlation per series (+-5-row frame), NaN->NULL folded for parity",
+)
+def q_rolling_corr(spark, sf_dir):
+    """Rolling value-vs-time Pearson correlation per series (±5-row frame):
+    the local-trend detector (corr ~ +1 = steady rise, ~ −1 = steady fall).
+    Degenerate frames (zero variance) are normalized to NULL — Spark's
+    corr yields NaN where DuckDB yields NULL, so the NaN is folded before
+    rounding. One shuffle on the series key, same as every QC window."""
+    from pyspark.sql import Window as W
+
+    ev = _t(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-5, 5)
+    c = F.corr(F.col("value"), F.unix_micros("ts") / F.lit(1_000_000.0)).over(w)
+    c = F.when(F.isnan(c), F.lit(None)).otherwise(c)
+    return ev.select("user_id", "event_id", fround(c, 4).alias("trend_corr"))
+
+
+# -- per-group winsorization -------------------------------------------------------
+
+WINSORIZE_ORACLE = """
+WITH b AS (
+  SELECT event_type,
+         quantile_cont(value, 0.05) AS lo,
+         quantile_cont(value, 0.95) AS hi
+  FROM events GROUP BY event_type
+)
+SELECT e.event_id, e.event_type,
+       floor((CASE WHEN e.value < b.lo THEN b.lo
+                   WHEN e.value > b.hi THEN b.hi
+                   ELSE e.value END) * 10000.0 + 0.5) / 10000.0 AS winsorized,
+       CAST(e.value < b.lo OR e.value > b.hi AS BOOLEAN) AS clipped
+FROM events e JOIN b USING (event_type)
+"""
+
+
+@query(
+    "winsorize_values",
+    oracle=WINSORIZE_ORACLE,
+    description="per-group [p05,p95] winsorization, bounds broadcast onto the fact stream (fact table never shuffles)",
+)
+def q_winsorize_values(spark, sf_dir):
+    """Per-group winsorization: clip every value into its group's
+    [p05, p95] band — the robust-stats pre-step QC pipelines run before
+    fitting anything. Shape: one exact-percentile aggregate over the
+    (tiny) group set, BROADCAST back onto the fact stream, clip in a
+    narrow map — the fact table never shuffles, which is the only
+    acceptable plan at 100 TB (the percentile agg shuffles the values
+    once; swap in approx_percentile to make that map-side too)."""
+    ev = _t(spark, sf_dir, "events")
+    bounds = ev.groupBy("event_type").agg(
+        F.expr("percentile(value, 0.05)").alias("lo"),
+        F.expr("percentile(value, 0.95)").alias("hi"),
+    )
+    clipped = F.when(F.col("value") < F.col("lo"), F.col("lo")).when(
+        F.col("value") > F.col("hi"), F.col("hi")
+    ).otherwise(F.col("value"))
+    return ev.join(F.broadcast(bounds), "event_type").select(
+        "event_id",
+        "event_type",
+        fround(clipped, 4).alias("winsorized"),
+        ((F.col("value") < F.col("lo")) | (F.col("value") > F.col("hi"))).alias("clipped"),
+    )
+
+
+# -- hourly OHLC rollup ----------------------------------------------------------
+
+SERIES_OHLC_ORACLE = """
+SELECT user_id, event_type, date_trunc('hour', ts) AS hour_start,
+       floor((first(value ORDER BY ts, event_id)) * 100.0 + 0.5) / 100.0 AS open,
+       floor((max(value)) * 100.0 + 0.5) / 100.0 AS high,
+       floor((min(value)) * 100.0 + 0.5) / 100.0 AS low,
+       floor((last(value ORDER BY ts, event_id)) * 100.0 + 0.5) / 100.0 AS close,
+       CAST(count(*) AS BIGINT) AS n_obs
+FROM events
+GROUP BY 1, 2, 3
+"""
+
+
+@query(
+    "series_ohlc",
+    oracle=SERIES_OHLC_ORACLE,
+    description="hourly OHLC per series via min_by/max_by ordered aggregates, one map-side-partial hash aggregate",
+    bench=True,
+)
+def q_series_ohlc(spark, sf_dir):
+    """Hourly OHLC per series (open = first value in the hour, close =
+    last, ties on timestamp broken by event_id): the canonical downsample
+    for sensor/market series. Spark's min_by/max_by over a (ts, event_id)
+    struct ≡ DuckDB's ordered first/last aggregates. ONE hash aggregate
+    with map-side partials — no window, no sort of the full stream; at
+    100 TB this is the cheapest possible shape for a per-hour summary."""
+    ev = _t(spark, sf_dir, "events")
+    order_key = F.struct(F.col("ts"), F.col("event_id"))
+    return ev.groupBy(
+        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour_start")
+    ).agg(
+        fround(F.min_by(F.col("value"), order_key), 2).alias("open"),
+        fround(F.max("value"), 2).alias("high"),
+        fround(F.min("value"), 2).alias("low"),
+        fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
+        F.count(F.lit(1)).alias("n_obs"),
+    )
+
+
+# -- §2.12 op-list record/replay under a driver hash ---------------------------
+
+#: The recorded plan: select values > 60, AND-compose with |Δ|>=40 spikes,
+#: subtract the 1.5 calibration bias from the selection, flag it.
+OPLIST_PLAN = [
+    {"op": "select_value_threshold", "args": {"op": ">", "threshold": 60.0}},
+    {
+        "op": "select_value_change",
+        "args": {"threshold": 40.0, "compose": True, "tiebreak": "ValueID"},
+    },
+    {"op": "change_value", "args": {"op": "-", "operand": 1.5}},
+    {"op": "flag_selected", "args": {"qualifier_id": 9}},
+]
+
+
+OPLIST_REPLAY_ORACLE = (
+    DV_CTE
+    + """,
+w AS (
+  SELECT ValueID, DataValue, QualifierID,
+         abs(DataValue - lead(DataValue) OVER win) AS dn,
+         abs(DataValue - lag(DataValue) OVER win) AS dp
+  FROM dv
+  WINDOW win AS (PARTITION BY SiteID, VariableCode ORDER BY LocalDateTime, ValueID)
+),
+sel AS (
+  SELECT ValueID, DataValue, QualifierID,
+         (DataValue > 60.0) AND coalesce(dn >= 40.0 OR dp >= 40.0, FALSE) AS selected
+  FROM w
+)
+SELECT ValueID,
+       floor((CASE WHEN selected THEN DataValue - 1.5 ELSE DataValue END) * 100.0 + 0.5) / 100.0
+         AS data_value,
+       CASE WHEN selected THEN 9 ELSE QualifierID END AS qualifier_id,
+       selected
+FROM sel
+"""
+)
+
+
+@query(
+    "oplist_replay",
+    oracle=OPLIST_REPLAY_ORACLE,
+    description="§2.12 record/replay: four-op QC plan saved to JSON, loaded, compiled, replayed",
+)
+def q_oplist_replay(spark, sf_dir):
+    """Record → persist → load → replay: the op-list is SAVED as JSON and
+    read back before compiling, so the serialization format rides the
+    hash along with every op's semantics and the AND-compose rule.
+    Catalyst sees the whole composed plan as one lineage (recording costs
+    nothing); the only shuffle is the per-series window the spike
+    selection needs."""
+    path = os.path.join(scratch_dir("h2ou_oplist_"), "plan.json")
+    oplist.save_plan(OPLIST_PLAN, path)
+    plan = oplist.load_plan(path)
+
+    dv = _dv(spark, sf_dir)
+    edited = oplist.apply_plan(dv, plan, keys=["SiteID", "VariableCode"])
+    return edited.select(
+        "ValueID",
+        fround(F.col("DataValue"), 2).alias("data_value"),
+        F.col("QualifierID").alias("qualifier_id"),
+        F.col("selected"),
+    )
+
+
+# -- interactive edit-session facade round trip ---------------------------------
+
+EDIT_SESSION_ORACLE = (
+    DV_CTE
+    + """,
+store AS (
+  SELECT ValueID, SiteID, VariableCode, LocalDateTime, DataValue, QualifierID
+  FROM dv WHERE SiteID <= 10
+),
+edited AS (
+  SELECT ValueID, SiteID, VariableCode, LocalDateTime,
+         CASE WHEN DataValue > 80.0 THEN DataValue * 0.5 ELSE DataValue END AS DataValue,
+         CASE WHEN DataValue > 80.0 THEN 7 ELSE QualifierID END AS QualifierID
+  FROM store WHERE SiteID <= 5
+)
+SELECT ValueID, SiteID, VariableCode, LocalDateTime,
+       floor(DataValue * 100.0 + 0.5) / 100.0 AS data_value,
+       QualifierID AS qualifier_id
+FROM (SELECT * FROM edited UNION ALL SELECT * FROM store WHERE SiteID > 5)
+"""
+)
+
+
+@query(
+    "edit_session_roundtrip",
+    oracle=EDIT_SESSION_ORACLE,
+    description="§3.3 interactive QC session end-to-end: select→edit→flag→transactional save→read back",
+)
+def q_edit_session_roundtrip(spark, sf_dir):
+    """The §3.3 interactive QC session end-to-end on one hash: open a
+    cached working set (S4) over sites ≤ 5, record a BAD edit (zero
+    everything) and ROLL IT BACK (W9 — if restore() failed to truncate
+    the plan, the zeros survive and flip the hash), re-record the real
+    edits (threshold selection → halve → flag 7), then SAVE through the
+    transactional path (W8/M1: merge_upsert into a TxTable holding the
+    sites ≤ 10 store) and return the committed snapshot. The oracle
+    restates the final store algebraically: edited working set replaces
+    its rows by ValueID, untouched sites ride through."""
+    from h2outility_spark.edit_session import EditSession
+    from h2outility_spark.storage_tx import TxTable
+
+    dv = _dv(spark, sf_dir).select(
+        "ValueID", "SiteID", "VariableCode", "LocalDateTime", "DataValue", "QualifierID"
+    )
+    store_rows = dv.filter(F.col("SiteID") <= 10)
+    table = TxTable(spark, scratch_dir("h2ou_edit_") + "/t", key_cols=["ValueID"])
+    table.append(store_rows)
+
+    sess = EditSession(dv, keys=["SiteID", "VariableCode"], series_filter=F.col("SiteID") <= 5)
+    try:
+        # a wrong turn, rolled back — W9 on the hash
+        sess.select_value_threshold(">", -1e18).change_value("=", 0.0)
+        sess.restore()
+        # the real session
+        sess.select_value_threshold(">", 80.0).change_value("*", 0.5).flag(7)
+        sess.save_to_table(table)
+    finally:
+        sess.close()
+
+    snap = table.snapshot()
+    return snap.select(
+        "ValueID",
+        "SiteID",
+        "VariableCode",
+        "LocalDateTime",
+        fround(F.col("DataValue"), 2).alias("data_value"),
+        F.col("QualifierID").alias("qualifier_id"),
+    )
+
+
+# -- per-series linear trend fit -------------------------------------------------
+
+TREND_FIT_ORACLE = """
+SELECT user_id,
+       CAST(count(*) AS BIGINT) AS n,
+       floor((regr_slope(value, epoch_us(ts) / 86400000000.0)) * 1000000.0 + 0.5) / 1000000.0 AS slope,
+       floor((regr_intercept(value, epoch_us(ts) / 86400000000.0)) * 1000000.0 + 0.5) / 1000000.0 AS intercept
+FROM events
+GROUP BY user_id
+"""
+
+
+@query(
+    "series_trend_fit",
+    oracle=TREND_FIT_ORACLE,
+    description="per-series OLS trend: regr_slope/regr_intercept, NaN-on-zero-variance folded to NULL",
+)
+def q_series_trend_fit(spark, sf_dir):
+    """Per-series least-squares trend: slope and intercept of value vs
+    time-in-days per user (the drift-rate estimator the QC drift
+    correction consumes). Built-in regr_slope/regr_intercept aggregates —
+    one hash aggregate with map-side partials, no window, no sort; NaN
+    from zero-variance series folds to NULL for cross-engine parity."""
+    ev = _t(spark, sf_dir, "events")
+    days = F.unix_micros(F.col("ts")) / F.lit(86400000000.0)
+    slope = F.expr("regr_slope(value, __days)")
+    intercept = F.expr("regr_intercept(value, __days)")
+    out = (
+        ev.withColumn("__days", days)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            slope.alias("__slope"),
+            intercept.alias("__icept"),
+        )
+    )
+    fold = lambda c: F.when(F.isnan(c), F.lit(None)).otherwise(c)  # noqa: E731
+    return out.select(
+        "user_id",
+        "n",
+        fround(fold(F.col("__slope")), 6).alias("slope"),
+        fround(fold(F.col("__icept")), 6).alias("intercept"),
+    )
+
+
+# -- weekly quality drift monitor -------------------------------------------------
+
+QUALITY_DRIFT_ORACLE = """
+WITH w AS (
+  SELECT event_type, date_trunc('week', ts) AS week_start,
+         quantile_cont(value, 0.50) AS p50
+  FROM events GROUP BY 1, 2
+)
+SELECT event_type, week_start,
+       floor(p50 * 10000.0 + 0.5) / 10000.0 AS p50,
+       floor((p50 - lag(p50) OVER (PARTITION BY event_type ORDER BY week_start))
+             * 10000.0 + 0.5) / 10000.0 AS drift
+FROM w
+"""
+
+
+@query(
+    "quality_drift_weekly",
+    oracle=QUALITY_DRIFT_ORACLE,
+    description="per-series weekly median with week-over-week drift delta (lag window)",
+)
+def q_quality_drift_weekly(spark, sf_dir):
+    """Per-series weekly median and its week-over-week delta — the drift
+    alarm a production corpus pipeline watches per source/series. One
+    hash aggregate to the weekly grain, then a lag window over the
+    (tiny) weekly frame; the first week's drift is NULL by contract.
+    At 100 TB the weekly rollup is the only pass over the facts."""
+    from pyspark.sql import Window as W
+
+    ev = _t(spark, sf_dir, "events")
+    # DuckDB's date_trunc('week', ts) yields DATE; Spark's yields
+    # TIMESTAMP — cast to date so the grain (and the hash) agree
+    w = ev.groupBy(
+        "event_type", F.date_trunc("week", "ts").cast("date").alias("week_start")
+    ).agg(F.expr("percentile(value, 0.50)").alias("__p50"))
+    win = W.partitionBy("event_type").orderBy("week_start")
+    return w.select(
+        "event_type",
+        "week_start",
+        fround(F.col("__p50"), 4).alias("p50"),
+        fround(F.col("__p50") - F.lag("__p50").over(win), 4).alias("drift"),
+    )
+
+
+# -- interpolating as-of join --------------------------------------------------------
+
+ASOF_INTERP_ORACLE = """
+WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
+     r AS (SELECT user_id, event_id, ts, value FROM events WHERE event_type = 'click')
+SELECT l.user_id, l.event_id, l.ts,
+       b.ts AS ts_before, f.ts AS ts_after,
+       CASE WHEN b.ts IS NOT NULL AND f.ts IS NOT NULL THEN 'interp'
+            WHEN b.ts IS NOT NULL THEN 'backward'
+            WHEN f.ts IS NOT NULL THEN 'forward' END AS method,
+       floor((CASE
+         WHEN b.ts IS NOT NULL AND f.ts IS NOT NULL THEN
+           b.v + (f.v - b.v) * (CAST(epoch_us(l.ts) - epoch_us(b.ts) AS DOUBLE)
+                                / CAST(epoch_us(f.ts) - epoch_us(b.ts) AS DOUBLE))
+         WHEN b.ts IS NOT NULL THEN b.v
+         ELSE f.v END) * 10000.0 + 0.5) / 10000.0 AS value_interp
+FROM l
+LEFT JOIN LATERAL (
+  SELECT r.ts, r.value AS v FROM r
+  WHERE r.user_id = l.user_id AND r.ts <= l.ts
+  ORDER BY r.ts DESC, r.event_id DESC LIMIT 1
+) b ON TRUE
+LEFT JOIN LATERAL (
+  SELECT r.ts, r.value AS v FROM r
+  WHERE r.user_id = l.user_id AND r.ts > l.ts
+  ORDER BY r.ts ASC, r.event_id DESC LIMIT 1
+) f ON TRUE
+"""
+
+
+@query(
+    "asof_interp_join",
+    oracle=ASOF_INTERP_ORACLE,
+    description="interpolating as-of join: linear interpolation between bracketing rows, constant extrapolation at edges",
+)
+def q_asof_interp_join(spark, sf_dir):
+    """The interpolating as-of join (``asof.asof_join_interp``): each
+    purchase gets the click value LINEARLY INTERPOLATED at its timestamp
+    between the bracketing clicks (constant extrapolation at the edges,
+    labeled by ``method``) — completing the as-of family
+    backward/forward/nearest/interp. Both bracket carries ride ONE
+    shuffle on user_id; the oracle is a two-LATERAL bracket lookup with
+    the identical integer-microsecond interpolation arithmetic, so the
+    interpolated DOUBLES (4-dp) match bit-for-bit, not just the shape."""
+    from h2outility_spark.operators import asof
+
+    ev = _t(spark, sf_dir, "events")
+    purch = ev.filter(F.col("event_type") == "purchase").select("user_id", "event_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "value", "event_id"
+    )
+    out = asof.asof_join_interp(
+        purch, clicks, ["user_id"], value_col="value", tiebreak="event_id"
+    )
+    return out.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "ts_before",
+        "ts_after",
+        "method",
+        fround(F.col("value_interp"), 4).alias("value_interp"),
+    )
+
+
+# -- MAD robust outlier detection ------------------------------------------------------
+
+_MAD_K = 1.4826  # consistency constant: MAD ~ sigma for a normal population
+_MAD_Z = 3.5     # the Iglewicz-Hoaglin recommended cut
+
+QC_ROBUST_MAD_ORACLE = (
+    DV_CTE
+    + f""",
+med AS (
+  SELECT SiteID, VariableCode, quantile_cont(DataValue, 0.5) AS med
+  FROM dv GROUP BY 1, 2
+),
+j AS (
+  SELECT dv.ValueID, dv.SiteID, dv.VariableCode, dv.DataValue, m.med
+  FROM dv JOIN med m ON m.SiteID = dv.SiteID AND m.VariableCode = dv.VariableCode
+),
+mad AS (
+  SELECT SiteID, VariableCode, quantile_cont(abs(DataValue - med), 0.5) AS mad
+  FROM j GROUP BY 1, 2
+)
+SELECT j.ValueID,
+       CASE WHEN d.mad > 0
+            THEN {sql_round(f"abs(j.DataValue - j.med) / ({_MAD_K} * d.mad)", 4)} END AS robust_z,
+       coalesce(
+         CASE WHEN d.mad > 0
+              THEN {sql_round(f"abs(j.DataValue - j.med) / ({_MAD_K} * d.mad)", 4)} END > {_MAD_Z},
+         abs(j.DataValue - j.med) > 0
+       ) AS is_outlier
+FROM j JOIN mad d ON d.SiteID = j.SiteID AND d.VariableCode = j.VariableCode
+"""
+)
+
+
+@query(
+    "qc_robust_mad",
+    oracle=QC_ROBUST_MAD_ORACLE,
+    description="W2-family robust outliers: Iglewicz-Hoaglin modified z-score (median/MAD) per series",
+)
+def q_qc_robust_mad(spark, sf_dir):
+    """Robust per-series outlier detection by the MAD rule (Iglewicz &
+    Hoaglin's modified z-score: |x − median| / (1.4826·MAD) > 3.5) — the
+    QC flag that survives the very spikes it hunts, unlike the certified
+    mean/stddev ``qc_rolling_zscore`` whose statistics the outlier
+    itself drags. Two exact grouped medians (series median, then MAD on
+    the residuals) each broadcast back onto the fact stream — the
+    winsorize/grouped-percentile scale shape doubled. Degenerate series
+    (MAD = 0, over half the points identical) fall back to flagging any
+    deviation from the median; the z itself is NULL there, mirrored by
+    the oracle. Flag compared on the ROUNDED z on both engines."""
+    dv = _dv(spark, sf_dir).select("ValueID", "SiteID", "VariableCode", "DataValue")
+    keys = ["SiteID", "VariableCode"]
+    med = dv.groupBy(*keys).agg(F.expr("percentile(DataValue, 0.5)").alias("med"))
+    j = dv.join(F.broadcast(med), keys)
+    mad = j.groupBy(*keys).agg(
+        F.expr("percentile(abs(DataValue - med), 0.5)").alias("mad")
+    )
+    out = j.join(F.broadcast(mad), keys)
+    rz = F.when(
+        F.col("mad") > 0,
+        fround(
+            F.abs(F.col("DataValue") - F.col("med")) / (F.lit(_MAD_K) * F.col("mad")), 4
+        ),
+    )
+    return out.select(
+        "ValueID",
+        rz.alias("robust_z"),
+        F.coalesce(
+            rz > F.lit(_MAD_Z),
+            F.abs(F.col("DataValue") - F.col("med")) > F.lit(0.0),
+        ).alias("is_outlier"),
     )

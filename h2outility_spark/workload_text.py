@@ -1,6 +1,9 @@
-"""LLM-data-pipeline workload queries: text analysis, deduplication,
-similarity search — each with a DuckDB oracle (BASELINE.json north star;
-these extend the reference, which has no text/embedding surface).
+"""Text and corpus family of the LLM-data pipeline: text analysis, n-gram
+and vocabulary statistics, exact and near-duplicate detection (MinHash,
+SimHash, winnowing, containment), quality filtering and calibration,
+chunking and packing, splits, samples and source-mixture planning — each
+with a DuckDB oracle (these extend the reference, which has no text
+surface).
 
 Portability notes: md5 is identical in Spark and DuckDB (the minhash /
 simhash / fingerprint trick); fixed-width hex strings compare like the
@@ -11,10 +14,14 @@ replace-all.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window as W, functions as F
 
-from h2outility_spark.operators import dedup, similarity, text
-from h2outility_spark.workload import _t, fround, query, sql_round
+from h2outility_spark.functions import fround
+from h2outility_spark.operators import dedup, text
+from h2outility_spark.operators.text import token_count
+from h2outility_spark.sources.parquet import load_table
+from h2outility_spark.workload import _t, query, sql_round
+
 
 # Shared oracle CTE fragments (parameterizable by source table so the same
 # shingle/minhash pipeline can run over `documents` or a filtered CTE) -------
@@ -68,6 +75,7 @@ def mh_cte(src: str = "documents") -> str:
 
 MH_CTE = mh_cte()
 
+
 # cand -> verified jpairs (id_a, id_b) as a CTE chain (the CTE form of
 # JACCARD_TAIL, for oracles that consume the pairs downstream).
 JPAIRS_CTE = """
@@ -89,6 +97,7 @@ JPAIRS_CTE = """
     )
 """
 
+
 MH_CAND_CTE = """,
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -97,6 +106,7 @@ MH_CAND_CTE = """,
        AND (""" + " OR ".join(f"a.mh{i} = b.mh{i}" for i in range(MINHASH_K)) + """)
     ),
 """
+
 
 # jpairs -> connected components via transitive closure; `reach` is the
 # recursive min-label closure (UNION dedups, so it terminates).
@@ -111,6 +121,7 @@ CLUSTERS_CTE = """,
     ),
     clusters AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY 1)
 """
+
 
 # Distinct shingles + set sizes + exact jaccard for a `cand` (id_a, id_b) CTE.
 JACCARD_TAIL = """
@@ -135,10 +146,6 @@ JACCARD_TAIL = """
 
 def _docs(spark, sf_dir):
     return _t(spark, sf_dir, "documents")
-
-
-def _emb(spark, sf_dir):
-    return _t(spark, sf_dir, "embeddings")
 
 
 # ---------------------------------------------------------------------------
@@ -494,6 +501,8 @@ _N_TOKENS_SQL = (
     "CASE WHEN length(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))) = 0 THEN 0 "
     "ELSE array_length(regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' ')) END"
 )
+
+
 _ALPHA_RATIO_SQL = (
     "coalesce(CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) "
     "/ (CASE WHEN length(text) > 0 THEN CAST(length(text) AS DOUBLE) END), 0.0)"
@@ -688,280 +697,6 @@ def q_simhash_signatures(spark, sf_dir):
 )
 def q_neardup_simhash_pairs(spark, sf_dir):
     return dedup.simhash_neardup_pairs(_docs(spark, sf_dir), max_hamming=3)
-
-
-# ---------------------------------------------------------------------------
-# Multimodal (binary-asset plumbing; Catalyst-only plan stage)
-# ---------------------------------------------------------------------------
-
-@query(
-    "frame_sample",
-    oracle="""
-    SELECT asset_id, CAST(frame_index AS INT) AS frame_index
-    FROM (SELECT doc_id AS asset_id,
-                 unnest(generate_series(0, greatest((n_chars % 300 + 30) - 1, 0), 30)) AS frame_index
-          FROM documents)
-    """,
-    description=(
-        "Video frame-sampling plan: every-30th frame index per asset from declared "
-        "n_frames metadata (sequence + explode, pure Catalyst) — the decode stage later "
-        "touches only these (asset, frame) pairs"
-    ),
-)
-def q_frame_sample(spark, sf_dir):
-    from h2outility_spark.operators import multimodal
-
-    docs = _docs(spark, sf_dir)
-    assets = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit(None).cast("binary").alias("data"),
-        F.lit("video/mp4").alias("mime"),
-        F.create_map(
-            F.lit("n_frames"), ((F.col("n_chars") % 300) + 30).cast("string")
-        ).alias("meta"),
-    )
-    return multimodal.frame_sample_plan(assets, every_n=30)
-
-
-@query(
-    "audio_chunks",
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(unnest(generate_series(0, greatest((n_chars * 40 + 1000) - 1, 0), 2000)) AS BIGINT)
-             AS chunk_start_ms
-    FROM documents
-    """,
-    description=(
-        "Audio chunking plan: 2 s stride offsets covering each asset's declared "
-        "duration_ms metadata (documents stand in as assets; duration derived "
-        "deterministically from n_chars) — sequence + explode, pure Catalyst; the "
-        "decode stage later touches only planned (asset, offset) pairs"
-    ),
-)
-def q_audio_chunks(spark, sf_dir):
-    from h2outility_spark.operators import multimodal
-
-    docs = _docs(spark, sf_dir)
-    assets = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.create_map(
-            F.lit("duration_ms"),
-            ((F.col("n_chars") * 40 + 1000).cast("long")).cast("string"),
-        ).alias("meta"),
-    )
-    return multimodal.audio_chunk_plan(assets, chunk_ms=2_000)
-
-
-# ---------------------------------------------------------------------------
-# Similarity search
-# ---------------------------------------------------------------------------
-
-@query(
-    "embedding_knn",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-               FROM embeddings WHERE vec_id < 10),
-    c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-    s AS (
-      SELECT query_id, cand_id,
-             list_inner_product(qv, cv)
-               / sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)) AS cos_raw
-      FROM c, q WHERE cand_id <> query_id
-    ),
-    r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos_raw DESC, cand_id) AS rk FROM s)
-    SELECT query_id, cand_id, floor(cos_raw * 10000.0 + 0.5) / 10000.0 AS cos_sim
-    FROM r WHERE rk <= 5
-    """,
-    description="Brute-force cosine top-5 neighbors for query vectors (vec_id < 10)",
-    bench=True,
-)
-def q_embedding_knn(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 10)
-    topk = similarity.brute_force_topk(emb, queries, k=5)
-    return topk.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
-
-
-@query(
-    "embedding_centroids",
-    oracle="""
-    SELECT label, CAST(pos - 1 AS INT) AS pos,
-           floor((avg(x)) * 1000000.0 + 0.5) / 1000000.0 AS centroid_val
-    FROM (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x,
-                 generate_subscripts(embedding, 1) AS pos
-          FROM embeddings)
-    GROUP BY 1, 2
-    """,
-    description="IVF coarse quantizer: element-wise mean embedding per label (posexplode + groupBy)",
-)
-def q_embedding_centroids(spark, sf_dir):
-    cents = similarity.centroids_by_label(_emb(spark, sf_dir))
-    return cents.select("label", F.col("pos").cast("int").alias("pos"), fround(F.col("centroid_val"), 6).alias("centroid_val"))
-
-
-@query(
-    "neardup_embedding_pairs",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           floor((list_inner_product(a.v, b.v)
-                  / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)))
-                 * 10000.0 + 0.5) / 10000.0 AS cos_sim
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_inner_product(a.v, b.v)
-          / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.45
-    """,
-    description=(
-        "Embedding-cosine near-dup pairs (threshold 0.45): exact verifier run global here; "
-        "at corpus scale it verifies within LSH/IVF buckets only"
-    ),
-)
-def q_neardup_embedding_pairs(spark, sf_dir):
-    out = similarity.cosine_neardup_pairs(_emb(spark, sf_dir), threshold=0.45)
-    return out.select("id_a", "id_b", fround(F.col("cos_sim"), 4).alias("cos_sim"))
-
-
-@query(
-    "neardup_embedding_lsh",
-    bench=True,
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           floor((list_inner_product(a.v, b.v)
-                  / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)))
-                 * 10000.0 + 0.5) / 10000.0 AS cos_sim
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_inner_product(a.v, b.v)
-          / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.45
-    """,
-    description=(
-        "Embedding near-dup via RP-LSH prefilter (4-bit x 32-band bucketed self-join) + "
-        "exact in-bucket cosine verify — the scale path; brute-force oracle proves recall 1.0"
-    ),
-)
-def q_neardup_embedding_lsh(spark, sf_dir):
-    out = similarity.cosine_neardup_pairs_lsh(_emb(spark, sf_dir), threshold=0.45)
-    return out.select("id_a", "id_b", fround(F.col("cos_sim"), 4).alias("cos_sim"))
-
-
-def _rp_lsh_oracle() -> str:
-    planes = similarity.random_hyperplanes(16, 64)
-    bits = []
-    for row in planes:
-        arr = "[" + ", ".join(f"{x:.1f}" for x in row) + "]::DOUBLE[]"
-        bits.append(
-            f"CASE WHEN list_inner_product(CAST(embedding AS DOUBLE[]), {arr}) > 0 THEN '1' ELSE '0' END"
-        )
-    return f"SELECT vec_id, concat({', '.join(bits)}) AS rp_sig FROM embeddings"
-
-
-@query(
-    "rp_lsh_signatures",
-    oracle=_rp_lsh_oracle(),
-    description=(
-        "Random-hyperplane LSH (SimHash-for-vectors): 16 sign bits from deterministic "
-        "md5-derived hyperplanes — the bucket-join prefilter for cosine near-dup"
-    ),
-)
-def q_rp_lsh_signatures(spark, sf_dir):
-    return similarity.rp_lsh_signatures(_emb(spark, sf_dir), n_planes=16, dim=64)
-
-
-def _kmeans_oracle() -> str:
-    """Lloyd's k-means unrolled as chained CTEs — one (assign, update) pair
-    per iteration, mirroring operators/kmeans.py step for step:
-
-      seeds   = first k vectors by vec_id (cluster id = rank order);
-      assign  = arg-min over the k squared-L2 distances, computed as
-                c·c − 2·v·c exactly like ``_assign`` (v·v dropped — constant
-                per row), ties broken by cluster id;
-      update  = per-cluster per-position average; an empty cluster keeps its
-                previous centroid (the LEFT JOIN + coalesce).
-
-    ``list_inner_product`` accumulates left-to-right like the Spark-side
-    ``dot`` fold, so distances agree bit-for-bit; centroid averages can
-    differ in the last ulp (accumulation order) but both sides round to
-    6 dp at the end, exactly as the Spark query does.
-    """
-    parts = [
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-        (
-            "c0 AS (SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cluster, v AS cvec "
-            "FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8))"
-        ),
-    ]
-    prev = "c0"
-    for i in range(1, 4):
-        parts.append(
-            f"a{i} AS (SELECT vec_id, v, cluster FROM ("
-            "SELECT e.vec_id, e.v, c.cluster, row_number() OVER (PARTITION BY e.vec_id ORDER BY "
-            "list_inner_product(c.cvec, c.cvec) - 2.0 * list_inner_product(e.v, c.cvec), c.cluster) AS rn "
-            f"FROM e CROSS JOIN {prev} c) WHERE rn = 1)"
-        )
-        parts.append(
-            f"p{i} AS (SELECT cluster, r.range AS pos, avg(v[CAST(r.range AS INT) + 1]) AS cv "
-            f"FROM a{i} CROSS JOIN range(64) r GROUP BY 1, 2)"
-        )
-        parts.append(f"g{i} AS (SELECT cluster, list(cv ORDER BY pos) AS cvec FROM p{i} GROUP BY cluster)")
-        parts.append(
-            f"c{i} AS (SELECT c.cluster, coalesce(g.cvec, c.cvec) AS cvec "
-            f"FROM {prev} c LEFT JOIN g{i} g USING (cluster))"
-        )
-        prev = f"c{i}"
-    final = (
-        f"SELECT CAST(cluster AS INT) AS cluster, CAST(p.range AS INT) AS pos, "
-        f"{sql_round('cvec[CAST(p.range AS INT) + 1]', 6)} AS centroid_val "
-        f"FROM {prev} CROSS JOIN range(64) p"
-    )
-    return ",\n".join(parts) + "\n" + final
-
-
-@query(
-    "kmeans_centroids",
-    oracle=_kmeans_oracle(),
-    description=(
-        "Lloyd's k-means (k=8, 3 iters) over embeddings: broadcast-model iterations, "
-        "assignment as a narrow map, update as one k x dim shuffle"
-    ),
-)
-def q_kmeans_centroids(spark, sf_dir):
-    from h2outility_spark.operators.kmeans import kmeans
-
-    out = kmeans(_emb(spark, sf_dir), k=8, max_iter=3)
-    return out.select("cluster", "pos", fround(F.col("centroid_val"), 6).alias("centroid_val"))
-
-
-@query(
-    "corpus_clean_embedding",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    drops AS (
-      SELECT DISTINCT b.vec_id
-      FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE list_inner_product(a.v, b.v)
-            / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.45
-    )
-    SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars
-    FROM documents
-    WHERE doc_id NOT IN (SELECT vec_id FROM drops)
-    """,
-    description=(
-        "Cross-modal canonicalization: keep each doc unless its EMBEDDING has a "
-        "near-duplicate (cos >= 0.45) with a smaller id — RP-LSH prefilter + in-bucket "
-        "exact verify feeding an anti join; oracle is the brute-force O(n^2) form, so "
-        "equality re-proves prefilter recall 1.0 end-to-end"
-    ),
-)
-def q_corpus_clean_embedding(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    pairs = similarity.cosine_neardup_pairs_lsh(emb, threshold=0.45)
-    drops = pairs.select(F.col("id_b").alias("vec_id")).distinct()
-    return (
-        docs.join(drops, docs.doc_id == drops.vec_id, "left_anti")
-        .select("doc_id", F.col("n_chars").cast("bigint").alias("n_chars"))
-    )
 
 
 @query(
@@ -1599,4 +1334,1300 @@ def q_mixture_plan_tokens(spark, sf_dir):
             F.least(F.col("epochs_raw"), F.lit(4.0)) * F.col("total_tokens").cast("double"), 2
         ).alias("planned_tokens"),
         (F.col("epochs_raw") < 1.0).alias("downsampled"),
+    )
+
+
+# -- per-source quality gate, applied ----------------------------------------
+
+GATE_ORACLE = """
+WITH scored AS (
+  SELECT doc_id, source,
+         0.6 * coalesce(CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+           / (CASE WHEN length(text) > 0 THEN CAST(length(text) AS DOUBLE) END), 0.0)
+         + 0.4 * least(CAST(
+             CASE WHEN length(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))) = 0 THEN 0
+                  ELSE array_length(regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' ')) END
+             AS DOUBLE) / 80.0, 1.0) AS score
+  FROM documents
+),
+ranked AS (
+  SELECT doc_id, source, score,
+         row_number() OVER (PARTITION BY source ORDER BY score DESC, doc_id) AS rnk,
+         count(*) OVER (PARTITION BY source) AS n
+  FROM scored
+)
+SELECT doc_id, source, rnk,
+       """ + sql_round("score", 6) + """ AS score
+FROM ranked
+WHERE rnk <= CAST(ceil(0.7 * n) AS BIGINT)
+"""
+
+
+@query(
+    "quality_gate_docs",
+    oracle=GATE_ORACLE,
+    description=(
+        "Per-source 70%-by-rank quality gate APPLIED: the surviving docs with "
+        "their in-source rank — the row-level view the corpus pipeline consumes"
+    ),
+)
+def q_quality_gate_docs(spark, sf_dir):
+    """The calibration query's threshold APPLIED: the surviving docs of the
+    per-source 70%-by-rank quality gate, with their in-source rank — the
+    row-level view the corpus pipeline's stage 1 consumes."""
+    docs = load_table(spark, sf_dir, "documents")
+    scored = docs.select("doc_id", "source", text.calibration_score_col().alias("score"))
+    ranked = scored.withColumn(
+        "rnk", F.row_number().over(W.partitionBy("source").orderBy(F.desc("score"), "doc_id"))
+    ).withColumn("n", F.count(F.lit(1)).over(W.partitionBy("source")))
+    return ranked.filter(F.col("rnk") <= F.ceil(F.lit(0.7) * F.col("n"))).select(
+        "doc_id", "source", "rnk", fround(F.col("score"), 6).alias("score")
+    )
+
+
+# -- language composition matrix ---------------------------------------------
+
+
+def _lang_matrix_oracle() -> str:
+    return (
+        """
+    WITH scored AS (
+      SELECT doc_id, source, """
+        + _N_TOKENS_SQL
+        + """ AS n_tokens,
+           """
+        + text.langid_sql_columns("text")
+        + """
+      FROM documents
+    ),
+    grouped AS (
+      SELECT source, pred_lang,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+      FROM scored GROUP BY 1, 2
+    )
+    SELECT source, pred_lang, n_docs, total_tokens,
+           """
+        + sql_round("CAST(n_docs AS DOUBLE) / sum(n_docs) OVER (PARTITION BY source)", 6)
+        + """ AS doc_share
+    FROM grouped
+    """
+    )
+
+
+LANG_MATRIX_ORACLE = _lang_matrix_oracle()
+
+
+@query(
+    "corpus_language_matrix",
+    oracle=LANG_MATRIX_ORACLE,
+    description=(
+        "Per-(source, predicted language) doc/token inventories + in-source doc "
+        "share — the language-composition audit behind sampling temperatures"
+    ),
+)
+def q_corpus_language_matrix(spark, sf_dir):
+    """Per-(source, predicted language): doc and token inventories plus the
+    in-source doc share — the language-composition audit a multilingual
+    corpus runs before choosing sampling temperatures. Share division runs
+    over exact BIGINT aggregates, so it is engine-reproducible."""
+    docs = load_table(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id",
+        "source",
+        text.token_count(F.col("text")).cast("bigint").alias("n_tokens"),
+        *text.langid_score_columns("text"),
+    ).withColumn("pred_lang", text.langid_pred_column())
+    grouped = scored.groupBy("source", "pred_lang").agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
+    )
+    src_docs = F.sum("n_docs").over(W.partitionBy("source"))  # exact integer sum
+    return grouped.select(
+        "source",
+        "pred_lang",
+        "n_docs",
+        "total_tokens",
+        fround(F.col("n_docs").cast("double") / src_docs, 6).alias("doc_share"),
+    )
+
+
+# -- doc-length histogram ------------------------------------------------------
+
+
+def _len_hist_oracle() -> str:
+    return (
+        """
+    WITH tok AS (SELECT source, """
+        + _N_TOKENS_SQL
+        + """ AS n_tokens FROM documents)
+    SELECT source,
+           CAST(CASE WHEN n_tokens <= 0 THEN -1
+                     ELSE CAST(floor(log2(CAST(n_tokens AS DOUBLE))) AS BIGINT) END AS INT)
+             AS log2_bucket,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(min(n_tokens) AS BIGINT) AS min_tokens,
+           CAST(max(n_tokens) AS BIGINT) AS max_tokens
+    FROM tok
+    GROUP BY 1, 2
+    """
+    )
+
+
+LEN_HIST_ORACLE = _len_hist_oracle()
+
+
+@query(
+    "doc_length_histogram",
+    oracle=LEN_HIST_ORACLE,
+    description=(
+        "Token-length distribution per source in power-of-two buckets (empty "
+        "docs in bucket -1) — the diagnostic behind truncation/packing budgets"
+    ),
+)
+def q_doc_length_histogram(spark, sf_dir):
+    """Token-length distribution per source in power-of-two buckets
+    (empty docs land in bucket -1) — the length diagnostic behind
+    truncation budgets and packing efficiency. log2 on exact integers,
+    floored to an integer bucket, so bucket edges are engine-identical."""
+    docs = load_table(spark, sf_dir, "documents")
+    n_tok = text.token_count(F.col("text")).cast("bigint")
+    bucket = (
+        F.when(n_tok <= 0, F.lit(-1))
+        .otherwise(F.floor(F.log2(n_tok.cast("double"))).cast("bigint"))
+        .cast("int")
+    )
+    return (
+        docs.select("source", n_tok.alias("n_tokens"), bucket.alias("log2_bucket"))
+        .groupBy("source", "log2_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("n_tokens").alias("min_tokens"),
+            F.max("n_tokens").alias("max_tokens"),
+        )
+    )
+
+
+# -- boilerplate prefix-duplication rate --------------------------------------
+
+PREFIX_DUP_ORACLE = """
+WITH pfx AS (
+  SELECT doc_id, source,
+         md5(lower(array_to_string(
+           list_slice(regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' '), 1, 8),
+           ' '))) AS pfp
+  FROM documents
+),
+dup AS (
+  SELECT source, pfp, count(*) AS n FROM pfx GROUP BY 1, 2
+)
+SELECT source,
+       CAST(sum(n) AS BIGINT) AS n_docs,
+       CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT) AS n_shared_prefix,
+       """ + sql_round("CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS DOUBLE) / sum(n)", 6) + """
+         AS shared_prefix_rate
+FROM dup
+GROUP BY source
+"""
+
+
+@query(
+    "prefix_dup_rate",
+    oracle=PREFIX_DUP_ORACLE,
+    description=(
+        "Per-source share of docs whose first-8-token fingerprint collides in "
+        "the same source — the cheap boilerplate-header detector"
+    ),
+)
+def q_prefix_dup_rate(spark, sf_dir):
+    """Per-source share of docs whose first-8-token fingerprint collides
+    with another doc IN THE SAME SOURCE — the boilerplate-header detector
+    (templated pages, scraped nav bars) that runs cheaper than any n-gram
+    pipeline: one md5 per doc, one groupBy."""
+    docs = load_table(spark, sf_dir, "documents")
+    pfx = docs.select("source", text.prefix_fingerprint("text", 8).alias("pfp"))
+    dup = pfx.groupBy("source", "pfp").agg(F.count(F.lit(1)).alias("n"))
+    shared = F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(F.lit(0)))
+    return dup.groupBy("source").agg(
+        F.sum("n").alias("n_docs"),
+        shared.alias("n_shared_prefix"),
+        fround(shared.cast("double") / F.sum("n"), 6).alias("shared_prefix_rate"),
+    )
+
+
+# -- BPE-ish token histogram --------------------------------------------------
+
+#: Engine-proof BPE-ish class: alpha runs, digit runs, single other
+#: non-space marks — with the whitespace class spelled out (never \s).
+BPE_EXPLICIT_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f\\x0B]"
+
+BPE_TOKEN_HIST_ORACLE = """
+WITH tok AS (
+  SELECT source,
+         CAST(length(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f\\x0B]')) AS BIGINT)
+           AS n_bpe
+  FROM documents
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_bpe) AS BIGINT) AS total_bpe_tokens,
+       CAST(min(n_bpe) AS BIGINT) AS min_bpe,
+       CAST(max(n_bpe) AS BIGINT) AS max_bpe
+FROM tok GROUP BY source
+"""
+
+
+@query(
+    "bpe_token_hist",
+    oracle=BPE_TOKEN_HIST_ORACLE,
+    description="Per-source BPE-ish token inventory (engine-proof explicit token class)",
+)
+def q_bpe_token_hist(spark, sf_dir):
+    """Per-source BPE-ish token inventory (alpha runs + digit runs +
+    single punctuation marks): the sub-word-flavored budget estimate that
+    tracks real tokenizer counts far better than whitespace words. The
+    token class spells its whitespace out so Java regex and RE2 agree
+    character for character."""
+    docs = load_table(spark, sf_dir, "documents")
+    n_bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_EXPLICIT_PATTERN), 0)).cast(
+        "bigint"
+    )
+    return (
+        docs.select("source", n_bpe.alias("n_bpe"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_bpe").alias("total_bpe_tokens"),
+            F.min("n_bpe").alias("min_bpe"),
+            F.max("n_bpe").alias("max_bpe"),
+        )
+    )
+
+
+# -- near-dup dedup that keeps the BEST representative -------------------------
+
+DEDUP_KEEP_BEST_ORACLE = (
+    "WITH RECURSIVE "
+    + MH_CTE
+    + MH_CAND_CTE
+    + JPAIRS_CTE
+    + CLUSTERS_CTE
+    + """,
+    alld AS (SELECT doc_id, n_chars FROM documents),
+    memb AS (
+      SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id, d.n_chars
+      FROM alld d LEFT JOIN clusters c ON c.node = d.doc_id
+    ),
+    ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY cluster_id
+                                   ORDER BY n_chars DESC, doc_id) AS rk
+      FROM memb
+    )
+    SELECT doc_id, cluster_id, n_chars FROM ranked WHERE rk = 1
+    """
+)
+
+
+@query(
+    "dedup_keep_best",
+    oracle=DEDUP_KEEP_BEST_ORACLE,
+    description="Near-dup clusters collapsed to the best-quality (longest) representative — the production dedup policy",
+)
+def q_dedup_keep_best(spark, sf_dir):
+    """Near-dup dedup with a QUALITY policy: MinHash-LSH pairs verified by
+    Jaccard >= 0.2, collapsed to clusters, then ONE representative kept
+    per cluster — the LONGEST document (n_chars), ties to the smallest
+    id. This is the policy real pipelines want (keep-first throws away
+    the best copy whenever the best copy isn't the oldest). Docs outside
+    any cluster are their own representative. Scale shape: pairs come
+    from banded buckets, the window is per-cluster — no O(n^2) stage.
+    """
+    docs = _docs(spark, sf_dir)
+    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
+    verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
+    cc = dedup.connected_components(verified.select("id_a", "id_b"))
+    memb = (
+        docs.select("doc_id", "n_chars")
+        .join(cc, docs["doc_id"] == cc["node"], "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+            "n_chars",
+        )
+    )
+    w = W.partitionBy("cluster_id").orderBy(F.col("n_chars").desc(), "doc_id")
+    return (
+        memb.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).drop("rk")
+    )
+
+
+# -- asymmetric containment near-dup ------------------------------------------
+
+CONTAINMENT_ORACLE = (
+    "WITH "
+    + MH_CTE
+    + MH_CAND_CTE
+    + """
+    dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY 1),
+    inter AS (
+      SELECT c.id_a, c.id_b, count(*) AS ni
+      FROM cand c
+      JOIN dsh s1 ON s1.doc_id = c.id_a
+      JOIN dsh s2 ON s2.doc_id = c.id_b AND s2.shingle = s1.shingle
+      GROUP BY 1, 2
+    ),
+    cont AS (
+      SELECT i.id_a, i.id_b,
+             CAST(ni AS DOUBLE) / CAST(sa.sz AS DOUBLE) AS cab,
+             CAST(ni AS DOUBLE) / CAST(sb.sz AS DOUBLE) AS cba
+      FROM inter i
+      JOIN sizes sa ON sa.doc_id = i.id_a
+      JOIN sizes sb ON sb.doc_id = i.id_b
+    )
+    SELECT id_a, id_b,
+           floor(cab * 10000.0 + 0.5) / 10000.0 AS cont_ab,
+           floor(cba * 10000.0 + 0.5) / 10000.0 AS cont_ba
+    FROM cont WHERE greatest(cab, cba) >= 0.5
+    """
+)
+
+
+@query(
+    "minhash_containment_pairs",
+    oracle=CONTAINMENT_ORACLE,
+    description="Directed n-gram containment over banded candidates — catches sub-document duplication symmetric Jaccard dilutes",
+)
+def q_minhash_containment_pairs(spark, sf_dir):
+    """Asymmetric near-dup: DIRECTED n-gram containment (|A∩B|/|A| and
+    |A∩B|/|B|) for the banded MinHash candidate pairs, keeping pairs
+    where either direction >= 0.5 — the measure that catches a short doc
+    pasted into a long one, which symmetric Jaccard misses (the union
+    dilutes it). Same banded-candidates-then-exact-verify cost shape as
+    the certified Jaccard path (operators/dedup.containment_for_pairs).
+    """
+    docs = _docs(spark, sf_dir)
+    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
+    cont = dedup.containment_for_pairs(pairs, docs)
+    return cont.filter(
+        F.greatest(F.col("cont_ab"), F.col("cont_ba")) >= 0.5
+    ).select(
+        "id_a",
+        "id_b",
+        fround(F.col("cont_ab"), 4).alias("cont_ab"),
+        fround(F.col("cont_ba"), 4).alias("cont_ba"),
+    )
+
+
+# -- sliding-window chunking ----------------------------------------------------
+
+_CHUNK_SIZE, _CHUNK_STRIDE = 64, 48
+
+CHUNK_SLIDING_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id,
+         regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' ') AS toks,
+         CASE WHEN length(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))) = 0 THEN 0
+              ELSE array_length(regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' ')) END AS n
+  FROM documents
+),
+s AS (
+  SELECT doc_id, toks, n, u.s AS start_tok,
+         row_number() OVER (PARTITION BY doc_id ORDER BY u.s) - 1 AS chunk_idx
+  FROM t, unnest(generate_series(0, n - 1, {_CHUNK_STRIDE})) u(s)
+  WHERE n > 0 AND (u.s = 0 OR u.s - {_CHUNK_STRIDE} + {_CHUNK_SIZE} < n)
+)
+SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+       CAST(start_tok AS BIGINT) AS start_tok,
+       CAST(least({_CHUNK_SIZE}, n - start_tok) AS BIGINT) AS n_tokens,
+       array_to_string(list_slice(toks, start_tok + 1, start_tok + {_CHUNK_SIZE}), ' ') AS chunk_text
+FROM s
+"""
+
+
+@query(
+    "chunk_sliding",
+    oracle=CHUNK_SLIDING_ORACLE,
+    description="sliding-window RAG chunking (64-token windows every 48), pure built-ins, zero shuffles",
+    bench=True,
+)
+def q_chunk_sliding(spark, sf_dir):
+    """Sliding-window chunking of the document corpus (64-token windows
+    every 48 tokens → 16-token overlap): boundary text is visible to both
+    neighboring chunks, the shape RAG retrieval and context-window packing
+    want. Chunk indices, offsets, exact chunk text and the
+    minimal-trailing-window rule all ride the hash. Zero shuffles."""
+    from h2outility_spark.operators import text as T
+
+    docs = _t(spark, sf_dir, "documents")
+    return T.chunk_sliding(docs, size=_CHUNK_SIZE, stride=_CHUNK_STRIDE)
+
+
+# -- incremental near-dup: new batch vs existing corpus ------------------------
+
+_BATCH_PRED_SQL = "doc_id % 5 = 0"  # the "newly ingested" slice
+
+DEDUP_INCR_LSH_ORACLE = (
+    "WITH "
+    + mh_cte()
+    + f""",
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM mh a JOIN mh b
+        ON a.{_BATCH_PRED_SQL} AND NOT (b.{_BATCH_PRED_SQL})
+       AND ("""
+    + " OR ".join(f"a.mh{i} = b.mh{i}" for i in range(MINHASH_K))
+    + """)
+    ),
+"""
+    + JACCARD_TAIL
+)
+
+
+@query(
+    "dedup_incremental_lsh",
+    oracle=DEDUP_INCR_LSH_ORACLE,
+    description="incremental near-dup ingest: new batch MinHash-signed, probed against the corpus band index",
+)
+def q_dedup_incremental_lsh(spark, sf_dir):
+    """Near-dup dedup for a daily ingest batch: sign ONLY the new slice,
+    probe the existing corpus's banded MinHash index, verify candidates
+    with exact 3-gram Jaccard ≥ 0.2. The corpus is never self-paired and
+    never re-signed — per-batch cost is O(batch) + one hash join against
+    the (stored, in production) band index. Oracle mirrors the banding +
+    verification with the batch/corpus split stated as predicates."""
+    docs = _t(spark, sf_dir, "documents")
+    new = docs.filter(F.col("doc_id") % 5 == 0)
+    old = docs.filter(F.col("doc_id") % 5 != 0)
+    sigs_new = dedup.minhash_signatures(new, num_hashes=MINHASH_K)
+    sigs_old = dedup.minhash_signatures(old, num_hashes=MINHASH_K)
+    pairs = dedup.lsh_candidate_pairs_between(
+        sigs_new, sigs_old, bands=[[i] for i in range(MINHASH_K)]
+    )
+    jac = dedup.jaccard_for_pairs(pairs, docs)
+    return jac.filter(F.col("jaccard") >= 0.2).select(
+        "id_a", "id_b", fround(F.col("jaccard"), 4).alias("jaccard")
+    )
+
+
+# -- cross-modal ensemble agreement ----------------------------------------------
+
+_COS_SQL = (
+    "list_inner_product(ea.v, eb.v) "
+    "/ sqrt(list_inner_product(ea.v, ea.v) * list_inner_product(eb.v, eb.v))"
+)
+
+
+ENSEMBLE_AGREE_ORACLE = (
+    "WITH "
+    + mh_cte()
+    + """,
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM mh a JOIN mh b
+        ON a.doc_id < b.doc_id
+       AND ("""
+    + " OR ".join(f"a.mh{i} = b.mh{i}" for i in range(MINHASH_K))
+    + f""")
+    ),
+    dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY 1),
+    inter AS (
+      SELECT c.id_a, c.id_b, count(*) AS ni
+      FROM cand c
+      JOIN dsh s1 ON s1.doc_id = c.id_a
+      JOIN dsh s2 ON s2.doc_id = c.id_b AND s2.shingle = s1.shingle
+      GROUP BY 1, 2
+    ),
+    jp AS (
+      SELECT i.id_a, i.id_b,
+             floor((CAST(ni AS DOUBLE) / CAST(sa.sz + sb.sz - ni AS DOUBLE)) * 10000.0 + 0.5) / 10000.0
+               AS jaccard
+      FROM inter i
+      JOIN sizes sa ON sa.doc_id = i.id_a
+      JOIN sizes sb ON sb.doc_id = i.id_b
+      WHERE CAST(ni AS DOUBLE) / CAST(sa.sz + sb.sz - ni AS DOUBLE) >= 0.2
+    ),
+    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+    SELECT jp.id_a, jp.id_b, jp.jaccard,
+           floor(({_COS_SQL}) * 10000.0 + 0.5) / 10000.0 AS cos_sim,
+           floor(({_COS_SQL}) * 10000.0 + 0.5) / 10000.0 >= 0.25 AS emb_confirms
+    FROM jp
+    JOIN e ea ON ea.vec_id = jp.id_a
+    JOIN e eb ON eb.vec_id = jp.id_b
+"""
+)
+
+
+@query(
+    "neardup_ensemble_agree",
+    oracle=ENSEMBLE_AGREE_ORACLE,
+    description="cross-modal dedup policy: text near-dup pairs re-scored by embedding cosine, agreement flagged",
+)
+def q_neardup_ensemble_agree(spark, sf_dir):
+    """Two-modality dedup scoring — the confirm-before-delete policy for
+    destructive dedup: every TEXT-leg near-dup pair (MinHash bands →
+    exact Jaccard ≥ 0.2) is re-scored on the EMBEDDING side with its
+    exact cosine and flagged when the second modality confirms
+    (cos ≥ 0.25). Both the cosine VALUES and the flags ride the hash, so
+    the pair set is never vacuous even when no pair clears the
+    confirmation bar at some scale. The cosine is computed only for the
+    (tiny) verified text-pair set — two hash joins against the embedding
+    table, never a second O(n²) pass. doc_id ≡ vec_id in the corpus."""
+    from h2outility_spark.operators.similarity import as_double, dot
+
+    docs = _t(spark, sf_dir, "documents")
+    emb = _t(spark, sf_dir, "embeddings")
+    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K)
+    text_pairs = dedup.jaccard_for_pairs(
+        dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)]), docs
+    ).filter(F.col("jaccard") >= 0.2)
+    e = emb.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v"))
+    a = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
+    b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
+    cos = dot(F.col("va"), F.col("vb")) / F.sqrt(
+        dot(F.col("va"), F.col("va")) * dot(F.col("vb"), F.col("vb"))
+    )
+    return (
+        text_pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            fround(F.col("jaccard"), 4).alias("jaccard"),
+            fround(cos, 4).alias("cos_sim"),
+            # flag off the ROUNDED cosine: Spark and DuckDB sum the dot
+            # product in different orders, so a raw cosine landing on the
+            # threshold boundary could flip the boolean on one engine only
+            # (ADVICE r9) — the 4-dp round collapses that ULP gap
+            (fround(cos, 4) >= F.lit(0.25)).alias("emb_confirms"),
+        )
+    )
+
+
+_RAG_BIN_TOKENS = 512
+
+RAG_PREP_ORACLE = f"""
+WITH chunks AS ({CHUNK_SLIDING_ORACLE}),
+pre AS (
+  SELECT doc_id, n_tokens,
+         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix
+  FROM chunks
+)
+SELECT CAST(prefix // {_RAG_BIN_TOKENS} AS BIGINT) AS bin_id,
+       CAST(count(*) AS BIGINT) AS n_chunks,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+FROM pre GROUP BY 1
+"""
+
+
+@query(
+    "rag_prep_pipeline",
+    oracle=RAG_PREP_ORACLE,
+    description="RAG prep: sliding 64/48 chunker feeding the 512-token packer in one lineage",
+)
+def q_rag_prep_pipeline(spark, sf_dir):
+    """The actual RAG-prep pipeline on one hash: the certified sliding
+    chunker (64-token windows every 48) FEEDS the certified packing rule
+    (exclusive prefix sum into 512-token context bins) in a single
+    lineage — Catalyst fuses the zero-shuffle chunker into the window
+    stage, so composing the two operators adds no pass over the corpus.
+    A drift in either operator OR in the composition contract (bin
+    charging by first token, chunk order (doc_id, chunk_idx)) flips the
+    hash. This is the SMALL-CORPUS form: the global-order window is the
+    contract being certified (one packing order for the whole corpus).
+    The 100 TB form exists as code, not prose — the registered
+    ``rag_prep_sharded`` twin and ``pack_sequences(n_shards=k)`` scope
+    the same window per md5 hash-shard (k parallel sorts of n/k)."""
+    from pyspark.sql import Window as W
+
+    from h2outility_spark.operators import text as T
+
+    docs = _t(spark, sf_dir, "documents")
+    chunks = T.chunk_sliding(docs, size=64, stride=48)
+    w = W.orderBy("doc_id", "chunk_idx").rowsBetween(W.unboundedPreceding, -1)
+    pre = chunks.withColumn("prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+    return (
+        pre.withColumn("bin_id", F.expr(f"prefix div {_RAG_BIN_TOKENS}"))
+        .groupBy("bin_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+        )
+    )
+
+
+# -- deterministic stratified train/val/test split ----------------------------------
+
+STRATIFIED_SPLIT_ORACLE = f"""
+WITH b AS (
+  SELECT source,
+         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 10 AS cell,
+         {_N_TOKENS_SQL} AS n_tokens
+  FROM documents
+)
+SELECT source,
+       CASE WHEN cell < 8 THEN 'train' WHEN cell < 9 THEN 'val' ELSE 'test' END AS split,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+FROM b GROUP BY 1, 2
+"""
+
+
+@query(
+    "stratified_split",
+    oracle=STRATIFIED_SPLIT_ORACLE,
+    description="deterministic 8/1/1 train/val/test split via md5-cell arithmetic (text.hash_split)",
+)
+def q_stratified_split(spark, sf_dir):
+    """Deterministic 8/1/1 train/val/test assignment per source
+    (``text.hash_split``): md5(id) mod 10 cells, no RNG state, so a doc
+    can NEVER migrate between splits as the corpus grows — the property
+    that prevents silent train/test contamination across dataset
+    versions. The oracle recomputes the md5 cell arithmetic in SQL, so
+    the cell derivation itself is certified cross-engine (the
+    hash_sample pattern). Narrow map + one rollup shuffle."""
+    from h2outility_spark.operators.text import hash_split
+
+    docs = hash_split(_t(spark, sf_dir, "documents"), train=8, val=1, test=1)
+    return docs.groupBy("source", "split").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(token_count(F.col("text")).cast("bigint")).alias("total_tokens"),
+    )
+
+
+_VOCAB_K = 1000
+
+VOCAB_OOV_ORACLE = (
+    "WITH "
+    + toks_cte()
+    + f""",
+freq AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
+vocab AS (
+  SELECT w FROM (SELECT w, row_number() OVER (ORDER BY c DESC, w) AS rk FROM freq)
+  WHERE rk <= {_VOCAB_K}
+),
+per AS (
+  SELECT t.doc_id,
+         CAST(count(*) AS BIGINT) AS n_tokens,
+         CAST(sum(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
+  FROM toks t LEFT JOIN vocab v ON t.w = v.w
+  GROUP BY t.doc_id
+)
+SELECT doc_id, n_tokens, n_oov,
+       {sql_round("CAST(n_oov AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 6)} AS oov_rate
+FROM per
+"""
+)
+
+
+@query(
+    "vocab_oov_rate",
+    oracle=VOCAB_OOV_ORACLE,
+    description="per-doc OOV rate against the corpus top-1000 vocabulary (TakeOrdered + broadcast membership join)",
+)
+def q_vocab_oov_rate(spark, sf_dir):
+    """Tokenizer-vocabulary coverage per document: the corpus's top-1000
+    tokens (count desc, token tie-break — ``vocab_topk``'s rule) become
+    the vocabulary, and every doc reports its out-of-vocabulary token
+    count and rate — the coverage diagnostic run before freezing a
+    tokenizer on a new corpus. The vocab is top-k-bounded so it
+    BROADCASTS to the membership join (never a shuffle of the token
+    table against itself); the frequency pass is one combiner-friendly
+    groupBy. At 100 TB: one agg + one broadcast join + one rollup."""
+    from h2outility_spark.operators.text import shingles_expr
+
+    docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    toks = docs.select("doc_id", F.explode(shingles_expr("text", 1)).alias("w"))
+    freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    # top-k via orderBy+limit → TakeOrderedAndProject (per-partition heaps
+    # + one k-row merge), NOT a row_number window, whose single-partition
+    # sort of the whole distinct-token table is the 100 TB bottleneck
+    vocab = (
+        freq.orderBy(F.desc("c"), "w")
+        .limit(_VOCAB_K)
+        .select("w", F.lit(1).alias("__inv"))
+    )
+    per = toks.join(F.broadcast(vocab), "w", "left").groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum(F.when(F.col("__inv").isNull(), 1).otherwise(0)).cast("bigint").alias("n_oov"),
+    )
+    return per.select(
+        "doc_id",
+        "n_tokens",
+        "n_oov",
+        fround(F.col("n_oov").cast("double") / F.col("n_tokens").cast("double"), 6).alias(
+            "oov_rate"
+        ),
+    )
+
+
+# -- BM25 ranked retrieval ------------------------------------------------------------
+
+_BM25_K1, _BM25_B, _BM25_TOPK = 1.2, 0.75, 20
+
+BM25_ORACLE = (
+    "WITH "
+    + toks_cte()
+    + f""",
+dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
+stats AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
+  FROM dl
+),
+freq AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
+qterms AS (SELECT w FROM freq ORDER BY c DESC, w LIMIT 3),
+tf AS (
+  SELECT t.doc_id, t.w, CAST(count(*) AS BIGINT) AS tf
+  FROM toks t JOIN qterms q ON t.w = q.w
+  GROUP BY 1, 2
+),
+dfreq AS (SELECT w, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY w),
+scored AS (
+  SELECT tf.doc_id,
+         sum(
+           ln((CAST(s.n_docs AS DOUBLE) - CAST(d.df AS DOUBLE) + 0.5)
+              / (CAST(d.df AS DOUBLE) + 0.5) + 1.0)
+           * (CAST(tf.tf AS DOUBLE) * ({_BM25_K1} + 1.0))
+           / (CAST(tf.tf AS DOUBLE)
+              + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * CAST(dl.dl AS DOUBLE) / s.avgdl))
+         ) AS score
+  FROM tf
+  JOIN dfreq d ON d.w = tf.w
+  JOIN dl ON dl.doc_id = tf.doc_id
+  CROSS JOIN stats s
+  GROUP BY tf.doc_id
+)
+SELECT doc_id, {sql_round("score", 6)} AS bm25
+FROM scored
+ORDER BY {sql_round("score", 6)} DESC, doc_id
+LIMIT {_BM25_TOPK}
+"""
+)
+
+
+@query(
+    "bm25_topk_docs",
+    oracle=BM25_ORACLE,
+    description="BM25 (k1=1.2, b=0.75, Lucene +1 idf) top-20 docs against the corpus's own top-3 tokens",
+)
+def q_bm25_topk_docs(spark, sf_dir):
+    """BM25 ranked retrieval (k1=1.2, b=0.75, Lucene +1 idf) against the
+    corpus's own top-3 tokens — the query derives from the data, so the
+    pair can never go vacuous at any scale (the r9 empty-intersection
+    lesson). Ranking is on the 6-dp-ROUNDED score with doc_id tie-break
+    (the certified tf-idf discipline: ln() ULP drift becomes exact ties
+    instead of reorderings). Every table in the plan is either
+    combiner-friendly (dl, tf, df) or top-k-bounded (qterms via
+    TakeOrdered, stats a 1-row broadcast); the lexical half of a RAG
+    retriever next to ``hybrid_search_knn``'s fusion."""
+    from h2outility_spark.operators.text import shingles_expr
+
+    docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    toks = docs.select("doc_id", F.explode(shingles_expr("text", 1)).alias("w"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl"),
+    )
+    freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    qterms = freq.orderBy(F.desc("c"), "w").limit(3).select("w")
+    tf = (
+        toks.join(F.broadcast(qterms), "w")
+        .groupBy("doc_id", "w")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
+    idf = F.log(
+        (F.col("n_docs").cast("double") - F.col("df").cast("double") + F.lit(0.5))
+        / (F.col("df").cast("double") + F.lit(0.5))
+        + F.lit(1.0)
+    )
+    term_score = idf * (F.col("tf").cast("double") * (k1 + F.lit(1.0))) / (
+        F.col("tf").cast("double")
+        + k1 * (F.lit(1.0) - b + b * F.col("dl").cast("double") / F.col("avgdl"))
+    )
+    scored = (
+        tf.join(F.broadcast(dfreq), "w")
+        .join(dl, "doc_id")
+        .join(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.sum(term_score).alias("score"))
+    )
+    return (
+        scored.select("doc_id", fround(F.col("score"), 6).alias("bm25"))
+        .orderBy(F.desc("bm25"), "doc_id")
+        .limit(_BM25_TOPK)
+    )
+
+
+_RAG_SHARDS, _RAG_SHARD_BIN_TOKENS = 4, 512
+
+RAG_SHARDED_ORACLE = f"""
+WITH chunks AS ({CHUNK_SLIDING_ORACLE}),
+sh AS (
+  SELECT doc_id, chunk_idx, n_tokens,
+         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % {_RAG_SHARDS}
+           AS shard
+  FROM chunks
+),
+pre AS (
+  SELECT shard, doc_id, n_tokens,
+         CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
+           ORDER BY doc_id, chunk_idx
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix
+  FROM sh
+)
+SELECT shard, CAST(prefix // {_RAG_SHARD_BIN_TOKENS} AS BIGINT) AS bin_id,
+       CAST(count(*) AS BIGINT) AS n_chunks,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+FROM pre GROUP BY 1, 2
+"""
+
+
+@query(
+    "rag_prep_sharded",
+    oracle=RAG_SHARDED_ORACLE,
+    description="RAG prep with the packing window scoped per md5 hash-shard — k parallel sorts of n/k",
+)
+def q_rag_prep_sharded(spark, sf_dir):
+    """The shard-local form of the RAG-prep pipeline (VERDICT r10 #2) —
+    the shape that actually runs at 100 TB: the certified sliding chunker
+    feeds the packer exactly as in the promoted ``rag_prep_pipeline``,
+    but the packing window is SCOPED PER HASH-SHARD
+    (``partitionBy(shard)`` over an md5-cell shard key, the same
+    deterministic arithmetic as ``text.hash_split``), so the prefix sum
+    runs as k parallel sorts of n/k chunks instead of one global
+    single-partition sort. The shard key rides the hash: the oracle
+    recomputes the md5-cell assignment in SQL, so a drift in sharding,
+    chunking, packing, or their composition flips the certificate.
+    Docs never straddle shards (sharded by doc_id), so per-shard packing
+    is self-contained — the property that makes the k streams
+    independently resumable in a real pipeline."""
+    from pyspark.sql import Window as W
+
+    from h2outility_spark.operators import text as T
+
+    docs = _t(spark, sf_dir, "documents")
+    chunks = T.chunk_sliding(docs, size=64, stride=48).withColumn(
+        "shard", F.expr(T.shard_expr_sql("doc_id", _RAG_SHARDS))
+    )
+    w = (
+        W.partitionBy("shard")
+        .orderBy("doc_id", "chunk_idx")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    pre = chunks.withColumn("prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+    return (
+        pre.withColumn("bin_id", F.expr(f"prefix div {_RAG_SHARD_BIN_TOKENS}"))
+        .groupBy("shard", "bin_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+        )
+    )
+
+
+# -- per-document unigram entropy --------------------------------------------------------
+
+DOC_ENTROPY_ORACLE = f"""
+WITH {toks_cte().strip().rstrip()},
+cnt AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
+tot AS (SELECT doc_id, CAST(sum(c) AS DOUBLE) AS n, CAST(count(*) AS BIGINT) AS u
+        FROM cnt GROUP BY 1),
+ent AS (
+  SELECT cnt.doc_id,
+         -sum((cnt.c / tot.n) * ln(cnt.c / tot.n)) AS h
+  FROM cnt JOIN tot ON tot.doc_id = cnt.doc_id
+  GROUP BY 1
+)
+SELECT ent.doc_id, CAST(tot.n AS BIGINT) AS n_tokens, tot.u AS n_unique,
+       {sql_round("ent.h", 4)} AS entropy
+FROM ent JOIN tot ON tot.doc_id = ent.doc_id
+"""
+
+
+@query(
+    "doc_token_entropy",
+    oracle=DOC_ENTROPY_ORACLE,
+    description="Per-document unigram Shannon entropy (repetitiveness/diversity quality signal)",
+)
+def q_doc_token_entropy(spark, sf_dir):
+    """Per-document unigram Shannon entropy — the diversity score next
+    to ``doc_lm_score`` (cross-entropy vs the corpus) and
+    ``repetition_signals`` (surface repeats): low entropy flags
+    boilerplate and keyword-stuffed docs that length filters miss. One
+    explode + two hash aggregates (term counts, then the entropy sum) —
+    both combiner-friendly, no windows. The 4-dp rounding absorbs the
+    cross-engine ln() ulp; the p·ln p terms are otherwise identical
+    expression shapes."""
+    from h2outility_spark.operators.text import normalize_ws
+
+    docs = _t(spark, sf_dir, "documents")
+    norm = normalize_ws(F.col("text"))
+    toks = docs.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        "doc_id", F.explode(F.split(norm, " ")).alias("w")
+    )
+    cnt = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
+    tot = cnt.groupBy("doc_id").agg(
+        F.sum("c").cast("double").alias("n"), F.count(F.lit(1)).alias("u")
+    )
+    p = F.col("c") / F.col("n")
+    ent = (
+        cnt.join(tot, "doc_id")
+        .groupBy("doc_id")
+        .agg((-F.sum(p * F.log(p))).alias("h"))
+    )
+    return ent.join(tot, "doc_id").select(
+        "doc_id",
+        F.col("n").cast("bigint").alias("n_tokens"),
+        F.col("u").alias("n_unique"),
+        fround(F.col("h"), 4).alias("entropy"),
+    )
+
+
+# -- Zipf rank-frequency slope per source ------------------------------------------------
+
+_ZIPF_TOPK = 100
+
+ZIPF_ORACLE = f"""
+WITH {toks_cte().strip().rstrip()},
+src AS (
+  SELECT d.source, t.w FROM toks t JOIN documents d ON d.doc_id = t.doc_id
+),
+cnt AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM src GROUP BY 1, 2),
+ranked AS (
+  SELECT source, c,
+         row_number() OVER (PARTITION BY source ORDER BY c DESC, w) AS rk
+  FROM cnt
+),
+top AS (SELECT source, ln(CAST(rk AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y
+        FROM ranked WHERE rk <= {_ZIPF_TOPK}),
+s AS (
+  SELECT source, CAST(count(*) AS DOUBLE) AS n,
+         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
+  FROM top GROUP BY 1
+)
+SELECT source, CAST(n AS BIGINT) AS n_terms,
+       {sql_round("(n * sxy - sx * sy) / (n * sxx - sx * sx)", 4)} AS slope,
+       {sql_round("(sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n", 4)} AS intercept
+FROM s
+"""
+
+
+@query(
+    "zipf_slope_fit",
+    oracle=ZIPF_ORACLE,
+    description="Zipf slope: closed-form OLS of ln(freq) on ln(rank) over each source's top-100 tokens",
+)
+def q_zipf_slope_fit(spark, sf_dir):
+    """Zipf's-law health check per source: OLS slope of ln(frequency) on
+    ln(rank) over the top-100 tokens (natural text sits near −1; a
+    slope far off flags templated or synthetic sources — the corpus
+    forensics siblings of ``series_trend_fit``'s per-series OLS). Ranks
+    come from EXACT integer counts with the (count DESC, token) rule, so
+    the regression inputs are engine-identical up to ln() ulp; both
+    engines run the same closed-form normal-equation sums and round the
+    fitted coefficients to 4 dp. One token-count aggregate + one
+    bounded per-source top-k window + one 100-row-per-source
+    regression aggregate."""
+    from h2outility_spark.operators.text import normalize_ws
+
+    docs = _t(spark, sf_dir, "documents")
+    norm = normalize_ws(F.col("text"))
+    toks = docs.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        "source", F.explode(F.split(norm, " ")).alias("w")
+    )
+    cnt = toks.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
+    rk_w = W.partitionBy("source").orderBy(F.col("c").desc(), F.col("w"))
+    top = (
+        cnt.withColumn("rk", F.row_number().over(rk_w))
+        .filter(F.col("rk") <= _ZIPF_TOPK)
+        .select(
+            "source",
+            F.log(F.col("rk").cast("double")).alias("x"),
+            F.log(F.col("c").cast("double")).alias("y"),
+        )
+    )
+    s = top.groupBy("source").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    )
+    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
+    return s.select(
+        "source",
+        F.col("n").cast("bigint").alias("n_terms"),
+        fround(slope, 4).alias("slope"),
+        fround(intercept, 4).alias("intercept"),
+    )
+
+
+# -- deterministic per-source k-sample ---------------------------------------------------
+
+_SAMPLE_K = 20
+
+STRAT_TOPK_ORACLE = f"""
+WITH r AS (
+  SELECT doc_id, source, {_N_TOKENS_SQL} AS n_tokens,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rk
+  FROM documents
+)
+SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens, CAST(rk AS INT) AS rk
+FROM r WHERE rk <= {_SAMPLE_K}
+"""
+
+
+@query(
+    "stratified_topk_sample",
+    oracle=STRAT_TOPK_ORACLE,
+    description="Deterministic per-source k-sample by md5(doc_id) order — RNG-free, growth-stable membership",
+)
+def q_stratified_topk_sample(spark, sf_dir):
+    """Deterministic per-source k-sample: rank docs within each source by
+    md5(doc_id) (an order that is uniform-ish but has NO RNG state —
+    ``hash_sample``'s fixed-size sibling) and keep the first 20. The
+    property that matters for dataset curation: membership is stable
+    across runs, engines, partitionings AND corpus growth — a doc
+    already sampled stays sampled as new docs arrive unless they hash
+    earlier, so audits reproduce. Per-source window sort over the
+    source's rows; at 100 TB grain this is the top-k-per-group shape
+    (rank filter pushes the sort toward TakeOrdered within each
+    group)."""
+    from h2outility_spark.operators.text import token_count
+
+    docs = _t(spark, sf_dir, "documents")
+    rk_w = W.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")))
+    return (
+        docs.select(
+            "doc_id",
+            "source",
+            token_count(F.col("text")).cast("bigint").alias("n_tokens"),
+            F.row_number().over(rk_w).alias("rk"),
+        )
+        .filter(F.col("rk") <= _SAMPLE_K)
+    )
+
+
+# -- temperature-scaled source mixture ---------------------------------------------------
+
+_MIX_TAU, _MIX_BUDGET = 0.7, 1_000_000
+
+MIX_TEMP_ORACLE = f"""
+WITH per AS (
+  SELECT source, CAST(sum({_N_TOKENS_SQL}) AS DOUBLE) AS n_tokens
+  FROM documents GROUP BY 1
+),
+tot AS (SELECT sum(n_tokens) AS total FROM per),
+w AS (
+  SELECT per.source, per.n_tokens,
+         power(per.n_tokens / tot.total, {_MIX_TAU}) AS pw
+  FROM per, tot
+),
+z AS (SELECT sum(pw) AS z FROM w)
+SELECT w.source,
+       CAST(w.n_tokens AS BIGINT) AS n_tokens,
+       {sql_round("w.pw / z.z", 4)} AS weight,
+       CAST(floor(({sql_round("w.pw / z.z", 4)}) * {_MIX_BUDGET}.0 + 0.5) AS BIGINT) AS planned_tokens
+FROM w, z
+"""
+
+
+@query(
+    "mixture_temperature_plan",
+    oracle=MIX_TEMP_ORACLE,
+    description="Temperature-0.7 source mixture: raw share, reweighted share, planned tokens of a 1M budget",
+)
+def q_mixture_temperature_plan(spark, sf_dir):
+    """Temperature-scaled source mixture (τ = 0.7) — the standard
+    multilingual/multi-domain sampling rule p_i^τ / Σ p_j^τ that
+    up-weights small sources in a training mix (τ = 1 keeps natural
+    proportions, τ → 0 approaches uniform): per source, raw token
+    share → reweighted share → planned token budget out of 1M. Two
+    bounded aggregates (per-source sums, then the normalizer over a
+    handful of rows); the weights are rounded at 4 dp on both engines
+    and the planned budget applies the shared half-up integer rule to
+    the ALREADY-ROUNDED weight — deriving the integer from the raw
+    pow() value would let a last-ulp Java-vs-DuckDB power() difference
+    at a half-up boundary flip it (the r9 boundary lesson). The batch
+    twin of ``mixture_plan_tokens``'s fixed-quota plan."""
+    from h2outility_spark.operators.text import token_count
+
+    docs = _t(spark, sf_dir, "documents")
+    per = docs.groupBy("source").agg(
+        F.sum(token_count(F.col("text")).cast("bigint")).cast("double").alias("n_tokens")
+    )
+    tot = per.agg(F.sum("n_tokens").alias("total"))
+    w = per.join(F.broadcast(tot)).select(
+        "source",
+        "n_tokens",
+        F.pow(F.col("n_tokens") / F.col("total"), F.lit(_MIX_TAU)).alias("pw"),
+    )
+    z = w.agg(F.sum("pw").alias("z"))
+    weight = F.col("pw") / F.col("z")
+    return w.join(F.broadcast(z)).select(
+        "source",
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        fround(weight, 4).alias("weight"),
+        F.floor(fround(weight, 4) * F.lit(float(_MIX_BUDGET)) + F.lit(0.5))
+        .cast("bigint")
+        .alias("planned_tokens"),
+    )
+
+
+# -- packer conservation certificate -----------------------------------------------------
+
+_PACK_BUDGET = 512
+
+PACK_CERT_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, CAST({_N_TOKENS_SQL} AS BIGINT) AS n FROM documents
+),
+pre AS (
+  SELECT doc_id, n,
+         CAST(coalesce(sum(n) OVER (ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix
+  FROM t
+),
+bins AS (
+  SELECT prefix // {_PACK_BUDGET} AS bin_id, sum(n) AS bin_tokens
+  FROM pre GROUP BY 1
+)
+SELECT CAST(count(*) AS BIGINT) AS n_bins,
+       CAST(sum(bin_tokens) AS BIGINT) AS total_tokens,
+       CAST(max(bin_tokens) AS BIGINT) AS max_bin_tokens,
+       sum(bin_tokens) = (SELECT sum(n) FROM t) AS conserved,
+       max(bin_tokens) <= {_PACK_BUDGET} - 1 + (SELECT max(n) FROM t) AS straddle_bounded
+FROM bins
+"""
+
+
+@query(
+    "pack_conservation_cert",
+    oracle=PACK_CERT_ORACLE,
+    description="Packer conservation certificate: token totals preserved + straddle bound, integer-exact",
+)
+def q_pack_conservation_cert(spark, sf_dir):
+    """The certified packer's two integer-exact laws on one row — the
+    invariants a packing bug breaks first, and both checkable without
+    floats: CONSERVATION (the bins' token totals sum to exactly the
+    corpus total — no doc dropped or double-packed) and the STRADDLE
+    BOUND (a bin exceeds the 512 budget only by the straddling doc:
+    max bin ≤ budget − 1 + largest doc, provable from the prefix-sum
+    charging rule). Runs the same ``pack_sequences`` plan the certified
+    ``pack_sequences`` query hashes, then folds the laws into one
+    all-integer certificate row."""
+    from h2outility_spark.operators.text import pack_sequences
+
+    docs = _t(spark, sf_dir, "documents")
+    bins = pack_sequences(docs, budget_tokens=_PACK_BUDGET)
+    from h2outility_spark.operators.text import space_token_count
+
+    corpus = docs.select(
+        space_token_count(F.col("text")).cast("bigint").alias("n")
+    ).agg(F.sum("n").alias("corpus_total"), F.max("n").alias("max_doc"))
+    agg = bins.agg(
+        F.count(F.lit(1)).alias("n_bins"),
+        F.sum("total_tokens").alias("total_tokens"),
+        F.max("total_tokens").alias("max_bin_tokens"),
+    )
+    return agg.join(F.broadcast(corpus)).select(
+        "n_bins",
+        "total_tokens",
+        "max_bin_tokens",
+        (F.col("total_tokens") == F.col("corpus_total")).alias("conserved"),
+        (
+            F.col("max_bin_tokens")
+            <= F.lit(_PACK_BUDGET - 1) + F.col("max_doc")
+        ).alias("straddle_bounded"),
+    )
+
+
+# -- unigram-LM quality scoring with per-source buckets (the CCNet shape) ----------------
+
+_ULM_BUCKETS = 3
+
+UNIGRAM_LM_ORACLE = """
+WITH toks AS (
+  SELECT d.doc_id, d.source,
+         unnest(regexp_split_to_array(trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')), ' ')) AS w
+  FROM documents d
+  WHERE length(trim(text)) > 0
+),
+cnt AS (SELECT w, count(*) AS c FROM toks GROUP BY 1),
+tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n_tot FROM cnt),
+per AS (
+  SELECT t.doc_id, t.source, count(*) AS n_tokens,
+         floor(avg(ln(CAST(c.c AS DOUBLE) / tot.n_tot)) * 10000.0 + 0.5) / 10000.0 AS logprob
+  FROM toks t JOIN cnt c USING (w) CROSS JOIN tot
+  GROUP BY 1, 2
+)
+SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens, logprob,
+       CAST(ntile({b}) OVER (PARTITION BY source ORDER BY logprob DESC, doc_id) AS INT) AS bucket
+FROM per
+""".format(b=_ULM_BUCKETS)
+
+
+@query(
+    "unigram_logprob_buckets",
+    oracle=UNIGRAM_LM_ORACLE,
+    description="CCNet-style quality bucketing: per-doc mean unigram log-prob, per-source terciles on the rounded score",
+)
+def q_unigram_logprob_buckets(spark, sf_dir):
+    """CCNet-style perplexity bucketing (Wenzek et al. 2020) — the
+    standard curation move this engine lacked: score every document by
+    its mean token log-probability under the corpus's own unigram LM,
+    then split each source into head/middle/tail terciles (real CCNet
+    scores against a Wikipedia KenLM; the unigram self-model keeps the
+    pair hermetic while exercising the identical plan shape). Flow: one
+    token explode -> vocabulary count table (hash join, combiner-
+    friendly) -> per-doc mean ln p -> per-source ntile. The ln() values
+    differ across engines in the last ulp, so the score is ROUNDED at 4
+    dp BEFORE ranking and doc_id breaks ties — near-ties become exact
+    ties with a deterministic order (the tfidf top-k lesson). The 1-row
+    total-token broadcast is the allowlisted scalar-BNLJ shape."""
+    from pyspark.sql import Window as W
+
+    from h2outility_spark.operators.text import tokens
+
+    docs = _t(spark, sf_dir, "documents").filter(
+        F.length(F.trim(F.col("text"))) > 0
+    )
+    toks = docs.select(
+        "doc_id", "source", F.explode(tokens(F.col("text"))).alias("w")
+    )
+    cnt = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    tot = cnt.agg(F.sum("c").cast("double").alias("n_tot"))
+    per = (
+        toks.join(cnt, "w")
+        .join(F.broadcast(tot))
+        .groupBy("doc_id", "source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+            fround(F.avg(F.log(F.col("c").cast("double") / F.col("n_tot"))), 4).alias(
+                "logprob"
+            ),
+        )
+    )
+    w = W.partitionBy("source").orderBy(F.col("logprob").desc(), "doc_id")
+    return per.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        "logprob",
+        F.ntile(_ULM_BUCKETS).over(w).cast("int").alias("bucket"),
     )

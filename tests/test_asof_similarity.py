@@ -136,7 +136,7 @@ def test_hybrid_search_rrf_fusion(spark):
 
 
 # (the DuckDB differential for hybrid_search moved to
-# workload_next.HYBRID_SEARCH_ORACLE + tests/test_oracle_parity.py, which
+# workload_similarity.HYBRID_SEARCH_ORACLE + tests/test_oracle_parity.py, which
 # checks it at sf0.001 AND sf0.01 under the driver's comparison discipline)
 
 

@@ -27,7 +27,7 @@ def test_pivot_width_cap_fails_fast(spark):
     assert len(pivot_wide(dv, ["ts"], pairs[:MAX_PIVOT_WIDTH]).columns) == MAX_PIVOT_WIDTH + 1
 
 
-def inertia(embeddings: DataFrame, centroids_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:
+def inertia(embeddings: DataFrame, centroids_df: DataFrame) -> float:
     """Sum of squared distances to the assigned centroid (fit metric)."""
     rows = (
         centroids_df.groupBy("cluster")
@@ -36,7 +36,7 @@ def inertia(embeddings: DataFrame, centroids_df: DataFrame, id_col: str = "vec_i
         .collect()
     )
     cents = [(r["cluster"], list(r["cvec"])) for r in rows]
-    assigned = _assign(embeddings, cents, id_col, vec_col)
+    assigned = _assign(embeddings, cents)
     vv = F.aggregate(F.col("__v"), F.lit(0.0), lambda a, x: a + x * x)
     return assigned.select(F.sum(vv + F.col("__part_d")).alias("s")).collect()[0]["s"]
 

@@ -9,7 +9,9 @@ or a retired/replaced entry updates it in the same commit, with the reason.
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
 
 from h2outility_spark import workload
 
@@ -25,3 +27,115 @@ def _digest() -> str:
 def test_registry_names_and_oracles_are_pinned():
     assert len(workload.REGISTRY) == REGISTRY_SIZE
     assert _digest() == REGISTRY_DIGEST
+
+
+# -- registry layout (AST only) ----------------------------------------------
+#
+# The registry is ``workload.py`` (the mechanics) plus one module per query
+# family. A family module imports other registry modules only at its top, so
+# there is no cycle to dodge with a function-local or mid-module import, and
+# no entry is patched after registration.
+
+ROOT = Path(__file__).resolve().parents[1]
+REGISTRY_MODULES = sorted((ROOT / "h2outility_spark").glob("workload*.py"))
+FAMILY_OF_PREFIX = {
+    "tpch_": "workload_tpch",
+    "txtable_": "workload_txtable",
+    "stream_": "workload_streaming",
+}
+
+
+def _imports_registry_module(node: ast.AST) -> bool:
+    if isinstance(node, ast.ImportFrom):
+        if node.module == "h2outility_spark":
+            return any(a.name.startswith("workload") for a in node.names)
+        return (node.module or "").startswith("h2outility_spark.workload")
+    if isinstance(node, ast.Import):
+        return any(a.name.startswith("h2outility_spark.workload") for a in node.names)
+    return False
+
+
+def test_registry_modules_import_each_other_only_at_the_top():
+    bad = []
+    for path in REGISTRY_MODULES:
+        tree = ast.parse(path.read_text())
+        body = tree.body
+        header_end = next(
+            (
+                i
+                for i, node in enumerate(body)
+                if not isinstance(node, (ast.Import, ast.ImportFrom))
+                and not (i == 0 and isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant))
+            ),
+            len(body),
+        )
+        for node in ast.walk(tree):
+            if not _imports_registry_module(node):
+                continue
+            if node not in body:
+                bad.append(f"{path.name}:{node.lineno} imports a registry module inside a block")
+            elif body.index(node) > header_end and not (
+                path.name == "workload.py" and node.module == "h2outility_spark"
+            ):
+                bad.append(f"{path.name}:{node.lineno} imports a registry module after the header")
+    assert not bad, bad
+
+
+def test_only_query_writes_registry_entries():
+    files = [
+        *(ROOT / "h2outility_spark").rglob("*.py"),
+        *(ROOT / "scripts").glob("*.py"),
+        *(ROOT / "perfbench").glob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    bad = []
+
+    def writes_registry(target: ast.AST) -> bool:
+        return any(
+            isinstance(n, ast.Subscript)
+            and (
+                (isinstance(n.value, ast.Name) and n.value.id == "REGISTRY")
+                or (isinstance(n.value, ast.Attribute) and n.value.attr == "REGISTRY")
+            )
+            for n in ast.walk(target)
+        )
+
+    for path in files:
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "query" and path.name == "workload.py":
+                allowed.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Assign, ast.Delete)):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            else:
+                continue
+            if any(writes_registry(t) for t in targets) and id(node) not in allowed:
+                bad.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not bad, f"REGISTRY written outside workload.query: {bad}"
+
+
+def test_family_prefixed_queries_live_in_their_family_module():
+    bad = []
+    for path in REGISTRY_MODULES:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            for deco in node.decorator_list:
+                if not (
+                    isinstance(deco, ast.Call)
+                    and isinstance(deco.func, ast.Name)
+                    and deco.func.id == "query"
+                    and deco.args
+                    and isinstance(deco.args[0], ast.Constant)
+                ):
+                    continue
+                name = deco.args[0].value
+                for prefix, module in FAMILY_OF_PREFIX.items():
+                    if name.startswith(prefix) and path.stem != module:
+                        bad.append(f"{name} in {path.name}, expected {module}.py")
+    assert not bad, bad

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from h2outility_spark.sources.parquet import load_table
 from h2outility_spark.streaming.incremental import BatchLedger
-from h2outility_spark.workload_next7 import (
+from h2outility_spark.workload_streaming import (
     cms_grid_path,
     make_cms_handler,
     make_quarantine_handler,
@@ -228,7 +228,7 @@ def _cdc_replica_run(spark, root: str, monkeypatch=None):
     ``txtable_cdc`` stream; with ``monkeypatch`` the second batch's marker
     commit crashes once and the drain is re-run, so the checkpoint
     re-delivers the same batch_id."""
-    from h2outility_spark.workload_next9 import _cdc_replica_runner
+    from h2outility_spark.workload_streaming import _cdc_replica_runner
 
     src, replica, drain = _cdc_replica_runner(spark, root, "k")
     ledger = BatchLedger(os.path.join(root, "applied"))

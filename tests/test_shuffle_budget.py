@@ -89,7 +89,7 @@ def test_staged_asof_forward_budget(spark):
     """The round-8 forward as-of must keep the backward variant's
     one-shuffle shape (union-sort-carry on the key, no hidden regroup)."""
     spark.catalog.clearCache()
-    from h2outility_spark.workload_next3 import q_asof_join_forward
+    from h2outility_spark.workload_qc import q_asof_join_forward
 
     plan = (
         q_asof_join_forward(spark, SF_DIR)
@@ -108,7 +108,7 @@ def test_staged_asof_nearest_budget(spark):
     orderings differ only in tiebreak direction — an in-partition re-sort,
     never a second exchange), and no broadcast."""
     spark.catalog.clearCache()
-    from h2outility_spark.workload_next4 import q_asof_join_nearest
+    from h2outility_spark.workload_qc import q_asof_join_nearest
 
     plan = (
         q_asof_join_nearest(spark, SF_DIR)

@@ -742,7 +742,7 @@ def test_cdc_replica_skips_marker_on_empty_batch(spark, tmp_path):
     import os
 
     from h2outility_spark.streaming.incremental import BatchLedger
-    from h2outility_spark.workload_next9 import _cdc_replica_runner
+    from h2outility_spark.workload_streaming import _cdc_replica_runner
 
     root = str(tmp_path / "emptyb")
     cdc_schema = "k int, v string, _commit_version bigint, _sign int"
