@@ -87,18 +87,14 @@ class EditSession:
 
     # --- persistence (W8, M1–M3) ---------------------------------------------
 
-    def save(self, store: DataFrame, new_keys: dict | None = None) -> tuple[DataFrame, DataFrame]:
-        """Apply edits and upsert into ``store``.
-
-        ``new_keys`` re-keys the edited rows into a NEW series ("Save As" /
-        create_new_series); otherwise the edited rows replace the same
-        logical rows ("Save"). Returns (new_store, new_catalog_rows).
+    def save(self, store: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Apply edits and upsert into ``store``: the edited rows replace
+        the same logical rows ("Save"; "Save As" is a plan's
+        ``reversion_series`` step). Returns (new_store, new_catalog_rows).
         """
         edited = self.frame()
         if qc.SEL in edited.columns:
             edited = edited.drop(qc.SEL)
-        if new_keys:
-            edited = qc.reversion_series(edited, new_keys)
         id_cols = [c for c in ("ValueID", "value_id", "event_id") if c in edited.columns]
         upsert_keys = (id_cols[:1] + [k for k in self.keys if k in edited.columns]) or self.keys
         new_store = mutation.upsert(store, edited, keys=upsert_keys)

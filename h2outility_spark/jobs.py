@@ -27,9 +27,9 @@ jobs on one SparkSession (FAIR scheduler), not a serial driver loop.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from h2outility_spark.operators.catalog import derive_catalog
 from h2outility_spark.operators.extract import build_predicate

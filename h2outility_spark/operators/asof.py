@@ -27,57 +27,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def _tiebreak_carry(tiebreak, payload_cols, keys):
-    """Extra projection entry needed when the tiebreak names a right-side
-    column OUTSIDE keys/payload/ts — it must be carried through the narrow
-    projection explicitly or F.col(tiebreak) is unresolvable afterwards."""
-    if (
-        tiebreak is None
-        or tiebreak in payload_cols
-        or tiebreak in keys
-        or tiebreak == "ts"
-    ):
-        return []
-    return [F.col(tiebreak).alias("__tb_raw")]
-
-
-def _tiebreak_col(tiebreak, payload_cols, keys):
-    """Resolve the tiebreak against the POST-projection right frame: payload
-    columns were renamed __p_*, the timestamp became __rts, keys kept their
-    names, and anything else rode through as __tb_raw."""
-    if tiebreak in payload_cols:
-        return F.col(f"__p_{tiebreak}")
-    if tiebreak == "ts":
-        return F.col("__rts")
-    if tiebreak in keys:
-        return F.col(tiebreak)
-    return F.col("__tb_raw")
-
-
 def _union_tagged(left, right, keys, payload_cols, tiebreak, left_side, right_side):
     """Shared prep for every as-of variant: project the right side narrow
-    (__rts + __p_* payloads + tiebreak carry), tag both sides with
-    __side/__ts, resolve the tiebreak to __tb, union. The ``*_side``
-    integers decide who sorts first at equal timestamps — the one
-    semantic difference between the variants' unions. Returns
-    (both, payload_cols). Kept as ONE function so a semantic fix (like
-    round 8's atomic struct carry) lands everywhere at once."""
-    payload_cols = payload_cols or [c for c in right.columns if c not in keys and c != "ts"]
+    (__rts + __p_* payloads, plus the tiebreak as __tb_raw when it is not a
+    payload column), tag both sides with __side/__ts, resolve the tiebreak
+    to __tb, union. The ``*_side`` integers decide who sorts first at equal
+    timestamps — the one semantic difference between the variants' unions.
+    Kept as ONE function so a semantic fix (like round 8's atomic struct
+    carry) lands everywhere at once."""
+    carry_tb = tiebreak is not None and tiebreak not in payload_cols
     lt = left.withColumn("__side", F.lit(left_side)).withColumn("__ts", F.col("ts"))
     rt = (
         right.select(
             *keys,
             F.col("ts").alias("__rts"),
             *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
-            *_tiebreak_carry(tiebreak, payload_cols, keys),
+            *([F.col(tiebreak).alias("__tb_raw")] if carry_tb else []),
         )
         .withColumn("__side", F.lit(right_side))
         .withColumn("__ts", F.col("__rts"))
     )
     if tiebreak is not None:
-        rt = rt.withColumn("__tb", _tiebreak_col(tiebreak, payload_cols, keys)).drop("__tb_raw")
+        rt = rt.withColumn("__tb", F.col("__tb_raw" if carry_tb else f"__p_{tiebreak}")).drop("__tb_raw")
         lt = lt.withColumn("__tb", F.lit(None))
-    return lt.unionByName(rt, allowMissingColumns=True), payload_cols
+    return lt.unionByName(rt, allowMissingColumns=True)
 
 
 def _right_row_struct(right_side: int, payload_cols):
@@ -93,67 +66,58 @@ def _right_row_struct(right_side: int, payload_cols):
     )
 
 
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    payload_cols: list[str] | None = None,
-    tolerance_seconds: float | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """For each left row: columns of the newest right row at-or-before it.
+def _bracket_carries(left, right, keys, payload_cols):
+    """The left rows with both directional carries of the right row struct:
+    ``__cb`` (newest at-or-before) and ``__cf`` (oldest strictly-after),
+    over ONE exchange on the keys. Among duplicate (keys, ts) right rows
+    the largest right ``event_id`` wins either way."""
+    both = _union_tagged(left, right, keys, payload_cols, "event_id", left_side=1, right_side=0)
+    wb = W.partitionBy(*keys).orderBy("__ts", "__side", F.col("__tb").asc_nulls_first()).rowsBetween(
+        W.unboundedPreceding, 0
+    )
+    wf = W.partitionBy(*keys).orderBy("__ts", "__side", F.col("__tb").desc_nulls_last()).rowsBetween(
+        0, W.unboundedFollowing
+    )
+    carry = _right_row_struct(0, payload_cols)
+    carried = both.select(
+        "*",
+        F.last(carry, ignorenulls=True).over(wb).alias("__cb"),
+        F.first(carry, ignorenulls=True).over(wf).alias("__cf"),
+    )
+    return carried.filter(F.col("__side") == 1)
 
-    ``payload_cols`` are the right-side columns to carry (NULL when no
-    right row precedes, or when outside ``tolerance_seconds``).
 
-    ``tiebreak`` names a right-side column that deterministically orders
-    right rows sharing an exact timestamp (the LARGEST wins the carry).
-    Without it, duplicate (keys, ts) right rows make the carried payload
-    partition-order-dependent — the same unspecified choice DuckDB's ASOF
-    JOIN makes; pass a tiebreak whenever the right side isn't unique per
-    (keys, ts).
+def asof_join_backward(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """For each left row: the right ``value`` of the newest right row
+    at-or-before it (NULL when no right row precedes), with its timestamp
+    as ``asof_ts``. No tolerance and no tiebreak: duplicate (keys, ts)
+    right rows make the carried value partition-order-dependent — the same
+    unspecified choice DuckDB's ASOF JOIN makes.
     """
     # right rows (side 0) sort before left rows at equal timestamps → "<="
-    # semantics; among equal-ts right rows the tiebreak (nulls first, so
-    # left rows are unaffected) fixes which one the carry sees last
-    both, payload_cols = _union_tagged(
-        left, right, keys, payload_cols, tiebreak, left_side=1, right_side=0
-    )
-    order = ["__ts", "__side"] + ([F.col("__tb").asc_nulls_first()] if tiebreak is not None else [])
-    w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
-    carry = _right_row_struct(0, payload_cols)
+    # semantics
+    both = _union_tagged(left, right, keys, ["value"], None, left_side=1, right_side=0)
+    w = W.partitionBy(*keys).orderBy("__ts", "__side").rowsBetween(W.unboundedPreceding, 0)
+    carry = _right_row_struct(0, ["value"])
     carried = both.select("*", F.last(carry, ignorenulls=True).over(w).alias("__carry"))
-    out = carried.filter(F.col("__side") == 1)
-    within = F.lit(True)
-    if tolerance_seconds is not None:
-        within = (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("__carry.__rts"))) <= int(
-            tolerance_seconds * 1_000_000
-        )
-    result = out.select(
-        *left.columns,
-        F.when(within, F.col("__carry.__rts")).alias("asof_ts"),
-        *[F.when(within, F.col(f"__carry.__p_{c}")).alias(c) for c in payload_cols],
+    return carried.filter(F.col("__side") == 1).select(
+        *left.columns, F.col("__carry.__rts").alias("asof_ts"), F.col("__carry.__p_value").alias("value")
     )
-    return result
 
 
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    payload_cols: list[str] | None = None,
-    tolerance_seconds: float | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """For each left row: columns of the OLDEST right row at-or-after it —
-    the mirror of :func:`asof_join_backward` (same union-sort-carry shape,
-    one shuffle on the keys, no per-group pandas). The natural direction
-    for "next event after": next click after a purchase, next maintenance
-    visit after an alarm, the reading that closes an interval.
+#: How far the forward and nearest joins reach: 2 hours, in microseconds.
+_TOLERANCE_US = 7200 * 1_000_000
 
-    ``tolerance_seconds`` bounds how far forward the match may reach
-    (NULLs beyond it). ``tiebreak`` resolves duplicate (keys, ts) right
-    rows exactly like the backward variant: the LARGEST tiebreak value
+
+def asof_join_forward(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """For each left row: the right ``value`` of the OLDEST right row
+    at-or-after it, at most 2 hours ahead (NULL beyond) — the mirror of
+    :func:`asof_join_backward` (same union-sort-carry shape, one shuffle on
+    the keys, no per-group pandas). The natural direction for "next event
+    after": next click after a purchase, next maintenance visit after an
+    alarm, the reading that closes an interval.
+
+    Duplicate (keys, ts) right rows are resolved by ``value``: the LARGEST
     wins the carry, keeping the result partition-order-independent.
     """
     # left rows (side 0) sort BEFORE right rows at equal timestamps, so the
@@ -161,73 +125,46 @@ def asof_join_forward(
     # semantics; among equal-ts right rows the DESC tiebreak puts the
     # winner first (left rows sit earlier by __side, so their null __tb
     # never reorders them relative to right rows)
-    both, payload_cols = _union_tagged(
-        left, right, keys, payload_cols, tiebreak, left_side=0, right_side=1
-    )
-    order = ["__ts", "__side"] + ([F.col("__tb").desc_nulls_last()] if tiebreak is not None else [])
+    both = _union_tagged(left, right, keys, ["value"], "value", left_side=0, right_side=1)
+    order = ["__ts", "__side", F.col("__tb").desc_nulls_last()]
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(0, W.unboundedFollowing)
-    carry = _right_row_struct(1, payload_cols)
+    carry = _right_row_struct(1, ["value"])
     carried = both.select("*", F.first(carry, ignorenulls=True).over(w).alias("__carry"))
     out = carried.filter(F.col("__side") == 0)
-    within = F.lit(True)
-    if tolerance_seconds is not None:
-        within = (F.unix_micros(F.col("__carry.__rts")) - F.unix_micros(F.col("ts"))) <= int(
-            tolerance_seconds * 1_000_000
-        )
+    within = (F.unix_micros(F.col("__carry.__rts")) - F.unix_micros(F.col("ts"))) <= _TOLERANCE_US
     return out.select(
         *left.columns,
         F.when(within, F.col("__carry.__rts")).alias("asof_ts"),
-        *[F.when(within, F.col(f"__carry.__p_{c}")).alias(c) for c in payload_cols],
+        F.when(within, F.col("__carry.__p_value")).alias("value"),
     )
 
 
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    payload_cols: list[str] | None = None,
-    tolerance_seconds: float | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """For each left row: columns of the CLOSEST right row in either
-    direction (|right.ts − left.ts| minimized, within the same key),
-    ties between an equally-distant earlier and later row resolved
-    BACKWARD (the at-or-before row wins — pandas merge_asof's
-    ``direction='nearest'`` convention). ``tolerance_seconds`` bounds the
-    distance both ways; ``tiebreak`` resolves duplicate (keys, ts) right
-    rows exactly like the directional variants (largest wins).
+def asof_join_nearest(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """For each left row: the right ``click_value`` of the CLOSEST right
+    row in either direction (|right.ts − left.ts| minimized, within the
+    same key, at most 2 hours either way), ties between an equally-distant
+    earlier and later row resolved BACKWARD (the at-or-before row wins —
+    pandas merge_asof's ``direction='nearest'`` convention). Duplicate
+    (keys, ts) right rows are resolved by the right ``event_id`` (largest
+    wins).
 
     One union-sort-carry pass: both directional carries ride the SAME
     exchange (one shuffle on the keys); the two window orderings differ
-    only when a tiebreak is given (backward wants the winner sorted last,
+    only in the tiebreak direction (backward wants the winner sorted last,
     forward wants it first), costing at most a second in-partition sort,
     never a second shuffle. Equal-ts right rows are deliberately visible
     only to the backward carry — a distance-0 match always resolves
     backward anyway.
 
     Adds ``asof_ts`` and ``asof_direction`` ('backward'/'forward') beside
-    the carried payload columns.
+    the carried ``click_value``.
     """
-    both, payload_cols = _union_tagged(
-        left, right, keys, payload_cols, tiebreak, left_side=1, right_side=0
-    )
-    tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
-    tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []
-    wb = W.partitionBy(*keys).orderBy("__ts", "__side", *tb_b).rowsBetween(W.unboundedPreceding, 0)
-    wf = W.partitionBy(*keys).orderBy("__ts", "__side", *tb_f).rowsBetween(0, W.unboundedFollowing)
-    carry = _right_row_struct(0, payload_cols)
-    carried = both.select(
-        "*",
-        F.last(carry, ignorenulls=True).over(wb).alias("__cb"),
-        F.first(carry, ignorenulls=True).over(wf).alias("__cf"),
-    )
-    out = carried.filter(F.col("__side") == 1)
+    out = _bracket_carries(left, right, keys, ["click_value"])
     lus = F.unix_micros(F.col("ts"))
     db = lus - F.unix_micros(F.col("__cb.__rts"))
     df_ = F.unix_micros(F.col("__cf.__rts")) - lus
-    tol_us = None if tolerance_seconds is None else int(tolerance_seconds * 1_000_000)
-    b_ok = F.col("__cb").isNotNull() & (F.lit(True) if tol_us is None else (db <= F.lit(tol_us)))
-    f_ok = F.col("__cf").isNotNull() & (F.lit(True) if tol_us is None else (df_ <= F.lit(tol_us)))
+    b_ok = F.col("__cb").isNotNull() & (db <= F.lit(_TOLERANCE_US))
+    f_ok = F.col("__cf").isNotNull() & (df_ <= F.lit(_TOLERANCE_US))
     # backward wins ties (db == df_); forward only when strictly closer or
     # backward is missing/out-of-tolerance
     use_b = b_ok & (~f_ok | (db <= df_))
@@ -238,7 +175,7 @@ def asof_join_nearest(
         *left.columns,
         chosen["__rts"].alias("asof_ts"),
         direction.alias("asof_direction"),
-        *[chosen[f"__p_{c}"].alias(c) for c in payload_cols],
+        chosen["__p_click_value"].alias("click_value"),
     )
 
 
@@ -247,7 +184,6 @@ def asof_join_interp(
     right: DataFrame,
     keys: list[str],
     value_col: str,
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """For each left row: the right-side ``value_col`` LINEARLY
     INTERPOLATED at the left timestamp between the bracketing right rows
@@ -268,23 +204,10 @@ def asof_join_interp(
     arithmetic is integer-microsecond deltas cast to double, one
     multiply, one add — identical IEEE expression shapes in any engine
     that mirrors it, so results are oracle-exact bit-for-bit.
-    ``tiebreak``: largest wins among duplicate (keys, ts) right rows,
-    exactly like the directional variants.
+    Among duplicate (keys, ts) right rows the largest right ``event_id``
+    wins, exactly like :func:`asof_join_nearest`.
     """
-    both, payload_cols = _union_tagged(
-        left, right, keys, [value_col], tiebreak, left_side=1, right_side=0
-    )
-    tb_b = [F.col("__tb").asc_nulls_first()] if tiebreak is not None else []
-    tb_f = [F.col("__tb").desc_nulls_last()] if tiebreak is not None else []
-    wb = W.partitionBy(*keys).orderBy("__ts", "__side", *tb_b).rowsBetween(W.unboundedPreceding, 0)
-    wf = W.partitionBy(*keys).orderBy("__ts", "__side", *tb_f).rowsBetween(0, W.unboundedFollowing)
-    carry = _right_row_struct(0, payload_cols)
-    carried = both.select(
-        "*",
-        F.last(carry, ignorenulls=True).over(wb).alias("__cb"),
-        F.first(carry, ignorenulls=True).over(wf).alias("__cf"),
-    )
-    out = carried.filter(F.col("__side") == 1)
+    out = _bracket_carries(left, right, keys, [value_col])
     tb_ = F.col("__cb.__rts")
     tf_ = F.col("__cf.__rts")
     vb = F.col(f"__cb.__p_{value_col}")
@@ -319,30 +242,21 @@ def range_join_count(
     left_ts: str,
     right_ts: str,
     band_seconds: int,
-    id_col: str | None = None,
 ) -> DataFrame:
     """Count right rows within ±band of each left row (same keys), via
     bucketized equi-join: candidates come from the 3 adjacent buckets, the
     exact band filter runs after the hash join.
 
-    Per-row counting semantics: group on a unique per-row id so exact-
-    duplicate left rows each keep their own count (matching a per-row
-    left-join oracle) instead of collapsing. ``id_col`` names the caller's
-    unique key; when absent, a ``row_number()`` over every left column is
-    used. Either way the id is DETERMINISTIC — ``monotonically_increasing_id``
-    would change across task retries/repartitions, which at cluster scale
-    silently mis-groups a recomputed partition.
+    Per-row counting semantics: group on the left's unique ``event_id`` so
+    each left row keeps its own count (matching a per-row left-join
+    oracle). The id is DETERMINISTIC —
+    ``monotonically_increasing_id`` would change across task
+    retries/repartitions, which at cluster scale silently mis-groups a
+    recomputed partition.
     """
     band_us = band_seconds * 1_000_000
-    if id_col is not None:
-        rid = F.col(id_col)
-    else:
-        # Deterministic fallback: number rows within a full ordering of the
-        # left columns. Costs one extra shuffle (window over all columns) —
-        # callers with a real key should pass id_col.
-        rid = F.row_number().over(W.orderBy(*[F.col(c) for c in left.columns]))
     lb = (
-        left.withColumn("__rid", rid)
+        left.withColumn("__rid", F.col("event_id"))
         .withColumn("__lb", F.expr(f"unix_micros({left_ts}) div {band_us}"))
     )
     rb = right.select(*keys, F.unix_micros(F.col(right_ts)).alias("__rus")).withColumn(

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from h2outility_spark.operators.text import WS_CLASS_EXPR, fingerprint, normalize_ws, shingles_expr
+from h2outility_spark.operators.text import WS_CLASS_EXPR, fingerprint, normalize_ws
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -137,36 +137,12 @@ def lsh_candidate_pairs_between(
     return bn.join(bo, ["band", "band_key"]).select("id_a", "id_b").distinct()
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: list[list[int]],
-    max_bucket: int | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, bands: list[list[int]]) -> DataFrame:
     """Self-join signatures on per-band keys → distinct candidate (a, b)
     pairs with a < b. ``bands`` lists the signature indices in each band.
-
-    ``max_bucket`` caps the k²-pairs explosion of a boilerplate bucket
-    (one hot band key with k members turns the self-join cartesian within
-    that bucket): buckets wider than the cap contribute NO pairs. None
-    (default) disables the width scan entirely — no extra shuffle."""
-    banded = _banded(signatures, bands)
-    if max_bucket is not None:
-        banded = _without_giant_buckets(banded, max_bucket)
-    return _pairs_from_banded(banded)
-
-
-def _without_giant_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop band rows belonging to over-wide buckets via a broadcast
-    anti-join against the (tiny) giant-bucket list — the width count is one
-    combiner-friendly aggregation, and the anti-join adds no shuffle of the
-    banded rows."""
-    giants = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
-        .select("band", "band_key")
-    )
-    return banded.join(F.broadcast(giants), ["band", "band_key"], "left_anti")
+    No bucket-width cap: a boilerplate band key with k members yields its
+    k² pairs (run exact dedup first)."""
+    return _pairs_from_banded(_banded(signatures, bands))
 
 
 def jaccard_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
@@ -306,8 +282,11 @@ def canonical_docs(docs: DataFrame, clusters: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
-    """Winnowing document fingerprints: hash every word k-gram, slide a
+_WINNOW_K = 3
+
+
+def winnow_fingerprints(docs: DataFrame, w: int = 4) -> DataFrame:
+    """Winnowing document fingerprints: hash every word k-gram (k = 3), slide a
     w-wide window over the hash sequence, keep the minimum hash of each
     window — the guaranteed-coverage selection of the winnowing paper
     (any shared run of >= w+k-1 tokens shares at least one fingerprint).
@@ -329,12 +308,12 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     # guard size < k explicitly: sequence(1, stop) flips to descending when
     # stop < start, which would fabricate bogus window starts
     kgram_hashes = F.expr(
-        f"transform(sequence(1, size(__toks) - {k - 1}), "
-        f"i -> substr(md5(array_join(slice(__toks, i, {k}), ' ')), 1, 8))"
+        f"transform(sequence(1, size(__toks) - {_WINNOW_K - 1}), "
+        f"i -> substr(md5(array_join(slice(__toks, i, {_WINNOW_K}), ' ')), 1, 8))"
     )
     d = d.select(
         F.col("doc_id"),
-        F.when(F.size("__toks") >= k, kgram_hashes).otherwise(F.expr("array()")).alias("__h"),
+        F.when(F.size("__toks") >= _WINNOW_K, kgram_hashes).otherwise(F.expr("array()")).alias("__h"),
     ).filter(F.size("__h") > 0)
     wins = F.expr(
         f"array_distinct(transform(sequence(1, greatest(size(__h) - {w - 1}, 1)), "
@@ -343,26 +322,15 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     return d.select(F.col("doc_id"), F.explode(wins).alias("fp"))
 
 
-def winnow_neardup_pairs(
-    fps: DataFrame,
-    min_shared: int = 2,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def winnow_neardup_pairs(fps: DataFrame) -> DataFrame:
     """Near-dup candidate pairs from shared winnowing fingerprints: join
     documents on fp (bucketed by fingerprint — the shuffle is keyed by fp,
     never O(n²)), count shared fingerprints per (a < b) pair, keep pairs
-    sharing >= ``min_shared``.
+    sharing at least 2.
 
     Same giant-bucket hazard as LSH banding (one boilerplate fingerprint
-    shared by m docs makes m² pairs): ``max_bucket`` drops over-wide
-    fingerprint buckets via a broadcast anti-join, exactly like
-    lsh_candidate_pairs.
+    shared by m docs makes m² pairs).
     """
-    if max_bucket is not None:
-        giants = (
-            fps.groupBy("fp").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > max_bucket).select("fp")
-        )
-        fps = fps.join(F.broadcast(giants), "fp", "left_anti")
     a = fps.select(F.col("doc_id").alias("id_a"), "fp")
     b = fps.select(F.col("doc_id").alias("id_b"), "fp")
     return (
@@ -370,7 +338,7 @@ def winnow_neardup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 
@@ -390,9 +358,9 @@ def _bit_of_hex_digit(digit_col_sql: str, bit_in_digit: int) -> str:
     return f"(CAST(floor({val} / {2 ** shift}) AS INT) % 2)"
 
 
-def simhash_bit_vote_sql(token_hash_sql: str, bit_index: int) -> str:
-    """SQL for the ±1 vote of one token on one of the 64 signature bits."""
-    digit = f"substr({token_hash_sql}, {bit_index // 4 + 1}, 1)"
+def simhash_bit_vote_sql(bit_index: int) -> str:
+    """SQL for the ±1 vote of the token hash ``th`` on one of the 64 signature bits."""
+    digit = f"substr(th, {bit_index // 4 + 1}, 1)"
     return f"(2 * {_bit_of_hex_digit(digit, bit_index % 4)} - 1)"
 
 
@@ -408,7 +376,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
         F.col("doc_id"), F.explode(F.split(normalize_ws(F.lower(F.col("text"))), " ")).alias("tok")
     ).filter(F.length("tok") > 0)
     hashed = toks.select(F.col("doc_id"), F.expr("substr(md5(encode(tok, 'UTF-8')), 1, 16)").alias("th"))
-    votes = [F.expr(simhash_bit_vote_sql("th", b)).alias(f"v{b}") for b in range(64)]
+    votes = [F.expr(simhash_bit_vote_sql(b)).alias(f"v{b}") for b in range(64)]
     voted = hashed.select(F.col("doc_id"), *votes)
     sums = voted.groupBy("doc_id").agg(*[F.sum(f"v{b}").alias(f"s{b}") for b in range(64)])
     # assemble hex: each output digit from 4 bit-majorities
@@ -420,14 +388,14 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return sums.select(F.col("doc_id"), sig)
 
 
-def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     """Near-duplicate pairs by SimHash: banded blocking + exact Hamming
     verify — the third dedup family (vs. shingle-set MinHash and
     embedding-cosine RP-LSH), cheapest per doc of the three.
 
     The 64-bit signature splits into 4 bands of 16 bits; candidates must
-    share at least one band verbatim. For ``max_hamming <= 3`` this is
-    EXACT by pigeonhole — 3 flipped bits cannot touch all 4 bands — so the
+    share at least one band verbatim, and pairs within Hamming distance 3
+    are kept. This is EXACT by pigeonhole — 3 flipped bits cannot touch all 4 bands — so the
     blocked join provably loses no qualifying pair (the brute-force oracle
     equality in the registry demonstrates it). Shuffle is keyed by
     (band, value): ~4n rows; corpus-wide boilerplate concentrates in hot
@@ -471,7 +439,7 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     return (
         cand.select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
@@ -545,13 +513,41 @@ def incremental_neardup_filter(
 # ---------------------------------------------------------------------------
 
 
-def duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
-    """Maximal per-document spans of text whose every ``window``-token
+_SPAN_WINDOW = 16
+
+
+def _span_windows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, i, w) token rows and the (doc_id, i, h) md5 of every
+    16-token window starting at token i."""
+    from pyspark.sql import Window as W
+
+    from h2outility_spark.operators.text import tokens
+
+    toks = (
+        docs.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
+    )
+    win = W.partitionBy("doc_id").orderBy("i")
+    parts = [F.col("w")] + [F.lead("w", k).over(win) for k in range(1, _SPAN_WINDOW)]
+    wins = (
+        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
+        .filter(F.col(f"__w{_SPAN_WINDOW - 1}").isNotNull())
+        .select(
+            F.col("doc_id"),
+            F.col("i"),
+            F.md5(F.encode(F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(_SPAN_WINDOW)]), "UTF-8")).alias("h"),
+        )
+    )
+    return toks, wins
+
+
+def duplicated_spans(docs: DataFrame) -> DataFrame:
+    """Maximal per-document spans of text whose every 16-token
     substring also occurs elsewhere in the corpus (another doc, or another
     position of the same doc) — the exact-substring-duplication signal
     Lee et al. remove with a suffix array. A window-hash formulation
     distributes better than suffix arrays: any duplicated substring of
-    length >= window contains only duplicated windows, so the union of
+    length >= 16 tokens contains only duplicated windows, so the union of
     duplicated windows covers it; consecutive covered positions then merge
     into maximal spans (gaps-and-islands on the position sequence).
 
@@ -564,28 +560,12 @@ def duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from h2outility_spark.operators.text import tokens
-
-    toks = (
-        docs.filter(F.length(F.trim(F.col("text"))) > 0)
-        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
-    )
-    win = W.partitionBy("doc_id").orderBy("i")
-    parts = [F.col("w")] + [F.lead("w", k).over(win) for k in range(1, window)]
-    wins = (
-        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
-        .filter(F.col(f"__w{window - 1}").isNotNull())
-        .select(
-            F.col("doc_id"),
-            F.col("i"),
-            F.md5(F.encode(F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(window)]), "UTF-8")).alias("h"),
-        )
-    )
+    _, wins = _span_windows(docs)
     dup_hashes = wins.groupBy("h").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") >= 2).select("h")
     dup_starts = wins.join(dup_hashes, "h").select("doc_id", "i")
     covered = (
         dup_starts.select(
-            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("pos")
+            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(_SPAN_WINDOW - 1))).alias("pos")
         )
         .distinct()
     )
@@ -606,10 +586,10 @@ def duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
     )
 
 
-def remove_duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame) -> DataFrame:
     """The removal stage on top of duplicated_spans' detection: keep the
     FIRST corpus occurrence (by doc id, then position) of every duplicated
-    ``window``-token substring and delete the positions covered by every
+    16-token substring and delete the positions covered by every
     LATER occurrence, then reassemble documents. This is the suffix-dedup
     policy (all-but-one occurrence removed) at window granularity.
 
@@ -619,28 +599,12 @@ def remove_duplicated_spans(docs: DataFrame, window: int = 16) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from h2outility_spark.operators.text import tokens
-
-    toks = (
-        docs.filter(F.length(F.trim(F.col("text"))) > 0)
-        .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
-    )
-    win = W.partitionBy("doc_id").orderBy("i")
-    parts = [F.col("w")] + [F.lead("w", k).over(win) for k in range(1, window)]
-    wins = (
-        toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
-        .filter(F.col(f"__w{window - 1}").isNotNull())
-        .select(
-            F.col("doc_id"),
-            F.col("i"),
-            F.md5(F.encode(F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(window)]), "UTF-8")).alias("h"),
-        )
-    )
+    toks, wins = _span_windows(docs)
     wrank = W.partitionBy("h").orderBy("doc_id", "i")
     later = wins.withColumn("rn", F.row_number().over(wrank)).filter(F.col("rn") > 1)
     covered = (
         later.select(
-            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(window - 1))).alias("i")
+            F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(_SPAN_WINDOW - 1))).alias("i")
         )
         .distinct()
     )

@@ -40,30 +40,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def aggregate_state(
-    rows: DataFrame,
-    keys: list[str],
-    value_col: str,
-    count_alias: str = "n",
-    sum_alias: str = "total",
-) -> DataFrame:
-    """The materializable (count, sum) state of a grouped aggregate — the
-    shape :func:`maintain_grouped_agg` knows how to advance."""
+def aggregate_state(rows: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """The materializable (``n_orders``, ``total_cents``) state of a grouped
+    count and sum — the shape :func:`maintain_grouped_agg` knows how to
+    advance."""
     return rows.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias(count_alias),
-        F.sum(value_col).alias(sum_alias),
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(value_col).alias("total_cents"),
     )
 
 
-def maintain_grouped_agg(
-    old_agg: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    value_col: str,
-    count_alias: str = "n",
-    sum_alias: str = "total",
-) -> DataFrame:
-    """Advance a (count, sum) grouped aggregate using a CDF frame
+def maintain_grouped_agg(old_agg: DataFrame, changes: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Advance an (``n_orders``, ``total_cents``) grouped aggregate using a CDF frame
     (``storage_tx.TxTable.changes`` shape: destination schema +
     ``_change_type`` in {'insert','delete'}).
 
@@ -78,21 +66,20 @@ def maintain_grouped_agg(
         F.sum(sign * F.col(value_col)).alias("__dsum"),
     )
     joined = old_agg.join(delta, keys, "full_outer")
-    n = F.coalesce(F.col(count_alias), F.lit(0)) + F.coalesce(F.col("__dn"), F.lit(0))
-    total = F.coalesce(F.col(sum_alias), F.lit(0)) + F.coalesce(F.col("__dsum"), F.lit(0))
+    n = F.coalesce(F.col("n_orders"), F.lit(0)) + F.coalesce(F.col("__dn"), F.lit(0))
+    total = F.coalesce(F.col("total_cents"), F.lit(0)) + F.coalesce(F.col("__dsum"), F.lit(0))
     return (
-        joined.select(*keys, n.alias(count_alias), total.alias(sum_alias))
-        .filter(F.col(count_alias) > 0)
+        joined.select(*keys, n.alias("n_orders"), total.alias("total_cents"))
+        .filter(F.col("n_orders") > 0)
     )
 
 
-def minmax_state(
-    rows: DataFrame,
-    keys: list[str],
-    value_col: str,
-    k: int = 8,
-) -> DataFrame:
-    """Bounded MIN/MAX view state: per key, the k smallest values
+#: Values kept per side of the bounded MIN/MAX state.
+_K = 2
+
+
+def minmax_state(rows: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Bounded MIN/MAX view state: per key, the k = 2 smallest values
     (``kmin``, ascending), the k largest (``kmax``, descending), the row
     count, and the truncation HORIZONS ``hmin``/``hmax`` (the kth
     smallest/largest at truncation time; NULL when the kept side holds
@@ -107,20 +94,20 @@ def minmax_state(
     desc = F.row_number().over(W.partitionBy(*keys).orderBy(F.col(value_col).desc()))
     ranked = rows.select(*keys, F.col(value_col).alias("__v"), asc.alias("__ra"), desc.alias("__rd"))
     return ranked.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(F.when(F.col("__ra") <= k, F.col("__v")))).alias("kmin"),
+        F.array_sort(F.collect_list(F.when(F.col("__ra") <= _K, F.col("__v")))).alias("kmin"),
         F.reverse(
-            F.array_sort(F.collect_list(F.when(F.col("__rd") <= k, F.col("__v"))))
+            F.array_sort(F.collect_list(F.when(F.col("__rd") <= _K, F.col("__v"))))
         ).alias("kmax"),
         F.count(F.lit(1)).alias("n"),
-        F.max(F.when(F.col("__ra") == k, F.col("__v"))).alias("__kth_min"),
-        F.max(F.when(F.col("__rd") == k, F.col("__v"))).alias("__kth_max"),
+        F.max(F.when(F.col("__ra") == _K, F.col("__v"))).alias("__kth_min"),
+        F.max(F.when(F.col("__rd") == _K, F.col("__v"))).alias("__kth_max"),
     ).select(
         *keys,
         "kmin",
         "kmax",
         "n",
-        F.when(F.col("n") > k, F.col("__kth_min")).alias("hmin"),
-        F.when(F.col("n") > k, F.col("__kth_max")).alias("hmax"),
+        F.when(F.col("n") > _K, F.col("__kth_min")).alias("hmin"),
+        F.when(F.col("n") > _K, F.col("__kth_max")).alias("hmax"),
     )
 
 
@@ -130,7 +117,6 @@ def maintain_grouped_minmax(
     base_after: DataFrame,
     keys: list[str],
     value_col: str,
-    k: int = 8,
     max_broadcast_keys: int = 100_000,
     n_changed_keys: int | None = None,
 ) -> DataFrame:
@@ -218,11 +204,11 @@ def maintain_grouped_minmax(
         rebuilt = merged.groupBy(*keys).agg(full.alias("__full"))
         rebuilt = rebuilt.select(
             *keys,
-            F.slice("__full", 1, k).alias(kept_col),
+            F.slice("__full", 1, _K).alias(kept_col),
             # re-truncation: horizon moves to the new kth element (always
             # inside the old horizon, so the invariant keeps covering the
             # old unknown region)
-            F.when(F.size("__full") > k, F.element_at("__full", k)).alias("__kth"),
+            F.when(F.size("__full") > _K, F.element_at("__full", _K)).alias("__kth"),
         )
         side = (
             old_state.select(*keys, F.col(h_col).alias("__h_old"))
@@ -283,7 +269,5 @@ def maintain_grouped_minmax(
         maintained.join(rescan_hinted, keys, "left_anti")
         .select(*keys, "kmin", "kmax", "n", "hmin", "hmax")
     )
-    rescanned = minmax_state(
-        base_after.join(rescan_hinted, keys, "left_semi"), keys, value_col, k
-    )
+    rescanned = minmax_state(base_after.join(rescan_hinted, keys, "left_semi"), keys, value_col)
     return healthy.unionByName(rescanned)

@@ -105,15 +105,15 @@ def extract_image_features(
     return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
 
 
-def frame_sample_plan(assets: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: emits (asset_id, frame_index) rows for a
-    downstream decoder, derived from declared frame counts in metadata.
+def frame_sample_plan(assets: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: emits (asset_id, frame_index) rows, every
+    30th frame, for a downstream decoder, derived from declared frame counts in metadata.
     Pure Catalyst (sequence + explode) — the expensive decode happens later,
     against only the sampled indices."""
     n_frames = F.coalesce(F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(0))
     return assets.select(
         F.col("asset_id"),
-        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))).alias("frame_index"),
+        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(30))).alias("frame_index"),
     )
 
 
@@ -176,16 +176,16 @@ def resize_images(
     return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, RESIZED_SCHEMA)
 
 
-def audio_chunk_plan(assets: DataFrame, chunk_ms: int = 10_000) -> DataFrame:
+def audio_chunk_plan(assets: DataFrame) -> DataFrame:
     """Audio chunking *plan*: (asset_id, chunk_start_ms) rows covering the
-    declared ``duration_ms`` metadata in ``chunk_ms`` strides — like
+    declared ``duration_ms`` metadata in 2-second strides — like
     ``frame_sample_plan``, pure Catalyst (sequence + explode); the decoder
     later touches only the planned chunks."""
     dur = F.coalesce(F.element_at(F.col("meta"), "duration_ms").cast("long"), F.lit(0))
     return assets.select(
         F.col("asset_id"),
         F.explode(
-            F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(chunk_ms))
+            F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(2_000))
         ).alias("chunk_start_ms"),
     )
 
@@ -201,8 +201,11 @@ AUDIO_FRAMES_SCHEMA = T.StructType(
 )
 
 
-def extract_audio_frames(assets: DataFrame, window_ms: int = 100) -> DataFrame:
-    """Windowed audio features — one output row per (asset, window) with
+_AUDIO_WINDOW_MS = 100
+
+
+def extract_audio_frames(assets: DataFrame) -> DataFrame:
+    """Windowed audio features — one output row per (asset, 100 ms window) with
     RMS level and zero-crossing rate: the front-end for VAD, silence
     trimming, and speech-quality gating in audio-corpus pipelines.
     The codec is the stdlib 16-bit PCM WAV path
@@ -225,7 +228,7 @@ def extract_audio_frames(assets: DataFrame, window_ms: int = 100) -> DataFrame:
             for aid, b in zip(pdf["asset_id"], pdf["data"]):
                 if not b:
                     continue
-                for w, s, r, z in fn(b, window_ms):
+                for w, s, r, z in fn(b, _AUDIO_WINDOW_MS):
                     ids.append(aid)
                     widx.append(w)
                     starts.append(s)
@@ -238,13 +241,9 @@ def extract_audio_frames(assets: DataFrame, window_ms: int = 100) -> DataFrame:
     return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(batches, AUDIO_FRAMES_SCHEMA)
 
 
-def audio_activity_segments(
-    assets: DataFrame,
-    rms_threshold: float = 0.05,
-    window_ms: int = 100,
-) -> DataFrame:
-    """Energy-based voice-activity segmentation: windows above
-    ``rms_threshold`` are merged into maximal runs (gaps-and-islands on
+def audio_activity_segments(assets: DataFrame) -> DataFrame:
+    """Energy-based voice-activity segmentation: 100 ms windows at or above
+    RMS 0.05 are merged into maximal runs (gaps-and-islands on
     ``window_idx`` — the same gap grouping as the QC islands operator,
     W3) and emitted as (asset_id, segment, start_ms, end_ms, n_windows,
     mean_rms). The speech/silence splitter an audio-corpus pipeline runs
@@ -255,8 +254,8 @@ def audio_activity_segments(
     asset, no Python past the codec."""
     from pyspark.sql import Window as W
 
-    frames = extract_audio_frames(assets, window_ms=window_ms)
-    active = frames.filter(F.col("rms") >= rms_threshold)
+    frames = extract_audio_frames(assets)
+    active = frames.filter(F.col("rms") >= 0.05)
     w = W.partitionBy("asset_id").orderBy("window_idx")
     runs = active.withColumn(
         "segment", F.col("window_idx") - F.row_number().over(w)
@@ -265,7 +264,7 @@ def audio_activity_segments(
         runs.groupBy("asset_id", "segment")
         .agg(
             F.min("start_ms").alias("start_ms"),
-            (F.max("start_ms") + F.lit(window_ms)).alias("end_ms"),
+            (F.max("start_ms") + F.lit(_AUDIO_WINDOW_MS)).alias("end_ms"),
             F.count(F.lit(1)).cast("int").alias("n_windows"),
             F.round(F.avg("rms"), 6).alias("mean_rms"),
         )
@@ -273,22 +272,22 @@ def audio_activity_segments(
     )
 
 
-def image_dhash(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:
+def image_dhash(assets: DataFrame) -> DataFrame:
     """Perceptual fingerprint per image: (asset_id, dhash) with the 64-bit
     difference hash (codecs.dhash64; BMP/PNG/GIF/JPEG built-in). NULL payloads
     yield NULL hashes. The binary column stays inside mapInPandas; only
-    the 8-byte hash continues into the pipeline. The id column keeps its
+    the 8-byte hash continues into the pipeline. ``asset_id`` keeps its
     INPUT type (string asset keys are as common as numeric ones — think
     URL or content-hash ids), only ``dhash`` is pinned to long."""
     from h2outility_spark.codecs import dhash64
 
-    id_ddl = assets.schema[id_col].dataType.simpleString()
+    id_ddl = assets.schema["asset_id"].dataType.simpleString()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "asset_id": pdf["asset_id"],
                     # signed-64 view keeps the LongType column exact
                     "dhash": [
                         None if not b else (dhash64(b) ^ 0x8000000000000000) - 0x8000000000000000
@@ -297,30 +296,24 @@ def image_dhash(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:
                 }
             )
 
-    return assets.select(F.col(id_col), F.col("data")).mapInPandas(
-        batches, f"`{id_col}` {id_ddl}, dhash long"
+    return assets.select(F.col("asset_id"), F.col("data")).mapInPandas(
+        batches, f"`asset_id` {id_ddl}, dhash long"
     )
 
 
-def image_neardup_pairs(
-    assets: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """Near-duplicate image pairs by perceptual hash: band each 64-bit
-    dHash into four 16-bit keys. Pigeonhole guarantee: at Hamming
-    distance <= 3 the differing bits occupy at most 3 bands, so at least
-    one band matches exactly and the pair is ALWAYS a candidate; at
-    distances 4..``max_hamming`` a shared band is likely but not
-    guaranteed (the standard pHash-banding recall trade — add bands to
-    tighten it). Candidates come from a band-key self-join, never all
-    pairs; the exact Hamming distance is then verified JVM-side with
+def image_neardup_pairs(assets: DataFrame) -> DataFrame:
+    """Near-duplicate image pairs (Hamming distance <= 3) by perceptual
+    hash: band each 64-bit dHash into four 16-bit keys. Pigeonhole
+    guarantee: at Hamming distance <= 3 the differing bits occupy at most
+    3 bands, so at least one band matches exactly and the pair is ALWAYS a
+    candidate. Candidates come from a band-key self-join, never all pairs;
+    the exact Hamming distance is then verified JVM-side with
     ``bit_count(xor)``."""
-    hashes = image_dhash(assets, id_col=id_col).filter(
+    hashes = image_dhash(assets).filter(
         F.col("dhash").isNotNull()
     )
     banded = hashes.select(
-        id_col,
+        "asset_id",
         "dhash",
         F.posexplode(
             F.array(
@@ -337,11 +330,11 @@ def image_neardup_pairs(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.asset_id") < F.col("b.asset_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.asset_id").alias("id_a"),
+            F.col("b.asset_id").alias("id_b"),
             F.col("a.dhash").alias("ha"),
             F.col("b.dhash").alias("hb"),
         )
@@ -351,4 +344,4 @@ def image_neardup_pairs(
         "id_a",
         "id_b",
         F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= 3)

@@ -200,17 +200,11 @@ def reversion_series(df: DataFrame, new_keys: dict[str, object]) -> DataFrame:
     return out
 
 
-def resample_grid(
-    df: DataFrame,
-    keys: list[str],
-    interval_seconds: int,
-    ts: str = "LocalDateTime",
-    value: str = "DataValue",
-) -> DataFrame:
-    """Resample each series onto a regular time grid (one slot every
-    ``interval_seconds`` from the series' first to last observation),
-    aggregating observations that share a slot (mean) and filling empty
-    slots with the last observed slot value (forward fill). The time-regularization step every downstream
+def resample_grid(df: DataFrame, keys: list[str], interval_seconds: int) -> DataFrame:
+    """Resample each series' ``value`` at ``ts`` onto a regular time grid
+    (one slot every ``interval_seconds`` from the series' first to last
+    observation), aggregating observations that share a slot (mean) and
+    filling empty slots with the last observed slot value (forward fill). The time-regularization step every downstream
     window/rollup assumes, which the reference got implicitly from
     sensors sharing a clock.
 
@@ -222,9 +216,9 @@ def resample_grid(
     """
     # integer division (not double-divide-then-cast): exact at any epoch
     # offset and identical to the oracle's `//`
-    slot = F.expr(f"unix_micros(`{ts}`) div {interval_seconds * 1_000_000}")
+    slot = F.expr(f"unix_micros(`ts`) div {interval_seconds * 1_000_000}")
     obs = (
-        df.select(*keys, slot.alias("__slot"), F.col(value).alias("__v"))
+        df.select(*keys, slot.alias("__slot"), F.col("value").alias("__v"))
         .groupBy(*keys, "__slot")
         .agg(F.avg("__v").alias("__slot_v"))
     )
@@ -239,24 +233,17 @@ def resample_grid(
     filled = F.last("__slot_v", ignorenulls=True).over(w)
     return joined.select(
         *keys,
-        F.timestamp_micros(F.col("__slot") * F.lit(interval_seconds * 1_000_000)).alias(ts),
-        filled.alias(value),
+        F.timestamp_micros(F.col("__slot") * F.lit(interval_seconds * 1_000_000)).alias("ts"),
+        filled.alias("value"),
         F.col("__slot_v").isNotNull().alias("observed"),
     )
 
 
-def median_despike(
-    df: DataFrame,
-    keys: list[str],
-    threshold: float,
-    window: int = 2,
-    ts: str = "LocalDateTime",
-    value: str = "DataValue",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Rolling-median despike filter: flag observations deviating more than
-    ``threshold`` from the median of their ±``window`` neighborhood — the
-    classic robust spike detector (the median, unlike the mean, is immune
+def median_despike(df: DataFrame, keys: list[str], threshold: float) -> DataFrame:
+    """Rolling-median despike filter: flag observations whose ``value``
+    deviates more than ``threshold`` from the median of their ±2-row
+    neighborhood (ordered by ``ts``, then ``event_id``) — the classic
+    robust spike detector (the median, unlike the mean, is immune
     to the spike it is judging).
 
     The windowed median is sort_array(collect_list(...))[lower-median]
@@ -265,9 +252,8 @@ def median_despike(
     semantics involved). Partitioned by the series key like every QC
     window.
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = W.partitionBy(*keys).orderBy(*order).rowsBetween(-window, window)
-    arr = F.sort_array(F.collect_list(F.col(value)).over(w))
+    w = W.partitionBy(*keys).orderBy(F.col("ts"), F.col("event_id")).rowsBetween(-2, 2)
+    arr = F.sort_array(F.collect_list(F.col("value")).over(w))
     med = F.element_at(arr, ((F.size(arr) + 1) / 2).cast("int"))
     out = df.withColumn("median_val", med)
-    return out.withColumn("is_spike", F.abs(F.col(value) - F.col("median_val")) > F.lit(threshold))
+    return out.withColumn("is_spike", F.abs(F.col("value") - F.col("median_val")) > F.lit(threshold))

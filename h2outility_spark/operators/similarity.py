@@ -288,7 +288,7 @@ def random_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def rp_lsh_signatures(embeddings: DataFrame, n_planes: int = 16, dim: int = 64) -> DataFrame:
+def rp_lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) LSH signature: one bit per
     hyperplane = sign of the dot product. Vectors with high cosine land in
     the same bucket with probability 1 − θ/π per bit — the bucket-join
@@ -304,7 +304,7 @@ def rp_lsh_signatures(embeddings: DataFrame, n_planes: int = 16, dim: int = 64) 
     BLAS accumulation order cannot flip a bit vs. the sequential fold —
     the per-query DuckDB oracle (exact fold arithmetic) pins this.
     """
-    planes = random_hyperplanes(n_planes, dim)
+    planes = random_hyperplanes(n_planes, 64)
     sig = rp_sig_udf(planes)
     return embeddings.select(F.col("vec_id"), sig(F.col("embedding")).alias("rp_sig"))
 
@@ -371,17 +371,17 @@ def rp_band_udf(planes, n_bits: int, n_bands: int):
     return bands
 
 
-def auto_n_bits(n_rows: int, target_bucket: int = 32) -> int:
+def auto_n_bits(n_rows: int) -> int:
     """Signature width that HOLDS random-bucket occupancy as data grows:
-    bits = ceil(log2(n / target_bucket)), so doubling the corpus adds
+    bits = ceil(log2(n / 32)), so doubling the corpus adds
     exactly one bit (ceil(log2(2x)) = ceil(log2(x)) + 1) and the expected
-    occupancy of a random band bucket stays ~target_bucket. This turns the
+    occupancy of a random band bucket stays ~32. This turns the
     operator contract "fixed-bit LSH config must grow ~log2(n) with data"
     (bench.py 100x notes) into engine behavior instead of a caveat the
     caller must remember at 100 TB."""
     import math
 
-    return max(1, math.ceil(math.log2(max(2.0, n_rows / target_bucket))))
+    return max(1, math.ceil(math.log2(max(2.0, n_rows / 32))))
 
 
 #: Banded frames persisted by previous rp_lsh_candidate_pairs calls, still
@@ -395,7 +395,6 @@ def rp_lsh_candidate_pairs(
     embeddings: DataFrame,
     n_bits: int | None = 4,
     n_bands: int = 32,
-    max_bucket: int | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs from an RP-LSH banded self-join.
@@ -405,11 +404,8 @@ def rp_lsh_candidate_pairs(
     (band index in the high bits — :func:`rp_band_udf`); one explode emits
     the band rows; the self-join on the folded key explodes only within
     buckets — the shuffle is keyed by it, so hot buckets are the only
-    skew hazard. A
-    corpus with a degenerate direction (many near-identical vectors) makes
-    one bucket k-wide and its pairs k²; ``max_bucket`` drops such buckets
-    from pairing via a broadcast anti-join against the (tiny) giant-bucket
-    list, mirroring dedup.lsh_candidate_pairs(max_bucket=...).
+    skew hazard: a corpus with a degenerate direction (many near-identical
+    vectors) makes one bucket k-wide and its pairs k².
 
     ``n_bits=None`` auto-sizes the band width via :func:`auto_n_bits`, so
     the bucket occupancy — and with it the candidate-set cost — stays
@@ -433,8 +429,7 @@ def rp_lsh_candidate_pairs(
     planes = random_hyperplanes(n_bits * n_bands, 64)
     bu = rp_band_udf(planes, n_bits, n_bands)
     banded = embeddings.select(F.col("vec_id"), F.explode(bu(F.col("embedding"))).alias("bkey"))
-    # Both sides of the self-join (and the quarantine groupBy) consume this
-    # frame; without the persist each consumer re-runs the whole signature
+    # Both sides of the self-join consume this frame; without the persist each consumer re-runs the whole signature
     # pipeline — embeddings scan + Arrow matmul + explode — from scratch.
     # The banded rows are narrow ((id, long): 16 bytes x n_bands per
     # vector) and MEMORY_AND_DISK spills, so the reuse trades a bounded
@@ -464,14 +459,6 @@ def rp_lsh_candidate_pairs(
             pass
     banded = banded.persist()
     _LIVE_BANDED.append(banded)
-    if max_bucket is not None:
-        giants = (
-            banded.groupBy("bkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("bkey")
-        )
-        banded = banded.join(F.broadcast(giants), ["bkey"], "left_anti")
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -490,7 +477,6 @@ def cosine_neardup_pairs_lsh(
     n_bits: int | None = 4,
     n_bands: int = 32,
     n_rows: int | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Scale path for embedding-cosine near-dup: RP-LSH band buckets →
     in-bucket candidate pairs → exact cosine verify (the two-stage shape of
@@ -508,7 +494,7 @@ def cosine_neardup_pairs_lsh(
     against the brute-force oracle at the test scales, which the driver's
     correctness gate then proves.
     """
-    cand = rp_lsh_candidate_pairs(embeddings, n_bits, n_bands, max_bucket=max_bucket, n_rows=n_rows)
+    cand = rp_lsh_candidate_pairs(embeddings, n_bits, n_bands, n_rows=n_rows)
     v = as_double(F.col("embedding"))
     # self-dots precomputed per side (n folds, not one per pair); the pair
     # expression dot(a,b)/sqrt(na*nb) is the same IEEE arithmetic as
@@ -559,9 +545,9 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
-    """Product-quantizer codebooks: the dim-d space is split into ``m``
-    contiguous subspaces of width d/m; subspace ``s``'s codebook entry for
+def pq_codebooks(embeddings: DataFrame, m: int = 8) -> DataFrame:
+    """Product-quantizer codebooks: the 64-d space is split into ``m``
+    contiguous subspaces of width 64/m; subspace ``s``'s codebook entry for
     each label is the corresponding SLICE of the per-label mean vector
     (components rounded 6 dp for engine-stable argmin, exactly like
     pack_centroids). Output: (s, code, cvec).
@@ -572,7 +558,7 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     reconstruction points — holds regardless of how the codebook was
     trained.
     """
-    w = dim // m
+    w = 64 // m
     full = pack_centroids(centroids_by_label(embeddings))
     return full.select(
         F.col("cell").alias("code"),
@@ -582,7 +568,7 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     ).select("s", "code", "cvec")
 
 
-def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8) -> DataFrame:
     """Assign every vector, per subspace, to its nearest codebook entry by
     squared L2 (computed as c·c − 2·v·c, the v·v term constant per row;
     sequential fold so the oracle's list_inner_product agrees bit-for-bit).
@@ -594,7 +580,7 @@ def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8, dim: int 
     """
     from pyspark.sql import Window as W
 
-    w = dim // m
+    w = 64 // m
     subs = embeddings.select(
         F.col("vec_id"),
         F.posexplode(
@@ -644,7 +630,6 @@ def pq_search(
     k: int = 3,
     shortlist: int = 50,
     m: int = 8,
-    dim: int = 64,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """PQ ANN search with exact re-rank: score every candidate's
@@ -664,9 +649,9 @@ def pq_search(
     cbs = (
         codebooks
         if codebooks is not None
-        else pq_codebooks(embeddings, m=m, dim=dim)
+        else pq_codebooks(embeddings, m=m)
     )
-    codes = pq_encode(embeddings, cbs, m=m, dim=dim)
+    codes = pq_encode(embeddings, cbs, m=m)
     recon = pq_reconstruct(codes, cbs).withColumn(
         "__nr", dot(F.col("rvec"), F.col("rvec"))
     )
@@ -708,20 +693,19 @@ def pq_search(
 def pq_codebooks_kmeans(
     embeddings: DataFrame,
     m: int = 8,
-    dim: int = 64,
     k: int = 16,
     max_iter: int = 5,
     round_dp: int | None = None,
 ) -> DataFrame:
     """Production PQ codebooks: an independent k-means per subspace over
     that subspace's slices (the FAISS training recipe). m runs of Lloyd's
-    over d/m-dim data; each model is k x d/m doubles on the driver — at
+    over 64/m-dim data; each model is k x 64/m doubles on the driver — at
     100 TB you train on a deterministic sample, the codebook stays tiny
     either way. Output (s, code, cvec) matches pq_codebooks, so encode /
     reconstruct / search compose with either quantizer."""
     from h2outility_spark.operators.kmeans import kmeans_grouped
 
-    w = dim // m
+    w = 64 // m
     # All m subspace k-means runs ride ONE pipeline per Lloyd iteration
     # (kmeans_grouped): same seeds/argmin/update arithmetic per subspace as
     # the former per-s kmeans() loop, but 2 + max_iter collect-jobs total
@@ -754,20 +738,14 @@ def pq_codebooks_kmeans(
     )
 
 
-def ivfpq_search(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_probe: int = 2,
-    shortlist: int = 30,
-) -> DataFrame:
+def ivfpq_search(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """The composed IVF-PQ layering: the coarse quantizer (cells) prunes
     WHICH vectors are scanned, PQ codes compress WHAT the scan reads, the
     exact re-rank repairs ranking error on the shortlist.
 
-    Per query: probe the ``n_probe`` nearest cells by centroid cosine; ADC
-    score only the probed cells' candidates against their reconstructions;
-    exact-cosine re-rank the top ``shortlist``; emit top k. At 100 TB the
+    Per query: probe the 2 nearest cells by centroid cosine; ADC score
+    only the probed cells' candidates against their reconstructions;
+    exact-cosine re-rank the top 30; emit the top 3. At 100 TB the
     candidate table is partitioned by cell and stores (id, codes) — probing
     is partition pruning and the scan reads 32x fewer bytes; FAISS's
     IVFADC, as DataFrame ops.
@@ -796,7 +774,7 @@ def ivfpq_search(
     wc = W.partitionBy("query_id").orderBy(F.col("cell_sim").desc(), F.col("cell"))
     best_cells = (
         scored_cells.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= n_probe)
+        .filter(F.col("rk") <= 2)
         .select("query_id", "qv", "__nq", "cell")
     )
     cands = embeddings.select(
@@ -820,7 +798,7 @@ def ivfpq_search(
     ws = W.partitionBy("query_id").orderBy(F.col("asim").desc(), F.col("cand_id"))
     short = (
         probed.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= shortlist)
+        .filter(F.col("rn") <= 30)
         .select("query_id", "qv", "__nq", "cand_id")
     )
     ev = embeddings.select(
@@ -834,7 +812,7 @@ def ivfpq_search(
     wk = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
     return (
         exact.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 3)
         .drop("rk")
     )
 
@@ -844,8 +822,8 @@ def ivfpq_search(
 # ---------------------------------------------------------------------------
 
 
-def hybrid_search(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Top-``k`` docs per query by Reciprocal Rank Fusion of a LEXICAL
+def hybrid_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-10 docs per query by Reciprocal Rank Fusion of a LEXICAL
     ranking (count of shared whitespace tokens, tf-free overlap — the
     BM25-lite that needs no global statistics) and a SEMANTIC ranking
     (exact cosine over the embedding column). The standard
@@ -930,5 +908,5 @@ def hybrid_search(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
                 Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), "cand_id")
             ),
         )
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
     )

@@ -26,11 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _bucket_expr(item: str, j: str, width: int) -> str:
-    """Deterministic row-j hash bucket (portable: md5 + base-16 conv)."""
+def _bucket_expr(item: str, width: int) -> str:
+    """Deterministic hash bucket of ``item`` in row ``j`` (portable: md5 + base-16 conv)."""
     return (
         f"CAST(conv(substr(md5(concat(CAST({item} AS STRING), ':', "
-        f"CAST({j} AS STRING))), 1, 8), 16, 10) AS BIGINT) % {width}"
+        f"CAST(j AS STRING))), 1, 8), 16, 10) AS BIGINT) % {width}"
     )
 
 
@@ -46,7 +46,7 @@ def count_min_table(
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
     )
     return (
-        rows.withColumn("bucket", F.expr(_bucket_expr(item_col, "j", width)))
+        rows.withColumn("bucket", F.expr(_bucket_expr(item_col, width)))
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -62,7 +62,7 @@ def count_min_estimate(
     probes = queries.select(
         F.col(item_col),
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
-    ).withColumn("bucket", F.expr(_bucket_expr(item_col, "j", width)))
+    ).withColumn("bucket", F.expr(_bucket_expr(item_col, width)))
     joined = probes.join(F.broadcast(cms), ["j", "bucket"], "left").fillna({"c": 0})
     return joined.groupBy(item_col).agg(F.min("c").alias("est_n"))
 

@@ -4,7 +4,7 @@ AQE's skew-join handling (on in session.py) covers sort-merge joins; the
 salted two-phase aggregation here covers the case it does not: a groupBy
 on a key where one value holds a large share of all rows (one sensor, one
 boilerplate document cluster) puts that key's entire volume through a
-single reducer. Salting splits each key into ``n_salts`` partial groups
+single reducer. Salting splits each key into 16 partial groups
 (map-side random-ish salt from a hash of a row id), aggregates partials,
 then re-aggregates without the salt. Works for any algebraic aggregate
 (sum/count/min/max); averages must be carried as (sum, count).
@@ -15,11 +15,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def with_salt(df: DataFrame, salt_source: Column, n_salts: int = 16) -> DataFrame:
-    """Deterministic salt in [0, n_salts) from a hash of ``salt_source``
+def with_salt(df: DataFrame, salt_source: Column) -> DataFrame:
+    """Deterministic salt in [0, 16) from a hash of ``salt_source``
     (a unique-ish column — deterministic so retries/regeneration are
     stable, unlike rand())."""
-    return df.withColumn("__salt", F.pmod(F.hash(salt_source), F.lit(n_salts)))
+    return df.withColumn("__salt", F.pmod(F.hash(salt_source), F.lit(16)))
 
 
 def salted_agg(
@@ -27,7 +27,6 @@ def salted_agg(
     keys: list[str],
     aggs: dict[str, tuple],
     salt_source: Column,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
@@ -37,7 +36,7 @@ def salted_agg(
     """
     phase1_ops = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
     merge_ops = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    salted = with_salt(df, salt_source, n_salts)
+    salted = with_salt(df, salt_source)
     p1 = salted.groupBy(*keys, "__salt").agg(
         *[phase1_ops[op](col).alias(name) for name, (op, col) in aggs.items()]
     )

@@ -76,8 +76,8 @@ def tokens(col: Column) -> Column:
     return F.split(normalize_ws(col), " ")
 
 
-def shingles_expr(text_col: str = "text", n: int = 3) -> Column:
-    """Shingles as a pure SQL expression over a named column (usable in
+def shingles_expr(n: int) -> Column:
+    """Shingles of the ``text`` column as a pure SQL expression (usable in
     selects that need to stay inside codegen).
 
     Total on short/blank input: a document with fewer than n tokens yields
@@ -87,7 +87,7 @@ def shingles_expr(text_col: str = "text", n: int = 3) -> Column:
     — one short row would abort the whole job (found by review: any < n
     token benchmark doc crashed decontaminate_spans/contamination_overlap).
     """
-    toks = f"split(trim(regexp_replace({text_col}, '{WS_CLASS_EXPR}+', ' ')), ' ')"
+    toks = f"split(trim(regexp_replace(text, '{WS_CLASS_EXPR}+', ' ')), ' ')"
     return F.expr(
         f"CASE WHEN size({toks}) < {n} THEN array() "
         f"ELSE transform(sequence(1, size({toks}) - {n - 1}), "
@@ -100,8 +100,9 @@ def shingles_expr(text_col: str = "text", n: int = 3) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def corpus_ngram_counts(docs, n: int = 3, min_count: int = 1):
-    """Corpus-wide n-gram occurrence and document-frequency counts — the
+def corpus_ngram_counts(docs):
+    """Corpus-wide 3-gram occurrence and document-frequency counts, kept
+    when a 3-gram occurs at least twice — the
     count-collection pass of n-gram LM estimation / contamination checks.
 
     Scale shape: n-grams are built as a per-document ARRAY transform
@@ -113,7 +114,7 @@ def corpus_ngram_counts(docs, n: int = 3, min_count: int = 1):
     from pyspark.sql import functions as F
 
     grams = docs.select(
-        F.col("doc_id"), F.explode(shingles_expr("text", n)).alias("ngram")
+        F.col("doc_id"), F.explode(shingles_expr(3)).alias("ngram")
     )
     return (
         grams.groupBy("ngram")
@@ -121,7 +122,7 @@ def corpus_ngram_counts(docs, n: int = 3, min_count: int = 1):
             F.count(F.lit(1)).alias("n_occ"),
             F.count_distinct("doc_id").alias("n_docs"),
         )
-        .filter(F.col("n_occ") >= min_count)
+        .filter(F.col("n_occ") >= 2)
     )
 
 
@@ -136,10 +137,10 @@ def bigram_conditional_probs(docs, min_pair: int = 1):
     """
     from pyspark.sql import functions as F
 
-    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 1)).alias("w"))
+    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr(1)).alias("w"))
     uni = toks.groupBy(F.col("w").alias("w1")).agg(F.count(F.lit(1)).alias("c1"))
     big = (
-        docs.select(F.explode(shingles_expr("text", 2)).alias("bigram"))
+        docs.select(F.explode(shingles_expr(2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("c12"))
         .filter(F.col("c12") >= min_pair)
@@ -171,7 +172,7 @@ def doc_lm_fluency(docs):
     from pyspark.sql import functions as F
 
     probs = bigram_conditional_probs(docs).select("bigram", "p")
-    doc_bigrams = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 2)).alias("bigram"))
+    doc_bigrams = docs.select(F.col("doc_id"), F.explode(shingles_expr(2)).alias("bigram"))
     return (
         doc_bigrams.join(probs, "bigram")
         .groupBy("doc_id")
@@ -179,8 +180,8 @@ def doc_lm_fluency(docs):
     )
 
 
-def tfidf_top_terms(docs, k: int = 3):
-    """Top-k characteristic terms per document by tf·idf, with
+def tfidf_top_terms(docs):
+    """Top-3 characteristic terms per document by tf·idf, with
     idf = ln(N / df) (raw MLE form, no smoothing — exact count arithmetic
     plus one ln(), reproducible across engines).
 
@@ -194,7 +195,7 @@ def tfidf_top_terms(docs, k: int = 3):
     """
     from pyspark.sql import Window as W, functions as F
 
-    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr("text", 1)).alias("term"))
+    toks = docs.select(F.col("doc_id"), F.explode(shingles_expr(1)).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
@@ -216,14 +217,14 @@ def tfidf_top_terms(docs, k: int = 3):
     w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 3)
         .select("doc_id", "term", "tf", "df", "tfidf", "rk")
     )
 
 
-def contamination_overlap(docs, benchmark, n: int = 3):
+def contamination_overlap(docs, benchmark):
     """Train/benchmark decontamination signal: for every training doc, how
-    many of its distinct n-grams also occur anywhere in the benchmark set
+    many of its distinct 3-grams also occur anywhere in the benchmark set
     (the GPT-3/Pile-style n-gram overlap check; pipelines drop or redact
     docs above a threshold).
 
@@ -235,10 +236,10 @@ def contamination_overlap(docs, benchmark, n: int = 3):
     from pyspark.sql import functions as F
 
     bench_grams = (
-        benchmark.select(F.explode(shingles_expr("text", n)).alias("gram")).distinct()
+        benchmark.select(F.explode(shingles_expr(3)).alias("gram")).distinct()
     )
     doc_grams = docs.select(
-        F.col("doc_id"), F.explode(shingles_expr("text", n)).alias("gram")
+        F.col("doc_id"), F.explode(shingles_expr(3)).alias("gram")
     ).distinct()
     return (
         doc_grams.join(bench_grams, "gram")
@@ -263,14 +264,13 @@ def hash_sample(docs, percent: int):
     return docs.filter(bucket < (65536 * percent) // 100)
 
 
-def hash_split(docs, train: int = 8, val: int = 1, test: int = 1):
+def hash_split(docs):
     """Deterministic train/val/test assignment — ``hash_sample``'s sibling
     for the other standard training-data split shape. The id is md5-hashed
     into a 16-bit domain (4 hex chars = 65536 values, like ``hash_sample``)
-    and bucketed into ``train+val+test`` cells (default 8/1/1) modulo that
-    domain, so the ratios are APPROXIMATE: 65536 % n_cells cells receive
-    one extra hash value — a bias of at most 1/65536 per cell, negligible
-    for the single-digit cell counts this is meant for. Each doc gets a
+    and bucketed into 10 cells (8 train, 1 val, 1 test) modulo that
+    domain, so the ratios are APPROXIMATE: 65536 % 10 cells receive one
+    extra hash value — a bias of at most 1/65536 per cell. Each doc gets a
     ``split`` label; no RNG state, so the assignment is stable across runs,
     engines and repartitionings, and a doc can never migrate between splits
     when the corpus grows (the property that prevents silent train/test
@@ -278,39 +278,25 @@ def hash_split(docs, train: int = 8, val: int = 1, test: int = 1):
     """
     from pyspark.sql import functions as F
 
-    for label, v in (("train", train), ("val", val), ("test", test)):
-        if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-            raise ValueError(f"hash_split: {label} must be a positive int, got {v!r}")
-    n_cells = train + val + test
-    if n_cells > 65536:
-        raise ValueError(
-            f"hash_split: train+val+test = {n_cells} exceeds the 16-bit hash "
-            "domain (65536); cells beyond it would have zero probability"
-        )
-    cell = F.expr(
-        f"CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS BIGINT) % {n_cells}"
-    )
+    cell = F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS BIGINT) % 10")
     split = (
-        F.when(cell < train, F.lit("train"))
-        .when(cell < train + val, F.lit("val"))
+        F.when(cell < 8, F.lit("train"))
+        .when(cell < 9, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return docs.withColumn("split", split)
 
 
-def shard_expr_sql(id_col: str, n_shards: int) -> str:
-    """Portable SQL for the deterministic md5-cell shard of an id: the
+def shard_expr_sql(n_shards: int) -> str:
+    """Portable SQL for the deterministic md5-cell shard of ``doc_id``: the
     first 8 md5 hex chars (a 32-bit value) modulo ``n_shards``. THE single
-    definition of the shard derivation — ``pack_sequences(n_shards=k)``,
-    the sharded RAG-prep pairs, and their oracles must all agree on it,
-    so a change here is a change everywhere at once (never fork it)."""
-    return (
-        f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-        f" % {n_shards}"
-    )
+    definition of the shard derivation — the sharded RAG-prep pairs and
+    their oracles must agree on it, so a change here is a change
+    everywhere at once (never fork it)."""
+    return f"CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % {n_shards}"
 
 
-def pack_sequences(docs, budget_tokens: int, n_shards: int | None = None):
+def pack_sequences(docs, budget_tokens: int):
     """Training-sequence packing plan: assign docs (in deterministic id
     order) to context-window bins of ``budget_tokens`` via the exclusive
     prefix sum of token counts — the standard streaming approximation of
@@ -322,41 +308,20 @@ def pack_sequences(docs, budget_tokens: int, n_shards: int | None = None):
     primitives — a regex-split count is NOT (``\\s`` and empty-split
     semantics vary by engine).
 
-    Scale note: with ``n_shards=None`` the prefix sum is a single
-    global-order window — fine up to one executor's sort capacity, and
-    the right contract when the GLOBAL packing order is the deliverable.
-    For a real 100 TB packing job pass ``n_shards=k``: docs are hashed
-    into k independent shards (md5-cell arithmetic, the same
-    deterministic ``hash_split`` primitive, so shard assignment is
-    stable across runs and engines) and the window runs PER SHARD
-    (``partitionBy(shard)``) — k parallel sorts of n/k rows instead of
-    one sort of n, which is how the planner keeps the window off the
-    single-partition cliff. Output then carries ``shard`` and bins are
-    numbered within each shard.
+    Scale note: the prefix sum is a single global-order window — fine up
+    to one executor's sort capacity, and the right contract when the
+    GLOBAL packing order is the deliverable.
     """
     from pyspark.sql import Window as W, functions as F
 
     toks = docs.select(
         F.col("doc_id"), space_token_count(F.col("text")).cast("bigint").alias("n_tokens")
     )
-    if n_shards is None:
-        w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
-        binned = toks.withColumn(
-            "prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        ).withColumn("bin_id", F.expr(f"prefix div {budget_tokens}"))
-        return binned.groupBy("bin_id").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
-        )
-    if not isinstance(n_shards, int) or isinstance(n_shards, bool) or n_shards <= 0:
-        raise ValueError(f"pack_sequences: n_shards must be a positive int, got {n_shards!r}")
-    shard = F.expr(shard_expr_sql("doc_id", n_shards))
-    w = W.partitionBy("shard").orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
-    binned = (
-        toks.withColumn("shard", shard)
-        .withColumn("prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
-        .withColumn("bin_id", F.expr(f"prefix div {budget_tokens}"))
-    )
-    return binned.groupBy("shard", "bin_id").agg(
+    w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
+    binned = toks.withColumn(
+        "prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    ).withColumn("bin_id", F.expr(f"prefix div {budget_tokens}"))
+    return binned.groupBy("bin_id").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
     )
 
@@ -366,13 +331,13 @@ def pack_sequences(docs, budget_tokens: int, n_shards: int | None = None):
 # ---------------------------------------------------------------------------
 
 
-def quality_columns(text_col: str = "text") -> list[Column]:
-    """Length / alpha / digit / punctuation ratios + token stats.
+def quality_columns() -> list[Column]:
+    """Length / alpha / digit / punctuation ratios + token stats of ``text``.
 
     All ratios guard the empty-string case to 0.0 so the columns are total
     functions (keeps the oracle SQL total too).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n = F.length(c).cast("double")
     alpha = F.length(F.regexp_replace(c, "[^A-Za-z]", "")).cast("double")
     digit = F.length(F.regexp_replace(c, "[^0-9]", "")).cast("double")
@@ -388,12 +353,12 @@ def quality_columns(text_col: str = "text") -> list[Column]:
     ]
 
 
-def calibration_score_col(text_col: str = "text") -> Column:
+def calibration_score_col() -> Column:
     """The cheap calibration quality score (alpha ratio blended with
     length saturation) shared by the per-source calibration query, the
     corpus pipeline's quality gate, and the streaming drift monitor —
     one definition so the three surfaces cannot drift."""
-    c = F.col(text_col)
+    c = F.col("text")
     n = F.length(c).cast("double")
     alpha = F.length(F.regexp_replace(c, "[^A-Za-z]", "")).cast("double")
     alpha_ratio = F.coalesce(alpha / F.when(n > 0, n), F.lit(0.0))
@@ -401,20 +366,20 @@ def calibration_score_col(text_col: str = "text") -> Column:
     return F.lit(0.6) * alpha_ratio + F.lit(0.4) * sat
 
 
-def quality_sql_columns(text_col: str = "text") -> str:
+def quality_sql_columns() -> str:
     """The DuckDB-mirror of quality_columns (identical arithmetic)."""
     return f"""
-           length({text_col}) AS n_chars,
-           CASE WHEN length(trim(regexp_replace({text_col}, '{WS_CLASS}+', ' ', 'g'))) = 0 THEN 0
-                ELSE array_length(regexp_split_to_array(trim(regexp_replace({text_col}, '{WS_CLASS}+', ' ', 'g')), ' ')) END
+           length(text) AS n_chars,
+           CASE WHEN length(trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g'))) = 0 THEN 0
+                ELSE array_length(regexp_split_to_array(trim(regexp_replace(text, '{WS_CLASS}+', ' ', 'g')), ' ')) END
              AS n_tokens,
-           array_length(regexp_extract_all({text_col}, '{BPE_ISH_PATTERN}')) AS n_bpe_tokens,
-           coalesce(CAST(length(regexp_replace({text_col}, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-                    / (CASE WHEN length({text_col}) > 0 THEN CAST(length({text_col}) AS DOUBLE) END), 0.0) AS alpha_ratio,
-           coalesce(CAST(length(regexp_replace({text_col}, '[^0-9]', '', 'g')) AS DOUBLE)
-                    / (CASE WHEN length({text_col}) > 0 THEN CAST(length({text_col}) AS DOUBLE) END), 0.0) AS digit_ratio,
-           coalesce(CAST(length(regexp_replace({text_col}, '[^ ]', '', 'g')) AS DOUBLE)
-                    / (CASE WHEN length({text_col}) > 0 THEN CAST(length({text_col}) AS DOUBLE) END), 0.0) AS space_ratio
+           array_length(regexp_extract_all(text, '{BPE_ISH_PATTERN}')) AS n_bpe_tokens,
+           coalesce(CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+                    / (CASE WHEN length(text) > 0 THEN CAST(length(text) AS DOUBLE) END), 0.0) AS alpha_ratio,
+           coalesce(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
+                    / (CASE WHEN length(text) > 0 THEN CAST(length(text) AS DOUBLE) END), 0.0) AS digit_ratio,
+           coalesce(CAST(length(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
+                    / (CASE WHEN length(text) > 0 THEN CAST(length(text) AS DOUBLE) END), 0.0) AS space_ratio
     """
 
 
@@ -438,9 +403,9 @@ def _occurrences(padded: Column, word: str) -> Column:
     return (F.length(padded) - F.length(F.regexp_replace(padded, pat, ""))) / F.lit(len(pat))
 
 
-def langid_score_columns(text_col: str = "text") -> list[Column]:
-    """Marker-word hit scores, one column per language."""
-    padded = F.concat(F.lit(" "), normalize_ws(F.lower(F.col(text_col))), F.lit(" "))
+def langid_score_columns() -> list[Column]:
+    """Marker-word hit scores of ``text``, one column per language."""
+    padded = F.concat(F.lit(" "), normalize_ws(F.lower(F.col("text"))), F.lit(" "))
     return [
         sum((_occurrences(padded, w) for w in words), F.lit(0.0)).alias(f"score_{lang}")
         for lang, words in LANG_MARKERS.items()
@@ -475,8 +440,8 @@ def langid_pred_column() -> Column:
     return pred.alias("pred_lang")
 
 
-def langid_sql_columns(text_col: str = "text") -> str:
-    padded = f"' ' || trim(regexp_replace(lower({text_col}), '{WS_CLASS}+', ' ', 'g')) || ' '"
+def langid_sql_columns() -> str:
+    padded = f"' ' || trim(regexp_replace(lower(text), '{WS_CLASS}+', ' ', 'g')) || ' '"
     score_exprs = {}
     for lang, words in LANG_MARKERS.items():
         parts = [
@@ -507,11 +472,11 @@ def fingerprint(col: Column) -> Column:
     return F.md5(F.encode(F.lower(normalize_ws(col)), "UTF-8"))
 
 
-def prefix_fingerprint(text_col: str = "text", n_tokens: int = 8) -> Column:
-    """Fingerprint of the first n tokens of the named column — catches
+def prefix_fingerprint() -> Column:
+    """Fingerprint of the first 8 tokens of ``text`` — catches
     shared-prefix near-dups (boilerplate headers) cheaply."""
     prefix = F.expr(
-        f"array_join(slice(split(trim(regexp_replace({text_col}, '{WS_CLASS_EXPR}+', ' ')), ' '), 1, {n_tokens}), ' ')"
+        f"array_join(slice(split(trim(regexp_replace(text, '{WS_CLASS_EXPR}+', ' ')), ' '), 1, 8), ' ')"
     )
     return F.md5(F.encode(F.lower(prefix), "UTF-8"))
 
@@ -592,20 +557,20 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def segments_expr(text_col: str = "text", k: int = 8) -> Column:
-    """Split the normalized token stream into consecutive k-token segments
-    (last segment may be shorter). Pure Catalyst expression — the slicing
+def segments_expr() -> Column:
+    """Split the normalized ``text`` token stream into consecutive 8-token
+    segments (last segment may be shorter). Pure Catalyst expression — the slicing
     stays inside codegen; callers filter out empty documents first (Spark's
     ``sequence(1, 0)`` is DESCENDING, so the guard matters)."""
-    toks = f"split(trim(regexp_replace({text_col}, '{WS_CLASS_EXPR}+', ' ')), ' ')"
+    toks = f"split(trim(regexp_replace(text, '{WS_CLASS_EXPR}+', ' ')), ' ')"
     return F.expr(
-        f"transform(sequence(1, CAST(ceil(size({toks}) / {k}.0) AS INT)), "
-        f"s -> array_join(slice({toks}, (s - 1) * {k} + 1, {k}), ' '))"
+        f"transform(sequence(1, CAST(ceil(size({toks}) / 8.0) AS INT)), "
+        f"s -> array_join(slice({toks}, (s - 1) * 8 + 1, 8), ' '))"
     )
 
 
-def segment_dedup(docs: DataFrame, k: int = 8) -> DataFrame:
-    """CCNet-style corpus-wide segment dedup: hash each k-token segment,
+def segment_dedup(docs: DataFrame) -> DataFrame:
+    """CCNet-style corpus-wide segment dedup: hash each 8-token segment,
     keep only the FIRST occurrence corpus-wide (ordered by doc id then
     position), and reassemble each document from its surviving segments.
 
@@ -621,7 +586,7 @@ def segment_dedup(docs: DataFrame, k: int = 8) -> DataFrame:
 
     d = docs.filter(F.length(F.trim(F.col("text"))) > 0)
     segs = d.select(
-        "doc_id", F.posexplode(segments_expr("text", k)).alias("seg_idx", "seg")
+        "doc_id", F.posexplode(segments_expr()).alias("seg_idx", "seg")
     )
     w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
@@ -671,11 +636,11 @@ def pii_redact(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 3) -> DataFrame:
+def decontaminate_spans(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Surgical decontamination: instead of dropping every training doc
     that shares n-grams with the benchmark (contamination_overlap's
     flag-then-drop), REMOVE exactly the token spans covered by a matching
-    n-gram and keep the rest of the document — the higher-yield policy
+    3-gram and keep the rest of the document — the higher-yield policy
     when contamination is a quoted snippet inside an otherwise-good doc.
 
     Output: (id, clean_text, n_removed) per surviving doc; a doc whose
@@ -690,22 +655,22 @@ def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 3) -> Da
     from pyspark.sql import Window as W, functions as F
 
     bench_grams = (
-        benchmark.select(F.explode(shingles_expr("text", n)).alias("g")).distinct()
+        benchmark.select(F.explode(shingles_expr(3)).alias("g")).distinct()
     )
     toks = (
         docs.filter(F.length(F.trim(F.col("text"))) > 0)
         .select(F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("i", "w"))
     )
     w = W.partitionBy("doc_id").orderBy("i")
-    parts = [F.col("w")] + [F.lead("w", k).over(w) for k in range(1, n)]
+    parts = [F.col("w")] + [F.lead("w", k).over(w) for k in range(1, 3)]
     grams = (
         toks.select(F.col("doc_id"), F.col("i"), *[p.alias(f"__w{k}") for k, p in enumerate(parts)])
-        .filter(F.col(f"__w{n - 1}").isNotNull())
-        .select(F.col("doc_id"), F.col("i"), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(n)]).alias("g"))
+        .filter(F.col("__w2").isNotNull())
+        .select(F.col("doc_id"), F.col("i"), F.concat_ws(" ", *[F.col(f"__w{k}") for k in range(3)]).alias("g"))
     )
     starts = grams.join(bench_grams, "g").select("doc_id", "i")
     covered = starts.select(
-        F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(n - 1))).alias("i")
+        F.col("doc_id"), F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(2))).alias("i")
     ).distinct()
     kept = toks.join(covered, ["doc_id", "i"], "left_anti")
     totals = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n_tok"))
@@ -798,16 +763,16 @@ def chunk_sliding(docs: DataFrame, size: int, stride: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def cdc_segments(docs: DataFrame, divisor: int = 8) -> DataFrame:
+def cdc_segments(docs: DataFrame) -> DataFrame:
     """Content-defined segmentation: a token position starts a new segment
-    when the hash of its 2-token context satisfies hash % divisor == 0 —
+    when the hash of its 2-token context satisfies hash % 8 == 0 —
     so boundaries follow CONTENT, not offsets. An insertion near the start
     of a document only perturbs segments up to the next boundary, where
     fixed-width segmentation (segments_expr) shifts every downstream
     segment — CDC is what makes segment-level dedup robust to prefix edits
     (the rsync/LBFS boundary trick applied to token streams).
 
-    Output: (id, seg_idx, seg) — average segment length ~= divisor tokens.
+    Output: (id, seg_idx, seg) — average segment length ~= 8 tokens.
     Scale: one per-doc window pass (lag + running sum), shuffle keyed by
     doc id, reused by the downstream groupBy.
     """
@@ -821,7 +786,7 @@ def cdc_segments(docs: DataFrame, divisor: int = 8) -> DataFrame:
     ctx = F.concat_ws(" ", F.lag("w", 1).over(win), F.col("w"))
     bucket = F.expr("CAST(conv(substr(md5(__ctx), 1, 4), 16, 10) AS INT)")
     marked = toks.withColumn("__ctx", ctx).withColumn(
-        "__bnd", F.when((F.col("i") > 0) & (bucket % divisor == 0), 1).otherwise(0)
+        "__bnd", F.when((F.col("i") > 0) & (bucket % 8 == 0), 1).otherwise(0)
     )
     seg_idx = F.sum("__bnd").over(win.rowsBetween(W.unboundedPreceding, 0))
     segs = marked.withColumn("seg_idx", seg_idx)
@@ -837,14 +802,14 @@ def cdc_segments(docs: DataFrame, divisor: int = 8) -> DataFrame:
     )
 
 
-def cdc_segment_dedup(docs: DataFrame, divisor: int = 8) -> DataFrame:
+def cdc_segment_dedup(docs: DataFrame) -> DataFrame:
     """segment_dedup with content-defined boundaries: keep the first
     corpus-wide occurrence of each CDC segment, reassemble documents from
     the survivors. Same keep-first/reassembly machinery as segment_dedup —
     only the segmenter differs."""
     from pyspark.sql import Window as W, functions as F
 
-    segs = cdc_segments(docs, divisor)
+    segs = cdc_segments(docs)
     w = W.partitionBy(F.md5(F.encode(F.col("seg"), "UTF-8"))).orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     return kept.groupBy("doc_id").agg(

@@ -42,17 +42,6 @@ DATAVALUES_SCHEMA = T.StructType(
 # partitions by these keys, never by time (SURVEY.md §7.4 item 2).
 SERIES_KEYS = ["SiteID", "VariableID", "MethodID", "SourceID", "QualityControlLevelID"]
 
-# Logical uniqueness of a data value (edit_service.py:507).
-DV_UNIQUE_KEYS = [
-    "DataValue",
-    "LocalDateTime",
-    "SiteID",
-    "VariableID",
-    "MethodID",
-    "SourceID",
-    "QualityControlLevelID",
-]
-
 VARIABLES_SCHEMA = T.StructType(
     [
         T.StructField("VariableID", T.IntegerType(), False),

@@ -159,12 +159,10 @@ def write_annotated_chunks_distributed(
     )
 
 
-def append_csv(rows: DataFrame, path: str, order_by: list[str] | None = None) -> int:
-    """S6: append incremental rows (no header) to an existing chunk file
-    (DatasetUtilities.py:367-384)."""
-    if order_by:
-        rows = rows.orderBy(*order_by)
-    pdf = rows.toPandas()
+def append_csv(rows: DataFrame, path: str) -> int:
+    """S6: append incremental rows (no header), ordered by (SiteID,
+    obs_date), to an existing chunk file (DatasetUtilities.py:367-384)."""
+    pdf = rows.orderBy("SiteID", "obs_date").toPandas()
     with open(path, "a", encoding="utf-8") as f:
         pdf.to_csv(f, index=False, header=False)
     return len(pdf)

@@ -92,14 +92,13 @@ class RestUploader:
 def post_json_partitions(
     df: DataFrame,
     url: str,
-    batch_size: int = 500,
     auth_token: str | None = None,
     timeout: float = 30.0,
 ) -> None:
     """POST every row of ``df`` to ``url`` as JSON-array batches, one HTTP
     client per partition (foreachPartition — executor-side, no driver
     collect). The engine-scale form of the reference's serial upload loop:
-    N executors post concurrently; batch_size bounds each payload.
+    N executors post concurrently; each payload carries at most 50 rows.
     """
 
     def _post_partition(rows) -> None:
@@ -119,7 +118,7 @@ def post_json_partitions(
         batch: list[dict] = []
         for row in rows:
             batch.append(row.asDict(recursive=True))
-            if len(batch) >= batch_size:
+            if len(batch) >= 50:
                 flush(batch)
                 batch = []
         flush(batch)

@@ -1,1 +1,1 @@
-from h2outility_spark.sources.parquet import TABLES, load_table, load_tables, register_views  # noqa: F401
+from h2outility_spark.sources.parquet import TABLES, load_table, register_views  # noqa: F401

@@ -132,14 +132,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view so operators can use spark.sql."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register the ``lineitem`` table as a temp view so spark.sql can read it."""
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
 
 
 def load_jdbc(

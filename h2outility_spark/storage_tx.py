@@ -229,10 +229,8 @@ class TxTable:
             return self.spark.createDataFrame([], m["schema"])
         return self.spark.read.schema(m["schema"]).parquet(*paths)
 
-    def scan(
-        self, key: str, lo, hi, version: int | None = None
-    ) -> DataFrame:
-        """Manifest-pruned range scan: read ONLY the data files whose
+    def scan(self, key: str, lo, hi) -> DataFrame:
+        """Manifest-pruned range scan of the latest version: read ONLY the data files whose
         recorded [min, max] for ``key`` overlaps [lo, hi], then apply the
         residual filter. Spark's own planner prunes row groups from
         footers, but it must still LIST and OPEN every file to get there —
@@ -242,7 +240,7 @@ class TxTable:
         theirs (the same two-level prune merge_upsert uses). Files without
         recorded stats for ``key`` are read (cannot prove them skippable).
         Bounds are inclusive; either may be None for half-open ranges."""
-        m = self.manifest(version)
+        m = self.manifest()
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
         nlo, nhi = _norm_stat(lo), _norm_stat(hi)
@@ -283,13 +281,13 @@ class TxTable:
             for m in (read_manifest(self.table_dir, v) for v in manifest_versions(self.table_dir))
         ]
 
-    def describe(self, version: int | None = None) -> dict:
-        """Table health snapshot for ops dashboards / compaction policy:
+    def describe(self) -> dict:
+        """Latest-version health snapshot for ops dashboards / compaction policy:
         rows, files, bytes, small-file count and fraction, bytes/row
         density, version count and latest op — all from manifests and
         segment metadata, zero data IO. ``small`` uses the median file's
         rows/4 as the cutoff, mirroring compact_files' default shape."""
-        m = self.manifest(version)
+        m = self.manifest()
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
         entries = manifest_files(self.table_dir, m)
@@ -729,8 +727,8 @@ class TxTable:
         deleted = only_from.exceptAll(only_to).withColumn("_change_type", F.lit("delete"))
         return inserted.unionByName(deleted)
 
-    def clone(self, dest_dir: str, version: int | None = None) -> "TxTable":
-        """Cheap independent copy of ``version`` (default latest) at
+    def clone(self, dest_dir: str) -> "TxTable":
+        """Cheap independent copy of the latest version at
         ``dest_dir`` — the experiment-branch primitive: fork the corpus,
         mutate the fork, leave the source untouched.
 
@@ -740,7 +738,7 @@ class TxTable:
         stays readable even after the source vacuums the shared file: the
         inode lives until both sides drop it. Histories are independent —
         the clone starts at version 0 with op 'clone'."""
-        m = self.manifest(version)
+        m = self.manifest()
         if m is None:
             raise FileNotFoundError(f"no committed version in {self.table_dir}")
         dest = TxTable(self.spark, dest_dir, key_cols=self.key_cols)
@@ -851,41 +849,22 @@ class TxTable:
         finally:
             net.unpersist()
 
-    def resolve_from_branch(
-        self,
-        other: "TxTable",
-        since_self: int,
-        prefer: str = "branch",
-        propagate_deletes: bool = False,
-    ) -> int:
-        """THREE-WAY merge with a conflict policy — the step after
-        ``branch_conflicts`` reports divergence: both this table (since
-        ``since_self``, its version at fork time) and the branch (since
-        its fork point, its version 0) have advanced, and their
-        changed key sets may overlap.
+    def resolve_from_branch(self, other: "TxTable", since_self: int) -> int:
+        """THREE-WAY merge that keeps this table's side of a conflict
+        ("ours") — the step after ``branch_conflicts`` reports divergence:
+        both this table (since ``since_self``, its version at fork time)
+        and the branch (since its fork point, its version 0) have
+        advanced, and their changed key sets may overlap.
 
-        * ``prefer='branch'`` ("theirs"): every branch change lands,
-          conflicted keys taking the branch's final state — upsert
-          semantics already mean the last writer wins, so this delegates
-          to :meth:`merge_from_branch` unchanged.
-        * ``prefer='main'`` ("ours"): conflicted keys KEEP this table's
-          current state; only the branch's NON-conflicting net changes
-          apply (inserts merge_upserted, deleted-not-reinserted keys
-          tombstoned when ``propagate_deletes``). The conflict set is
-          computed as in :meth:`branch_conflicts` and anti-joined out of
-          both legs — one CDF diff per side, one join, then the same
-          two-commit-max apply path as merge_from_branch.
-
-        ``propagate_deletes`` defaults False, the SAME default as
-        :meth:`merge_from_branch` (a resolution must not silently destroy
-        rows either); pass True to let branch-side deletes tombstone.
+        Conflicted keys KEEP this table's current state; only the
+        branch's NON-conflicting net changes apply: inserts are
+        merge_upserted and deleted-not-reinserted keys are tombstoned.
+        The conflict set is computed as in :meth:`branch_conflicts` and
+        anti-joined out of both legs — one CDF diff per side, one join,
+        then the same two-commit-max apply path as merge_from_branch.
 
         Returns the version committed by the final apply. Cost stays
         O(changes on either side), never O(table)."""
-        if prefer not in ("branch", "main"):
-            raise ValueError(f"prefer must be 'branch' or 'main', got {prefer!r}")
-        if prefer == "branch":
-            return self.merge_from_branch(other, propagate_deletes=propagate_deletes)
         from pyspark.sql import functions as F
 
         # ONE CDF diff per side: the branch leg of the conflict set is
@@ -924,21 +903,20 @@ class TxTable:
             )
             inserts = all_inserts.join(conflicts, self.key_cols, "left_anti").persist()
             derived.append(inserts)
-            if propagate_deletes:
-                tombstones = (
-                    net.filter(F.col("_change_type") == "delete")
-                    .select(*self.key_cols)
-                    .join(
-                        all_inserts.select(*self.key_cols).distinct(),
-                        self.key_cols,
-                        "left_anti",
-                    )
-                    .join(conflicts, self.key_cols, "left_anti")
-                    .distinct()
-                    .persist()
+            tombstones = (
+                net.filter(F.col("_change_type") == "delete")
+                .select(*self.key_cols)
+                .join(
+                    all_inserts.select(*self.key_cols).distinct(),
+                    self.key_cols,
+                    "left_anti",
                 )
-                derived.append(tombstones)
-                self.delete_keys(tombstones)
+                .join(conflicts, self.key_cols, "left_anti")
+                .distinct()
+                .persist()
+            )
+            derived.append(tombstones)
+            self.delete_keys(tombstones)
             return self.merge_upsert(inserts)
         finally:
             net.unpersist()

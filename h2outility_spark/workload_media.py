@@ -24,9 +24,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from h2outility_spark.operators import multimodal
-from h2outility_spark.sources.parquet import load_table
-from h2outility_spark.workload import query
-from h2outility_spark.workload_text import _docs
+from h2outility_spark.workload import _t, query
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +48,7 @@ from h2outility_spark.workload_text import _docs
 def q_frame_sample(spark, sf_dir):
     from h2outility_spark.operators import multimodal
 
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     assets = docs.select(
         F.col("doc_id").alias("asset_id"),
         F.lit(None).cast("binary").alias("data"),
@@ -59,7 +57,7 @@ def q_frame_sample(spark, sf_dir):
             F.lit("n_frames"), ((F.col("n_chars") % 300) + 30).cast("string")
         ).alias("meta"),
     )
-    return multimodal.frame_sample_plan(assets, every_n=30)
+    return multimodal.frame_sample_plan(assets)
 
 
 @query(
@@ -80,7 +78,7 @@ def q_frame_sample(spark, sf_dir):
 def q_audio_chunks(spark, sf_dir):
     from h2outility_spark.operators import multimodal
 
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     assets = docs.select(
         F.col("doc_id").alias("asset_id"),
         F.create_map(
@@ -88,7 +86,7 @@ def q_audio_chunks(spark, sf_dir):
             ((F.col("n_chars") * 40 + 1000).cast("long")).cast("string"),
         ).alias("meta"),
     )
-    return multimodal.audio_chunk_plan(assets, chunk_ms=2_000)
+    return multimodal.audio_chunk_plan(assets)
 
 
 # ---------------------------------------------------------------------------
@@ -182,7 +180,7 @@ _GROUPED_GRAY_SQL = (
 )
 def q_image_dhash(spark, sf_dir):
     ids = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
         .filter(F.col("asset_id") < 192)
     )
@@ -209,11 +207,11 @@ def q_image_dhash(spark, sf_dir):
 )
 def q_image_neardup(spark, sf_dir):
     ids = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
         .filter(F.col("asset_id") < 96)
     )
-    return multimodal.image_neardup_pairs(_bmp_assets(ids, _gray_grouped), max_hamming=3)
+    return multimodal.image_neardup_pairs(_bmp_assets(ids, _gray_grouped))
 
 
 # ---------------------------------------------------------------------------
@@ -232,7 +230,7 @@ def _wav_assets(spark, sf_dir):
     ``3277 + (a % 7) * 1000``, ZCR 0) iff ``(a + w) % 7 < 4``, else quiet
     (alternating ±1000 -> RMS ~0.0305, ZCR exactly 1)."""
     ids = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
         .filter(F.col("asset_id") < 150)
     )
@@ -294,7 +292,7 @@ _WAV_IDS_CTE = """
     ),
 )
 def q_audio_window_features(spark, sf_dir):
-    return multimodal.extract_audio_frames(_wav_assets(spark, sf_dir), window_ms=100)
+    return multimodal.extract_audio_frames(_wav_assets(spark, sf_dir))
 
 
 @query(
@@ -320,9 +318,7 @@ def q_audio_window_features(spark, sf_dir):
     ),
 )
 def q_audio_vad_segments(spark, sf_dir):
-    return multimodal.audio_activity_segments(
-        _wav_assets(spark, sf_dir), rms_threshold=0.05, window_ms=100
-    )
+    return multimodal.audio_activity_segments(_wav_assets(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +346,7 @@ def q_audio_vad_segments(spark, sf_dir):
 )
 def q_image_features_jpeg(spark, sf_dir):
     ids = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
         .filter(F.col("asset_id") < 160)
     )
@@ -411,7 +407,7 @@ def q_image_resize_features(spark, sf_dir):
     certifies the full resize round trip (decode -> downsample -> encode
     -> decode) against pure index arithmetic."""
     ids = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("asset_id"))
         .filter(F.col("asset_id") < 128)
     )

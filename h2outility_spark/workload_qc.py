@@ -506,7 +506,7 @@ def q_event_time_windows(spark, sf_dir):
 )
 def q_qc_resample_ffill(spark, sf_dir):
     ev = _ev(spark, sf_dir).filter(F.col("event_type") == "click")
-    out = qc.resample_grid(ev, keys=["user_id"], interval_seconds=3600, ts="ts", value="value")
+    out = qc.resample_grid(ev, keys=["user_id"], interval_seconds=3600)
     return out.select("user_id", "ts", fround(F.col("value"), 4).alias("value"), "observed")
 
 
@@ -535,9 +535,7 @@ def q_qc_median_despike(spark, sf_dir):
     ev = _ev(spark, sf_dir).filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", "value"
     )
-    out = qc.median_despike(
-        ev, keys=["user_id"], threshold=40.0, window=2, ts="ts", value="value", tiebreak="event_id"
-    )
+    out = qc.median_despike(ev, keys=["user_id"], threshold=40.0)
     return out.select("event_id", "user_id", "ts", "value", "median_val", "is_spike")
 
 
@@ -636,7 +634,7 @@ def q_asof_join(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    out = asof.asof_join_backward(purch, clicks, keys=["user_id"], payload_cols=["value"])
+    out = asof.asof_join_backward(purch, clicks, keys=["user_id"])
     return out.select("event_id", "user_id", "ts", "asof_ts", F.col("value").alias("asof_value"))
 
 
@@ -662,7 +660,7 @@ def q_range_join_count(spark, sf_dir):
     purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
     return asof.range_join_count(
-        purch, clicks, keys=["user_id"], left_ts="ts", right_ts="ts", band_seconds=86400, id_col="event_id"
+        purch, clicks, keys=["user_id"], left_ts="ts", right_ts="ts", band_seconds=86400
     )
 
 
@@ -791,10 +789,7 @@ def q_asof_join_forward(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    out = asof.asof_join_forward(
-        purch, clicks, keys=["user_id"], payload_cols=["value"],
-        tolerance_seconds=7200, tiebreak="value",
-    )
+    out = asof.asof_join_forward(purch, clicks, keys=["user_id"])
     return out.select("event_id", "user_id", "ts", "asof_ts", F.col("value").alias("asof_value"))
 
 
@@ -840,14 +835,7 @@ def q_asof_join_nearest(spark, sf_dir):
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", fround(F.col("value"), 2).alias("click_value"), "event_id"
     )
-    return asof.asof_join_nearest(
-        purch,
-        clicks,
-        ["user_id"],
-        payload_cols=["click_value"],
-        tolerance_seconds=7200,
-        tiebreak="event_id",
-    )
+    return asof.asof_join_nearest(purch, clicks, ["user_id"])
 
 
 # -- exact grouped percentiles -------------------------------------------------
@@ -1279,9 +1267,7 @@ def q_asof_interp_join(spark, sf_dir):
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", "value", "event_id"
     )
-    out = asof.asof_join_interp(
-        purch, clicks, ["user_id"], value_col="value", tiebreak="event_id"
-    )
+    out = asof.asof_join_interp(purch, clicks, ["user_id"], value_col="value")
     return out.select(
         "user_id",
         "event_id",

@@ -15,13 +15,7 @@ from pyspark.sql import functions as F
 
 from h2outility_spark.functions import fround
 from h2outility_spark.operators import similarity
-from h2outility_spark.sources.parquet import load_table
 from h2outility_spark.workload import _t, query, sql_round
-from h2outility_spark.workload_text import _docs
-
-
-def _emb(spark, sf_dir):
-    return _t(spark, sf_dir, "embeddings")
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +43,7 @@ def _emb(spark, sf_dir):
     bench=True,
 )
 def q_embedding_knn(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     topk = similarity.brute_force_topk(emb, queries, k=5)
     return topk.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
@@ -68,7 +62,7 @@ def q_embedding_knn(spark, sf_dir):
     description="IVF coarse quantizer: element-wise mean embedding per label (posexplode + groupBy)",
 )
 def q_embedding_centroids(spark, sf_dir):
-    cents = similarity.centroids_by_label(_emb(spark, sf_dir))
+    cents = similarity.centroids_by_label(_t(spark, sf_dir, "embeddings"))
     return cents.select("label", F.col("pos").cast("int").alias("pos"), fround(F.col("centroid_val"), 6).alias("centroid_val"))
 
 
@@ -90,7 +84,7 @@ def q_embedding_centroids(spark, sf_dir):
     ),
 )
 def q_neardup_embedding_pairs(spark, sf_dir):
-    out = similarity.cosine_neardup_pairs(_emb(spark, sf_dir), threshold=0.45)
+    out = similarity.cosine_neardup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.45)
     return out.select("id_a", "id_b", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
 
@@ -113,7 +107,7 @@ def q_neardup_embedding_pairs(spark, sf_dir):
     ),
 )
 def q_neardup_embedding_lsh(spark, sf_dir):
-    out = similarity.cosine_neardup_pairs_lsh(_emb(spark, sf_dir), threshold=0.45)
+    out = similarity.cosine_neardup_pairs_lsh(_t(spark, sf_dir, "embeddings"), threshold=0.45)
     return out.select("id_a", "id_b", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
 
@@ -137,7 +131,7 @@ def _rp_lsh_oracle() -> str:
     ),
 )
 def q_rp_lsh_signatures(spark, sf_dir):
-    return similarity.rp_lsh_signatures(_emb(spark, sf_dir), n_planes=16, dim=64)
+    return similarity.rp_lsh_signatures(_t(spark, sf_dir, "embeddings"), n_planes=16)
 
 
 def _kmeans_oracle() -> str:
@@ -200,7 +194,7 @@ def _kmeans_oracle() -> str:
 def q_kmeans_centroids(spark, sf_dir):
     from h2outility_spark.operators.kmeans import kmeans
 
-    out = kmeans(_emb(spark, sf_dir), k=8, max_iter=3)
+    out = kmeans(_t(spark, sf_dir, "embeddings"), k=8, max_iter=3)
     return out.select("cluster", "pos", fround(F.col("centroid_val"), 6).alias("centroid_val"))
 
 
@@ -226,8 +220,8 @@ def q_kmeans_centroids(spark, sf_dir):
     ),
 )
 def q_corpus_clean_embedding(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
+    docs = _t(spark, sf_dir, "documents")
     pairs = similarity.cosine_neardup_pairs_lsh(emb, threshold=0.45)
     drops = pairs.select(F.col("id_b").alias("vec_id")).distinct()
     return (
@@ -429,7 +423,7 @@ _PQ_SEARCH_TAIL = """
 def q_ivfpq_search(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = similarity.ivfpq_search(emb, queries, k=3, n_probe=2, shortlist=30)
+    out = similarity.ivfpq_search(emb, queries)
     return out.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
 
@@ -510,7 +504,7 @@ def _pq_kmeans_oracle(tail: str | None = None) -> str:
 def q_pq_search(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    cbs = similarity.pq_codebooks_kmeans(emb, m=8, dim=64, k=8, max_iter=2, round_dp=6)
+    cbs = similarity.pq_codebooks_kmeans(emb, m=8, k=8, max_iter=2, round_dp=6)
     out = similarity.pq_search(emb, queries, k=3, shortlist=50, codebooks=cbs)
     return out.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
@@ -527,7 +521,7 @@ def q_pq_search(spark, sf_dir):
 )
 def q_pq_codes_kmeans(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    cbs = similarity.pq_codebooks_kmeans(emb, m=8, dim=64, k=8, max_iter=2, round_dp=6)
+    cbs = similarity.pq_codebooks_kmeans(emb, m=8, k=8, max_iter=2, round_dp=6)
     return similarity.pq_encode(emb, cbs)
 
 
@@ -602,9 +596,9 @@ def q_hybrid_search_knn(spark, sf_dir):
     """Hybrid lexical+semantic top-10 per query doc (doc_id % 97 == 3 plays
     the query set) over documents joined to their embeddings."""
     docs = (
-        load_table(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents")
         .join(
-            load_table(spark, sf_dir, "embeddings").withColumnRenamed("vec_id", "doc_id"),
+            _t(spark, sf_dir, "embeddings").withColumnRenamed("vec_id", "doc_id"),
             "doc_id",
         )
         .select("doc_id", "text", "embedding")
@@ -612,7 +606,7 @@ def q_hybrid_search_knn(spark, sf_dir):
     queries = docs.filter(F.col("doc_id") % 97 == 3).select(
         F.col("doc_id").alias("query_id"), "text", "embedding"
     )
-    out = similarity.hybrid_search(docs, queries, k=10)
+    out = similarity.hybrid_search(docs, queries)
     return out.select(
         "query_id", "cand_id", fround(F.col("rrf_score"), 9).alias("rrf_score"), "rank"
     )
@@ -805,7 +799,7 @@ def q_ivfpq_search_adaptive(spark, sf_dir):
     )
     cents1 = sim.pack_centroids(sim.centroids_by_label(emb_sp))
 
-    cbs = sim.pq_codebooks_kmeans(emb, m=8, dim=64, k=8, max_iter=2, round_dp=6)
+    cbs = sim.pq_codebooks_kmeans(emb, m=8, k=8, max_iter=2, round_dp=6)
     codes = sim.pq_encode(emb, cbs)
     recon = sim.pq_reconstruct(codes, cbs)
 
@@ -921,8 +915,8 @@ def q_rp_lsh_autosig(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     n = emb.count()
-    bits = similarity.auto_n_bits(n, target_bucket=32)
-    sigs = similarity.rp_lsh_signatures(emb, n_planes=bits * 32, dim=64)
+    bits = similarity.auto_n_bits(n)
+    sigs = similarity.rp_lsh_signatures(emb, n_planes=bits * 32)
     return sigs.select("vec_id", "rp_sig", F.lit(bits).cast("int").alias("n_bits"))
 
 

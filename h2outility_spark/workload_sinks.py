@@ -118,7 +118,7 @@ def q_annotated_export_roundtrip(spark, sf_dir):
         site=_SITE, variables=_VARS, source=_SOURCE, qc_level=_QC
     )
     write_annotated_csv(chunk(0, 2), path, header, order_by=["SiteID", "obs_date"])
-    append_csv(chunk(3, 3), path, order_by=["SiteID", "obs_date"])
+    append_csv(chunk(3, 3), path)
     wm = read_csv_watermark(spark, path, "obs_date")
 
     # md5 of the header block AS WRITTEN (read back off disk, not reusing
@@ -368,9 +368,7 @@ def q_rest_ingest_roundtrip(spark, sf_dir):
             )
             .repartition(4)
         )
-        post_json_partitions(
-            sel, f"http://127.0.0.1:{server.server_port}/ingest", batch_size=50
-        )
+        post_json_partitions(sel, f"http://127.0.0.1:{server.server_port}/ingest")
     finally:
         server.shutdown()
         server.server_close()

@@ -981,12 +981,12 @@ def q_label_prop_weighted(spark, sf_dir):
 # -- HLL set algebra: week-over-week retention from registers alone ----------------------
 
 
-def _hll_est_sql(reg_cte: str, key: str) -> str:
-    """Estimate CTE body over a (key, bucket, reg) register CTE — the
+def _hll_est_sql(reg_cte: str) -> str:
+    """Estimate CTE body over a (week, bucket, reg) register CTE — the
     same pinned-literal formula as HLL_ROLLUP_ORACLE."""
     return (
-        f"SELECT {key}, {_hll_case_sql('s', 'n')} AS e FROM ("
-        f"SELECT {key}, sum(power(2.0, -reg)) AS s, CAST(count(*) AS DOUBLE) AS n "
+        f"SELECT week, {_hll_case_sql('s', 'n')} AS e FROM ("
+        f"SELECT week, sum(power(2.0, -reg)) AS s, CAST(count(*) AS DOUBLE) AS n "
         f"FROM {reg_cte} GROUP BY 1)"
     )
 
@@ -1016,8 +1016,8 @@ uni AS (
   FROM pairs p JOIN wk r ON r.week = p.week OR r.week = p.week_next
   GROUP BY 1, 2
 ),
-est_w AS ({_hll_est_sql("wk", "week")}),
-est_u AS ({_hll_est_sql("uni", "week")}),
+est_w AS ({_hll_est_sql("wk")}),
+est_u AS ({_hll_est_sql("uni")}),
 wu AS (SELECT DISTINCT week, user_id FROM e),
 ex AS (
   SELECT p.week,
@@ -1241,8 +1241,8 @@ uni AS (
   FROM pairs p JOIN wk r ON r.week = p.week OR r.week = p.week_next
   GROUP BY 1, 2
 ),
-est_w AS ({_hll_est_sql("wk", "week")}),
-est_u AS ({_hll_est_sql("uni", "week")})
+est_w AS ({_hll_est_sql("wk")}),
+est_u AS ({_hll_est_sql("uni")})
 SELECT p.week, p.week_next,
        {sql_round("ea.e", 4)} AS est_distinct,
        {sql_round("eb.e", 4)} AS est_next_distinct,

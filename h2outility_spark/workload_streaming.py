@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from h2outility_spark.functions import fround
 from h2outility_spark.operators.text import WS_CLASS as _WS, token_count
-from h2outility_spark.sources.parquet import load_table, read_parquet
+from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.storage_tx import TxTable
 from h2outility_spark.streaming.incremental import BatchLedger, drain_available_now
 from h2outility_spark.workload import _t, query, scratch_dir, sql_round
@@ -97,7 +97,7 @@ pool AS (
 def q_stream_dedup_ingest(spark, sf_dir):
     from h2outility_spark.streaming.incremental import stream_dedup_ingest
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     src = scratch_dir("h2ou_sdi_src_")
     tbl = scratch_dir("h2ou_sdi_tbl_") + "/corpus"
     ckpt = scratch_dir("h2ou_sdi_ckpt_") + "/ckpt"
@@ -360,11 +360,10 @@ def q_stream_static_enrich(spark, sf_dir):
     checkpointed restarts. At scale this is the canonical enrichment
     topology: the fact stream never shuffles, the dim broadcasts.
     """
-    from h2outility_spark.sources.parquet import load_table
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    cust = load_table(spark, sf_dir, "customer").select(
+    cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_nationkey").cast("long").alias("c_nationkey")
     )
     src = scratch_dir("h2ou_sse_src_")
@@ -535,14 +534,12 @@ def q_stream_ivm_agg(spark, sf_dir):
     def handle(batch_df, _batch_id) -> None:
         if not state["initialized"]:
             view.append(
-                ivm.aggregate_state(batch_df, ["cust_bucket"], "cents", "n_orders", "total_cents")
+                ivm.aggregate_state(batch_df, ["cust_bucket"], "cents")
             )
             state["initialized"] = True
             return
         changes = batch_df.withColumn("_change_type", F.lit("insert"))
-        new_view = ivm.maintain_grouped_agg(
-            view.snapshot(), changes, ["cust_bucket"], "cents", "n_orders", "total_cents"
-        )
+        new_view = ivm.maintain_grouped_agg(view.snapshot(), changes, ["cust_bucket"], "cents")
         touched = changes.select("cust_bucket").distinct()
         view.merge_upsert(new_view.join(touched, ["cust_bucket"], "left_semi"))
 
@@ -636,7 +633,7 @@ def q_stream_minmax_ivm(spark, sf_dir):
     def handle(batch_df, batch_id) -> None:
         if ctl["version"] is None:
             v = t.append(batch_df)
-            state = ivm.minmax_state(t.snapshot(v), ["cust_bucket"], "cents", k=2)
+            state = ivm.minmax_state(t.snapshot(v), ["cust_bucket"], "cents")
         else:
             v_prev = ctl["version"]
             v = t.merge_upsert(batch_df)
@@ -651,7 +648,6 @@ def q_stream_minmax_ivm(spark, sf_dir):
                 t.snapshot(v),
                 ["cust_bucket"],
                 "cents",
-                k=2,
                 n_changed_keys=50,
             )
         path = os.path.join(state_dir, f"state_v{v}")
@@ -775,8 +771,8 @@ def cms_grid_path(state_dir: str) -> str | None:
     return os.path.join(state_dir, f"grid_{ids[-1]}") if ids else None
 
 
-def make_cms_handler(spark, state_dir, key_col="user_id"):
-    """foreachBatch handler advancing a Count-Min grid by cell-wise merge,
+def make_cms_handler(spark, state_dir):
+    """foreachBatch handler advancing a Count-Min grid of ``user_id`` by cell-wise merge,
     REPLAY-SAFE (foreachBatch is at-least-once): each batch writes
     ``grid_<batch_id>`` (the previous committed grid merged with the
     batch's own) and commits through a :class:`BatchLedger` in
@@ -789,7 +785,7 @@ def make_cms_handler(spark, state_dir, key_col="user_id"):
     from h2outility_spark.operators import sketch
 
     def apply(batch_df, batch_id) -> str:
-        grid = sketch.count_min_table(batch_df, key_col, depth=_CMS_D, width=_CMS_W)
+        grid = sketch.count_min_table(batch_df, "user_id", depth=_CMS_D, width=_CMS_W)
         prev = cms_grid_path(state_dir)
         if prev is not None:
             grid = (
@@ -828,7 +824,7 @@ def q_stream_heavy_hitters(spark, sf_dir):
     src = scratch_dir("h2ou_scms_src_")
     ckpt = scratch_dir("h2ou_scms_ckpt_") + "/ckpt"
     state_dir = scratch_dir("h2ou_scms_state_")
-    handle = make_cms_handler(spark, state_dir, key_col="user_id")
+    handle = make_cms_handler(spark, state_dir)
     stream = spark.readStream.schema(ev.schema).format("parquet").load(src)
 
     b1.coalesce(1).write.mode("append").parquet(src)
@@ -1073,7 +1069,7 @@ def q_stream_stratified_ingest(spark, sf_dir):
 
     stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
     agg = (
-        hash_split(stream, train=8, val=1, test=1)
+        hash_split(stream)
         .groupBy("source", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -19,7 +19,6 @@ from pyspark.sql import Window as W, functions as F
 from h2outility_spark.functions import fround
 from h2outility_spark.operators import dedup, text
 from h2outility_spark.operators.text import token_count
-from h2outility_spark.sources.parquet import load_table
 from h2outility_spark.workload import _t, query, sql_round
 
 
@@ -144,31 +143,27 @@ JACCARD_TAIL = """
 """
 
 
-def _docs(spark, sf_dir):
-    return _t(spark, sf_dir, "documents")
-
-
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
 
 @query(
     "text_stats",
-    oracle="SELECT doc_id, " + text.quality_sql_columns("text") + " FROM documents",
+    oracle="SELECT doc_id, " + text.quality_sql_columns() + " FROM documents",
     description="Text quality scoring: char/token counts (whitespace + BPE-ish), alpha/digit/space ratios",
     bench=True,
 )
 def q_text_stats(spark, sf_dir):
-    return _docs(spark, sf_dir).select("doc_id", *text.quality_columns("text"))
+    return _t(spark, sf_dir, "documents").select("doc_id", *text.quality_columns())
 
 
 @query(
     "text_langid",
-    oracle="SELECT doc_id, " + text.langid_sql_columns("text") + " FROM documents",
+    oracle="SELECT doc_id, " + text.langid_sql_columns() + " FROM documents",
     description="Language ID: marker-word occurrence scores per language + argmax prediction",
 )
 def q_text_langid(spark, sf_dir):
-    scored = _docs(spark, sf_dir).select("doc_id", *text.langid_score_columns("text"))
+    scored = _t(spark, sf_dir, "documents").select("doc_id", *text.langid_score_columns())
     return scored.withColumn("pred_lang", text.langid_pred_column())
 
 
@@ -183,11 +178,11 @@ def q_text_langid(spark, sf_dir):
     description="Document fingerprinting: md5 of normalized text + 8-token prefix fingerprint",
 )
 def q_doc_fingerprint(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         text.fingerprint(F.col("text")).alias("fp"),
-        text.prefix_fingerprint("text", 8).alias("prefix_fp"),
+        text.prefix_fingerprint().alias("prefix_fp"),
     )
 
 
@@ -210,7 +205,7 @@ def q_doc_fingerprint(spark, sf_dir):
     ),
 )
 def q_ngram_counts(spark, sf_dir):
-    return text.corpus_ngram_counts(_docs(spark, sf_dir), n=3, min_count=2)
+    return text.corpus_ngram_counts(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -232,7 +227,7 @@ def q_ngram_counts(spark, sf_dir):
 def q_vocab_topk(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    toks = _docs(spark, sf_dir).select(F.explode(text.shingles_expr("text", 1)).alias("token"))
+    toks = _t(spark, sf_dir, "documents").select(F.explode(text.shingles_expr(1)).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occ"))
     top = counts.orderBy(F.col("n_occ").desc(), "token").limit(100)
     w = W.orderBy(F.col("n_occ").desc(), "token")
@@ -258,7 +253,7 @@ def q_vocab_topk(spark, sf_dir):
     ),
 )
 def q_bigram_condprob(spark, sf_dir):
-    out = text.bigram_conditional_probs(_docs(spark, sf_dir), min_pair=3)
+    out = text.bigram_conditional_probs(_t(spark, sf_dir, "documents"), min_pair=3)
     return out.select("bigram", "c12", fround(F.col("p"), 6).alias("p"))
 
 
@@ -287,7 +282,7 @@ def q_bigram_condprob(spark, sf_dir):
     ),
 )
 def q_doc_lm_score(spark, sf_dir):
-    out = text.doc_lm_fluency(_docs(spark, sf_dir))
+    out = text.doc_lm_fluency(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", "n_bigrams", fround(F.col("lm_score"), 6).alias("lm_score"))
 
 
@@ -309,10 +304,10 @@ def q_doc_lm_score(spark, sf_dir):
     ),
 )
 def q_contamination_overlap(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0)
     train = docs.filter(F.col("doc_id") % 37 != 0)
-    return text.contamination_overlap(train, bench, n=3)
+    return text.contamination_overlap(train, bench)
 
 
 @query(
@@ -330,7 +325,7 @@ def q_contamination_overlap(spark, sf_dir):
     ),
 )
 def q_hash_sample_docs(spark, sf_dir):
-    out = text.hash_sample(_docs(spark, sf_dir), percent=15)
+    out = text.hash_sample(_t(spark, sf_dir, "documents"), percent=15)
     bucket = F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS INT)")
     return out.select("doc_id", bucket.alias("bucket"))
 
@@ -374,7 +369,7 @@ def q_hash_sample_docs(spark, sf_dir):
     ),
 )
 def q_pack_sequences(spark, sf_dir):
-    return text.pack_sequences(_docs(spark, sf_dir), budget_tokens=2048)
+    return text.pack_sequences(_t(spark, sf_dir, "documents"), budget_tokens=2048)
 
 
 @query(
@@ -405,7 +400,7 @@ def q_pack_sequences(spark, sf_dir):
     ),
 )
 def q_tfidf_top_terms(spark, sf_dir):
-    return text.tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return text.tfidf_top_terms(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -425,7 +420,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     description="Exact dedup via hash-groupBy on the content fingerprint (keep min id per group)",
 )
 def q_dedup_exact_docs(spark, sf_dir):
-    return dedup.exact_dedup_groups(_docs(spark, sf_dir))
+    return dedup.exact_dedup_groups(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -439,7 +434,7 @@ def q_dedup_exact_docs(spark, sf_dir):
     bench=True,
 )
 def q_minhash_signatures(spark, sf_dir):
-    return dedup.minhash_signatures(_docs(spark, sf_dir), num_hashes=MINHASH_K)
+    return dedup.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=MINHASH_K)
 
 
 @query(
@@ -464,7 +459,7 @@ def q_minhash_signatures(spark, sf_dir):
     ),
 )
 def q_neardup_minhash_pairs(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     # signatures feed the self-join twice and jaccard reuses the shingles —
     # cache the small intermediates instead of re-deriving them per branch
     sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
@@ -490,7 +485,7 @@ def q_neardup_minhash_pairs(spark, sf_dir):
     ),
 )
 def q_neardup_clusters(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
@@ -537,8 +532,8 @@ _ALPHA_RATIO_SQL = (
     ),
 )
 def q_corpus_clean(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    scored = docs.select("doc_id", "text", *text.quality_columns("text"))
+    docs = _t(spark, sf_dir, "documents")
+    scored = docs.select("doc_id", "text", *text.quality_columns())
     q = scored.filter((F.col("n_tokens") >= 25) & (F.col("alpha_ratio") >= 0.8)).select(
         "doc_id", "text", "n_tokens"
     )
@@ -572,7 +567,7 @@ def q_corpus_clean(spark, sf_dir):
     ),
 )
 def q_ngram_jaccard_blocked(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     d1 = docs.select(F.col("doc_id").alias("id_a"), "lang", "source")
     d2 = docs.select(F.col("doc_id").alias("id_b"), "lang", "source")
     pairs = d1.join(d2, ["lang", "source"]).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
@@ -618,7 +613,7 @@ WINNOW_CTE = (
     ),
 )
 def q_winnow_fingerprints(spark, sf_dir):
-    return dedup.winnow_fingerprints(_docs(spark, sf_dir), k=3, w=_WINNOW_W)
+    return dedup.winnow_fingerprints(_t(spark, sf_dir, "documents"), w=_WINNOW_W)
 
 
 @query(
@@ -639,13 +634,13 @@ def q_winnow_fingerprints(spark, sf_dir):
 def q_neardup_winnow_pairs(spark, sf_dir):
     # both sides of the fp self-join reuse one materialization of the
     # fingerprint pipeline instead of re-tokenizing the corpus twice
-    fps = dedup.winnow_fingerprints(_docs(spark, sf_dir), k=3, w=_WINNOW_W).cache()
-    return dedup.winnow_neardup_pairs(fps, min_shared=2)
+    fps = dedup.winnow_fingerprints(_t(spark, sf_dir, "documents"), w=_WINNOW_W).cache()
+    return dedup.winnow_neardup_pairs(fps)
 
 
 def _simhash_oracle() -> str:
     votes = ", ".join(
-        f"{dedup.simhash_bit_vote_sql('th', b)} AS v{b}" for b in range(64)
+        f"{dedup.simhash_bit_vote_sql(b)} AS v{b}" for b in range(64)
     )
     sums = ", ".join(f"sum(v{b}) AS s{b}" for b in range(64))
     digits = []
@@ -671,7 +666,7 @@ def _simhash_oracle() -> str:
     description="SimHash: 64-bit per-bit majority-vote signature over token hashes, as 16 hex chars",
 )
 def q_simhash_signatures(spark, sf_dir):
-    return dedup.simhash_signatures(_docs(spark, sf_dir))
+    return dedup.simhash_signatures(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -696,13 +691,13 @@ def q_simhash_signatures(spark, sf_dir):
     ),
 )
 def q_neardup_simhash_pairs(spark, sf_dir):
-    return dedup.simhash_neardup_pairs(_docs(spark, sf_dir), max_hamming=3)
+    return dedup.simhash_neardup_pairs(_t(spark, sf_dir, "documents"))
 
 
 @query(
     "mixture_sample",
     oracle="WITH scored AS (SELECT doc_id, "
-    + text.langid_sql_columns("text")
+    + text.langid_sql_columns()
     + """
     FROM documents)
     SELECT doc_id, pred_lang, bucket
@@ -718,8 +713,8 @@ def q_neardup_simhash_pairs(spark, sf_dir):
     ),
 )
 def q_mixture_sample(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    scored = docs.select("doc_id", *text.langid_score_columns("text")).withColumn(
+    docs = _t(spark, sf_dir, "documents")
+    scored = docs.select("doc_id", *text.langid_score_columns()).withColumn(
         "pred_lang", text.langid_pred_column()
     )
     bucket = F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS INT)")
@@ -777,7 +772,7 @@ def q_mixture_sample(spark, sf_dir):
     ),
 )
 def q_repetition_signals(spark, sf_dir):
-    return text.repetition_signals(_docs(spark, sf_dir))
+    return text.repetition_signals(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -806,7 +801,7 @@ def q_repetition_signals(spark, sf_dir):
     ),
 )
 def q_segment_dedup_docs(spark, sf_dir):
-    return text.segment_dedup(_docs(spark, sf_dir), k=8)
+    return text.segment_dedup(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -852,7 +847,7 @@ def q_pii_redact_docs(spark, sf_dir):
         .when(F.col("doc_id") % 3 == 1, F.lit(" call 555-123-4567 or 555.987.6543 today"))
         .otherwise(F.lit(" ssn 123-45-6789 on file")),
     )
-    d = _docs(spark, sf_dir).select("doc_id", inject.alias("text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", inject.alias("text"))
     return d.select(
         "doc_id",
         *text.pii_counts(F.col("text")),
@@ -897,7 +892,7 @@ def q_pii_redact_docs(spark, sf_dir):
     ),
 )
 def q_dedup_incremental(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     existing = docs.filter(F.col("doc_id") % 5 != 0)
     return dedup.incremental_neardup_filter(batch, existing, num_hashes=MINHASH_K)
@@ -943,10 +938,10 @@ def q_dedup_incremental(spark, sf_dir):
     ),
 )
 def q_decontaminate_spans(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0)
     train = docs.filter(F.col("doc_id") % 37 != 0)
-    return text.decontaminate_spans(train, bench, n=3)
+    return text.decontaminate_spans(train, bench)
 
 
 @query(
@@ -998,7 +993,7 @@ def q_decontaminate_spans(spark, sf_dir):
     ),
 )
 def q_quality_filter_fusion(spark, sf_dir):
-    docs = _docs(spark, sf_dir).filter(F.length("text") > 0)
+    docs = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
     toks = docs.select("doc_id", text.tokens(F.col("text")).alias("__toks"))
     words = (
         toks.select("doc_id", F.explode("__toks").alias("w"))
@@ -1056,7 +1051,7 @@ def q_quality_filter_fusion(spark, sf_dir):
     ),
 )
 def q_shard_assignment(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     shard = (
         F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS BIGINT) % 16")
     ).cast("int")
@@ -1114,7 +1109,7 @@ def q_shard_assignment(spark, sf_dir):
     ),
 )
 def q_cdc_segment_dedup(spark, sf_dir):
-    return text.cdc_segment_dedup(_docs(spark, sf_dir), divisor=8)
+    return text.cdc_segment_dedup(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1153,7 +1148,7 @@ def q_cdc_segment_dedup(spark, sf_dir):
     ),
 )
 def q_duplicated_spans(spark, sf_dir):
-    return dedup.duplicated_spans(_docs(spark, sf_dir), window=16)
+    return dedup.duplicated_spans(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1196,7 +1191,7 @@ def q_duplicated_spans(spark, sf_dir):
     ),
 )
 def q_remove_duplicated_spans(spark, sf_dir):
-    return dedup.remove_duplicated_spans(_docs(spark, sf_dir), window=16)
+    return dedup.remove_duplicated_spans(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1214,7 +1209,7 @@ _CAL_SCORE_SQL = (
 
 
 def _cal_score_col():
-    return text.calibration_score_col("text")
+    return text.calibration_score_col()
 
 
 @query(
@@ -1253,7 +1248,7 @@ def _cal_score_col():
 def q_quality_calibrate_per_source(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    scored = _docs(spark, sf_dir).select("doc_id", "source", _cal_score_col().alias("score"))
+    scored = _t(spark, sf_dir, "documents").select("doc_id", "source", _cal_score_col().alias("score"))
     ranked = (
         scored.withColumn(
             "rn", F.row_number().over(W.partitionBy("source").orderBy(F.desc("score"), "doc_id"))
@@ -1313,7 +1308,7 @@ def q_mixture_plan_tokens(spark, sf_dir):
     from h2outility_spark.operators.text import token_count
 
     per_src = (
-        _docs(spark, sf_dir)
+        _t(spark, sf_dir, "documents")
         .select("source", token_count(F.col("text")).cast("bigint").alias("n_tokens"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens"))
@@ -1375,7 +1370,7 @@ def q_quality_gate_docs(spark, sf_dir):
     """The calibration query's threshold APPLIED: the surviving docs of the
     per-source 70%-by-rank quality gate, with their in-source rank — the
     row-level view the corpus pipeline's stage 1 consumes."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     scored = docs.select("doc_id", "source", text.calibration_score_col().alias("score"))
     ranked = scored.withColumn(
         "rnk", F.row_number().over(W.partitionBy("source").orderBy(F.desc("score"), "doc_id"))
@@ -1396,7 +1391,7 @@ def _lang_matrix_oracle() -> str:
         + _N_TOKENS_SQL
         + """ AS n_tokens,
            """
-        + text.langid_sql_columns("text")
+        + text.langid_sql_columns()
         + """
       FROM documents
     ),
@@ -1431,12 +1426,12 @@ def q_corpus_language_matrix(spark, sf_dir):
     in-source doc share — the language-composition audit a multilingual
     corpus runs before choosing sampling temperatures. Share division runs
     over exact BIGINT aggregates, so it is engine-reproducible."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         "source",
         text.token_count(F.col("text")).cast("bigint").alias("n_tokens"),
-        *text.langid_score_columns("text"),
+        *text.langid_score_columns(),
     ).withColumn("pred_lang", text.langid_pred_column())
     grouped = scored.groupBy("source", "pred_lang").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
@@ -1489,7 +1484,7 @@ def q_doc_length_histogram(spark, sf_dir):
     (empty docs land in bucket -1) — the length diagnostic behind
     truncation budgets and packing efficiency. log2 on exact integers,
     floored to an integer bucket, so bucket edges are engine-identical."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     n_tok = text.token_count(F.col("text")).cast("bigint")
     bucket = (
         F.when(n_tok <= 0, F.lit(-1))
@@ -1543,8 +1538,8 @@ def q_prefix_dup_rate(spark, sf_dir):
     with another doc IN THE SAME SOURCE — the boilerplate-header detector
     (templated pages, scraped nav bars) that runs cheaper than any n-gram
     pipeline: one md5 per doc, one groupBy."""
-    docs = load_table(spark, sf_dir, "documents")
-    pfx = docs.select("source", text.prefix_fingerprint("text", 8).alias("pfp"))
+    docs = _t(spark, sf_dir, "documents")
+    pfx = docs.select("source", text.prefix_fingerprint().alias("pfp"))
     dup = pfx.groupBy("source", "pfp").agg(F.count(F.lit(1)).alias("n"))
     shared = F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(F.lit(0)))
     return dup.groupBy("source").agg(
@@ -1587,7 +1582,7 @@ def q_bpe_token_hist(spark, sf_dir):
     tracks real tokenizer counts far better than whitespace words. The
     token class spells its whitespace out so Java regex and RE2 agree
     character for character."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     n_bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_EXPLICIT_PATTERN), 0)).cast(
         "bigint"
     )
@@ -1641,7 +1636,7 @@ def q_dedup_keep_best(spark, sf_dir):
     any cluster are their own representative. Scale shape: pairs come
     from banded buckets, the window is per-cluster — no O(n^2) stage.
     """
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
@@ -1706,7 +1701,7 @@ def q_minhash_containment_pairs(spark, sf_dir):
     dilutes it). Same banded-candidates-then-exact-verify cost shape as
     the certified Jaccard path (operators/dedup.containment_for_pairs).
     """
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     cont = dedup.containment_for_pairs(pairs, docs)
@@ -1940,8 +1935,8 @@ def q_rag_prep_pipeline(spark, sf_dir):
     hash. This is the SMALL-CORPUS form: the global-order window is the
     contract being certified (one packing order for the whole corpus).
     The 100 TB form exists as code, not prose — the registered
-    ``rag_prep_sharded`` twin and ``pack_sequences(n_shards=k)`` scope
-    the same window per md5 hash-shard (k parallel sorts of n/k)."""
+    ``rag_prep_sharded`` twin scopes the same window per md5 hash-shard
+    (k parallel sorts of n/k)."""
     from pyspark.sql import Window as W
 
     from h2outility_spark.operators import text as T
@@ -1993,7 +1988,7 @@ def q_stratified_split(spark, sf_dir):
     hash_sample pattern). Narrow map + one rollup shuffle."""
     from h2outility_spark.operators.text import hash_split
 
-    docs = hash_split(_t(spark, sf_dir, "documents"), train=8, val=1, test=1)
+    docs = hash_split(_t(spark, sf_dir, "documents"))
     return docs.groupBy("source", "split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count(F.col("text")).cast("bigint")).alias("total_tokens"),
@@ -2042,7 +2037,7 @@ def q_vocab_oov_rate(spark, sf_dir):
     from h2outility_spark.operators.text import shingles_expr
 
     docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = docs.select("doc_id", F.explode(shingles_expr("text", 1)).alias("w"))
+    toks = docs.select("doc_id", F.explode(shingles_expr(1)).alias("w"))
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # top-k via orderBy+limit → TakeOrderedAndProject (per-partition heaps
     # + one k-row merge), NOT a row_number window, whose single-partition
@@ -2129,7 +2124,7 @@ def q_bm25_topk_docs(spark, sf_dir):
     from h2outility_spark.operators.text import shingles_expr
 
     docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = docs.select("doc_id", F.explode(shingles_expr("text", 1)).alias("w"))
+    toks = docs.select("doc_id", F.explode(shingles_expr(1)).alias("w"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2217,7 +2212,7 @@ def q_rag_prep_sharded(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     chunks = T.chunk_sliding(docs, size=64, stride=48).withColumn(
-        "shard", F.expr(T.shard_expr_sql("doc_id", _RAG_SHARDS))
+        "shard", F.expr(T.shard_expr_sql(_RAG_SHARDS))
     )
     w = (
         W.partitionBy("shard")

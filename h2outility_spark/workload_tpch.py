@@ -1064,7 +1064,7 @@ def q_percentile_summary(spark, sf_dir):
 def q_union_dedup(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     doubled = mutation.add_points(ev, ev)
-    deduped = mutation.drop_logical_duplicates(doubled, ["event_id"])
+    deduped = mutation.drop_logical_duplicates(doubled)
     return deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -1094,7 +1094,6 @@ def q_salted_agg(spark, sf_dir):
         ["event_type"],
         {"n": ("count", "value"), "sum_raw": ("sum", "value")},
         salt_source=F.col("event_id"),
-        n_salts=16,
     )
     return out.select("event_type", F.col("n").cast("bigint").alias("n"), fround(F.col("sum_raw"), 2).alias("sum_value"))
 
@@ -1118,7 +1117,7 @@ def q_salted_agg(spark, sf_dir):
 def q_sql_api_q1(spark, sf_dir):
     from h2outility_spark.sources.parquet import register_views
 
-    register_views(spark, sf_dir, ["lineitem"])
+    register_views(spark, sf_dir)
     # NB: bare decimal literals are DecimalType in Spark SQL (unlike the
     # DataFrame API) — the D suffix keeps the arithmetic in doubles so the
     # result is bit-identical to the oracle's.

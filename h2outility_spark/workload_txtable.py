@@ -574,18 +574,9 @@ def q_txtable_incremental_agg(spark, sf_dir):
 
     t = TxTable(spark, scratch_dir("h2ou_ivm_") + "/t", key_cols=["o_orderkey"])
     v1 = t.append(base)
-    old_view = ivm.aggregate_state(
-        t.snapshot(v1), ["cust_bucket"], "cents", "n_orders", "total_cents"
-    )
+    old_view = ivm.aggregate_state(t.snapshot(v1), ["cust_bucket"], "cents")
     v2 = t.merge_upsert(upd)
-    return ivm.maintain_grouped_agg(
-        old_view,
-        t.changes(v1, v2),
-        ["cust_bucket"],
-        "cents",
-        "n_orders",
-        "total_cents",
-    )
+    return ivm.maintain_grouped_agg(old_view, t.changes(v1, v2), ["cust_bucket"], "cents")
 
 
 # -- MIN/MAX incremental maintenance (the non-self-maintainable aggregates) -----
@@ -647,10 +638,10 @@ def q_txtable_incremental_minmax(spark, sf_dir):
 
     t = TxTable(spark, scratch_dir("h2ou_ivmmm_") + "/t", key_cols=["o_orderkey"])
     v1 = t.append(base)
-    old_state = ivm.minmax_state(t.snapshot(v1), ["cust_bucket"], "cents", k=2)
+    old_state = ivm.minmax_state(t.snapshot(v1), ["cust_bucket"], "cents")
     v2 = t.merge_upsert(upd)
     new_state = ivm.maintain_grouped_minmax(
-        old_state, t.changes(v1, v2), t.snapshot(v2), ["cust_bucket"], "cents", k=2
+        old_state, t.changes(v1, v2), t.snapshot(v2), ["cust_bucket"], "cents"
     )
     return new_state.select(
         "cust_bucket",
@@ -1235,14 +1226,14 @@ WHERE NOT (o_orderkey % 3 <> 0 AND o_orderkey % 5 = 0)
 @query(
     "txtable_resolve_ours",
     oracle=RESOLVE_OURS_ORACLE,
-    description="three-way merge resolution: branch's non-conflicting net changes land, conflicts keep main (prefer='main')",
+    description="three-way merge resolution: branch's non-conflicting net changes land, conflicts keep main (ours wins)",
 )
 def q_txtable_resolve_ours(spark, sf_dir):
     """Three-way merge RESOLUTION (the step VERDICT r11 seeded after
     ``branch_conflicts``): main and a named branch BOTH advance after the
     fork — main bumps the %3 keys by +100 while the branch bumps the %2
     keys by +5000 and deletes the %5 keys — then
-    ``resolve_from_branch(prefer='main')`` applies ONLY the branch's
+    ``resolve_from_branch`` (ours wins) applies ONLY the branch's
     non-conflicting net changes: conflicted keys (touched on both sides
     = the %3 ∩ (%2 ∪ %5) set) keep main's state, branch-only updates
     land, branch-only deletes tombstone. The oracle restates the
@@ -1273,7 +1264,7 @@ def q_txtable_resolve_ours(spark, sf_dir):
         )
     )
     br.delete_keys(base.filter(F.col("o_orderkey") % 5 == 0).select("o_orderkey"))
-    main.resolve_from_branch(br, since_self=fork_v, prefer="main", propagate_deletes=True)
+    main.resolve_from_branch(br, since_self=fork_v)
     return main.snapshot().select("o_orderkey", "o_custkey", "cents")
 
 

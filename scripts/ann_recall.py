@@ -149,7 +149,7 @@ def main() -> None:
     # bigger per-subspace codebooks.
     pq_configs = []
     for m, kcb in ((8, 16), (16, 64), (32, 16)):
-        cbs_km = sim.pq_codebooks_kmeans(emb, m=m, dim=64, k=kcb, max_iter=5).cache()
+        cbs_km = sim.pq_codebooks_kmeans(emb, m=m, k=kcb, max_iter=5).cache()
         cbs_km.count()
         code_bytes = m * max(1, ((kcb - 1).bit_length() + 7) // 8)
         for shortlist in (50, 100):

@@ -172,7 +172,7 @@ def test_pq_kmeans_recall_beats_label_codebooks(spark, emb):
         sim.pq_search(emb, queries, k=k, shortlist=50).select("query_id", "cand_id"),
         exact,
     )
-    cbs = sim.pq_codebooks_kmeans(emb, m=16, dim=64, k=16, max_iter=3)
+    cbs = sim.pq_codebooks_kmeans(emb, m=16, k=16, max_iter=3)
     km_r = sim.recall_at_k(
         sim.pq_search(emb, queries, k=k, shortlist=50, m=16, codebooks=cbs).select(
             "query_id", "cand_id"

@@ -21,30 +21,34 @@ def ts(h):
 def test_asof_backward_basic(spark):
     left = spark.createDataFrame([Row(k="a", ts=ts(5), lid=1), Row(k="a", ts=ts(1), lid=2)])
     right = spark.createDataFrame(
-        [Row(k="a", ts=ts(0), v=10.0), Row(k="a", ts=ts(4), v=40.0), Row(k="a", ts=ts(6), v=60.0)]
+        [Row(k="a", ts=ts(0), value=10.0), Row(k="a", ts=ts(4), value=40.0), Row(k="a", ts=ts(6), value=60.0)]
     )
-    out = {r["lid"]: r for r in asof.asof_join_backward(left, right, ["k"], payload_cols=["v"]).collect()}
-    assert out[1]["v"] == 40.0 and out[1]["asof_ts"] == ts(4)
-    assert out[2]["v"] == 10.0
+    out = {r["lid"]: r for r in asof.asof_join_backward(left, right, ["k"]).collect()}
+    assert out[1]["value"] == 40.0 and out[1]["asof_ts"] == ts(4)
+    assert out[2]["value"] == 10.0
 
 
 def test_asof_equal_ts_and_no_match(spark):
     left = spark.createDataFrame([Row(k="a", ts=ts(2), lid=1), Row(k="b", ts=ts(2), lid=2)])
-    right = spark.createDataFrame([Row(k="a", ts=ts(2), v=1.0)])
-    out = {r["lid"]: r for r in asof.asof_join_backward(left, right, ["k"], payload_cols=["v"]).collect()}
-    assert out[1]["v"] == 1.0  # <= semantics: equal timestamps match
-    assert out[2]["v"] is None  # no right rows for key b
+    right = spark.createDataFrame([Row(k="a", ts=ts(2), value=1.0)])
+    out = {r["lid"]: r for r in asof.asof_join_backward(left, right, ["k"]).collect()}
+    assert out[1]["value"] == 1.0  # <= semantics: equal timestamps match
+    assert out[2]["value"] is None  # no right rows for key b
 
 
 def test_asof_tolerance(spark):
-    left = spark.createDataFrame([Row(k="a", ts=ts(10), lid=1)])
-    right = spark.createDataFrame([Row(k="a", ts=ts(0), v=1.0)])
-    out = asof.asof_join_backward(left, right, ["k"], payload_cols=["v"], tolerance_seconds=3600).collect()
-    assert out[0]["v"] is None  # 10h gap > 1h tolerance
+    """Backward carries any older row; forward reaches at most 2 hours ahead."""
+    right = spark.createDataFrame([Row(k="a", ts=ts(0), value=1.0)])
+    back = asof.asof_join_backward(spark.createDataFrame([Row(k="a", ts=ts(10), lid=1)]), right, ["k"]).collect()
+    assert back[0]["value"] == 1.0  # 10h back: no tolerance
+    left = spark.createDataFrame([Row(k="a", ts=ts(-3), lid=1), Row(k="a", ts=ts(-2), lid=2)])
+    fwd = {r["lid"]: r for r in asof.asof_join_forward(left, right, ["k"]).collect()}
+    assert fwd[1]["value"] is None  # 3h ahead > 2h tolerance
+    assert fwd[2]["value"] == 1.0  # exactly 2h ahead: within
 
 
 def test_range_join_count_band_edges(spark):
-    left = spark.createDataFrame([Row(k="a", ts=ts(10), lid=1)])
+    left = spark.createDataFrame([Row(k="a", ts=ts(10), event_id=1)])
     right = spark.createDataFrame(
         [Row(k="a", ts=ts(9)), Row(k="a", ts=ts(11)), Row(k="a", ts=ts(12)), Row(k="b", ts=ts(10))]
     )
@@ -55,27 +59,16 @@ def test_range_join_count_band_edges(spark):
 def test_range_join_count_deterministic_across_repartition(spark):
     """The per-row group id must be stable under repartitioning (and thus
     task retry/recompute): identical output for 1-partition and 16-partition
-    layouts of the same left side, with and without an explicit id_col.
-    Exact-duplicate left rows must each keep their own row."""
+    layouts of the same left side."""
     ev = load_table(spark, SF_DIR, "events")
     purch = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
 
-    def run(l, **kw):
-        rows = asof.range_join_count(l, clicks, ["user_id"], "ts", "ts", band_seconds=86400, **kw).collect()
+    def run(l):
+        rows = asof.range_join_count(l, clicks, ["user_id"], "ts", "ts", band_seconds=86400).collect()
         return sorted(tuple(r) for r in rows)
 
-    base = run(purch.coalesce(1), id_col="event_id")
-    assert run(purch.repartition(16), id_col="event_id") == base
-    assert run(purch.repartition(16)) == base  # deterministic fallback agrees
-
-    # Fallback keeps exact-duplicate left rows as separate rows (row_number
-    # is unique even on ties); a caller-supplied id assumes a unique key.
-    dup = purch.limit(1)
-    left = purch.unionByName(dup)
-    dup_out = run(left.repartition(16))
-    assert len(dup_out) == purch.count() + 1
-    assert run(left.coalesce(1)) == dup_out
+    assert run(purch.repartition(16)) == run(purch.coalesce(1))
 
 
 def test_approx_distinct_within_tolerance(spark):
@@ -125,7 +118,7 @@ def test_hybrid_search_rrf_fusion(spark):
     queries = spark.createDataFrame(
         [Row(query_id=100, text="spark shuffle tuning", embedding=[1.0, 0.0, 0.0])]
     )
-    out = hybrid_search(docs, queries, k=3)
+    out = hybrid_search(docs, queries)
     rows = {r["cand_id"]: (r["rank"], r["rrf_score"]) for r in out.collect()}
 
     # lexical ranks: doc1 (3 shared toks) rank1; docs 2,3 share none -> absent
@@ -145,49 +138,41 @@ def test_asof_forward_basic_equal_ts_and_no_match(spark):
         [Row(k="a", ts=ts(5), lid=1), Row(k="a", ts=ts(4), lid=2), Row(k="a", ts=ts(9), lid=3)]
     )
     right = spark.createDataFrame(
-        [Row(k="a", ts=ts(4), v=40.0), Row(k="a", ts=ts(6), v=60.0), Row(k="a", ts=ts(8), v=80.0)]
+        [Row(k="a", ts=ts(4), value=40.0), Row(k="a", ts=ts(6), value=60.0), Row(k="a", ts=ts(8), value=80.0)]
     )
-    out = {r["lid"]: r for r in asof.asof_join_forward(left, right, ["k"], payload_cols=["v"]).collect()}
-    assert out[1]["v"] == 60.0 and out[1]["asof_ts"] == ts(6)  # earliest at-or-after
-    assert out[2]["v"] == 40.0  # >= semantics: equal timestamps match
-    assert out[3]["v"] is None  # nothing after ts(9)
+    out = {r["lid"]: r for r in asof.asof_join_forward(left, right, ["k"]).collect()}
+    assert out[1]["value"] == 60.0 and out[1]["asof_ts"] == ts(6)  # earliest at-or-after
+    assert out[2]["value"] == 40.0  # >= semantics: equal timestamps match
+    assert out[3]["value"] is None  # nothing after ts(9)
 
 
 def test_asof_forward_tolerance_and_tiebreak(spark):
     left = spark.createDataFrame([Row(k="a", ts=ts(0), lid=1), Row(k="a", ts=ts(5), lid=2)])
     right = spark.createDataFrame(
-        [Row(k="a", ts=ts(6), v=3.0), Row(k="a", ts=ts(6), v=9.0), Row(k="a", ts=ts(20), v=1.0)]
+        [Row(k="a", ts=ts(6), value=3.0), Row(k="a", ts=ts(6), value=9.0), Row(k="a", ts=ts(20), value=1.0)]
     )
-    out = {
-        r["lid"]: r
-        for r in asof.asof_join_forward(
-            left, right, ["k"], payload_cols=["v"], tolerance_seconds=2 * 3600, tiebreak="v"
-        ).collect()
-    }
-    assert out[1]["v"] is None  # 6h ahead > 2h tolerance
-    assert out[2]["v"] == 9.0  # duplicate-ts right rows: largest tiebreak wins
+    out = {r["lid"]: r for r in asof.asof_join_forward(left, right, ["k"]).collect()}
+    assert out[1]["value"] is None  # 6h ahead > 2h tolerance
+    assert out[2]["value"] == 9.0  # duplicate-ts right rows: largest value wins
 
 
 def test_asof_tiebreak_outside_payload_cols(spark):
-    """The tiebreak may name ANY right-side column — including one that is
-    not in payload_cols (and the right timestamp itself): it must be
-    carried through the internal projection, both directions."""
-    left = spark.createDataFrame([Row(k="a", ts=ts(5), lid=1)])
+    """The nearest join's tiebreak ``event_id`` is not its payload column:
+    it must be carried through the internal projection, both directions."""
+    left = spark.createDataFrame([Row(k="a", ts=ts(5), lid=1), Row(k="a", ts=ts(5.5), lid=2)])
     right = spark.createDataFrame(
         [
-            Row(k="a", ts=ts(4), v=1.0, seq=2),
-            Row(k="a", ts=ts(4), v=9.0, seq=1),
-            Row(k="a", ts=ts(6), v=3.0, seq=4),
-            Row(k="a", ts=ts(6), v=7.0, seq=3),
+            Row(k="a", ts=ts(4), click_value=1.0, event_id=2),
+            Row(k="a", ts=ts(4), click_value=9.0, event_id=1),
+            Row(k="a", ts=ts(6), click_value=3.0, event_id=4),
+            Row(k="a", ts=ts(6), click_value=7.0, event_id=3),
         ]
     )
-    back = asof.asof_join_backward(left, right, ["k"], payload_cols=["v"], tiebreak="seq").collect()
-    assert back[0]["v"] == 1.0  # seq=2 is the LARGEST at ts(4)
-    fwd = asof.asof_join_forward(left, right, ["k"], payload_cols=["v"], tiebreak="seq").collect()
-    assert fwd[0]["v"] == 3.0  # seq=4 is the LARGEST at ts(6)
-    # tiebreak == the right timestamp column degenerates gracefully
-    back2 = asof.asof_join_backward(left, right, ["k"], payload_cols=["v"], tiebreak="ts").collect()
-    assert back2[0]["asof_ts"] == ts(4)
+    out = {r["lid"]: r for r in asof.asof_join_nearest(left, right, ["k"]).collect()}
+    assert out[1]["asof_direction"] == "backward"
+    assert out[1]["click_value"] == 1.0  # event_id=2 is the LARGEST at ts(4)
+    assert out[2]["asof_direction"] == "forward"
+    assert out[2]["click_value"] == 3.0  # event_id=4 is the LARGEST at ts(6)
 
 
 def test_asof_matched_row_carried_atomically(spark):
@@ -197,24 +182,22 @@ def test_asof_matched_row_carried_atomically(spark):
     every payload column comes from the same right row."""
     left = spark.createDataFrame([Row(k="a", ts=ts(1), lid=1)])
     right = spark.createDataFrame(
-        [Row(k="a", ts=ts(2), v=None, u=10.0), Row(k="a", ts=ts(3), v=99.0, u=20.0)],
-        "k string, ts timestamp, v double, u double",
+        [Row(k="a", ts=ts(2), value=None), Row(k="a", ts=ts(3), value=99.0)],
+        "k string, ts timestamp, value double",
     )
-    fwd = asof.asof_join_forward(
-        left, right, ["k"], payload_cols=["v", "u"], tolerance_seconds=2 * 3600
-    ).collect()
-    assert fwd[0]["asof_ts"] == ts(2) and fwd[0]["u"] == 10.0
-    assert fwd[0]["v"] is None  # matched row's NULL, not ts(3)'s 99.0
+    fwd = asof.asof_join_forward(left, right, ["k"]).collect()
+    assert fwd[0]["asof_ts"] == ts(2)
+    assert fwd[0]["value"] is None  # matched row's NULL, not ts(3)'s 99.0
 
     # mirror: backward must not let a NULL fall through to an OLDER row
     left_b = spark.createDataFrame([Row(k="a", ts=ts(9), lid=1)])
     right_b = spark.createDataFrame(
-        [Row(k="a", ts=ts(2), v=77.0, u=1.0), Row(k="a", ts=ts(8), v=None, u=2.0)],
-        "k string, ts timestamp, v double, u double",
+        [Row(k="a", ts=ts(2), value=77.0), Row(k="a", ts=ts(8), value=None)],
+        "k string, ts timestamp, value double",
     )
-    back = asof.asof_join_backward(left_b, right_b, ["k"], payload_cols=["v", "u"]).collect()
-    assert back[0]["asof_ts"] == ts(8) and back[0]["u"] == 2.0
-    assert back[0]["v"] is None  # matched row's NULL, not ts(2)'s 77.0
+    back = asof.asof_join_backward(left_b, right_b, ["k"]).collect()
+    assert back[0]["asof_ts"] == ts(8)
+    assert back[0]["value"] is None  # matched row's NULL, not ts(2)'s 77.0
 
 
 def test_auto_n_bits_growth_law():
@@ -224,9 +207,9 @@ def test_auto_n_bits_growth_law():
     for n in (100, 500, 4_096, 1_000_000, 3_141_592):
         assert similarity.auto_n_bits(2 * n) == similarity.auto_n_bits(n) + 1
     # anchor absolute values: n/target at a power of two
-    assert similarity.auto_n_bits(64 * 32, target_bucket=32) == 6
-    assert similarity.auto_n_bits(128 * 32, target_bucket=32) == 7
-    assert similarity.auto_n_bits(1, target_bucket=32) == 1  # floor
+    assert similarity.auto_n_bits(64 * 32) == 6
+    assert similarity.auto_n_bits(128 * 32) == 7
+    assert similarity.auto_n_bits(1) == 1  # floor
 
 
 def test_rp_lsh_auto_bits_recall_and_plan(spark):
@@ -254,56 +237,54 @@ def test_rp_lsh_auto_bits_recall_and_plan(spark):
 def test_asof_nearest_directions_ties_tolerance(spark):
     left = spark.createDataFrame(
         [
-            Row(k="a", ts=ts(5), lid=1),   # 1h back vs 5h fwd -> backward ts(4)
-            Row(k="a", ts=ts(7), lid=2),   # equidistant ts(4)/ts(10) -> backward wins tie
-            Row(k="a", ts=ts(9), lid=3),   # ts(10) fwd (1h) beats ts(4) back (5h)
-            Row(k="a", ts=ts(20), lid=4),  # nearest ts(10) is 10h away -> beyond tolerance
-            Row(k="b", ts=ts(1), lid=5),   # no right rows for key b at all
+            Row(k="a", ts=ts(4.5), lid=1),  # 0.5h back vs 2.5h fwd -> backward ts(4)
+            Row(k="a", ts=ts(5.5), lid=2),  # equidistant ts(4)/ts(7) -> backward wins tie
+            Row(k="a", ts=ts(6.5), lid=3),  # ts(7) fwd (0.5h) beats ts(4) back (2.5h)
+            Row(k="a", ts=ts(20), lid=4),   # nearest ts(7) is 13h away -> beyond 2h tolerance
+            Row(k="b", ts=ts(1), lid=5),    # no right rows for key b at all
         ]
     )
-    right = spark.createDataFrame([Row(k="a", ts=ts(4), v=40.0), Row(k="a", ts=ts(10), v=100.0)])
-    out = {
-        r["lid"]: r
-        for r in asof.asof_join_nearest(
-            left, right, ["k"], payload_cols=["v"], tolerance_seconds=6 * 3600
-        ).collect()
-    }
-    assert out[1]["v"] == 40.0 and out[1]["asof_direction"] == "backward"
-    assert out[2]["v"] == 40.0 and out[2]["asof_direction"] == "backward"  # tie -> backward
-    assert out[3]["v"] == 100.0 and out[3]["asof_direction"] == "forward"
-    assert out[4]["v"] is None and out[4]["asof_direction"] is None
-    assert out[5]["v"] is None
-
-    # duplicate-ts right rows: largest tiebreak wins in BOTH directions
-    right2 = spark.createDataFrame(
-        [Row(k="a", ts=ts(4), v=1.0), Row(k="a", ts=ts(4), v=9.0),
-         Row(k="a", ts=ts(10), v=2.0), Row(k="a", ts=ts(10), v=8.0)]
+    right = spark.createDataFrame(
+        [Row(k="a", ts=ts(4), click_value=40.0, event_id=1), Row(k="a", ts=ts(7), click_value=100.0, event_id=2)]
     )
-    out2 = {
-        r["lid"]: r
-        for r in asof.asof_join_nearest(left, right2, ["k"], payload_cols=["v"], tiebreak="v").collect()
-    }
-    assert out2[1]["v"] == 9.0   # backward ts(4): largest v
-    assert out2[3]["v"] == 8.0   # forward ts(10): largest v
-    assert out2[4]["v"] == 8.0   # no tolerance -> ts(10) nearest
+    out = {r["lid"]: r for r in asof.asof_join_nearest(left, right, ["k"]).collect()}
+    assert out[1]["click_value"] == 40.0 and out[1]["asof_direction"] == "backward"
+    assert out[2]["click_value"] == 40.0 and out[2]["asof_direction"] == "backward"  # tie -> backward
+    assert out[3]["click_value"] == 100.0 and out[3]["asof_direction"] == "forward"
+    assert out[4]["click_value"] is None and out[4]["asof_direction"] is None
+    assert out[5]["click_value"] is None
+
+    # duplicate-ts right rows: largest event_id wins in BOTH directions
+    right2 = spark.createDataFrame(
+        [Row(k="a", ts=ts(4), click_value=1.0, event_id=1), Row(k="a", ts=ts(4), click_value=9.0, event_id=2),
+         Row(k="a", ts=ts(7), click_value=2.0, event_id=3), Row(k="a", ts=ts(7), click_value=8.0, event_id=4)]
+    )
+    out2 = {r["lid"]: r for r in asof.asof_join_nearest(left, right2, ["k"]).collect()}
+    assert out2[1]["click_value"] == 9.0   # backward ts(4): largest event_id
+    assert out2[3]["click_value"] == 8.0   # forward ts(7): largest event_id
 
     # equal-ts left/right: distance 0, resolves backward
     left0 = spark.createDataFrame([Row(k="a", ts=ts(4), lid=9)])
-    o0 = asof.asof_join_nearest(left0, right, ["k"], payload_cols=["v"]).collect()[0]
-    assert o0["v"] == 40.0 and o0["asof_direction"] == "backward"
+    o0 = asof.asof_join_nearest(left0, right, ["k"]).collect()[0]
+    assert o0["click_value"] == 40.0 and o0["asof_direction"] == "backward"
 
 
 def test_lsh_wrapper_forwards_bucket_controls(spark):
-    """cosine_neardup_pairs_lsh must pass max_bucket through to the
-    banded layer: a max_bucket that quarantines every bucket leaves no
-    candidate pairs, while the default keeps the full verified set."""
+    """cosine_neardup_pairs_lsh must pass its bucket controls (n_bits,
+    n_bands) through to the banded layer: its pairs are a verified subset
+    of rp_lsh_candidate_pairs at the same controls, and a narrow config
+    (16 bits, one band) keeps fewer pairs than the default 4 x 32."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    none_left = similarity.cosine_neardup_pairs_lsh(
-        emb, threshold=0.45, n_bits=4, max_bucket=0
-    )
-    assert none_left.count() == 0
-    full = similarity.cosine_neardup_pairs_lsh(emb, threshold=0.45, n_bits=4)
-    assert full.count() > 0
+    narrow = {
+        (r["id_a"], r["id_b"])
+        for r in similarity.cosine_neardup_pairs_lsh(emb, threshold=0.45, n_bits=16, n_bands=1).collect()
+    }
+    cand = {
+        (r["id_a"], r["id_b"])
+        for r in similarity.rp_lsh_candidate_pairs(emb, n_bits=16, n_bands=1).collect()
+    }
+    assert narrow <= cand
+    assert len(narrow) < similarity.cosine_neardup_pairs_lsh(emb, threshold=0.45, n_bits=4).count()
 
 
 def test_asof_interp_brackets_edges_and_ties(spark):
@@ -322,17 +303,15 @@ def test_asof_interp_brackets_edges_and_ties(spark):
     )
     right = spark.createDataFrame(
         [
-            Row(k="a", ts=ts(0), v=10.0, rid=1),
-            Row(k="a", ts=ts(0), v=99.0, rid=2),  # duplicate ts: rid=2 wins
-            Row(k="a", ts=ts(4), v=50.0, rid=3),
-            Row(k="b", ts=ts(5), v=7.0, rid=4),
+            Row(k="a", ts=ts(0), v=10.0, event_id=1),
+            Row(k="a", ts=ts(0), v=99.0, event_id=2),  # duplicate ts: event_id=2 wins
+            Row(k="a", ts=ts(4), v=50.0, event_id=3),
+            Row(k="b", ts=ts(5), v=7.0, event_id=4),
         ]
     )
     out = {
         r["lid"]: r
-        for r in asof.asof_join_interp(
-            left, right, ["k"], value_col="v", tiebreak="rid"
-        ).collect()
+        for r in asof.asof_join_interp(left, right, ["k"], value_col="v").collect()
     }
     # lid 1: halfway between winner 99.0 at ts(0) and 50.0 at ts(4)
     assert out[1]["method"] == "interp"

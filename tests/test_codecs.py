@@ -305,7 +305,7 @@ def test_extract_audio_frames_operator(spark):
     assets = spark.createDataFrame(
         [Row(asset_id=1, data=bytearray(wav)), Row(asset_id=2, data=None)]
     )
-    rows = extract_audio_frames(assets, window_ms=100).collect()
+    rows = extract_audio_frames(assets).collect()
     assert {r["asset_id"] for r in rows} == {1}  # null payload -> no windows
     assert sorted((r["window_idx"], r["start_ms"], r["rms"]) for r in rows) == [
         (0, 0, 0.5),
@@ -329,7 +329,7 @@ def test_audio_activity_segments(spark):
     )
     segs = sorted(
         (r["asset_id"], r["start_ms"], r["end_ms"], r["n_windows"], r["mean_rms"])
-        for r in audio_activity_segments(assets, rms_threshold=0.05).collect()
+        for r in audio_activity_segments(assets).collect()
     )
     assert segs == [(1, 0, 200, 2, 0.5), (1, 300, 400, 1, 0.5)]
 
@@ -381,11 +381,11 @@ def test_image_neardup_pairs_operator(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in image_neardup_pairs(assets, max_hamming=6).collect()
+        for r in image_neardup_pairs(assets).collect()
     }
     assert pairs[(1, 2)] == 0
     assert (1, 3) in pairs and (2, 3) in pairs
-    assert all(h <= 6 for h in pairs.values())
+    assert all(h <= 3 for h in pairs.values())
     assert not any(4 in k or 5 in k for k in pairs)
 
 

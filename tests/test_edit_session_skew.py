@@ -56,14 +56,24 @@ def test_session_edit_rollback_save(spark):
 
 
 def test_session_save_as_new_series(spark):
+    """Save As (W8) is the plan's ``reversion_series`` step: the recorded
+    edits plus a re-keying op, upserted beside the original series."""
+    from h2outility_spark.operators import mutation, qc
+    from h2outility_spark.operators.catalog import derive_catalog
+    from h2outility_spark.plans import oplist
+
     store = dv_frame(spark)
     s = EditSession(store, KEYS)
     s.select_value_threshold(">", 100.0).interpolate()
-    new_store, catalog = s.save(store, new_keys={"QualityControlLevelID": 1})
+    plan = s.recorded_script() + [
+        {"op": "reversion_series", "args": {"new_keys": {"QualityControlLevelID": 1}}}
+    ]
+    edited = oplist.apply_plan(store, plan, keys=KEYS).drop(qc.SEL)
+    new_store = mutation.upsert(store, edited, keys=["ValueID", *KEYS])
     # W8 re-version: original 5 rows intact + 5 new QC-1 rows
     assert new_store.count() == 10
     assert new_store.filter(F.col("QualityControlLevelID") == 1).count() == 5
-    assert catalog.collect()[0]["QualityControlLevelID"] == 1
+    assert derive_catalog(edited, keys=KEYS).collect()[0]["QualityControlLevelID"] == 1
     s.close()
 
 
@@ -101,7 +111,7 @@ def test_salted_agg_matches_plain(spark):
     salted = {
         r["event_type"]: (r["n"], round(r["s"], 4))
         for r in skew.salted_agg(
-            ev, ["event_type"], {"n": ("count", "value"), "s": ("sum", "value")}, F.col("event_id"), 16
+            ev, ["event_type"], {"n": ("count", "value"), "s": ("sum", "value")}, F.col("event_id")
         ).collect()
     }
     assert plain == salted

@@ -61,7 +61,7 @@ def test_duplicated_spans_hand_computed(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=1, text=" ".join(doc1)), Row(doc_id=2, text=" ".join(doc2))]
     )
-    out = sorted(map(tuple, duplicated_spans(docs, window=16).collect()))
+    out = sorted(map(tuple, duplicated_spans(docs).collect()))
     assert out == [(1, 0, 16, 16), (2, 5, 21, 16)]
 
 
@@ -77,7 +77,7 @@ def test_duplicated_spans_merges_overlapping_windows(spark):
             Row(doc_id=2, text=" ".join(["y"] + shared)),
         ]
     )
-    out = sorted(map(tuple, duplicated_spans(docs, window=16).collect()))
+    out = sorted(map(tuple, duplicated_spans(docs).collect()))
     assert out == [(1, 0, 18, 18), (2, 1, 19, 18)]
 
 

@@ -92,23 +92,24 @@ def test_plan_rejects_unknown_op(spark):
 
 
 def test_annotated_csv_roundtrip(spark, tmp_path):
-    df = tiny_series(spark).select("ts", "value")
+    # the append path orders by (SiteID, obs_date): the export's chunk columns
+    df = tiny_series(spark).select(F.col("sid").alias("SiteID"), F.col("ts").alias("obs_date"), "value")
     header = csv_sink.build_annotated_header(
         site={"SiteCode": "S1"},
         variables=[{"VariableCode": "temp", "NoDataValue": -9999.0}],
         qc_level={"Code": "0"},
     )
     path = str(tmp_path / csv_sink.chunk_file_name("S1", "temp", "src", "0", 2024))
-    csv_sink.write_annotated_csv(df, path, header, order_by=["ts"])
+    csv_sink.write_annotated_csv(df, path, header, order_by=["obs_date"])
     lines = open(path).read().splitlines()
     assert lines[0].startswith("# Generated by")
     assert any("NoDataValue=-9999" in ln for ln in lines)
     assert sum(1 for ln in lines if not ln.startswith("#")) == 6  # header row + 5 data
 
     # S6 append + S10 watermark read-back
-    extra = spark.createDataFrame([Row(ts=T0 + timedelta(hours=9), value=1.0)])
-    csv_sink.append_csv(extra, path, order_by=["ts"])
-    wm = csv_sink.read_csv_watermark(spark, path, "ts")
+    extra = spark.createDataFrame([Row(SiteID=1, obs_date=T0 + timedelta(hours=9), value=1.0)])
+    csv_sink.append_csv(extra, path)
+    wm = csv_sink.read_csv_watermark(spark, path, "obs_date")
     assert wm == T0 + timedelta(hours=9)
 
 
@@ -146,15 +147,11 @@ def test_upsert_newest_wins(spark):
     out = mutation.upsert(target, updates, keys=["k"])
     got = {r["k"]: r["v"] for r in out.collect()}
     assert got == {1: "new", 2: "keep", 3: "ins"}
-    # windowed form with version ordering
-    out2 = mutation.upsert(target, updates, keys=["k"], order_col="ver")
-    got2 = {r["k"]: r["v"] for r in out2.collect()}
-    assert got2 == {1: "new", 2: "keep", 3: "ins"}
 
 
 def test_delete_and_dedup(spark):
-    dup = spark.createDataFrame([Row(DataValue=1.0, LocalDateTime=T0, SiteID=1)] * 3)
-    assert mutation.drop_logical_duplicates(dup).count() == 1
+    dup = spark.createDataFrame([Row(event_id=1, value=1.0)] * 3 + [Row(event_id=2, value=1.0)])
+    assert mutation.drop_logical_duplicates(dup).count() == 2
 
 
 def test_multimodal_feature_extraction(spark):
@@ -177,7 +174,7 @@ def test_frame_sample_plan(spark):
     assets = spark.createDataFrame(
         [Row(asset_id=1, data=bytearray(b"x"), mime="video/mp4", meta={"n_frames": "95"})]
     )
-    plan = multimodal.frame_sample_plan(assets, every_n=30)
+    plan = multimodal.frame_sample_plan(assets)
     assert [r["frame_index"] for r in plan.collect()] == [0, 30, 60, 90]
 
 
@@ -209,16 +206,16 @@ def test_resize_images(spark):
 def test_audio_chunk_plan(spark):
     assets = spark.createDataFrame(
         [
-            (1, None, "audio/wav", {"duration_ms": "25000"}),
+            (1, None, "audio/wav", {"duration_ms": "5000"}),
             (2, None, "audio/wav", {}),
         ],
         "asset_id long, data binary, mime string, meta map<string,string>",
     )
-    plan = multimodal.audio_chunk_plan(assets, chunk_ms=10_000)
+    plan = multimodal.audio_chunk_plan(assets)
     got = {}
     for r in plan.collect():
         got.setdefault(r["asset_id"], []).append(r["chunk_start_ms"])
-    assert got[1] == [0, 10_000, 20_000]
+    assert got[1] == [0, 2_000, 4_000]
     assert got[2] == [0]  # zero-duration degenerates to one chunk at 0
 
 

@@ -66,27 +66,22 @@ asof_strategy = st.tuples(
 @given(asof_strategy)
 def test_asof_join_matches_bruteforce(spark, data):
     """asof_join_backward(union-sort-carry) == the brute-force definition:
-    for each left row, the payload of the newest right row with
-    right.ts <= left.ts (ties on right.ts resolved to the LAST right row
-    in (ts, payload) order, matching the window's carry rule)."""
+    for each left row, the value of the newest right row with
+    right.ts <= left.ts. Backward has no tiebreak, so the right side keeps
+    one row per timestamp."""
     left_hours, right_rows = data
     left = spark.createDataFrame(
         [Row(k="a", ts=T0 + timedelta(hours=h), lid=i) for i, h in enumerate(left_hours)]
     )
-    right_sorted = sorted(right_rows, key=lambda r: (r[0], r[1]))
+    right_sorted = sorted(dict(right_rows).items())
     if right_rows:
         right = spark.createDataFrame(
-            [Row(k="a", ts=T0 + timedelta(hours=h), v=float(v)) for h, v in right_sorted]
+            [Row(k="a", ts=T0 + timedelta(hours=h), value=float(v)) for h, v in right_sorted]
         )
     else:
-        right = spark.createDataFrame([], "k string, ts timestamp, v double")
+        right = spark.createDataFrame([], "k string, ts timestamp, value double")
 
-    out = {
-        r["lid"]: r["v"]
-        for r in asof.asof_join_backward(
-            left, right, ["k"], payload_cols=["v"], tiebreak="v"
-        ).collect()
-    }
+    out = {r["lid"]: r["value"] for r in asof.asof_join_backward(left, right, ["k"]).collect()}
 
     for i, h in enumerate(left_hours):
         eligible = [(rh, rv) for rh, rv in right_sorted if rh <= h]
@@ -98,8 +93,8 @@ def test_asof_join_matches_bruteforce(spark, data):
 @given(asof_strategy)
 def test_asof_forward_matches_bruteforce(spark, data):
     """asof_join_forward == the brute-force definition: for each left row,
-    the payload of the OLDEST right row with right.ts >= left.ts (ties on
-    right.ts resolved to the LARGEST tiebreak, mirroring backward)."""
+    the value of the OLDEST right row with 0 <= right.ts - left.ts <= 2h
+    (ties on right.ts resolved to the LARGEST value)."""
     from h2outility_spark.operators.asof import asof_join_forward
 
     left_hours, right_rows = data
@@ -109,20 +104,15 @@ def test_asof_forward_matches_bruteforce(spark, data):
     right_sorted = sorted(right_rows, key=lambda r: (r[0], r[1]))
     if right_rows:
         right = spark.createDataFrame(
-            [Row(k="a", ts=T0 + timedelta(hours=h), v=float(v)) for h, v in right_sorted]
+            [Row(k="a", ts=T0 + timedelta(hours=h), value=float(v)) for h, v in right_sorted]
         )
     else:
-        right = spark.createDataFrame([], "k string, ts timestamp, v double")
+        right = spark.createDataFrame([], "k string, ts timestamp, value double")
 
-    out = {
-        r["lid"]: r["v"]
-        for r in asof_join_forward(
-            left, right, ["k"], payload_cols=["v"], tiebreak="v"
-        ).collect()
-    }
+    out = {r["lid"]: r["value"] for r in asof_join_forward(left, right, ["k"]).collect()}
 
     for i, h in enumerate(left_hours):
-        eligible = [(rh, rv) for rh, rv in right_sorted if rh >= h]
+        eligible = [(rh, rv) for rh, rv in right_sorted if h <= rh <= h + 2]
         if eligible:
             first_h = eligible[0][0]
             # largest payload among the earliest eligible hour wins
@@ -133,12 +123,12 @@ def test_asof_forward_matches_bruteforce(spark, data):
 
 
 @settings(max_examples=15, deadline=None)
-@given(asof_strategy, st.one_of(st.none(), st.integers(min_value=1, max_value=8)))
-def test_asof_nearest_matches_bruteforce(spark, data, tol_hours):
+@given(asof_strategy)
+def test_asof_nearest_matches_bruteforce(spark, data):
     """asof_join_nearest == the brute-force definition: for each left row,
-    the right row minimizing |right.ts − left.ts| (within tolerance when
-    given), an equidistant backward/forward pair resolved BACKWARD, and
-    duplicate-ts right rows resolved to the LARGEST tiebreak."""
+    the right row minimizing |right.ts − left.ts| within 2 hours, an
+    equidistant backward/forward pair resolved BACKWARD, and duplicate-ts
+    right rows resolved to the LARGEST event_id (here equal to the value)."""
     from h2outility_spark.operators.asof import asof_join_nearest
 
     left_hours, right_rows = data
@@ -148,25 +138,18 @@ def test_asof_nearest_matches_bruteforce(spark, data, tol_hours):
     right_sorted = sorted(right_rows, key=lambda r: (r[0], r[1]))
     if right_rows:
         right = spark.createDataFrame(
-            [Row(k="a", ts=T0 + timedelta(hours=h), v=float(v)) for h, v in right_sorted]
+            [Row(k="a", ts=T0 + timedelta(hours=h), click_value=float(v), event_id=v) for h, v in right_sorted]
         )
     else:
-        right = spark.createDataFrame([], "k string, ts timestamp, v double")
+        right = spark.createDataFrame([], "k string, ts timestamp, click_value double, event_id long")
 
-    tol = None if tol_hours is None else tol_hours * 3600
     out = {
-        r["lid"]: (r["v"], r["asof_direction"])
-        for r in asof_join_nearest(
-            left, right, ["k"], payload_cols=["v"], tolerance_seconds=tol, tiebreak="v"
-        ).collect()
+        r["lid"]: (r["click_value"], r["asof_direction"])
+        for r in asof_join_nearest(left, right, ["k"]).collect()
     }
 
     for i, h in enumerate(left_hours):
-        eligible = [
-            (rh, rv)
-            for rh, rv in right_sorted
-            if tol_hours is None or abs(rh - h) <= tol_hours
-        ]
+        eligible = [(rh, rv) for rh, rv in right_sorted if abs(rh - h) <= 2]
         if not eligible:
             assert out[i] == (None, None), f"left hour {h}: {out[i]}"
             continue

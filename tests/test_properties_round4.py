@@ -72,12 +72,12 @@ def segment_of_clean(clean_text, original_words, segment_of):
 @settings(max_examples=10, deadline=None)
 @given(corpus)
 def test_fixed_segment_dedup_invariants(spark, docs):
-    k = 4
+    k = 8
 
     def segment_of(words):
         return [" ".join(words[i : i + k]) for i in range(0, len(words), k)]
 
-    out_rows = segment_dedup(_df(spark, docs), k=k).collect()
+    out_rows = segment_dedup(_df(spark, docs)).collect()
     _check_dedup_invariants(docs, out_rows, segment_of)
 
 
@@ -116,13 +116,14 @@ def test_pq_encode_total_and_in_range(spark, vecs):
     labels = [i % 2 for i in range(len(vecs))]
     emb = spark.createDataFrame(
         [
-            Row(vec_id=i, embedding=[float(x) for x in v], label=lab)
+            # each of the 8 drawn components repeated 8 times: a 64-d vector
+            Row(vec_id=i, embedding=[float(x) for x in v for _ in range(8)], label=lab)
             for i, (v, lab) in enumerate(zip(vecs, labels))
         ]
     )
     m = 2
-    cbs = pq_codebooks(emb, m=m, dim=8)
-    codes = pq_encode(emb, cbs, m=m, dim=8).collect()
+    cbs = pq_codebooks(emb, m=m)
+    codes = pq_encode(emb, cbs, m=m).collect()
     # total: exactly one code per (vector, subspace); codes are valid labels
     seen = {(r["vec_id"], r["s"]) for r in codes}
     assert seen == {(i, s) for i in range(len(vecs)) for s in range(m)}

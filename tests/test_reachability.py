@@ -12,16 +12,29 @@ module-level code of every non-test file until it finds nothing new.
 Unreached definitions fail the test unless ``KEEP`` names them with the
 reason they stay.
 
-The same holds for options: a defaulted parameter of a package function
-(or a defaulted dataclass field) is set if a call in a non-test file passes
-it, by keyword or by position. A call that passes ``*args`` or ``**kwargs``
-sets every parameter of its callee. Calls resolve by bare name, a class name
-to its ``__init__`` and ``super().__init__`` to the bases' ``__init__``. An
-option no entry point sets is a constant: make it one, or name it in
-``KEEP_PARAMS`` with the reason it stays. Outside input is
-exempt: the QC ops in ``plans/oplist.OPS`` and the ``EditSession`` methods
-that record them (a plan JSON sets their arguments), ``OUTSIDE_INPUT``, and
-the definitions that only ``KEEP`` keeps (no entry point calls them).
+The same holds for options, counted by value. Across the calls in non-test
+files, a defaulted parameter of a package function (or a defaulted
+dataclass field) takes the literal a call passes (``ast.literal_eval``), by
+keyword or by position, and its default at each call that omits it. It is
+set only when it takes two or more distinct values. A non-literal argument
+(a name, an expression) can take any value, so it sets the parameter, and a
+call that passes ``*args`` or ``**kwargs`` sets every parameter of its
+callee. Calls resolve by bare name, a class name to its ``__init__`` and
+``super().__init__`` to the bases' ``__init__``. An option with one value in
+use is a constant: write that value into the body, or name the option in
+``KEEP_PARAMS`` with the reason it stays. The accepted reasons: a test
+substitutes a fake codec; a test lowers a threshold so fixture-scale data
+takes the large-input path; the test session sets ``shuffle_partitions``;
+``encode_jpeg``'s options generate inputs the decoder must accept from
+outside; ``perfbench/`` passes it. "Only a test sets it" is not a reason.
+Outside input is exempt: the QC ops in ``plans/oplist.OPS`` and the
+``EditSession`` methods that record them (a plan JSON sets their
+arguments), ``OUTSIDE_INPUT``, and the definitions that only ``KEEP`` keeps
+(no entry point calls them).
+
+Every module of the package (but ``__init__.py``), ``scripts/``,
+``bench.py`` and ``__spark_entry__.py`` reads each name it imports; an
+import kept for its side effect is marked ``# noqa: F401``.
 
 AST only; no Spark.
 """
@@ -180,31 +193,20 @@ def test_keep_list_is_tight():
 
 # --- options -----------------------------------------------------------------
 
-_TEST_ONLY = "test-only behaviour: no entry point sets it, a test does"
 _FAKE = "a test substitutes a fake for the real codec"
 _THRESHOLD = "a test lowers the threshold so fixture-scale data takes the large-input path"
+_JPEG = "generates the 4:2:0 and restart-marker inputs that the decoder must accept from outside"
 KEEP_PARAMS = {
     "operators.multimodal.extract_image_features.decode_fn": _FAKE,
     "operators.multimodal.resize_images.resize_fn": _FAKE,
     "operators.ivm.maintain_grouped_minmax.max_broadcast_keys": _THRESHOLD,
     "storage_tx.TxTable.compact_files.target_bytes": _THRESHOLD,
-    "operators.dedup.lsh_candidate_pairs.max_bucket": _TEST_ONLY,
-    "operators.similarity.cosine_neardup_pairs_lsh.max_bucket": _TEST_ONLY,
-    "operators.dedup.winnow_neardup_pairs.max_bucket": _TEST_ONLY,
-    "operators.asof.asof_join_backward.tolerance_seconds": _TEST_ONLY,
-    "operators.asof.asof_join_backward.tiebreak": _TEST_ONLY,
-    "codecs.encode_jpeg.quality": _TEST_ONLY,
-    "codecs.encode_jpeg.subsampling": _TEST_ONLY,
-    "codecs.encode_jpeg.restart_interval": _TEST_ONLY,
-    "operators.similarity.pq_search.dim": _TEST_ONLY,
-    "operators.mutation.upsert.order_col": _TEST_ONLY,
-    "operators.multimodal.image_neardup_pairs.id_col": _TEST_ONLY,
-    "operators.text.pack_sequences.n_shards": _TEST_ONLY,
-    "storage_tx.TxTable.scan.version": _TEST_ONLY,
-    "storage_tx.TxTable.clone.version": _TEST_ONLY,
-    "storage_tx.TxTable.describe.version": _TEST_ONLY,
-    "edit_session.EditSession.save.new_keys": _TEST_ONLY,
+    "codecs.encode_jpeg.quality": _JPEG,
+    "codecs.encode_jpeg.subsampling": _JPEG,
+    "codecs.encode_jpeg.restart_interval": _JPEG,
     "session.get_spark.shuffle_partitions": "the test session (tests/conftest.py) sets it",
+    "sinks.csv_sink.write_annotated_chunks_distributed.chunk_col":
+        "perfbench/workloads.py passes it by position, so it cannot become a constant there",
 }
 
 _DEPLOYMENT = "a deployment setting of the HydroShare endpoint"
@@ -216,12 +218,12 @@ OUTSIDE_INPUT = {
 }
 
 
-def _defaults(fn: ast.FunctionDef) -> tuple[list[str], set[str]]:
-    """(positional parameter names, defaulted parameter names)."""
+def _defaults(fn: ast.FunctionDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """(positional parameter names, {defaulted parameter name: its default})."""
     a = fn.args
     pos = [p.arg for p in a.posonlyargs + a.args]
-    kwonly = {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
-    return pos, set(pos[len(pos) - len(a.defaults):]) | kwonly
+    kwonly = {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    return pos, dict(zip(pos[len(pos) - len(a.defaults):], a.defaults)) | kwonly
 
 
 def _ops_and_recorders() -> set[str]:
@@ -243,10 +245,10 @@ def _is_dataclass(cls: ast.ClassDef) -> bool:
     return any(getattr(d, "id", None) == "dataclass" for d in cls.decorator_list)
 
 
-def _dataclass_fields(cls: ast.ClassDef) -> tuple[list[str], set[str]]:
+def _dataclass_fields(cls: ast.ClassDef) -> tuple[list[str], dict[str, ast.expr]]:
     """A dataclass's fields are the parameters of its generated ``__init__``."""
     fields = [s for s in cls.body if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)]
-    return [f.target.id for f in fields], {f.target.id for f in fields if f.value is not None}
+    return [f.target.id for f in fields], {f.target.id: f.value for f in fields if f.value is not None}
 
 
 @functools.cache
@@ -255,7 +257,7 @@ def _options():
 
     A class name indexes its ``__init__`` (a dataclass: its fields, under the class key).
     """
-    funcs: dict[str, tuple[list[str], set[str], int]] = {}
+    funcs: dict[str, tuple[list[str], dict[str, ast.expr], int]] = {}
     by_name: dict[str, list[str]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
         mod = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
@@ -294,20 +296,36 @@ def _calls(tree: ast.AST):
             yield [getattr(f, "id", None) or getattr(f, "attr", None)], call
 
 
+_ANY = object()  # what a non-literal argument passes: any value
+
+
+def _literal(node: ast.AST) -> str | None:
+    """repr of the literal ``node`` spells; None when it is not a literal."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+
+
 def _set_options() -> set[str]:
-    """``function.parameter`` for every option some non-test call sets."""
+    """``function.parameter`` for every option that takes two or more values across non-test calls."""
     funcs, by_name = _options()
-    out = set()
+    values: dict[str, set] = {}
     for path in _entry_files():
         for names, call in _calls(ast.parse(path.read_text(), str(path))):
             for key in (k for n in names for k in by_name.get(n, [])):
                 pos, defaults, offset = funcs[key]
-                if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
-                    out |= {f"{key}.{p}" for p in defaults}
-                    continue
-                passed = pos[offset:offset + len(call.args)] + [k.arg for k in call.keywords]
-                out |= {f"{key}.{p}" for p in passed if p in defaults}
-    return out
+                star = any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords)
+                passed = dict(zip(pos[offset:], call.args)) | {k.arg: k.value for k in call.keywords}
+                for p, default in defaults.items():
+                    if star:
+                        v = _ANY
+                    elif p in passed:
+                        v = _literal(passed[p]) or _ANY
+                    else:  # a non-literal default is one value of its own
+                        v = _literal(default) or ast.unparse(default)
+                    values.setdefault(f"{key}.{p}", set()).add(v)
+    return {p for p, vs in values.items() if _ANY in vs or len(vs) > 1}
 
 
 @functools.cache
@@ -328,13 +346,47 @@ def unset_options(keep=KEEP_PARAMS) -> list[str]:
 def test_every_defaulted_parameter_is_set_or_kept():
     unset = unset_options()
     assert not unset, (
-        f"{len(unset)} defaulted parameters that no entry point passes (make each a "
-        f"constant, or add it to KEEP_PARAMS with a reason): {unset}"
+        f"{len(unset)} defaulted parameters with one value in use across the entry points "
+        f"(make each a constant, or add it to KEEP_PARAMS with a reason): {unset}"
     )
 
 
 def test_parameter_keep_list_is_tight():
-    """Each KEEP_PARAMS entry names an option that exists and that no entry point sets."""
+    """Each KEEP_PARAMS entry names an option that exists and has one value in use."""
     unset = set(unset_options(keep={}))
     stale = sorted(p for p in KEEP_PARAMS if p not in unset)
     assert not stale, f"KEEP_PARAMS entries that an entry point sets, or that name nothing: {stale}"
+
+
+# --- imports -----------------------------------------------------------------
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """``path:line name`` for each imported name the module never reads."""
+    source = path.read_text()
+    tree = ast.parse(source, str(path))
+    lines = source.splitlines()
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+    # quoted annotations ("TxTable") name a class as a string
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            read.add(n.value)
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if re.search(r"#\s*noqa:[\w, ]*\bF401\b", lines[node.lineno - 1]):
+            continue
+        for alias in node.names:
+            bound = alias.asname or alias.name.split(".")[0]
+            if bound != "*" and bound not in read:
+                out.append(f"{path.relative_to(ROOT)}:{node.lineno} {bound}")
+    return out
+
+
+def test_no_unused_imports():
+    files = [f for f in _entry_files() if not f.is_relative_to(ROOT / "perfbench") and f.name != "__init__.py"]
+    unused = [u for f in files for u in _unused_imports(f)]
+    assert not unused, f"imported names that the module never reads: {unused}"

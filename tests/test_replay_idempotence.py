@@ -69,7 +69,7 @@ def _events(spark, *cols):
 
 def test_cms_grid_unchanged_by_replayed_batch(spark, tmp_path):
     state_dir = str(tmp_path / "state")
-    handle = make_cms_handler(spark, state_dir, key_col="user_id")
+    handle = make_cms_handler(spark, state_dir)
     ledger = BatchLedger(state_dir)
 
     ev = _events(spark, "user_id")
@@ -172,13 +172,13 @@ def test_cms_crash_at_marker_commit_then_replay(spark, tmp_path, monkeypatch):
     b1 = ev.filter(F.col("user_id") % 3 == 0)
 
     clean_dir = str(tmp_path / "clean")
-    clean = make_cms_handler(spark, clean_dir, key_col="user_id")
+    clean = make_cms_handler(spark, clean_dir)
     clean(b0, 0)
     clean(b1, 1)
     expected = _grid_rows(spark, cms_grid_path(clean_dir))
 
     state_dir = str(tmp_path / "state")
-    handle = make_cms_handler(spark, state_dir, key_col="user_id")
+    handle = make_cms_handler(spark, state_dir)
     ledger = BatchLedger(state_dir)
     handle(b0, 0)
     _crash_next_marker_commit(monkeypatch, state_dir)

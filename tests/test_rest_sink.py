@@ -110,10 +110,10 @@ def test_resource_lifecycle_upload_replace_delete(http_server):
 def test_post_json_partitions_distributed(spark, http_server):
     base, state = http_server
     df = spark.createDataFrame(
-        [(i, f"s{i % 3}", float(i)) for i in range(100)], "id int, site string, v double"
+        [(i, f"s{i % 3}", float(i)) for i in range(300)], "id int, site string, v double"
     ).repartition(4)
-    post_json_partitions(df, f"{base}/ingest", batch_size=30)
-    assert len(state.posted_rows) == 100
-    assert {r["id"] for r in state.posted_rows} == set(range(100))
-    # batching bounded each request payload: 4 partitions x ceil(25/30)
-    assert state.n_posts >= 4
+    post_json_partitions(df, f"{base}/ingest")
+    assert len(state.posted_rows) == 300
+    assert {r["id"] for r in state.posted_rows} == set(range(300))
+    # batching bounded each request payload: 4 partitions x ceil(75/50)
+    assert state.n_posts >= 8

@@ -83,7 +83,7 @@ def test_salted_fallback_matches_and_spreads_the_hot_key(spark):
     fact, _dim = _skewed_frames(spark)
     # the hot key occupies all 16 salt buckets (even spread proof)
     buckets = (
-        with_salt(fact.filter(F.col("k") == 0), F.col("row_id"), 16)
+        with_salt(fact.filter(F.col("k") == 0), F.col("row_id"))
         .groupBy("__salt")
         .count()
         .collect()

@@ -498,6 +498,8 @@ def test_clone_is_independent_and_survives_source_vacuum(spark, table, tmp_path)
     fork independently, and vacuuming the source does not break the clone
     (the shared inode lives until both sides drop it)."""
     table.append(kv(spark, [(1, "a"), (2, "b")]))
+    # a clone of the first version, taken before the source moves on
+    c0 = table.clone(str(tmp_path / "fork0"))
     table.merge_upsert(kv(spark, [(2, "B2")]))
 
     c = table.clone(str(tmp_path / "fork"))
@@ -509,8 +511,6 @@ def test_clone_is_independent_and_survives_source_vacuum(spark, table, tmp_path)
     assert (3, "fork-only") in rows_of(c.snapshot())
     assert (3, "fork-only") not in rows_of(table.snapshot())
 
-    # cloning a historical version works too (before vacuum ages it out)
-    c0 = table.clone(str(tmp_path / "fork0"), version=0)
     assert rows_of(c0.snapshot()) == [(1, "a"), (2, "b")]
 
     # source rewrites + vacuums everything it can; clones still read
@@ -619,8 +619,6 @@ def test_scan_prunes_files_from_manifest(spark, table):
     # empty overlap -> empty frame with the table schema
     empty = table.scan("k", 300, 400)
     assert empty.count() == 0 and empty.columns == ["k", "v"]
-    # time travel composes
-    assert rows_of(table.scan("k", 40, 70, version=0)) == []
 
 
 @pytest.mark.slow
@@ -657,8 +655,6 @@ def test_describe_health_snapshot(spark, table):
     d2 = table.describe()
     assert d2["n_files"] == 5 and d2["n_small_files"] == 1
     assert d2["small_file_fraction"] == 0.2
-    # historical describe composes with time travel
-    assert table.describe(version=0)["n_files"] == 1
 
 
 def test_empty_merge_is_a_noop_version(spark, table):
@@ -699,7 +695,8 @@ def test_ivm_maintain_handles_pure_deletes_and_new_keys(spark):
     from h2outility_spark.operators import ivm
 
     old = spark.createDataFrame(
-        [Row(k="gone", n=2, total=30), Row(k="stays", n=1, total=5), Row(k="grows", n=1, total=7)]
+        [Row(k="gone", n_orders=2, total_cents=30), Row(k="stays", n_orders=1, total_cents=5),
+         Row(k="grows", n_orders=1, total_cents=7)]
     )
     changes = spark.createDataFrame(
         [
@@ -713,7 +710,7 @@ def test_ivm_maintain_handles_pure_deletes_and_new_keys(spark):
         ]
     )
     out = {
-        r["k"]: (r["n"], r["total"])
+        r["k"]: (r["n_orders"], r["total_cents"])
         for r in ivm.maintain_grouped_agg(old, changes, ["k"], "v").collect()
     }
     assert out == {"stays": (1, 5), "grows": (2, 12), "new": (1, 100)}
@@ -736,7 +733,7 @@ def test_ivm_minmax_maintain_and_targeted_rescan(spark):
         + [Row(k="mask", v=x) for x in [1, 2, 3]]
         + [Row(k="hz", v=x) for x in [1, 2, 3]]
     )
-    old = ivm.minmax_state(base_before, ["k"], "v", k=2)
+    old = ivm.minmax_state(base_before, ["k"], "v")
     st = {r["k"]: r for r in old.collect()}
     assert list(st["a"]["kmin"]) == [1, 2] and list(st["a"]["kmax"]) == [9, 7]
     assert st["a"]["hmin"] == 2 and st["a"]["hmax"] == 7
@@ -777,7 +774,7 @@ def test_ivm_minmax_maintain_and_targeted_rescan(spark):
     )
     out = {
         r["k"]: r
-        for r in ivm.maintain_grouped_minmax(old, changes, base_after, ["k"], "v", k=2).collect()
+        for r in ivm.maintain_grouped_minmax(old, changes, base_after, ["k"], "v").collect()
     }
     # key a: kept-min survivors emptied -> rescan surfaces 5 (never kept)
     assert list(out["a"]["kmin"]) == [5, 7] and out["a"]["n"] == 3
@@ -811,7 +808,7 @@ def test_ivm_minmax_every_key_changed_shuffle_fallback(spark):
     base_before = spark.createDataFrame(
         [Row(k=f"k{i}", v=j) for i in range(20) for j in (1, 2, 3, 4)]
     )
-    old = ivm.minmax_state(base_before, ["k"], "v", k=2)
+    old = ivm.minmax_state(base_before, ["k"], "v")
     # delete every key's entire kept-min set -> every key rescans
     changes = spark.createDataFrame(
         [Row(k=f"k{i}", v=j, _change_type="delete") for i in range(20) for j in (1, 2)]
@@ -821,13 +818,13 @@ def test_ivm_minmax_every_key_changed_shuffle_fallback(spark):
     )
     expected = {
         (r["k"], tuple(r["kmin"]), tuple(r["kmax"]), r["n"])
-        for r in ivm.minmax_state(base_after, ["k"], "v", k=2).collect()
+        for r in ivm.minmax_state(base_after, ["k"], "v").collect()
     }
     for cap in (0, 100_000):  # shuffle fallback, then the broadcast path
         got = {
             (r["k"], tuple(r["kmin"]), tuple(r["kmax"]), r["n"])
             for r in ivm.maintain_grouped_minmax(
-                old, changes, base_after, ["k"], "v", k=2, max_broadcast_keys=cap
+                old, changes, base_after, ["k"], "v", max_broadcast_keys=cap
             ).collect()
         }
         assert got == expected, f"mismatch with max_broadcast_keys={cap}"
@@ -846,7 +843,7 @@ def test_ivm_minmax_key_count_hint_skips_the_eager_job(spark):
     base_before = spark.createDataFrame(
         [Row(k=f"k{i}", v=j) for i in range(4) for j in (1, 2, 3)]
     )
-    old = ivm.minmax_state(base_before, ["k"], "v", k=2)
+    old = ivm.minmax_state(base_before, ["k"], "v")
     changes = spark.createDataFrame(
         [Row(k="k0", v=0, _change_type="insert"), Row(k="k1", v=9, _change_type="insert")]
     )
@@ -858,12 +855,12 @@ def test_ivm_minmax_key_count_hint_skips_the_eager_job(spark):
     sc = spark.sparkContext
     expected = {
         (r["k"], tuple(r["kmin"]), tuple(r["kmax"]), r["n"])
-        for r in ivm.minmax_state(base_after, ["k"], "v", k=2).collect()
+        for r in ivm.minmax_state(base_after, ["k"], "v").collect()
     }
 
     # Without the hint the guard's count job runs at CALL time.
     sc.setJobGroup("ivm_nohint", "guard count probe")
-    ivm.maintain_grouped_minmax(old, changes, base_after, ["k"], "v", k=2)
+    ivm.maintain_grouped_minmax(old, changes, base_after, ["k"], "v")
     assert list(sc.statusTracker().getJobIdsForGroup("ivm_nohint")), (
         "expected the unhinted call to run its eager guard-count job"
     )
@@ -871,7 +868,7 @@ def test_ivm_minmax_key_count_hint_skips_the_eager_job(spark):
     # With the hint, building the plan must launch ZERO jobs...
     sc.setJobGroup("ivm_hinted", "hint probe")
     maintained = ivm.maintain_grouped_minmax(
-        old, changes, base_after, ["k"], "v", k=2, n_changed_keys=2
+        old, changes, base_after, ["k"], "v", n_changed_keys=2
     )
     assert sc.statusTracker().getJobIdsForGroup("ivm_hinted") == [], (
         "n_changed_keys hint must make maintain_grouped_minmax fully lazy"
@@ -1072,7 +1069,7 @@ def test_branch_conflicts_reports_only_both_touched(spark, table):
 
 
 def test_resolve_from_branch_prefer_main_keeps_ours_on_conflict(spark, table):
-    """Three-way resolution, prefer='main': conflicted keys keep main's
+    """Three-way resolution keeps ours: conflicted keys keep main's
     state; the branch's non-conflicting updates, inserts and deletes all
     land."""
     table.append(kv(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]))
@@ -1084,7 +1081,7 @@ def test_resolve_from_branch_prefer_main_keeps_ours_on_conflict(spark, table):
     br.merge_upsert(kv(spark, [(1, "br1"), (3, "br3"), (6, "br6")]))
     br.delete_keys(spark.createDataFrame([(2,), (5,)], "k int"))
 
-    table.resolve_from_branch(br, since_self=fork_v, prefer="main", propagate_deletes=True)
+    table.resolve_from_branch(br, since_self=fork_v)
     assert rows_of(table.snapshot()) == [
         (1, "main1"),  # conflict: ours wins
         (2, "main2"),  # conflict (branch deleted, main updated): ours wins
@@ -1092,33 +1089,3 @@ def test_resolve_from_branch_prefer_main_keeps_ours_on_conflict(spark, table):
         (4, "d"),      # untouched
         (6, "br6"),    # branch-only insert lands
     ]  # 5: branch-only delete propagated
-
-
-def test_resolve_from_branch_prefer_branch_delegates_to_merge(spark, table):
-    table.append(kv(spark, [(1, "a"), (2, "b"), (3, "c")]))
-    fork_v = table.latest_version()
-    br = table.branch("exp")
-    table.merge_upsert(kv(spark, [(1, "main1")]))
-    br.merge_upsert(kv(spark, [(1, "br1")]))
-    br.delete_keys(spark.createDataFrame([(3,)], "k int"))
-    table.resolve_from_branch(br, since_self=fork_v, prefer="branch", propagate_deletes=True)
-    assert rows_of(table.snapshot()) == [(1, "br1"), (2, "b")]
-
-
-def test_resolve_from_branch_no_deletes_by_default(spark, table):
-    """propagate_deletes defaults False — the same default as
-    merge_from_branch, so the two entry points agree on whether a branch
-    delete destroys main's rows."""
-    table.append(kv(spark, [(1, "a"), (2, "b")]))
-    fork_v = table.latest_version()
-    br = table.branch("exp")
-    br.delete_keys(spark.createDataFrame([(2,)], "k int"))
-    table.resolve_from_branch(br, since_self=fork_v, prefer="main")
-    assert rows_of(table.snapshot()) == [(1, "a"), (2, "b")]
-
-
-def test_resolve_from_branch_rejects_unknown_policy(spark, table):
-    table.append(kv(spark, [(1, "a")]))
-    br = table.branch("exp")
-    with pytest.raises(ValueError, match="prefer"):
-        table.resolve_from_branch(br, since_self=0, prefer="newest")

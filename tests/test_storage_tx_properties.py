@@ -113,7 +113,7 @@ def test_ivm_minmax_matches_recompute_on_random_batches(spark, data):
         after.remove(d)
     after = after + inserts
 
-    old = ivm.minmax_state(df_of(spark, base), ["k"], "v", k=2)
+    old = ivm.minmax_state(df_of(spark, base), ["k"], "v")
     change_rows = [Row(k=k, v=v, _change_type="delete") for k, v in deletes] + [
         Row(k=k, v=v, _change_type="insert") for k, v in inserts
     ]
@@ -123,7 +123,7 @@ def test_ivm_minmax_matches_recompute_on_random_batches(spark, data):
     )
     maintained = {
         r["k"]: r
-        for r in ivm.maintain_grouped_minmax(old, changes, after_df, ["k"], "v", k=2).collect()
+        for r in ivm.maintain_grouped_minmax(old, changes, after_df, ["k"], "v").collect()
     }
 
     truth: dict[int, list[int]] = {}

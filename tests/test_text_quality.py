@@ -43,34 +43,37 @@ def test_repetition_signals_short_docs_excluded(spark):
     assert [r["doc_id"] for r in out] == [2]
 
 
+def _words(prefix, n):
+    return " ".join(f"{prefix}{i}" for i in range(n))
+
+
 def test_segments_expr_partial_tail(spark):
-    df = _docs(spark, [(1, "w1 w2 w3 w4 w5")]).select(
-        segments_expr("text", k=2).alias("segs")
-    )
-    assert df.collect()[0]["segs"] == ["w1 w2", "w3 w4", "w5"]
+    df = _docs(spark, [(1, _words("w", 18))]).select(segments_expr().alias("segs"))
+    assert df.collect()[0]["segs"] == [_words("w", 8), " ".join(f"w{i}" for i in range(8, 16)), "w16 w17"]
 
 
 def test_segment_dedup_keeps_first_occurrence(spark):
-    # doc 1 and doc 2 share segment "a b"; doc 2 keeps only its novel tail.
-    # doc 3 is entirely duplicate segments -> disappears.
+    # doc 1 and doc 2 share 8-token segment A; doc 2 keeps only its novel
+    # tail. doc 3 is entirely duplicate segments -> disappears.
+    a, c, x = _words("a", 8), _words("c", 8), _words("x", 8)
     docs = _docs(
         spark,
         [
-            (1, "a b c d"),
-            (2, "a b x y"),
-            (3, "a b c d"),
+            (1, f"{a} {c}"),
+            (2, f"{a} {x}"),
+            (3, f"{a} {c}"),
         ],
     )
-    out = {r["doc_id"]: r for r in segment_dedup(docs, k=2).collect()}
+    out = {r["doc_id"]: r for r in segment_dedup(docs).collect()}
     assert set(out) == {1, 2}
-    assert out[1]["clean_text"] == "a b c d" and out[1]["n_seg_kept"] == 2
-    assert out[2]["clean_text"] == "x y" and out[2]["n_seg_kept"] == 1
+    assert out[1]["clean_text"] == f"{a} {c}" and out[1]["n_seg_kept"] == 2
+    assert out[2]["clean_text"] == x and out[2]["n_seg_kept"] == 1
 
 
 def test_segment_dedup_preserves_order(spark):
-    docs = _docs(spark, [(1, "p q r s t u")])
-    r = segment_dedup(docs, k=2).collect()[0]
-    assert r["clean_text"] == "p q r s t u"
+    docs = _docs(spark, [(1, _words("p", 24))])
+    r = segment_dedup(docs).collect()[0]
+    assert r["clean_text"] == _words("p", 24)
 
 
 def test_pii_redact_and_counts(spark):
@@ -112,7 +115,7 @@ def test_decontaminate_spans_hand_computed(spark):
             (4, "a b c a b c z"),  # overlapping matches -> only "z" survives
         ],
     )
-    out = {r["doc_id"]: r for r in decontaminate_spans(train, bench, n=3).collect()}
+    out = {r["doc_id"]: r for r in decontaminate_spans(train, bench).collect()}
     assert set(out) == {1, 3, 4}
     assert out[1]["clean_text"] == "x y" and out[1]["n_removed"] == 3
     assert out[3]["clean_text"] == "p q r s" and out[3]["n_removed"] == 0
@@ -132,11 +135,11 @@ def test_cdc_dedup_robust_to_prefix_insertion_where_fixed_is_not(spark):
     shifted = "NEW " + original
     docs = _docs(spark, [(1, original), (2, shifted)])
 
-    fixed = {r["doc_id"]: r for r in segment_dedup(docs, k=8).collect()}
+    fixed = {r["doc_id"]: r for r in segment_dedup(docs).collect()}
     # offset shift -> no 8-token window of doc 2 equals any of doc 1's
     assert fixed[2]["clean_text"] == shifted
 
-    cdc = {r["doc_id"]: r for r in cdc_segment_dedup(docs, divisor=8).collect()}
+    cdc = {r["doc_id"]: r for r in cdc_segment_dedup(docs).collect()}
     assert cdc[1]["clean_text"] == original  # first occurrence intact
     kept2 = cdc[2]["clean_text"].split()
     assert len(kept2) < len(shifted.split())  # shared tail segments dropped
@@ -154,19 +157,19 @@ def test_operators_handle_empty_and_unicode_text(spark):
         [
             (1, ""),
             (2, "   "),
-            (3, "héllo wörld héllo wörld héllo wörld"),
-            (4, "日本語 テスト 日本語 テスト 日本語"),
+            (3, " ".join(["héllo wörld"] * 8)),
+            (4, " ".join(["日本語 テスト"] * 8 + ["日本語"])),
         ],
     )
     rep = {r["doc_id"]: r for r in repetition_signals(docs).collect()}
     assert set(rep) == {3, 4}
     assert rep[3]["top_word_frac"] == 0.5
 
-    seg = {r["doc_id"]: r for r in segment_dedup(docs, k=2).collect()}
+    seg = {r["doc_id"]: r for r in segment_dedup(docs).collect()}
     assert set(seg) == {3, 4}
     # doc-INTERNAL repeats collapse too (keep-first is corpus-wide)
-    assert seg[3]["clean_text"] == "héllo wörld"
-    assert seg[4]["clean_text"] == "日本語 テスト 日本語"
+    assert seg[3]["clean_text"] == " ".join(["héllo wörld"] * 4)
+    assert seg[4]["clean_text"] == " ".join(["日本語 テスト"] * 4 + ["日本語"])
 
 
 def test_pii_counts_null_text_stays_null_parity_shaped(spark):
@@ -291,51 +294,3 @@ def test_hash_split_total_disjoint_and_growth_stable(spark):
     assert all(b[i] == s[i] for i in range(100))
     # the 8/1/1 cells actually split (loose sanity, not a ratio assert)
     assert len(set(b.values())) == 3
-
-
-def test_pack_sequences_sharded_equals_global_per_shard(spark):
-    """pack_sequences(n_shards=k)'s law: each shard's packing equals the
-    GLOBAL packer run on that shard's docs alone (the k streams are
-    independent), and the union of shards conserves docs and tokens.
-    Also pins the validation on degenerate n_shards."""
-    import pytest
-    from pyspark.sql import Row, functions as F
-
-    from h2outility_spark.operators.text import pack_sequences
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=("tok " * (5 + i % 17)).strip()) for i in range(60)]
-    )
-    k = 4
-    sharded = pack_sequences(docs, budget_tokens=40, n_shards=k)
-    rows = sharded.collect()
-    assert {r["shard"] for r in rows} <= set(range(k))
-
-    # conservation across the union of shards
-    totals = sharded.agg(
-        F.sum("n_docs").alias("d"), F.sum("total_tokens").alias("t")
-    ).collect()[0]
-    exp = docs.select(
-        F.size(F.split(F.col("text"), " ")).alias("n")
-    ).agg(F.count("*").alias("d"), F.sum("n").alias("t")).collect()[0]
-    assert totals["d"] == exp["d"] and totals["t"] == exp["t"]
-
-    # per-shard equivalence with the global packer on the shard's slice
-    shard_expr = F.expr(
-        f"CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % {k}"
-    )
-    for s in range(k):
-        slice_docs = docs.filter(shard_expr == s)
-        got = sorted(
-            (r["bin_id"], r["n_docs"], r["total_tokens"])
-            for r in sharded.filter(F.col("shard") == s).collect()
-        )
-        want = sorted(
-            (r["bin_id"], r["n_docs"], r["total_tokens"])
-            for r in pack_sequences(slice_docs, budget_tokens=40).collect()
-        )
-        assert got == want, f"shard {s} diverges from the global packer on its slice"
-
-    for bad in (0, -1, True, 2.5):
-        with pytest.raises(ValueError):
-            pack_sequences(docs, budget_tokens=40, n_shards=bad)

@@ -628,23 +628,6 @@ def test_starting_version_vacuumed_parent_errors(spark, cdc_registered, tmp_path
             q.stop()
 
 
-def test_image_dhash_respects_custom_id_col(spark):
-    from pyspark.sql import Row
-
-    from h2outility_spark.codecs import encode_bmp
-    from h2outility_spark.operators.multimodal import image_dhash, image_neardup_pairs
-
-    rows = [[(x * 14, x * 14, x * 14) for x in range(18)]] * 16
-    img = bytearray(encode_bmp(rows))
-    assets = spark.createDataFrame(
-        [Row(image_id=1, data=img), Row(image_id=2, data=img)]
-    )
-    hashes = image_dhash(assets, id_col="image_id")
-    assert hashes.columns == ["image_id", "dhash"]
-    pairs = image_neardup_pairs(assets, id_col="image_id").collect()
-    assert [(p["id_a"], p["id_b"], p["hamming"]) for p in pairs] == [(1, 2, 0)]
-
-
 def test_checkpointed_reader_never_rebootstraps_after_vacuum(spark, registered, tmp_path):
     """Review regression (exactly-once hole): a CHECKPOINTED reader whose
     offset's successor lost its parent manifest to vacuum must ERROR, not

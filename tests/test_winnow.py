@@ -1,14 +1,12 @@
 """Winnowing fingerprint properties: the paper's coverage guarantee (any
-shared token run of >= w+k-1 tokens yields a shared fingerprint), short-doc
-degeneration, and the giant-bucket cap on the pair join."""
+shared token run of >= w+k-1 tokens yields a shared fingerprint, k = 3),
+short-doc degeneration, and the >= 2 shared fingerprints pair rule."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from h2outility_spark.operators import dedup
 
-K, W = 3, 4
+W = 4
 
 
 def _docs(spark, rows):
@@ -24,9 +22,9 @@ def test_shared_long_run_guarantees_shared_fingerprint(spark):
             (2, f"other words {shared} and another ending entirely"),
         ],
     )
-    fps = dedup.winnow_fingerprints(docs, k=K, w=W)
-    pairs = dedup.winnow_neardup_pairs(fps, min_shared=1).collect()
-    assert len(pairs) == 1 and (pairs[0]["id_a"], pairs[0]["id_b"]) == (1, 2)
+    fps = dedup.winnow_fingerprints(docs, w=W).collect()
+    by_doc = {d: {r["fp"] for r in fps if r["doc_id"] == d} for d in (1, 2)}
+    assert by_doc[1] & by_doc[2]
 
 
 def test_short_docs_degenerate_sanely(spark):
@@ -38,7 +36,7 @@ def test_short_docs_degenerate_sanely(spark):
             (3, "   "),                 # blank: dropped
         ],
     )
-    fps = {r["doc_id"]: r["fp"] for r in dedup.winnow_fingerprints(docs, k=K, w=W).collect()}
+    fps = {r["doc_id"]: r["fp"] for r in dedup.winnow_fingerprints(docs, w=W).collect()}
     assert 1 not in fps and 3 not in fps
     assert 2 in fps
 
@@ -51,24 +49,38 @@ def test_disjoint_docs_share_nothing(spark):
             (2, "one two three four five six seven eight"),
         ],
     )
-    fps = dedup.winnow_fingerprints(docs, k=K, w=W)
-    assert dedup.winnow_neardup_pairs(fps, min_shared=1).count() == 0
+    fps = dedup.winnow_fingerprints(docs, w=W)
+    assert not {r["fp"] for r in fps.filter("doc_id = 1").collect()} & {r["fp"] for r in fps.filter("doc_id = 2").collect()}
+    assert dedup.winnow_neardup_pairs(fps).count() == 0
 
 
 def test_giant_bucket_cap_bounds_pairs(spark):
-    # 30 docs all containing the same boilerplate run -> one hot fingerprint
-    # bucket; the cap must drop it while distinct small-bucket pairs survive
-    boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    # 30 docs all containing the same 12-token boilerplate run -> hot
+    # fingerprint buckets with no cap: the cluster pairs fully (every pair
+    # shares >= 2 fingerprints), and the identical small pair survives too
+    boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor"
     rows = [(i, f"doc number {i} says {boiler}") for i in range(30)]
     rows += [(100, "rare shared secret phrase appears here today friends"),
              (101, "rare shared secret phrase appears here today friends")]
-    docs = _docs(spark, rows)
-    fps = dedup.winnow_fingerprints(docs, k=K, w=W)
+    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(_docs(spark, rows), w=W))
+    assert pairs.filter("id_b < 100").count() == 30 * 29 // 2
+    assert pairs.filter("id_a = 100 AND id_b = 101").count() == 1
 
-    uncapped = dedup.winnow_neardup_pairs(fps, min_shared=1)
-    capped = dedup.winnow_neardup_pairs(fps, min_shared=1, max_bucket=10)
-    n_uncapped, n_capped = uncapped.count(), capped.count()
-    assert n_uncapped >= 30 * 29 / 2  # boilerplate cluster exploded
-    assert n_capped < n_uncapped
-    # the small-bucket pair is unaffected by quarantine
-    assert capped.filter((F.col("id_a") == 100) & (F.col("id_b") == 101)).count() == 1
+
+def test_pairs_need_two_shared_fingerprints(spark):
+    # a 6-token shared run (w+k-1) shares one fingerprint: not a pair; a
+    # 12-token run of distinct tokens spans two disjoint windows: a pair
+    short = "alpha beta gamma delta epsilon zeta"
+    long = "one two three four five six seven eight nine ten eleven twelve"
+    docs = _docs(
+        spark,
+        [
+            (1, f"unrelated prefix {short} tail words"),
+            (2, f"other opening {short} closing phrase"),
+            (3, f"first doc {long} ends"),
+            (4, f"second doc {long} finishes"),
+        ],
+    )
+    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(docs, w=W)).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(3, 4)]
+    assert pairs[0]["n_shared"] >= 2
