@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from h2outility_spark.operators.text import WS_CLASS_EXPR, fingerprint, normalize_ws
+from h2outility_spark.session import query_cache
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -86,12 +87,15 @@ def minhash_hash_sql(i: int) -> str:
     return f"substr(md5(shingle{suffix}), {8 * slot + 1}, 8)"
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 8) -> DataFrame:
-    """One row per doc: mh0..mh{k-1} columns, each the min over shingles of
-    an md5-derived 32-bit hex hash (4 hashes per digest, seed-suffixed
-    digests beyond the first four)."""
+_MINHASH_K = 8
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """One row per doc: mh0..mh7 columns (k = 8 hashes), each the min over
+    shingles of an md5-derived 32-bit hex hash (4 hashes per digest, the
+    second digest seed-suffixed)."""
     sh = doc_shingles(docs)
-    aggs = [F.min(F.expr(minhash_hash_sql(i))).alias(f"mh{i}") for i in range(num_hashes)]
+    aggs = [F.min(F.expr(minhash_hash_sql(i))).alias(f"mh{i}") for i in range(_MINHASH_K)]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
@@ -283,13 +287,15 @@ def canonical_docs(docs: DataFrame, clusters: DataFrame) -> DataFrame:
 
 
 _WINNOW_K = 3
+_WINNOW_W = 4
 
 
-def winnow_fingerprints(docs: DataFrame, w: int = 4) -> DataFrame:
-    """Winnowing document fingerprints: hash every word k-gram (k = 3), slide a
-    w-wide window over the hash sequence, keep the minimum hash of each
-    window — the guaranteed-coverage selection of the winnowing paper
-    (any shared run of >= w+k-1 tokens shares at least one fingerprint).
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
+    """Winnowing document fingerprints: hash every word k-gram (k = 3),
+    slide a w-wide window (w = 4) over the hash sequence, keep the minimum
+    hash of each window — the guaranteed-coverage selection of the
+    winnowing paper (any shared run of >= w+k-1 tokens shares at least one
+    fingerprint).
 
     Output: distinct (id, fp) rows; fp is an 8-hex-char md5 slice, so
     lexicographic min == numeric min and DuckDB reproduces it exactly.
@@ -316,8 +322,8 @@ def winnow_fingerprints(docs: DataFrame, w: int = 4) -> DataFrame:
         F.when(F.size("__toks") >= _WINNOW_K, kgram_hashes).otherwise(F.expr("array()")).alias("__h"),
     ).filter(F.size("__h") > 0)
     wins = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(__h) - {w - 1}, 1)), "
-        f"i -> array_min(slice(__h, i, {w}))))"
+        f"array_distinct(transform(sequence(1, greatest(size(__h) - {_WINNOW_W - 1}, 1)), "
+        f"i -> array_min(slice(__h, i, {_WINNOW_W}))))"
     )
     return d.select(F.col("doc_id"), F.explode(wins).alias("fp"))
 
@@ -448,12 +454,7 @@ def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def incremental_neardup_filter(
-    batch: DataFrame,
-    existing: DataFrame,
-    num_hashes: int = 8,
-    cache_registry: list | None = None,
-) -> DataFrame:
+def incremental_neardup_filter(batch: DataFrame, existing: DataFrame) -> DataFrame:
     """The daily-ingest shape of dedup: keep only batch docs that are
     neither EXACT duplicates (normalized fingerprint seen in the corpus)
     nor NEAR duplicates (minhash band collision against a corpus doc,
@@ -468,26 +469,16 @@ def incremental_neardup_filter(
     signature/fingerprint tables are precomputed once and appended per
     ingest, so each day pays only its own batch. Returns surviving batch
     rows as (id, fp).
-
-    Caching contract: ``survivors`` is cached here because three branches
-    reuse it (signatures, the shingle union, the final anti join) — one
-    batch-sized frame. Pass ``cache_registry`` (a list) to receive the
-    cached frame handle and ``unpersist()`` it precisely once the result
-    is consumed — the right pattern for a caller looping over many batches
-    in one session. Without it the cache lives for the session (the
-    one-shot cron-job shape).
     """
-    from h2outility_spark.operators.text import fingerprint
-
     bfp = batch.select(F.col("doc_id"), F.col("text"), fingerprint(F.col("text")).alias("fp"))
     efp = existing.select(fingerprint(F.col("text")).alias("fp")).distinct()
-    survivors = bfp.join(efp, "fp", "left_anti").cache()
-    if cache_registry is not None:
-        cache_registry.append(survivors)
+    # three branches reuse the batch-sized survivors: the signatures, the
+    # shingle union and the final anti join
+    survivors = query_cache(bfp.join(efp, "fp", "left_anti"))
 
-    bands = [[i] for i in range(num_hashes)]
-    bs = minhash_signatures(survivors, num_hashes)
-    es = minhash_signatures(existing, num_hashes)
+    bands = [[i] for i in range(_MINHASH_K)]
+    bs = minhash_signatures(survivors)
+    es = minhash_signatures(existing)
     bb = _banded(bs, bands).alias("b")
     eb = _banded(es, bands).alias("e")
     cand = (

@@ -10,10 +10,10 @@ neighborhood.
 
 Scale shape: the model is NOT broadcastable (one label per node), so each
 round is one hash join of the label frame against the edge list plus one
-combiner-friendly vote aggregate — O(E) per round, ``n_iter`` bounded
-rounds, no driver-side state. Determinism: synchronous updates (round t
-reads only round t-1), majority with (count DESC, label ASC) tie-break —
-an unrolled-CTE SQL oracle reproduces every round exactly (the PageRank
+combiner-friendly vote aggregate — O(E) per round, two rounds, no
+driver-side state. Determinism: synchronous updates (round t reads only
+round t-1), majority with (count DESC, label ASC) tie-break — an
+unrolled-CTE SQL oracle reproduces every round exactly (the PageRank
 oracle pattern, ``workload_sketch_graph._pagerank_oracle``).
 
 Reference parity note: the reference has no graph surface; this is part
@@ -26,10 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
+_ROUNDS = 2
+
+
 def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
-    n_iter: int = 3,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Synchronous majority-label propagation over an undirected graph.
@@ -42,7 +44,7 @@ def label_propagation(
     ``seeds``: (node, label) rows — these nodes keep their label
     PERMANENTLY.
 
-    Each round, every node's next label is::
+    In each of the two rounds, every node's next label is::
 
         coalesce(seed_label,                  -- seeds are clamped
                  majority(neighbor labels),   -- count DESC, label ASC tie-break
@@ -79,7 +81,7 @@ def label_propagation(
         "node", F.col("seed_label").alias("label")
     )
     rk_w = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
-    for _ in range(n_iter):
+    for _ in range(_ROUNDS):
         votes = (
             sym.join(
                 cur.filter(F.col("label").isNotNull()).withColumnRenamed("node", "src"),

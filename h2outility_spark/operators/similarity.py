@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from h2outility_spark.functions import fround
+from h2outility_spark.session import query_cache
 
 
 def as_double(vec: Column) -> Column:
@@ -384,13 +385,6 @@ def auto_n_bits(n_rows: int) -> int:
     return max(1, math.ceil(math.log2(max(2.0, n_rows / 32))))
 
 
-#: Banded frames persisted by previous rp_lsh_candidate_pairs calls, still
-#: registered with the session's CacheManager. Each new call evicts them
-#: (see the lifetime note inside the function), bounding a long session's
-#: cached-LSH footprint to the one query in flight.
-_LIVE_BANDED: list[DataFrame] = []
-
-
 def rp_lsh_candidate_pairs(
     embeddings: DataFrame,
     n_bits: int | None = 4,
@@ -417,12 +411,6 @@ def rp_lsh_candidate_pairs(
     is fine: only log2 of it matters) or cache the frame first. Pass an
     explicit ``n_bits`` to pin a configuration (the registered queries
     do, for oracle determinism).
-
-    Only one LSH query per session can hold the banded cache at a time:
-    each call evicts the previous call's banded persist, so build and
-    execute an LSH query before building the next one. A frame from an
-    earlier call that is executed after a later call was built still
-    returns the same rows, but recomputes its signatures.
     """
     if n_bits is None:
         n_bits = auto_n_bits(n_rows if n_rows is not None else embeddings.count())
@@ -436,29 +424,7 @@ def rp_lsh_candidate_pairs(
     # materialization for a second full signature pass (measured -13% on
     # both registered LSH queries, non-overlapping ABBA samples on the
     # strict pair; r14 #9).
-    #
-    # Lifetime (ADVICE r14): the persist cannot be released inside this
-    # function — the returned frame is lazy, and unpersisting before the
-    # caller materializes it would drop the cache entry the plan is built
-    # to reuse (while an EAGER materialize-here would move candidate work
-    # outside the caller's timed/actioned region, which the bench contract
-    # forbids). Instead each call EVICTS the previous call's banded frame,
-    # so a long-lived session running many LSH queries holds at most ONE
-    # live banded cache entry instead of accumulating them for the session
-    # lifetime. Assumes LSH queries are built-then-executed one at a time
-    # per session (true of the driver, bench, and every registered caller;
-    # same single-threaded-session assumption as
-    # streaming.incremental.micro_batch_shuffle). Eviction is best-effort:
-    # a frame whose session has stopped cannot unpersist, and its cache
-    # entry died with that session, so the failure is dropped.
-    while _LIVE_BANDED:
-        stale = _LIVE_BANDED.pop()
-        try:
-            stale.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
-    banded = banded.persist()
-    _LIVE_BANDED.append(banded)
+    banded = query_cache(banded)
     left = banded.alias("l")
     right = banded.alias("r")
     return (

@@ -9,8 +9,9 @@ memory settings come from the environment instead.
 from __future__ import annotations
 
 import os
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "h2outility-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -65,3 +66,29 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return spark
+
+
+#: What each session's current query persisted. Weak keys, so that the new
+#: session wrapper a foreachBatch handler gets per batch is not kept alive;
+#: the values are JVM handles, since a frame would hold its session.
+_QUERY_CACHES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def query_cache(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until its session's next query starts: for a frame
+    that the query's lazy result reads more than once, which the query
+    cannot release, since the caller executes the result after it returns."""
+    df = df.persist()
+    _QUERY_CACHES.setdefault(df.sparkSession, []).append(df._jdf)
+    return df
+
+
+def release_query_caches(spark: SparkSession) -> None:
+    """Unpersist what :func:`query_cache` recorded under ``spark``. An error
+    comes from a frame whose session has stopped, and its cache entry died
+    with that session, so it is dropped."""
+    for handle in _QUERY_CACHES.pop(spark, []):
+        try:
+            handle.unpersist(False)
+        except Exception:  # noqa: BLE001
+            pass

@@ -38,6 +38,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from h2outility_spark.session import query_cache, release_query_caches
+
 
 @contextlib.contextmanager
 def micro_batch_shuffle(spark: SparkSession):
@@ -373,29 +375,23 @@ def stream_dedup_ingest(stream_docs: DataFrame, table_dir: str, checkpoint_path:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        caches: list[DataFrame] = []
         if table.latest_version() is None:
             novel = batch_u
         else:
             existing = table.snapshot().select("doc_id", "text")
-            survivors = incremental_neardup_filter(
-                batch_u.select("doc_id", "text"),
-                existing,
-                cache_registry=caches,
-            )
+            survivors = incremental_neardup_filter(batch_u.select("doc_id", "text"), existing)
             novel = survivors.join(batch_u.select("doc_id", "text"), "doc_id").select(
                 "doc_id", "text", "fp"
             )
         # The emptiness probe, merge bounds collect, and staged write each
         # action `novel` — cache it so the band join + Jaccard verification
-        # run once per batch, and unpersist both handles before returning.
-        novel = novel.cache()
-        caches.append(novel)
+        # run once per batch. Every cache of this batch is recorded under
+        # its own session, so the release frees exactly those.
+        novel = query_cache(novel)
         try:
             if novel.limit(1).count() > 0:
                 table.merge_upsert(novel)
         finally:
-            for c in caches:
-                c.unpersist()
+            release_query_caches(batch_df.sparkSession)
 
     drain_available_now(stream_docs, checkpoint_path, ingest)

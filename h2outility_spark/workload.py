@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from h2outility_spark.schema import EVENTS_AS_DATAVALUES_SQL, events_as_datavalues
-from h2outility_spark.session import ensure_utc
+from h2outility_spark.session import ensure_utc, release_query_caches
 from h2outility_spark.sources.parquet import load_table
 
 @dataclass
@@ -51,8 +51,15 @@ def sql_round(expr: str, n: int = 2) -> str:
 
 
 def query(name: str, oracle: str | None = None, description: str = "", bench: bool = False):
+    """Register ``fn`` under ``name``. The registered function releases what
+    the session's previous query cached (``session.query_cache``) and pins
+    the session to UTC. So a query's caches live until the same session's
+    next query starts: a frame executed after that still returns the same
+    rows, but recomputes its cached parts."""
+
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release_query_caches(spark)
             ensure_utc(spark)
             return fn(spark, sf_dir)
 

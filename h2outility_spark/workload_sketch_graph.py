@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from h2outility_spark.functions import fround
 from h2outility_spark.operators import graph, sketch
+from h2outility_spark.session import query_cache
 from h2outility_spark.workload import _t, query, sql_round
 
 
@@ -97,11 +98,12 @@ PAGERANK_ORACLE = _pagerank_oracle()
 def _pagerank_loop(edges, nodes, n_nodes: float):
     """The weighted-PageRank iteration: tiny broadcast rank vector per
     iteration, bounded dangling-mass scalar collect, dangling mass
-    redistributed uniformly. ``edges`` is (src, dst, w) — pre-cache it;
+    redistributed uniformly. ``edges`` is (src, dst, w), which every
+    iteration reads, so the caller passes it through ``query_cache``;
     ``nodes`` is a single ``node`` column. The Spark side stays
     op-for-op identical to the unrolled-CTE oracle text
     (``_pagerank_oracle``)."""
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow")).cache()
+    outw = query_cache(edges.groupBy("src").agg(F.sum("w").alias("ow")))
     ranks = nodes.withColumn("r", F.lit(1.0 / n_nodes))
     for _ in range(_PR_ITERS):
         # dangling mass: a bounded scalar collect per iteration
@@ -150,13 +152,12 @@ def q_pagerank_nation_trade(spark, sf_dir):
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
 
-    edges = (
+    edges = query_cache(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .cache()
     )
     ranks = _pagerank_loop(edges, nation, float(nation.count()))
     return ranks.select("node", fround(F.col("r"), 6).alias("rank"))
@@ -873,7 +874,7 @@ def q_label_prop_nations(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("node"),
         F.col("n_regionkey").cast("bigint").alias("label"),
     )
-    return graph.label_propagation(edges, seeds, n_iter=_LP_ITERS)
+    return graph.label_propagation(edges, seeds)
 
 
 # -- weighted label propagation ----------------------------------------------------------
@@ -975,7 +976,7 @@ def q_label_prop_weighted(spark, sf_dir):
         F.col("n_nationkey").cast("bigint").alias("node"),
         F.col("n_regionkey").cast("bigint").alias("label"),
     )
-    return graph.label_propagation(edges, seeds, n_iter=_LP_ITERS, weight_col="w")
+    return graph.label_propagation(edges, seeds, weight_col="w")
 
 
 # -- HLL set algebra: week-over-week retention from registers alone ----------------------

@@ -1128,7 +1128,7 @@ def _cdc_replica_runner(spark, root: str, key_col: str, evolve_schema: bool = Fa
         # per drain, 2x the drain wall; OPTIMIZATION_r14.md #7). The CDF
         # is admission-bounded (O(batch), never O(table)), so the persist
         # is bounded memory by construction; same discipline as
-        # stream_dedup_ingest's novel.cache().
+        # stream_dedup_ingest's per-batch cache of `novel`.
         cdf = net_changes(batch_df).persist()
         try:
             inserts = cdf.filter(F.col("_change_type") == "insert").drop("_change_type")

@@ -19,6 +19,7 @@ from pyspark.sql import Window as W, functions as F
 from h2outility_spark.functions import fround
 from h2outility_spark.operators import dedup, text
 from h2outility_spark.operators.text import token_count
+from h2outility_spark.session import query_cache
 from h2outility_spark.workload import _t, query, sql_round
 
 
@@ -434,7 +435,7 @@ def q_dedup_exact_docs(spark, sf_dir):
     bench=True,
 )
 def q_minhash_signatures(spark, sf_dir):
-    return dedup.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=MINHASH_K)
+    return dedup.minhash_signatures(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -462,7 +463,7 @@ def q_neardup_minhash_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     # signatures feed the self-join twice and jaccard reuses the shingles —
     # cache the small intermediates instead of re-deriving them per branch
-    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    sigs = query_cache(dedup.minhash_signatures(docs))
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     jac = dedup.jaccard_for_pairs(pairs, docs)
     return jac.filter(F.col("jaccard") >= 0.2).select(
@@ -486,7 +487,7 @@ def q_neardup_minhash_pairs(spark, sf_dir):
 )
 def q_neardup_clusters(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    sigs = query_cache(dedup.minhash_signatures(docs))
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
     return dedup.connected_components(verified.select("id_a", "id_b"))
@@ -538,10 +539,10 @@ def q_corpus_clean(spark, sf_dir):
         "doc_id", "text", "n_tokens"
     )
     groups = dedup.exact_dedup_groups(q)
-    kept = q.join(
-        groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
-    ).cache()
-    sigs = dedup.minhash_signatures(kept, num_hashes=MINHASH_K)
+    kept = query_cache(
+        q.join(groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi")
+    )
+    sigs = dedup.minhash_signatures(kept)
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     verified = dedup.jaccard_for_pairs(pairs, kept).filter(F.col("jaccard") >= 0.2)
     clusters = dedup.connected_components(verified.select("id_a", "id_b"))
@@ -613,7 +614,7 @@ WINNOW_CTE = (
     ),
 )
 def q_winnow_fingerprints(spark, sf_dir):
-    return dedup.winnow_fingerprints(_t(spark, sf_dir, "documents"), w=_WINNOW_W)
+    return dedup.winnow_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -634,7 +635,7 @@ def q_winnow_fingerprints(spark, sf_dir):
 def q_neardup_winnow_pairs(spark, sf_dir):
     # both sides of the fp self-join reuse one materialization of the
     # fingerprint pipeline instead of re-tokenizing the corpus twice
-    fps = dedup.winnow_fingerprints(_t(spark, sf_dir, "documents"), w=_WINNOW_W).cache()
+    fps = query_cache(dedup.winnow_fingerprints(_t(spark, sf_dir, "documents")))
     return dedup.winnow_neardup_pairs(fps)
 
 
@@ -895,7 +896,7 @@ def q_dedup_incremental(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     existing = docs.filter(F.col("doc_id") % 5 != 0)
-    return dedup.incremental_neardup_filter(batch, existing, num_hashes=MINHASH_K)
+    return dedup.incremental_neardup_filter(batch, existing)
 
 
 @query(
@@ -1637,7 +1638,7 @@ def q_dedup_keep_best(spark, sf_dir):
     from banded buckets, the window is per-cluster — no O(n^2) stage.
     """
     docs = _t(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    sigs = query_cache(dedup.minhash_signatures(docs))
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
     cc = dedup.connected_components(verified.select("id_a", "id_b"))
@@ -1702,7 +1703,7 @@ def q_minhash_containment_pairs(spark, sf_dir):
     the certified Jaccard path (operators/dedup.containment_for_pairs).
     """
     docs = _t(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K).cache()
+    sigs = query_cache(dedup.minhash_signatures(docs))
     pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
     cont = dedup.containment_for_pairs(pairs, docs)
     return cont.filter(
@@ -1795,8 +1796,8 @@ def q_dedup_incremental_lsh(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 5 == 0)
     old = docs.filter(F.col("doc_id") % 5 != 0)
-    sigs_new = dedup.minhash_signatures(new, num_hashes=MINHASH_K)
-    sigs_old = dedup.minhash_signatures(old, num_hashes=MINHASH_K)
+    sigs_new = dedup.minhash_signatures(new)
+    sigs_old = dedup.minhash_signatures(old)
     pairs = dedup.lsh_candidate_pairs_between(
         sigs_new, sigs_old, bands=[[i] for i in range(MINHASH_K)]
     )
@@ -1874,7 +1875,7 @@ def q_neardup_ensemble_agree(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    sigs = dedup.minhash_signatures(docs, num_hashes=MINHASH_K)
+    sigs = dedup.minhash_signatures(docs)
     text_pairs = dedup.jaccard_for_pairs(
         dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)]), docs
     ).filter(F.col("jaccard") >= 0.2)

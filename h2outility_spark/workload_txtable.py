@@ -24,6 +24,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from h2outility_spark.session import query_cache
 from h2outility_spark.sources.parquet import read_parquet
 from h2outility_spark.storage_tx import TxTable
 from h2outility_spark.streaming.incremental import drain_available_now
@@ -691,7 +692,7 @@ def q_txtable_reader_isolation(spark, sf_dir):
 
     t = TxTable(spark, scratch_dir("h2ou_riso_") + "/t", key_cols=["o_orderkey"])
     v1 = t.append(base)
-    pinned = t.snapshot(v1).cache()
+    pinned = query_cache(t.snapshot(v1))
 
     errs: list[Exception] = []
 
@@ -804,7 +805,7 @@ def q_txtable_zorder_race(spark, sf_dir):
     # genuinely rewrites multi-file state under the pinned reader
     t.append(base.filter(F.col("o_orderkey") % 2 == 0))
     v2 = t.append(base.filter(F.col("o_orderkey") % 2 == 1))
-    pinned = t.snapshot(v2).cache()
+    pinned = query_cache(t.snapshot(v2))
 
     errs: list[Exception] = []
 

@@ -12,7 +12,10 @@ Mirrors the documented driver behavior:
     compares to oracle_sql()[name] via DuckDB: row count, sorted column
     names, and an order-insensitive value hash of the rows as
     ``oracle_compare.normalize_rows`` renders them. A MISMATCH also
-    prints the first three differing normalized rows.
+    prints the first three differing normalized rows,
+  * prints ``cache_left=N`` per query: the persistent RDDs the session
+    still holds after the collect, with their peak and final value on the
+    closing line.
 """
 
 from __future__ import annotations
@@ -88,14 +91,16 @@ def main() -> None:
     if names:
         queries = {n: queries[n] for n in names}
     bad = []
+    left = []
     for name, fn in queries.items():
         t0 = time.perf_counter()
         sdf = fn(spark, sf_dir)
         s_cols = sdf.columns
         s_rows = [tuple(r) for r in sdf.collect()]
         elapsed = time.perf_counter() - t0
+        left.append(spark.sparkContext._jsc.getPersistentRDDs().size())
         if name not in oracles:
-            print(f"  {name:28s} rows-only: {len(s_rows)} rows  ({elapsed:.1f}s)")
+            print(f"  {name:28s} rows-only: {len(s_rows)} rows cache_left={left[-1]}  ({elapsed:.1f}s)")
             continue
         cur = con.execute(oracles[name])
         d_cols = [d[0] for d in cur.description]
@@ -104,7 +109,7 @@ def main() -> None:
         sh, sn = value_hash(s_norm), len(s_rows)
         dh, dn = value_hash(d_norm), len(d_rows)
         ok = sh == dh and sn == dn and sorted(s_cols) == sorted(d_cols)
-        print(f"  {name:28s} {'MATCH' if ok else 'MISMATCH'} rows={sn}/{dn} hash={sh}/{dh}  ({elapsed:.1f}s)")
+        print(f"  {name:28s} {'MATCH' if ok else 'MISMATCH'} rows={sn}/{dn} hash={sh}/{dh} cache_left={left[-1]}  ({elapsed:.1f}s)")
         if not ok:
             bad.append(name)
             for a, b in [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:3]:
@@ -112,7 +117,7 @@ def main() -> None:
     if bad:
         print("MISMATCHED:", bad)
         sys.exit(1)
-    print(f"ALL MATCH {len(queries)}/{len(queries)}")
+    print(f"ALL MATCH {len(queries)}/{len(queries)}  cache_left peak={max(left)} final={left[-1]}")
 
 
 if __name__ == "__main__":

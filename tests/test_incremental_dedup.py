@@ -81,14 +81,25 @@ def test_duplicated_spans_merges_overlapping_windows(spark):
     assert out == [(1, 0, 18, 18), (2, 1, 19, 18)]
 
 
-def test_cache_registry_receives_handle(spark):
-    from pyspark.sql import DataFrame
+def test_stream_ingest_leaves_no_persistent_rdd(spark, tmp_path):
+    """Each micro-batch of the streaming ingest releases what it cached
+    (the filter's survivors and the batch's novel docs) before returning."""
+    from h2outility_spark.storage_tx import TxTable
+    from h2outility_spark.streaming.incremental import stream_dedup_ingest
 
-    existing = _docs(spark, [(1, "alpha beta gamma delta epsilon")])
-    batch = _docs(spark, [(10, "totally different words here now")])
-    caches: list[DataFrame] = []
-    kept = incremental_neardup_filter(batch, existing, cache_registry=caches)
-    assert kept.count() == 1
-    assert len(caches) == 1 and caches[0].is_cached
-    caches[0].unpersist()
-    assert not caches[0].is_cached
+    src = str(tmp_path / "docs")
+    # one file per batch; the second batch holds an exact duplicate of the
+    # first, so it runs the corpus filter whichever file drains first
+    for rows in (
+        [(1, "alpha beta gamma delta epsilon"), (2, "one two three four five six")],
+        [(10, "alpha beta gamma delta epsilon"), (11, "unrelated words entirely")],
+    ):
+        _docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    stream = spark.readStream.schema("doc_id long, text string").option("maxFilesPerTrigger", 1).parquet(src)
+    stream_dedup_ingest(stream, str(tmp_path / "corpus"), str(tmp_path / "ckpt"))
+
+    table = TxTable(spark, str(tmp_path / "corpus"), key_cols=["doc_id"])
+    assert [h["op"] for h in table.history()] == ["merge", "merge"]
+    assert table.snapshot().count() == 3
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= before

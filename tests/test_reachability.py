@@ -16,17 +16,19 @@ The same holds for options, counted by value. Across the calls in non-test
 files, a defaulted parameter of a package function (or a defaulted
 dataclass field) takes the literal a call passes (``ast.literal_eval``), by
 keyword or by position, and its default at each call that omits it. It is
-set only when it takes two or more distinct values. A non-literal argument
-(a name, an expression) can take any value, so it sets the parameter, and a
-call that passes ``*args`` or ``**kwargs`` sets every parameter of its
-callee. Calls resolve by bare name, a class name to its ``__init__`` and
-``super().__init__`` to the bases' ``__init__``. An option with one value in
-use is a constant: write that value into the body, or name the option in
-``KEEP_PARAMS`` with the reason it stays. The accepted reasons: a test
-substitutes a fake codec; a test lowers a threshold so fixture-scale data
-takes the large-input path; the test session sets ``shuffle_partitions``;
-``encode_jpeg``'s options generate inputs the decoder must accept from
-outside; ``perfbench/`` passes it. "Only a test sets it" is not a reason.
+set only when it takes two or more distinct values. A bare name that the
+calling module binds to a literal at top level, and nowhere else, passes
+that literal. Any other non-literal argument (a name, an expression) can
+take any value, so it sets the parameter, and a call that passes ``*args``
+or ``**kwargs`` sets every parameter of its callee. Calls resolve by bare
+name, a class name to its ``__init__`` and ``super().__init__`` to the
+bases' ``__init__``. An option with one value in use is a constant: write
+that value into the body, or name the option in ``KEEP_PARAMS`` with the
+reason it stays. The accepted reasons: a test substitutes a fake codec; a
+test lowers a threshold so fixture-scale data takes the large-input path;
+the test session sets ``shuffle_partitions``; ``encode_jpeg``'s options
+generate inputs the decoder must accept from outside; ``perfbench/``
+passes it. "Only a test sets it" is not a reason.
 Outside input is exempt: the QC ops in ``plans/oplist.OPS`` and the
 ``EditSession`` methods that record them (a plan JSON sets their
 arguments), ``OUTSIDE_INPUT``, and the definitions that only ``KEEP`` keeps
@@ -299,12 +301,28 @@ def _calls(tree: ast.AST):
 _ANY = object()  # what a non-literal argument passes: any value
 
 
-def _literal(node: ast.AST) -> str | None:
-    """repr of the literal ``node`` spells; None when it is not a literal."""
+def _literal(node: ast.AST, consts: dict[str, str] | None = None) -> str | None:
+    """repr of the literal ``node`` spells, or of the module constant it names; None otherwise."""
+    if isinstance(node, ast.Name):
+        return consts.get(node.id) if consts else None
     try:
         return repr(ast.literal_eval(node))
     except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
         return None
+
+
+def _constants(tree: ast.Module) -> dict[str, str]:
+    """{name: repr} for each name the module binds to a literal at top level and nowhere else."""
+    binds = [n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)]
+    binds += [a.arg for a in ast.walk(tree) if isinstance(a, ast.arg)]
+    out = {}
+    for stmt in tree.body:
+        target = stmt.targets[0] if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1 else None
+        if isinstance(target, ast.Name) and binds.count(target.id) == 1:
+            lit = _literal(stmt.value)
+            if lit is not None:
+                out[target.id] = lit
+    return out
 
 
 def _set_options() -> set[str]:
@@ -312,7 +330,9 @@ def _set_options() -> set[str]:
     funcs, by_name = _options()
     values: dict[str, set] = {}
     for path in _entry_files():
-        for names, call in _calls(ast.parse(path.read_text(), str(path))):
+        tree = ast.parse(path.read_text(), str(path))
+        consts = _constants(tree)
+        for names, call in _calls(tree):
             for key in (k for n in names for k in by_name.get(n, [])):
                 pos, defaults, offset = funcs[key]
                 star = any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords)
@@ -321,7 +341,7 @@ def _set_options() -> set[str]:
                     if star:
                         v = _ANY
                     elif p in passed:
-                        v = _literal(passed[p]) or _ANY
+                        v = _literal(passed[p], consts) or _ANY
                     else:  # a non-literal default is one value of its own
                         v = _literal(default) or ast.unparse(default)
                     values.setdefault(f"{key}.{p}", set()).add(v)

@@ -139,3 +139,73 @@ def test_family_prefixed_queries_live_in_their_family_module():
                     if name.startswith(prefix) and path.stem != module:
                         bad.append(f"{name} in {path.name}, expected {module}.py")
     assert not bad, bad
+
+
+# -- cache ownership (AST only) ----------------------------------------------
+#
+# A frame that a function persists is released by that function (for a
+# method: by its class), or it goes through ``session.query_cache``, which
+# releases it when the session's next query starts. A persist that neither
+# does stays cached for the life of the session.
+
+
+def _released_names(owner: ast.AST) -> set[str]:
+    """What ``owner`` unpersists: each ``.unpersist()`` receiver, and what
+    flows into one through a ``for`` loop, a list or tuple, or ``.append``."""
+    names = {
+        ast.unparse(n.func.value)
+        for n in ast.walk(owner)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "unpersist"
+    }
+    while True:
+        more = set(names)
+        for n in ast.walk(owner):
+            if isinstance(n, ast.For) and ast.unparse(n.target) in names:
+                more.add(ast.unparse(n.iter))
+            elif isinstance(n, (ast.List, ast.Tuple)) and ast.unparse(n) in names:
+                more.update(ast.unparse(e) for e in n.elts)
+            elif (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "append"
+                and ast.unparse(n.func.value) in names
+            ):
+                more.update(ast.unparse(a) for a in n.args)
+        if more == names:
+            return names
+        names = more
+
+
+def unreleased_persists() -> list[str]:
+    bad = []
+
+    def visit(node: ast.AST, owner: ast.AST, assigned: list[str], path: Path) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, child if isinstance(owner, ast.Module) else owner, [], path)
+                continue
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, owner if isinstance(owner, ast.ClassDef) else child, [], path)
+                continue
+            targets = assigned
+            if isinstance(child, ast.Assign):
+                targets = [ast.unparse(t) for t in child.targets]
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("cache", "persist")
+                and getattr(owner, "name", None) != "query_cache"
+                and not set(targets) & _released_names(owner)
+            ):
+                bad.append(f"{path.relative_to(ROOT)}:{child.func.end_lineno}")
+            visit(child, owner, targets, path)
+
+    for path in sorted((ROOT / "h2outility_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        visit(tree, tree, [], path)
+    return bad
+
+
+def test_every_persist_is_released_or_query_cached():
+    bad = unreleased_persists()
+    assert not bad, f"persisted and never released (unpersist it, or use session.query_cache): {bad}"

@@ -160,12 +160,12 @@ def _seeds(spark, rows):
 
 
 def test_labels_spread_along_chain(spark):
-    # seed at one end of a 3-hop path: 3 rounds reach the far end
+    # seed at one end of a 3-hop path: the two rounds reach two hops
     out = graph.label_propagation(
-        _edges(spark, [(1, 2), (2, 3), (3, 4)]), _seeds(spark, [(1, "x")]), n_iter=3
+        _edges(spark, [(1, 2), (2, 3), (3, 4)]), _seeds(spark, [(1, "x")])
     )
     got = {r["node"]: r["label"] for r in out.collect()}
-    assert got == {1: "x", 2: "x", 3: "x", 4: "x"}
+    assert got == {1: "x", 2: "x", 3: "x", 4: None}
 
 
 def test_seeds_are_clamped_and_majority_wins(spark):
@@ -173,7 +173,7 @@ def test_seeds_are_clamped_and_majority_wins(spark):
     # the 'b' seed itself must NOT flip to 'a' (clamped)
     edges = _edges(spark, [(1, 3), (2, 3), (4, 3), (1, 4)])
     seeds = _seeds(spark, [(1, "a"), (2, "a"), (4, "b")])
-    out = graph.label_propagation(edges, seeds, n_iter=2)
+    out = graph.label_propagation(edges, seeds)
     got = {r["node"]: r["label"] for r in out.collect()}
     assert got[3] == "a"
     assert got[4] == "b", "seeded nodes keep their label permanently"
@@ -182,7 +182,7 @@ def test_seeds_are_clamped_and_majority_wins(spark):
 def test_tie_breaks_to_min_label(spark):
     # one 'a' neighbor, one 'b' neighbor: tie -> lexicographically smaller
     out = graph.label_propagation(
-        _edges(spark, [(1, 3), (2, 3)]), _seeds(spark, [(1, "b"), (2, "a")]), n_iter=1
+        _edges(spark, [(1, 3), (2, 3)]), _seeds(spark, [(1, "b"), (2, "a")])
     )
     got = {r["node"]: r["label"] for r in out.collect()}
     assert got[3] == "a"
@@ -190,7 +190,7 @@ def test_tie_breaks_to_min_label(spark):
 
 def test_unreached_nodes_stay_null(spark):
     out = graph.label_propagation(
-        _edges(spark, [(1, 2), (10, 11)]), _seeds(spark, [(1, "x")]), n_iter=3
+        _edges(spark, [(1, 2), (10, 11)]), _seeds(spark, [(1, "x")])
     )
     got = {r["node"]: r["label"] for r in out.collect()}
     assert got[10] is None and got[11] is None
@@ -219,8 +219,8 @@ def test_weighted_vote_beats_counts(spark):
         [(1, 5, 1), (2, 5, 1), (3, 5, 10)], "id_a long, id_b long, w long"
     )
     seeds = _seeds(spark, [(1, "a"), (2, "a"), (3, "b")])
-    unweighted = graph.label_propagation(edges, seeds, n_iter=1)
-    weighted = graph.label_propagation(edges, seeds, n_iter=1, weight_col="w")
+    unweighted = graph.label_propagation(edges, seeds)
+    weighted = graph.label_propagation(edges, seeds, weight_col="w")
     assert {r["node"]: r["label"] for r in unweighted.collect()}[5] == "a"
     assert {r["node"]: r["label"] for r in weighted.collect()}[5] == "b"
 
@@ -230,5 +230,5 @@ def test_weighted_tie_breaks_to_min_label(spark):
         [(1, 5, 3), (2, 5, 3)], "id_a long, id_b long, w long"
     )
     seeds = _seeds(spark, [(1, "b"), (2, "a")])
-    out = graph.label_propagation(edges, seeds, n_iter=1, weight_col="w")
+    out = graph.label_propagation(edges, seeds, weight_col="w")
     assert {r["node"]: r["label"] for r in out.collect()}[5] == "a"

@@ -1,12 +1,10 @@
 """Winnowing fingerprint properties: the paper's coverage guarantee (any
-shared token run of >= w+k-1 tokens yields a shared fingerprint, k = 3),
-short-doc degeneration, and the >= 2 shared fingerprints pair rule."""
+shared token run of >= w+k-1 tokens yields a shared fingerprint, k = 3 and
+w = 4), short-doc degeneration, and the >= 2 shared fingerprints pair rule."""
 
 from __future__ import annotations
 
 from h2outility_spark.operators import dedup
-
-W = 4
 
 
 def _docs(spark, rows):
@@ -22,7 +20,7 @@ def test_shared_long_run_guarantees_shared_fingerprint(spark):
             (2, f"other words {shared} and another ending entirely"),
         ],
     )
-    fps = dedup.winnow_fingerprints(docs, w=W).collect()
+    fps = dedup.winnow_fingerprints(docs).collect()
     by_doc = {d: {r["fp"] for r in fps if r["doc_id"] == d} for d in (1, 2)}
     assert by_doc[1] & by_doc[2]
 
@@ -36,7 +34,7 @@ def test_short_docs_degenerate_sanely(spark):
             (3, "   "),                 # blank: dropped
         ],
     )
-    fps = {r["doc_id"]: r["fp"] for r in dedup.winnow_fingerprints(docs, w=W).collect()}
+    fps = {r["doc_id"]: r["fp"] for r in dedup.winnow_fingerprints(docs).collect()}
     assert 1 not in fps and 3 not in fps
     assert 2 in fps
 
@@ -49,7 +47,7 @@ def test_disjoint_docs_share_nothing(spark):
             (2, "one two three four five six seven eight"),
         ],
     )
-    fps = dedup.winnow_fingerprints(docs, w=W)
+    fps = dedup.winnow_fingerprints(docs)
     assert not {r["fp"] for r in fps.filter("doc_id = 1").collect()} & {r["fp"] for r in fps.filter("doc_id = 2").collect()}
     assert dedup.winnow_neardup_pairs(fps).count() == 0
 
@@ -62,7 +60,7 @@ def test_giant_bucket_cap_bounds_pairs(spark):
     rows = [(i, f"doc number {i} says {boiler}") for i in range(30)]
     rows += [(100, "rare shared secret phrase appears here today friends"),
              (101, "rare shared secret phrase appears here today friends")]
-    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(_docs(spark, rows), w=W))
+    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(_docs(spark, rows)))
     assert pairs.filter("id_b < 100").count() == 30 * 29 // 2
     assert pairs.filter("id_a = 100 AND id_b = 101").count() == 1
 
@@ -81,6 +79,6 @@ def test_pairs_need_two_shared_fingerprints(spark):
             (4, f"second doc {long} finishes"),
         ],
     )
-    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(docs, w=W)).collect()
+    pairs = dedup.winnow_neardup_pairs(dedup.winnow_fingerprints(docs)).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(3, 4)]
     assert pairs[0]["n_shared"] >= 2
