@@ -107,10 +107,11 @@ class EditSession:
 
         This is the full reference semantics — ``commit()`` with history:
         the store's previous state stays readable (time travel), a bad
-        save is undone with ``table.restore(version - 1)``, and two
-        concurrent editors conflict explicitly instead of lost-updating
-        each other (the reference leaned on RDBMS transactions for all
-        three, ``edit_service.py:371-373``).
+        save is undone with ``table.restore(version - 1)``, and concurrent
+        editors never lost-update each other: editors with disjoint key
+        ranges both commit, and editors with overlapping ranges still
+        conflict explicitly (the reference leaned on RDBMS transactions for
+        all three, ``edit_service.py:371-373``).
         """
         edited = self.frame()
         if qc.SEL in edited.columns:

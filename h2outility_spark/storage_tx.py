@@ -36,10 +36,16 @@ formats are built from:
   * **Atomic commit = one file creation.** A writer stages its manifest to
     a temp name and publishes with ``os.link(tmp, vN.json)`` — on POSIX a
     hard link to an existing name fails with EEXIST, so exactly ONE of two
-    racing writers wins version N; the loser re-reads the new snapshot and
-    retries (optimistic concurrency). On an object store the same step is
-    a conditional PUT (S3 ``If-None-Match``) or a commit service; the
+    racing writers wins version N. On an object store the same step is a
+    conditional PUT (S3 ``If-None-Match``) or a commit service; the
     protocol is unchanged.
+  * **One conflict policy.** Every verb commits through one bounded loop
+    (``_publish``): the loser of version N rebuilds its segment list on
+    the new latest manifest and tries again. Blind verbs (append,
+    overwrite, restore) always can; verbs that read the table
+    (merge_upsert, delete_keys, compact_files) only when Delta Lake's
+    conflict check holds (``_carry_onto``) — otherwise CommitConflict
+    reaches the caller, who alone can re-derive a stale input.
   * **MERGE is copy-on-write with file pruning.** Only parent files whose
     [min, max] range of the merge key overlaps the updates are rewritten;
     the rest carry over by reference. At 100 TB with range-clustered files
@@ -75,6 +81,10 @@ _COMPACT_SMALL = SEGMENT_TARGET // 4
 #: Repack small segments once this many accumulate (amortizes many tiny
 #: appends into O(changed)-per-commit writes overall).
 _COMPACT_TRIGGER = 16
+#: Commit attempts before CommitConflict reaches the caller. A writer loses
+#: at most one race per commit another lands, so this exceeds the most
+#: writers that race in the registry (txtable_concurrent_appends' three).
+_COMMIT_ATTEMPTS = 10
 
 
 def _norm_stat(v):
@@ -91,6 +101,21 @@ def _norm_stat(v):
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     return v
+
+
+def _disjoint(bounds: dict, smin: dict, smax: dict) -> bool:
+    """Whether recorded per-key [min, max] stats miss the per-key ``bounds``
+    on ANY key axis; all-null bounds miss everything (null keys never
+    match a recorded range)."""
+    if all(lo is None for lo, _ in bounds.values()):
+        return True
+    for k, (lo, hi) in bounds.items():
+        if lo is None:
+            continue  # all-null keys on this axis: can't prune by it
+        kmin, kmax = smin.get(k), smax.get(k)
+        if kmin is not None and (kmax < lo or kmin > hi):
+            return True
+    return False
 
 
 class CommitConflict(RuntimeError):
@@ -424,14 +449,12 @@ class TxTable:
     def _commit(self, segments: list[dict], schema: str, op: str, parent: int | None) -> int:
         """Publish a new manifest atomically as ``parent + 1``; raises
         CommitConflict if that version already exists. ``parent`` must be
-        the version the WRITER BASED ITS CHANGE ON (not re-resolved here):
-        if a concurrent writer committed after this writer read its
-        snapshot, the version slot is taken and the conflict surfaces —
-        re-resolving the parent at commit time would silently drop the
-        concurrent commit's files from the new version (lost update). The
-        manifest holds only segment DESCRIPTORS — its size is O(segments),
-        and a commit's total write payload is the changed segments plus
-        this file, never the whole file inventory."""
+        the version ``segments`` were built on, never re-resolved here:
+        that would silently drop a concurrent commit's files (lost update);
+        ``_publish`` rebuilds the segments on the winner's manifest instead.
+        The manifest holds only segment DESCRIPTORS — O(segments) — so a
+        commit writes the changed segments plus this file, never the whole
+        file inventory."""
         import time as _time
 
         version = 0 if parent is None else parent + 1
@@ -459,71 +482,121 @@ class TxTable:
     def _ddl(df: DataFrame) -> str:
         return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
 
-    def append(self, df: DataFrame, _retries: int = 3) -> int:
-        new = self._write_segments(self._stage_files(df))
-        for _ in range(_retries):
-            m = self.manifest()
-            base = m["segments"] if m else []
+    def _publish(self, rebase, schema: str, op: str, base: dict | None) -> int:
+        """The one commit loop: publish ``rebase(m)`` as the version after
+        ``m`` — ``base`` first, then the latest manifest after each lost
+        race — at most ``_COMMIT_ATTEMPTS`` times. ``rebase`` maps a
+        manifest (None: empty table) to the verb's segments on it, or
+        raises CommitConflict when the verb's change cannot carry onto it."""
+        m = base
+        for _ in range(_COMMIT_ATTEMPTS):
+            segments = rebase(m)
             try:
-                return self._commit(
-                    self._compact(base + new), self._ddl(df), "append",
-                    m["version"] if m else None,
-                )
+                return self._commit(segments, schema, op, m["version"] if m else None)
             except CommitConflict:
-                continue  # new snapshot appeared; re-read parent segments and retry
-        raise CommitConflict(f"append lost the commit race {_retries} times")
+                m = self.manifest()
+        raise CommitConflict(f"{op} lost the commit race {_COMMIT_ATTEMPTS} times")
+
+    @staticmethod
+    def _carry_onto(base: dict, kept: list[dict], new: list[dict], bounds: dict | None):
+        """``rebase`` for a verb that read ``base`` and publishes ``kept +
+        new``: on a later manifest, swap the replaced base segments for
+        ``new`` if Delta Lake's conflict check holds at segment granularity
+        (no segment read): same schema, every replaced segment still
+        listed, no segment added since ``base`` meets ``bounds`` (None: the
+        verb changes no row, so no added row conflicts with it)."""
+        base_names = {d["name"] for d in base["segments"]}
+        replaced = base_names - {d["name"] for d in kept}
+
+        def rebase(latest: dict) -> list[dict]:
+            segs = latest["segments"]
+            added = [d for d in segs if d["name"] not in base_names]
+            if (
+                latest["schema"] != base["schema"]
+                or replaced - {d["name"] for d in segs}
+                or bounds is not None
+                and not all(_disjoint(bounds, d["min"], d["max"]) for d in added)
+            ):
+                raise CommitConflict(f"version {latest['version']} conflicts with this write")
+            return [d for d in segs if d["name"] not in replaced] + new
+
+        return rebase
+
+    def append(self, df: DataFrame) -> int:
+        new = self._write_segments(self._stage_files(df))
+        return self._publish(
+            lambda m: self._compact((m["segments"] if m else []) + new),
+            self._ddl(df), "append", self.manifest(),
+        )
 
     def overwrite(self, df: DataFrame) -> int:
         new = self._write_segments(self._stage_files(df))
-        while True:
-            try:
-                return self._commit(new, self._ddl(df), "overwrite", self.latest_version())
-            except CommitConflict:
-                continue  # overwrite replaces whatever won; just take the next version
+        return self._publish(lambda m: new, self._ddl(df), "overwrite", self.manifest())
 
     def _prune_split(self, m: dict, bounds: dict) -> tuple[list, list, list]:
         """Split the parent's file inventory by per-key [min, max] bounds:
         (untouched segments carried by NAME — never read, carried file
         entries, overlapping file entries that must be read and rewritten).
-        A file/segment is prunable when ANY key axis is provably disjoint
-        from the bounds; an all-null bound set prunes everything (null
-        keys never match any recorded range)."""
-        all_null = all(lo is None for lo, _ in bounds.values())
-
-        def _misses(stat_min: dict, stat_max: dict) -> bool:
-            if all_null:
-                return True
-            for k, (lo, hi) in bounds.items():
-                if lo is None:
-                    continue  # all-null keys on this axis: can't prune by it
-                smin, smax = stat_min.get(k), stat_max.get(k)
-                if smin is not None and (smax < lo or smin > hi):
-                    return True
-            return False
-
+        A file/segment is prunable when ``_disjoint`` from the bounds."""
         untouched_segs, carried_entries, overlapping = [], [], []
         for d in m["segments"]:
-            if _misses(d["min"], d["max"]):
+            if _disjoint(bounds, d["min"], d["max"]):
                 untouched_segs.append(d)  # carried by name — segment never read
                 continue
             for entry in read_segment(self.table_dir, d["name"]):
-                if _misses(entry["min"], entry["max"]):
+                if _disjoint(bounds, entry["min"], entry["max"]):
                     carried_entries.append(entry)
                 else:
                     overlapping.append(entry)
         return untouched_segs, carried_entries, overlapping
 
+    def _copy_on_write(
+        self, m: dict, schema: str, keys: DataFrame, rows: DataFrame | None, op: str
+    ) -> int:
+        """The copy-on-write body of merge_upsert and delete_keys: publish
+        ``m`` minus the rows whose ``key_cols`` match ``keys`` (distinct key
+        rows), plus ``rows`` (None: delete only), as an ``op`` commit.
+
+        TWO pruning levels against the key bounds of ``rows`` (``keys``
+        when deleting): whole segments whose range misses carry over by
+        NAME (never read); in the others, files whose range misses carry
+        over by reference, and only overlapping files are read, anti-joined
+        against ``keys`` and rewritten with ``rows`` in one staged write.
+
+        A call that writes nothing publishes no version (that would churn
+        history on every empty micro-batch) unless ``schema`` changes: an
+        empty evolve_schema batch publishes a metadata-only version."""
+        from pyspark.sql import functions as F
+
+        row = (keys if rows is None else rows).select(
+            F.count(F.lit(1)).alias("n"),
+            *[F.min(k).alias(f"lo_{k}") for k in self.key_cols],
+            *[F.max(k).alias(f"hi_{k}") for k in self.key_cols],
+        ).collect()[0]
+        bounds = {
+            k: (_norm_stat(row[f"lo_{k}"]), _norm_stat(row[f"hi_{k}"])) for k in self.key_cols
+        }
+        untouched_segs, carried_entries, overlapping = self._prune_split(m, bounds)
+        out = rows if row["n"] else None
+        if overlapping:
+            # Read with the (possibly evolved) schema: parquet fills columns
+            # absent from a file with nulls, so old files conform for free.
+            paths = [os.path.join(self.table_dir, e["path"]) for e in overlapping]
+            current = self.spark.read.schema(schema).parquet(*paths)
+            survivors = current.join(keys, self.key_cols, "left_anti")
+            out = survivors if out is None else survivors.unionByName(out)
+        if out is None and schema == m["schema"]:
+            return m["version"]
+        staged = self._stage_files(out) if out is not None else []
+        new = self._write_segments(carried_entries + staged)
+        return self._publish(self._carry_onto(m, untouched_segs, new, bounds), schema, op, m)
+
     def merge_upsert(self, updates: DataFrame, evolve_schema: bool = False) -> int:
         """MERGE (upsert on ``key_cols``): rows matching an update's key are
         replaced; others are kept; unmatched updates are inserted.
 
-        Copy-on-write with TWO pruning levels: whole segments whose key
-        range misses the updates carry over by NAME (their entry lists are
-        never even read); inside overlapping segments, files are split by
-        their recorded key range into untouched (repacked by reference —
-        zero data IO) and overlapping (read, matching keys anti-joined
-        out, survivors rewritten together with the updates). Pruning is
-        MULTI-AXIS: a file/segment is skipped when ANY merge key's
+        Copy-on-write with two pruning levels (``_copy_on_write``). Pruning
+        is MULTI-AXIS: a file/segment is skipped when ANY merge key's
         recorded [min, max] is disjoint from the updates' bounds — with
         range-clustered files only the first key bites, but after
         ``compact_files(zorder=True)`` every axis is tight and the rewrite
@@ -537,6 +610,11 @@ class TxTable:
         evolution is a metadata change plus the normal copy-on-write.
         Default (False) keeps the strict contract: unknown update columns
         are dropped by the conform-select and missing ones raise.
+
+        A merge that loses its commit race lands on top of the winner when
+        the winner's new segments miss the updates' key range and it kept
+        every segment the merge replaced; otherwise CommitConflict asks the
+        caller to re-merge on the new snapshot.
         """
         m = self.manifest()
         if m is None:
@@ -568,58 +646,8 @@ class TxTable:
         else:
             updates = updates.select([F.col(f.name).cast(f.dataType) for f in target.fields])
         schema_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in target.fields)
-
-        # Per-key update bounds: a file/segment is prunable if ANY key axis
-        # is provably disjoint. With range-clustered files only the first
-        # key prunes (the others span everything), but after
-        # compact_files(zorder=True) every axis is tight, so multi-axis
-        # checks turn an O(axis-slab) rewrite into O(intersection-box).
-        row = updates.select(
-            F.count(F.lit(1)).alias("n_updates"),
-            *[F.min(k).alias(f"lo_{k}") for k in self.key_cols],
-            *[F.max(k).alias(f"hi_{k}") for k in self.key_cols],
-        ).collect()[0]
-        if row["n_updates"] == 0:
-            if schema_ddl != m["schema"]:
-                # Zero rows but a REAL schema change (evolve_schema added
-                # columns): commit the evolution as a metadata-only version
-                # carrying the parent's segments — the standard way to
-                # evolve a table with an empty mergeSchema batch. Conflicts
-                # surface to the caller like any other merge conflict.
-                return self._commit(m["segments"], schema_ddl, "merge", m["version"])
-            # No-op merge: publishing a version that changes nothing would
-            # churn history on every empty streaming micro-batch (and make
-            # vacuum/time-travel bookkeeping noisier). The current version
-            # already IS the post-merge state.
-            return m["version"]
-        bounds = {
-            k: (_norm_stat(row[f"lo_{k}"]), _norm_stat(row[f"hi_{k}"])) for k in self.key_cols
-        }
-        untouched_segs, carried_entries, overlapping = self._prune_split(m, bounds)
-
-        if overlapping:
-            paths = [os.path.join(self.table_dir, e["path"]) for e in overlapping]
-            # Read with the (possibly evolved) schema: parquet fills columns
-            # absent from a file with nulls, so old files conform for free.
-            current = self.spark.read.schema(schema_ddl).parquet(*paths)
-            survivors = current.join(
-                updates.select(*self.key_cols).distinct(), self.key_cols, "left_anti"
-            )
-            merged = survivors.unionByName(updates)
-        else:
-            merged = updates
-        new = self._write_segments(carried_entries + self._stage_files(merged))
-
-        for _ in range(3):
-            try:
-                return self._commit(untouched_segs + new, schema_ddl, "merge", m["version"])
-            except CommitConflict:
-                # A real lakehouse revalidates that the concurrent commit
-                # didn't touch the overlapping files before retrying; here
-                # we surface the conflict to the caller instead of silently
-                # re-merging against a moved snapshot.
-                raise
-        raise AssertionError("unreachable")
+        keys = updates.select(*self.key_cols).distinct()
+        return self._copy_on_write(m, schema_ddl, keys, updates, "merge")
 
     def delete_keys(self, keys: DataFrame) -> int:
         """DELETE by key (copy-on-write): rows whose ``key_cols`` match any
@@ -628,13 +656,9 @@ class TxTable:
         right-to-be-forgotten, and the tombstone half of a branch merge
         all need it.
 
-        Same TWO-level pruning as merge_upsert: whole segments whose key
-        range misses the delete keys carry over by NAME; inside
-        overlapping segments, files are split by recorded key range into
-        carried-by-reference and overlapping (read, matching keys
-        anti-joined out, survivors rewritten). A file fully emptied by the
-        delete is simply dropped (zero-row staged files are never
-        published). Deleted rows surface as 'delete' rows in ``changes()``
+        merge_upsert's copy-on-write body with no inserted rows: the same
+        pruning and conflict policy; a delete that removes no row publishes
+        no version. Deleted rows surface as 'delete' rows in ``changes()``
         — the CDF feed ``merge_from_branch(propagate_deletes=True)`` and
         downstream replicas consume."""
         m = self.manifest()
@@ -649,44 +673,15 @@ class TxTable:
         keys = keys.select(
             [F.col(k).cast(target[k]).alias(k) for k in self.key_cols]
         ).distinct()
-        row = keys.select(
-            F.count(F.lit(1)).alias("n_keys"),
-            *[F.min(k).alias(f"lo_{k}") for k in self.key_cols],
-            *[F.max(k).alias(f"hi_{k}") for k in self.key_cols],
-        ).collect()[0]
-        if row["n_keys"] == 0:
-            return m["version"]  # no-op: don't churn history
-        bounds = {
-            k: (_norm_stat(row[f"lo_{k}"]), _norm_stat(row[f"hi_{k}"])) for k in self.key_cols
-        }
-        untouched_segs, carried_entries, overlapping = self._prune_split(m, bounds)
-        if not overlapping:
-            # Every file's key range provably misses the delete keys: the
-            # delete cannot remove a row, so committing would publish a
-            # byte-identical version — the same history churn the empty-
-            # keys early return avoids.
-            return m["version"]
-        paths = [os.path.join(self.table_dir, e["path"]) for e in overlapping]
-        current = self.spark.read.schema(m["schema"]).parquet(*paths)
-        survivors = current.join(keys, self.key_cols, "left_anti")
-        new = self._write_segments(carried_entries + self._stage_files(survivors))
-        return self._commit(untouched_segs + new, m["schema"], "delete", m["version"])
+        return self._copy_on_write(m, m["schema"], keys, None, "delete")
 
     def restore(self, version: int) -> int:
         """Roll back BY MOVING FORWARD: commit a new version with the file
         list of ``version``. History stays intact and auditable. Segments
         carry over by name, so a restore writes one small manifest no
         matter how large the table is."""
-        m = self.manifest(version)
-        if m is None:
-            raise FileNotFoundError(f"version {version} does not exist")
-        while True:
-            try:
-                return self._commit(
-                    m["segments"], m["schema"], "restore", self.latest_version()
-                )
-            except CommitConflict:
-                continue
+        m = self.manifest(version)  # FileNotFoundError if never committed or vacuumed
+        return self._publish(lambda _: m["segments"], m["schema"], "restore", self.manifest())
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two versions (Delta CDF shape):
@@ -966,11 +961,11 @@ class TxTable:
 
         Data-identical by construction (pure rewrite, no filter). Returns
         the new version, or None when fewer than two small files exist
-        (no-op — no empty commits). On a concurrent-writer conflict the
-        CommitConflict surfaces to the caller: the compaction inputs are
-        stale (the winner may have rewritten a compacted file), so the
-        whole operation must re-run against the new snapshot — never
-        blind-retried.
+        (no-op — no empty commits). Compaction changes no row, so it lands
+        on top of a concurrent commit that kept every segment it rewrote;
+        one that replaced such a segment (or changed the schema) raises
+        CommitConflict, and the caller re-runs compaction on the new
+        snapshot.
         """
         import math
 
@@ -1037,7 +1032,9 @@ class TxTable:
         else:
             packed = df.coalesce(n_out)
         new = self._write_segments(carried_entries + self._stage_files(packed))
-        return self._commit(carried_segs + new, m["schema"], "compact", m["version"])
+        return self._publish(
+            self._carry_onto(m, carried_segs, new, None), m["schema"], "compact", m
+        )
 
     def vacuum(self, keep_versions: int = 10, retention_seconds: float = 3600.0) -> list[str]:
         """Delete data files referenced by NO retained manifest (older

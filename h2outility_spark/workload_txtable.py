@@ -310,10 +310,11 @@ def q_txtable_concurrent_appends(spark, sf_dir):
     """Three writers appending AT THE SAME TIME (own table handles, own
     manifest reads) after a base append: all four read-modify-commit
     cycles race for version slots, the atomic ``os.link`` check-and-put
-    hands each version to exactly one writer, and the losers retry from
-    the NEW parent (storage_tx.py::append). The oracle states the
-    lossless union — a lost update (a retry that re-read a stale parent,
-    or a winner whose files the loser dropped) flips the hash.
+    hands each version to exactly one writer, and each loser rebuilds on
+    the NEW parent in the one commit loop (storage_tx.py::TxTable._publish).
+    The oracle states the lossless union — a lost update (a retry that
+    re-read a stale parent, or a winner whose files the loser dropped)
+    flips the hash.
     """
     import threading
 
@@ -331,9 +332,7 @@ def q_txtable_concurrent_appends(spark, sf_dir):
 
     def writer(lo: int, hi: int) -> None:
         try:
-            TxTable(spark, tdir, key_cols=["o_orderkey"]).append(
-                slice_mod(lo, hi), _retries=20
-            )
+            TxTable(spark, tdir, key_cols=["o_orderkey"]).append(slice_mod(lo, hi))
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -407,9 +406,10 @@ FROM orders WHERE o_orderkey % 100 < 6
     description="merge_upsert racing a concurrent append: CommitConflict surfaced, caller re-merges on the moved snapshot",
 )
 def q_txtable_concurrent_merge(spark, sf_dir):
-    """A MERGE racing an APPEND on the same table: merge_upsert documents
-    that a commit conflict SURFACES to the caller (re-merging against a
-    moved snapshot silently would be a lost-update hazard), so the merge
+    """A MERGE racing an APPEND on the same table. The appended keys
+    interleave with the update keys (``o_orderkey % 100``), so the
+    appended segment's key range meets the merge's and Delta's conflict
+    check raises CommitConflict to a merge that loses the race; the merge
     writer implements the documented contract — catch CommitConflict and
     re-run the whole merge against the new snapshot. Whichever
     interleaving wins, the final state is the same: the appended keys
@@ -439,7 +439,7 @@ def q_txtable_concurrent_merge(spark, sf_dir):
 
     def appender() -> None:
         try:
-            TxTable(spark, tdir, key_cols=["o_orderkey"]).append(slice_mod(4, 6), _retries=20)
+            TxTable(spark, tdir, key_cols=["o_orderkey"]).append(slice_mod(4, 6))
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 

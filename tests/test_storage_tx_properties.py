@@ -10,7 +10,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
-from h2outility_spark.storage_tx import TxTable
+from h2outility_spark.storage_tx import CommitConflict, TxTable
 
 KEYS = st.integers(min_value=0, max_value=9)
 VALS = st.integers(min_value=0, max_value=999)
@@ -85,6 +85,81 @@ def test_txtable_matches_model(spark, tmp_path_factory, ops):
             (got_ins if r["_change_type"] == "insert" else got_del)[row] += 1
         assert got_ins == want_ins, f"insert feed {v - 1}->{v}"
         assert got_del == want_del, f"delete feed {v - 1}->{v}"
+
+
+def _apply(model, op, arg):
+    """The model state after ``op`` (the serial semantics of each verb)."""
+    if op == "append":
+        return model + list(arg)
+    if op == "merge":
+        return [r for r in model if r[0] not in {k for k, _ in arg}] + list(arg)
+    if op == "delete":
+        return [r for r in model if r[0] not in set(arg)]
+    return model  # compact rewrites files, not rows
+
+
+def _run(spark, table, op, arg):
+    if op == "append":
+        table.append(df_of(spark, arg))
+    elif op == "merge":
+        table.merge_upsert(df_of(spark, arg))
+    elif op == "delete":
+        table.delete_keys(spark.createDataFrame([Row(k=k) for k in arg], "k int"))
+    else:
+        table.compact_files(target_rows=1000, small_rows=1_000_000)
+
+
+# A small key space, so racing writers' keys often meet, and often don't.
+KEYS6 = st.integers(min_value=0, max_value=5)
+UPSERTS = st.lists(st.tuples(KEYS6, VALS), min_size=1, max_size=2, unique_by=lambda t: t[0])
+DELETES = st.lists(KEYS6, min_size=1, max_size=2, unique=True)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    base=st.lists(st.tuples(KEYS6, VALS), min_size=2, max_size=3, unique_by=lambda t: t[0]),
+    verb=st.one_of(
+        st.tuples(st.just("merge"), UPSERTS),
+        st.tuples(st.just("delete"), DELETES),
+        st.tuples(st.just("compact"), st.just(None)),
+    ),
+    racer=st.one_of(
+        st.tuples(st.just("append"), UPSERTS),
+        st.tuples(st.just("merge"), UPSERTS),
+        st.tuples(st.just("delete"), DELETES),
+    ),
+)
+def test_lost_race_lands_as_the_serial_result_or_conflicts(spark, tmp_path_factory, base, verb, racer):
+    """Delta's conflict check, randomized: a merge, delete or compaction
+    whose commit loses its race to another writer either lands equal to
+    running after that writer (the serial result) or raises CommitConflict
+    and leaves the other writer's version the latest."""
+    tdir = str(tmp_path_factory.mktemp("txrace"))
+    table = TxTable(spark, tdir, key_cols=["k"])
+    for row in base:  # one file per row, so pruning has files to skip
+        table.append(df_of(spark, [row]))
+
+    real_commit, raced = table._commit, []
+
+    def racing_commit(segments, schema, op, parent):
+        if not raced and op == verb[0]:
+            raced.append(op)
+            _run(spark, TxTable(spark, tdir, key_cols=["k"]), *racer)
+        return real_commit(segments, schema, op, parent)
+
+    table._commit = racing_commit
+    try:
+        _run(spark, table, *verb)
+        conflicted = False
+    except CommitConflict:
+        conflicted = True
+    got = sorted(tuple(r) for r in table.snapshot().collect())
+    after_racer = _apply(list(base), *racer) if raced else list(base)
+    if conflicted:
+        assert raced and table.history()[-1]["op"] == racer[0]
+        assert got == sorted(after_racer)
+    else:
+        assert got == sorted(_apply(after_racer, *verb))
 
 
 KEYS4 = st.integers(min_value=0, max_value=3)
