@@ -196,12 +196,9 @@ def main(argv: list[str] | None = None) -> int:
             .option("pathGlobFilter", "events.parquet")
             .load(args.data)
         )
-        q = stream_upsert_to_txtable(
+        stream_upsert_to_txtable(
             stream, args.table, keys=["event_id"], order_col="ts", checkpoint_path=args.checkpoint
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
         from h2outility_spark.storage_tx import TxTable
 
         table = TxTable(spark, args.table, key_cols=["event_id"])

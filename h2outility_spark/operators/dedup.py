@@ -239,13 +239,23 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     Convergence is detected by counting changed labels (a count on a
     |nodes|-sized frame per round — the only driver-visible value), with
     at most 25 rounds.
+
+    Each superseded round's checkpoint, and the edge checkpoint after the
+    loop, is released as soon as nothing reads it (``DataFrame.unpersist``
+    does not reach a local checkpoint's RDD). The returned round's
+    checkpoint is kept — a released local checkpoint cannot be recomputed
+    — and is freed by GC once the result is dropped.
     """
+
+    def release(ckpt: DataFrame) -> None:
+        ckpt._jdf.logicalPlan().rdd().unpersist(False)
+
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     edges = edges.localCheckpoint()
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn("lab", F.col("node"))
-    for _ in range(25):
+    for round_no in range(25):
         nbr = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), F.col("lab")
         )
@@ -265,9 +275,12 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             .limit(1)
             .count()
         )
+        if round_no > 0:  # round 0 read the edge-derived seed labels
+            release(labels)
         labels = jumped
         if changed == 0:
             break
+    release(edges)
     return labels.select(F.col("node"), F.col("lab").alias("cluster_id"))
 
 

@@ -6,8 +6,10 @@ batch + high-watermark + cron (``src/SilentUpdater.py``,
 Structured Streaming: ``readStream`` + event-time watermark, with
 ``Trigger.AvailableNow`` as the cron-equivalent "drain what's there and
 stop". The registered ``stream_*`` queries build their streams and
-aggregates inline; this module holds what they share — the custom
-stateful operator (`stream_session_paths`), the transactional sinks
+aggregates in the registry (the file-drop scenarios through one
+drop-and-drain helper, ``workload_streaming._drop_and_drain``); this
+module holds what they share — the custom stateful operator
+(`stream_session_paths`), the transactional sinks
 (`stream_upsert_to_txtable`, `stream_dedup_ingest`) and the apply
 discipline.
 
@@ -16,8 +18,10 @@ The apply discipline is two pieces:
   * **One drain** (`drain_available_now`): a stream and its sink (an
     append parquet path, a complete-mode overwrite path, or a
     `foreachBatch` handler) run to completion under the bounded-batch
-    shuffle pin (`micro_batch_shuffle`). Every drain in the engine goes
-    through it.
+    shuffle pin (`micro_batch_shuffle`), and the stopped query comes back
+    for its ``recentProgress``. Every drain in the engine goes through
+    it: it is the one place a ``writeStream`` is started, so the
+    transactional sinks drain themselves and no caller stops a query.
   * **One batch-marker ledger** (`BatchLedger`): `foreachBatch` is
     at-least-once, so a handler with effects outside the checkpoint
     commits an atomic `applied_<batch_id>` marker (with an optional
@@ -37,6 +41,7 @@ import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from h2outility_spark.session import query_cache, release_query_caches
 
@@ -79,7 +84,7 @@ def micro_batch_shuffle(spark: SparkSession):
 
 def drain_available_now(
     stream: DataFrame, checkpoint: str, sink, output_mode: str = "append"
-) -> None:
+) -> StreamingQuery:
     """Run ``stream`` under ``Trigger.AvailableNow`` until everything
     available is processed, through ``checkpoint``, into ``sink``:
 
@@ -96,7 +101,12 @@ def drain_available_now(
     the one place the :func:`micro_batch_shuffle` pin is entered.
     processAllAvailable + stop rather than a bare awaitTermination:
     stateful operators with processing-time timeouts keep an AvailableNow
-    query alive after the data is drained."""
+    query alive after the data is drained.
+
+    Returns the STOPPED query: its ``recentProgress`` (per-batch input
+    rows and durations) survives the stop, and calling
+    ``processAllAvailable``/``stop``/``awaitTermination`` on it again
+    returns at once."""
     writer = (
         stream.writeStream.option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
@@ -115,6 +125,7 @@ def drain_available_now(
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
+    return q
 
 
 class BatchLedger:
@@ -293,7 +304,9 @@ def stream_upsert_to_txtable(
     end to end. Batch rows are assumed CDC-style newer-than-target;
     within-batch ordering is resolved by ``order_col``.
 
-    Returns the started StreamingQuery (the caller drains and stops it).
+    Drains everything available (one :func:`drain_available_now`, so the
+    merges run under the bounded-batch shuffle pin) and returns the
+    stopped StreamingQuery, so a caller neither drains nor stops it.
     """
     from h2outility_spark.storage_tx import TxTable
 
@@ -311,13 +324,7 @@ def stream_upsert_to_txtable(
         )
         table.merge_upsert(newest)
 
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName("tx-upsert")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_available_now(stream_df, checkpoint_path, merge_batch)
 
 
 def stream_dedup_ingest(stream_docs: DataFrame, table_dir: str, checkpoint_path: str) -> None:

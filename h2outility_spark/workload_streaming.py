@@ -105,8 +105,9 @@ def q_stream_dedup_ingest(spark, sf_dir):
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
 
-    # coalesce(1): exactly one new file per drain -> exactly one micro-batch
-    # per drain regardless of file-source batching defaults.
+    # Hand-written, not _drop_and_drain: the sink, the engine's
+    # stream_dedup_ingest, drains itself. coalesce(1): exactly one new file
+    # per drain -> exactly one micro-batch per drain.
     corpus.coalesce(1).write.mode("append").parquet(src)
     stream_dedup_ingest(stream, tbl, ckpt)
     batch.coalesce(1).write.mode("append").parquet(src)
@@ -134,6 +135,44 @@ _STREAM_CUT = "2024-01-03 00:00:00"
 _FLUSH_TS = "2030-01-01 00:00:00"
 
 
+def _drop_and_drain(batches, build, sink, output_mode: str) -> None:
+    """The file-drop scenario: a parquet drop directory tailed as a stream
+    through ONE checkpoint. Each frame of ``batches`` lands as one new file
+    (``coalesce(1)``) and is then drained (:func:`drain_available_now`
+    into ``sink`` with ``output_mode``), so each drain is exactly one
+    micro-batch and batch ids run 0, 1, 2, ... in ``batches`` order — a
+    later batch's totals must come out of the RESTORED state store.
+    ``build`` maps the source stream, read with ``batches[0].schema``, to
+    the drained one; it is applied once, so every drain restarts the same
+    plan. Owns the drop directory and the checkpoint."""
+    src = scratch_dir("h2ou_drop_src_")
+    ckpt = scratch_dir("h2ou_drop_ckpt_") + "/ckpt"
+    spark = batches[0].sparkSession
+    stream = build(spark.readStream.schema(batches[0].schema).format("parquet").load(src))
+    for batch in batches:
+        batch.coalesce(1).write.mode("append").parquet(src)
+        drain_available_now(stream, ckpt, sink, output_mode)
+
+
+def _cut_and_flush(ev):
+    """The event-time scenario's three drops of ``ev``: the rows before
+    ``_STREAM_CUT``, the rows from it, then one far-future sentinel row at
+    ``_FLUSH_TS`` that advances the watermark past every real window, so
+    append mode emits them all (the production "close the books"
+    pattern). The sentinel, built from ``ev.schema``, reads ``__flush__``
+    in its strings and -1 in its numbers, so each query filters it back
+    out; its timestamp is a string cast in the session time zone, so no
+    Python-local time zone enters."""
+    cut = F.lit(_STREAM_CUT).cast("timestamp")
+    fields = ev.schema.fields
+    literal = {"timestamp": _FLUSH_TS, "string": "__flush__"}
+    flush = ev.sparkSession.createDataFrame(
+        [tuple(literal.get(f.dataType.simpleString(), "-1") for f in fields)],
+        ", ".join(f"{f.name} string" for f in fields),
+    ).select(*(F.col(f.name).cast(f.dataType) for f in fields))
+    return [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut), flush]
+
+
 @query(
     "stream_watermark_windows",
     oracle=STREAM_WATERMARK_ORACLE,
@@ -149,37 +188,18 @@ def q_stream_watermark_windows(spark, sf_dir):
     window itself is filtered back out. Scale shape: the state store
     keys on (window, type) — O(open windows), never O(events).
     """
-    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
-
     ev = _t(spark, sf_dir, "events").select("ts", "event_type")
-    src = scratch_dir("h2ou_swm_src_")
     out = scratch_dir("h2ou_swm_out_") + "/out"
-    ckpt = scratch_dir("h2ou_swm_ckpt_") + "/ckpt"
-    cut = F.lit(_STREAM_CUT).cast("timestamp")
-    schema = StructType(
-        [StructField("ts", TimestampType()), StructField("event_type", StringType())]
-    )
 
-    agg = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("win.start").alias("hour_start"), "event_type", "cnt")
-    )
+    def build(stream):
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .select(F.col("win.start").alias("hour_start"), "event_type", "cnt")
+        )
 
-    # coalesce(1): one file per drain -> one micro-batch per drain
-    ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    spark.createDataFrame([(_FLUSH_TS, "__flush__")], "ts string, event_type string").select(
-        F.col("ts").cast("timestamp").alias("ts"), "event_type"
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-
+    _drop_and_drain(_cut_and_flush(ev), build, out, "append")
     return (
         read_parquet(spark, out)
         .filter(F.col("event_type") != "__flush__")
@@ -225,36 +245,18 @@ def q_stream_session_windows(spark, sf_dir):
     ``sessionization`` query's ``>`` convention would disagree on
     exact-gap pairs). State is O(open sessions), never O(events).
     """
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
-
     ev = _t(spark, sf_dir, "events").select("ts", "user_id")
-    src = scratch_dir("h2ou_ssw_src_")
     out = scratch_dir("h2ou_ssw_out_") + "/out"
-    ckpt = scratch_dir("h2ou_ssw_ckpt_") + "/ckpt"
-    cut = F.lit(_STREAM_CUT).cast("timestamp")
-    schema = StructType(
-        [StructField("ts", TimestampType()), StructField("user_id", LongType())]
-    )
 
-    agg = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "6 hours").alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("sw.start").alias("session_start"), "n_events")
-    )
+    def build(stream):
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.session_window("ts", "6 hours").alias("sw"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select("user_id", F.col("sw.start").alias("session_start"), "n_events")
+        )
 
-    ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    spark.createDataFrame([(_FLUSH_TS, -1)], "ts string, user_id long").select(
-        F.col("ts").cast("timestamp").alias("ts"), "user_id"
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-
+    _drop_and_drain(_cut_and_flush(ev), build, out, "append")
     return (
         read_parquet(spark, out)
         .filter(F.col("user_id") >= 0)
@@ -297,38 +299,11 @@ def q_stream_session_paths(spark, sf_dir):
     rest after the sentinel advances the watermark. The oracle restates
     the whole computation as batch lag-cumsum + ordered string_agg.
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
-
     from h2outility_spark.streaming.incremental import stream_session_paths
 
     ev = _t(spark, sf_dir, "events").select("ts", "user_id", "event_type", "event_id")
-    src = scratch_dir("h2ou_ssp_src_")
     out = scratch_dir("h2ou_ssp_out_") + "/out"
-    ckpt = scratch_dir("h2ou_ssp_ckpt_") + "/ckpt"
-    cut = F.lit(_STREAM_CUT).cast("timestamp")
-    schema = StructType(
-        [
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("event_id", LongType()),
-        ]
-    )
-
-    paths = stream_session_paths(spark.readStream.schema(schema).format("parquet").load(src))
-
-    ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(paths, ckpt, out)
-    ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(paths, ckpt, out)
-    spark.createDataFrame(
-        [(_FLUSH_TS, -1, "__flush__", -1)],
-        "ts string, user_id long, event_type string, event_id long",
-    ).select(
-        F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "event_id"
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(paths, ckpt, out)
-
+    _drop_and_drain(_cut_and_flush(ev), stream_session_paths, out, "append")
     return (
         read_parquet(spark, out)
         .filter(F.col("user_id") >= 0)
@@ -360,39 +335,22 @@ def q_stream_static_enrich(spark, sf_dir):
     checkpointed restarts. At scale this is the canonical enrichment
     topology: the fact stream never shuffles, the dim broadcasts.
     """
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_nationkey").cast("long").alias("c_nationkey")
     )
-    src = scratch_dir("h2ou_sse_src_")
     out = scratch_dir("h2ou_sse_out_") + "/out"
-    ckpt = scratch_dir("h2ou_sse_ckpt_") + "/ckpt"
-    schema = StructType(
-        [
-            StructField("o_orderkey", LongType()),
-            StructField("o_custkey", LongType()),
-            StructField("o_totalprice", DoubleType()),
-        ]
-    )
 
     def slice_mod(lo: int, hi: int):
         m = F.col("o_orderkey") % 100
         return base.filter((m >= lo) & (m < hi))
 
-    enriched = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src)
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "o_custkey", "c_nationkey", "o_totalprice")
-    )
+    def build(stream):
+        return stream.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")).select(
+            "o_orderkey", "o_custkey", "c_nationkey", "o_totalprice"
+        )
 
-    slice_mod(0, 2).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(enriched, ckpt, out)
-    slice_mod(2, 4).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(enriched, ckpt, out)
+    _drop_and_drain([slice_mod(0, 2), slice_mod(2, 4)], build, out, "append")
     return read_parquet(spark, out)
 
 
@@ -425,58 +383,25 @@ def q_stream_ohlc(spark, sf_dir):
     sentinel, drained with ``Trigger.AvailableNow`` against one
     checkpoint; the sentinel's window is filtered back out. State is
     O(open windows × types), never O(events)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     ev = _t(spark, sf_dir, "events").select("ts", "event_type", "value", "event_id")
-    src = scratch_dir("h2ou_sohlc_src_")
     out = scratch_dir("h2ou_sohlc_out_") + "/out"
-    ckpt = scratch_dir("h2ou_sohlc_ckpt_") + "/ckpt"
-    cut = F.lit(_STREAM_CUT).cast("timestamp")
-    schema = StructType(
-        [
-            StructField("ts", TimestampType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("event_id", LongType()),
-        ]
-    )
-
     order_key = F.struct(F.col("ts"), F.col("event_id"))
-    agg = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            fround(F.min_by(F.col("value"), order_key), 2).alias("open"),
-            fround(F.max("value"), 2).alias("high"),
-            fround(F.min("value"), 2).alias("low"),
-            fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
-            F.count(F.lit(1)).alias("n_obs"),
+
+    def build(stream):
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+            .agg(
+                fround(F.min_by(F.col("value"), order_key), 2).alias("open"),
+                fround(F.max("value"), 2).alias("high"),
+                fround(F.min("value"), 2).alias("low"),
+                fround(F.max_by(F.col("value"), order_key), 2).alias("close"),
+                F.count(F.lit(1)).alias("n_obs"),
+            )
+            .select(F.col("win.start").alias("hour_start"), "event_type", "open", "high", "low", "close", "n_obs")
         )
-        .select(F.col("win.start").alias("hour_start"), "event_type", "open", "high", "low", "close", "n_obs")
-    )
 
-    # coalesce(1): one file per drain -> one micro-batch per drain
-    ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-    spark.createDataFrame(
-        [(_FLUSH_TS, "__flush__", 0.0, 0)], "ts string, event_type string, value double, event_id long"
-    ).select(
-        F.col("ts").cast("timestamp").alias("ts"), "event_type", "value", "event_id"
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, out)
-
+    _drop_and_drain(_cut_and_flush(ev), build, out, "append")
     return (
         read_parquet(spark, out)
         .filter(F.col("event_type") != "__flush__")
@@ -518,7 +443,6 @@ def q_stream_ivm_agg(spark, sf_dir):
     replays; the drained-to-completion runs here never replay, so the
     hash certifies the maintenance algebra, not that recovery path."""
     from h2outility_spark.operators import ivm
-    from h2outility_spark.storage_tx import TxTable
 
     cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("bigint")
     sel = _t(spark, sf_dir, "orders").select(
@@ -526,8 +450,6 @@ def q_stream_ivm_agg(spark, sf_dir):
         (F.col("o_custkey") % 50).alias("cust_bucket"),
         cents.alias("cents"),
     )
-    src = scratch_dir("h2ou_sivm_src_")
-    ckpt = scratch_dir("h2ou_sivm_ckpt_") + "/ckpt"
     view = TxTable(spark, scratch_dir("h2ou_sivm_view_") + "/t", key_cols=["cust_bucket"])
     state = {"initialized": False}
 
@@ -543,12 +465,8 @@ def q_stream_ivm_agg(spark, sf_dir):
         touched = changes.select("cust_bucket").distinct()
         view.merge_upsert(new_view.join(touched, ["cust_bucket"], "left_semi"))
 
-    stream = spark.readStream.schema(sel.schema).format("parquet").load(src)
-
-    sel.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
-    sel.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
+    k = F.col("o_orderkey") % 2
+    _drop_and_drain([sel.filter(k == 0), sel.filter(k == 1)], lambda s: s, handle, "append")
     return view.snapshot().select("cust_bucket", "n_orders", "total_cents")
 
 
@@ -570,20 +488,14 @@ def q_stream_chunk_flow(spark, sf_dir):
     from h2outility_spark.operators import text as T
 
     docs = _t(spark, sf_dir, "documents")
-    src = scratch_dir("h2ou_schunk_src_")
     out = scratch_dir("h2ou_schunk_out_") + "/out"
-    ckpt = scratch_dir("h2ou_schunk_ckpt_") + "/ckpt"
-
-    chunks = T.chunk_sliding(
-        spark.readStream.schema(docs.schema).format("parquet").load(src),
-        size=_CHUNK_SIZE,
-        stride=_CHUNK_STRIDE,
+    k = F.col("doc_id") % 2
+    _drop_and_drain(
+        [docs.filter(k == 0), docs.filter(k == 1)],
+        lambda s: T.chunk_sliding(s, size=_CHUNK_SIZE, stride=_CHUNK_STRIDE),
+        out,
+        "append",
     )
-
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(chunks, ckpt, out)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(chunks, ckpt, out)
     return read_parquet(spark, out)
 
 
@@ -611,7 +523,6 @@ def q_stream_minmax_ivm(spark, sf_dir):
     per-batch cost O(changes) + the targeted-rescan tail, never
     O(table)."""
     from h2outility_spark.operators import ivm
-    from h2outility_spark.storage_tx import TxTable
 
     cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("bigint")
     orders = _t(spark, sf_dir, "orders").select(
@@ -624,8 +535,6 @@ def q_stream_minmax_ivm(spark, sf_dir):
         "cents", F.col("cents") + F.lit(500)
     )
 
-    src = scratch_dir("h2ou_smm_src_")
-    ckpt = scratch_dir("h2ou_smm_ckpt_") + "/ckpt"
     state_dir = scratch_dir("h2ou_smm_state_")
     t = TxTable(spark, scratch_dir("h2ou_smm_tbl_") + "/t", key_cols=["o_orderkey"])
     ctl: dict = {"version": None, "state_path": None, "n_batches": 0}
@@ -656,12 +565,7 @@ def q_stream_minmax_ivm(spark, sf_dir):
         ctl["state_path"] = path
         ctl["n_batches"] += 1
 
-    stream = spark.readStream.schema(base.schema).format("parquet").load(src)
-
-    base.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
-    upd.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
+    _drop_and_drain([base, upd], lambda s: s, handle, "append")
     assert ctl["n_batches"] == 2, ctl
 
     final = read_parquet(spark, ctl["state_path"])
@@ -719,29 +623,17 @@ def q_stream_mixture_plan(spark, sf_dir):
     b1 = docs.filter(F.col("doc_id") % 5 != 0)
     b2 = docs.filter(F.col("doc_id") % 5 == 0)
 
-    src = scratch_dir("h2ou_smix_src_")
-    ckpt = scratch_dir("h2ou_smix_ckpt_") + "/ckpt"
     state_path = scratch_dir("h2ou_smix_state_") + "/totals"
 
-    agg = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .load(src)
-        .groupBy("source")
-        .agg(
+    def build(stream):
+        return stream.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(token_count(F.col("text")).cast("bigint")).alias("total_tokens"),
         )
-    )
-
-    from h2outility_spark.streaming.incremental import drain_available_now
 
     # complete mode: every trigger overwrites state_path with the FULL
     # current totals
-    b1.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
+    _drop_and_drain([b1, b2], build, state_path, "complete")
 
     per_src = read_parquet(spark, state_path)
     nsrc = F.count(F.lit(1)).over(W.partitionBy())
@@ -821,16 +713,8 @@ def q_stream_heavy_hitters(spark, sf_dir):
     b1 = ev.filter(F.col("user_id") % 3 != 0)
     b2 = ev.filter(F.col("user_id") % 3 == 0)
 
-    src = scratch_dir("h2ou_scms_src_")
-    ckpt = scratch_dir("h2ou_scms_ckpt_") + "/ckpt"
     state_dir = scratch_dir("h2ou_scms_state_")
-    handle = make_cms_handler(spark, state_dir)
-    stream = spark.readStream.schema(ev.schema).format("parquet").load(src)
-
-    b1.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
+    _drop_and_drain([b1, b2], lambda s: s, make_cms_handler(spark, state_dir), "append")
     assert len(BatchLedger(state_dir).ids()) == 2, state_dir
 
     from pyspark.sql import Window as W
@@ -941,18 +825,11 @@ def q_late_data_quarantine(spark, sf_dir):
     b1 = ev.filter(F.col("user_id") % 2 == 0)
     b2 = ev.filter(F.col("user_id") % 2 != 0)
 
-    src = scratch_dir("h2ou_late_src_")
-    ckpt = scratch_dir("h2ou_late_ckpt_") + "/ckpt"
     main_dir = scratch_dir("h2ou_late_main_")
     quar_dir = scratch_dir("h2ou_late_quar_")
     meta_dir = scratch_dir("h2ou_late_meta_")
     handle = make_quarantine_handler(main_dir, quar_dir, meta_dir)
-    stream = spark.readStream.schema(ev.schema).format("parquet").load(src)
-
-    b1.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(stream, ckpt, handle)
+    _drop_and_drain([b1, b2], lambda s: s, handle, "append")
     assert len(BatchLedger(meta_dir).ids()) == 2, meta_dir
 
     main = spark.read.schema(ev.schema).parquet(
@@ -1017,20 +894,11 @@ def q_stream_jsonl_ingest(spark, sf_dir):
         )
     )
 
-    (
-        b1.coalesce(1)
-        .write.mode("append")
-        .option("timestampFormat", _JSON_TS_FMT)
-        .json(src)
-    )
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
-    (
-        b2.coalesce(1)
-        .write.mode("append")
-        .option("timestampFormat", _JSON_TS_FMT)
-        .json(src)
-    )
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
+    # Hand-written, not _drop_and_drain: the drops are JSON Lines written
+    # and read with a timestamp format, not parquet.
+    for b in (b1, b2):
+        b.coalesce(1).write.mode("append").option("timestampFormat", _JSON_TS_FMT).json(src)
+        drain_available_now(agg, ckpt, state_path, "complete")
 
     return read_parquet(spark, state_path).select(
         "event_type", "n_events", "first_ts", "last_ts", "total_cents"
@@ -1063,24 +931,15 @@ def q_stream_stratified_ingest(spark, sf_dir):
     b1 = docs.filter(F.col("doc_id") % 2 == 0)
     b2 = docs.filter(F.col("doc_id") % 2 != 0)
 
-    src = scratch_dir("h2ou_strat_src_")
-    ckpt = scratch_dir("h2ou_strat_ckpt_") + "/ckpt"
     state_path = scratch_dir("h2ou_strat_state_") + "/census"
 
-    stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
-    agg = (
-        hash_split(stream)
-        .groupBy("source", "split")
-        .agg(
+    def build(stream):
+        return hash_split(stream).groupBy("source", "split").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(token_count(F.col("text")).cast("bigint")).alias("total_tokens"),
         )
-    )
 
-    b1.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    drain_available_now(agg, ckpt, state_path, output_mode="complete")
+    _drop_and_drain([b1, b2], build, state_path, "complete")
 
     return read_parquet(spark, state_path).select(
         "source", "split", "n_docs", "total_tokens"
@@ -1105,8 +964,6 @@ def _cdc_replica_runner(spark, root: str, key_col: str, evolve_schema: bool = Fa
         TxTableCdcDataSource,
         net_changes,
     )
-    from h2outility_spark.storage_tx import TxTable
-    from h2outility_spark.streaming.incremental import BatchLedger, drain_available_now
 
     spark.dataSource.register(TxTableCdcDataSource)
     src_dir, ckpt = root + "/src", root + "/ckpt"

@@ -92,3 +92,15 @@ def test_pair_order_does_not_matter(spark):
     out = dedup.connected_components(_pairs(spark, [(9, 2), (7, 9), (2, 7)]))
     got = {r["node"]: r["cluster_id"] for r in out.collect()}
     assert got == {2: 2, 7: 2, 9: 2}
+
+
+def test_only_the_returned_round_stays_checkpointed(spark):
+    # each superseded round's local checkpoint and the edge checkpoint are
+    # released; only the returned round's checkpoint (freed by GC) may stay
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    out = dedup.connected_components(_pairs(spark, [(i, i + 1) for i in range(12)]))
+    assert {r["cluster_id"] for r in out.collect()} == {0}
+    assert len(persistent() - before) <= 1

@@ -153,3 +153,91 @@ def test_micro_batch_shuffle_pins_and_restores(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_stream_upsert_drains_itself_under_the_shuffle_pin(spark, tmp_path, monkeypatch):
+    # no caller-side drain: the function returns a stopped query whose
+    # progress survives, the merge already landed, and it ran under the
+    # bounded-batch pin (defaultParallelism, not the session's 200)
+    from h2outility_spark.storage_tx import TxTable
+
+    src = str(tmp_path / "src")
+    tdir = str(tmp_path / "txtable")
+    schema = "k long, ts timestamp, v double"
+    spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 1.0), (2, "2024-01-01 00:05:00", 2.0)],
+        "k long, ts string, v double",
+    ).selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v").write.parquet(src)
+
+    seen = []
+    merge = TxTable.merge_upsert
+
+    def spy(self, df, *args, **kwargs):
+        seen.append(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+        return merge(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(TxTable, "merge_upsert", spy)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        stream = spark.readStream.schema(schema).format("parquet").load(src)
+        q = incremental.stream_upsert_to_txtable(stream, tdir, ["k"], "ts", str(tmp_path / "ckpt"))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    assert not q.isActive
+    assert q.recentProgress
+    table = TxTable(spark, tdir, key_cols=["k"])
+    assert {r["k"]: r["v"] for r in table.snapshot().collect()} == {1: 1.0, 2: 2.0}
+    assert seen == [spark.sparkContext.defaultParallelism]
+
+
+def test_drop_and_drain_is_one_micro_batch_per_drop(spark):
+    # the batch discipline the file-drop scenarios certify restored state
+    # with: each drop drains as exactly one micro-batch, ids in drop order
+    from h2outility_spark.workload_streaming import _drop_and_drain
+
+    sizes = [3, 1, 4]
+    drops = [
+        spark.range(n).selectExpr("id AS k", f"{i} AS drop") for i, n in enumerate(sizes)
+    ]
+    seen = []
+
+    def record(df, batch_id):
+        seen.append((batch_id, df.count()))
+
+    _drop_and_drain(drops, lambda s: s, record, "append")
+    assert seen == [(0, 3), (1, 1), (2, 4)]
+
+
+def test_only_drain_available_now_starts_or_drains_a_stream():
+    # one drain: inside the package, `.writeStream` and
+    # `processAllAvailable` are touched only by drain_available_now
+    import ast
+    import pathlib
+
+    import h2outility_spark
+
+    root = pathlib.Path(h2outility_spark.__file__).parent
+    found = set()
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.scope = rel, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Attribute(self, node):
+            if node.attr in {"writeStream", "processAllAvailable"}:
+                found.add((self.rel, self.scope[-1], node.attr))
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        Finder(str(path.relative_to(root))).visit(ast.parse(path.read_text()))
+    assert found == {
+        ("streaming/incremental.py", "drain_available_now", "writeStream"),
+        ("streaming/incremental.py", "drain_available_now", "processAllAvailable"),
+    }
