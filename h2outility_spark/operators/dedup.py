@@ -12,12 +12,14 @@ constraint, SURVEY.md §2.7 U5); designed 100 TB-first:
     1, 8)`` kept as a HEX STRING — lexicographic min == numeric min for
     fixed-width hex, and md5 is identical in Spark and DuckDB, so the
     DuckDB oracle reproduces signatures exactly.
-  * LSH: band keys = concatenated signature slices; candidate pairs come
-    from a self-join on (band_idx, band_key) — the join explodes only
-    within buckets, never O(n²). Skew hazard: a boilerplate band key with
-    k docs makes k² pairs; cap bucket width upstream (filter giant
-    buckets into a quarantine list) on real data.
-  * Jaccard verify: exact n-gram Jaccard only for candidate pairs.
+  * LSH: one band layout, eight one-row bands (band i keyed by mh<i>).
+    Candidate pairs come from ONE band-bucket self-join on (band,
+    band_key), shared by the MinHash, SimHash and dHash (image) paths —
+    the join explodes only within buckets, never O(n²). Buckets are not
+    capped: a boilerplate band key with k docs makes k² pairs, so exact
+    dedup runs first.
+  * Jaccard verify: exact n-gram Jaccard only for candidate pairs, and
+    the one near-dup bar (Jaccard >= 0.2) applied inside it.
   * SimHash: 64-bit signature as 16 hex chars via per-bit majority vote,
     computed with portable arithmetic (hex-digit lookup + div/mod) so the
     oracle matches bit-for-bit.
@@ -87,7 +89,7 @@ def minhash_hash_sql(i: int) -> str:
     return f"substr(md5(shingle{suffix}), {8 * slot + 1}, 8)"
 
 
-_MINHASH_K = 8
+MINHASH_K = 8
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -95,67 +97,69 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     shingles of an md5-derived 32-bit hex hash (4 hashes per digest, the
     second digest seed-suffixed)."""
     sh = doc_shingles(docs)
-    aggs = [F.min(F.expr(minhash_hash_sql(i))).alias(f"mh{i}") for i in range(_MINHASH_K)]
+    aggs = [F.min(F.expr(minhash_hash_sql(i))).alias(f"mh{i}") for i in range(MINHASH_K)]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _banded(signatures: DataFrame, bands: list[list[int]]) -> DataFrame:
-    """(id, band, band_key) rows from ONE posexplode over an array of band
-    keys — not a per-band union, which would re-evaluate the whole signature
-    DAG once per band."""
-    band_keys = [F.concat_ws("|", *[F.col(f"mh{i}") for i in cols]) for cols in bands]
+def _banded(signatures: DataFrame) -> DataFrame:
+    """(id, band, band_key) rows of the one band layout: eight one-row
+    bands, band i keyed by ``mh<i>`` itself (never null: every signed doc
+    has a shingle). ONE posexplode over the key array — not a per-band
+    union, which would re-evaluate the whole signature DAG once per band."""
     return signatures.select(
-        F.col("doc_id"), F.posexplode(F.array(*band_keys)).alias("band", "band_key")
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.array(*[F.col(f"mh{i}") for i in range(MINHASH_K)])).alias("band", "band_key"),
     )
 
 
-def _pairs_from_banded(banded: DataFrame) -> DataFrame:
-    left = banded.alias("l")
-    right = banded.alias("r")
+def _bucket_pairs(banded: DataFrame) -> DataFrame:
+    """The one band-bucket self-join, behind MinHash, SimHash and dHash
+    candidates: ``banded`` rows are (id, band, band_key), optionally with a
+    ``sig`` column carried to both sides. Returns the distinct (id_a, id_b)
+    pairs with id_a < id_b that share a bucket in some band, plus
+    (sig_a, sig_b) when ``sig`` is carried. The join explodes only within
+    buckets, never O(n²)."""
+    cols = ["id"] + (["sig"] if "sig" in banded.columns else [])
+    left, right = banded.alias("l"), banded.alias("r")
     return (
         left.join(
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+            & (F.col("l.id") < F.col("r.id")),
         )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
+        .select(*[F.col(f"{s}.{c}").alias(f"{c}_{t}") for c in cols for s, t in (("l", "a"), ("r", "b"))])
         .distinct()
     )
 
 
-def lsh_candidate_pairs_between(
-    sigs_new: DataFrame,
-    sigs_old: DataFrame,
-    bands: list[list[int]],
-) -> DataFrame:
-    """Incremental-ingest candidate pairs: band the NEW batch's signatures
-    and probe the EXISTING corpus's banded index — (id_a = new, id_b =
-    old) pairs whose band keys collide. At 100 TB the old side is a
-    STORED band index (signatures are computed once at ingest and kept),
-    so a daily batch costs O(batch) signing + one hash join against the
-    index, never a corpus re-scan; here both sides are banded from their
-    signatures, which is the same plan shape."""
-    bn = _banded(sigs_new, bands).withColumnRenamed("doc_id", "id_a")
-    bo = _banded(sigs_old, bands).withColumnRenamed("doc_id", "id_b")
-    return bn.join(bo, ["band", "band_key"]).select("id_a", "id_b").distinct()
+def lsh_candidate_pairs_between(sigs_a: DataFrame, sigs_b: DataFrame) -> DataFrame:
+    """Candidate pairs ACROSS two signature sets: distinct (id_a, id_b),
+    id_a from ``sigs_a`` and id_b from ``sigs_b``, whose band keys collide
+    — the incremental-ingest probe of a new batch against the existing
+    corpus's band index. At 100 TB the corpus side is a STORED band index
+    (signatures are computed once at ingest and kept), so a daily batch
+    costs O(batch) signing + one hash join against the index, never a
+    corpus re-scan; here both sides are banded from their signatures,
+    which is the same plan shape."""
+    ba = _banded(sigs_a).withColumnRenamed("id", "id_a")
+    bb = _banded(sigs_b).withColumnRenamed("id", "id_b")
+    return ba.join(bb, ["band", "band_key"]).select("id_a", "id_b").distinct()
 
 
-def lsh_candidate_pairs(signatures: DataFrame, bands: list[list[int]]) -> DataFrame:
-    """Self-join signatures on per-band keys → distinct candidate (a, b)
-    pairs with a < b. ``bands`` lists the signature indices in each band.
-    No bucket-width cap: a boilerplate band key with k members yields its
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Distinct candidate (id_a, id_b) pairs, id_a < id_b, whose MinHash
+    signatures agree in at least one of the eight one-row bands. No
+    bucket-width cap: a boilerplate band key with k members yields its
     k² pairs (run exact dedup first)."""
-    return _pairs_from_banded(_banded(signatures, bands))
+    return _bucket_pairs(_banded(signatures))
 
 
-def jaccard_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
-    """Exact n-gram Jaccard for the given (id_a, id_b) pairs.
-
-    |A∩B| via a join of the two docs' distinct shingle sets; |A∪B| =
-    |A| + |B| − |A∩B|. Only candidate pairs are touched — the expensive
-    exact check never runs O(n²) at scale.
-    """
+def _shingle_overlap(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """id_a, id_b, n_inter, sz_a and sz_b for the given pairs that share a
+    shingle: |A∩B| via a join of the two docs' distinct shingle sets, and
+    each doc's set size. Only candidate pairs are touched — the exact
+    check never runs O(n²) at scale."""
     sh = doc_shingles(docs).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.withColumnRenamed("doc_id", "id_a")
@@ -166,16 +170,21 @@ def jaccard_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
+    return inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a").join(
+        sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b"
+    )
+
+
+def jaccard_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """The near-duplicates among the given (id_a, id_b) pairs: exact 3-gram
+    Jaccard |A∩B| / (|A| + |B| − |A∩B|), returned only where it is >= 0.2
+    (inclusive, unrounded) — the one near-dup bar of every MinHash chain."""
+    inter = F.col("n_inter").cast("double")
+    union = (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).cast("double")
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_inter").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).cast("double")).alias(
-                "jaccard"
-            ),
-        )
+        _shingle_overlap(pairs, docs)
+        .select("id_a", "id_b", (inter / union).alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.2)
     )
 
 
@@ -188,28 +197,14 @@ def containment_for_pairs(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     (the union is dominated by the long side) but containment ≈ 1 in the
     short→long direction — the measure real pipelines use to catch
     boilerplate inclusion and quote-expansion dups. Same candidates-only
-    cost shape as :func:`jaccard_for_pairs` (the exact check never runs
-    O(n²); candidates come from the banded signature join).
+    cost shape as :func:`jaccard_for_pairs`.
     """
-    sh = doc_shingles(docs).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.withColumnRenamed("doc_id", "id_a")
-    b = sh.withColumnRenamed("doc_id", "id_b")
-    inter = (
-        pairs.join(a, "id_a")
-        .join(b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_inter").cast("double") / F.col("sz_a").cast("double")).alias("cont_ab"),
-            (F.col("n_inter").cast("double") / F.col("sz_b").cast("double")).alias("cont_ba"),
-        )
+    inter = F.col("n_inter").cast("double")
+    return _shingle_overlap(pairs, docs).select(
+        "id_a",
+        "id_b",
+        (inter / F.col("sz_a").cast("double")).alias("cont_ab"),
+        (inter / F.col("sz_b").cast("double")).alias("cont_ba"),
     )
 
 
@@ -424,29 +419,12 @@ def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     signature parsed in halves — a full 64-bit parse would overflow signed
     BIGINT for high signatures).
     """
-    sigs = simhash_signatures(docs)
-    banded = sigs.select(
-        F.col("doc_id"),
-        "simhash",
+    banded = simhash_signatures(docs).select(
+        F.col("doc_id").alias("id"),
+        F.col("simhash").alias("sig"),
         F.posexplode(
             F.expr("transform(sequence(0, 3), j -> substr(simhash, j*4+1, 4))")
-        ).alias("band", "bval"),
-    )
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bval") == F.col("r.bval"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"),
-            F.col("l.simhash").alias("sig_a"),
-            F.col("r.doc_id").alias("id_b"),
-            F.col("r.simhash").alias("sig_b"),
-        )
-        .distinct()
+        ).alias("band", "band_key"),
     )
 
     def half(sig: str, off: int) -> str:
@@ -456,10 +434,7 @@ def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
         f"CAST(bit_count({half('sig_a', 1)} ^ {half('sig_b', 1)}) "
         f"+ bit_count({half('sig_a', 9)} ^ {half('sig_b', 9)}) AS INT)"
     )
-    return (
-        cand.select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= 3)
-    )
+    return _bucket_pairs(banded).select("id_a", "id_b", ham.alias("hamming")).filter(F.col("hamming") <= 3)
 
 
 # ---------------------------------------------------------------------------
@@ -489,25 +464,13 @@ def incremental_neardup_filter(batch: DataFrame, existing: DataFrame) -> DataFra
     # shingle union and the final anti join
     survivors = query_cache(bfp.join(efp, "fp", "left_anti"))
 
-    bands = [[i] for i in range(_MINHASH_K)]
-    bs = minhash_signatures(survivors)
-    es = minhash_signatures(existing)
-    bb = _banded(bs, bands).alias("b")
-    eb = _banded(es, bands).alias("e")
-    cand = (
-        eb.join(bb, ["band", "band_key"])
-        .select(F.col("e.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    # (id_a = corpus doc, id_b = batch doc): the corpus side stays the left
+    # side of the band join
+    cand = lsh_candidate_pairs_between(minhash_signatures(existing), minhash_signatures(survivors))
     docs_all = existing.select(F.col("doc_id"), F.col("text")).unionByName(
         survivors.select(F.col("doc_id"), F.col("text"))
     )
-    jac = jaccard_for_pairs(cand, docs_all)
-    drops = (
-        jac.filter(F.col("jaccard") >= 0.2)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
+    drops = jaccard_for_pairs(cand, docs_all).select(F.col("id_b").alias("doc_id")).distinct()
     return survivors.join(drops, "doc_id", "left_anti").select("doc_id", "fp")
 
 

@@ -33,6 +33,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from h2outility_spark.operators.dedup import _bucket_pairs
+
 ASSET_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -306,15 +308,13 @@ def image_neardup_pairs(assets: DataFrame) -> DataFrame:
     hash: band each 64-bit dHash into four 16-bit keys. Pigeonhole
     guarantee: at Hamming distance <= 3 the differing bits occupy at most
     3 bands, so at least one band matches exactly and the pair is ALWAYS a
-    candidate. Candidates come from a band-key self-join, never all pairs;
+    candidate. Candidates come from the band-bucket self-join the MinHash
+    and SimHash paths share (``dedup._bucket_pairs``), never all pairs;
     the exact Hamming distance is then verified JVM-side with
     ``bit_count(xor)``."""
-    hashes = image_dhash(assets).filter(
-        F.col("dhash").isNotNull()
-    )
-    banded = hashes.select(
-        "asset_id",
-        "dhash",
+    banded = image_dhash(assets).filter(F.col("dhash").isNotNull()).select(
+        F.col("asset_id").alias("id"),
+        F.col("dhash").alias("sig"),
         F.posexplode(
             F.array(
                 *[
@@ -324,24 +324,8 @@ def image_neardup_pairs(assets: DataFrame) -> DataFrame:
             )
         ).alias("band", "band_key"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.asset_id") < F.col("b.asset_id")),
-        )
-        .select(
-            F.col("a.asset_id").alias("id_a"),
-            F.col("b.asset_id").alias("id_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return cand.select(
+    return _bucket_pairs(banded).select(
         "id_a",
         "id_b",
-        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
+        F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
     ).filter(F.col("hamming") <= 3)

@@ -63,8 +63,9 @@ def build_corpus(
          calibrated score within each source);
       2. exact dedup — one representative (min id) per normalized
          fingerprint;
-      3. near dedup — minhash/LSH candidates, exact Jaccard >=
-         0.2 verification, connected components, one
+      3. near dedup — the one MinHash chain of ``operators/dedup.py``:
+         LSH candidates over its fixed band layout, exact Jaccard
+         verification at its >= 0.2 bar, connected components, one
          canonical doc per cluster;
       4. decontamination (when ``benchmark`` docs are given) — drop docs
          sharing more than ``max_shared_grams`` distinct trigrams with the
@@ -88,11 +89,8 @@ def build_corpus(
     stats["exact_unique"] = uniq.count()
 
     sigs = dedup.minhash_signatures(uniq)
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(8)])
-    verified = dedup.jaccard_for_pairs(pairs, uniq).filter(
-        F.col("jaccard") >= 0.2
-    )
-    clusters = dedup.connected_components(verified.select("id_a", "id_b"))
+    pairs = dedup.lsh_candidate_pairs(sigs)
+    clusters = dedup.connected_components(dedup.jaccard_for_pairs(pairs, uniq))
     canon = dedup.canonical_docs(uniq, clusters).cache()
     stats["near_canonical"] = canon.count()
 

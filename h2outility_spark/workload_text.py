@@ -18,6 +18,7 @@ from pyspark.sql import Window as W, functions as F
 
 from h2outility_spark.functions import fround
 from h2outility_spark.operators import dedup, text
+from h2outility_spark.operators.dedup import MINHASH_K
 from h2outility_spark.operators.text import token_count
 from h2outility_spark.session import query_cache
 from h2outility_spark.workload import _t, query, sql_round
@@ -55,8 +56,6 @@ def sh_cte(src: str = "documents") -> str:
 
 TOKS_CTE = toks_cte()
 SH_CTE = sh_cte()
-
-MINHASH_K = 8
 
 
 def mh_cte(src: str = "documents") -> str:
@@ -464,9 +463,8 @@ def q_neardup_minhash_pairs(spark, sf_dir):
     # signatures feed the self-join twice and jaccard reuses the shingles —
     # cache the small intermediates instead of re-deriving them per branch
     sigs = query_cache(dedup.minhash_signatures(docs))
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
-    jac = dedup.jaccard_for_pairs(pairs, docs)
-    return jac.filter(F.col("jaccard") >= 0.2).select(
+    pairs = dedup.lsh_candidate_pairs(sigs)
+    return dedup.jaccard_for_pairs(pairs, docs).select(
         "id_a", "id_b", fround(F.col("jaccard"), 4).alias("jaccard")
     )
 
@@ -488,9 +486,8 @@ def q_neardup_minhash_pairs(spark, sf_dir):
 def q_neardup_clusters(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     sigs = query_cache(dedup.minhash_signatures(docs))
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
-    verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
-    return dedup.connected_components(verified.select("id_a", "id_b"))
+    pairs = dedup.lsh_candidate_pairs(sigs)
+    return dedup.connected_components(dedup.jaccard_for_pairs(pairs, docs))
 
 
 _N_TOKENS_SQL = (
@@ -543,9 +540,8 @@ def q_corpus_clean(spark, sf_dir):
         q.join(groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi")
     )
     sigs = dedup.minhash_signatures(kept)
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
-    verified = dedup.jaccard_for_pairs(pairs, kept).filter(F.col("jaccard") >= 0.2)
-    clusters = dedup.connected_components(verified.select("id_a", "id_b"))
+    pairs = dedup.lsh_candidate_pairs(sigs)
+    clusters = dedup.connected_components(dedup.jaccard_for_pairs(pairs, kept))
     return dedup.canonical_docs(kept, clusters).select("doc_id", "n_tokens")
 
 
@@ -572,8 +568,7 @@ def q_ngram_jaccard_blocked(spark, sf_dir):
     d1 = docs.select(F.col("doc_id").alias("id_a"), "lang", "source")
     d2 = docs.select(F.col("doc_id").alias("id_b"), "lang", "source")
     pairs = d1.join(d2, ["lang", "source"]).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    jac = dedup.jaccard_for_pairs(pairs, docs)
-    return jac.filter(F.col("jaccard") >= 0.2).select(
+    return dedup.jaccard_for_pairs(pairs, docs).select(
         "id_a", "id_b", fround(F.col("jaccard"), 4).alias("jaccard")
     )
 
@@ -1639,9 +1634,8 @@ def q_dedup_keep_best(spark, sf_dir):
     """
     docs = _t(spark, sf_dir, "documents")
     sigs = query_cache(dedup.minhash_signatures(docs))
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
-    verified = dedup.jaccard_for_pairs(pairs, docs).filter(F.col("jaccard") >= 0.2)
-    cc = dedup.connected_components(verified.select("id_a", "id_b"))
+    pairs = dedup.lsh_candidate_pairs(sigs)
+    cc = dedup.connected_components(dedup.jaccard_for_pairs(pairs, docs))
     memb = (
         docs.select("doc_id", "n_chars")
         .join(cc, docs["doc_id"] == cc["node"], "left")
@@ -1704,7 +1698,7 @@ def q_minhash_containment_pairs(spark, sf_dir):
     """
     docs = _t(spark, sf_dir, "documents")
     sigs = query_cache(dedup.minhash_signatures(docs))
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)])
+    pairs = dedup.lsh_candidate_pairs(sigs)
     cont = dedup.containment_for_pairs(pairs, docs)
     return cont.filter(
         F.greatest(F.col("cont_ab"), F.col("cont_ba")) >= 0.5
@@ -1798,11 +1792,8 @@ def q_dedup_incremental_lsh(spark, sf_dir):
     old = docs.filter(F.col("doc_id") % 5 != 0)
     sigs_new = dedup.minhash_signatures(new)
     sigs_old = dedup.minhash_signatures(old)
-    pairs = dedup.lsh_candidate_pairs_between(
-        sigs_new, sigs_old, bands=[[i] for i in range(MINHASH_K)]
-    )
-    jac = dedup.jaccard_for_pairs(pairs, docs)
-    return jac.filter(F.col("jaccard") >= 0.2).select(
+    pairs = dedup.lsh_candidate_pairs_between(sigs_new, sigs_old)
+    return dedup.jaccard_for_pairs(pairs, docs).select(
         "id_a", "id_b", fround(F.col("jaccard"), 4).alias("jaccard")
     )
 
@@ -1876,9 +1867,7 @@ def q_neardup_ensemble_agree(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     sigs = dedup.minhash_signatures(docs)
-    text_pairs = dedup.jaccard_for_pairs(
-        dedup.lsh_candidate_pairs(sigs, bands=[[i] for i in range(MINHASH_K)]), docs
-    ).filter(F.col("jaccard") >= 0.2)
+    text_pairs = dedup.jaccard_for_pairs(dedup.lsh_candidate_pairs(sigs), docs)
     e = emb.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v"))
     a = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))

@@ -51,27 +51,39 @@ def test_kmeans_reduces_inertia(spark):
     assert five_step.count() == 4 * 64
 
 
-def test_lsh_bucket_quarantine(spark):
+def test_lsh_boilerplate_bucket_pairs_in_full(spark):
     """A boilerplate cluster (many docs sharing one band key) is not
     quarantined: it pairs fully (k² pairs), beside the small colliding
     groups, each pair emitted once across bands."""
     from h2outility_spark.operators.dedup import lsh_candidate_pairs
 
     # 30 boilerplate docs share signature "HOT" in band 0; 4 normal docs
-    # form two small colliding groups; nothing else collides.
-    rows = [Row(doc_id=i, mh0="HOT", mh1=f"u{i}") for i in range(30)]
-    rows += [
-        Row(doc_id=100, mh0="aa", mh1="x1"),
-        Row(doc_id=101, mh0="aa", mh1="x2"),
-        Row(doc_id=102, mh0="bb", mh1="y1"),
-        Row(doc_id=103, mh0="bb", mh1="y1"),
-    ]
+    # form two small colliding groups; bands 2..7 are unique per doc, so
+    # nothing else collides.
+    def sig(doc_id, mh0, mh1):
+        return Row(doc_id=doc_id, mh0=mh0, mh1=mh1, **{f"mh{i}": f"{i}-{doc_id}" for i in range(2, 8)})
+
+    rows = [sig(i, "HOT", f"u{i}") for i in range(30)]
+    rows += [sig(100, "aa", "x1"), sig(101, "aa", "x2"), sig(102, "bb", "y1"), sig(103, "bb", "y1")]
     sigs = spark.createDataFrame(rows)
 
-    pairs = lsh_candidate_pairs(sigs, [[0], [1]])
+    pairs = lsh_candidate_pairs(sigs)
     # HOT k^2 + (100,101) + (102,103) (distinct across its two bands)
     assert pairs.count() == 30 * 29 // 2 + 1 + 1
     assert pairs.filter(F.col("id_a") >= 100).count() == 2
+
+
+def test_jaccard_bar_is_inclusive_at_one_fifth(spark):
+    """jaccard_for_pairs returns only pairs at Jaccard >= 0.2: one shared
+    3-gram of 3 + 3 (exactly 1/5) is kept at 0.2; one of 3 + 4 (1/6) is not."""
+    from h2outility_spark.operators.dedup import jaccard_for_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y"), (3, "a b c p q r")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    got = [tuple(r) for r in jaccard_for_pairs(pairs, docs).collect()]
+    assert got == [(1, 2, 0.2)]
 
 
 def test_rp_lsh_bucket_cap(spark):
