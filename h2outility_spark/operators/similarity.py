@@ -1,8 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
 Extension surface (BASELINE.json north star) — brute-force cosine top-k as
-the exactness baseline, and an IVF-style (inverted-file / centroid-bucketed)
-variant as the scale path.
+the exactness baseline; IVF, PQ and IVF-PQ as the scale paths; RP-LSH as
+the near-dup prefilter.
+
+One chain, one implementation per stage:
+  * sides — a query side (query_id, qv, __nq) and a candidate side
+    (cand_id, cv, __nc), each (id, v as array<double>, v·v) from
+    :func:`_side`; every cosine is :func:`_cosine` over the two;
+  * probe — :func:`_probe` scores queries against the broadcast packed
+    centroids and keeps each query's ``n_probe`` best cells (ivf_search,
+    ivfpq_search_cells); ivf_assign_multi ranks the same cell scores;
+  * ADC → re-rank — :func:`_adc_rerank` scores candidates against their
+    PQ reconstructions, keeps a shortlist and re-scores it exactly
+    (pq_search, ivfpq_search_cells);
+  * top-k — :func:`_top_k`, the one ``row_number`` window with the
+    score-then-id tie-break.
 
 Scale design:
   * Brute force is a broadcast nested-loop: broadcast the (small) query set
@@ -24,7 +37,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from h2outility_spark.functions import fround
 from h2outility_spark.session import query_cache
@@ -50,31 +63,46 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
+# The two sides of every cosine join, each (id, v as array<double>, v·v).
+_QUERY = ("query_id", "qv", "__nq")
+_CAND = ("cand_id", "cv", "__nc")
+
+
+def _side(frame: DataFrame, role: tuple[str, str, str], id_col: str, vec_col: str, *keep: Column) -> DataFrame:
+    """One side of a cosine join: the ``keep`` columns, then (id, v as
+    array<double>, v·v) named by ``role``. The self-dot is folded once per
+    row, so :func:`_cosine` folds once per pair instead of three times; it
+    multiplies the same doubles in the same order as
+    dot(a,b)/sqrt(dot(a,a)*dot(b,b)), so scores are bit-identical (the
+    wave-1 embedding_knn measurement: −62% on the pair stage)."""
+    v = as_double(F.col(vec_col))
+    return frame.select(*keep, F.col(id_col).alias(role[0]), v.alias(role[1]), dot(v, v).alias(role[2]))
+
+
+def _cosine(name: str) -> Column:
+    """Cosine of a query-side row and a candidate-side row."""
+    return (dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__nc"))).alias(name)
+
+
+def _top_k(df: DataFrame, partition: str | list[str], order: list, k: int) -> DataFrame:
+    """The rows ranked <= ``k`` within each ``partition`` group by ``order``,
+    rank column dropped. Every ``order`` ends in an id, so ties break on
+    it and the kept set is deterministic — the one tie-break rule of the
+    top-k windows here."""
+    w = Window.partitionBy(partition).orderBy(*order)
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+
+
 def brute_force_topk(candidates: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k of every query against all candidates (self-match
     excluded). Queries are broadcast; ranking is a window top-k partitioned
-    by query id with a deterministic tie-break on candidate id. The
-    per-side self-dots are precomputed once per row instead of once per
-    pair (n folds, not n·k)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("qv"),
-        dot(as_double(F.col("embedding")), as_double(F.col("embedding"))).alias("__nq"),
+    by query id with a deterministic tie-break on candidate id."""
+    q = _side(queries, _QUERY, "vec_id", "embedding")
+    c = _side(candidates, _CAND, "vec_id", "embedding")
+    scored = c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id")).select(
+        "query_id", "cand_id", _cosine("cos_sim")
     )
-    c = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        as_double(F.col("embedding")).alias("cv"),
-        dot(as_double(F.col("embedding")), as_double(F.col("embedding"))).alias("__nc"),
-    )
-    sim = dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__nc"))
-    scored = (
-        c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", sim.alias("cos_sim"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _top_k(scored, "query_id", [F.col("cos_sim").desc(), F.col("cand_id")], k)
 
 
 def centroids_by_label(embeddings: DataFrame) -> DataFrame:
@@ -87,6 +115,16 @@ def centroids_by_label(embeddings: DataFrame) -> DataFrame:
     return exploded.groupBy("label", "pos").agg(F.avg("x").alias("centroid_val"))
 
 
+def pack_vectors(frame: DataFrame, *keys: str) -> DataFrame:
+    """(keys, pos, cv) rows → (keys, cvec): each group's components as one
+    array in ``pos`` order."""
+    return (
+        frame.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
+        .select(*keys, F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
+    )
+
+
 def pack_centroids(centroids: DataFrame) -> DataFrame:
     """(label, pos, centroid_val) rows → (cell, cvec array<double>).
 
@@ -95,11 +133,23 @@ def pack_centroids(centroids: DataFrame) -> DataFrame:
     makes raw averages differ in the last ulp.
     """
     val = fround(F.col("centroid_val"), 6)
-    return (
-        centroids.select(F.col("label").alias("cell"), "pos", val.alias("cv"))
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
-        .select("cell", F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
+    return pack_vectors(centroids.select(F.col("label").alias("cell"), "pos", val.alias("cv")), "cell")
+
+
+def _cell_sims(q: DataFrame, cells: DataFrame) -> DataFrame:
+    """Every query-side row scored against every packed centroid (cell,
+    cvec), the centroids broadcast: (query_id, qv, __nq, cell, cell_sim)."""
+    c = _side(cells, _CAND, "cell", "cvec")
+    return q.join(F.broadcast(c)).select(
+        "query_id", "qv", "__nq", F.col("cand_id").alias("cell"), _cosine("cell_sim")
+    )
+
+
+def _probe(q: DataFrame, cells: DataFrame, n_probe: int) -> DataFrame:
+    """The IVF cell probe: each query's ``n_probe`` nearest packed cells by
+    centroid cosine, ties to the lower cell id — (query_id, qv, __nq, cell)."""
+    return _top_k(_cell_sims(q, cells), "query_id", [F.col("cell_sim").desc(), F.col("cell")], n_probe).drop(
+        "cell_sim"
     )
 
 
@@ -126,47 +176,17 @@ def ivf_search(
     (query, cand) before ranking. Costs one extra shuffle on the small
     scored set; required for correctness only in the spill layout.
     """
-    from pyspark.sql import Window as W
-
-    cents = pack_centroids(centroids_by_label(embeddings))
-    # Self-dots precomputed per SIDE, not per pair: cosine(a,b) =
-    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)) with the same doubles multiplied in
-    # the same order, so scores are bit-identical while the in-cell scan
-    # runs one fold per pair instead of three (the wave-1 embedding_knn
-    # measurement: −62% on the pair stage).
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
-    ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
-    cents_n = cents.withColumn("__ncell", dot(F.col("cvec"), F.col("cvec")))
-    scored_cells = q.join(F.broadcast(cents_n)).select(
-        "query_id",
-        "qv",
-        "__nq",
-        "cell",
-        (dot(F.col("qv"), F.col("cvec")) / F.sqrt(F.col("__nq") * F.col("__ncell"))).alias("cell_sim"),
-    )
-    wc = W.partitionBy("query_id").orderBy(F.col("cell_sim").desc(), F.col("cell"))
-    best_cell = (
-        scored_cells.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= n_probe)
-        .select("query_id", "qv", "__nq", "cell")
-    )
-    cands = embeddings.select(
-        F.col("vec_id").alias("cand_id"), F.col("label").alias("cell"), as_double(F.col("embedding")).alias("cv2")
-    ).withColumn("__ncv", dot(F.col("cv2"), F.col("cv2")))
+    q = _side(queries, _QUERY, "vec_id", "embedding")
+    best = _probe(q, pack_centroids(centroids_by_label(embeddings)), n_probe)
+    cands = _side(embeddings, _CAND, "vec_id", "embedding", F.col("label").alias("cell"))
     scored = (
-        cands.join(F.broadcast(best_cell), "cell")
+        cands.join(F.broadcast(best), "cell")
         .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (dot(F.col("qv"), F.col("cv2")) / F.sqrt(F.col("__nq") * F.col("__ncv"))).alias("cos_sim"),
-        )
+        .select("query_id", "cand_id", _cosine("cos_sim"))
     )
     if spill:
         scored = scored.groupBy("query_id", "cand_id").agg(F.max("cos_sim").alias("cos_sim"))
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _top_k(scored, "query_id", [F.col("cos_sim").desc(), F.col("cand_id")], k)
 
 
 def ivf_assign_multi(
@@ -200,33 +220,21 @@ def ivf_assign_multi(
     1.05): adaptive serves row budgets BELOW fixed-m's floor — 0.800
     recall at 3.3% rows (probe 3) and 0.774 at 2.2% rows (probe 2), where
     the cheapest fixed-m point is 0.898 at 9.4%; at budgets >= ~9% rows
-    fixed-m wins outright. Same broadcast-centroids narrow-map shape as
-    ivf_assign.
+    fixed-m wins outright. ``m=1`` without ``ratio`` is the plain
+    nearest-cell assignment.
     """
-    from pyspark.sql import Window as W
-
-    packed = (
-        centroids.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("pairs"))
-        .select(F.col("label").alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
+    cells = pack_vectors(
+        centroids.select(F.col("label").alias("cell"), "pos", F.col("centroid_val").alias("cv")), "cell"
     )
-    # per-side self-dots: one fold per (vector, cell) pair instead of three;
-    # same multiply order, bit-identical sims
-    v = embeddings.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v")).withColumn(
-        "__nv", dot(F.col("v"), F.col("v"))
+    scored = _cell_sims(_side(embeddings, _QUERY, "vec_id", "embedding"), cells).select(
+        F.col("query_id").alias("vec_id"), "cell", "cell_sim"
     )
-    packed = packed.withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
-    scored = v.join(F.broadcast(packed)).select(
-        "vec_id",
-        "cell",
-        (dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("__nv") * F.col("__ncv"))).alias("sim"),
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
+    w = Window.partitionBy("vec_id").orderBy(F.col("cell_sim").desc(), F.col("cell"))
     ranked = scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= m)
     if ratio is not None:
-        best = F.max(F.when(F.col("rk") == 1, F.col("sim"))).over(W.partitionBy("vec_id"))
+        best = F.max(F.when(F.col("rk") == 1, F.col("cell_sim"))).over(Window.partitionBy("vec_id"))
         ranked = ranked.withColumn("best_sim", best).filter(
-            (F.col("rk") == 1) | ((1 - F.col("sim")) <= F.lit(ratio) * (1 - F.col("best_sim")))
+            (F.col("rk") == 1) | ((1 - F.col("cell_sim")) <= F.lit(ratio) * (1 - F.col("best_sim")))
         )
     return ranked.select("vec_id", "cell")
 
@@ -481,31 +489,6 @@ def cosine_neardup_pairs_lsh(
     )
 
 
-def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each vector to its nearest centroid by cosine (broadcast join
-    against the collected centroid vectors). Output: (id, cell)."""
-    packed = (
-        centroids.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("pairs"))
-        .select(F.col("label").alias("cell"), F.expr("transform(pairs, p -> p.centroid_val)").alias("cv"))
-    )
-    # per-side self-dots: one fold per (vector, cell) pair instead of three;
-    # same multiply order, bit-identical sims
-    v = embeddings.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v")).withColumn(
-        "__nv", dot(F.col("v"), F.col("v"))
-    )
-    packed = packed.withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
-    scored = v.join(F.broadcast(packed)).select(
-        "vec_id",
-        "cell",
-        (dot(F.col("v"), F.col("cv")) / F.sqrt(F.col("__nv") * F.col("__ncv"))).alias("sim"),
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).select("vec_id", "cell")
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — memory-compressed ANN
 # ---------------------------------------------------------------------------
@@ -524,14 +507,22 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8) -> DataFrame:
     reconstruction points — holds regardless of how the codebook was
     trained.
     """
-    w = 64 // m
     full = pack_centroids(centroids_by_label(embeddings))
-    return full.select(
-        F.col("cell").alias("code"),
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {m - 1}), s -> slice(cvec, s * {w} + 1, {w}))")
-        ).alias("s", "cvec"),
-    ).select("s", "code", "cvec")
+    return full.select(F.col("cell").alias("code"), _slices("cvec", m).alias("s", "cvec")).select(
+        "s", "code", "cvec"
+    )
+
+
+def _slices(vec_sql: str, m: int) -> Column:
+    """posexplode of the ``m`` contiguous width-64/m slices of ``vec_sql``."""
+    w = 64 // m
+    return F.posexplode(F.expr(f"transform(sequence(0, {m - 1}), s -> slice({vec_sql}, s * {w} + 1, {w}))"))
+
+
+def _split(embeddings: DataFrame, m: int) -> DataFrame:
+    """(vec_id, s, vs) rows: each vector's ``m`` subspace slices as
+    array<double>, the rows both the encoder and the k-means trainer read."""
+    return embeddings.select("vec_id", _slices("CAST(embedding AS ARRAY<DOUBLE>)", m).alias("s", "vs"))
 
 
 def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8) -> DataFrame:
@@ -541,33 +532,16 @@ def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8) -> DataFr
     Output: (id, s, code) — at scale this is the 32x-compressed
     representation that replaces the float vectors in the scan.
 
-    Codebooks are broadcast; the argmin is a row_number over (id, s) — each
+    Codebooks are broadcast; the argmin is a top-1 over (id, s) — each
     window partition holds exactly k candidate rows.
     """
-    from pyspark.sql import Window as W
-
-    w = 64 // m
-    subs = embeddings.select(
-        F.col("vec_id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), "
-                f"s -> slice(CAST(embedding AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
-            )
-        ).alias("s", "vsub"),
-    )
-    scored = subs.join(F.broadcast(codebooks), "s").select(
+    scored = _split(embeddings, m).join(F.broadcast(codebooks), "s").select(
         "vec_id",
         "s",
         "code",
-        (dot(F.col("cvec"), F.col("cvec")) - F.lit(2.0) * dot(F.col("vsub"), F.col("cvec"))).alias("d2"),
+        (dot(F.col("cvec"), F.col("cvec")) - F.lit(2.0) * dot(F.col("vs"), F.col("cvec"))).alias("d2"),
     )
-    win = W.partitionBy("vec_id", "s").orderBy("d2", "code")
-    return (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "code")
-    )
+    return _top_k(scored, ["vec_id", "s"], [F.col("d2"), F.col("code")], 1).select("vec_id", "s", "code")
 
 
 def pq_reconstruct(codes: DataFrame, codebooks: DataFrame) -> DataFrame:
@@ -590,6 +564,25 @@ def pq_reconstruct(codes: DataFrame, codebooks: DataFrame) -> DataFrame:
     )
 
 
+def _adc_rerank(pairs: DataFrame, embeddings: DataFrame, shortlist: int, k: int) -> DataFrame:
+    """The PQ tail: ADC score, shortlist, exact re-rank. ``pairs`` holds each
+    query side joined to its candidates' PQ reconstructions (a candidate
+    side whose ``cv`` is the reconstruction). The ``shortlist`` best by
+    that approximate cosine per query are re-scored against their raw
+    vectors, and the top ``k`` kept: (query_id, cand_id, cos_sim)."""
+    adc = pairs.select("query_id", "qv", "__nq", "cand_id", _cosine("asim"))
+    short = _top_k(adc, "query_id", [F.col("asim").desc(), F.col("cand_id")], shortlist).drop("asim")
+    exact = short.join(_side(embeddings, _CAND, "vec_id", "embedding"), "cand_id").select(
+        "query_id", "cand_id", _cosine("cos_sim")
+    )
+    return _top_k(exact, "query_id", [F.col("cos_sim").desc(), F.col("cand_id")], k)
+
+
+def _reconstructed(embeddings: DataFrame, codebooks: DataFrame, m: int) -> DataFrame:
+    """The candidate side of the ADC scan: every vector's PQ reconstruction."""
+    return _side(pq_reconstruct(pq_encode(embeddings, codebooks, m=m), codebooks), _CAND, "vec_id", "rvec")
+
+
 def pq_search(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -610,50 +603,10 @@ def pq_search(
     scan; combine with IVF cells (ivf_search) to also SKIP most of it —
     classic IVF-PQ layering.
     """
-    from pyspark.sql import Window as W
-
-    cbs = (
-        codebooks
-        if codebooks is not None
-        else pq_codebooks(embeddings, m=m)
-    )
-    codes = pq_encode(embeddings, cbs, m=m)
-    recon = pq_reconstruct(codes, cbs).withColumn(
-        "__nr", dot(F.col("rvec"), F.col("rvec"))
-    )
-    # per-side self-dots (same multiply order as
-    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical scores): the ADC scan
-    # folds once per (query, cand) pair, not thrice
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
-    ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
-    approx = recon.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "qv",
-        "__nq",
-        F.col("vec_id").alias("cand_id"),
-        (dot(F.col("qv"), F.col("rvec")) / F.sqrt(F.col("__nq") * F.col("__nr"))).alias("asim"),
-    )
-    ws = W.partitionBy("query_id").orderBy(F.col("asim").desc(), F.col("cand_id"))
-    short = (
-        approx.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "qv", "__nq", "cand_id")
-    )
-    cands = embeddings.select(
-        F.col("vec_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv")
-    ).withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
-    exact = short.join(cands, "cand_id").select(
-        "query_id",
-        "cand_id",
-        (dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__ncv"))).alias("cos_sim"),
-    )
-    wk = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
-    )
+    cbs = codebooks if codebooks is not None else pq_codebooks(embeddings, m=m)
+    q = _side(queries, _QUERY, "vec_id", "embedding")
+    pairs = _reconstructed(embeddings, cbs, m).join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
+    return _adc_rerank(pairs, embeddings, shortlist, k)
 
 
 def pq_codebooks_kmeans(
@@ -671,116 +624,51 @@ def pq_codebooks_kmeans(
     reconstruct / search compose with either quantizer."""
     from h2outility_spark.operators.kmeans import kmeans_grouped
 
-    w = 64 // m
     # All m subspace k-means runs ride ONE pipeline per Lloyd iteration
-    # (kmeans_grouped): same seeds/argmin/update arithmetic per subspace as
-    # the former per-s kmeans() loop, but 2 + max_iter collect-jobs total
-    # instead of m * (1 + max_iter) — the driver round-trip count no longer
-    # grows with m (measured ~4x end-to-end on the pq_* queries).
-    subs = embeddings.select(
-        F.col("vec_id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), "
-                f"s -> slice(CAST(embedding AS ARRAY<DOUBLE>), s * {w} + 1, {w}))"
-            )
-        ).alias("s", "vs"),
-    )
-    cents = kmeans_grouped(
-        subs, k=k, max_iter=max_iter
-    )
-    if round_dp is not None:
-        cents = cents.withColumn(
-            "centroid_val", fround(F.col("centroid_val"), round_dp)
-        )
-    return (
-        cents.groupBy("s", "cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("pairs"))
-        .select(
-            "s",
-            F.col("cluster").alias("code"),
-            F.expr("transform(pairs, p -> p.centroid_val)").alias("cvec"),
-        )
-    )
+    # (kmeans_grouped): 2 + max_iter collect-jobs total instead of
+    # m * (1 + max_iter) — the driver round-trip count no longer grows
+    # with m (measured ~4x end-to-end on the pq_* queries).
+    cents = kmeans_grouped(_split(embeddings, m), k=k, max_iter=max_iter)
+    val = F.col("centroid_val") if round_dp is None else fround(F.col("centroid_val"), round_dp)
+    return pack_vectors(cents.select("s", F.col("cluster").alias("code"), "pos", val.alias("cv")), "s", "code")
 
 
 def ivfpq_search(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
-    """The composed IVF-PQ layering: the coarse quantizer (cells) prunes
+    """The composed IVF-PQ layering over label cells and label codebooks:
+    :func:`ivfpq_search_cells` with ``embeddings`` as its own cell layout
+    and :func:`pq_codebooks` as the quantizer."""
+    return ivfpq_search_cells(embeddings, embeddings, queries, pq_codebooks(embeddings))
+
+
+def ivfpq_search_cells(
+    embeddings: DataFrame, cells: DataFrame, queries: DataFrame, codebooks: DataFrame
+) -> DataFrame:
+    """IVF-PQ over a given cell layout: the coarse quantizer (cells) prunes
     WHICH vectors are scanned, PQ codes compress WHAT the scan reads, the
     exact re-rank repairs ranking error on the shortlist.
 
-    Per query: probe the 2 nearest cells by centroid cosine; ADC score
-    only the probed cells' candidates against their reconstructions;
-    exact-cosine re-rank the top 30; emit the top 3. At 100 TB the
-    candidate table is partitioned by cell and stores (id, codes) — probing
-    is partition pruning and the scan reads 32x fewer bytes; FAISS's
-    IVFADC, as DataFrame ops.
+    ``cells`` is (vec_id, embedding, label) with label the cell; it may
+    carry spill copies (several cells per vector). Per query: the shared
+    cell probe picks the 2 nearest of the cells' centroids (rounded
+    6 dp); the probed cells' candidates are deduped per (query, cand), so
+    a spilled vector is scored once; ADC scores them against their
+    reconstructions under ``codebooks`` (m=8); the top 30 are exact
+    re-ranked and the top 3 emitted. At 100 TB the candidate table is
+    partitioned by cell and stores (id, codes) — probing is partition
+    pruning and the scan reads 32x fewer bytes; FAISS's IVFADC, as
+    DataFrame ops.
     """
-    from pyspark.sql import Window as W
-
-    cents = pack_centroids(centroids_by_label(embeddings))
-    cbs = pq_codebooks(embeddings)
-    codes = pq_encode(embeddings, cbs)
-    recon = pq_reconstruct(codes, cbs)
-
-    # per-side self-dots throughout (same multiply order as
-    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): probe, ADC scan and
-    # re-rank each fold once per pair
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
-    ).withColumn("__nq", dot(F.col("qv"), F.col("qv")))
-    cents_n = cents.withColumn("__ncell", dot(F.col("cvec"), F.col("cvec")))
-    scored_cells = q.join(F.broadcast(cents_n)).select(
-        "query_id",
-        "qv",
-        "__nq",
-        "cell",
-        (dot(F.col("qv"), F.col("cvec")) / F.sqrt(F.col("__nq") * F.col("__ncell"))).alias("cell_sim"),
-    )
-    wc = W.partitionBy("query_id").orderBy(F.col("cell_sim").desc(), F.col("cell"))
-    best_cells = (
-        scored_cells.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= 2)
-        .select("query_id", "qv", "__nq", "cell")
-    )
-    cands = embeddings.select(
-        F.col("vec_id").alias("cand_id"), F.col("label").alias("cell")
-    )
-    recon_n = recon.withColumnRenamed("vec_id", "cand_id").withColumn(
-        "__nr", dot(F.col("rvec"), F.col("rvec"))
-    )
-    probed = (
-        cands.join(F.broadcast(best_cells), "cell")
+    q = _side(queries, _QUERY, "vec_id", "embedding")
+    best = _probe(q, pack_centroids(centroids_by_label(cells)), 2).select("query_id", "cell")
+    cand = (
+        cells.select(F.col("vec_id").alias("cand_id"), F.col("label").alias("cell"))
+        .join(F.broadcast(best), "cell")
         .filter(F.col("cand_id") != F.col("query_id"))
-        .join(recon_n, "cand_id")
-        .select(
-            "query_id",
-            "qv",
-            "__nq",
-            "cand_id",
-            (dot(F.col("qv"), F.col("rvec")) / F.sqrt(F.col("__nq") * F.col("__nr"))).alias("asim"),
-        )
+        .select("query_id", "cand_id")
+        .distinct()
     )
-    ws = W.partitionBy("query_id").orderBy(F.col("asim").desc(), F.col("cand_id"))
-    short = (
-        probed.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= 30)
-        .select("query_id", "qv", "__nq", "cand_id")
-    )
-    ev = embeddings.select(
-        F.col("vec_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv")
-    ).withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
-    exact = short.join(ev, "cand_id").select(
-        "query_id",
-        "cand_id",
-        (dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__ncv"))).alias("cos_sim"),
-    )
-    wk = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= 3)
-        .drop("rk")
-    )
+    pairs = cand.join(q, "query_id").join(_reconstructed(embeddings, codebooks, 8), "cand_id")
+    return _adc_rerank(pairs, embeddings, 30, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -804,8 +692,6 @@ def hybrid_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
     = sum over legs of 1/(60 + rank), docs absent from a leg simply
     contribute nothing (the RRF convention).
     """
-    from pyspark.sql import Window
-
     from h2outility_spark.operators.text import tokens
 
     # Blank-text guard: tokens('') is [''] (one empty token), which would
@@ -827,38 +713,21 @@ def hybrid_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
         .groupBy("query_id", "cand_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    lex_rank = lex.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("n_shared"), "cand_id")
-        ),
-    ).select("query_id", "cand_id", "rank")
 
-    # per-side self-dots (same multiply order as
-    # dot(a,b)/sqrt(dot(a,a)*dot(b,b)), bit-identical): one fold per
-    # (query, cand) pair in the semantic leg instead of three
+    # every rank feeds the fusion (and the output carries it), so the legs
+    # keep this window instead of a top-k
+    def ranked(df: DataFrame, score: str) -> DataFrame:
+        w = Window.partitionBy("query_id").orderBy(F.desc(score), "cand_id")
+        return df.withColumn("rank", F.row_number().over(w))
+
+    lex_rank = ranked(lex, "n_shared").select("query_id", "cand_id", "rank")
+
     sem = (
-        docs.select(F.col("doc_id").alias("cand_id"), as_double(F.col("embedding")).alias("cv"))
-        .withColumn("__ncv", dot(F.col("cv"), F.col("cv")))
-        .join(
-            F.broadcast(
-                queries.select("query_id", as_double(F.col("embedding")).alias("qv")).withColumn(
-                    "__nq", dot(F.col("qv"), F.col("qv"))
-                )
-            )
-        )
-        .select(
-            "query_id",
-            "cand_id",
-            (dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__nq") * F.col("__ncv"))).alias("cos_sim"),
-        )
+        _side(docs, _CAND, "doc_id", "embedding")
+        .join(F.broadcast(_side(queries, _QUERY, "query_id", "embedding")))
+        .select("query_id", "cand_id", _cosine("cos_sim"))
     )
-    sem_rank = sem.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "cand_id")
-        ),
-    ).select("query_id", "cand_id", "rank")
+    sem_rank = ranked(sem, "cos_sim").select("query_id", "cand_id", "rank")
 
     rrf = F.lit(1.0) / (F.lit(60.0) + F.col("rank"))
     fused = (
@@ -867,12 +736,4 @@ def hybrid_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
         .groupBy("query_id", "cand_id")
         .agg(F.sum("contrib").alias("rrf_score"))
     )
-    return (
-        fused.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), "cand_id")
-            ),
-        )
-        .filter(F.col("rank") <= 10)
-    )
+    return ranked(fused, "rrf_score").filter(F.col("rank") <= 10)

@@ -140,7 +140,7 @@ def _kmeans_oracle() -> str:
 
       seeds   = first k vectors by vec_id (cluster id = rank order);
       assign  = arg-min over the k squared-L2 distances, computed as
-                c·c − 2·v·c exactly like ``_assign`` (v·v dropped — constant
+                c·c − 2·v·c exactly like ``assign_nearest`` (v·v dropped — constant
                 per row), ties broken by cluster id;
       update  = per-cluster per-position average; an empty cluster keeps its
                 previous centroid (the LEFT JOIN + coalesce).
@@ -694,21 +694,20 @@ def q_ivf_search_adaptive(spark, sf_dir):
     re-rank of the deduped union — the low-row-budget configuration the
     round-6 recall sweep measured (RECALL.json). Every stage is mirrored
     op-for-op in the chained-CTE oracle."""
-    from h2outility_spark.operators import similarity
-
     emb = _t(spark, sf_dir, "embeddings")
-    cents = similarity.centroids_by_label(emb).withColumn(
-        "centroid_val", fround(F.col("centroid_val"), 6)
-    )
-    assign = similarity.ivf_assign_multi(emb, cents, m=3, ratio=1.05).withColumnRenamed(
-        "cell", "spill_cell"
-    )
-    emb_sp = emb.join(assign, "vec_id").select(
-        "vec_id", "embedding", F.col("spill_cell").alias("label")
-    )
     queries = emb.filter(F.col("vec_id") < 10)
-    out = similarity.ivf_search(emb_sp, queries, k=3, n_probe=2, spill=True)
+    out = similarity.ivf_search(_spilled(emb), queries, k=3, n_probe=2, spill=True)
     return out.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
+
+
+def _spilled(emb):
+    """The adaptive spill layout both adaptive queries search: each vector
+    in its nearest label cell (centroids rounded 6 dp) plus spill copies
+    within the 1.05 distance-ratio band, m=3 — (vec_id, embedding, label)
+    rows with label the spill cell."""
+    cents = similarity.centroids_by_label(emb).withColumn("centroid_val", fround(F.col("centroid_val"), 6))
+    assign = similarity.ivf_assign_multi(emb, cents, m=3, ratio=1.05)
+    return emb.join(assign, "vec_id").select("vec_id", "embedding", F.col("cell").alias("label"))
 
 
 # -- adaptive IVF + PQ compound (IVFADC with ratio-spill cells) ----------------
@@ -776,95 +775,19 @@ def q_ivfpq_search_adaptive(spark, sf_dir):
     sweep measured), PQ codes compress WHAT the scan reads (8x8 k-means
     codebooks, the production recipe), ADC scores the probed candidates
     against reconstructions, and an exact re-rank of the top 30 repairs
-    quantization ranking error. Composed explicitly from the certified
-    primitives so the oracle mirrors it CTE for CTE. Scale shape: cells
+    quantization ranking error. A composition of the shared stages — the
+    spill layout (:func:`_spilled`) and the k-means codebooks go into
+    ``ivfpq_search_cells``, whose cell probe, distinct candidates, ADC
+    and re-rank the oracle mirrors CTE for CTE. Scale shape: cells
     prune partitions, codes cut scan bytes 32x, both quantizer tables
     broadcast; the cross joins (vectors/queries x packed centroid or
     codebook tables, every broadcast side <= 128 rows) are the canonical
     IVF probe shape already allowlisted for ivf_search/ivfpq_search.
     """
-    from pyspark.sql import Window as PW
-
-    from h2outility_spark.operators import similarity as sim
-
     emb = _t(spark, sf_dir, "embeddings")
-    cents0 = sim.centroids_by_label(emb).withColumn(
-        "centroid_val", fround(F.col("centroid_val"), 6)
-    )
-    assign = sim.ivf_assign_multi(emb, cents0, m=3, ratio=1.05).withColumnRenamed(
-        "cell", "spill_cell"
-    )
-    emb_sp = emb.join(assign, "vec_id").select(
-        "vec_id", "embedding", F.col("spill_cell").alias("label")
-    )
-    cents1 = sim.pack_centroids(sim.centroids_by_label(emb_sp))
-
-    cbs = sim.pq_codebooks_kmeans(emb, m=8, k=8, max_iter=2, round_dp=6)
-    codes = sim.pq_encode(emb, cbs)
-    recon = sim.pq_reconstruct(codes, cbs)
-
-    # per-side self-dots (same multiply order as sim.cosine, bit-identical
-    # scores): probe, ADC and re-rank each fold once per pair, not thrice
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), sim.as_double(F.col("embedding")).alias("qv")
-    ).withColumn("__nq", sim.dot(F.col("qv"), F.col("qv")))
-    scored_cells = q.join(
-        F.broadcast(cents1.withColumn("__ncell", sim.dot(F.col("cvec"), F.col("cvec"))))
-    ).select(
-        "query_id",
-        "qv",
-        "cell",
-        (sim.dot(F.col("qv"), F.col("cvec")) / F.sqrt(F.col("__nq") * F.col("__ncell"))).alias("cell_sim"),
-    )
-    wc = PW.partitionBy("query_id").orderBy(F.col("cell_sim").desc(), F.col("cell"))
-    best = (
-        scored_cells.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= 2)
-        .select("query_id", "cell")
-    )
-    cand = (
-        assign.select(F.col("vec_id").alias("cand_id"), F.col("spill_cell").alias("cell"))
-        .join(F.broadcast(best), "cell")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id")
-        .distinct()
-    )
-    recon_n = recon.withColumn("__nr", sim.dot(F.col("rvec"), F.col("rvec")))
-    adc = (
-        cand.join(q, "query_id")
-        .join(recon_n, cand["cand_id"] == recon_n["vec_id"])
-        .select(
-            "query_id",
-            "cand_id",
-            (sim.dot(F.col("qv"), F.col("rvec")) / F.sqrt(F.col("__nq") * F.col("__nr"))).alias("asim"),
-        )
-    )
-    ws = PW.partitionBy("query_id").orderBy(F.col("asim").desc(), F.col("cand_id"))
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= 30)
-        .select("query_id", "cand_id")
-    )
-    ex = (
-        short.join(q, "query_id")
-        .join(
-            emb.select(
-                F.col("vec_id").alias("cand_id"), sim.as_double(F.col("embedding")).alias("cv2")
-            ).withColumn("__ncv", sim.dot(F.col("cv2"), F.col("cv2"))),
-            "cand_id",
-        )
-        .select(
-            "query_id",
-            "cand_id",
-            (sim.dot(F.col("qv"), F.col("cv2")) / F.sqrt(F.col("__nq") * F.col("__ncv"))).alias("cos_raw"),
-        )
-    )
-    wr = PW.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("cand_id"))
-    return (
-        ex.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", fround(F.col("cos_raw"), 4).alias("cos_sim"))
-    )
+    cbs = similarity.pq_codebooks_kmeans(emb, m=8, k=8, max_iter=2, round_dp=6)
+    out = similarity.ivfpq_search_cells(emb, _spilled(emb), emb.filter(F.col("vec_id") < 10), cbs)
+    return out.select("query_id", "cand_id", fround(F.col("cos_sim"), 4).alias("cos_sim"))
 
 
 # -- auto-sized RP-LSH signatures: the width DERIVATION on the hash --------------
@@ -1196,34 +1119,24 @@ def q_semantic_dedup_cells(spark, sf_dir):
     from h2outility_spark.operators import kmeans as km
     from h2outility_spark.operators.similarity import dot
 
-    corpus = neardup_strict_corpus(spark, sf_dir)
-    seeds = (
-        corpus.orderBy("vec_id")
-        .limit(_SEM_K)
-        .select(F.col("embedding").alias("v"))
-        .collect()
+    pts = neardup_strict_corpus(spark, sf_dir).select(
+        F.lit(0).alias("s"), "vec_id", F.col("embedding").alias("vs")
     )
-    centroids = [(i, list(r["v"])) for i, r in enumerate(seeds)]
+    cents = km.first_k(pts, _SEM_K)
     # one Lloyd update (assign under seeds, re-average), then final assign
-    assigned = km._assign(corpus, centroids)
-    new_rows = (
-        assigned.select("cluster", F.posexplode("__v").alias("pos", "x"))
+    means = (
+        km.assign_nearest(pts, cents)
+        .select("cluster", F.posexplode("__v").alias("pos", "x"))
         .groupBy("cluster", "pos")
         # 12-dp round on BOTH engines before the final assignment: Spark's
         # partition-order avg and DuckDB's sequential avg can differ in the
         # last ulp, and a near-equidistant vector would then land in
         # different cells across engines (the r9 embedding_drift lesson).
         .agg(fround(F.avg("x"), 12).alias("cv"))
-        .groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pairs"))
-        .select("cluster", F.expr("transform(pairs, p -> p.cv)").alias("cvec"))
-        .collect()
     )
-    updated = {r["cluster"]: list(r["cvec"]) for r in new_rows}
-    centroids = [(cid, updated.get(cid, cvec)) for cid, cvec in centroids]
-    cells = km._assign(corpus, centroids).select(
-        "vec_id", "cluster", "__v"
-    )
+    for r in similarity.pack_vectors(means, "cluster").collect():
+        cents[(0, r["cluster"])] = list(r["cvec"])
+    cells = km.assign_nearest(pts, cents).select("vec_id", "cluster", "__v")
 
     # self-dots precomputed per SIDE (n folds), not per PAIR (Σ n_c²):
     # dot(a,b)/sqrt(na*nb) multiplies the same doubles in the same order

@@ -6,7 +6,7 @@ Measures, at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1):
     but the synthetic labels carry no embedding-space structure, so recall
     ~= scan fraction — the honest worst case) and k-means cells trained on
     the vectors themselves (the real IVF composition: kmeans ->
-    ivf_assign -> ivf_search). kmeans-16 at probe {1,2,4} shows the
+    ivf_assign_multi -> ivf_search). kmeans-16 at probe {1,2,4} shows the
     recall/cost curve's low end; kmeans-64 at probe {4,8,16} is the
     production configuration — probe 16 (25% scan) reaches recall ≥ 0.9 on
     this corpus. The synthetic embeddings have no cluster structure (true
@@ -88,13 +88,7 @@ def main() -> None:
         (96, 10, 3, 1.05, (2, 3)),
     ):
         cent = kmeans(emb, k=kcells, max_iter=iters).withColumnRenamed("cluster", "label")
-        assign = (
-            sim.ivf_assign_multi(
-                emb, cent.withColumnRenamed("label", "label"), m=m, ratio=ratio
-            )
-            if m > 1
-            else sim.ivf_assign(emb, cent)
-        ).withColumnRenamed("cell", "km_cell")
+        assign = sim.ivf_assign_multi(emb, cent, m=m, ratio=ratio).withColumnRenamed("cell", "km_cell")
         emb_km = (
             emb.join(assign, "vec_id")
             .select("vec_id", "embedding", F.col("km_cell").alias("label"))

@@ -77,7 +77,7 @@ def test_ivf_kmeans_recall_beats_chance_and_probe_scales(spark, emb):
     exact.count()
 
     cent = kmeans(emb, k=16, max_iter=3).withColumnRenamed("cluster", "label")
-    assign = sim.ivf_assign(emb, cent).withColumnRenamed("cell", "km_cell")
+    assign = sim.ivf_assign_multi(emb, cent, m=1).withColumnRenamed("cell", "km_cell")
     emb_km = (
         emb.join(assign, "vec_id")
         .select("vec_id", "embedding", F.col("km_cell").alias("label"))
@@ -128,7 +128,7 @@ def test_ivf_spill_production_reaches_090_within_10pct_cells(spark, emb):
     )
     assert r >= 0.90, r
     # spill beats single assignment at the SAME probed-cell budget
-    assign1 = sim.ivf_assign(emb, cent).withColumnRenamed("cell", "km_cell")
+    assign1 = sim.ivf_assign_multi(emb, cent, m=1).withColumnRenamed("cell", "km_cell")
     emb_1 = (
         emb.join(assign1, "vec_id")
         .select("vec_id", "embedding", F.col("km_cell").alias("label"))
@@ -202,3 +202,32 @@ def test_ivf_adaptive_ratio_spill_is_a_subset_concentrated_on_boundaries(spark, 
     assert adaptive.select("vec_id").distinct().count() == n
     fixed.unpersist()
     adaptive.unpersist()
+
+
+def _exhaustive_case(spark):
+    from tests.conftest import SF_DIR
+
+    small = load_table(spark, SF_DIR, "embeddings")
+    queries = small.filter(F.col("vec_id") < 10)
+    truth = sim.brute_force_topk(small, queries, k=5)
+    return small, queries, sorted(truth.collect())
+
+
+def test_ivf_probing_every_cell_is_brute_force(spark):
+    """With every cell probed, IVF scans the whole corpus: its top-5 equals
+    brute force row for row, scores included — the shared probe, sides and
+    top-k tie-break against the reference path."""
+    small, queries, truth = _exhaustive_case(spark)
+    n_cells = small.select("label").distinct().count()
+    got = sorted(sim.ivf_search(small, queries, k=5, n_probe=n_cells).collect())
+    assert len(truth) == 50
+    assert got == truth
+
+
+def test_pq_shortlisting_every_row_is_brute_force(spark):
+    """A shortlist as long as the corpus re-ranks every candidate exactly, so
+    PQ search equals brute force row for row — the shared ADC and re-rank
+    body against the reference path."""
+    small, queries, truth = _exhaustive_case(spark)
+    got = sorted(sim.pq_search(small, queries, k=5, shortlist=small.count()).collect())
+    assert got == truth

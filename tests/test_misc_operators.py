@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import DataFrame, Row, functions as F
 
-from h2outility_spark.operators.kmeans import _assign, kmeans
+from h2outility_spark.operators.kmeans import assign_nearest, kmeans
 from h2outility_spark.operators.reshape import MAX_PIVOT_WIDTH, PivotWidthError, pivot_wide
 from h2outility_spark.sources.parquet import load_table
 from tests.conftest import SF_DIR
@@ -35,10 +35,11 @@ def inertia(embeddings: DataFrame, centroids_df: DataFrame) -> float:
         .select("cluster", F.expr("transform(p, x -> x.centroid_val)").alias("cvec"))
         .collect()
     )
-    cents = [(r["cluster"], list(r["cvec"])) for r in rows]
-    assigned = _assign(embeddings, cents)
+    cents = {(0, r["cluster"]): list(r["cvec"]) for r in rows}
+    points = embeddings.select(F.lit(0).alias("s"), "vec_id", F.col("embedding").alias("vs"))
+    assigned = assign_nearest(points, cents)
     vv = F.aggregate(F.col("__v"), F.lit(0.0), lambda a, x: a + x * x)
-    return assigned.select(F.sum(vv + F.col("__part_d")).alias("s")).collect()[0]["s"]
+    return assigned.select(F.sum(vv + F.col("__d")).alias("s")).collect()[0]["s"]
 
 
 def test_kmeans_reduces_inertia(spark):

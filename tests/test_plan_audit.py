@@ -39,8 +39,6 @@ BNLJ_ALLOWED = {
     # design (operators/similarity.hybrid_search; IVF/PQ are the scale paths
     # when the query set grows)
     "bloom_prefilter_revenue",  # two 1-row count broadcasts (n_cand, n_total)
-    "semantic_dedup_cells",  # vectors x broadcast 8-centroid frame — the
-    # canonical IVF/kmeans assignment shape (same as ivf_search)
     "unigram_logprob_buckets",  # 1-row total-token-count broadcast
 }
 
